@@ -2652,28 +2652,40 @@ def _q_html_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     return htmlparse.parse_meta(_html_corpus(spark, sf_dir))
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Dict ORDER is a contract, not cosmetics: the driver's correctness
-    gate hashes only the FIRST 50 keys against the DuckDB oracles, so the
-    window must spend itself on queries with no prior driver-green row.
-    Priority (pinned by tests/test_driver_window.py): (1) keys whose
-    latest CORRECTNESS_r0N row was err/fail, (2) keys never present in
-    any CORRECTNESS file, (3) keys whose output semantics changed this
-    round, (4) long-green keys — those are separately pinned by pytest
-    golden fixtures and lose nothing by sitting past position 50.
-    Round 3's gate starved itself by front-loading the stable golden
-    queries: round 2's two err rows were fixed but never re-witnessed.
-    Round 5 rotates: r4 spent its window on the 50 never-checked keys,
-    so the keys whose last driver row predates r4 now lead (minus the
-    golden/byte-parity-pinned ones that yield to the 10 new r5 keys and
-    the 2 whose semantics were touched this round).
+def _driver_order(keys: list[str], correctness_dir: Path) -> list[str]:
+    """Order ``keys`` for the driver's correctness window, which hashes
+    only the FIRST 50 ``queries()`` keys against the DuckDB oracles.
+
+    Each key's latest row across ``CORRECTNESS_r*.json`` decides its
+    tier: keys whose latest row erred or mismatched lead, then keys no
+    file has checked (in definition order), then green keys by the
+    round of their last row, oldest first.  A new round's file rotates
+    the window by itself (pinned by tests/test_driver_window.py).
     """
-    return {
-        # (2) never driver-checked — new in r5 (window rule 2); the
-        # newest code leads: raw-HTML extraction family, then the
-        # close-out batch + interleaved family (keys displaced past
-        # slot 50 are pytest-pinned and check_entry-green — allowed
-        # overflow per test_driver_window)
+    import json
+    import re
+
+    latest: dict[str, tuple[int, bool]] = {}
+    for f in correctness_dir.glob("CORRECTNESS_r*.json"):
+        rnd = int(re.search(r"_r(\d+)$", f.stem).group(1))
+        for key, row in json.loads(f.read_text()).items():
+            if key not in latest or rnd > latest[key][0]:
+                green = (row.get("err") is None
+                         and row.get("rows_match") is True
+                         and row.get("schema_match") is True
+                         and row.get("hash_match") is True)
+                latest[key] = (rnd, green)
+    erred = [k for k in keys if k in latest and not latest[k][1]]
+    unchecked = [k for k in keys if k not in latest]
+    greens = sorted((k for k in keys if k in latest and latest[k][1]),
+                    key=lambda k: latest[k][0])
+    return erred + unchecked + greens
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every driver query, in the window order of :func:`_driver_order`
+    over the ``CORRECTNESS_r*.json`` files next to this module."""
+    defs = {
         "html_parse_blocks": _q_html_parse_blocks,
         "html_spans": _q_html_spans,
         "html_main_spans": _q_html_main_spans,
@@ -2749,13 +2761,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bpe_merges": _q_bpe_merges,
         "bpe_token_stats": _q_bpe_token_stats,
         "bpe_fertility": _q_bpe_fertility,
-        # (3) r4-green but output semantics / implementation touched in r5
-        # (epoch_shards pos int->bigint; cc_best tie-break re-ranked)
         "epoch_shards": _q_epoch_shards,
         "dedup_corpus_cc_best": _q_dedup_corpus_cc_best,
-        # stale rotation (VERDICT r4 item 3): keys whose last driver row
-        # predates round 4 — re-witnessed this round, golden-pinned ones
-        # yield first (they are separately pinned by pytest fixtures)
         "domain_caps": _q_domain_caps,
         "extract_flagship": _q_extract_flagship,
         "f8_page_range": _q_f8_page_range,
@@ -2797,9 +2804,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sim_lsh_buckets": _q_sim_lsh_buckets,
         "sim_bucketed_topk": _q_sim_bucketed_topk,
         "sim_multiprobe_topk": _q_sim_multiprobe_topk,
-        # ---- driver window boundary (first 50 keys above) ----
-        # stale but heavily golden/byte-parity-pinned — yielded their
-        # slots to the rotation above (test_driver_window.py rule 3)
         "j_semi_anti": _q_j_semi_anti,
         "domain_stats": _q_domain_stats,
         "a12_rollup": _q_a12_rollup,
@@ -2818,7 +2822,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "c2_structural_spans": _q_c2_structural_spans,
         "table_grid_cells": _q_table_grid_cells,
         "table_consolidated": _q_table_consolidated,
-        # r4-green keys (fresh driver rows in CORRECTNESS_r04.json)
         "ann_kmeans_centroids": _q_ann_kmeans_centroids,
         "text_embed_vectors": _q_text_embed_vectors,
         "ann_ivf_sampled": _q_ann_ivf_sampled,
@@ -2869,6 +2872,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_pq_topk": _q_ann_pq_topk,
         "url_suffix_domains": _q_url_suffix_domains,
     }
+    return {k: defs[k] for k in _driver_order(list(defs), REPO)}
 
 
 def oracle_sql() -> dict[str, str]:
@@ -4237,11 +4241,10 @@ def _oracle_sql_literal() -> dict[str, str]:
                      ('site5.ex8.com', 'adult')),
             cand AS (
               SELECT doc_id, unnest(list_distinct(list_filter(
-                [regexp_extract(host_nowww, '([^.]+)$', 1),
-                 regexp_extract(host_nowww, '([^.]+\\.[^.]+)$', 1),
-                 regexp_extract(host_nowww, '([^.]+\\.[^.]+\\.[^.]+)$', 1),
-                 regexp_extract(host_nowww,
-                   '([^.]+\\.[^.]+\\.[^.]+\\.[^.]+)$', 1)],
+                list_transform(
+                  range(1, len(string_split(host_nowww, '.')) + 1),
+                  k -> array_to_string(
+                    string_split(host_nowww, '.')[-k:], '.')),
                 c -> c != ''))) AS c
               FROM norm WHERE doc_id < 400),
             hits AS (

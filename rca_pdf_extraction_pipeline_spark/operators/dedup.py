@@ -832,9 +832,11 @@ def winnow_overlap_pairs(docs: DataFrame, text_col: str = "text",
     built over the winnowing-SELECTED k-gram hashes only
     (``textanalysis.winnow_selection``, expected density 2/(w+1)), so
     the inverted index is ~(w+1)/2 smaller than full-shingle
-    containment while the selection guarantee keeps recall exact for
-    long overlaps: any shared run of at least ``w + k - 1`` words still
-    lands at least one shared selected hash in both documents.
+    containment.  The selection guarantee — any shared run of at least
+    ``w + k - 1`` words lands at least one shared selected hash in both
+    documents — makes recall exact for such overlaps only at
+    ``min_shared=1``; the default of 2 trades that edge (a pair whose
+    only overlap is one minimal run) for noise suppression.
 
     Shape mirrors :func:`containment_pairs`: selected-hash set derived
     in-array from ONE md5-hashed gram layer (zero pre-aggregation

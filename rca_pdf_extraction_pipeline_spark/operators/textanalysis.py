@@ -502,7 +502,8 @@ def winnow_fingerprints(docs: DataFrame, text_col: str = "text",
     SIGMOD '03 §3 — the MOSS local-fingerprinting scheme): over the
     sequence of word-``k``-gram hashes, every window of ``w``
     consecutive hashes contributes its minimum — ties broken toward the
-    RIGHTMOST occurrence, the paper's robust rule — and the selected
+    RIGHTMOST occurrence, the paper's rightmost-tie rule (standard
+    winnowing, not the robust variant) — and the selected
     ``(position, hash)`` pairs are deduplicated.  Guarantees any shared
     run of ``w + k - 1`` words between two documents yields at least
     one shared fingerprint, at expected density ``2 / (w + 1)`` — the

@@ -165,8 +165,7 @@ def with_apex_domain(docs: DataFrame, url_col: str = "url",
 def flag_blocked(docs: DataFrame, blocklist: DataFrame,
                  url_col: str = "url", id_col: str = "doc_id",
                  domain_col: str = "domain",
-                 category_col: str = "category",
-                 max_levels: int = MAX_SUFFIX_LEVELS) -> DataFrame:
+                 category_col: str = "category") -> DataFrame:
     """UT1-style category blocklist filter (the Université Toulouse 1
     crawl-curation convention RefinedWeb/FineWeb apply): flag every
     document whose host OR any parent domain appears in a
@@ -178,11 +177,11 @@ def flag_blocked(docs: DataFrame, blocklist: DataFrame,
     sorted-distinct (one domain may carry several; empty array when
     clean), ``blocked = size(categories) > 0``.
 
-    Scale: candidates are the host's last-k-label strings (k <=
-    ``max_levels``, <= 4 short rows per doc) exploded inside the scan
-    and joined against the BROADCAST blocklist (UT1's full dumps are a
-    few million short domains — comfortably broadcastable; shard by
-    category if not), then ONE hash agg on the doc id.  The doc side
+    Scale: candidates are every parent suffix of the host (one short
+    row per label, so entries of any depth match) exploded inside the
+    scan and joined against the BROADCAST blocklist (UT1's full dumps
+    are a few million short domains — comfortably broadcastable; shard
+    by category if not), then ONE hash agg on the doc id.  The doc side
     never shuffles its payload beyond (id, url).
     """
     _, authority, _ = _split(F.col(url_col))
@@ -190,9 +189,10 @@ def flag_blocked(docs: DataFrame, blocklist: DataFrame,
                             r"^www\.", "")
     base = docs.select(F.col(id_col), F.col(url_col)) \
                .withColumn("_bl_host", host)
+    labels = F.split(F.col("_bl_host"), r"\.")
     cand = F.array_distinct(F.filter(
-        F.array(*[_last_labels(F.col("_bl_host"), k)
-                  for k in range(1, max_levels + 1)]),
+        F.transform(F.sequence(F.lit(1), F.size(labels)),
+                    lambda k: F.array_join(F.slice(labels, -k, k), ".")),
         lambda c: c != F.lit("")))
     ex = base.select(id_col, url_col, F.explode_outer(cand).alias("_bl_c"))
     bl = F.broadcast(blocklist.select(

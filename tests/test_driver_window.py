@@ -27,11 +27,11 @@ REPO = Path(__file__).resolve().parent.parent
 WINDOW = 50
 
 
-def _latest_status() -> dict[str, bool]:
+def _latest_status(correctness_dir: Path = REPO) -> dict[str, bool]:
     """key -> latest driver verdict (True = fully green), later rounds
     overriding earlier ones."""
     status: dict[str, bool] = {}
-    for f in sorted(REPO.glob("CORRECTNESS_r0*.json"),
+    for f in sorted(correctness_dir.glob("CORRECTNESS_r0*.json"),
                     key=lambda p: int(re.search(r"r0*(\d+)", p.stem).group(1))):
         for key, row in json.loads(f.read_text()).items():
             status[key] = (row.get("err") is None
@@ -41,12 +41,8 @@ def _latest_status() -> dict[str, bool]:
     return status
 
 
-def test_driver_window_covers_erred_and_unchecked_keys():
-    import __spark_entry__ as entry
-
-    keys = list(entry.queries())
+def _assert_window(keys: list[str], status: dict[str, bool]) -> None:
     window = set(keys[:WINDOW])
-    status = _latest_status()
 
     # 1. no recorded key may vanish: a rename/drop would silently reset
     #    its driver history and hide a still-broken query
@@ -69,3 +65,37 @@ def test_driver_window_covers_erred_and_unchecked_keys():
         f"{len(outside_unchecked)} never-driver-checked keys sit past "
         f"position {WINDOW} while long-green keys hold window slots: "
         f"{outside_unchecked}")
+
+
+def test_driver_window_covers_erred_and_unchecked_keys():
+    import __spark_entry__ as entry
+
+    _assert_window(list(entry.queries()), _latest_status())
+
+
+def test_driver_order_rotates_on_a_new_correctness_round(tmp_path):
+    """A new round's file that re-greens the driver's latest window must
+    leave the never-checked keys leading and push that window to the
+    back — no hand edit of the order."""
+    import shutil
+
+    import __spark_entry__ as entry
+
+    for f in REPO.glob("CORRECTNESS_r0*.json"):
+        shutil.copy(f, tmp_path / f.name)
+    window = list(json.loads((REPO / "CORRECTNESS_r05.json").read_text()))
+    green = {"rows_match": True, "schema_match": True, "hash_match": True,
+             "err": None}
+    (tmp_path / "CORRECTNESS_r06.json").write_text(
+        json.dumps({k: green for k in window}))
+    keys = list(entry.queries())
+    status = _latest_status(tmp_path)
+    unchecked = [k for k in keys if k not in status]
+    assert unchecked, "every key checked: the case proves nothing"
+
+    order = entry._driver_order(keys, tmp_path)
+    assert sorted(order) == sorted(keys)
+    assert order[:len(unchecked)] == unchecked
+    # the re-greened window is the newest green tier: it goes last
+    assert set(order[-len(window):]) == set(window)
+    _assert_window(order, status)

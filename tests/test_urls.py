@@ -194,15 +194,21 @@ def test_with_apex_domain_psl_snapshot(spark):
 def test_flag_blocked_parent_domain_and_categories(spark, url_corpus):
     bl = spark.createDataFrame(
         [("b.org", "ads"), ("b.org", "malware"), ("c.net", "adult"),
-         ("A.COM", "tracking")],                  # case-folded on join
+         ("A.COM", "tracking"),                   # case-folded on join
+         ("cdn.eu.west.deep.io", "malware")],     # 5 labels: no depth cap
         "domain string, category string")
+    deep = spark.createDataFrame(
+        [(10, "https://img.cdn.eu.west.deep.io/a.png")],
+        "doc_id long, url string")
     got = {r["doc_id"]: (r["blocked"], list(r["categories"]))
-           for r in urls.flag_blocked(url_corpus, bl).collect()}
+           for r in urls.flag_blocked(url_corpus.unionByName(deep),
+                                      bl).collect()}
     assert got[4] == (True, ["ads", "malware"])   # direct + multi-category
     assert got[8] == (True, ["ads", "malware"])   # sub.b.org -> parent match
     assert got[9] == (True, ["adult"])
     assert got[0] == (True, ["tracking"])         # blocklist case-folded
-    assert len(got) == 10                         # every doc gets a row
+    assert got[10] == (True, ["malware"])         # parent 5 labels deep
+    assert len(got) == 11                         # every doc gets a row
 
 
 def test_flag_blocked_clean_corpus_and_plan(spark):
