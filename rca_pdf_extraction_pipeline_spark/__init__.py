@@ -10,7 +10,7 @@ Iceberg-style table of interleaved text+media documents:
 
 Design stance (see SURVEY.md §7):
   * DataFrame / Catalyst end-to-end; all domain logic lives in vectorized
-    numpy/pandas kernels invoked from ``mapInPandas`` — no per-row Python.
+    numpy/pandas kernels invoked from ``mapInArrow`` — no per-row Python.
   * Documents are self-contained → the pipeline is one narrow stage; the only
     shuffle is the deliberate skew-defusing repartition on ``doc_id``.
   * Ordering is part of correctness: output span ``offset`` is computed

@@ -21,7 +21,7 @@ document type is a new config object, not a new code path.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # ---------------------------------------------------------------------------
 # Output schema (core_analysis.py:109-127)
@@ -167,17 +167,8 @@ class ExtractionConfig:
 
     #: target number of partitions for the skew-defusing repartition
     num_partitions: int = 32
-    #: docs whose span count exceeds this multiple of the batch median are
-    #: isolated into their own tasks (oversized-PDF skew, north_rule)
-    heavy_doc_span_threshold: int = 50_000
     #: Arrow batch sizing — keep per-batch memory bounded for huge docs
     arrow_max_records: int = 64
-    #: include image spans of table pages in the output sequence
-    passthrough_media: bool = True
-    #: emit the 12 extracted header fields before data cells
-    emit_header_fields: bool = True
-    #: extra column content for lineage
-    checkpoint_dir: str | None = None
 
 
 DEFAULT_CONFIG = ExtractionConfig()

@@ -33,16 +33,6 @@ def hash32(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10).cast("long")
 
 
-def hash_hex8(col: Column) -> Column:
-    """First 8 hex chars of md5 (string). DuckDB: ``substr(md5(x),1,8)``."""
-    return F.substring(F.md5(col.cast("string")), 1, 8)
-
-
-def seeded_hash_hex8(col: Column, seed: int) -> Column:
-    """Seeded variant: md5('<seed>:' || x)[:8]."""
-    return F.substring(F.md5(F.concat(F.lit(f"{seed}:"), col.cast("string"))), 1, 8)
-
-
 #: universal-hashing MinHash parameters: sig_s = min over tokens of
 #: (a_s * hash32(tok) + b_s) mod MINHASH_MOD. One md5 per token total;
 #: the per-seed permutations are integer ops (Broder 1997 / Carter &

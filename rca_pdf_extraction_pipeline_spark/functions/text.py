@@ -74,11 +74,6 @@ def shingle_set(col: Column, k: int = 3) -> Column:
     return F.array_distinct(shingles(col, k))
 
 
-def normalize_ws(col: Column) -> Column:
-    """X1: collapse runs of whitespace, trim (core_analysis.py:222)."""
-    return F.trim(F.regexp_replace(col, r"\s+", " "))
-
-
 def normalize_for_dedup(col: Column) -> Column:
     """Canonical dedup key text (the C4/RefinedWeb-style "fuzzy exact"
     normalization): casefold, strip ASCII punctuation, collapse
@@ -117,10 +112,6 @@ def alpha_chars(col: Column) -> Column:
 
 def digit_chars(col: Column) -> Column:
     return F.length(F.regexp_replace(col, "[^0-9]", ""))
-
-
-def space_chars(col: Column) -> Column:
-    return F.length(col) - F.length(F.regexp_replace(col, " ", ""))
 
 
 def stopword_ratio(col: Column) -> Column:

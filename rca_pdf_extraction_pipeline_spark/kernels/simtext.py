@@ -16,7 +16,6 @@ from __future__ import annotations
 from difflib import SequenceMatcher
 
 import numpy as np
-import pandas as pd
 
 HEADER_SIMILARITY_THRESHOLD = 0.8
 
@@ -96,16 +95,3 @@ def consolidate_tables(
     for r in rows:
         assert len(r) == len(canonical)
     return {"headers": canonical, "original_headers": orig, "rows": rows}
-
-
-def ratio_matrix(left: pd.Series, right: pd.Series) -> np.ndarray:
-    """All-pairs difflib ratio for two small string collections
-    (used by tests and the driver-side consolidation paths)."""
-    lv = left.astype(str).tolist()
-    rv = right.astype(str).tolist()
-    out = np.zeros((len(lv), len(rv)))
-    for i, a in enumerate(lv):
-        al = a.lower()
-        for j, b in enumerate(rv):
-            out[i, j] = SequenceMatcher(None, al, b.lower()).ratio()
-    return out

@@ -34,13 +34,15 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 from ..config import (
     DEFAULT_CONFIG,
@@ -74,11 +76,6 @@ SAMPLES_SCHEMA = (
 )
 
 HEADERS_SCHEMA = "doc_id string, page int, col int, header string"
-
-_SPAN_STRUCT = pa.struct([
-    ("kind", pa.string()), ("text", pa.string()),
-    ("media_ref", pa.string()), ("offset", pa.int32()),
-])
 
 _FLAT_COLS = ["doc_pos", "kind", "media_ref", "offset", "page",
               "x0", "y0", "x1", "y1", "content"]
@@ -129,46 +126,24 @@ def flat_from_batch(batch: pa.RecordBatch) -> pd.DataFrame:
     return flat
 
 
-_DOCS_PA = pa.schema([("doc_id", pa.string()), ("spans", pa.list_(_SPAN_STRUCT))])
-
-
-def flatten_spans(pdf: pd.DataFrame) -> pd.DataFrame:
-    """pandas-input variant (kernel tests / non-Arrow callers): same flat
-    frame but carrying ``doc_id`` strings instead of ``doc_pos``."""
-    batch = pa.RecordBatch.from_pandas(pdf[["doc_id", "spans"]],
-                                       schema=_DOCS_PA, preserve_index=False)
-    flat = flat_from_batch(batch)
-    doc_ids = pdf["doc_id"].to_numpy()
-    flat = flat.rename(columns={"doc_pos": "doc_id"})
-    if len(flat):
-        flat["doc_id"] = doc_ids[flat["doc_id"].to_numpy()]
-    return flat
-
-
 # ---------------------------------------------------------------------------
 # classification (C1 over page texts)
 # ---------------------------------------------------------------------------
 
 
-def classify_flat(flat: pd.DataFrame, key: str | None = None) -> pd.DataFrame:
+def classify_flat(flat: pd.DataFrame, key: str = "doc_pos") -> pd.DataFrame:
     """C1 per (doc, page): concat of text-span contents in reading order
     (A1; order fixed to (y0, x0, offset) for determinism, SURVEY.md §2.4
     order caveat), then the keyword cascade.
 
     Grouping is a single numeric lexsort + boundary scan — no pandas
     groupby-apply in the hot path."""
-    if key is None:
-        key = "doc_pos" if "doc_pos" in flat.columns else "doc_id"
     out_cols = [key, "page", "page_type", "confidence", "reason", "text"]
     text_spans = flat[flat["kind"] == "text"]
     if len(text_spans) == 0:
         return pd.DataFrame(columns=out_cols)
 
-    d = text_spans[key].to_numpy()
-    if d.dtype == object:  # doc_id strings (pandas caller) -> factorize
-        codes, uniq = pd.factorize(d, sort=True)
-    else:
-        codes, uniq = d, None
+    codes = text_spans[key].to_numpy()
     order = np.lexsort((
         text_spans["offset"].to_numpy(),
         text_spans["x0"].to_numpy(dtype=np.float64, na_value=np.inf),
@@ -188,12 +163,8 @@ def classify_flat(flat: pd.DataFrame, key: str | None = None) -> pd.DataFrame:
     texts = [" ".join(sc[s:e]) for s, e in zip(starts, ends)]
 
     cls = kclassify.classify_pages_keyword(pd.Series(texts))
-    group_docs = sd[starts]
-    if uniq is not None:
-        group_docs = uniq.to_numpy()[group_docs] if hasattr(uniq, "to_numpy") \
-            else np.asarray(uniq)[group_docs]
     return pd.DataFrame({
-        key: group_docs,
+        key: sd[starts],
         "page": sp[starts],
         "page_type": cls["page_type"].to_numpy(),
         "confidence": cls["confidence"].to_numpy(),
@@ -255,12 +226,11 @@ def _decode_table_pages(flat: pd.DataFrame, table_pages: pd.DataFrame,
     return decoded, hdr
 
 
-def _extract_batch_flat(flat: pd.DataFrame, cfg: ExtractionConfig,
-                        key: str = "doc_pos") -> dict:
+def _extract_batch_flat(flat: pd.DataFrame) -> dict:
     """Run classification + decode on a flat frame; returns intermediates."""
-    cls = classify_flat(flat, key)
-    table_pages = cls[cls["page_type"] == "table"][[key, "page"]]
-    samples, headers = _decode_table_pages(flat, table_pages, key)
+    cls = classify_flat(flat)
+    table_pages = cls[cls["page_type"] == "table"][["doc_pos", "page"]]
+    samples, headers = _decode_table_pages(flat, table_pages)
     return {"flat": flat, "cls": cls, "table_pages": table_pages,
             "samples": samples, "headers": headers}
 
@@ -276,7 +246,9 @@ def _assemble_batch(batch: pa.RecordBatch, r: dict,
     fields, then per table page row-major cells, then that page's image
     spans (media passthrough) — as flat numpy segment arrays lexsorted
     into place. Offsets are per-doc ranks computed here, deterministic
-    under any partitioning. Zero per-cell Python loops."""
+    under any partitioning. Zero per-cell Python loops.
+
+    ``cfg`` is unused; the kernel replay in perfbench/run.py passes it."""
     n_docs = len(batch)
     samples, flat, table_pages = r["samples"], r["flat"], r["table_pages"]
 
@@ -292,7 +264,7 @@ def _assemble_batch(batch: pa.RecordBatch, r: dict,
         kinds.append(kind); texts.append(text); medias.append(media)
 
     nH = len(GOLDEN_EXTRACTED_HEADERS)
-    if cfg.emit_header_fields and len(table_pages):
+    if len(table_pages):
         tdocs = np.unique(table_pages["doc_pos"].to_numpy())
         m = len(tdocs)
         add(np.repeat(tdocs, nH), np.zeros(m * nH), np.zeros(m * nH),
@@ -318,30 +290,29 @@ def _assemble_batch(batch: pa.RecordBatch, r: dict,
             np.full(n * C, "field", dtype=object), mat.ravel(),
             np.full(n * C, None, dtype=object))
 
-    if cfg.passthrough_media:
-        # Media passthrough is keyed to the per-(doc, page) pairs that
-        # produced decoded samples — computed from THIS doc's rows only, so
-        # a doc's output never depends on other docs in the Arrow batch
-        # (determinism invariant: per-doc, never batch/partition-derived).
-        media = flat[flat["kind"] == "image"]
-        if len(media) and len(samples):
-            sample_pages = (samples[["doc_pos", "page_number"]]
-                            .drop_duplicates()
-                            .rename(columns={"page_number": "page"}))
-            media = media.merge(sample_pages, on=["doc_pos", "page"])
-        else:
-            media = media.iloc[:0]
-        if len(media):
-            mm = len(media)
-            add(media["doc_pos"].to_numpy(), np.full(mm, 1),
-                media["page"].to_numpy(), np.full(mm, 1),
-                np.zeros(mm), np.zeros(mm),
-                media["y0"].to_numpy(dtype=np.float64, na_value=np.inf),
-                media["x0"].to_numpy(dtype=np.float64, na_value=np.inf),
-                media["offset"].to_numpy().astype(np.float64),
-                np.full(mm, "image", dtype=object),
-                np.full(mm, "", dtype=object),
-                media["media_ref"].to_numpy(dtype=object))
+    # Media passthrough is keyed to the per-(doc, page) pairs that
+    # produced decoded samples — computed from THIS doc's rows only, so
+    # a doc's output never depends on other docs in the Arrow batch
+    # (determinism invariant: per-doc, never batch/partition-derived).
+    media = flat[flat["kind"] == "image"]
+    if len(media) and len(samples):
+        sample_pages = (samples[["doc_pos", "page_number"]]
+                        .drop_duplicates()
+                        .rename(columns={"page_number": "page"}))
+        media = media.merge(sample_pages, on=["doc_pos", "page"])
+    else:
+        media = media.iloc[:0]
+    if len(media):
+        mm = len(media)
+        add(media["doc_pos"].to_numpy(), np.full(mm, 1),
+            media["page"].to_numpy(), np.full(mm, 1),
+            np.zeros(mm), np.zeros(mm),
+            media["y0"].to_numpy(dtype=np.float64, na_value=np.inf),
+            media["x0"].to_numpy(dtype=np.float64, na_value=np.inf),
+            media["offset"].to_numpy().astype(np.float64),
+            np.full(mm, "image", dtype=object),
+            np.full(mm, "", dtype=object),
+            media["media_ref"].to_numpy(dtype=object))
 
     if docs:
         doc_a = np.concatenate(docs).astype(np.int64)
@@ -377,50 +348,6 @@ def _assemble_batch(batch: pa.RecordBatch, r: dict,
 
 
 # ---------------------------------------------------------------------------
-# pandas-compat wrappers (kernel-level tests drive these without Spark)
-# ---------------------------------------------------------------------------
-
-
-def _extract_batch(pdf: pd.DataFrame, cfg: ExtractionConfig) -> dict:
-    """pandas-input batch runner; intermediates carry doc_id strings."""
-    batch = pa.RecordBatch.from_pandas(pdf[["doc_id", "spans"]],
-                                       schema=_DOCS_PA, preserve_index=False)
-    r = _extract_batch_flat(flat_from_batch(batch), cfg)
-    ids = pdf["doc_id"].to_numpy()
-    out = {}
-    for name, df in r.items():
-        df = df.copy()
-        if "doc_pos" in df.columns:
-            if len(df):
-                df["doc_id"] = ids[df["doc_pos"].to_numpy().astype(np.int64)]
-            else:
-                df["doc_id"] = np.array([], dtype=object)
-            df = df.drop(columns=["doc_pos"])
-        out[name] = df
-    return out
-
-
-def _assemble_output(doc_ids: pd.Series, samples: pd.DataFrame,
-                     flat: pd.DataFrame, table_pages: pd.DataFrame,
-                     cfg: ExtractionConfig) -> pd.DataFrame:
-    """pandas-compat assembly over doc_id-keyed intermediates."""
-    ids = doc_ids.to_numpy()
-    pos = {d: i for i, d in enumerate(ids)}
-
-    def reposed(df: pd.DataFrame) -> pd.DataFrame:
-        df = df.copy()
-        df["doc_pos"] = (df["doc_id"].map(pos).to_numpy(dtype=np.int64)
-                         if len(df) else np.array([], dtype=np.int64))
-        return df
-
-    r = {"samples": reposed(samples), "flat": reposed(flat),
-         "table_pages": reposed(table_pages)}
-    fake = pa.RecordBatch.from_arrays([pa.array(ids, pa.string())],
-                                      names=["doc_id"])
-    return _assemble_batch(fake, r, cfg).to_pandas()
-
-
-# ---------------------------------------------------------------------------
 # public operators
 # ---------------------------------------------------------------------------
 
@@ -437,43 +364,47 @@ def extract_documents(docs: DataFrame, cfg: ExtractionConfig = DEFAULT_CONFIG) -
         for batch in batches:
             if len(batch) == 0:
                 continue
-            r = _extract_batch_flat(flat_from_batch(batch), cfg)
+            r = _extract_batch_flat(flat_from_batch(batch))
             yield _assemble_batch(batch, r, cfg)
 
     return docs.mapInArrow(run, schema=OUTPUT_SCHEMA)
 
 
-def _flat_out(batch_pdf: pd.DataFrame, schema: pa.Schema) -> pa.RecordBatch:
-    return pa.RecordBatch.from_pandas(batch_pdf, schema=schema,
-                                      preserve_index=False)
+def map_flat_batches(docs: DataFrame, schema: str,
+                     fn: Callable[[pd.DataFrame], pd.DataFrame]) -> DataFrame:
+    """The one batch loop of the projection operators.
 
-
-_CLS_PA = pa.schema([("doc_id", pa.string()), ("page", pa.int32()),
-                     ("page_type", pa.string()), ("confidence", pa.float64()),
-                     ("reason", pa.string())])
-
-
-def classify_documents(docs: DataFrame) -> DataFrame:
-    """docs -> (doc_id, page, page_type, confidence, reason) — C1 only."""
+    Per Arrow batch of (doc_id, spans): flatten, call ``fn`` on the flat
+    frame, and emit its rows under ``schema`` (a DDL string whose first
+    field is ``doc_id``).  ``fn`` returns a ``doc_pos``-keyed frame that
+    carries every other schema column; ``doc_id`` is gathered here.  A
+    document without spans yields no rows, so empty batches and empty
+    flat frames are skipped without calling ``fn``."""
+    arrow_schema = to_arrow_schema(DataType.fromDDL(schema))
+    value_cols = arrow_schema.names[1:]
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             if len(batch) == 0:
                 continue
-            cls = classify_flat(flat_from_batch(batch))
-            if len(cls) == 0:
+            flat = flat_from_batch(batch)
+            if len(flat) == 0:
                 continue
-            ids = _doc_ids_pd(batch)
-            out = pd.DataFrame({
-                "doc_id": ids[cls["doc_pos"].to_numpy().astype(np.int64)],
-                "page": cls["page"].astype("int32"),
-                "page_type": cls["page_type"],
-                "confidence": cls["confidence"],
-                "reason": cls["reason"],
-            })
-            yield _flat_out(out, _CLS_PA)
+            out = fn(flat)
+            if len(out) == 0:
+                continue
+            ids = _doc_ids_pd(batch)[out["doc_pos"].to_numpy().astype(np.int64)]
+            cols = {"doc_id": ids, **{c: out[c].to_numpy() for c in value_cols}}
+            yield pa.RecordBatch.from_pandas(pd.DataFrame(cols),
+                                             schema=arrow_schema,
+                                             preserve_index=False)
 
-    return docs.mapInArrow(run, schema=CLASSIFICATION_SCHEMA)
+    return docs.mapInArrow(run, schema=schema)
+
+
+def classify_documents(docs: DataFrame) -> DataFrame:
+    """docs -> (doc_id, page, page_type, confidence, reason) — C1 only."""
+    return map_flat_batches(docs, CLASSIFICATION_SCHEMA, classify_flat)
 
 
 def classify_documents_structural(docs: DataFrame, page_width: float = 612.0,
@@ -488,31 +419,16 @@ def classify_documents_structural(docs: DataFrame, page_width: float = 612.0,
     reads them from the PDF page object); they default to US Letter.
     """
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if len(batch) == 0:
-                continue
-            flat = flat_from_batch(batch)
-            if len(flat) == 0:
-                continue
-            stats = _structural_stats(flat, page_width, page_height)
-            cls = kclassify.classify_pages_structural(stats)
-            ids = _doc_ids_pd(batch)
-            out = pd.DataFrame({
-                "doc_id": ids[stats["doc_pos"].to_numpy().astype(np.int64)],
-                "page": stats["page_number"].astype("int32"),
-                "page_type": cls["page_type"].to_numpy(),
-                "confidence": cls["confidence"].to_numpy(),
-            })
-            yield pa.RecordBatch.from_pandas(out, schema=_C2_PA,
-                                             preserve_index=False)
+    def classify(flat: pd.DataFrame) -> pd.DataFrame:
+        stats = _structural_stats(flat, page_width, page_height)
+        cls = kclassify.classify_pages_structural(stats)
+        return stats[["doc_pos", "page"]].assign(
+            page_type=cls["page_type"].to_numpy(),
+            confidence=cls["confidence"].to_numpy())
 
-    return docs.mapInArrow(
-        run, schema="doc_id string, page int, page_type string, confidence double")
-
-
-_C2_PA = pa.schema([("doc_id", pa.string()), ("page", pa.int32()),
-                    ("page_type", pa.string()), ("confidence", pa.float64())])
+    return map_flat_batches(
+        docs, "doc_id string, page int, page_type string, confidence double",
+        classify)
 
 
 def _structural_stats(flat: pd.DataFrame, page_width: float,
@@ -551,36 +467,10 @@ def _structural_stats(flat: pd.DataFrame, page_width: float,
     return stats
 
 
-_SAMPLES_PA = pa.schema(
-    [("doc_id", pa.string())]
-    + [(c, pa.string()) for c in ksamples.SAMPLE_COLUMNS]
-    + [("page_number", pa.int32()), ("row_idx", pa.int32()),
-       ("depth_feet_f", pa.float64()), ("porosity_ambient_pct_f", pa.float64())]
-)
-
-
-def extract_samples(docs: DataFrame, cfg: ExtractionConfig = DEFAULT_CONFIG) -> DataFrame:
+def extract_samples(docs: DataFrame) -> DataFrame:
     """docs -> flat decoded sample rows (the CSV-shaped relational view)."""
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if len(batch) == 0:
-                continue
-            r = _extract_batch_flat(flat_from_batch(batch), cfg)
-            s = r["samples"]
-            if len(s) == 0:
-                continue
-            ids = _doc_ids_pd(batch)
-            out = pd.DataFrame({"doc_id": ids[s["doc_pos"].to_numpy().astype(np.int64)]})
-            for c in ksamples.SAMPLE_COLUMNS:
-                out[c] = s[c].to_numpy()
-            out["page_number"] = s["page_number"].to_numpy().astype("int32")
-            out["row_idx"] = s["row_idx"].to_numpy().astype("int32")
-            out["depth_feet_f"] = s["depth_feet_f"].to_numpy()
-            out["porosity_ambient_pct_f"] = s["porosity_ambient_pct_f"].to_numpy()
-            yield _flat_out(out, _SAMPLES_PA)
-
-    return docs.mapInArrow(run, schema=SAMPLES_SCHEMA)
+    return map_flat_batches(docs, SAMPLES_SCHEMA,
+                            lambda flat: _extract_batch_flat(flat)["samples"])
 
 
 def verify_headers_documents(docs: DataFrame) -> DataFrame:
@@ -612,28 +502,7 @@ def verify_headers_documents(docs: DataFrame) -> DataFrame:
              "n_mismatches")
 
 
-_HDR_PA = pa.schema([("doc_id", pa.string()), ("page", pa.int32()),
-                     ("col", pa.int32()), ("header", pa.string())])
-
-
 def extract_headers(docs: DataFrame) -> DataFrame:
     """docs -> (doc_id, page, col, header) — H1 per table page."""
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if len(batch) == 0:
-                continue
-            r = _extract_batch_flat(flat_from_batch(batch), DEFAULT_CONFIG)
-            h = r["headers"]
-            if len(h) == 0:
-                continue
-            ids = _doc_ids_pd(batch)
-            out = pd.DataFrame({
-                "doc_id": ids[h["doc_pos"].to_numpy().astype(np.int64)],
-                "page": h["page"].astype("int32"),
-                "col": h["col"].astype("int32"),
-                "header": h["header"],
-            })
-            yield _flat_out(out, _HDR_PA)
-
-    return docs.mapInArrow(run, schema=HEADERS_SCHEMA)
+    return map_flat_batches(docs, HEADERS_SCHEMA,
+                            lambda flat: _extract_batch_flat(flat)["headers"])

@@ -15,11 +15,7 @@ Scale notes (10^12 docs):
   * the salt is a deterministic hash — no Date/random, so replays and
     checkpoint resumes see identical placement;
   * `repartitionByRange` samples the salted key to build balanced range
-    bounds — one shuffle, after which the pipeline is narrow to the sink;
-  * `isolate_heavy` additionally gives span-count outliers their own
-    partitions (AQE can't split a single huge row, so we pre-route
-    them) — the local[8]/local[32] scaling bench uses this on the skew
-    fixture (sources/fixtures.build_skew_docs).
+    bounds — one shuffle, after which the pipeline is narrow to the sink.
 """
 
 from __future__ import annotations
@@ -45,20 +41,3 @@ def salted_repartition(docs: DataFrame,
         .drop("_salt")
     )
 
-
-def isolate_heavy(docs: DataFrame,
-                  cfg: ExtractionConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Route span-count outliers (> cfg.heavy_doc_span_threshold) into
-    dedicated partitions so a single oversized document never queues
-    behind — or batches with — normal documents.
-
-    Heavy docs get partition = hash(doc_id) spread over the first
-    partitions of their own exchange; the two classes are unioned after
-    independent repartitioning (each union leg keeps its partitioning —
-    no extra shuffle)."""
-    sized = docs.withColumn("_nspans", F.size(F.col("spans")))
-    light = sized.filter(F.col("_nspans") <= cfg.heavy_doc_span_threshold)
-    heavy = sized.filter(F.col("_nspans") > cfg.heavy_doc_span_threshold)
-    light_p = salted_repartition(light.drop("_nspans"), cfg)
-    heavy_p = heavy.drop("_nspans").repartition(cfg.num_partitions, F.col("doc_id"))
-    return light_p.unionByName(heavy_p)

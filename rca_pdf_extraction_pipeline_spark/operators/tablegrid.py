@@ -24,27 +24,16 @@ so downstream consolidation (P3) groups by doc_id with tiny groups.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels import tablegrid as ktg
-from .extraction import _doc_ids_pd, flat_from_batch
+from .extraction import map_flat_batches
 
 CELLS_SCHEMA = ("doc_id string, page int, table_index int, row_idx int, "
                 "col_idx int, cell string, is_header boolean, "
                 "confidence double")
-
-_CELLS_PA = pa.schema([
-    ("doc_id", pa.string()), ("page", pa.int32()),
-    ("table_index", pa.int32()), ("row_idx", pa.int32()),
-    ("col_idx", pa.int32()), ("cell", pa.string()),
-    ("is_header", pa.bool_()), ("confidence", pa.float64()),
-])
 
 TABLES_SCHEMA = ("doc_id string, table_id int, headers array<string>, "
                  "rows array<array<string>>")
@@ -64,33 +53,16 @@ def extract_table_cells(docs: DataFrame,
     """
     pages = sorted(set(page_numbers)) if page_numbers else None
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if len(batch) == 0:
-                continue
-            flat = flat_from_batch(batch)
-            if pages is not None and len(flat):
-                flat = flat[flat["page"].isin(pages)]
-            cells = ktg.infer_grid_tables(flat, snap_tol=snap_tol)
-            if not text_fallback and len(cells):
-                cells = cells[cells["confidence"] >= 1.0]
-            if len(cells) == 0:
-                continue
-            ids = _doc_ids_pd(batch)
-            out = pd.DataFrame({
-                "doc_id": ids[cells["doc_pos"].to_numpy().astype(np.int64)],
-                "page": cells["page"].to_numpy().astype("int32"),
-                "table_index": cells["table_index"].to_numpy().astype("int32"),
-                "row_idx": cells["row_idx"].to_numpy().astype("int32"),
-                "col_idx": cells["col_idx"].to_numpy().astype("int32"),
-                "cell": cells["cell"].astype(str).to_numpy(),
-                "is_header": cells["is_header"].to_numpy().astype(bool),
-                "confidence": cells["confidence"].to_numpy().astype(np.float64),
-            })
-            yield pa.RecordBatch.from_pandas(out, schema=_CELLS_PA,
-                                             preserve_index=False)
+    def cells(flat: pd.DataFrame) -> pd.DataFrame:
+        if pages is not None:
+            flat = flat[flat["page"].isin(pages)]
+        out = ktg.infer_grid_tables(flat, snap_tol=snap_tol)
+        if not text_fallback and len(out):
+            out = out[out["confidence"] >= 1.0]
+        return out.assign(cell=out["cell"].astype(str),
+                          is_header=out["is_header"].astype(bool))
 
-    return docs.mapInArrow(run, schema=CELLS_SCHEMA)
+    return map_flat_batches(docs, CELLS_SCHEMA, cells)
 
 
 def extract_tables_nested(docs: DataFrame, **kw) -> DataFrame:

@@ -173,35 +173,45 @@ def extract_with_checkpoint(
     ``transform`` swaps the per-wave operator: any ``(df, cfg) ->
     (doc_id, spans)`` callable rides the same salting, bucket waves,
     observed metrics and snapshot commits (default
-    :func:`extract_documents`; the raw-HTML job passes
-    ``htmlparse.to_spans``).  ``operation`` labels the lineage record.
+    :func:`extract_documents`; ``jobs/run_extraction.py`` passes
+    ``htmlparse.to_spans`` for markup input).  ``operation`` labels the
+    lineage record.
     """
+    bucket = _bucket_col(n_buckets)
+    return _run_waves(
+        docs.sparkSession,
+        lambda group: docs.filter(bucket.isin([int(b) for b in group])),
+        table_dir, cfg, n_buckets, waves, max_waves, input_desc,
+        transform=transform, operation=operation)
+
+
+def _run_waves(spark: SparkSession, read_group, table_dir: str | Path,
+               cfg: ExtractionConfig, n_buckets: int, waves: int,
+               max_waves: int | None, input_desc: str, transform=None,
+               operation: str = "extract_documents") -> dict:
+    """The wave loop both checkpoint entry points share: plan the todo
+    buckets into waves, run each wave over ``read_group(group)`` (the
+    input docs of those buckets), and report."""
     table_dir = Path(table_dir)
     manifest = SnapshotManifest(table_dir)
     done = manifest.completed_buckets()
     todo = sorted(set(range(n_buckets)) - done)
-    spark = docs.sparkSession
 
     wave_size = max(1, (n_buckets + waves - 1) // waves)
     wave_groups = [todo[i:i + wave_size] for i in range(0, len(todo), wave_size)]
     if max_waves is not None:
         wave_groups = wave_groups[:max_waves]
 
-    ran = []
-    bucket = _bucket_col(n_buckets)
-    for group in wave_groups:
-        sub = docs.filter(bucket.isin([int(b) for b in group]))
-        snap = _run_wave(spark, sub, group, table_dir, manifest, cfg,
-                         n_buckets, input_desc, transform=transform,
-                         operation=operation)
-        ran.append(snap)
-
+    ran = [_run_wave(spark, read_group(group), group, table_dir, manifest,
+                     cfg, n_buckets, input_desc, transform=transform,
+                     operation=operation)
+           for group in wave_groups]
+    completed_now = sum(len(s["completed_buckets"]) for s in ran)
     return {
         "resumed_from": len(done),
         "waves_run": len(ran),
-        "buckets_completed_now": sum(len(s["completed_buckets"]) for s in ran),
-        "buckets_remaining": n_buckets - len(done)
-        - sum(len(s["completed_buckets"]) for s in ran),
+        "buckets_completed_now": completed_now,
+        "buckets_remaining": n_buckets - len(done) - completed_now,
         "snapshots": [s["id"] for s in ran],
     }
 
@@ -296,30 +306,10 @@ def extract_with_checkpoint_bucketed(
     per wave, only that wave's input bucket directories are read (file
     pruning), instead of scanning all input and filtering on a computed
     bucket predicate."""
-    table_dir = Path(table_dir)
-    manifest = SnapshotManifest(table_dir)
-    done = manifest.completed_buckets()
-    todo = sorted(set(range(n_buckets)) - done)
-
-    wave_size = max(1, (n_buckets + waves - 1) // waves)
-    wave_groups = [todo[i:i + wave_size] for i in range(0, len(todo), wave_size)]
-    if max_waves is not None:
-        wave_groups = wave_groups[:max_waves]
-
-    ran = []
-    for group in wave_groups:
-        sub = bucketed_input_df(spark, input_dir, group)
-        snap = _run_wave(spark, sub, group, table_dir, manifest, cfg,
-                         n_buckets, input_desc=f"bucketed:{input_dir}")
-        ran.append(snap)
-    return {
-        "resumed_from": len(done),
-        "waves_run": len(ran),
-        "buckets_completed_now": sum(len(s["completed_buckets"]) for s in ran),
-        "buckets_remaining": n_buckets - len(done)
-        - sum(len(s["completed_buckets"]) for s in ran),
-        "snapshots": [s["id"] for s in ran],
-    }
+    return _run_waves(
+        spark, lambda group: bucketed_input_df(spark, input_dir, group),
+        table_dir, cfg, n_buckets, waves, max_waves,
+        input_desc=f"bucketed:{input_dir}")
 
 
 def read_extracted(spark: SparkSession, table_dir: str | Path) -> DataFrame:

@@ -9,12 +9,13 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
+from .config import DEFAULT_CONFIG
+
 
 def get_spark(
     app_name: str = "rca-extraction",
     master: str | None = None,
     shuffle_partitions: int = 32,
-    arrow_max_records: int = 64,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build a SparkSession with the engine's defaults.
@@ -35,7 +36,8 @@ def get_spark(
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_max_records))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
+                str(DEFAULT_CONFIG.arrow_max_records))
         # pin the session zone: gap/window arithmetic on TIMESTAMP (ltz)
         # and the NTZ<->LTZ round-trips in sessionize must agree with the
         # naive-timestamp DuckDB oracles on any host, any DST rules

@@ -24,8 +24,8 @@ from __future__ import annotations
 
 from pathlib import Path
 
-import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from ..config import GOLDEN_EXTRACTED_HEADERS
 
@@ -461,15 +461,24 @@ def build_skew_docs(n_small: int = 40, big_factor: int = 100) -> list[dict]:
     return docs
 
 
-def docs_to_pandas(docs: list[dict]) -> pd.DataFrame:
-    return pd.DataFrame({"doc_id": [d["doc_id"] for d in docs],
-                         "spans": [d["spans"] for d in docs]})
-
-
 SPAN_SCHEMA_DDL = (
     "doc_id string, spans array<struct<kind:string, text:string, "
     "media_ref:string, offset:int>>"
 )
+
+_DOCS_ARROW = pa.schema([
+    ("doc_id", pa.string()),
+    ("spans", pa.list_(pa.struct([
+        ("kind", pa.string()), ("text", pa.string()),
+        ("media_ref", pa.string()), ("offset", pa.int32())]))),
+])
+
+
+def docs_to_batch(docs: list[dict]) -> pa.RecordBatch:
+    """Fixture docs as ONE Arrow batch of (doc_id, spans) — the batch
+    shape ``mapInArrow`` hands the extraction operators, so kernel tests
+    drive the executor path without Spark."""
+    return pa.RecordBatch.from_pylist(docs, schema=_DOCS_ARROW)
 
 
 def docs_to_spark(spark, docs: list[dict]):

@@ -1,9 +1,12 @@
 """End-to-end golden tests: the synthetic 253-page twin of W20552.pdf must
 classify and extract EXACTLY as the reference's committed golden outputs
 (span-sequence equality on kind, text, media_ref, order — BASELINE.json
-per-row invariant)."""
+per-row invariant).
 
-import pandas as pd
+The tests drive the functions executors run — ``flat_from_batch`` ->
+``_extract_batch_flat`` -> ``_assemble_batch`` over one Arrow batch —
+without Spark."""
+
 import pytest
 
 from rca_pdf_extraction_pipeline_spark.config import (
@@ -11,10 +14,10 @@ from rca_pdf_extraction_pipeline_spark.config import (
     GOLDEN_EXTRACTED_HEADERS,
 )
 from rca_pdf_extraction_pipeline_spark.operators.extraction import (
-    _assemble_output,
-    _extract_batch,
+    _assemble_batch,
+    _extract_batch_flat,
     classify_flat,
-    flatten_spans,
+    flat_from_batch,
 )
 from rca_pdf_extraction_pipeline_spark.sources import fixtures as fx
 
@@ -26,8 +29,24 @@ def golden_doc():
 
 @pytest.fixture(scope="module")
 def batch_result(golden_doc):
-    pdf = fx.docs_to_pandas([golden_doc])
-    return _extract_batch(pdf, DEFAULT_CONFIG)
+    return _extract_batch_flat(flat_from_batch(fx.docs_to_batch([golden_doc])))
+
+
+def _assemble_docs(docs):
+    """doc_id -> output span tuples, as ``extract_documents`` emits them."""
+    batch = fx.docs_to_batch(docs)
+    out = _assemble_batch(batch, _extract_batch_flat(flat_from_batch(batch)),
+                          DEFAULT_CONFIG)
+    return {
+        row["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"])
+                        for s in row["spans"]]
+        for row in out.to_pylist()
+    }
+
+
+def _span_tuples(doc):
+    return [(s["kind"], s["text"], s["media_ref"], s["offset"])
+            for s in doc["spans"]]
 
 
 def test_classification_matches_golden_253_pages(batch_result):
@@ -70,44 +89,17 @@ def test_headers_flattened_on_all_table_pages(batch_result):
         assert h == GOLDEN_EXTRACTED_HEADERS[:-1], f"page {page}"
 
 
-def test_golden_span_sequence_equality(golden_doc, batch_result):
-    pdf = fx.docs_to_pandas([golden_doc])
-    out = _assemble_output(pdf["doc_id"], batch_result["samples"],
-                           batch_result["flat"], batch_result["table_pages"],
-                           DEFAULT_CONFIG)
-    got = out.iloc[0]["spans"]
-    want = fx.expected_golden_output()["spans"]
+def test_golden_span_sequence_equality(golden_doc):
+    got = _assemble_docs([golden_doc])[golden_doc["doc_id"]]
+    want = _span_tuples(fx.expected_golden_output())
     assert len(got) == len(want) == 12 + 138 * 12 + 4
-    for g, w in zip(got, want):
-        assert (g["kind"], g["text"], g["media_ref"], g["offset"]) == (
-            w["kind"], w["text"], w["media_ref"], w["offset"])
+    assert got == want
 
 
 def test_parser_branch_docs_span_equality():
-    docs = fx.build_parser_branch_docs()
-    pdf = fx.docs_to_pandas(docs)
-    r = _extract_batch(pdf, DEFAULT_CONFIG)
-    out = _assemble_output(pdf["doc_id"], r["samples"], r["flat"],
-                           r["table_pages"], DEFAULT_CONFIG)
-    for _, row in out.iterrows():
-        want = fx.expected_branch_output(row.doc_id)["spans"]
-        got = row.spans
-        assert len(got) == len(want), row.doc_id
-        for g, w in zip(got, want):
-            assert (g["kind"], g["text"], g["media_ref"], g["offset"]) == (
-                w["kind"], w["text"], w["media_ref"], w["offset"]), row.doc_id
-
-
-def _assemble_docs(docs):
-    pdf = fx.docs_to_pandas(docs)
-    r = _extract_batch(pdf, DEFAULT_CONFIG)
-    out = _assemble_output(pdf["doc_id"], r["samples"], r["flat"],
-                           r["table_pages"], DEFAULT_CONFIG)
-    return {
-        row.doc_id: [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                     for s in row.spans]
-        for _, row in out.iterrows()
-    }
+    out = _assemble_docs(fx.build_parser_branch_docs())
+    for doc_id, got in out.items():
+        assert got == _span_tuples(fx.expected_branch_output(doc_id)), doc_id
 
 
 def test_vector_art_kinds_round_trip_untouched(golden_doc):
@@ -148,9 +140,7 @@ def test_media_emission_is_batch_independent(golden_doc):
     alone = _assemble_docs([doc])[doc["doc_id"]]
     together = _assemble_docs([doc, golden_doc])[doc["doc_id"]]
     assert alone == together
-    want = fx.expected_branch_output(doc["doc_id"])["spans"]
-    assert alone == [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                     for s in want]
+    assert alone == _span_tuples(fx.expected_branch_output(doc["doc_id"]))
     assert [k for k, *_ in alone] == ["field"] * len(GOLDEN_EXTRACTED_HEADERS)
 
     # and the golden doc's own sequence is unchanged by the extra neighbor
@@ -160,10 +150,10 @@ def test_media_emission_is_batch_independent(golden_doc):
 
 
 def test_classify_archetype_docs():
-    docs = fx.build_classify_docs()
-    pdf = fx.docs_to_pandas(docs)
-    cls = classify_flat(flatten_spans(pdf))
-    got = dict(zip(cls.doc_id, cls.page_type))
+    batch = fx.docs_to_batch(fx.build_classify_docs())
+    cls = classify_flat(flat_from_batch(batch))
+    doc_ids = batch.column("doc_id").to_numpy(zero_copy_only=False)
+    got = dict(zip(doc_ids[cls.doc_pos.to_numpy()], cls.page_type))
     assert got == {
         "classify-plot": "plot",
         "classify-cover": "cover",

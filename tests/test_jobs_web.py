@@ -1,15 +1,15 @@
-"""Raw-HTML extraction job (jobs/run_web_extract.py): end-to-end main()
-over a markup pages table, snapshot-manifest resume with the to_spans
-transform, lineage operation label, F9 path guard."""
+"""The extraction job (jobs/run_extraction.py) over raw-HTML input:
+end-to-end main() over a markup pages table, snapshot-manifest resume
+with the to_spans transform, lineage operation label, F9 path guard, and
+the refusal of input that is neither span docs nor markup pages."""
 
 from __future__ import annotations
 
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
-from rca_pdf_extraction_pipeline_spark.jobs import run_web_extract
+from rca_pdf_extraction_pipeline_spark.jobs import run_extraction
 from rca_pdf_extraction_pipeline_spark.operators import htmlparse as HP
 from rca_pdf_extraction_pipeline_spark.plans import checkpoint
 
@@ -32,7 +32,7 @@ def test_run_web_extract_end_to_end(spark, tmp_path):
     in_dir, out_dir = str(tmp_path / "pages"), str(tmp_path / "table")
     pages.write.parquet(in_dir)
 
-    rc = run_web_extract.main([
+    rc = run_extraction.main([
         "--input", in_dir, "--output", out_dir,
         "--n-buckets", "8", "--waves", "2",
     ])
@@ -81,7 +81,7 @@ def test_web_extract_all_blocks_flag(spark, tmp_path):
     pages = _pages(spark, n=6)
     in_dir, out_dir = str(tmp_path / "pages"), str(tmp_path / "table")
     pages.write.parquet(in_dir)
-    rc = run_web_extract.main([
+    rc = run_extraction.main([
         "--input", in_dir, "--output", out_dir, "--all-blocks",
         "--n-buckets", "4", "--waves", "1",
     ])
@@ -96,8 +96,20 @@ def test_web_extract_all_blocks_flag(spark, tmp_path):
 
 def test_web_extract_output_path_guard(tmp_path):
     with pytest.raises(ValueError, match="outside allowed"):
-        run_web_extract.main([
+        run_extraction.main([
             "--input", str(tmp_path / "in"),
             "--output", "/etc/forbidden",
             "--allowed-roots", str(tmp_path),
         ])
+
+
+def test_extraction_job_refuses_unknown_input(spark, tmp_path):
+    """Input with neither a 'spans' nor an 'html' column is refused by
+    name before any extraction runs — no output table is created."""
+    in_dir, out_dir = str(tmp_path / "rows"), tmp_path / "table"
+    spark.createDataFrame([(1, "x")], "doc_id long, body string") \
+        .write.parquet(in_dir)
+    with pytest.raises(ValueError, match=r"columns \['doc_id', 'body'\]"):
+        run_extraction.main(["--input", in_dir, "--output", str(out_dir),
+                             "--allowed-roots", str(tmp_path)])
+    assert not out_dir.exists()

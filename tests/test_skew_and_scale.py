@@ -1,12 +1,12 @@
 """Skew defusal (operators/skew.py) + partitioning determinism:
 output span sequences must be identical under any partitioning
-(SURVEY.md §7.4.2) and heavy docs must spread across partitions."""
+(SURVEY.md §7.4.2) and docs must spread across partitions."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from rca_pdf_extraction_pipeline_spark.config import DEFAULT_CONFIG, ExtractionConfig
+from rca_pdf_extraction_pipeline_spark.config import ExtractionConfig
 from rca_pdf_extraction_pipeline_spark.operators import skew
 from rca_pdf_extraction_pipeline_spark.operators.extraction import extract_documents
 from rca_pdf_extraction_pipeline_spark.sources import fixtures
@@ -33,24 +33,6 @@ def test_salted_repartition_spreads_docs(spark):
     assert max(p["count"] for p in parts) <= 41 * 0.5
 
 
-def test_isolate_heavy_separates_outliers(spark):
-    docs = fixtures.docs_to_spark(spark, fixtures.build_skew_docs(n_small=30,
-                                                                 big_factor=30))
-    cfg = ExtractionConfig(num_partitions=8, heavy_doc_span_threshold=1000)
-    routed = skew.isolate_heavy(docs, cfg)
-    pid_of = {
-        r["doc_id"]: r["pid"]
-        for r in routed.withColumn("pid", F.spark_partition_id())
-                       .select("doc_id", "pid").collect()
-    }
-    heavy_pid = pid_of["skew-big"]
-    sharers = [d for d, p in pid_of.items() if p == heavy_pid and d != "skew-big"]
-    # the oversized doc shares its partition with at most a couple of
-    # small docs (hash collision), never a big cluster of them
-    assert len(sharers) <= 8
-    assert routed.count() == 31
-
-
 def test_extraction_invariant_under_partitioning(spark):
     """Same output span sequences at 1, 3, and 16 partitions, with and
     without skew defusal — order is computed per-doc, never from
@@ -63,8 +45,6 @@ def test_extraction_invariant_under_partitioning(spark):
         docs.repartition(3),
         docs.repartition(16, "doc_id"),
         skew.salted_repartition(docs, ExtractionConfig(num_partitions=16)),
-        skew.isolate_heavy(docs, ExtractionConfig(num_partitions=8,
-                                                  heavy_doc_span_threshold=500)),
     ]:
         assert _collect_spans(extract_documents(variant)) == baseline
 

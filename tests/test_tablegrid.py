@@ -4,7 +4,6 @@ the pure-numpy BMP codec — semantic tests beyond the DuckDB oracles."""
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,13 +14,15 @@ from rca_pdf_extraction_pipeline_spark.operators import (
     multimodal,
     tablegrid,
 )
-from rca_pdf_extraction_pipeline_spark.operators.extraction import flatten_spans
+from rca_pdf_extraction_pipeline_spark.operators.extraction import flat_from_batch
 from rca_pdf_extraction_pipeline_spark.sources import fixtures as fx
 
 
 def _kernel_cells(docs):
-    flat = flatten_spans(fx.docs_to_pandas(docs))
-    out = ktg.infer_grid_tables(flat, key="doc_id")
+    batch = fx.docs_to_batch(docs)
+    out = ktg.infer_grid_tables(flat_from_batch(batch))
+    doc_ids = batch.column("doc_id").to_numpy(zero_copy_only=False)
+    out["doc_id"] = doc_ids[out["doc_pos"].to_numpy(dtype=np.int64)]
     return list(out[["doc_id", "page", "table_index", "row_idx", "col_idx",
                      "cell", "is_header", "confidence"]]
                 .itertuples(index=False, name=None))
@@ -249,8 +250,8 @@ def test_span_search_order_and_limit(spark):
 
 def test_f9_output_path_allowlist_matches_reference_contract(tmp_path):
     """Reference core_analysis.py:751-768: True when inside an allowed
-    root (abspath prefix match), ValueError with the exact message shape
-    otherwise."""
+    root (abspath, compared by whole path components), ValueError with
+    the exact message shape otherwise."""
     from rca_pdf_extraction_pipeline_spark.jobs import run_extraction as job
 
     assert job.validate_output_path(str(tmp_path / "out"),
@@ -260,9 +261,14 @@ def test_f9_output_path_allowlist_matches_reference_contract(tmp_path):
                        match=r"Output path '/etc/passwd-dir' outside "
                              r"allowed directories"):
         job.validate_output_path("/etc/passwd-dir", [str(tmp_path)])
-    # relative paths resolve through abspath before the prefix check
+    # relative paths resolve through abspath before the root check
     with pytest.raises(ValueError):
         job.validate_output_path("../../outside", [str(tmp_path)])
+    # a root matches whole path components, not a string prefix
+    with pytest.raises(ValueError):
+        job.validate_output_path("/tmpevil/out")
+    with pytest.raises(ValueError):
+        job.validate_output_path(str(tmp_path) + "-evil/out", [str(tmp_path)])
 
 
 # ---- BMP codec ------------------------------------------------------------
