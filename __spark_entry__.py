@@ -2164,7 +2164,7 @@ def _q_multimodal_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     must come back ok=False."""
     ids = _t(spark, sf_dir, "documents").select("doc_id") \
         .filter(F.col("doc_id") < 300)
-    dec = multimodal.decode_media(multimodal.synth_bmp_media(ids), fake=False)
+    dec = multimodal.decode_media(multimodal.synth_bmp_media(ids))
     return dec.select(
         "media_ref", "ok", "decoded_width", "decoded_height",
         F.round(F.element_at("features", 1).cast("double"), 4).alias("f0"),
@@ -2181,8 +2181,7 @@ def _q_media_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids = _t(spark, sf_dir, "documents").select("doc_id") \
         .filter(F.col("doc_id") < 300)
     media = multimodal.synth_bmp_media(ids)
-    return multimodal.media_near_pairs(media, threshold=0.999, n_bits=8,
-                                       fake=False)
+    return multimodal.media_near_pairs(media, threshold=0.999, n_bits=8)
 
 
 def _q_media_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2331,8 +2330,7 @@ def _q_media_cross_codec_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") < 150)
     media = multimodal.synth_bmp_media(ids).unionByName(
         multimodal.synth_jpeg_media(ids))
-    return multimodal.media_near_pairs(media, threshold=0.999, n_bits=8,
-                                       fake=False)
+    return multimodal.media_near_pairs(media, threshold=0.999, n_bits=8)
 
 
 def _q_multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2343,7 +2341,7 @@ def _q_multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     must come back ok=False."""
     ids = _t(spark, sf_dir, "documents").select("doc_id") \
         .filter(F.col("doc_id") < 300)
-    dec = multimodal.decode_media(multimodal.synth_png_media(ids), fake=False)
+    dec = multimodal.decode_media(multimodal.synth_png_media(ids))
     return dec.select(
         "media_ref", "ok", "decoded_width", "decoded_height",
         F.round(F.element_at("features", 1).cast("double"), 4).alias("f0"),
@@ -2360,20 +2358,9 @@ def _q_multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids % 10 == 0 carry garbage payloads and must come back ok=False."""
     ids = _t(spark, sf_dir, "documents").select("doc_id") \
         .filter(F.col("doc_id") < 300)
-    dec = multimodal.decode_media(multimodal.synth_jpeg_media(ids), fake=False)
+    dec = multimodal.decode_media(multimodal.synth_jpeg_media(ids))
     return dec.select(
         "media_ref", "ok", "decoded_width", "decoded_height",
-        F.round(F.element_at("features", 1).cast("double"), 4).alias("f0"),
-    )
-
-
-def _q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stubbed decode (no codecs in env) — exercises the real Arrow
-    plumbing: binary payloads, batch shapes, typed output. The md5-seeded
-    fake features are themselves oracle-checkable (f0 below)."""
-    dec = multimodal.decode_media(_media_table(spark, sf_dir), fake=True)
-    return dec.select(
-        "media_ref", "kind", "ok", "decoded_width", "n_frames",
         F.round(F.element_at("features", 1).cast("double"), 4).alias("f0"),
     )
 
@@ -2808,7 +2795,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "domain_stats": _q_domain_stats,
         "a12_rollup": _q_a12_rollup,
         "multimodal_stats": _q_multimodal_stats,
-        "multimodal_decode": _q_multimodal_decode,
         "c2_structural": _q_c2_structural,
         "html_boilerplate": _q_html_boilerplate,
         "html_block_scores": _q_html_block_scores,
@@ -5843,21 +5829,6 @@ def _oracle_sql_literal() -> dict[str, str]:
                         ELSE round(CAST(CAST(r AS DOUBLE) / 255.0 AS FLOAT)::DOUBLE, 4)
                    END AS f0
             FROM m
-        """,
-        "multimodal_decode": """
-            WITH media AS (
-              SELECT printf('media-%05d', doc_id) AS media_ref,
-                     CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-                          ELSE 'video' END AS kind,
-                     text,
-                     (doc_id % 640 + 32)::INT AS decoded_width,
-                     (doc_id % 120 + 1) AS dur_s
-              FROM documents)
-            SELECT media_ref, kind, TRUE AS ok, decoded_width,
-                   (CASE WHEN kind = 'video' THEN dur_s ELSE 1 END)::INT AS n_frames,
-                   round((('0x' || substr(md5(text), 3, 2)
-                          || substr(md5(text), 1, 2))::BIGINT) / 65535.0, 4) AS f0
-            FROM media
         """,
         "c2_structural": """
             WITH stats AS (

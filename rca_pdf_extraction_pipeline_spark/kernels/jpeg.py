@@ -24,7 +24,7 @@ Python (entropy decode is inherently serial per restart segment), but
 all pixel math — dequantize, IDCT (one batched 8x8 basis matmul over
 every block), upsample, color convert — is vectorized numpy over the
 whole image.  Real decode is a per-image rare path inside an
-Arrow-batched ``mapInPandas`` stage, never per-row-of-corpus work
+Arrow-batched ``mapInArrow`` stage, never per-row-of-corpus work
 (same cost contract as decode_png's filter loop).
 
 Determinism: all roundings are explicit ``floor(x + 0.5)`` so the

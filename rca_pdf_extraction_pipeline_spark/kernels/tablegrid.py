@@ -68,9 +68,10 @@ def _cluster_1d(group_keys: np.ndarray, pos: np.ndarray,
     return cid, order, rep
 
 
-def _page_codes(df: pd.DataFrame, key: str) -> np.ndarray:
-    """Dense int code per (key, page) pair, order-stable by (key, page)."""
-    return df.groupby([key, "page"], sort=True).ngroup().to_numpy()
+def _page_codes(df: pd.DataFrame) -> np.ndarray:
+    """Dense int code per (doc_pos, page) pair, order-stable by (doc_pos,
+    page)."""
+    return df.groupby(["doc_pos", "page"], sort=True).ngroup().to_numpy()
 
 
 def _dense_cells(n_rows: np.ndarray, n_cols: np.ndarray
@@ -87,9 +88,9 @@ def _dense_cells(n_rows: np.ndarray, n_cols: np.ndarray
 
 def _assemble_tables(cells: pd.DataFrame, confidence: float) -> pd.DataFrame:
     """Shared header/empty-row assembly over a dense cell frame with columns
-    (gid, key, page, row, col, cell)."""
+    (gid, doc_pos, page, row, col, cell)."""
     if len(cells) == 0:
-        return pd.DataFrame(columns=["key", *CELL_COLS])
+        return pd.DataFrame(columns=["doc_pos", *CELL_COLS])
     cells = cells.sort_values(["gid", "row", "col"], kind="stable")
     nonempty = cells["cell"].to_numpy() != ""
     rk = cells["gid"].to_numpy() * KEY_STRIDE + cells["row"].to_numpy()
@@ -105,7 +106,7 @@ def _assemble_tables(cells: pd.DataFrame, confidence: float) -> pd.DataFrame:
     keep_cell = keep_row[row_codes] & (data_rows_per_gid[cells["gid"]] > 0)
     out = cells[keep_cell].copy()
     if len(out) == 0:
-        return pd.DataFrame(columns=["key", *CELL_COLS])
+        return pd.DataFrame(columns=["doc_pos", *CELL_COLS])
     # compact surviving data rows to 1..K per grid (header stays 0)
     srk = out["gid"].to_numpy() * KEY_STRIDE + out["row"].to_numpy()
     scodes, suniq = pd.factorize(srk, sort=True)
@@ -121,7 +122,7 @@ def _assemble_tables(cells: pd.DataFrame, confidence: float) -> pd.DataFrame:
         out["table_index"] = 0
     out["col_idx"] = out["col"].astype(np.int64)
     out["confidence"] = confidence
-    return out[["key", *CELL_COLS]]
+    return out[["doc_pos", *CELL_COLS]]
 
 
 def _concat_cells(located: pd.DataFrame) -> pd.DataFrame:
@@ -134,34 +135,37 @@ def _concat_cells(located: pd.DataFrame) -> pd.DataFrame:
     return joined.drop(columns=["content"])
 
 
-def infer_grid_tables(flat: pd.DataFrame, key: str = "doc_pos",
+def infer_grid_tables(flat: pd.DataFrame,
                       snap_tol: float = SNAP_TOL) -> pd.DataFrame:
     """Primary + fallback table inference over a flat span frame.
 
-    Returns (key, page, table_index, row_idx, col_idx, cell, is_header,
+    Returns (doc_pos, page, table_index, row_idx, col_idx, cell, is_header,
     confidence) — row_idx 0 is the header row, data rows are compacted to
     1..K after the all-empty-row drop.
     """
-    empty = pd.DataFrame(columns=[key, *CELL_COLS])
+    empty = pd.DataFrame(columns=["doc_pos", *CELL_COLS])
     geo_ok = flat["x0"].notna() & flat["y0"].notna() \
         & flat["x1"].notna() & flat["y1"].notna()
     f = flat[geo_ok]
     if len(f) == 0:
         return empty
 
-    primary = _primary_grid_tables(f, key, snap_tol)
-    covered = primary[[key, "page"]].drop_duplicates() if len(primary) else None
+    primary = _primary_grid_tables(f, snap_tol)
+    covered = primary[["doc_pos", "page"]].drop_duplicates() \
+        if len(primary) else None
     text = f[f["kind"] == "text"]
     if covered is not None and len(covered):
-        text = text.merge(covered, on=[key, "page"], how="left", indicator=True)
+        text = text.merge(covered, on=["doc_pos", "page"], how="left",
+                          indicator=True)
         text = text[text["_merge"] == "left_only"].drop(columns=["_merge"])
-    fallback = _fallback_text_tables(text, key, snap_tol)
+    fallback = _fallback_text_tables(text, snap_tol)
     out = pd.concat([primary, fallback], ignore_index=True) \
         if len(fallback) else primary
     if len(out) == 0:
         return empty
-    return (out.sort_values([key, "page", "table_index", "row_idx", "col_idx"],
-                            kind="stable").reset_index(drop=True))
+    return (out.sort_values(["doc_pos", "page", "table_index", "row_idx",
+                             "col_idx"], kind="stable")
+            .reset_index(drop=True))
 
 
 def _connected_components(n: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -182,14 +186,13 @@ def _connected_components(n: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return label
 
 
-def _primary_grid_tables(f: pd.DataFrame, key: str,
-                         snap_tol: float) -> pd.DataFrame:
+def _primary_grid_tables(f: pd.DataFrame, snap_tol: float) -> pd.DataFrame:
     """Lines-strategy grids, pdfplumber-faithful: rulings snap into
     boundary clusters, h/v clusters that INTERSECT (extent overlap within
     snap_tol) connect into components, and each component is one table —
     so a page carries any number of tables, ordered top-to-bottom /
     left-to-right into ``table_index`` exactly like ``find_tables``."""
-    empty = pd.DataFrame(columns=[key, *CELL_COLS])
+    empty = pd.DataFrame(columns=["doc_pos", *CELL_COLS])
     lines = f[f["kind"] == "line"]
     rects = f[f["kind"] == "rect"]
 
@@ -200,7 +203,7 @@ def _primary_grid_tables(f: pd.DataFrame, key: str,
 
     def _part(df, orient, pos_a, pos_b, lo_a, lo_b):
         return pd.DataFrame({
-            key: df[key].to_numpy(), "page": df["page"].to_numpy(),
+            "doc_pos": df["doc_pos"].to_numpy(), "page": df["page"].to_numpy(),
             "orient": orient,
             "pos": ((df[pos_a] + df[pos_b]) / 2).to_numpy(),
             "lo": np.minimum(df[lo_a].to_numpy(), df[lo_b].to_numpy()),
@@ -221,7 +224,7 @@ def _primary_grid_tables(f: pd.DataFrame, key: str,
         return empty
     rul = pd.concat(parts, ignore_index=True)
 
-    pcode = _page_codes(rul, key)
+    pcode = _page_codes(rul)
     rul = rul.assign(pcode=pcode)
     gkey = pcode * 2 + rul["orient"].to_numpy()
     cid, order, _ = _cluster_1d(gkey, rul["pos"].to_numpy(dtype=np.float64),
@@ -229,7 +232,7 @@ def _primary_grid_tables(f: pd.DataFrame, key: str,
     rs = rul.iloc[order].reset_index(drop=True)
     rs["cl"] = cid
     cl = (rs.groupby("cl", sort=True)
-          .agg(**{key: (key, "first")}, page=("page", "first"),
+          .agg(doc_pos=("doc_pos", "first"), page=("page", "first"),
                pcode=("pcode", "first"), orient=("orient", "first"),
                pos=("pos", "mean"), lo=("lo", "min"), hi=("hi", "max"))
           .reset_index())
@@ -257,7 +260,7 @@ def _primary_grid_tables(f: pd.DataFrame, key: str,
     cl["pos_h"] = np.where(cl["is_h"] == 1, cl["pos"], np.inf)
     cl["pos_v"] = np.where(cl["is_v"] == 1, cl["pos"], np.inf)
     gr = (cl.groupby("comp", sort=True)
-          .agg(**{key: (key, "first")}, page=("page", "first"),
+          .agg(doc_pos=("doc_pos", "first"), page=("page", "first"),
                n_h=("is_h", "sum"), n_v=("is_v", "sum"),
                min_y=("pos_h", "min"), min_x=("pos_v", "min"))
           .reset_index())
@@ -265,10 +268,10 @@ def _primary_grid_tables(f: pd.DataFrame, key: str,
     grids = gr[(gr["n_h"] >= 3) & (gr["n_v"] >= 2)].copy()
     if len(grids) == 0:
         return empty
-    grids = grids.sort_values([key, "page", "min_y", "min_x"],
+    grids = grids.sort_values(["doc_pos", "page", "min_y", "min_x"],
                               kind="stable").reset_index(drop=True)
     grids["gid"] = np.arange(len(grids))
-    grids["table_index"] = grids.groupby([key, "page"]).cumcount()
+    grids["table_index"] = grids.groupby(["doc_pos", "page"]).cumcount()
     n_rows = (grids["n_h"] - 1).to_numpy(dtype=np.int64)
     n_cols = (grids["n_v"] - 1).to_numpy(dtype=np.int64)
 
@@ -287,7 +290,8 @@ def _primary_grid_tables(f: pd.DataFrame, key: str,
     # table_index (deterministic)
     text = f[f["kind"] == "text"].reset_index(drop=True)
     text["span_idx"] = np.arange(len(text))
-    text = text.merge(grids[[key, "page", "gid"]], on=[key, "page"])
+    text = text.merge(grids[["doc_pos", "page", "gid"]],
+                      on=["doc_pos", "page"])
     if len(text) == 0:
         return empty
     text = text.sort_values(["span_idx", "gid"], kind="stable")
@@ -313,24 +317,19 @@ def _primary_grid_tables(f: pd.DataFrame, key: str,
     dense = pd.DataFrame({"gid": gid, "row": drow, "col": dcol})
     dense = dense.merge(joined, on=["gid", "row", "col"], how="left")
     dense["cell"] = dense["cell"].fillna("")
-    dense = dense.merge(grids[["gid", key, "page", "table_index"]], on="gid")
-    return _finish(dense, key, 1.0)
+    dense = dense.merge(grids[["gid", "doc_pos", "page", "table_index"]],
+                        on="gid")
+    return _assemble_tables(dense, 1.0)
 
 
-def _finish(dense: pd.DataFrame, key: str, confidence: float) -> pd.DataFrame:
-    dense = dense.rename(columns={key: "key"})
-    out = _assemble_tables(dense, confidence)
-    return out.rename(columns={"key": key})
-
-
-def _fallback_text_tables(text: pd.DataFrame, key: str,
+def _fallback_text_tables(text: pd.DataFrame,
                           snap_tol: float) -> pd.DataFrame:
     """Text-alignment strategy (confidence 0.7): y0 clusters are rows, x0
     clusters are columns; >=2 of each required."""
-    empty = pd.DataFrame(columns=[key, *CELL_COLS])
+    empty = pd.DataFrame(columns=["doc_pos", *CELL_COLS])
     if len(text) == 0:
         return empty
-    pcode = _page_codes(text, key)
+    pcode = _page_codes(text)
     y = text["y0"].to_numpy(dtype=np.float64)
     x = text["x0"].to_numpy(dtype=np.float64)
 
@@ -343,7 +342,7 @@ def _fallback_text_tables(text: pd.DataFrame, key: str,
 
     # local (0-based) row/col index per page
     df = pd.DataFrame({
-        "pcode": pcode, key: text[key].to_numpy(),
+        "pcode": pcode, "doc_pos": text["doc_pos"].to_numpy(),
         "page": text["page"].to_numpy(),
         "rglob": row_of, "cglob": col_of,
         "y0": y, "x0": x,
@@ -374,6 +373,6 @@ def _fallback_text_tables(text: pd.DataFrame, key: str,
     dense = pd.DataFrame({"gid": gid, "row": drow, "col": dcol})
     dense = dense.merge(joined, on=["gid", "row", "col"], how="left")
     dense["cell"] = dense["cell"].fillna("")
-    pagekey = df[["gid", key, "page"]].drop_duplicates("gid")
+    pagekey = df[["gid", "doc_pos", "page"]].drop_duplicates("gid")
     dense = dense.merge(pagekey, on="gid")
-    return _finish(dense, key, 0.7)
+    return _assemble_tables(dense, 0.7)

@@ -15,8 +15,8 @@ only shuffle is the per-document window/groupBy on doc_id (one
 exchange, reused by both the lag/lead smoothing and the final
 aggregation since they share the partitioning key).
 
-The pandas twin (kernels/boilerplate.py) backs unit tests and the
-mapInPandas variant for callers that already have per-doc batches.
+The pandas twin (kernels/boilerplate.py) holds the shared thresholds
+and backs the unit tests, which check that it and this operator agree.
 """
 
 from __future__ import annotations

@@ -1,25 +1,25 @@
 """Multimodal (image/audio/video) column plumbing for the interleaved
 corpus: opaque ``binary`` payloads + typed metadata, with decode /
 feature-extract / resize / frame-sample stages as Arrow-batched
-``mapInPandas`` operators.
+``mapInArrow`` operators that all run through one batch loop,
+:func:`map_payloads`.  Each stage supplies only a per-row function
+returning its output rows.
 
-Decode has two modes.  ``decode_media(..., fake=True)`` is a
-deterministic md5-seeded stand-in (the md5 itself is computed JVM-side,
-so the pandas step is fully vectorized) that keeps every Spark-side
-contract real and testable — schema, batch shape, partitioning, null
-handling.  ``fake=False`` REALLY decodes uncompressed 24-bit BMP
-payloads (pure-numpy header+pixel parser, :func:`decode_bmp`) and
+Decode is real.  :func:`decode_media` parses uncompressed 24-bit BMP
+payloads (pure-numpy header+pixel parser, :func:`decode_bmp`),
 non-interlaced 8-bit PNGs (:func:`decode_png` — stdlib zlib inflate +
 numpy unfiltering of all five scanline filters; no codec library
 needed), and baseline JPEGs (:mod:`..kernels.jpeg` — pure-numpy
 marker walk, canonical Huffman, batched-matmul IDCT, 4:2:0 chroma
 upsample), each round-trip-tested against its encoder; remaining
-formats (progressive JPEG, compressed video codecs) come back
-ok=False — that plug point is :func:`_real_decode_batch`.  Video has
-its own REAL path: uncompressed YUV4MPEG2 streams (:func:`decode_y4m`
-— the mjpegtools/FFmpeg raw-video interchange format) decode to luma
-planes for :func:`video_features`, :func:`video_frames` (real frame
-sampling that feeds the image pipeline) and :func:`video_dup_pairs`.
+formats (progressive JPEG, compressed video codecs) and NULL, empty or
+garbage payloads come back ok=False — the dispatch point is
+:func:`decode_image`.  Audio decodes RIFF/WAVE PCM16
+(:func:`decode_wav`).  Video has its own path: uncompressed YUV4MPEG2
+streams (:func:`decode_y4m` — the mjpegtools/FFmpeg raw-video
+interchange format) decode to luma planes for :func:`video_features`,
+:func:`video_frames` (real frame sampling that feeds the image
+pipeline) and :func:`video_dup_pairs`.
 
 Data model (mirrors the reference's image handling, which exports
 binary payloads to files and keeps only ``media_ref`` strings in the
@@ -28,21 +28,24 @@ DB — extractor.py:177-184):
     media(media_ref:string, doc_id:string, kind:string,  -- image|audio|video
           payload:binary, width:int, height:int, duration_ms:int)
 
-Scale notes: payloads never pass through Python row-at-a-time — Arrow
-moves them as buffers; feature extraction is batch-vectorized numpy;
-a real deployment stores payloads in object storage and keeps only
-media_ref here (exactly the reference's design), making this table
-narrow at 10^12 rows.
+Scale notes: payloads never pass through pandas — Arrow moves them as
+buffers into one Python crossing per batch; the per-payload loop is
+ragged-payload dispatch and the pixel/sample math is numpy; a real
+deployment stores payloads in object storage and keeps only media_ref
+here (exactly the reference's design), making this table narrow at
+10^12 rows.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 MEDIA_SCHEMA = (
     "media_ref string, doc_id string, kind string, payload binary, "
@@ -58,49 +61,34 @@ DECODE_SCHEMA = (
 )
 
 
-def _fake_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Deterministic stand-in for the codec: 'decodes' each payload into
-    its declared geometry and an md5-derived feature vector.
+def map_payloads(df: DataFrame, schema: str,
+                 fn: Callable[..., Iterable[tuple]]) -> DataFrame:
+    """The one batch loop of the media stages.
 
-    If the batch carries a precomputed ``payload_md5`` hex column (the
-    JVM computes it before the Arrow hop — see :func:`decode_media`),
-    the whole batch vectorizes: ONE hex-decode + a (n, 8) uint16 view.
-    Without it (direct kernel-test calls) hashlib runs per payload."""
-    n = len(pdf)
-    if "payload_md5" in pdf.columns:
-        hexes = pdf["payload_md5"].fillna("0" * 32)
-        ok = (hexes != "0" * 32).to_numpy() & \
-            (pdf["payload_len"].fillna(0).to_numpy() > 0)
-        digest = np.frombuffer(bytes.fromhex("".join(hexes)),
-                               dtype=np.uint8).reshape(n, 16)
-        feats = digest.view(np.uint16).astype(np.float32) / 65535.0
-        feats[~ok] = 0.0
-    else:
-        feats = np.empty((n, FEATURE_DIM), dtype=np.float32)
-        ok = np.zeros(n, dtype=bool)
-        for i, payload in enumerate(pdf["payload"]):
-            if payload is None or len(payload) == 0:
-                feats[i] = 0.0
+    Per Arrow batch of ``df``: call ``fn`` with each row's values in
+    ``df``'s column order, and emit every tuple it returns as a row of
+    ``schema`` (a DDL string; tuple fields in schema order).  The
+    per-input stages return exactly one row — ok=False with zeroed or
+    NULL outputs when the payload does not decode; the frame stages
+    return one row per kept frame, none for an undecodable video.
+    Empty batches are skipped, and so is a batch that yields no rows."""
+    arrow_schema = to_arrow_schema(DataType.fromDDL(schema))
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if len(batch) == 0:
                 continue
-            digest = hashlib.md5(bytes(payload)).digest()
-            feats[i] = np.frombuffer(digest[:FEATURE_DIM * 2], dtype=np.uint16) \
-                         .astype(np.float32) / 65535.0
-            ok[i] = True
-    frames = np.where(
-        pdf["kind"].to_numpy() == "video",
-        np.maximum(pdf["duration_ms"].fillna(0).to_numpy() // 1000, 1),
-        1,
-    )
-    return pd.DataFrame({
-        "media_ref": pdf["media_ref"],
-        "doc_id": pdf["doc_id"],
-        "kind": pdf["kind"],
-        "ok": ok,
-        "decoded_width": pdf["width"].fillna(0).astype("int32"),
-        "decoded_height": pdf["height"].fillna(0).astype("int32"),
-        "n_frames": frames.astype("int32"),
-        "features": list(feats),
-    })
+            rows = [out
+                    for row in zip(*(c.to_pylist() for c in batch.columns))
+                    for out in fn(*row)]
+            if not rows:
+                continue
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(col, type=f.type)
+                 for col, f in zip(zip(*rows), arrow_schema)],
+                schema=arrow_schema)
+
+    return df.mapInArrow(run, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -291,194 +279,110 @@ def decode_image(payload: bytes) -> tuple[int, int, np.ndarray] | None:
     return None
 
 
-def _real_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Real decode pass: BMP, PNG, and baseline-JPEG payloads are parsed
-    for actual geometry and mean-RGB features; undecodable payloads get
-    ok=False
-    (graceful, like the reference's per-image try/except —
-    extractor.py:177-195).  The loop is per IMAGE (ragged payloads),
-    never per pixel — the pixel math is numpy."""
-    n = len(pdf)
-    feats = np.zeros((n, FEATURE_DIM), dtype=np.float32)
-    ok = np.zeros(n, dtype=bool)
-    widths = np.zeros(n, dtype=np.int32)
-    heights = np.zeros(n, dtype=np.int32)
-    for i, payload in enumerate(pdf["payload"]):
-        parsed = decode_image(bytes(payload)) if payload is not None else None
+def decode_media(media: DataFrame) -> DataFrame:
+    """media -> decoded features table, one Arrow-batched stage.
+
+    BMP, PNG and baseline-JPEG payloads (:func:`decode_image` dispatch)
+    are parsed for actual geometry and mean-RGB + contrast features;
+    any other payload — NULL, empty, garbage, or a format without a
+    built-in codec — comes back ok=False with zero geometry and
+    features (graceful, like the reference's per-image try/except —
+    extractor.py:177-195).  ``n_frames`` is ``duration_ms // 1000``
+    (at least 1) for video rows and 1 otherwise.  The loop is per IMAGE
+    (ragged payloads), never per pixel — the pixel math is numpy."""
+
+    def decode(ref, did, kind, payload, duration_ms):
+        n_frames = max((duration_ms or 0) // 1000, 1) \
+            if kind == "video" else 1
+        feats = np.zeros(FEATURE_DIM, dtype=np.float32)
+        parsed = decode_image(payload)
         if parsed is None:
-            continue
+            return [(ref, did, kind, False, 0, 0, n_frames, feats)]
         w, h, rgb = parsed
-        ok[i] = True
-        widths[i], heights[i] = w, h
-        mean = rgb.reshape(-1, 3).mean(axis=0) / 255.0
-        feats[i, :3] = mean
+        feats[:3] = rgb.reshape(-1, 3).mean(axis=0) / 255.0
         # contrast = peak-to-peak range: an integer difference of two
         # uint8s over 255.0 — EXACTLY representable, so the synthetic
         # solid-color fixtures have a closed-form cross-engine oracle
         # (np.std's pairwise float summation would not)
-        feats[i, 3] = float(int(rgb.max()) - int(rgb.min())) / 255.0
-    frames = np.where(
-        pdf["kind"].to_numpy() == "video",
-        np.maximum(pdf["duration_ms"].fillna(0).to_numpy() // 1000, 1),
-        1,
-    )
-    return pd.DataFrame({
-        "media_ref": pdf["media_ref"],
-        "doc_id": pdf["doc_id"],
-        "kind": pdf["kind"],
-        "ok": ok,
-        "decoded_width": widths,
-        "decoded_height": heights,
-        "n_frames": frames.astype("int32"),
-        "features": list(feats),
-    })
+        feats[3] = float(int(rgb.max()) - int(rgb.min())) / 255.0
+        return [(ref, did, kind, True, w, h, n_frames, feats)]
+
+    return map_payloads(
+        media.select("media_ref", "doc_id", "kind", "payload", "duration_ms"),
+        DECODE_SCHEMA, decode)
 
 
-def decode_media(media: DataFrame, fake: bool = True) -> DataFrame:
-    """media -> decoded features table, one Arrow-batched stage.
-
-    ``fake=True`` — deterministic md5-seeded stub, with the md5 computed
-    JVM-side so the pandas step is fully vectorized (no per-row hashing).
-    ``fake=False`` — REAL decode for uncompressed 24-bit BMP,
-    non-interlaced 8-bit PNG, and baseline-JPEG payloads
-    (:func:`decode_image` dispatch); payloads in any other format
-    decode to ok=False.  Video needs codec libraries not present in
-    this environment — that plug point is :func:`_real_decode_batch`."""
-    from pyspark.sql import functions as F
-
-    if not fake:
-        def run_real(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if len(pdf):
-                    yield _real_decode_batch(pdf)
-
-        return media.mapInPandas(run_real, schema=DECODE_SCHEMA)
-
-    with_hash = media.withColumn("payload_md5", F.md5("payload")) \
-                     .withColumn("payload_len",
-                                 F.coalesce(F.length("payload"), F.lit(0)))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            yield _fake_decode_batch(pdf)
-
-    return with_hash.mapInPandas(run, schema=DECODE_SCHEMA)
-
-
-def frame_sample(media: DataFrame, every_ms: int = 1000,
-                 fake: bool = True) -> DataFrame:
+def frame_sample(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video frame sampling index: one output row per sampled frame
     (media_ref, doc_id, frame_idx, ts_ms).
 
-    ``fake=True`` samples the declared ``duration_ms`` metadata on a
-    millisecond grid without touching payloads — a pure-relational
-    posexplode, usable when payloads live in object storage and only
-    the metadata table is at hand.  ``fake=False`` REALLY decodes Y4M
-    payloads and keeps the first frame of each ``every_ms`` bucket of
-    the actual fps timeline (frame ts = idx * 1000 * fps_den //
-    fps_num) — undecodable payloads yield no rows.  For sampled frames
-    WITH pixel data (re-encoded into the image pipeline) use
+    Decodes Y4M payloads and keeps the first frame of each ``every_ms``
+    bucket of the actual fps timeline (frame ts = idx * 1000 * fps_den
+    // fps_num) — undecodable payloads yield no rows.  For sampled
+    frames WITH pixel data (re-encoded into the image pipeline) use
     :func:`video_frames`; this returns the lightweight index only."""
     from pyspark.sql import functions as F
 
     if every_ms < 1:
         raise ValueError(f"every_ms must be >= 1; got {every_ms}")
+
+    def sample(ref, did, payload):
+        v = decode_y4m(payload)
+        if v is None:
+            return []
+        out, last_bucket = [], -1
+        for idx in range(len(v["frames"])):
+            ts = idx * 1000 * v["fps_den"] // v["fps_num"]
+            if ts // every_ms > last_bucket:
+                last_bucket = ts // every_ms
+                out.append((ref, did, idx, ts))
+        return out
+
     vids = media.filter(F.col("kind") == "video")
-    if not fake:
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                out = []
-                for ref, did, payload in zip(pdf["media_ref"],
-                                             pdf["doc_id"],
-                                             pdf["payload"]):
-                    v = decode_y4m(bytes(payload)) \
-                        if payload is not None else None
-                    if v is None:
-                        continue
-                    last_bucket = -1
-                    for idx in range(len(v["frames"])):
-                        ts = idx * 1000 * v["fps_den"] // v["fps_num"]
-                        if ts // every_ms > last_bucket:
-                            last_bucket = ts // every_ms
-                            out.append((ref, did, idx, ts))
-                if out:
-                    yield pd.DataFrame(out, columns=[
-                        "media_ref", "doc_id", "frame_idx", "ts_ms"])
+    return map_payloads(
+        vids.select("media_ref", "doc_id", "payload"),
+        "media_ref string, doc_id string, frame_idx int, ts_ms long", sample)
 
-        return vids.select("media_ref", "doc_id", "payload").mapInPandas(
-            run, schema="media_ref string, doc_id string, "
-                        "frame_idx int, ts_ms long")
 
-    ts = F.sequence(
-        F.lit(0),
-        F.greatest(F.coalesce(F.col("duration_ms"), F.lit(0)) - 1, F.lit(0)),
-        F.lit(every_ms),
-    )
-    return (vids.select("media_ref", "doc_id",
-                        F.posexplode(ts).alias("frame_idx", "ts_ms")))
+def _synth_solid_media(ids: DataFrame, prefix: str, fmt: str,
+                       encode: Callable[[np.ndarray], bytes]) -> DataFrame:
+    """Shared body of the solid-color fixtures: doc ``did`` becomes a
+    solid ``w x h`` image (w = did%16+1, h = did%8+1, RGB = (did%256,
+    did*7%256, did*13%256)) encoded by ``encode`` under media_ref
+    ``{prefix}-{did:05d}``; ids divisible by 10 get the undecodable
+    payload ``not a {fmt} payload`` to pin the ok=False path.
+
+    Fixture GENERATOR (not a hot path): the per-id encode loop runs once
+    to build test media; production payloads arrive already encoded."""
+    garbage = f"not a {fmt} payload".encode()
+
+    def gen(did):
+        did = int(did)
+        if did % 10 == 0:
+            payload = garbage
+        else:
+            rgb = np.empty((did % 8 + 1, did % 16 + 1, 3), dtype=np.uint8)
+            rgb[:, :] = (did % 256, did * 7 % 256, did * 13 % 256)
+            payload = encode(rgb)
+        return [(f"{prefix}-{did:05d}", f"doc-{did}", "image", payload,
+                 None, None, None)]
+
+    return map_payloads(ids.select("doc_id"), MEDIA_SCHEMA, gen)
 
 
 def synth_bmp_media(ids: DataFrame) -> DataFrame:
     """Deterministic BMP fixture table from a (doc_id:long) frame: each
-    doc becomes a solid-color w x h 24-bit BMP (w = id%16+1, h = id%8+1,
-    RGB = (id%256, id*7%256, id*13%256)); ids divisible by 10 get a
-    deliberately-undecodable payload to pin the ok=False path.
-
-    Fixture GENERATOR (not a hot path): the per-id encode loop runs once
-    to build test media; production payloads arrive already encoded."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = []
-            for did in pdf["doc_id"].astype(int):
-                if did % 10 == 0:
-                    payload = b"not a bmp payload"
-                else:
-                    w, h = did % 16 + 1, did % 8 + 1
-                    rgb = np.empty((h, w, 3), dtype=np.uint8)
-                    rgb[:, :] = (did % 256, did * 7 % 256, did * 13 % 256)
-                    payload = encode_bmp(rgb)
-                out.append((f"bmp-{did:05d}", f"doc-{did}", "image", payload,
-                            None, None, None))
-            yield pd.DataFrame(out, columns=["media_ref", "doc_id", "kind",
-                                             "payload", "width", "height",
-                                             "duration_ms"])
-
-    return ids.select("doc_id").mapInPandas(gen, schema=MEDIA_SCHEMA)
+    doc becomes a solid-color 24-bit BMP (:func:`_synth_solid_media`
+    geometry and color formulas); ids divisible by 10 get a
+    deliberately-undecodable payload."""
+    return _synth_solid_media(ids, "bmp", "bmp", encode_bmp)
 
 
 def synth_png_media(ids: DataFrame) -> DataFrame:
-    """PNG twin of :func:`synth_bmp_media`: each doc becomes a solid-
-    color w x h color-type-2 PNG (same geometry/color formulas, so the
-    two fixtures share one closed-form oracle); ids divisible by 10 get
-    an undecodable payload."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = []
-            for did in pdf["doc_id"].astype(int):
-                if did % 10 == 0:
-                    payload = b"not a png payload"
-                else:
-                    w, h = did % 16 + 1, did % 8 + 1
-                    rgb = np.empty((h, w, 3), dtype=np.uint8)
-                    rgb[:, :] = (did % 256, did * 7 % 256, did * 13 % 256)
-                    payload = encode_png(rgb)
-                out.append((f"png-{did:05d}", f"doc-{did}", "image", payload,
-                            None, None, None))
-            yield pd.DataFrame(out, columns=["media_ref", "doc_id", "kind",
-                                             "payload", "width", "height",
-                                             "duration_ms"])
-
-    return ids.select("doc_id").mapInPandas(gen, schema=MEDIA_SCHEMA)
+    """PNG twin of :func:`synth_bmp_media`: same geometry/color
+    formulas as a color-type-2 PNG, so the two fixtures share one
+    closed-form oracle."""
+    return _synth_solid_media(ids, "png", "png", encode_png)
 
 
 def synth_jpeg_media(ids: DataFrame) -> DataFrame:
@@ -487,32 +391,12 @@ def synth_jpeg_media(ids: DataFrame) -> DataFrame:
     tables so quantization is lossless and the decode expectation stays
     closed-form — the only lossy steps are the two color-conversion
     roundings, reproduced exactly by ``kernels.jpeg.ycbcr_roundtrip_
-    rgb`` and its DuckDB SQL twin).  Same geometry/color formulas as
-    the BMP/PNG fixtures; ids divisible by 10 get an undecodable
-    payload."""
+    rgb`` and its DuckDB SQL twin)."""
     from ..kernels.jpeg import encode_jpeg
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = []
-            for did in pdf["doc_id"].astype(int):
-                if did % 10 == 0:
-                    payload = b"not a jpeg payload"
-                else:
-                    w, h = did % 16 + 1, did % 8 + 1
-                    rgb = np.empty((h, w, 3), dtype=np.uint8)
-                    rgb[:, :] = (did % 256, did * 7 % 256, did * 13 % 256)
-                    payload = encode_jpeg(rgb, subsample=True,
-                                          restart_interval=1)
-                out.append((f"jpg-{did:05d}", f"doc-{did}", "image", payload,
-                            None, None, None))
-            yield pd.DataFrame(out, columns=["media_ref", "doc_id", "kind",
-                                             "payload", "width", "height",
-                                             "duration_ms"])
-
-    return ids.select("doc_id").mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return _synth_solid_media(
+        ids, "jpg", "jpeg",
+        lambda rgb: encode_jpeg(rgb, subsample=True, restart_interval=1))
 
 
 def synth_grid_bmp_media(ids: DataFrame, grid_mod: int = 250,
@@ -531,30 +415,22 @@ def synth_grid_bmp_media(ids: DataFrame, grid_mod: int = 250,
 
     Fixture GENERATOR (not a hot path), like :func:`synth_bmp_media`."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = []
-            for did in pdf["doc_id"].astype(int):
-                grid = np.empty((8, 9), dtype=np.uint8)
-                gid = did % grid_mod
-                for r in range(8):
-                    for c in range(9):
-                        key = f"{gid}-{r}-{c}".encode()
-                        grid[r, c] = int(
-                            hashlib.md5(key).hexdigest()[:2], 16)
-                if did >= grid_mod:
-                    grid[0, 0] ^= 0x80
-                g = np.repeat(np.repeat(grid, cell, axis=0), cell, axis=1)
-                rgb = np.repeat(g[:, :, None], 3, axis=2)
-                out.append((f"gbmp-{did:05d}", f"doc-{did}", "image",
-                            encode_bmp(rgb), None, None, None))
-            yield pd.DataFrame(out, columns=["media_ref", "doc_id", "kind",
-                                             "payload", "width", "height",
-                                             "duration_ms"])
+    def gen(did):
+        did = int(did)
+        grid = np.empty((8, 9), dtype=np.uint8)
+        gid = did % grid_mod
+        for r in range(8):
+            for c in range(9):
+                key = f"{gid}-{r}-{c}".encode()
+                grid[r, c] = int(hashlib.md5(key).hexdigest()[:2], 16)
+        if did >= grid_mod:
+            grid[0, 0] ^= 0x80
+        g = np.repeat(np.repeat(grid, cell, axis=0), cell, axis=1)
+        rgb = np.repeat(g[:, :, None], 3, axis=2)
+        return [(f"gbmp-{did:05d}", f"doc-{did}", "image", encode_bmp(rgb),
+                 None, None, None)]
 
-    return ids.select("doc_id").mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return map_payloads(ids.select("doc_id"), MEDIA_SCHEMA, gen)
 
 
 DHASH_SCHEMA = ("media_ref string, doc_id string, ok boolean, "
@@ -599,32 +475,14 @@ def media_dhash(media: DataFrame) -> DataFrame:
     discipline).  Images smaller than the 9x8 grid come back ok=False
     with a zero signature rather than an undersampled hash."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            n = len(pdf)
-            ok = np.zeros(n, dtype=bool)
-            hi = np.zeros(n, dtype=np.int64)
-            lo = np.zeros(n, dtype=np.int64)
-            for i, payload in enumerate(pdf["payload"]):
-                parsed = (decode_image(bytes(payload))
-                          if payload is not None else None)
-                if parsed is None:
-                    continue
-                w, h, rgb = parsed
-                if w < 9 or h < 8:
-                    continue
-                ok[i] = True
-                hi[i], lo[i] = dhash_grid(rgb)
-            yield pd.DataFrame({
-                "media_ref": pdf["media_ref"],
-                "doc_id": pdf["doc_id"],
-                "ok": ok, "sig_hi": hi, "sig_lo": lo,
-            })
+    def dhash(ref, did, payload):
+        parsed = decode_image(payload)
+        if parsed is None or parsed[0] < 9 or parsed[1] < 8:
+            return [(ref, did, False, 0, 0)]
+        return [(ref, did, True, *dhash_grid(parsed[2]))]
 
-    return media.select("media_ref", "doc_id", "payload") \
-        .mapInPandas(run, schema=DHASH_SCHEMA)
+    return map_payloads(media.select("media_ref", "doc_id", "payload"),
+                        DHASH_SCHEMA, dhash)
 
 
 def media_dhash_pairs(media: DataFrame, max_hamming: int = 2) -> DataFrame:
@@ -663,7 +521,7 @@ def decode_wav(payload: bytes) -> tuple[int, np.ndarray] | None:
     anomaly convention of every codec here, never an exception."""
     import struct
 
-    if len(payload) < 12 or payload[0:4] != b"RIFF" \
+    if payload is None or len(payload) < 12 or payload[0:4] != b"RIFF" \
             or payload[8:12] != b"WAVE":
         return None
     pos, rate, samples = 12, None, None
@@ -705,41 +563,20 @@ def audio_features(media: DataFrame) -> DataFrame:
     per-clip loop is ragged-payload dispatch, the sample math is numpy
     (input_hint discipline)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            n = len(pdf)
-            ok = np.zeros(n, dtype=bool)
-            rates = np.zeros(n, dtype=np.int32)
-            counts = np.zeros(n, dtype=np.int64)
-            durs = np.zeros(n, dtype=np.int64)
-            energies = np.zeros(n, dtype=np.int64)
-            zcs = np.zeros(n, dtype=np.int64)
-            peaks = np.zeros(n, dtype=np.int64)
-            for i, payload in enumerate(pdf["payload"]):
-                parsed = (decode_wav(bytes(payload))
-                          if payload is not None else None)
-                if parsed is None:
-                    continue
-                rate, s = parsed
-                s64 = s.astype(np.int64)
-                ok[i], rates[i], counts[i] = True, rate, len(s)
-                durs[i] = len(s) * 1000 // rate
-                if len(s):
-                    energies[i] = int((s64 * s64).sum())
-                    peaks[i] = int(np.abs(s64).max())
-                if len(s) > 1:
-                    zcs[i] = int((s64[:-1] * s64[1:] < 0).sum())
-            yield pd.DataFrame({
-                "media_ref": pdf["media_ref"], "ok": ok,
-                "sample_rate": rates, "n_samples": counts,
-                "duration_ms": durs, "energy": energies,
-                "zero_crossings": zcs, "peak": peaks,
-            })
+    def features(ref, payload):
+        parsed = decode_wav(payload)
+        if parsed is None:
+            return [(ref, False, 0, 0, 0, 0, 0, 0)]
+        rate, s = parsed
+        s64 = s.astype(np.int64)
+        energy = int((s64 * s64).sum())
+        peak = int(np.abs(s64).max()) if len(s) else 0
+        zc = int((s64[:-1] * s64[1:] < 0).sum())
+        return [(ref, True, rate, len(s), len(s) * 1000 // rate, energy,
+                 zc, peak)]
 
-    return media.select("media_ref", "payload") \
-        .mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
+    return map_payloads(media.select("media_ref", "payload"),
+                        AUDIO_FEATURES_SCHEMA, features)
 
 
 AUDIO_FP_WINDOWS = 65      # 64 envelope comparisons -> one 64-bit hash
@@ -758,37 +595,22 @@ def audio_fingerprint(media: DataFrame) -> DataFrame:
     65 samples (or undecodable) come back ok=False with a zero
     signature rather than an undersampled hash."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            n = len(pdf)
-            ok = np.zeros(n, dtype=bool)
-            hi = np.zeros(n, dtype=np.int64)
-            lo = np.zeros(n, dtype=np.int64)
-            for i, payload in enumerate(pdf["payload"]):
-                parsed = (decode_wav(bytes(payload))
-                          if payload is not None else None)
-                if parsed is None or len(parsed[1]) < AUDIO_FP_WINDOWS:
-                    continue
-                s64 = parsed[1].astype(np.int64)
-                w = (np.arange(len(s64)) * AUDIO_FP_WINDOWS) // len(s64)
-                e = np.zeros(AUDIO_FP_WINDOWS, dtype=np.int64)
-                np.add.at(e, w, s64 * s64)
-                val = 0
-                for j in range(AUDIO_FP_WINDOWS - 1):
-                    if e[j] < e[j + 1]:
-                        val |= 1 << j
-                ok[i] = True
-                hi[i], lo[i] = val >> 32, val & 0xFFFFFFFF
-            yield pd.DataFrame({
-                "media_ref": pdf["media_ref"],
-                "doc_id": pdf["doc_id"],
-                "ok": ok, "sig_hi": hi, "sig_lo": lo,
-            })
+    def fingerprint(ref, did, payload):
+        parsed = decode_wav(payload)
+        if parsed is None or len(parsed[1]) < AUDIO_FP_WINDOWS:
+            return [(ref, did, False, 0, 0)]
+        s64 = parsed[1].astype(np.int64)
+        w = (np.arange(len(s64)) * AUDIO_FP_WINDOWS) // len(s64)
+        e = np.zeros(AUDIO_FP_WINDOWS, dtype=np.int64)
+        np.add.at(e, w, s64 * s64)
+        val = 0
+        for j in range(AUDIO_FP_WINDOWS - 1):
+            if e[j] < e[j + 1]:
+                val |= 1 << j
+        return [(ref, did, True, val >> 32, val & 0xFFFFFFFF)]
 
-    return media.select("media_ref", "doc_id", "payload") \
-        .mapInPandas(run, schema=DHASH_SCHEMA)
+    return map_payloads(media.select("media_ref", "doc_id", "payload"),
+                        DHASH_SCHEMA, fingerprint)
 
 
 def audio_dup_pairs(media: DataFrame, max_hamming: int = 2) -> DataFrame:
@@ -830,35 +652,28 @@ def synth_wav_media(ids: DataFrame, n_samples: int = 64,
 
     Fixture GENERATOR (not a hot path), like :func:`synth_bmp_media`."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ns = np.arange(n_samples, dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = []
-            for did in pdf["doc_id"].astype(int):
-                if did % 10 == 0:
-                    payload = b"not a wav payload"
-                else:
-                    base = did if dup_mod is None else did % dup_mod
-                    if md5_texture:
-                        s = np.array(
-                            [int(hashlib.md5(f"{base}-{n}".encode())
-                                 .hexdigest()[:2], 16)
-                             for n in range(n_samples)], dtype=np.int64)
-                        s = (s - 128) * 100
-                    else:
-                        s = ((base * 7 + ns * 13) % 256 - 128) * 100
-                    if dup_mod is not None and did >= dup_mod:
-                        s[-4:] += 3000
-                    payload = encode_wav(s.astype(np.int16), sample_rate)
-                out.append((f"wav-{did:05d}", f"doc-{did}", "audio",
-                            payload, None, None, None))
-            yield pd.DataFrame(out, columns=["media_ref", "doc_id", "kind",
-                                             "payload", "width", "height",
-                                             "duration_ms"])
+    ns = np.arange(n_samples, dtype=np.int64)
 
-    return ids.select("doc_id").mapInPandas(gen, schema=MEDIA_SCHEMA)
+    def gen(did):
+        did = int(did)
+        if did % 10 == 0:
+            payload = b"not a wav payload"
+        else:
+            base = did if dup_mod is None else did % dup_mod
+            if md5_texture:
+                s = np.array(
+                    [int(hashlib.md5(f"{base}-{n}".encode()).hexdigest()[:2],
+                         16) for n in range(n_samples)], dtype=np.int64)
+                s = (s - 128) * 100
+            else:
+                s = ((base * 7 + ns * 13) % 256 - 128) * 100
+            if dup_mod is not None and did >= dup_mod:
+                s[-4:] += 3000
+            payload = encode_wav(s.astype(np.int16), sample_rate)
+        return [(f"wav-{did:05d}", f"doc-{did}", "audio", payload,
+                 None, None, None)]
+
+    return map_payloads(ids.select("doc_id"), MEDIA_SCHEMA, gen)
 
 
 RESIZED_SCHEMA = ("media_ref string, doc_id string, ok boolean, "
@@ -875,7 +690,7 @@ def media_resize(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     come back ok=False with a NULL payload (the per-row anomaly
     convention of :func:`decode_media`).
 
-    One Arrow-batched ``mapInPandas`` stage, no shuffle; the per-image
+    One Arrow-batched stage, no shuffle; the per-image
     loop is ragged-payload dispatch, the pixel gather is a numpy
     fancy-index (input_hint discipline).  Scale: cost is linear in
     input pixels, output payloads shrink to ``out_w*out_h*3`` bytes —
@@ -885,32 +700,19 @@ def media_resize(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
         raise ValueError(f"target geometry must be >= 1x1; got "
                          f"{out_w}x{out_h}")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        xs = np.arange(out_w, dtype=np.int64)
-        ys = np.arange(out_h, dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ok = np.zeros(len(pdf), dtype=bool)
-            payloads: list[bytes | None] = []
-            for i, payload in enumerate(pdf["payload"]):
-                parsed = (decode_image(bytes(payload))
-                          if payload is not None else None)
-                if parsed is None:
-                    payloads.append(None)
-                    continue
-                w, h, rgb = parsed
-                res = rgb[(ys * h) // out_h][:, (xs * w) // out_w]
-                ok[i] = True
-                payloads.append(encode_bmp(res))
-            yield pd.DataFrame({
-                "media_ref": pdf["media_ref"],
-                "doc_id": pdf["doc_id"],
-                "ok": ok, "payload": payloads,
-            })
+    xs = np.arange(out_w, dtype=np.int64)
+    ys = np.arange(out_h, dtype=np.int64)
 
-    return media.select("media_ref", "doc_id", "payload") \
-        .mapInPandas(run, schema=RESIZED_SCHEMA)
+    def resize(ref, did, payload):
+        parsed = decode_image(payload)
+        if parsed is None:
+            return [(ref, did, False, None)]
+        w, h, rgb = parsed
+        res = rgb[(ys * h) // out_h][:, (xs * w) // out_w]
+        return [(ref, did, True, encode_bmp(res))]
+
+    return map_payloads(media.select("media_ref", "doc_id", "payload"),
+                        RESIZED_SCHEMA, resize)
 
 
 CHECKSUM_SCHEMA = ("media_ref string, ok boolean, width int, height int, "
@@ -926,32 +728,17 @@ def media_pixel_checksum(media: DataFrame) -> DataFrame:
     ok=False with zero geometry/checksum.  One Arrow-batched narrow
     stage, no shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            n = len(pdf)
-            ok = np.zeros(n, dtype=bool)
-            ws = np.zeros(n, dtype=np.int32)
-            hs = np.zeros(n, dtype=np.int32)
-            cks = np.zeros(n, dtype=np.int64)
-            for i, payload in enumerate(pdf["payload"]):
-                parsed = (decode_image(bytes(payload))
-                          if payload is not None else None)
-                if parsed is None:
-                    continue
-                w, h, rgb = parsed
-                weights = np.arange(1, w * h + 1, dtype=np.int64)
-                ok[i], ws[i], hs[i] = True, w, h
-                cks[i] = int((rgb[:, :, 0].astype(np.int64).ravel()
-                              * weights).sum())
-            yield pd.DataFrame({
-                "media_ref": pdf["media_ref"],
-                "ok": ok, "width": ws, "height": hs, "checksum": cks,
-            })
+    def checksum(ref, payload):
+        parsed = decode_image(payload)
+        if parsed is None:
+            return [(ref, False, 0, 0, 0)]
+        w, h, rgb = parsed
+        weights = np.arange(1, w * h + 1, dtype=np.int64)
+        ck = int((rgb[:, :, 0].astype(np.int64).ravel() * weights).sum())
+        return [(ref, True, w, h, ck)]
 
-    return media.select("media_ref", "payload") \
-        .mapInPandas(run, schema=CHECKSUM_SCHEMA)
+    return map_payloads(media.select("media_ref", "payload"),
+                        CHECKSUM_SCHEMA, checksum)
 
 
 def media_stats(media: DataFrame) -> DataFrame:
@@ -968,11 +755,11 @@ def media_stats(media: DataFrame) -> DataFrame:
 
 
 def media_near_pairs(media: DataFrame, threshold: float = 0.999,
-                     n_bits: int = 8, fake: bool = True) -> DataFrame:
+                     n_bits: int = 8) -> DataFrame:
     """Image near-duplicate pairs — the multimodal analogue of SemDeDup,
     closing the loop between the codec work and the dedup family: decode
     each payload to its feature vector (:func:`decode_media` — mean-RGB
-    + contrast for the real BMP/PNG codecs), then reuse
+    + contrast from the BMP/PNG/JPEG codecs), then reuse
     ``dedup.embedding_near_pairs`` (sign-LSH blocking + exact cosine
     gate) over the feature column.  A re-encoded / slightly
     re-compressed copy of an image decodes to a near-identical feature
@@ -986,14 +773,14 @@ def media_near_pairs(media: DataFrame, threshold: float = 0.999,
     Scale: decode is the one Arrow-batched pass the plan already pays
     for feature extraction; the pair stage inherits embedding_near_
     pairs' properties — per-bucket joins, never O(N^2).  At 10^12
-    images swap the 8-dim stub features for real embeddings and raise
+    images swap the 8-dim mean-RGB features for real embeddings and raise
     n_bits so expected bucket size stays constant."""
     from pyspark.sql import functions as F
 
     from ..functions import vectors as V
     from .dedup import embedding_near_pairs
 
-    dec = decode_media(media, fake=fake)
+    dec = decode_media(media)
     feats = (dec.filter(F.col("ok"))
              .select(F.col("media_ref"),
                      V.as_double(F.col("features")).alias("features"))
@@ -1139,42 +926,17 @@ def video_features(media: DataFrame) -> DataFrame:
     DuckDB oracle replays them bit-for-bit.  Undecodable payloads come
     back ok=False with zero features rather than being dropped."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            n = len(pdf)
-            cols = {
-                "ok": np.zeros(n, dtype=bool),
-                "width": np.zeros(n, dtype=np.int32),
-                "height": np.zeros(n, dtype=np.int32),
-                "n_frames": np.zeros(n, dtype=np.int32),
-                "fps_num": np.zeros(n, dtype=np.int32),
-                "fps_den": np.zeros(n, dtype=np.int32),
-                "luma_sum": np.zeros(n, dtype=np.int64),
-                "motion": np.zeros(n, dtype=np.int64),
-            }
-            for i, payload in enumerate(pdf["payload"]):
-                v = decode_y4m(bytes(payload)) if payload is not None \
-                    else None
-                if v is None:
-                    continue
-                fr = v["frames"].astype(np.int64)
-                cols["ok"][i] = True
-                cols["width"][i] = v["width"]
-                cols["height"][i] = v["height"]
-                cols["n_frames"][i] = len(fr)
-                cols["fps_num"][i] = v["fps_num"]
-                cols["fps_den"][i] = v["fps_den"]
-                cols["luma_sum"][i] = int(fr.sum())
-                if len(fr) > 1:
-                    cols["motion"][i] = int(
-                        np.abs(fr[1:] - fr[:-1]).sum())
-            yield pd.DataFrame({"media_ref": pdf["media_ref"],
-                                "doc_id": pdf["doc_id"], **cols})
+    def features(ref, did, payload):
+        v = decode_y4m(payload)
+        if v is None:
+            return [(ref, did, False, 0, 0, 0, 0, 0, 0, 0)]
+        fr = v["frames"].astype(np.int64)
+        motion = int(np.abs(fr[1:] - fr[:-1]).sum())
+        return [(ref, did, True, v["width"], v["height"], len(fr),
+                 v["fps_num"], v["fps_den"], int(fr.sum()), motion)]
 
-    return media.select("media_ref", "doc_id", "payload") \
-        .mapInPandas(run, schema=VIDEO_FEATURES_SCHEMA)
+    return map_payloads(media.select("media_ref", "doc_id", "payload"),
+                        VIDEO_FEATURES_SCHEMA, features)
 
 
 VIDEO_FRAMES_SCHEMA = MEDIA_SCHEMA + ", video_ref string, frame_idx int"
@@ -1200,31 +962,21 @@ def video_frames(media: DataFrame, every_n: int = 1) -> DataFrame:
     if every_n < 1:
         raise ValueError(f"every_n must be >= 1; got {every_n}")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = []
-            for ref, did, payload in zip(pdf["media_ref"], pdf["doc_id"],
-                                         pdf["payload"]):
-                v = decode_y4m(bytes(payload)) if payload is not None \
-                    else None
-                if v is None:
-                    continue
-                for idx in range(0, len(v["frames"]), every_n):
-                    g = v["frames"][idx]
-                    rgb = np.repeat(g[:, :, None], 3, axis=2)
-                    ts = idx * 1000 * v["fps_den"] // v["fps_num"]
-                    out.append((f"{ref}#f{idx:04d}", did, "image",
-                                encode_bmp(rgb), v["width"], v["height"],
-                                ts, ref, idx))
-            if out:
-                yield pd.DataFrame(out, columns=[
-                    "media_ref", "doc_id", "kind", "payload", "width",
-                    "height", "duration_ms", "video_ref", "frame_idx"])
+    def frames(ref, did, payload):
+        v = decode_y4m(payload)
+        if v is None:
+            return []
+        out = []
+        for idx in range(0, len(v["frames"]), every_n):
+            g = v["frames"][idx]
+            rgb = np.repeat(g[:, :, None], 3, axis=2)
+            ts = idx * 1000 * v["fps_den"] // v["fps_num"]
+            out.append((f"{ref}#f{idx:04d}", did, "image", encode_bmp(rgb),
+                        v["width"], v["height"], ts, ref, idx))
+        return out
 
-    return media.select("media_ref", "doc_id", "payload") \
-        .mapInPandas(run, schema=VIDEO_FRAMES_SCHEMA)
+    return map_payloads(media.select("media_ref", "doc_id", "payload"),
+                        VIDEO_FRAMES_SCHEMA, frames)
 
 
 def video_dup_pairs(media: DataFrame, every_n: int = 1,
@@ -1287,33 +1039,25 @@ def synth_y4m_media(ids: DataFrame, n_frames: int = 6,
 
     Fixture GENERATOR (not a hot path), like :func:`synth_bmp_media`."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = []
-            for did in pdf["doc_id"].astype(int):
-                if did % 10 == 0:
-                    payload = b"not a y4m payload"
-                else:
-                    base = did if dup_mod is None else did % dup_mod
-                    frames = np.empty((n_frames, 8, 9), dtype=np.uint8)
-                    for f in range(n_frames):
-                        for r in range(8):
-                            for c in range(9):
-                                key = f"{base}-{f}-{r}-{c}".encode()
-                                frames[f, r, c] = int(
-                                    hashlib.md5(key).hexdigest()[:2], 16)
-                    if dup_mod is not None and did >= dup_mod:
-                        frames[0, 0, 0] ^= 0x80
-                    big = np.repeat(np.repeat(frames, cell, axis=1),
-                                    cell, axis=2)
-                    cs = "C420jpeg" if did % 2 == 0 else "Cmono"
-                    payload = encode_y4m(big, fps=(30, 1), colorspace=cs)
-                out.append((f"y4m-{did:05d}", f"doc-{did}", "video",
-                            payload, None, None, None))
-            yield pd.DataFrame(out, columns=["media_ref", "doc_id", "kind",
-                                             "payload", "width", "height",
-                                             "duration_ms"])
+    def gen(did):
+        did = int(did)
+        if did % 10 == 0:
+            payload = b"not a y4m payload"
+        else:
+            base = did if dup_mod is None else did % dup_mod
+            frames = np.empty((n_frames, 8, 9), dtype=np.uint8)
+            for f in range(n_frames):
+                for r in range(8):
+                    for c in range(9):
+                        key = f"{base}-{f}-{r}-{c}".encode()
+                        frames[f, r, c] = int(
+                            hashlib.md5(key).hexdigest()[:2], 16)
+            if dup_mod is not None and did >= dup_mod:
+                frames[0, 0, 0] ^= 0x80
+            big = np.repeat(np.repeat(frames, cell, axis=1), cell, axis=2)
+            cs = "C420jpeg" if did % 2 == 0 else "Cmono"
+            payload = encode_y4m(big, fps=(30, 1), colorspace=cs)
+        return [(f"y4m-{did:05d}", f"doc-{did}", "video", payload,
+                 None, None, None)]
 
-    return ids.select("doc_id").mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return map_payloads(ids.select("doc_id"), MEDIA_SCHEMA, gen)

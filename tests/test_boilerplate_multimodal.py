@@ -65,21 +65,111 @@ def media_df(spark):
     return spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
 
 
-def test_decode_media_stub_shapes(spark, media_df):
-    out = {r["media_ref"]: r for r in multimodal.decode_media(media_df).collect()}
-    assert set(out) == {"m1", "m2", "m3", "m4"}
-    assert out["m1"]["ok"] and len(out["m1"]["features"]) == multimodal.FEATURE_DIM
-    assert all(0.0 <= v <= 1.0 for v in out["m1"]["features"])
+@pytest.fixture(scope="module")
+def decodable_df(spark):
+    """A BMP, a PNG and a JPEG of distinct solid colors, an undecodable
+    video row whose ``n_frames`` comes from its declared duration, and
+    an empty payload."""
+    import numpy as np
+
+    from rca_pdf_extraction_pipeline_spark.kernels.jpeg import encode_jpeg
+
+    def solid(rgb, w=6, h=4):
+        a = np.empty((h, w, 3), dtype=np.uint8)
+        a[:, :] = rgb
+        return a
+
+    rows = [
+        ("m1", "d1", "image", multimodal.encode_bmp(solid((200, 100, 50))),
+         6, 4, None),
+        ("m2", "d1", "video", b"\x00\x00ftypfake", 1280, 720, 3500),
+        ("m3", "d2", "image", multimodal.encode_png(solid((10, 20, 30))),
+         6, 4, None),
+        ("m4", "d2", "image", b"", 10, 10, None),       # empty payload
+        ("m5", "d3", "image", encode_jpeg(solid((64, 128, 192), 16, 16)),
+         16, 16, None),
+    ]
+    return spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
+
+
+def test_decode_media_shapes(spark, decodable_df):
+    out = {r["media_ref"]: r
+           for r in multimodal.decode_media(decodable_df).collect()}
+    assert set(out) == {"m1", "m2", "m3", "m4", "m5"}  # one row per input
+    for ref in ("m1", "m3", "m5"):
+        assert out[ref]["ok"]
+        assert len(out[ref]["features"]) == multimodal.FEATURE_DIM
+        assert all(0.0 <= v <= 1.0 for v in out[ref]["features"])
+    assert out["m1"]["features"][:3] == pytest.approx(
+        [200 / 255, 100 / 255, 50 / 255], abs=1e-6)
+    assert (out["m1"]["decoded_width"], out["m1"]["decoded_height"]) == (6, 4)
     assert out["m2"]["n_frames"] == 3          # 3500ms // 1000
+    assert out["m1"]["n_frames"] == 1
     assert not out["m4"]["ok"]                 # empty payload -> decode failure
+    assert list(out["m4"]["features"]) == [0.0] * multimodal.FEATURE_DIM
 
 
-def test_decode_media_deterministic(spark, media_df):
-    a = multimodal.decode_media(media_df).collect()
-    b = multimodal.decode_media(media_df.repartition(3)).collect()
-    key = lambda r: r["media_ref"]
-    assert sorted([(r["media_ref"], list(r["features"])) for r in a]) == \
-           sorted([(r["media_ref"], list(r["features"])) for r in b])
+def test_decode_media_deterministic(spark, decodable_df):
+    a = multimodal.decode_media(decodable_df).collect()
+    b = multimodal.decode_media(decodable_df.repartition(3)).collect()
+    assert sorted((r["media_ref"], r["ok"], list(r["features"])) for r in a) \
+        == sorted((r["media_ref"], r["ok"], list(r["features"])) for r in b)
+
+
+#: payloads no codec accepts: NULL, empty, plain garbage, and each
+#: codec's magic prefix over a truncated or nonsense body
+BAD_PAYLOADS = [
+    ("null", None),
+    ("empty", b""),
+    ("garbage", b"\x00garbage\xff" * 4),
+    ("bmp-trunc", b"BM" + b"\x00" * 60),
+    ("png-trunc", multimodal.PNG_SIG + b"\x00\x00\x00\x0dIHDR"),
+    ("jpeg-trunc", b"\xff\xd8\xff\xe0\x00\x10JFIF"),
+    ("wav-trunc", b"RIFF\x04\x00\x00\x00WAVEfmt "),
+    ("y4m-trunc", b"YUV4MPEG2 W4 H4 F30:1\nFRAME\n\x00\x00"),
+]
+
+#: the stages that answer every input with exactly one row
+PER_INPUT_STAGES = {
+    "decode_media": multimodal.decode_media,
+    "media_dhash": multimodal.media_dhash,
+    "media_resize": lambda m: multimodal.media_resize(m, out_w=4, out_h=4),
+    "media_pixel_checksum": multimodal.media_pixel_checksum,
+    "audio_features": multimodal.audio_features,
+    "audio_fingerprint": multimodal.audio_fingerprint,
+    "video_features": multimodal.video_features,
+}
+
+
+@pytest.fixture(scope="module")
+def bad_media(spark):
+    rows = [(ref, "d-bad", "video", payload, None, None, 2000)
+            for ref, payload in BAD_PAYLOADS]
+    return spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
+
+
+@pytest.mark.parametrize("stage", sorted(PER_INPUT_STAGES))
+def test_bad_payload_gives_one_failed_row(bad_media, stage):
+    """A payload that does not decode yields exactly one ok=False row
+    whose outputs are all zero, NULL or a zero vector — never an
+    exception, never a dropped row."""
+    rows = PER_INPUT_STAGES[stage](bad_media).collect()
+    assert sorted(r.media_ref for r in rows) == \
+        sorted(ref for ref, _ in BAD_PAYLOADS)
+    for r in rows:
+        out = r.asDict()
+        assert out.pop("ok") is False, (stage, r.media_ref)
+        for c in ("media_ref", "doc_id", "kind", "n_frames"):
+            out.pop(c, None)
+        for c, v in out.items():
+            zero = v is None or (not any(v) if isinstance(v, list)
+                                 else v == 0)
+            assert zero, (stage, r.media_ref, c, v)
+
+
+@pytest.mark.parametrize("stage", ["video_frames", "frame_sample"])
+def test_bad_payload_gives_no_frames(bad_media, stage):
+    assert getattr(multimodal, stage)(bad_media).count() == 0
 
 
 def test_remove_frequent_lines_semantics(spark):
@@ -148,20 +238,12 @@ def test_remove_frequent_lines_by_site_semantics(spark):
 
 
 def test_decode_media_real_path_graceful_on_non_bmp(spark, media_df):
-    """fake=False now REALLY decodes BMP; non-BMP payloads (these are
-    UTF-8 text bytes) come back ok=False with zero geometry instead of
-    raising — the reference's per-image try/except semantics."""
-    dec = multimodal.decode_media(media_df, fake=False).collect()
+    """Payloads without a built-in codec (these are UTF-8 text bytes
+    behind real magic prefixes) come back ok=False with zero geometry
+    instead of raising — the reference's per-image try/except
+    semantics."""
+    dec = multimodal.decode_media(media_df).collect()
     assert dec and all(not r.ok and r.decoded_width == 0 for r in dec)
-
-
-def test_frame_sample_grid(spark, media_df):
-    frames = multimodal.frame_sample(media_df, every_ms=1000).collect()
-    by_ref = {}
-    for r in frames:
-        by_ref.setdefault(r["media_ref"], []).append((r["frame_idx"], r["ts_ms"]))
-    assert set(by_ref) == {"m2"}              # only video rows explode
-    assert sorted(by_ref["m2"]) == [(0, 0), (1, 1000), (2, 2000), (3, 3000)]
 
 
 def test_media_stats(spark, media_df):
@@ -197,7 +279,7 @@ def test_media_near_pairs_recall_on_perturbed_images(spark):
     media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
     pairs = {(r["media_a"], r["media_b"]): r["cosine_sim"]
              for r in multimodal.media_near_pairs(
-                 media, threshold=0.999, fake=False).collect()}
+                 media, threshold=0.999).collect()}
     assert set(pairs) == {("img-a", "img-b"), ("img-a", "img-c"),
                           ("img-b", "img-c")}
     assert pairs[("img-a", "img-c")] == 1.0      # identical features

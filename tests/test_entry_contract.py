@@ -38,3 +38,18 @@ def test_every_query_has_matching_name_in_oracles():
     q = set(entry.queries().keys())
     o = set(entry.oracle_sql().keys())
     assert o <= q, f"oracle_sql keys without a query: {sorted(o - q)}"
+
+
+def test_check_entry_rejects_unknown_query_names():
+    """tools/check_entry.py exits 1 and names a requested key that is
+    not in queries() instead of printing ALL PASS over nothing."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    tool = Path(__file__).resolve().parent.parent / "tools" / "check_entry.py"
+    res = subprocess.run([sys.executable, str(tool), "no_such_query"],
+                         capture_output=True, text=True, timeout=300)
+    assert res.returncode == 1
+    assert "no_such_query" in res.stdout
+    assert "ALL PASS" not in res.stdout

@@ -124,8 +124,7 @@ def test_decode_image_dispatches_jpeg():
 
 def test_real_decode_media_jpeg(spark):
     ids = spark.range(1, 40).select(F.col("id").alias("doc_id"))
-    dec = multimodal.decode_media(multimodal.synth_jpeg_media(ids),
-                                  fake=False).collect()
+    dec = multimodal.decode_media(multimodal.synth_jpeg_media(ids)).collect()
     by_ref = {r.media_ref: r for r in dec}
     r7 = by_ref["jpg-00007"]
     assert r7.ok and r7.decoded_width == 7 % 16 + 1 \

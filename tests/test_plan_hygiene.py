@@ -188,11 +188,27 @@ def test_multiprobe_topk_is_broadcast_and_takeordered(documents, spark):
 
 
 def test_extraction_is_single_arrow_stage_no_shuffle(spark):
+    """Extraction and the media stages (docs/SCALE.md, docs/PLANS.md)
+    are each one narrow Arrow crossing: exactly one MapInArrow over the
+    scan, no pandas conversion, and no Exchange inside the operator."""
+    import numpy as np
+
+    from rca_pdf_extraction_pipeline_spark.operators import multimodal
+
     docs = fixtures.docs_to_spark(spark, fixtures.build_classify_docs())
-    plan = _plan(extraction.extract_documents(docs))
-    assert "MapInArrow" in plan
-    # narrow pipeline: no exchange inside the operator itself
-    assert "Exchange" not in plan
+    clip = multimodal.encode_y4m(np.zeros((2, 8, 8), dtype=np.uint8))
+    image = multimodal.encode_bmp(np.zeros((8, 9, 3), dtype=np.uint8))
+    media = spark.createDataFrame(
+        [("v", "d", "video", clip, None, None, 2000),
+         ("i", "d", "image", image, 9, 8, None)], multimodal.MEDIA_SCHEMA)
+    for name, q in [("extract_documents", extraction.extract_documents(docs)),
+                    ("decode_media", multimodal.decode_media(media)),
+                    ("media_dhash", multimodal.media_dhash(media)),
+                    ("video_frames", multimodal.video_frames(media))]:
+        plan = _plan(q)
+        assert plan.count("MapInArrow") == 1, (name, plan)
+        assert "MapInPandas" not in plan, name
+        assert "Exchange" not in plan, name
 
 
 def test_whole_stage_codegen_covers_scalar_projection(lineitem):

@@ -295,8 +295,7 @@ def test_bmp_rejects_garbage_and_truncation():
 
 def test_real_decode_media_bmp(spark):
     ids = spark.range(1, 40).select(F.col("id").alias("doc_id"))
-    dec = multimodal.decode_media(multimodal.synth_bmp_media(ids),
-                                  fake=False).collect()
+    dec = multimodal.decode_media(multimodal.synth_bmp_media(ids)).collect()
     by_ref = {r.media_ref: r for r in dec}
     r7 = by_ref["bmp-00007"]
     assert r7.ok and r7.decoded_width == 7 % 16 + 1 \
@@ -406,13 +405,13 @@ def test_png_rejects_garbage_truncation_and_unsupported():
 
 
 def test_real_decode_media_png_and_mixed_dispatch(spark):
-    """decode_media(fake=False) handles a MIXED BMP+PNG media table via
+    """decode_media handles a MIXED BMP+PNG media table via
     magic-byte dispatch; per-format geometry/features match the same
     closed form."""
     ids = spark.range(1, 40).select(F.col("id").alias("doc_id"))
     mixed = multimodal.synth_bmp_media(ids).unionByName(
         multimodal.synth_png_media(ids))
-    dec = multimodal.decode_media(mixed, fake=False).collect()
+    dec = multimodal.decode_media(mixed).collect()
     by_ref = {r.media_ref: r for r in dec}
     for pref in ("bmp", "png"):
         r7 = by_ref[f"{pref}-00007"]
@@ -420,22 +419,6 @@ def test_real_decode_media_png_and_mixed_dispatch(spark):
             and r7.decoded_height == 7 % 8 + 1
         assert r7.features[0] == pytest.approx((7 % 256) / 255.0, abs=1e-6)
         assert not by_ref[f"{pref}-00010"].ok
-
-
-def test_fake_decode_vectorized_equals_legacy(spark):
-    """The JVM-md5 vectorized fake decode must equal the per-row hashlib
-    path bit-for-bit."""
-    import hashlib
-
-    ids = spark.range(0, 20).select(F.col("id").alias("doc_id"))
-    media = multimodal.synth_bmp_media(ids)
-    dec = {r.media_ref: r for r in
-           multimodal.decode_media(media, fake=True).collect()}
-    for r in media.collect():
-        digest = hashlib.md5(bytes(r.payload)).digest()
-        want = np.frombuffer(digest, dtype=np.uint16).astype(np.float32) / 65535.0
-        got = np.asarray(dec[r.media_ref].features, dtype=np.float32)
-        assert np.array_equal(got, want), r.media_ref
 
 
 # ---- legacy full pipeline (jobs/run_full.py) ------------------------------

@@ -107,7 +107,7 @@ def test_video_frames_feed_image_pipeline(spark):
     assert all(r["duration_ms"] == r["frame_idx"] * 1000 // 30
                for r in rows)
     assert M.media_dhash(frames).filter("ok").count() == 6
-    dec = M.decode_media(frames, fake=False).filter("ok")
+    dec = M.decode_media(frames).filter("ok")
     assert dec.count() == 6
     rs = M.media_resize(frames, out_w=9, out_h=8).filter("ok")
     assert rs.count() == 6
@@ -116,19 +116,17 @@ def test_video_frames_feed_image_pipeline(spark):
 
 
 def test_frame_sample_real_decode_bucket_grid(spark):
-    """frame_sample(fake=False) decodes the real fps timeline and keeps
+    """frame_sample decodes the real fps timeline and keeps
     the first frame of each every_ms bucket: a 6-frame 30 fps clip has
     ts 0,33,66,100,133,166 — every_ms=100 keeps idx 0 and 3 (buckets 0
     and 1); every_ms=50 keeps idx 0,2,3,5; garbage yields no rows."""
     ids = spark.createDataFrame([(1,), (10,)], "doc_id long")
     media = M.synth_y4m_media(ids, n_frames=6)
     got = {r["frame_idx"]: r["ts_ms"]
-           for r in M.frame_sample(media, every_ms=100,
-                                   fake=False).collect()}
+           for r in M.frame_sample(media, every_ms=100).collect()}
     assert got == {0: 0, 3: 100}
     idxs = sorted(r["frame_idx"]
-                  for r in M.frame_sample(media, every_ms=50,
-                                          fake=False).collect())
+                  for r in M.frame_sample(media, every_ms=50).collect())
     assert idxs == [0, 2, 3, 5]
     with pytest.raises(ValueError):
         M.frame_sample(media, every_ms=0)

@@ -3,6 +3,9 @@
 compare row count, column names, and an order-insensitive value hash.
 
 Usage: python tools/check_entry.py [sf_dir] [only_query ...]
+
+Exits 1 if any query fails, or if a requested name is not a
+``queries()`` key (nothing would be checked for it).
 """
 
 from __future__ import annotations
@@ -41,6 +44,11 @@ def value_hash(df: pd.DataFrame) -> str:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and "/" in sys.argv[1] else "/root/testdata/sf0.01"
     only = [a for a in sys.argv[1:] if "/" not in a]
+    qs = entrymod.queries()
+    unknown = [name for name in only if name not in qs]
+    if unknown:
+        print(f"UNKNOWN queries: {', '.join(unknown)}")
+        return 1
 
     from rca_pdf_extraction_pipeline_spark.session import get_spark
     spark = get_spark("check-entry")
@@ -49,7 +57,6 @@ def main() -> int:
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
     for name, fn in qs.items():
