@@ -1235,7 +1235,7 @@ def _q_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rca_pdf_extraction_pipeline_spark.operators import sampling
 
     picked = sampling.temperature_sample(
-        _t(spark, sf_dir, "documents"), group_col="lang", alpha=0.5,
+        _t(spark, sf_dir, "documents"), alpha=0.5,
         base_rate=0.2, seed=0)
     return picked.select("doc_id", "lang", "n_chars")
 
@@ -1289,8 +1289,7 @@ def _q_nb_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores) — the deterministic stand-in for the model-based quality/
     domain filters real pipelines run (GPT-3 LR filter, CCNet
     fastText)."""
-    pred = textanalysis.nb_classify(_t(spark, sf_dir, "documents"),
-                                    class_col="lang")
+    pred = textanalysis.nb_classify(_t(spark, sf_dir, "documents"))
     return (pred.groupBy("actual", "predicted")
             .agg(F.count(F.lit(1)).alias("n_docs"))
             .orderBy("actual", "predicted"))
@@ -1306,8 +1305,7 @@ def _q_nb_holdout_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     sp = sampling.leakage_safe_split(_t(spark, sf_dir, "documents"))
     train = sp.where("split = 'train'").drop("split")
     test = sp.where("split = 'test'").drop("split")
-    pred = textanalysis.nb_classify(test, class_col="lang",
-                                    train_docs=train)
+    pred = textanalysis.nb_classify(test, train_docs=train)
     return (pred.groupBy("actual", "predicted")
             .agg(F.count(F.lit(1)).alias("n_docs"))
             .orderBy("actual", "predicted"))
@@ -1960,7 +1958,7 @@ def _q_vocab_overlap_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass, no token join.  Every estimate is the integer-lattice HLL
     formula, replayed exactly in SQL."""
     return sketches.vocab_overlap_by_group(
-        _t(spark, sf_dir, "documents"), group_col="lang")
+        _t(spark, sf_dir, "documents"))
 
 
 def _q_charset_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2156,19 +2154,36 @@ def _q_multimodal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.media_stats(_media_table(spark, sf_dir))
 
 
-def _q_multimodal_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL decode round-trip: deterministic solid-color BMPs are built
-    per doc_id, then parsed back by the pure-numpy BMP codec
-    (multimodal.decode_bmp) — geometry and mean-RGB features must match
-    the closed-form expectation; ids % 10 == 0 carry garbage payloads and
-    must come back ok=False."""
-    ids = _t(spark, sf_dir, "documents").select("doc_id") \
-        .filter(F.col("doc_id") < 300)
-    dec = multimodal.decode_media(multimodal.synth_bmp_media(ids))
-    return dec.select(
-        "media_ref", "ok", "decoded_width", "decoded_height",
-        F.round(F.element_at("features", 1).cast("double"), 4).alias("f0"),
-    )
+def _media_ids(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
+    """(doc_id) below ``n``: the id column every media fixture is built
+    from."""
+    return _t(spark, sf_dir, "documents").select("doc_id") \
+        .filter(F.col("doc_id") < n)
+
+
+def _q_multimodal_decode(synth):
+    """REAL decode round-trip of one codec: solid-color images built per
+    doc_id by ``synth`` are parsed back by the pure-numpy codec —
+    geometry and mean-RGB features must match the closed-form
+    expectation; ids % 10 == 0 carry garbage payloads and must come back
+    ok=False.
+
+    * BMP (``synth_bmp_media``, ``multimodal.decode_bmp``).
+    * PNG (``synth_png_media``): 8-bit, stdlib-zlib DEFLATE, CRC-correct
+      chunks, parsed by ``multimodal.decode_png``.
+    * JPEG (``synth_jpeg_media``): 4:2:0 with restart markers and
+      ALL-ONES quant tables (lossless quantization), parsed by
+      kernels/jpeg.py (canonical Huffman + batched-matmul IDCT).  The
+      only lossy steps are the two color-conversion roundings, so the
+      oracle is the closed-form YCbCr round trip of the fixture color.
+    """
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        dec = multimodal.decode_media(synth(_media_ids(spark, sf_dir, 300)))
+        return dec.select(
+            "media_ref", "ok", "decoded_width", "decoded_height",
+            F.round(F.element_at("features", 1).cast("double"), 4)
+            .alias("f0"))
+    return query
 
 
 def _q_media_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2178,8 +2193,7 @@ def _q_media_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact cosine — closed-form oracle because the fixture colors are
     pure id arithmetic.  Garbage payloads (id % 10 == 0) and zero-color
     images drop out before pairing."""
-    ids = _t(spark, sf_dir, "documents").select("doc_id") \
-        .filter(F.col("doc_id") < 300)
+    ids = _media_ids(spark, sf_dir, 300)
     media = multimodal.synth_bmp_media(ids)
     return multimodal.media_near_pairs(media, threshold=0.999, n_bits=8)
 
@@ -2192,8 +2206,7 @@ def _q_media_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     is integer-exact (equal blocks), so the oracle rebuilds every grid
     byte from the same md5 keys in SQL and folds the comparisons into
     the identical (sig_hi, sig_lo) halves."""
-    ids = _t(spark, sf_dir, "documents").select("doc_id") \
-        .filter(F.col("doc_id") < 500)
+    ids = _media_ids(spark, sf_dir, 500)
     sigs = multimodal.media_dhash(multimodal.synth_grid_bmp_media(ids))
     return sigs.filter("ok").select("media_ref", "sig_hi", "sig_lo") \
         .orderBy("media_ref")
@@ -2207,8 +2220,7 @@ def _q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksum — resize, encode and decode all pinned end-to-end.  The
     oracle rebuilds every output pixel from the fixture's md5 grid
     formula with the identical floor-index arithmetic in SQL."""
-    ids = _t(spark, sf_dir, "documents").select("doc_id") \
-        .filter(F.col("doc_id") < 500)
+    ids = _media_ids(spark, sf_dir, 500)
     resized = multimodal.media_resize(
         multimodal.synth_grid_bmp_media(ids), out_w=13, out_h=11)
     return multimodal.media_pixel_checksum(resized).orderBy("media_ref")
@@ -2221,8 +2233,7 @@ def _q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     features (energy, strict-sign zero crossings, peak, duration).  Ids
     % 10 == 0 carry garbage payloads and must come back ok=False — the
     same anomaly convention as the image codecs."""
-    ids = _t(spark, sf_dir, "documents").select("doc_id") \
-        .filter(F.col("doc_id") < 500)
+    ids = _media_ids(spark, sf_dir, 500)
     return multimodal.audio_features(
         multimodal.synth_wav_media(ids)).orderBy("media_ref")
 
@@ -2234,8 +2245,7 @@ def _q_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     media_dhash, sharing the (sig_hi, sig_lo) signature shape.  Ids >=
     250 are planted near-dups (base waveform of id % 250, +3000 spike
     on the last four samples); garbage ids (% 10 == 0) and ok=False."""
-    ids = _t(spark, sf_dir, "documents").select("doc_id") \
-        .filter(F.col("doc_id") < 500)
+    ids = _media_ids(spark, sf_dir, 500)
     media = multimodal.synth_wav_media(ids, n_samples=256, dup_mod=250,
                                        md5_texture=True)
     return multimodal.audio_fingerprint(media) \
@@ -2249,8 +2259,7 @@ def _q_audio_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches windows 63/64 only, flipping at most the two adjacent
     comparisons, so every planted (i, i+250) pair must surface; the
     oracle verifies with an exact all-pairs bit_count at this scale."""
-    ids = _t(spark, sf_dir, "documents").select("doc_id") \
-        .filter(F.col("doc_id") < 500)
+    ids = _media_ids(spark, sf_dir, 500)
     media = multimodal.synth_wav_media(ids, n_samples=256, dup_mod=250,
                                        md5_texture=True)
     return multimodal.audio_dup_pairs(media, max_hamming=2) \
@@ -2265,8 +2274,7 @@ def _q_video_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer folds over the decoded planes, so the oracle replays them
     from the same md5 bytes (x16 per 4x4 cell); garbage ids (% 10 == 0)
     pin the ok=False zero row."""
-    ids = _t(spark, sf_dir, "documents").select("doc_id") \
-        .filter(F.col("doc_id") < 500)
+    ids = _media_ids(spark, sf_dir, 500)
     media = multimodal.synth_y4m_media(ids, n_frames=6, dup_mod=250)
     return multimodal.video_features(media) \
         .select("media_ref", "ok", "width", "height", "n_frames",
@@ -2280,8 +2288,7 @@ def _q_video_frame_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     pooled 9x8 grid of a 36x32 frame recovers the md5 cell grid, so
     per-frame signatures have the same closed-form SQL twin as the
     image dHash oracle, extended by the frame axis."""
-    ids = _t(spark, sf_dir, "documents").select("doc_id") \
-        .filter(F.col("doc_id") < 500)
+    ids = _media_ids(spark, sf_dir, 500)
     media = multimodal.synth_y4m_media(ids, n_frames=6, dup_mod=250)
     frames = multimodal.video_frames(media, every_n=2)
     return multimodal.media_dhash(frames).filter("ok") \
@@ -2297,8 +2304,7 @@ def _q_video_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing.  The banding is the shared SimHash pigeonhole machinery
     (never all-pairs); the oracle verifies with exact same-frame
     all-pairs bit_count at this scale."""
-    ids = _t(spark, sf_dir, "documents").select("doc_id") \
-        .filter(F.col("doc_id") < 500)
+    ids = _media_ids(spark, sf_dir, 500)
     media = multimodal.synth_y4m_media(ids, n_frames=6, dup_mod=250)
     return multimodal.video_dup_pairs(media, every_n=1, max_hamming=2,
                                       min_frames=4).orderBy("id_a", "id_b")
@@ -2311,8 +2317,7 @@ def _q_media_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     plants doc_id >= 250 as a one-cell edit of doc_id % 250 (Hamming
     <= 1), so the planted (i, i+250) pairs must all surface; the
     oracle verifies with an exact all-pairs bit_count at this scale."""
-    ids = _t(spark, sf_dir, "documents").select("doc_id") \
-        .filter(F.col("doc_id") < 500)
+    ids = _media_ids(spark, sf_dir, 500)
     media = multimodal.synth_grid_bmp_media(ids)
     return multimodal.media_dhash_pairs(media, max_hamming=2) \
         .orderBy("id_a", "id_b")
@@ -2326,43 +2331,10 @@ def _q_media_cross_codec_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     features are the exact fixture colors; JPEG features are the
     closed-form YCbCr round trip, so every surviving pair is replayed
     in SQL."""
-    ids = _t(spark, sf_dir, "documents").select("doc_id") \
-        .filter(F.col("doc_id") < 150)
+    ids = _media_ids(spark, sf_dir, 150)
     media = multimodal.synth_bmp_media(ids).unionByName(
         multimodal.synth_jpeg_media(ids))
     return multimodal.media_near_pairs(media, threshold=0.999, n_bits=8)
-
-
-def _q_multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL PNG decode round-trip: solid-color 8-bit PNGs (stdlib-zlib
-    DEFLATE, CRC-correct chunks) built per doc_id, parsed back by the
-    pure-numpy PNG codec (multimodal.decode_png) — same closed-form
-    oracle as the BMP twin; ids % 10 == 0 carry garbage payloads and
-    must come back ok=False."""
-    ids = _t(spark, sf_dir, "documents").select("doc_id") \
-        .filter(F.col("doc_id") < 300)
-    dec = multimodal.decode_media(multimodal.synth_png_media(ids))
-    return dec.select(
-        "media_ref", "ok", "decoded_width", "decoded_height",
-        F.round(F.element_at("features", 1).cast("double"), 4).alias("f0"),
-    )
-
-
-def _q_multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL baseline-JPEG decode round-trip: solid-color 4:2:0 JPEGs
-    with restart markers and ALL-ONES quant tables (lossless
-    quantization) built per doc_id, parsed back by the pure-numpy JPEG
-    kernel (kernels/jpeg.py: canonical Huffman + batched-matmul IDCT).
-    The only lossy steps are the two color-conversion roundings, so the
-    oracle is the closed-form YCbCr round trip of the fixture color;
-    ids % 10 == 0 carry garbage payloads and must come back ok=False."""
-    ids = _t(spark, sf_dir, "documents").select("doc_id") \
-        .filter(F.col("doc_id") < 300)
-    dec = multimodal.decode_media(multimodal.synth_jpeg_media(ids))
-    return dec.select(
-        "media_ref", "ok", "decoded_width", "decoded_height",
-        F.round(F.element_at("features", 1).cast("double"), 4).alias("f0"),
-    )
 
 
 # ---- C2 structural classifier ---------------------------------------------
@@ -2732,7 +2704,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "nb_holdout_confusion": _q_nb_holdout_confusion,
         "dedup_minhash_est": _q_dedup_minhash_est,
         "sample_temperature": _q_sample_temperature,
-        "multimodal_decode_jpeg": _q_multimodal_decode_jpeg,
+        "multimodal_decode_jpeg": _q_multimodal_decode(
+            multimodal.synth_jpeg_media),
         "corpus_drift": _q_corpus_drift,
         "corpus_drift_counts": _q_corpus_drift_counts,
         "charset_profile": _q_charset_profile,
@@ -2819,12 +2792,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "vocab_coverage": _q_vocab_coverage,
         "boilerplate_lines": _q_boilerplate_lines,
         "boilerplate_site_lines": _q_boilerplate_site_lines,
-        "multimodal_decode_bmp": _q_multimodal_decode_bmp,
+        "multimodal_decode_bmp": _q_multimodal_decode(
+            multimodal.synth_bmp_media),
         "hist_quantiles": _q_hist_quantiles,
         "dedup_incremental": _q_dedup_incremental,
         "text_token_stats": _q_text_token_stats,
         "text_quality": _q_text_quality,
-        "multimodal_decode_png": _q_multimodal_decode_png,
+        "multimodal_decode_png": _q_multimodal_decode(
+            multimodal.synth_png_media),
         "link_degree_census": _q_link_degree_census,
         "link_pagerank": _q_link_pagerank,
         "text_repetition": _q_text_repetition,

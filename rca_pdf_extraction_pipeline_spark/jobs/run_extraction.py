@@ -61,6 +61,13 @@ def validate_output_path(output_path: str,
 
 
 def main(argv: list[str] | None = None) -> int:
+    # import inside main so --py-files shipping is resolved by the time
+    # executors deserialize tasks
+    from rca_pdf_extraction_pipeline_spark.config import DEFAULT_CONFIG
+    from rca_pdf_extraction_pipeline_spark.operators import htmlparse
+    from rca_pdf_extraction_pipeline_spark.plans import checkpoint
+    from rca_pdf_extraction_pipeline_spark.session import get_spark
+
     ap = argparse.ArgumentParser(description="RCA extraction pipeline (Spark)")
     ap.add_argument("--input", required=True,
                     help="parquet path of docs(doc_id, spans) or of raw "
@@ -69,7 +76,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--all-blocks", action="store_true",
                     help="html input: keep boilerplate blocks too "
                          "(default: main content only)")
-    ap.add_argument("--n-buckets", type=int, default=64)
+    ap.add_argument("--n-buckets", type=int, default=checkpoint.N_BUCKETS,
+                    help="bucket count; an input with a _bucket column "
+                         "must have been written with the same count")
     ap.add_argument("--waves", type=int, default=8)
     ap.add_argument("--num-partitions", type=int, default=None)
     ap.add_argument("--allowed-roots", nargs="*", default=None,
@@ -77,13 +86,6 @@ def main(argv: list[str] | None = None) -> int:
                          "repo root + /tmp/)")
     args = ap.parse_args(argv)
     validate_output_path(args.output, args.allowed_roots)
-
-    # import inside main so --py-files shipping is resolved by the time
-    # executors deserialize tasks
-    from rca_pdf_extraction_pipeline_spark.config import DEFAULT_CONFIG
-    from rca_pdf_extraction_pipeline_spark.operators import htmlparse
-    from rca_pdf_extraction_pipeline_spark.plans import checkpoint
-    from rca_pdf_extraction_pipeline_spark.session import get_spark
 
     cfg = DEFAULT_CONFIG
     if args.num_partitions:

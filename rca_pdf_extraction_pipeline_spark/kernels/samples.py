@@ -166,13 +166,12 @@ def segment_lines(blocks: pd.DataFrame) -> pd.DataFrame:
     return out[["block_id", "sample_id", "pos", "line"]]
 
 
-def decode_samples(lines: pd.DataFrame, typed: bool = True) -> pd.DataFrame:
+def decode_samples(lines: pd.DataFrame) -> pd.DataFrame:
     """P2: decode segmented sample lines into canonical rows.
 
     Parameters
     ----------
     lines : output of :func:`segment_lines`.
-    typed : also emit float64 shadow columns (suffix ``_f``).
 
     Returns
     -------
@@ -273,20 +272,19 @@ def decode_samples(lines: pd.DataFrame, typed: bool = True) -> pd.DataFrame:
             "saturation_total_pct": st_cell,
         }
     )
-    if typed:
-        out["depth_feet_f"] = depth
-        out["permeability_air_md_f"] = np.where(is_plus | is_lt, np.nan, pa_f)
-        out["permeability_klink_md_f"] = np.where(is_plus | is_lt, np.nan, pk_f)
-        out["porosity_ambient_pct_f"] = por_amb
-        out["porosity_ncs_pct_f"] = por_ncs
-        out["grain_density_gcc_f"] = grain
-        out["saturation_water_pct_f"] = np.where(is_star, np.nan, sw_f)
-        out["saturation_oil_pct_f"] = np.where(is_star, np.nan, so_f)
-        out["saturation_total_pct_f"] = np.where(is_star, np.nan, st_f)
+    out["depth_feet_f"] = depth
+    out["permeability_air_md_f"] = np.where(is_plus | is_lt, np.nan, pa_f)
+    out["permeability_klink_md_f"] = np.where(is_plus | is_lt, np.nan, pk_f)
+    out["porosity_ambient_pct_f"] = por_amb
+    out["porosity_ncs_pct_f"] = por_ncs
+    out["grain_density_gcc_f"] = grain
+    out["saturation_water_pct_f"] = np.where(is_star, np.nan, sw_f)
+    out["saturation_oil_pct_f"] = np.where(is_star, np.nan, so_f)
+    out["saturation_total_pct_f"] = np.where(is_star, np.nan, st_f)
 
     return out[keep_sample].reset_index(drop=True)
 
 
-def parse_blocks(blocks: pd.DataFrame, typed: bool = True) -> pd.DataFrame:
+def parse_blocks(blocks: pd.DataFrame) -> pd.DataFrame:
     """P1+P2 composed: blocks(block_id, text) -> decoded sample rows."""
-    return decode_samples(segment_lines(blocks), typed=typed)
+    return decode_samples(segment_lines(blocks))

@@ -35,15 +35,13 @@ def sanitize_series(values: pd.Series) -> pd.Series:
     return pd.Series(np.where(dangerous, "'" + s, s), index=values.index)
 
 
-def rows_to_csv_bytes(headers: list[str], rows: list[list[str]],
-                      sanitize_headers: bool = True) -> bytes:
+def rows_to_csv_bytes(headers: list[str], rows: list[list[str]]) -> bytes:
     """Render a small parity artifact exactly as the reference does:
     UTF-8 BOM, csv module quoting, sanitized headers (reference
     core_analysis.py:822-843, csv_sanitizer.py:54-81)."""
     buf = io.StringIO(newline="")
     # the reference's committed golden artifacts are git-eol-normalized to \n
     writer = csv.writer(buf, lineterminator="\n")
-    out_headers = [sanitize_value(h) for h in headers] if sanitize_headers else headers
-    writer.writerow(out_headers)
+    writer.writerow([sanitize_value(h) for h in headers])
     writer.writerows(rows)
     return b"\xef\xbb\xbf" + buf.getvalue().encode("utf-8")

@@ -33,7 +33,7 @@ from ..kernels.boilerplate import (
 )
 
 
-def score_blocks(blocks: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def score_blocks(blocks: DataFrame) -> DataFrame:
     """blocks + (n_words, link_density, is_content)."""
     text = F.coalesce(F.col("text"), F.lit(""))
     n_chars = F.length(text)
@@ -44,7 +44,7 @@ def score_blocks(blocks: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     base = (~bad_tag) & (link_density < LINK_DENSITY_MAX) & (n_words >= MIN_WORDS)
 
-    w = Window.partitionBy(id_col).orderBy("idx")
+    w = Window.partitionBy("doc_id").orderBy("idx")
     prev_c = F.coalesce(F.lag(base, 1).over(w), F.lit(False))
     next_c = F.coalesce(F.lead(base, 1).over(w), F.lit(False))
     neighbour = ((~bad_tag) & (link_density < LINK_DENSITY_MAX)
@@ -58,12 +58,12 @@ def score_blocks(blocks: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def extract_main_text(blocks: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def extract_main_text(blocks: DataFrame) -> DataFrame:
     """Per document: ordered content blocks joined by newline.
 
     (doc_id, main_text, n_blocks) — deterministic order by block idx via
     sorted struct collection."""
-    scored = score_blocks(blocks, id_col)
+    scored = score_blocks(blocks)
     content = scored.filter(F.col("is_content"))
     joined = F.array_join(
         F.transform(
@@ -72,15 +72,13 @@ def extract_main_text(blocks: DataFrame, id_col: str = "doc_id") -> DataFrame:
         ),
         "\n",
     )
-    return content.groupBy(id_col).agg(
+    return content.groupBy("doc_id").agg(
         joined.alias("main_text"),
         F.count(F.lit(1)).alias("n_blocks"),
     )
 
 
-def remove_frequent_lines(docs: DataFrame, id_col: str = "doc_id",
-                          text_col: str = "text",
-                          min_df: int = 5) -> DataFrame:
+def remove_frequent_lines(docs: DataFrame, min_df: int = 5) -> DataFrame:
     """Corpus-level boilerplate-line removal (the CCNet / C4 paragraph
     dedup heuristic, public): a line whose DOCUMENT frequency reaches
     ``min_df`` is boilerplate (nav bars, footers, cookie banners) and is
@@ -102,26 +100,23 @@ def remove_frequent_lines(docs: DataFrame, id_col: str = "doc_id",
          position (never partition order).
     """
     lines = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line"),
     ).withColumn("h", F.md5("line"))
-    df_counts = (lines.select("h", id_col).distinct()
+    df_counts = (lines.select("h", "doc_id").distinct()
                  .groupBy("h").agg(F.count(F.lit(1)).alias("df")))
     banned = df_counts.filter(F.col("df") >= min_df).select("h")
     kept = lines.join(F.broadcast(banned), "h", "left_anti")
     ordered = F.transform(
         F.array_sort(F.collect_list(F.struct("pos", "line"))),
         lambda s: s["line"])
-    return kept.groupBy(id_col).agg(
+    return kept.groupBy("doc_id").agg(
         F.array_join(ordered, "\n").alias("clean_text"),
         F.count(F.lit(1)).alias("n_kept"),
     )
 
 
-def remove_frequent_lines_by_site(docs: DataFrame, id_col: str = "doc_id",
-                                  text_col: str = "text",
-                                  site_col: str = "site",
-                                  min_df: int = 3,
+def remove_frequent_lines_by_site(docs: DataFrame, min_df: int = 3,
                                   min_ratio_pct: int = 50) -> DataFrame:
     """Per-site frequent-line removal (the RefinedWeb / MassiveWeb
     line-level filter, public — Penedo et al. 2023 §G.2.2: lines
@@ -149,24 +144,24 @@ def remove_frequent_lines_by_site(docs: DataFrame, id_col: str = "doc_id",
          position, never partition order.
     """
     lines = docs.select(
-        F.col(id_col), F.col(site_col),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
+        F.col("doc_id"), F.col("site"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line"),
     ).withColumn("h", F.md5("line"))
-    site_docs = (docs.groupBy(site_col)
-                 .agg(F.countDistinct(id_col).alias("site_docs")))
-    df_counts = (lines.select(site_col, "h", id_col).distinct()
-                 .groupBy(site_col, "h").agg(F.count(F.lit(1)).alias("df")))
+    site_docs = (docs.groupBy("site")
+                 .agg(F.countDistinct("doc_id").alias("site_docs")))
+    df_counts = (lines.select("site", "h", "doc_id").distinct()
+                 .groupBy("site", "h").agg(F.count(F.lit(1)).alias("df")))
     banned = (df_counts
-              .join(F.broadcast(site_docs), site_col)
+              .join(F.broadcast(site_docs), "site")
               .filter((F.col("df") >= min_df)
                       & (F.col("df") * 100
                          >= F.lit(min_ratio_pct) * F.col("site_docs")))
-              .select(site_col, "h"))
-    kept = lines.join(F.broadcast(banned), [site_col, "h"], "left_anti")
+              .select("site", "h"))
+    kept = lines.join(F.broadcast(banned), ["site", "h"], "left_anti")
     ordered = F.transform(
         F.array_sort(F.collect_list(F.struct("pos", "line"))),
         lambda s: s["line"])
-    return kept.groupBy(id_col, site_col).agg(
+    return kept.groupBy("doc_id", "site").agg(
         F.array_join(ordered, "\n").alias("clean_text"),
         F.count(F.lit(1)).alias("n_kept"),
     )

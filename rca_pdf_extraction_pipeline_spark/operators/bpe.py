@@ -46,11 +46,11 @@ EOW = "</w>"
 _WORD_OK = r"^[!-~]+$"
 
 
-def _word_vocab(docs: DataFrame, text_col: str) -> DataFrame:
+def _word_vocab(docs: DataFrame) -> DataFrame:
     """(word, freq, enc): the word-frequency table with each word
     pre-encoded as wrapped character units plus the EOW unit."""
     words = (docs.select(F.explode(
-        F.filter(F.split(F.col(text_col), " "), lambda t: t != F.lit("")))
+        F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit("")))
         .alias("word"))
         .filter(F.col("word").rlike(_WORD_OK)
                 & ~F.col("word").contains("|")))
@@ -73,7 +73,7 @@ def _pair_counts(vocab: DataFrame) -> DataFrame:
             .agg(F.sum("freq").alias("cnt")))
 
 
-def bpe_train(docs: DataFrame, n_merges: int, text_col: str = "text",
+def bpe_train(docs: DataFrame, n_merges: int,
               checkpoint_dir: str | None = None) -> DataFrame:
     """Learn ``n_merges`` BPE merges over the corpus; returns the merge
     table (rank, left, right, pair_count) in learning order — the
@@ -90,7 +90,7 @@ def bpe_train(docs: DataFrame, n_merges: int, text_col: str = "text",
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1; got {n_merges}")
     mat = _Materializer(checkpoint_dir)
-    vocab = mat(_word_vocab(docs, text_col), "bpe_vocab_0")
+    vocab = mat(_word_vocab(docs), "bpe_vocab_0")
     bests: list[DataFrame] = []
     for i in range(1, n_merges + 1):
         best = mat(
@@ -112,8 +112,7 @@ def bpe_train(docs: DataFrame, n_merges: int, text_col: str = "text",
     return out.orderBy("rank")
 
 
-def bpe_apply(docs: DataFrame, merges: list[tuple[str, str]],
-              text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def bpe_apply(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Tokenize documents with a learned merge list: (id, bpe_tokens
     array<string>, n_bpe_tokens).  ``merges`` is the collected
     (left, right) list in rank order — a tiny driver-side artifact
@@ -136,15 +135,15 @@ def bpe_apply(docs: DataFrame, merges: list[tuple[str, str]],
         F.split(F.expr("substring(_enc, 2, length(_enc) - 2)"), r"\|\|")) \
         .otherwise(F.array(F.concat(F.lit("\x00"), F.col("_w"))))
     toks = (docs.select(
-        F.col(id_col),
-        F.posexplode(F.filter(F.split(F.col(text_col), " "),
+        F.col("doc_id"),
+        F.posexplode(F.filter(F.split(F.col("text"), " "),
                               lambda t: t != F.lit("")))
         .alias("_pos", "_w"))
         .withColumn("_enc", enc)
-        .select(F.col(id_col), F.col("_pos"), units.alias("_units")))
+        .select(F.col("doc_id"), F.col("_pos"), units.alias("_units")))
     # word order restored explicitly from _pos — collect_list order after
     # a shuffle is NOT the explode order
-    return (toks.groupBy(id_col)
+    return (toks.groupBy("doc_id")
             .agg(F.flatten(F.array_sort(
                 F.collect_list(F.struct(F.col("_pos"), F.col("_units"))))
                 ["_units"]).alias("bpe_tokens"))

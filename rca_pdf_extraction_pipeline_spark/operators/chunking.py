@@ -29,8 +29,7 @@ from ..functions import text as T
 
 
 def chunk_documents(docs: DataFrame, chunk_tokens: int = 64,
-                    stride: int | None = None, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+                    stride: int | None = None) -> DataFrame:
     """(id, chunk_idx, chunk_text, n_chunk_tokens) — sliding token
     windows; the final window is the remainder (>= 1 token, shorter
     than ``chunk_tokens``).  ``stride`` defaults to ``chunk_tokens``
@@ -43,8 +42,8 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 64,
     # tokens hoisted to a column layer: the chunk lambda slices them
     # once per window — inline, every slice re-ran the tokenizer
     # (O(n_windows * n_tokens) per doc; the substring-dedup lesson)
-    tok_df = docs.select(F.col(id_col),
-                         T.tokens(F.col(text_col)).alias("toks"))
+    tok_df = docs.select(F.col("doc_id"),
+                         T.tokens(F.col("text")).alias("toks"))
     toks = F.col("toks")
     n = F.size(toks)
     # window start positions: 0, stride, 2*stride, ... while start < n
@@ -56,15 +55,14 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 64,
         .otherwise(F.array().cast("array<int>"))
     chunks = F.transform(
         starts, lambda s: F.concat_ws(" ", F.slice(toks, s + 1, chunk_tokens)))
-    ex = tok_df.select(F.col(id_col),
+    ex = tok_df.select(F.col("doc_id"),
                        F.posexplode(chunks).alias("chunk_idx", "chunk_text"))
     return ex.select(
-        F.col(id_col), F.col("chunk_idx"), F.col("chunk_text"),
+        F.col("doc_id"), F.col("chunk_idx"), F.col("chunk_text"),
         T.n_tokens(F.col("chunk_text")).alias("n_chunk_tokens"))
 
 
 def pack_documents(docs: DataFrame, budget_tokens: int = 512,
-                   text_col: str = "text", id_col: str = "doc_id",
                    num_ranges: int | None = None) -> DataFrame:
     """(id, n_tokens, bin_id) — deterministic token-budget packing:
     documents in ascending id order fill bins of ``budget_tokens`` by
@@ -93,14 +91,14 @@ def pack_documents(docs: DataFrame, budget_tokens: int = 512,
     spark = docs.sparkSession
     if num_ranges is None:
         num_ranges = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    base = docs.select(F.col(id_col),
-                       T.n_tokens(F.col(text_col)).alias("n_tokens"))
-    ranged = base.repartitionByRange(num_ranges, F.col(id_col)) \
+    base = docs.select(F.col("doc_id"),
+                       T.n_tokens(F.col("text")).alias("n_tokens"))
+    ranged = base.repartitionByRange(num_ranges, F.col("doc_id")) \
                  .withColumn("rng", F.spark_partition_id())
-    w = Window.partitionBy("rng").orderBy(F.col(id_col)).rowsBetween(
+    w = Window.partitionBy("rng").orderBy(F.col("doc_id")).rowsBetween(
         Window.unboundedPreceding, Window.currentRow)
     within = ranged.select(
-        F.col(id_col), F.col("n_tokens"), F.col("rng"),
+        F.col("doc_id"), F.col("n_tokens"), F.col("rng"),
         F.sum("n_tokens").over(w).alias("cum_in_range"))
     totals = ranged.groupBy("rng").agg(
         F.sum("n_tokens").alias("rng_tokens"))
@@ -119,13 +117,12 @@ def pack_documents(docs: DataFrame, budget_tokens: int = 512,
                .agg((F.sum("etok") - F.min("rng_tokens")).alias("offset")))
     joined = within.join(F.broadcast(offsets), "rng")
     return joined.select(
-        F.col(id_col), F.col("n_tokens"),
+        F.col("doc_id"), F.col("n_tokens"),
         F.floor((F.col("offset") + F.col("cum_in_range") - F.col("n_tokens"))
                 / F.lit(budget_tokens)).cast("long").alias("bin_id"))
 
 
 def pack_sequences(toks: DataFrame, seq_len: int = 2048,
-                   tokens_col: str = "tokens", id_col: str = "doc_id",
                    eod: str | None = None,
                    num_ranges: int | None = None) -> DataFrame:
     """GPT-style fixed-length sequence packing: concatenate every
@@ -181,21 +178,21 @@ def pack_sequences(toks: DataFrame, seq_len: int = 2048,
     spark = toks.sparkSession
     if num_ranges is None:
         num_ranges = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    arr = F.col(tokens_col)
+    arr = F.col("tokens")
     if eod is not None:
         arr = F.concat(arr, F.array(F.lit(eod)))
-    base = (toks.select(F.col(id_col), arr.alias("_toks"))
+    base = (toks.select(F.col("doc_id"), arr.alias("_toks"))
             .withColumn("_n", F.size("_toks").cast("long"))
             .filter(F.col("_n") > 0))
     # slim (id, n) stream-offset decomposition — see docstring for why
     # the token arrays must NOT ride through this exchange
-    slim = base.select(F.col(id_col), F.col("_n"))
-    ranged = slim.repartitionByRange(num_ranges, F.col(id_col)) \
+    slim = base.select(F.col("doc_id"), F.col("_n"))
+    ranged = slim.repartitionByRange(num_ranges, F.col("doc_id")) \
                  .withColumn("rng", F.spark_partition_id())
-    w = Window.partitionBy("rng").orderBy(F.col(id_col)).rowsBetween(
+    w = Window.partitionBy("rng").orderBy(F.col("doc_id")).rowsBetween(
         Window.unboundedPreceding, Window.currentRow)
     within = ranged.select(
-        F.col(id_col), F.col("_n"), F.col("rng"),
+        F.col("doc_id"), F.col("_n"), F.col("rng"),
         F.sum("_n").over(w).alias("_cum"))
     totals = ranged.groupBy("rng").agg(F.sum("_n").alias("_rt"))
     earlier = totals.select(F.col("rng").alias("_erng"),
@@ -214,9 +211,9 @@ def pack_sequences(toks: DataFrame, seq_len: int = 2048,
     L = F.lit(seq_len).cast("long")
     off = (F.col("_roff") + F.col("_cum") - F.col("_n")).cast("long")
     offs = (within.join(F.broadcast(offsets), "rng")
-            .select(F.col(id_col), off.alias("_off")))
-    docs_off = base.select(F.col(id_col), F.col("_toks"), F.col("_n")) \
-                   .join(offs, id_col)
+            .select(F.col("doc_id"), off.alias("_off")))
+    docs_off = base.select(F.col("doc_id"), F.col("_toks"), F.col("_n")) \
+                   .join(offs, "doc_id")
     # one struct per touched sequence, sliced inside the transform —
     # the explode consumes a single array expression (no re-evaluation
     # per downstream column reference)
@@ -234,8 +231,8 @@ def pack_sequences(toks: DataFrame, seq_len: int = 2048,
                 (F.least((s + 1) * L, F.col("_off") + F.col("_n"))
                  - F.greatest(s * L, F.col("_off"))).cast("int"),
             ).alias("part")))
-    ex = docs_off.select(F.col(id_col), F.explode(parts).alias("_p")) \
-        .select(F.col(id_col), F.col("_p.seq_id").alias("seq_id"),
+    ex = docs_off.select(F.col("doc_id"), F.explode(parts).alias("_p")) \
+        .select(F.col("doc_id"), F.col("_p.seq_id").alias("seq_id"),
                 F.col("_p.part_off").alias("_poff"),
                 F.col("_p.part").alias("_part"))
     out = (ex.groupBy("seq_id")

@@ -41,9 +41,8 @@ class CurationConfig:
 DEFAULT_CURATION = CurationConfig()
 
 
-def curation_signals(docs: DataFrame, cfg: CurationConfig = DEFAULT_CURATION,
-                     text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def curation_signals(docs: DataFrame,
+                     cfg: CurationConfig = DEFAULT_CURATION) -> DataFrame:
     """(id, pred_lang, quality_score, top_2gram_frac, dup_5gram_frac,
     reject_reason) — ``reject_reason`` is the FIRST failing gate in the
     fixed order lang -> quality -> repetition, or 'keep'.
@@ -51,11 +50,11 @@ def curation_signals(docs: DataFrame, cfg: CurationConfig = DEFAULT_CURATION,
     Cascade order matches public curation pipelines (language first:
     it is the cheapest and the other heuristics assume the language).
     """
-    lang = language_id(docs, text_col, id_col)
-    qual = quality_scores(docs, text_col, id_col).select(id_col, "quality_score")
-    rep = repetition_stats(docs, text_col, id_col)
-    j = (lang.select(id_col, "pred_lang")
-         .join(qual, id_col).join(rep, id_col))
+    lang = language_id(docs)
+    qual = quality_scores(docs).select("doc_id", "quality_score")
+    rep = repetition_stats(docs)
+    j = (lang.select("doc_id", "pred_lang")
+         .join(qual, "doc_id").join(rep, "doc_id"))
     reason = (
         F.when(~F.col("pred_lang").isin(*cfg.keep_langs), F.lit("lang"))
         .when(F.col("quality_score") < cfg.min_quality, F.lit("quality"))
@@ -63,61 +62,57 @@ def curation_signals(docs: DataFrame, cfg: CurationConfig = DEFAULT_CURATION,
               | (F.col("dup_5gram_frac") > cfg.max_dup5gram),
               F.lit("repetition"))
         .otherwise(F.lit("keep")))
-    return j.select(id_col, "pred_lang", "quality_score",
+    return j.select("doc_id", "pred_lang", "quality_score",
                     "top_2gram_frac", "dup_5gram_frac",
                     reason.alias("reject_reason"))
 
 
-def curate(docs: DataFrame, cfg: CurationConfig = DEFAULT_CURATION,
-           text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def curate(docs: DataFrame,
+           cfg: CurationConfig = DEFAULT_CURATION) -> DataFrame:
     """The curated corpus: gates -> exact dedup (keep-min-id) ->
     optional MinHash near-dedup -> optional PII masking.
 
     Returns the surviving documents with the original columns, text
     replaced by the masked text when ``cfg.mask_pii``.
     """
-    flags = curation_signals(docs, cfg, text_col, id_col)
+    flags = curation_signals(docs, cfg)
     kept = docs.join(
-        flags.filter(F.col("reject_reason") == "keep").select(id_col),
-        id_col, "left_semi")
+        flags.filter(F.col("reject_reason") == "keep").select("doc_id"),
+        "doc_id", "left_semi")
 
     # exact dedup: drop every member of a hash group except the min id.
     # Plain shuffle join on the 16-byte digest (same exchange the group
     # aggregation needs anyway); AQE broadcasts it when the duplicate
     # group table turns out tiny, which it usually is.
-    exact = dedup_ops.exact_duplicates(kept, text_col, id_col)
-    losers = (kept.select(F.md5(F.col(text_col).cast("string"))
-                          .alias("content_hash"), F.col(id_col))
+    exact = dedup_ops.exact_duplicates(kept)
+    losers = (kept.select(F.md5(F.col("text").cast("string"))
+                          .alias("content_hash"), F.col("doc_id"))
               .join(exact.select("content_hash", "canonical_id"),
                     "content_hash")
-              .filter(F.col(id_col) != F.col("canonical_id"))
-              .select(id_col))
-    kept = kept.join(losers, id_col, "left_anti")
+              .filter(F.col("doc_id") != F.col("canonical_id"))
+              .select("doc_id"))
+    kept = kept.join(losers, "doc_id", "left_anti")
 
     if cfg.near_dedup:
-        kept = dedup_ops.deduplicate_corpus(kept, text_col=text_col,
-                                            id_col=id_col)
+        kept = dedup_ops.deduplicate_corpus(kept)
 
     if cfg.mask_pii:
-        masked = pii_stats(kept, text_col, id_col).select(
-            id_col, F.col("masked_text"))
-        kept = (kept.drop(text_col).join(masked, id_col)
-                .withColumnRenamed("masked_text", text_col))
+        masked = pii_stats(kept).select("doc_id", "masked_text")
+        kept = (kept.drop("text").join(masked, "doc_id")
+                .withColumnRenamed("masked_text", "text"))
     return kept
 
 
-def curation_report(docs: DataFrame, cfg: CurationConfig = DEFAULT_CURATION,
-                    text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def curation_report(docs: DataFrame,
+                    cfg: CurationConfig = DEFAULT_CURATION) -> DataFrame:
     """(reject_reason, n_docs) — the gate funnel, one tiny aggregation."""
-    return (curation_signals(docs, cfg, text_col, id_col)
+    return (curation_signals(docs, cfg)
             .groupBy("reject_reason")
             .agg(F.count(F.lit(1)).alias("n_docs")))
 
 
-def source_report(docs: DataFrame, cfg: CurationConfig = DEFAULT_CURATION,
-                  source_col: str = "source", text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
+def source_report(docs: DataFrame,
+                  cfg: CurationConfig = DEFAULT_CURATION) -> DataFrame:
     """Per-source curation dashboard (the per-domain quality table of
     RefinedWeb-style pipelines): for each source, document count, mean
     quality score, keep rate through the gates, and the per-reason
@@ -128,13 +123,13 @@ def source_report(docs: DataFrame, cfg: CurationConfig = DEFAULT_CURATION,
     aggregation on the tiny source key.  Deterministic: means divide
     exact integer sums of the already-rounded per-doc signals.
     """
-    sig = curation_signals(docs, cfg, text_col, id_col)
-    j = docs.select(F.col(id_col), F.col(source_col)).join(sig, id_col)
+    sig = curation_signals(docs, cfg)
+    j = docs.select(F.col("doc_id"), F.col("source")).join(sig, "doc_id")
     # exact mean: per-doc scores are 6-dp-rounded doubles; quantize to
     # integer micro-units so the cross-row sum has no float order drift
     q_micro = F.round(F.col("quality_score") * F.lit(1_000_000.0), 0) \
         .cast("long")
-    return (j.groupBy(source_col)
+    return (j.groupBy("source")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.round(F.sum(q_micro) / F.lit(1_000_000.0)
                          / F.count(F.lit(1)), 6).alias("mean_quality"),
@@ -148,4 +143,4 @@ def source_report(docs: DataFrame, cfg: CurationConfig = DEFAULT_CURATION,
                  .alias("n_repetition"))
             .withColumn("keep_rate",
                         F.round(F.col("n_keep") / F.col("n_docs"), 6))
-            .orderBy(source_col))
+            .orderBy("source"))

@@ -78,26 +78,27 @@ class _Materializer:
         return df.sparkSession.read.parquet(path)
 
 
-def exact_duplicates(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id", prefix_len: int | None = None) -> DataFrame:
+def exact_duplicates(docs: DataFrame,
+                     prefix_len: int | None = None) -> DataFrame:
     """Exact-duplicate groups by content digest.
 
     Returns (content_hash, dup_count, canonical_id) for groups with >1
     member; ``canonical_id`` is the min id (keep-first policy).
     ``prefix_len`` hashes only a prefix (cheap fuzzy-exact mode).
     """
-    key = F.col(text_col) if prefix_len is None else F.substring(F.col(text_col), 1, prefix_len)
+    key = F.col("text") if prefix_len is None \
+        else F.substring(F.col("text"), 1, prefix_len)
     return (
-        docs.select(F.md5(key.cast("string")).alias("content_hash"), F.col(id_col))
+        docs.select(F.md5(key.cast("string")).alias("content_hash"),
+                    F.col("doc_id"))
         .groupBy("content_hash")
         .agg(F.count(F.lit(1)).alias("dup_count"),
-             F.min(id_col).alias("canonical_id"))
+             F.min("doc_id").alias("canonical_id"))
         .filter(F.col("dup_count") > 1)
     )
 
 
-def dedup_paragraphs(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id", sep: str = "\n") -> DataFrame:
+def dedup_paragraphs(docs: DataFrame, sep: str = "\n") -> DataFrame:
     """Corpus-global EXACT paragraph dedup, keep-first (the
     MassiveText / RefinedWeb exact line-dedup stage, public
     methodology): every distinct paragraph survives only at its FIRST
@@ -126,46 +127,42 @@ def dedup_paragraphs(docs: DataFrame, text_col: str = "text",
     FILTER (WHERE keep)`` to reassemble.
     """
     paras = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "para"),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), sep)).alias("pos", "para"),
     ).filter(F.col("para") != "").withColumn("h", F.md5("para"))
     winners = paras.groupBy("h").agg(
-        F.min(F.struct(id_col, "pos")).alias("_w"))
+        F.min(F.struct("doc_id", "pos")).alias("_w"))
     flagged = paras.join(winners, "h").withColumn(
-        "_keep", (F.col(id_col) == F.col(f"_w.{id_col}"))
+        "_keep", (F.col("doc_id") == F.col("_w.doc_id"))
         & (F.col("pos") == F.col("_w.pos")))
     ordered = F.transform(
         F.array_sort(F.collect_list(F.when(F.col("_keep"),
                                            F.struct("pos", "para")))),
         lambda s: s["para"])
-    return flagged.groupBy(id_col).agg(
+    return flagged.groupBy("doc_id").agg(
         F.array_join(ordered, sep).alias("clean_text"),
         F.sum(F.col("_keep").cast("long")).alias("n_kept"),
         F.sum((~F.col("_keep")).cast("long")).alias("n_dropped"))
 
 
-def minhash_signatures(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id",
-                       n_hashes: int = DEFAULT_MINHASH_SEEDS,
+def minhash_signatures(docs: DataFrame, n_hashes: int = DEFAULT_MINHASH_SEEDS,
                        shingle_size: int = 3) -> DataFrame:
     """Per-document MinHash signature: n_hashes bigint columns
     ``sig_0 .. sig_{n-1}`` over the distinct word-``shingle_size``-gram
     shingle set (Broder 1997; shingle_size=1 degrades to unigrams).
     One md5 per shingle total — per-seed values are integer
     permutations computed in a single fold (functions/hashing.py)."""
-    arr = H.minhash_int_array(T.shingle_set(F.col(text_col), shingle_size),
+    arr = H.minhash_int_array(T.shingle_set(F.col("text"), shingle_size),
                               H.MINHASH_SEEDS[:n_hashes])
-    t = docs.select(F.col(id_col), arr.alias("sig_arr"))
+    t = docs.select(F.col("doc_id"), arr.alias("sig_arr"))
     return t.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.element_at(F.col("sig_arr"), s + 1).alias(f"sig_{s}")
           for s in range(n_hashes)],
     )
 
 
-def minhash_band_keys(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id",
-                      n_hashes: int = DEFAULT_MINHASH_SEEDS,
+def minhash_band_keys(docs: DataFrame, n_hashes: int = DEFAULT_MINHASH_SEEDS,
                       bands: int = DEFAULT_BANDS,
                       shingle_size: int = 3,
                       keep_cols: tuple[str, ...] = ()) -> DataFrame:
@@ -187,19 +184,17 @@ def minhash_band_keys(docs: DataFrame, text_col: str = "text",
             f"remainder would silently drop trailing signature values and "
             f"weaken the requested S-curve")
     keys = H.minhash_band_key_array(
-        T.shingle_set(F.col(text_col), shingle_size), bands,
+        T.shingle_set(F.col("text"), shingle_size), bands,
         H.MINHASH_SEEDS[:n_hashes])
     return docs.select(
-        F.col(id_col), *[F.col(c) for c in keep_cols],
+        F.col("doc_id"), *[F.col(c) for c in keep_cols],
         F.posexplode(keys).alias("band", "band_key")
     )
 
 
-def minhash_candidate_pairs(docs: DataFrame, text_col: str = "text",
-                            id_col: str = "doc_id",
+def minhash_candidate_pairs(docs: DataFrame,
                             n_hashes: int = DEFAULT_MINHASH_SEEDS,
-                            bands: int = DEFAULT_BANDS,
-                            shingle_size: int = 3,
+                            bands: int = DEFAULT_BANDS, shingle_size: int = 3,
                             checkpoint_dir: str | None = None) -> DataFrame:
     """Distinct candidate near-dup pairs (id_a < id_b) from band-key
     collisions. The join shuffles on band_key only; AQE handles any
@@ -212,10 +207,12 @@ def minhash_candidate_pairs(docs: DataFrame, text_col: str = "text",
     durable path on a cluster) to pin the pair table on storage instead
     of executor blocks — see :class:`_Materializer`."""
     mat = _Materializer(checkpoint_dir)
-    keys = minhash_band_keys(docs, text_col, id_col, n_hashes, bands, shingle_size).persist()
+    keys = minhash_band_keys(docs, n_hashes, bands, shingle_size).persist()
     try:
-        a = keys.select(F.col("band"), F.col("band_key"), F.col(id_col).alias("id_a"))
-        b = keys.select(F.col("band"), F.col("band_key"), F.col(id_col).alias("id_b"))
+        a = keys.select(F.col("band"), F.col("band_key"),
+                        F.col("doc_id").alias("id_a"))
+        b = keys.select(F.col("band"), F.col("band_key"),
+                        F.col("doc_id").alias("id_b"))
         pairs = (
             a.join(b, ["band", "band_key"])
             .filter(F.col("id_a") < F.col("id_b"))
@@ -230,8 +227,6 @@ def minhash_candidate_pairs(docs: DataFrame, text_col: str = "text",
 
 
 def incremental_candidate_pairs(new_docs: DataFrame, index_keys: DataFrame,
-                                text_col: str = "text",
-                                id_col: str = "doc_id",
                                 n_hashes: int = DEFAULT_MINHASH_SEEDS,
                                 bands: int = DEFAULT_BANDS,
                                 shingle_size: int = 3) -> DataFrame:
@@ -244,7 +239,7 @@ def incremental_candidate_pairs(new_docs: DataFrame, index_keys: DataFrame,
     md5-shingling for its OWN documents only and one equi-join on
     (band, band_key).
 
-    ``index_keys`` must have columns (``id_col``, band, band_key) —
+    ``index_keys`` must have columns (``doc_id``, band, band_key) —
     exactly :func:`minhash_band_keys` output, live or read back from
     storage.  Returns distinct (new_id, indexed_id) candidate pairs; a
     new doc also present in the index matches itself, so callers
@@ -256,20 +251,17 @@ def incremental_candidate_pairs(new_docs: DataFrame, index_keys: DataFrame,
     table on band_key prepays even that — plans/bucketing.py), and AQE
     splits any hot bucket.
     """
-    new_keys = minhash_band_keys(new_docs, text_col, id_col,
-                                 n_hashes, bands, shingle_size)
+    new_keys = minhash_band_keys(new_docs, n_hashes, bands, shingle_size)
     nk = new_keys.select(F.col("band"), F.col("band_key"),
-                         F.col(id_col).alias("new_id"))
+                         F.col("doc_id").alias("new_id"))
     idx = index_keys.select(F.col("band"), F.col("band_key"),
-                            F.col(id_col).alias("indexed_id"))
+                            F.col("doc_id").alias("indexed_id"))
     return (nk.join(idx, ["band", "band_key"])
             .select("new_id", "indexed_id")
             .distinct())
 
 
-def jaccard_pairs(docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id",
-                  block_keys: list[str] | None = None,
+def jaccard_pairs(docs: DataFrame, block_keys: list[str] | None = None,
                   threshold: float = 0.8, shingle_size: int = 3,
                   allow_quadratic: bool = False) -> DataFrame:
     """Token-set Jaccard similarity join within blocking buckets.
@@ -288,13 +280,15 @@ def jaccard_pairs(docs: DataFrame, text_col: str = "text",
             "jaccard_pairs without block_keys is an O(N^2) cross join; "
             "pass block_keys (the scalable path) or opt in explicitly "
             "with allow_quadratic=True on a small sample")
-    toks = T.shingle_set(F.col(text_col), shingle_size)
-    base_cols = [F.col(id_col), toks.alias("tok_set")]
+    toks = T.shingle_set(F.col("text"), shingle_size)
+    base_cols = [F.col("doc_id"), toks.alias("tok_set")]
     base_cols += [F.col(k) for k in (block_keys or [])]
     t = docs.select(*base_cols)
-    a = t.select([F.col(id_col).alias("id_a"), F.col("tok_set").alias("tok_a")]
+    a = t.select([F.col("doc_id").alias("id_a"),
+                  F.col("tok_set").alias("tok_a")]
                  + [F.col(k) for k in (block_keys or [])])
-    b = t.select([F.col(id_col).alias("id_b"), F.col("tok_set").alias("tok_b")]
+    b = t.select([F.col("doc_id").alias("id_b"),
+                  F.col("tok_set").alias("tok_b")]
                  + [F.col(k) for k in (block_keys or [])])
     joined = a.join(b, block_keys) if block_keys else a.crossJoin(b)
     inter = F.size(F.array_intersect(F.col("tok_a"), F.col("tok_b")))
@@ -307,9 +301,7 @@ def jaccard_pairs(docs: DataFrame, text_col: str = "text",
     )
 
 
-def deduplicate_corpus(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id",
-                       jaccard_threshold: float = 0.8,
+def deduplicate_corpus(docs: DataFrame, jaccard_threshold: float = 0.8,
                        n_hashes: int = DEFAULT_MINHASH_SEEDS,
                        bands: int = DEFAULT_BANDS,
                        shingle_size: int = 3,
@@ -326,15 +318,14 @@ def deduplicate_corpus(docs: DataFrame, text_col: str = "text",
     Scale: the anti-join key is just the id column; the expensive
     verification runs only on band-collision pairs, never O(N^2).
     """
-    verified = verified_near_pairs(docs, text_col, id_col, jaccard_threshold,
+    verified = verified_near_pairs(docs, jaccard_threshold,
                                    n_hashes, bands, shingle_size,
                                    checkpoint_dir=checkpoint_dir)
-    losers = verified.select(F.col("id_b").alias(id_col)).distinct()
-    return docs.join(losers, id_col, "left_anti")
+    losers = verified.select(F.col("id_b").alias("doc_id")).distinct()
+    return docs.join(losers, "doc_id", "left_anti")
 
 
-def minhash_estimate_pairs(docs: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id",
+def minhash_estimate_pairs(docs: DataFrame,
                            n_hashes: int = DEFAULT_MINHASH_SEEDS,
                            bands: int = DEFAULT_BANDS,
                            shingle_size: int = 3) -> DataFrame:
@@ -358,18 +349,17 @@ def minhash_estimate_pairs(docs: DataFrame, text_col: str = "text",
     one per side (at cluster scale this is the signatures table written
     once and joined twice, cf. ``minhash_candidate_pairs``); pinned by
     the exactly-one-md5 plan test."""
-    pairs = minhash_candidate_pairs(docs, text_col, id_col, n_hashes,
-                                    bands, shingle_size)
-    sh = docs.select(F.col(id_col),
-                     T.shingle_set(F.col(text_col), shingle_size)
+    pairs = minhash_candidate_pairs(docs, n_hashes, bands, shingle_size)
+    sh = docs.select(F.col("doc_id"),
+                     T.shingle_set(F.col("text"), shingle_size)
                      .alias("shset"))
     side = sh.select(
-        id_col, "shset",
+        "doc_id", "shset",
         H.minhash_int_array(F.col("shset"),
                             H.MINHASH_SEEDS[:n_hashes]).alias("sig")).persist()
-    a = side.select(F.col(id_col).alias("id_a"),
+    a = side.select(F.col("doc_id").alias("id_a"),
                     F.col("shset").alias("sh_a"), F.col("sig").alias("sig_a"))
-    b = side.select(F.col(id_col).alias("id_b"),
+    b = side.select(F.col("doc_id").alias("id_b"),
                     F.col("shset").alias("sh_b"), F.col("sig").alias("sig_b"))
     scored = (pairs.join(a, "id_a").join(b, "id_b")
               .withColumn("n_agree", F.expr(
@@ -386,9 +376,7 @@ def minhash_estimate_pairs(docs: DataFrame, text_col: str = "text",
         .alias("jaccard_micro"))
 
 
-def verified_near_pairs(docs: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id",
-                        jaccard_threshold: float = 0.8,
+def verified_near_pairs(docs: DataFrame, jaccard_threshold: float = 0.8,
                         n_hashes: int = DEFAULT_MINHASH_SEEDS,
                         bands: int = DEFAULT_BANDS,
                         shingle_size: int = 3,
@@ -396,12 +384,14 @@ def verified_near_pairs(docs: DataFrame, text_col: str = "text",
     """LSH candidate pairs whose exact shingle Jaccard clears the
     threshold — (id_a, id_b) with id_a < id_b.  Shared by the greedy and
     connected-components dedup policies."""
-    cand = minhash_candidate_pairs(docs, text_col, id_col, n_hashes, bands,
+    cand = minhash_candidate_pairs(docs, n_hashes, bands,
                                    shingle_size, checkpoint_dir=checkpoint_dir)
-    toks = T.shingle_set(F.col(text_col), shingle_size)
-    t = docs.select(F.col(id_col), toks.alias("tok_set"))
-    a = t.select(F.col(id_col).alias("id_a"), F.col("tok_set").alias("tok_a"))
-    b = t.select(F.col(id_col).alias("id_b"), F.col("tok_set").alias("tok_b"))
+    toks = T.shingle_set(F.col("text"), shingle_size)
+    t = docs.select(F.col("doc_id"), toks.alias("tok_set"))
+    a = t.select(F.col("doc_id").alias("id_a"),
+                 F.col("tok_set").alias("tok_a"))
+    b = t.select(F.col("doc_id").alias("id_b"),
+                 F.col("tok_set").alias("tok_b"))
     inter = F.size(F.array_intersect(F.col("tok_a"), F.col("tok_b")))
     union = F.size(F.array_union(F.col("tok_a"), F.col("tok_b")))
     jac = F.round(inter.cast("double") / union.cast("double"), 6)
@@ -410,9 +400,7 @@ def verified_near_pairs(docs: DataFrame, text_col: str = "text",
             .select("id_a", "id_b"))
 
 
-def deduplicate_corpus_cc(docs: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id",
-                          jaccard_threshold: float = 0.8,
+def deduplicate_corpus_cc(docs: DataFrame, jaccard_threshold: float = 0.8,
                           n_hashes: int = DEFAULT_MINHASH_SEEDS,
                           bands: int = DEFAULT_BANDS,
                           shingle_size: int = 3,
@@ -437,17 +425,16 @@ def deduplicate_corpus_cc(docs: DataFrame, text_col: str = "text",
     kill a 100 TB dedup mid-loop and each round's label table survives
     for inspection/resume.
     """
-    labels = _cc_labels(docs, text_col, id_col, jaccard_threshold,
+    labels = _cc_labels(docs, jaccard_threshold,
                         n_hashes, bands, shingle_size, max_iter,
                         checkpoint_dir)
     keepers = labels.filter(F.col("label") == F.col("node")) \
-                    .select(F.col("node").alias(id_col))
-    return docs.join(keepers, id_col, "left_semi")
+                    .select(F.col("node").alias("doc_id"))
+    return docs.join(keepers, "doc_id", "left_semi")
 
 
-def _cc_labels(docs: DataFrame, text_col: str, id_col: str,
-               jaccard_threshold: float, n_hashes: int, bands: int,
-               shingle_size: int, max_iter: int,
+def _cc_labels(docs: DataFrame, jaccard_threshold: float, n_hashes: int,
+               bands: int, shingle_size: int, max_iter: int,
                checkpoint_dir: str | None) -> DataFrame:
     """(node, label) — every doc id labelled with the minimum id of its
     near-dup connected component (the label loop shared by the keep-min
@@ -456,18 +443,16 @@ def _cc_labels(docs: DataFrame, text_col: str, id_col: str,
     wrapper only supplies the near-dup pair edges."""
     from .linkgraph import connected_components  # local: linkgraph imports us
 
-    pairs = verified_near_pairs(docs, text_col, id_col, jaccard_threshold,
+    pairs = verified_near_pairs(docs, jaccard_threshold,
                                 n_hashes, bands, shingle_size,
                                 checkpoint_dir=checkpoint_dir)
     return connected_components(
-        docs.select(F.col(id_col).alias("node")),
+        docs.select(F.col("doc_id").alias("node")),
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
         id_col="node", max_iter=max_iter, checkpoint_dir=checkpoint_dir)
 
 
-def cc_cluster_sizes(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id",
-                     jaccard_threshold: float = 0.8,
+def cc_cluster_sizes(docs: DataFrame, jaccard_threshold: float = 0.8,
                      n_hashes: int = DEFAULT_MINHASH_SEEDS,
                      bands: int = DEFAULT_BANDS,
                      shingle_size: int = 3,
@@ -483,7 +468,7 @@ def cc_cluster_sizes(docs: DataFrame, text_col: str = "text",
     top of the CC label loop is two tiny aggregates — sizes per label
     (shuffle on the label key, map-side combined), then the histogram
     over the (≤ distinct-size) size table."""
-    labels = _cc_labels(docs, text_col, id_col, jaccard_threshold,
+    labels = _cc_labels(docs, jaccard_threshold,
                         n_hashes, bands, shingle_size, max_iter,
                         checkpoint_dir)
     sizes = labels.groupBy("label").agg(
@@ -494,8 +479,6 @@ def cc_cluster_sizes(docs: DataFrame, text_col: str = "text",
 
 
 def deduplicate_corpus_cc_best(docs: DataFrame, score_col: str,
-                               text_col: str = "text",
-                               id_col: str = "doc_id",
                                jaccard_threshold: float = 0.8,
                                n_hashes: int = DEFAULT_MINHASH_SEEDS,
                                bands: int = DEFAULT_BANDS,
@@ -523,23 +506,21 @@ def deduplicate_corpus_cc_best(docs: DataFrame, score_col: str,
     """
     from pyspark.sql import Window
 
-    labels = _cc_labels(docs, text_col, id_col, jaccard_threshold,
+    labels = _cc_labels(docs, jaccard_threshold,
                         n_hashes, bands, shingle_size, max_iter,
                         checkpoint_dir)
     scored = labels.join(
-        docs.select(F.col(id_col).alias("node"),
+        docs.select(F.col("doc_id").alias("node"),
                     F.col(score_col).alias("_score")), "node")
     w = Window.partitionBy("label").orderBy(F.col("_score").desc(),
                                             F.col("node").asc())
     winners = (scored.withColumn("_rn", F.row_number().over(w))
                .filter(F.col("_rn") == 1)
-               .select(F.col("node").alias(id_col)))
-    return docs.join(winners, id_col, "left_semi")
+               .select(F.col("node").alias("doc_id")))
+    return docs.join(winners, "doc_id", "left_semi")
 
 
-def simhash_signatures(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id",
-                       bits: int = SIMHASH_BITS,
+def simhash_signatures(docs: DataFrame, bits: int = SIMHASH_BITS,
                        shingle_size: int = 3,
                        lane_cap: int = SIMHASH_LANE_CAP) -> DataFrame:
     """Per-document 64-bit SimHash signature (Charikar 2002): for each bit
@@ -571,8 +552,8 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text",
     # is a real barrier — without it, `size(transform(toks, md5...))`
     # in the guard re-ran the full md5 transform per reference (3x per
     # row; measured ~8x wall on sf0.1).
-    tok_df = docs.select(F.col(id_col),
-                         T.shingle_set(F.col(text_col), shingle_size)
+    tok_df = docs.select(F.col("doc_id"),
+                         T.shingle_set(F.col("text"), shingle_size)
                          .alias("toks"))
     # ONE md5 per shingle: the inner transform materializes the hex array
     # per row, the outer slices it twice — HOF lambdas get no CSE, so
@@ -594,13 +575,13 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text",
         n_toks > lane_cap,
         F.raise_error(F.concat(
             F.lit("simhash_signatures: document "),
-            F.col(id_col).cast("string"),
+            F.col("doc_id").cast("string"),
             F.lit(" has "), n_toks.cast("string"),
             F.lit(f" distinct shingles > lane cap {lane_cap}; "
                   "chunk oversized documents upstream "
                   "(operators/chunking.py) before SimHash"))).cast("int"),
     ).otherwise(n_toks)
-    base = tok_df.select(F.col(id_col), hashed.alias("hv"),
+    base = tok_df.select(F.col("doc_id"), hashed.alias("hv"),
                          n_guarded.alias("n"))
     # Fully NARROW per-row form — no explode, no groupBy, zero shuffle —
     # via SWAR lane-spread popcounting: reassemble the 64-bit hash
@@ -627,7 +608,7 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text",
             .bitwiseAND(F.lit(lane_mask)))
 
     lanes = base.select(
-        F.col(id_col), F.col("n"),
+        F.col("doc_id"), F.col("n"),
         *[_lane_sum(k).alias(f"s{k}") for k in range(16)])
 
     def _cnt(j: int) -> F.Column:
@@ -643,7 +624,7 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text",
     for j in range(32, 64):
         sig_hi = sig_hi + F.when(_cnt(j) * 2 > F.col("n"),
                                  F.lit(2 ** (j - 32))).otherwise(F.lit(0))
-    return lanes.select(F.col(id_col), sig_hi.alias("sig_hi"),
+    return lanes.select(F.col("doc_id"), sig_hi.alias("sig_hi"),
                         sig_lo.alias("sig_lo"))
 
 
@@ -675,9 +656,7 @@ def embedding_near_pairs(embs: DataFrame, id_col: str = "vec_id",
     )
 
 
-def simhash_near_pairs(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id",
-                       max_hamming: int = SIMHASH_BANDS - 1,
+def simhash_near_pairs(docs: DataFrame, max_hamming: int = SIMHASH_BANDS - 1,
                        shingle_size: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance <= max_hamming.
 
@@ -692,9 +671,8 @@ def simhash_near_pairs(docs: DataFrame, text_col: str = "text",
     AQE splits any hot block.  Exact distance is then verified via
     bit_count on the XOR of both halves.
     """
-    sigs = simhash_signatures(docs, text_col, id_col,
-                              shingle_size=shingle_size)
-    return simhash_pairs_from_signatures(sigs, id_col, max_hamming)
+    sigs = simhash_signatures(docs, shingle_size=shingle_size)
+    return simhash_pairs_from_signatures(sigs, max_hamming=max_hamming)
 
 
 def simhash_pairs_from_signatures(sigs: DataFrame, id_col: str = "doc_id",
@@ -743,8 +721,7 @@ def simhash_pairs_from_signatures(sigs: DataFrame, id_col: str = "doc_id",
     return out
 
 
-def containment_pairs(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", shingle_size: int = 5,
+def containment_pairs(docs: DataFrame, shingle_size: int = 5,
                       df_cap: int = 16,
                       min_containment_micro: int = 500_000) -> DataFrame:
     """Asymmetric-containment candidate pairs — quote/subset detection
@@ -777,11 +754,11 @@ def containment_pairs(docs: DataFrame, text_col: str = "text",
         raise ValueError("df_cap must be >= 2 (a pair needs two docs)")
     from pyspark.sql import Window
 
-    hs = F.transform(T.shingle_set(F.col(text_col), shingle_size),
+    hs = F.transform(T.shingle_set(F.col("text"), shingle_size),
                      lambda s: F.substring(F.md5(s), 1, 16))
-    layer = docs.select(F.col(id_col), hs.alias("_hs"))
-    sized = layer.select(id_col, "_hs", F.size("_hs").alias("_n_sh"))
-    exploded = (sized.select(id_col, "_n_sh",
+    layer = docs.select(F.col("doc_id"), hs.alias("_hs"))
+    sized = layer.select("doc_id", "_hs", F.size("_hs").alias("_n_sh"))
+    exploded = (sized.select("doc_id", "_n_sh",
                              F.explode_outer("_hs").alias("_h"))
                 .filter(F.col("_h").isNotNull()))
     # df-cap BEFORE any posting list materializes: the per-shingle doc
@@ -795,7 +772,7 @@ def containment_pairs(docs: DataFrame, text_col: str = "text",
     capped = (exploded.withColumn("_df", dfw)
               .filter((F.col("_df") >= 2) & (F.col("_df") <= df_cap)))
     posts = (capped.groupBy("_h")
-             .agg(F.collect_list(F.struct(F.col(id_col).alias("i"),
+             .agg(F.collect_list(F.struct(F.col("doc_id").alias("i"),
                                           F.col("_n_sh").alias("n"))).alias("_ds")))
     # project the sorted posting list ONCE (struct sort: id first, so
     # generated pairs come out id_a < id_b); deriving from the column
@@ -823,8 +800,7 @@ def containment_pairs(docs: DataFrame, text_col: str = "text",
                     >= min_containment_micro))
 
 
-def winnow_overlap_pairs(docs: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id", k: int = 3, w: int = 4,
+def winnow_overlap_pairs(docs: DataFrame, k: int = 3, w: int = 4,
                          df_cap: int = 16,
                          min_shared: int = 2) -> DataFrame:
     """Winnow-pruned overlap candidate pairs — the MOSS corpus
@@ -853,11 +829,11 @@ def winnow_overlap_pairs(docs: DataFrame, text_col: str = "text",
         raise ValueError(f"min_shared must be >= 1; got {min_shared}")
     from . import textanalysis as TA
     frame = TA.winnow_selection_frame(
-        TA.winnow_hash_frame(docs, text_col, id_col, k), w, id_col=id_col)
+        TA.winnow_hash_frame(docs, k), w)
     hs = F.array_distinct(F.transform(F.col("_sel"),
                                       lambda s: s["gram_hash"]))
-    sel = frame.select(id_col, hs.alias("_selh"))
-    exploded = (sel.select(id_col, F.explode_outer("_selh").alias("_gh"))
+    sel = frame.select("doc_id", hs.alias("_selh"))
+    exploded = (sel.select("doc_id", F.explode_outer("_selh").alias("_gh"))
                 .filter(F.col("_gh").isNotNull()))
     # df-cap via a spillable whole-partition window count BEFORE the
     # posting list materializes (same hazard + fix as
@@ -870,7 +846,7 @@ def winnow_overlap_pairs(docs: DataFrame, text_col: str = "text",
     capped = (exploded.withColumn("_df", dfw)
               .filter((F.col("_df") >= 2) & (F.col("_df") <= df_cap)))
     posts = (capped.groupBy("_gh")
-             .agg(F.collect_list(F.col(id_col)).alias("_ids")))
+             .agg(F.collect_list(F.col("doc_id")).alias("_ids")))
     sorted_posts = posts.select(F.array_sort("_ids").alias("_ids"))
     ids = F.col("_ids")
     n = F.size(ids)
@@ -887,8 +863,7 @@ def winnow_overlap_pairs(docs: DataFrame, text_col: str = "text",
             .filter(F.col("n_shared") >= min_shared))
 
 
-def deduplicate_corpus_winnow(docs: DataFrame, text_col: str = "text",
-                              id_col: str = "doc_id", k: int = 3,
+def deduplicate_corpus_winnow(docs: DataFrame, k: int = 3,
                               w: int = 4, df_cap: int = 16,
                               min_shared: int = 2, max_iter: int = 50,
                               checkpoint_dir: str | None = None
@@ -905,13 +880,12 @@ def deduplicate_corpus_winnow(docs: DataFrame, text_col: str = "text",
     """
     from .linkgraph import connected_components  # local: linkgraph imports us
 
-    pairs = winnow_overlap_pairs(docs, text_col, id_col, k, w,
-                                 df_cap, min_shared)
+    pairs = winnow_overlap_pairs(docs, k, w, df_cap, min_shared)
     labels = connected_components(
-        docs.select(F.col(id_col).alias("node")),
+        docs.select(F.col("doc_id").alias("node")),
         pairs.select(F.col("id_a").alias("src"),
                      F.col("id_b").alias("dst")),
         id_col="node", max_iter=max_iter, checkpoint_dir=checkpoint_dir)
     keepers = labels.filter(F.col("label") == F.col("node")) \
-                    .select(F.col("node").alias(id_col))
-    return docs.join(keepers, id_col, "left_semi")
+                    .select(F.col("node").alias("doc_id"))
+    return docs.join(keepers, "doc_id", "left_semi")

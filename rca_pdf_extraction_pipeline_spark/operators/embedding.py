@@ -79,11 +79,10 @@ def hashed_vector(text: Column, dim: int = DEFAULT_DIM,
 
 
 def embed_documents(docs: DataFrame, dim: int = DEFAULT_DIM,
-                    text_col: str = "text", id_col: str = "doc_id",
                     normalize: bool = True) -> DataFrame:
-    """(id, embedding array<double|bigint>): hashing-trick document
-    embeddings, ready for ``similarity.cosine_topk`` / ``semantic_dedup``
-    / ``dedup.embedding_near_pairs`` (pass ``id_col=<this id>``)."""
+    """(doc_id, embedding array<double|bigint>): hashing-trick document
+    embeddings, ready for ``similarity.cosine_topk`` and
+    ``dedup.embedding_near_pairs`` (pass ``id_col="doc_id"``)."""
     return docs.select(
-        F.col(id_col),
-        hashed_vector(F.col(text_col), dim, normalize).alias("embedding"))
+        F.col("doc_id"),
+        hashed_vector(F.col("text"), dim, normalize).alias("embedding"))

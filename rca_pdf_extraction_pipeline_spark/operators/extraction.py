@@ -407,8 +407,11 @@ def classify_documents(docs: DataFrame) -> DataFrame:
     return map_flat_batches(docs, CLASSIFICATION_SCHEMA, classify_flat)
 
 
-def classify_documents_structural(docs: DataFrame, page_width: float = 612.0,
-                                  page_height: float = 792.0) -> DataFrame:
+#: US Letter in PDF points (612 x 792): the page the C2 cascade assumes
+PAGE_AREA = 612.0 * 792.0
+
+
+def classify_documents_structural(docs: DataFrame) -> DataFrame:
     """C2 structural classifier over span geometry (reference
     src/page_classifier.py:51-125 — the legacy pipeline's classifier):
     per page, horizontal/vertical line counts (F6 predicates), text
@@ -416,11 +419,12 @@ def classify_documents_structural(docs: DataFrame, page_width: float = 612.0,
     regularity (A7) feed the structural cascade.
 
     Page dimensions are not carried in the span model (the reference
-    reads them from the PDF page object); they default to US Letter.
+    reads them from the PDF page object); they are fixed to US Letter,
+    ``PAGE_AREA``.
     """
 
     def classify(flat: pd.DataFrame) -> pd.DataFrame:
-        stats = _structural_stats(flat, page_width, page_height)
+        stats = _structural_stats(flat)
         cls = kclassify.classify_pages_structural(stats)
         return stats[["doc_pos", "page"]].assign(
             page_type=cls["page_type"].to_numpy(),
@@ -431,8 +435,7 @@ def classify_documents_structural(docs: DataFrame, page_width: float = 612.0,
         classify)
 
 
-def _structural_stats(flat: pd.DataFrame, page_width: float,
-                      page_height: float) -> pd.DataFrame:
+def _structural_stats(flat: pd.DataFrame) -> pd.DataFrame:
     """Per-(doc_pos, page) geometry aggregates for the C2 cascade."""
     is_line = flat["kind"] == "line"
     dy = (flat["y1"] - flat["y0"]).abs()
@@ -451,7 +454,7 @@ def _structural_stats(flat: pd.DataFrame, page_width: float,
     stats = g.agg(h_lines=("_h", "sum"), v_lines=("_v", "sum"),
                   text_blocks=("_tb", "sum"), char_count=("_chars", "sum"),
                   img_area=("_img_area", "sum")).reset_index()
-    stats["image_coverage"] = stats["img_area"] / (page_width * page_height)
+    stats["image_coverage"] = stats["img_area"] / PAGE_AREA
     stats["page_number"] = stats["page"]
 
     # A7 gap regularity over each page's horizontal-line y positions —

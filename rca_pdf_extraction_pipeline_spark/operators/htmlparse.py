@@ -171,8 +171,7 @@ def _block_spans(b: Column) -> Column:
 # operators
 # ---------------------------------------------------------------------------
 
-def parse_blocks(docs: DataFrame, html_col: str = "html",
-                 id_col: str = "doc_id") -> DataFrame:
+def parse_blocks(docs: DataFrame) -> DataFrame:
     """Markup -> ``(doc_id, idx, tag, text, anchor_chars)``, one row per
     DOM block in document order (``idx`` 0-based, computed from the
     markup).  Output feeds ``boilerplate.score_blocks`` /
@@ -181,21 +180,20 @@ def parse_blocks(docs: DataFrame, html_col: str = "html",
     Plan: one narrow Project (the block array layer) + one Generate —
     no Exchange, no EvalPython (pinned).
     """
-    layer = docs.select(F.col(id_col),
-                        _block_array(F.col(html_col)).alias("_blocks"))
+    layer = docs.select(F.col("doc_id"),
+                        _block_array(F.col("html")).alias("_blocks"))
     # explode_outer + generated-column filter: plain explode's inferred
     # pre-Generate filter re-evaluates the block synthesis per row
     # (CLAUDE.md r5 trap)
-    return (layer.select(id_col, F.posexplode_outer("_blocks")
+    return (layer.select("doc_id", F.posexplode_outer("_blocks")
                          .alias("idx", "b"))
             .filter(F.col("b").isNotNull())
-            .select(id_col, "idx", F.col("b.tag").alias("tag"),
+            .select("doc_id", "idx", F.col("b.tag").alias("tag"),
                     F.col("b.text").alias("text"),
                     F.col("b.anchor_chars").alias("anchor_chars")))
 
 
-def parse_meta(docs: DataFrame, html_col: str = "html",
-               id_col: str = "doc_id") -> DataFrame:
+def parse_meta(docs: DataFrame) -> DataFrame:
     """Page-metadata census over raw markup: ``(doc_id, title, h1,
     n_links, has_img, first_img)`` — the ``<head>``/landmark summary a
     crawler-side extraction records per page (title tag, first heading,
@@ -209,9 +207,9 @@ def parse_meta(docs: DataFrame, html_col: str = "html",
     synthesis ARITHMETIC (never re-parses), so it checks the parser
     independently, like ``html_table_cells``.
     """
-    h = F.col(html_col)
+    h = F.col("html")
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.regexp_extract(h, r"<title>(.*?)</title>", 1).alias("title"),
         F.regexp_extract(h, r"<h1>(.*?)</h1>", 1).alias("h1"),
         F.size(F.regexp_extract_all(h, F.lit('<a href="'), 0))
@@ -223,8 +221,7 @@ def parse_meta(docs: DataFrame, html_col: str = "html",
     )
 
 
-def to_spans(docs: DataFrame, html_col: str = "html",
-             id_col: str = "doc_id", content_only: bool = False) -> DataFrame:
+def to_spans(docs: DataFrame, content_only: bool = False) -> DataFrame:
     """Markup -> interleaved spans ``(doc_id, spans:array<struct<kind,
     text, media_ref, offset>>)`` — the engine's input_hint shape; the
     interleaved family (caption_pairs, pack_interleaved, span_diff,
@@ -234,28 +231,26 @@ def to_spans(docs: DataFrame, html_col: str = "html",
     scoring + neighbour smoothing, computed IN-ARRAY per document) —
     raw-markup main-content extraction as one shuffle-free map.
     """
-    layer = docs.select(F.col(id_col),
-                        _block_array(F.col(html_col)).alias("_blocks"))
+    layer = docs.select(F.col("doc_id"),
+                        _block_array(F.col("html")).alias("_blocks"))
     blocks = F.col("_blocks")
     if content_only:
-        layer = layer.select(id_col, "_blocks",
+        layer = layer.select("doc_id", "_blocks",
                              F.transform(blocks, _base_flag).alias("_flags"))
         blocks = _content_blocks(F.col("_blocks"), F.col("_flags"))
 
     flat = F.flatten(F.transform(blocks, _block_spans))
-    layer = layer.select(id_col, flat.alias("_spans"))
+    layer = layer.select("doc_id", flat.alias("_spans"))
     spans = F.transform(
         F.col("_spans"),
         lambda s, i: F.struct(s["kind"].alias("kind"),
                               s["text"].alias("text"),
                               s["media_ref"].alias("media_ref"),
                               i.cast("int").alias("offset")))
-    return layer.select(id_col, spans.alias("spans"))
+    return layer.select("doc_id", spans.alias("spans"))
 
 
-def extract_links(docs: DataFrame, html_col: str = "html",
-                  id_col: str = "doc_id",
-                  base_col: str | None = None) -> DataFrame:
+def extract_links(docs: DataFrame, base_col: str | None = None) -> DataFrame:
     """Markup -> ``(doc_id, href, url)`` anchor edges in document
     order.  ``href`` is the raw attribute; ``url`` resolves root-
     relative hrefs (``/path``) against ``base_col`` (the document's
@@ -267,24 +262,22 @@ def extract_links(docs: DataFrame, html_col: str = "html",
     ``operators/linkgraph.py`` (the extracted-anchor link graph).
     One Generate, no Exchange.
     """
-    cols = [F.col(id_col)]
     base = F.col(base_col) if base_col else F.lit(None).cast("string")
     layer = docs.select(
-        *cols, base.alias("_base"),
-        F.regexp_extract_all(F.col(html_col), F.lit(_HREF_RE), 1)
+        "doc_id", base.alias("_base"),
+        F.regexp_extract_all(F.col("html"), F.lit(_HREF_RE), 1)
         .alias("_hrefs"))
-    out = (layer.select(id_col, "_base",
+    out = (layer.select("doc_id", "_base",
                         F.explode_outer("_hrefs").alias("href"))
            .filter(F.col("href").isNotNull()))
     url = (F.when(F.col("href").startswith("/"),
                   F.concat(F.col("_base"), F.col("href")))
            .when(F.col("href").startswith("http"), F.col("href"))
            .otherwise(F.lit(None).cast("string")))
-    return out.select(id_col, "href", url.alias("url"))
+    return out.select("doc_id", "href", url.alias("url"))
 
 
-def section_outline(docs: DataFrame, html_col: str = "html",
-                    id_col: str = "doc_id",
+def section_outline(docs: DataFrame,
                     heading_tags: tuple[str, ...] = ("h1",)) -> DataFrame:
     """Markup -> ``(doc_id, idx, tag, text, section)``: every DOM block
     labelled with the text of its nearest PRECEDING heading block — the
@@ -313,19 +306,18 @@ def section_outline(docs: DataFrame, html_col: str = "html",
         return F.struct(h.alias("h"),
                         F.concat(acc["acc"], F.array(row)).alias("acc"))
 
-    folded = F.aggregate(_block_array(F.col(html_col)), zero, _step,
+    folded = F.aggregate(_block_array(F.col("html")), zero, _step,
                          lambda a: a["acc"])
-    layer = docs.select(F.col(id_col), folded.alias("_out"))
-    return (layer.select(id_col,
+    layer = docs.select(F.col("doc_id"), folded.alias("_out"))
+    return (layer.select("doc_id",
                          F.posexplode_outer("_out").alias("idx", "b"))
             .filter(F.col("b").isNotNull())
-            .select(id_col, "idx", F.col("b.tag").alias("tag"),
+            .select("doc_id", "idx", F.col("b.tag").alias("tag"),
                     F.col("b.text").alias("text"),
                     F.col("b.section").alias("section")))
 
 
-def parse_tables(docs: DataFrame, html_col: str = "html",
-                 id_col: str = "doc_id") -> DataFrame:
+def parse_tables(docs: DataFrame) -> DataFrame:
     """Markup -> ``(doc_id, table_idx, row_idx, col_idx, cell)``, one
     row per ``<td>`` cell, all three indices 0-based and computed from
     the markup — the web-corpus analogue of the reference's PDF
@@ -341,7 +333,7 @@ def parse_tables(docs: DataFrame, html_col: str = "html",
     higher-order transforms carrying (table, row, col) indices), so the
     plan is one narrow Project + one Generate — no Exchange.
     """
-    html = F.col(html_col)
+    html = F.col("html")
     marked = F.regexp_replace(html, "<table>", _SENT_BLK)
     marked = F.regexp_replace(marked, "<tr>", _SENT_ROW)
     marked = F.regexp_replace(marked, "<td>", _SENT_CELL)
@@ -361,11 +353,11 @@ def parse_tables(docs: DataFrame, html_col: str = "html",
         return F.flatten(F.transform(_tail(F.split(t, _SENT_ROW)), _row))
 
     cells = F.flatten(F.transform(_tail(F.split(marked, _SENT_BLK)), _table))
-    layer = docs.select(F.col(id_col), cells.alias("_cells"))
+    layer = docs.select(F.col("doc_id"), cells.alias("_cells"))
     # explode_outer + post-filter: the r5 nullable-explode trap
-    return (layer.select(id_col, F.explode_outer("_cells").alias("c"))
+    return (layer.select("doc_id", F.explode_outer("_cells").alias("c"))
             .filter(F.col("c").isNotNull())
-            .select(id_col, "c.table_idx", "c.row_idx", "c.col_idx",
+            .select("doc_id", "c.table_idx", "c.row_idx", "c.col_idx",
                     "c.cell"))
 
 
@@ -373,8 +365,7 @@ def parse_tables(docs: DataFrame, html_col: str = "html",
 # deterministic markup lift (dialect-shared synthesis)
 # ---------------------------------------------------------------------------
 
-def synth_html(docs: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
+def synth_html(docs: DataFrame) -> DataFrame:
     """``(doc_id, site, html)`` — deterministic markup lift of the flat
     corpus, replayed verbatim in the DuckDB oracles.
 
@@ -386,22 +377,22 @@ def synth_html(docs: DataFrame, id_col: str = "doc_id",
     cross-site anchor + footer.  ``site`` is the document's origin
     ``https://site-<id%7>.example.com`` (7 synthetic hosts).
     """
-    did = F.col(id_col).cast("string")
+    did = F.col("doc_id").cast("string")
     s = F.regexp_replace(
-        F.regexp_replace(F.coalesce(F.col(text_col), F.lit("")), "<", "("),
+        F.regexp_replace(F.coalesce(F.col("text"), F.lit("")), "<", "("),
         ">", ")")
-    sid = (F.col(id_col) % 7).cast("string")
+    sid = (F.col("doc_id") % 7).cast("string")
     site = F.concat(F.lit("https://site-"), sid, F.lit(".example.com"))
     p1a = F.trim(F.substring(s, 1, 40))
     p1b = F.trim(F.substring(s, 41, 40))
     p2 = F.trim(F.substring(s, 81, 1000000))
-    img = F.when(F.col(id_col) % 2 == 0,
+    img = F.when(F.col("doc_id") % 2 == 0,
                  F.concat(F.lit('<img src="img-'), did, F.lit('.png">'))
                  ).otherwise(F.lit(""))
     see = F.concat(F.lit("https://site-"),
-                   ((F.col(id_col) + 3) % 7).cast("string"),
+                   ((F.col("doc_id") + 3) % 7).cast("string"),
                    F.lit(".example.com/d"),
-                   (F.col(id_col) % 50).cast("string"))
+                   (F.col("doc_id") % 50).cast("string"))
     p2_block = F.when(
         F.length(p2) > 0,
         F.concat(F.lit("<p>"), p2, F.lit(' <a href="'), see,
@@ -416,10 +407,10 @@ def synth_html(docs: DataFrame, id_col: str = "doc_id",
         p2_block,
         F.lit("<footer>copyright site-"), sid,
         F.lit("</footer></body></html>"))
-    return docs.select(F.col(id_col), site.alias("site"), html.alias("html"))
+    return docs.select(F.col("doc_id"), site.alias("site"), html.alias("html"))
 
 
-def synth_tables(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_tables(docs: DataFrame) -> DataFrame:
     """``(doc_id, html)`` — deterministic TABLE markup lift: doc ``id``
     carries ``1 + id % 2`` tables; table ``t`` is a ``(2 + (id+t) % 3)``
     x ``(2 + (id+t) % 2)`` grid; cell ``(t, r, c)`` holds
@@ -429,7 +420,7 @@ def synth_tables(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     the arithmetic directly (generate_series), so the query checks the
     sentinel parser against an independent computation.
     """
-    did = F.col(id_col)
+    did = F.col("doc_id")
 
     def _table(t: Column) -> Column:
         def _row(r: Column) -> Column:
@@ -456,4 +447,4 @@ def synth_tables(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         F.lit("<html><body><h1>Tables "), did.cast("string"),
         F.lit("</h1>"), tables,
         F.lit("<footer>generated</footer></body></html>"))
-    return docs.select(F.col(id_col), html.alias("html"))
+    return docs.select(F.col("doc_id"), html.alias("html"))

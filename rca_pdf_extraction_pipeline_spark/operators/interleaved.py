@@ -58,9 +58,7 @@ _SPAN_FIELDS = ("kind", "text", "media_ref", "offset")
 
 
 def synth_interleaved(docs: DataFrame, span_tokens: int = 8,
-                      media_every: int = 3,
-                      id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+                      media_every: int = 3) -> DataFrame:
     """``(doc_id, spans)`` — deterministic interleaved lift of a flat
     text corpus.
 
@@ -102,8 +100,8 @@ def synth_interleaved(docs: DataFrame, span_tokens: int = 8,
     if media_every < 1:
         raise ValueError(f"media_every must be >= 1; got {media_every}")
     blk = F.lit(media_every + 1)
-    tok_df = docs.select(F.col(id_col),
-                         T.tokens(F.col(text_col)).alias("_toks"))
+    tok_df = docs.select(F.col("doc_id"),
+                         T.tokens(F.col("text")).alias("_toks"))
     toks = F.col("_toks")
     n = F.size(toks)
     n_chunks = F.ceil(n / F.lit(span_tokens)).cast("int")
@@ -122,7 +120,7 @@ def synth_interleaved(docs: DataFrame, span_tokens: int = 8,
             F.when(is_media, F.lit(None).cast("string")).otherwise(text)
              .alias("text"),
             F.when(is_media,
-                   F.concat(F.lit("img_"), F.col(id_col).cast("string"),
+                   F.concat(F.lit("img_"), F.col("doc_id").cast("string"),
                             F.lit("_"), media_idx.cast("string")))
              .otherwise(F.lit(None).cast("string")).alias("media_ref"),
             p.cast("int").alias("offset"))
@@ -132,10 +130,10 @@ def synth_interleaved(docs: DataFrame, span_tokens: int = 8,
              .otherwise(F.array().cast(
                  "array<struct<kind:string,text:string,"
                  "media_ref:string,offset:int>>"))
-    return tok_df.select(F.col(id_col), spans.alias("spans"))
+    return tok_df.select(F.col("doc_id"), spans.alias("spans"))
 
 
-def caption_pairs(inter: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def caption_pairs(inter: DataFrame) -> DataFrame:
     """``(doc_id, media_ref, media_offset, caption, caption_offset)``
     — each media span paired with the nearest PRECEDING text span in
     reading order (NULL caption when no text precedes, e.g. a
@@ -190,24 +188,23 @@ def caption_pairs(inter: DataFrame, id_col: str = "doc_id") -> DataFrame:
         F.lit(None).cast("int").alias("last_off"),
         F.array().cast(pair_t).alias("pairs")).cast(acc_t)
     folded = inter.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.aggregate(ordered, init, step)["pairs"].alias("_pairs"))
     # explode_outer + post-filter on the GENERATED column, not explode:
     # plain explode plans a pre-Generate Filter (size > 0 AND isnotnull)
     # on the array, and filter pushdown substitutes the alias — the
     # whole fold would re-evaluate twice more per row (the Generate-
     # no-CSE lesson; same fix in pack_interleaved / entry queries)
-    ex = (folded.select(F.col(id_col), F.explode_outer("_pairs").alias("_p"))
+    ex = (folded.select(F.col("doc_id"), F.explode_outer("_pairs").alias("_p"))
           .filter(F.col("_p").isNotNull()))
     return ex.select(
-        F.col(id_col), F.col("_p.media_ref").alias("media_ref"),
+        F.col("doc_id"), F.col("_p.media_ref").alias("media_ref"),
         F.col("_p.media_offset").alias("media_offset"),
         F.col("_p.caption").alias("caption"),
         F.col("_p.caption_offset").alias("caption_offset"))
 
 
-def span_diff(left: DataFrame, right: DataFrame,
-              id_col: str = "doc_id") -> DataFrame:
+def span_diff(left: DataFrame, right: DataFrame) -> DataFrame:
     """``(doc_id, verdict, first_diff_offset, n_left, n_right)`` —
     corpus-scale extraction regression diff between two interleaved
     span tables (e.g. the outputs of two pipeline versions over the
@@ -248,9 +245,9 @@ def span_diff(left: DataFrame, right: DataFrame,
                                s["kind"].alias("kind"),
                                s["text"].alias("text"),
                                s["media_ref"].alias("media_ref"))))
-        return df.select(F.col(id_col), ordered.alias(out))
+        return df.select(F.col("doc_id"), ordered.alias(out))
 
-    j = norm(left, "_l").join(norm(right, "_r"), on=id_col, how="full")
+    j = norm(left, "_l").join(norm(right, "_r"), on="doc_id", how="full")
     nl, nr = F.size("_l"), F.size("_r")
     hi = F.greatest(nl, nr)
 
@@ -274,7 +271,7 @@ def span_diff(left: DataFrame, right: DataFrame,
                 .when(first.isNull(), F.lit("equal"))
                 .otherwise(F.lit("diverged")))
     return j.select(
-        F.col(id_col),
+        F.col("doc_id"),
         verdict.alias("verdict"),
         F.when(F.col("_l").isNotNull() & F.col("_r").isNotNull(), first)
          .cast("int").alias("first_diff_offset"),
@@ -283,8 +280,7 @@ def span_diff(left: DataFrame, right: DataFrame,
 
 
 def pack_interleaved(inter: DataFrame, budget_tokens: int = 64,
-                     media_cost: int = 16,
-                     id_col: str = "doc_id") -> DataFrame:
+                     media_cost: int = 16) -> DataFrame:
     """``(doc_id, seq_id, n_spans, n_text, n_media, seq_tokens)`` —
     fixed token-budget multimodal sequence packing.  A text span costs
     its whitespace-token count, a media span a flat ``media_cost``
@@ -319,20 +315,20 @@ def pack_interleaved(inter: DataFrame, budget_tokens: int = 64,
         raise ValueError(f"budget_tokens must be >= 1; got {budget_tokens}")
     if media_cost < 1:
         raise ValueError(f"media_cost must be >= 1; got {media_cost}")
-    ex = (inter.select(F.col(id_col), F.explode_outer("spans").alias("s"))
+    ex = (inter.select(F.col("doc_id"), F.explode_outer("spans").alias("s"))
           .filter(F.col("s").isNotNull()))
     is_text = F.col("s.kind") == F.lit("text")
     cost = F.when(is_text, F.size(T.tokens(F.col("s.text")))) \
             .otherwise(F.lit(media_cost)).cast("long")
-    costed = ex.select(F.col(id_col), F.col("s.offset").alias("offset"),
+    costed = ex.select(F.col("doc_id"), F.col("s.offset").alias("offset"),
                        is_text.alias("is_text"), cost.alias("cost"))
-    w = Window.partitionBy(id_col).orderBy("offset").rowsBetween(
+    w = Window.partitionBy("doc_id").orderBy("offset").rowsBetween(
         Window.unboundedPreceding, Window.currentRow)
     seq = F.floor((F.sum("cost").over(w) - F.col("cost"))
                   / F.lit(budget_tokens)).cast("long")
-    binned = costed.select(F.col(id_col), F.col("is_text"), F.col("cost"),
+    binned = costed.select(F.col("doc_id"), F.col("is_text"), F.col("cost"),
                            seq.alias("seq_id"))
-    return (binned.groupBy(id_col, "seq_id")
+    return (binned.groupBy("doc_id", "seq_id")
             .agg(F.count(F.lit(1)).cast("int").alias("n_spans"),
                  F.sum(F.col("is_text").cast("int")).cast("int")
                   .alias("n_text"),
@@ -353,8 +349,7 @@ def _ordered_spans(spans: F.Column) -> F.Column:
                            s["media_ref"].alias("media_ref"))))
 
 
-def merge_adjacent_text(inter: DataFrame, sep: str = " ",
-                        id_col: str = "doc_id") -> DataFrame:
+def merge_adjacent_text(inter: DataFrame, sep: str = " ") -> DataFrame:
     """``(doc_id, spans)`` — re-segmentation: every run of consecutive
     text spans is merged into one paragraph span (texts joined by
     ``sep``), media spans are preserved in place, and ``offset`` is
@@ -413,11 +408,10 @@ def merge_adjacent_text(inter: DataFrame, sep: str = " ",
                               s["text"].alias("text"),
                               s["media_ref"].alias("media_ref"),
                               i.cast("int").alias("offset")))
-    return inter.select(F.col(id_col), renum.alias("spans"))
+    return inter.select(F.col("doc_id"), renum.alias("spans"))
 
 
-def media_context(inter: DataFrame, k: int = 2,
-                  id_col: str = "doc_id") -> DataFrame:
+def media_context(inter: DataFrame, k: int = 2) -> DataFrame:
     """``(doc_id, media_ref, media_offset, before_text, after_text,
     n_before, n_after)`` — each media span with the concatenation of
     its up-to-``k`` nearest PRECEDING and FOLLOWING text spans in
@@ -445,7 +439,7 @@ def media_context(inter: DataFrame, k: int = 2,
         raise ValueError(f"k must be >= 1; got {k}")
     ordered = _ordered_spans(F.col("spans"))
     layer1 = inter.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.filter(ordered, lambda s: s["kind"] == F.lit("text"))
          .alias("_txt"),
         F.filter(ordered, lambda s: s["kind"] != F.lit("text"))
@@ -474,12 +468,12 @@ def media_context(inter: DataFrame, k: int = 2,
             F.size(before).cast("int").alias("n_before"),
             F.size(after).cast("int").alias("n_after"))
 
-    layer2 = layer1.select(F.col(id_col),
+    layer2 = layer1.select(F.col("doc_id"),
                            F.transform(F.col("_med"), pair).alias("_pairs"))
-    ex = (layer2.select(F.col(id_col), F.explode_outer("_pairs").alias("_p"))
+    ex = (layer2.select(F.col("doc_id"), F.explode_outer("_pairs").alias("_p"))
           .filter(F.col("_p").isNotNull()))
     return ex.select(
-        F.col(id_col), F.col("_p.media_ref").alias("media_ref"),
+        F.col("doc_id"), F.col("_p.media_ref").alias("media_ref"),
         F.col("_p.media_offset").alias("media_offset"),
         F.col("_p.before_text").alias("before_text"),
         F.col("_p.after_text").alias("after_text"),
@@ -501,8 +495,7 @@ def _asset_name(ref: F.Column, pool: int | None) -> F.Column:
     return F.concat(F.lit("asset_"), (H.hash32(ref) % pool).cast("string"))
 
 
-def asset_census(inter: DataFrame, pool: int | None = None,
-                 id_col: str = "doc_id") -> DataFrame:
+def asset_census(inter: DataFrame, pool: int | None = None) -> DataFrame:
     """``(asset, n_docs, n_occurrences, min_offset, max_offset)`` —
     corpus-wide media-asset reuse census: for every (pooled) asset, how
     many documents embed it, how often, and where in reading order it
@@ -524,17 +517,16 @@ def asset_census(inter: DataFrame, pool: int | None = None,
         media,
         lambda s: F.struct(_asset_name(s["media_ref"], pool).alias("asset"),
                            s["offset"].alias("offset")))
-    ex = (inter.select(F.col(id_col), F.explode_outer(per).alias("_m"))
+    ex = (inter.select(F.col("doc_id"), F.explode_outer(per).alias("_m"))
           .filter(F.col("_m").isNotNull()))
     return (ex.groupBy(F.col("_m.asset").alias("asset"))
-            .agg(F.countDistinct(F.col(id_col)).cast("int").alias("n_docs"),
+            .agg(F.countDistinct(F.col("doc_id")).cast("int").alias("n_docs"),
                  F.count(F.lit(1)).cast("int").alias("n_occurrences"),
                  F.min(F.col("_m.offset")).cast("int").alias("min_offset"),
                  F.max(F.col("_m.offset")).cast("int").alias("max_offset")))
 
 
-def asset_dedup_groups(inter: DataFrame, pool: int | None = None,
-                       id_col: str = "doc_id") -> DataFrame:
+def asset_dedup_groups(inter: DataFrame, pool: int | None = None) -> DataFrame:
     """``(asset_sig, n_docs, keep_doc_id)`` — documents grouped by the
     md5 signature of their SORTED DISTINCT media-asset set; the
     templated-page analogue of exact text dedup (mirror sites and
@@ -553,17 +545,16 @@ def asset_dedup_groups(inter: DataFrame, pool: int | None = None,
         F.filter(F.col("spans"), lambda s: s["kind"] != F.lit("text")),
         lambda s: _asset_name(s["media_ref"], pool))))
     sig = F.md5(F.concat_ws(",", assets))
-    per_doc = (inter.select(F.col(id_col), F.size(assets).alias("_n"),
+    per_doc = (inter.select(F.col("doc_id"), F.size(assets).alias("_n"),
                             sig.alias("asset_sig"))
                .filter(F.col("_n") > 0))
     return (per_doc.groupBy("asset_sig")
             .agg(F.count(F.lit(1)).cast("int").alias("n_docs"),
-                 F.min(F.col(id_col)).alias("keep_doc_id")))
+                 F.min(F.col("doc_id")).alias("keep_doc_id")))
 
 
 def interleaved_quality(inter: DataFrame,
-                        media_heavy_ratio: float = 0.5,
-                        id_col: str = "doc_id") -> DataFrame:
+                        media_heavy_ratio: float = 0.5) -> DataFrame:
     """``(doc_id, n_spans, n_text, n_media, text_tokens, media_ratio,
     caption_coverage, verdict)`` — per-document interleaved quality
     flags, the multimodal row of the curation funnel
@@ -604,7 +595,7 @@ def interleaved_quality(inter: DataFrame,
     # verdict is derived AFTER the stats layer so the expensive array
     # aggregates are referenced exactly once (the no-cross-alias-CSE rule)
     layer = inter.select(
-        F.col(id_col), n_spans.cast("int").alias("n_spans"),
+        F.col("doc_id"), n_spans.cast("int").alias("n_spans"),
         n_text.cast("int").alias("n_text"),
         n_media.cast("int").alias("n_media"),
         text_tokens.alias("text_tokens"),

@@ -45,9 +45,8 @@ def _bucket(ts_col: str, width_s: int) -> F.Column:
     return F.floor(secs / F.lit(width_s))
 
 
-def point_in_interval_join(points: DataFrame, intervals: DataFrame,
-                           on: str, ts_col: str = "ts",
-                           lo_col: str = "lo", hi_col: str = "hi",
+def point_in_interval_join(points: DataFrame, intervals: DataFrame, on: str,
+                           lo_col: str = "lo",
                            bucket_seconds: int = 3600) -> DataFrame:
     """Inner join: point rows paired with every interval (same ``on``
     key) satisfying ``lo <= ts <= hi``.  Output carries all point
@@ -72,13 +71,13 @@ def point_in_interval_join(points: DataFrame, intervals: DataFrame,
     iv = intervals.select(
         "*",
         _bucket(lo_col, bucket_seconds).alias("_b_lo"),
-        _bucket(hi_col, bucket_seconds).alias("_b_hi"),
+        _bucket("hi", bucket_seconds).alias("_b_hi"),
     )
     iv = (iv.select("*", F.explode_outer(
             F.sequence(F.col("_b_lo"), F.col("_b_hi"))).alias("_b"))
             .filter(F.col("_b").isNotNull())
             .drop("_b_lo", "_b_hi"))
-    pt = points.withColumn("_b", _bucket(ts_col, bucket_seconds))
+    pt = points.withColumn("_b", _bucket("ts", bucket_seconds))
     joined = pt.join(iv, [on, "_b"], "inner").drop("_b")
     return joined.filter(
-        (F.col(ts_col) >= F.col(lo_col)) & (F.col(ts_col) <= F.col(hi_col)))
+        (F.col("ts") >= F.col(lo_col)) & (F.col("ts") <= F.col("hi")))

@@ -56,20 +56,18 @@ from pyspark.sql import functions as F
 PR_SCALE = 1_000_000
 
 
-def undirected_edges(edges: DataFrame, src_col: str = "src",
-                     dst_col: str = "dst") -> DataFrame:
+def undirected_edges(edges: DataFrame) -> DataFrame:
     """Canonical undirected edge set: distinct (a, b) with a < b,
     self-loops dropped — the shared preprocessing of every undirected
     graph statistic (triangles, components).  One hash-distinct shuffle
     on the canonical pair."""
-    return (edges.where(F.col(src_col) != F.col(dst_col))
-            .select(F.least(src_col, dst_col).alias("a"),
-                    F.greatest(src_col, dst_col).alias("b"))
+    return (edges.where(F.col("src") != F.col("dst"))
+            .select(F.least("src", "dst").alias("a"),
+                    F.greatest("src", "dst").alias("b"))
             .distinct())
 
 
-def triangle_counts(edges: DataFrame, src_col: str = "src",
-                    dst_col: str = "dst") -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle participation over the undirected link graph —
     (node_id, n_triangles) for every node in at least one triangle.
 
@@ -100,14 +98,14 @@ def triangle_counts(edges: DataFrame, src_col: str = "src",
     never-explicitly-released note as ``profiling.histogram_quantiles``:
     callers looping in one long session should
     ``spark.catalog.clearCache()`` between sweeps."""
-    und, deg = _canonical_graph(edges, src_col, dst_col)
+    und, deg = _canonical_graph(edges)
     return _triangles_from(und, deg)
 
 
-def _canonical_graph(edges: DataFrame, src_col: str, dst_col: str):
+def _canonical_graph(edges: DataFrame):
     """(und, deg) — persisted canonical undirected edge set and its
     degree table, the shared base layer of the triangle family."""
-    und = undirected_edges(edges, src_col, dst_col).persist()
+    und = undirected_edges(edges).persist()
     deg = (und.select(F.col("a").alias("n"))
            .unionByName(und.select(F.col("b").alias("n")))
            .groupBy("n").agg(F.count(F.lit(1)).alias("d"))).persist()
@@ -145,8 +143,7 @@ def _triangles_from(und: DataFrame, deg: DataFrame) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_triangles")))
 
 
-def clustering_coefficients(edges: DataFrame, src_col: str = "src",
-                            dst_col: str = "dst",
+def clustering_coefficients(edges: DataFrame,
                             scale: int = PR_SCALE) -> DataFrame:
     """Local clustering coefficient per node (Watts & Strogatz 1998):
     ``cc(v) = 2 * triangles(v) / (deg(v) * (deg(v) - 1))`` over the
@@ -160,7 +157,7 @@ def clustering_coefficients(edges: DataFrame, src_col: str = "src",
     whose neighbors ignore each other.  Cost: :func:`triangle_counts`
     plus a keyed join — the edge set and degree table are the same
     persisted layers the triangle pass uses (one derivation total)."""
-    und, deg0 = _canonical_graph(edges, src_col, dst_col)
+    und, deg0 = _canonical_graph(edges)
     deg = deg0.select(F.col("n").alias("node_id"), F.col("d").alias("degree"))
     tri = _triangles_from(und, deg0)
     return (deg.where(F.col("degree") >= 2)
@@ -173,8 +170,8 @@ def clustering_coefficients(edges: DataFrame, src_col: str = "src",
                 .cast("long")))
 
 
-def cocitation_pairs(edges: DataFrame, max_fanout: int | None = 64,
-                     src_col: str = "src", dst_col: str = "dst") -> DataFrame:
+def cocitation_pairs(edges: DataFrame,
+                     max_fanout: int | None = 64) -> DataFrame:
     """Co-citation pair mining (Small 1973; the web-curation use is
     "pages repeatedly linked together are topically related"):
     (a, b, n_common) — distinct destination pairs a < b with the count
@@ -190,8 +187,8 @@ def cocitation_pairs(edges: DataFrame, max_fanout: int | None = 64,
     feeds the fan-out census and both self-join sides, so it is
     ``.persist()``-pinned for the lifetime of the returned plan (same
     multi-consumer rationale as :func:`triangle_counts`)."""
-    e = (edges.where(F.col(src_col) != F.col(dst_col))
-         .select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    e = (edges.where(F.col("src") != F.col("dst"))
+         .select("src", "dst")
          .distinct()).persist()
     if max_fanout is not None:
         if max_fanout < 2:
@@ -207,9 +204,8 @@ def cocitation_pairs(edges: DataFrame, max_fanout: int | None = 64,
             .agg(F.count(F.lit(1)).alias("n_common")))
 
 
-def hits_scores(nodes: DataFrame, edges: DataFrame, iters: int = 2,
-                id_col: str = "node_id", src_col: str = "src",
-                dst_col: str = "dst") -> DataFrame:
+def hits_scores(nodes: DataFrame, edges: DataFrame,
+                iters: int = 2) -> DataFrame:
     """Unnormalized HITS (Kleinberg JACM'99): per iteration the
     authority score is the sum of in-linking hub scores, then the hub
     score is the sum of out-linked authority scores:
@@ -235,8 +231,8 @@ def hits_scores(nodes: DataFrame, edges: DataFrame, iters: int = 2,
     table by src/dst for the exchange-free variant."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1; got {iters}")
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    base = nodes.select(F.col(id_col).alias("node_id"))
+    e = edges.select("src", "dst")
+    base = nodes.select("node_id")
     h = base.withColumn("h", F.lit(1).cast("long"))
     a = None
     for _ in range(iters):
@@ -259,9 +255,7 @@ def hits_scores(nodes: DataFrame, edges: DataFrame, iters: int = 2,
 
 def personalized_pagerank(nodes: DataFrame, edges: DataFrame,
                           seeds: DataFrame, iters: int = 2,
-                          scale: int = PR_SCALE, id_col: str = "node_id",
-                          src_col: str = "src",
-                          dst_col: str = "dst") -> DataFrame:
+                          scale: int = PR_SCALE) -> DataFrame:
     """Personalized PageRank on the integer lattice (Page et al. 1999
     §6; Haveliwala WWW'02 topic-sensitive variant): the teleport mass
     lands only on ``seeds`` — rank becomes proximity-to-the-seed-set,
@@ -280,13 +274,13 @@ def personalized_pagerank(nodes: DataFrame, edges: DataFrame,
     shuffle."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1; got {iters}")
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    e = edges.select("src", "dst")
     deg = out_degrees(e)
     seed = F.broadcast(seeds.select(
         F.col(seeds.columns[0]).alias("node_id"))
         .withColumn("_seed", F.lit(1)))
     base = (3 * scale) // 20
-    pr = (nodes.select(F.col(id_col).alias("node_id"))
+    pr = (nodes.select("node_id")
           .join(seed, "node_id", "left")
           .select("node_id",
                   F.when(F.col("_seed") == 1, F.lit(scale))
@@ -297,7 +291,7 @@ def personalized_pagerank(nodes: DataFrame, edges: DataFrame,
                    .select(F.col("dst").alias("node_id"),
                            F.expr("pr div out_deg").cast("long").alias("c")))
         inflow = contrib.groupBy("node_id").agg(F.sum("c").alias("inflow"))
-        pr = (nodes.select(F.col(id_col).alias("node_id"))
+        pr = (nodes.select("node_id")
               .join(inflow, "node_id", "left")
               .join(seed, "node_id", "left")
               .select("node_id", F.expr(
@@ -308,8 +302,7 @@ def personalized_pagerank(nodes: DataFrame, edges: DataFrame,
 
 
 def connected_components(nodes: DataFrame, edges: DataFrame,
-                         id_col: str = "node_id", src_col: str = "src",
-                         dst_col: str = "dst", max_iter: int = 50,
+                         id_col: str = "node_id", max_iter: int = 50,
                          checkpoint_dir: str | None = None) -> DataFrame:
     """(id_col, label) — every node labelled with the MINIMUM id
     reachable in its undirected component (isolated nodes label
@@ -330,7 +323,7 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     from .dedup import _Materializer  # local import: dedup imports us
 
     mat = _Materializer(checkpoint_dir)
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    e = edges.select("src", "dst")
     sym = mat(e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .where(F.col("src") != F.col("dst")).distinct(), "cc_edges")
@@ -361,16 +354,13 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
             .select(F.col("node").alias(id_col), "label"))
 
 
-def out_degrees(edges: DataFrame, src_col: str = "src",
-                dst_col: str = "dst") -> DataFrame:
+def out_degrees(edges: DataFrame) -> DataFrame:
     """(src, out_deg) for every node with at least one out-link."""
-    return (edges.groupBy(F.col(src_col).alias("src"))
+    return (edges.groupBy("src")
             .agg(F.count(F.lit(1)).alias("out_deg")))
 
 
-def degree_census(nodes: DataFrame, edges: DataFrame,
-                  id_col: str = "node_id", src_col: str = "src",
-                  dst_col: str = "dst") -> DataFrame:
+def degree_census(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """In-degree histogram over ALL nodes — (in_degree, n_nodes) with a
     row for in_degree 0 when isolated/source-only nodes exist.
 
@@ -378,18 +368,17 @@ def degree_census(nodes: DataFrame, edges: DataFrame,
     long-tailed in-degree histogram; a scraped mirror farm shows up as a
     spike.  One (dst) aggregate + one left join + one tiny histogram
     aggregate — no row ever carries more than two integers."""
-    indeg = (edges.groupBy(F.col(dst_col).alias(id_col))
+    indeg = (edges.groupBy(F.col("dst").alias("node_id"))
              .agg(F.count(F.lit(1)).alias("in_degree")))
-    return (nodes.select(id_col)
-            .join(indeg, id_col, "left")
+    return (nodes.select("node_id")
+            .join(indeg, "node_id", "left")
             .select(F.coalesce("in_degree", F.lit(0)).alias("in_degree"))
             .groupBy("in_degree")
             .agg(F.count(F.lit(1)).alias("n_nodes")))
 
 
 def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 2,
-             scale: int = PR_SCALE, id_col: str = "node_id",
-             src_col: str = "src", dst_col: str = "dst",
+             scale: int = PR_SCALE,
              redistribute_dangling: bool = False) -> DataFrame:
     """Integer-lattice PageRank — (node_id, pr) after ``iters`` unrolled
     iterations; see the module docstring for the exact recurrence and
@@ -405,10 +394,9 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 2,
     identically for curation."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1; got {iters}")
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    e = edges.select("src", "dst")
     deg = out_degrees(e)
-    pr = nodes.select(F.col(id_col).alias("node_id"),
-                      F.lit(scale).cast("long").alias("pr"))
+    pr = nodes.select("node_id", F.lit(scale).cast("long").alias("pr"))
     n_nodes = nodes.agg(F.count(F.lit(1)).alias("n_nodes"))
     base = (3 * scale) // 20  # (1 - d) * scale with d = 17/20
     for _ in range(iters):
@@ -420,7 +408,7 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 2,
                    .select(F.col("dst").alias("node_id"),
                            F.expr("pr div out_deg").cast("long").alias("c")))
         inflow = contrib.groupBy("node_id").agg(F.sum("c").alias("inflow"))
-        carried = (nodes.select(F.col(id_col).alias("node_id"))
+        carried = (nodes.select("node_id")
                    .join(inflow, "node_id", "left"))
         if redistribute_dangling:
             # total rank sitting on out-linkless nodes: one-row

@@ -16,10 +16,9 @@ from pyspark.sql import functions as F
 DEFAULT_PERCENTILES = (0.25, 0.5, 0.75, 0.9, 0.99)
 
 
-def corpus_profile(docs: DataFrame, group_col: str = "lang",
-                   value_col: str = "n_chars",
+def corpus_profile(docs: DataFrame,
                    percentiles: tuple[float, ...] = DEFAULT_PERCENTILES) -> DataFrame:
-    """(group, n_docs, min, p25..p99, max, mean) of ``value_col``.
+    """(group, n_docs, min, p25..p99, max, mean) of ``n_chars`` per ``lang``.
 
     Percentile columns are named ``p<percent>`` (p25, p50, ...); the
     discrete percentile is cast back to the value column's integer type
@@ -27,23 +26,21 @@ def corpus_profile(docs: DataFrame, group_col: str = "lang",
     """
     aggs = [
         F.count(F.lit(1)).alias("n_docs"),
-        F.min(value_col).alias("min_val"),
+        F.min("n_chars").alias("min_val"),
     ]
     for p in percentiles:
         name = f"p{int(round(p * 100))}"
         aggs.append(
-            F.expr(f"percentile_disc({p}) WITHIN GROUP (ORDER BY {value_col})")
+            F.expr(f"percentile_disc({p}) WITHIN GROUP (ORDER BY n_chars)")
             .cast("long").alias(name))
     aggs += [
-        F.max(value_col).alias("max_val"),
-        F.round(F.avg(value_col), 6).alias("mean_val"),
+        F.max("n_chars").alias("max_val"),
+        F.round(F.avg("n_chars"), 6).alias("mean_val"),
     ]
-    return docs.groupBy(group_col).agg(*aggs).orderBy(group_col)
+    return docs.groupBy("lang").agg(*aggs).orderBy("lang")
 
 
-def histogram_quantiles(docs: DataFrame, group_col: str = "lang",
-                        value_col: str = "n_chars",
-                        n_buckets: int = 64,
+def histogram_quantiles(docs: DataFrame, n_buckets: int = 64,
                         percentiles: tuple[int, ...] = (25, 50, 75, 90, 99)
                         ) -> DataFrame:
     """Bounded-memory per-group quantiles via a fixed integer histogram —
@@ -88,23 +85,23 @@ def histogram_quantiles(docs: DataFrame, group_col: str = "lang",
     # (no cross-branch exchange reuse in the static plan).  It is a few
     # longs per group, so pin it: one corpus scan for stats, one for the
     # histogram, total two.
-    stats = docs.groupBy(group_col).agg(
-        F.min(F.col(value_col).cast("long")).alias("mn"),
-        F.max(F.col(value_col).cast("long")).alias("mx"),
+    stats = docs.groupBy("lang").agg(
+        F.min(F.col("n_chars").cast("long")).alias("mn"),
+        F.max(F.col("n_chars").cast("long")).alias("mx"),
         F.count(F.lit(1)).alias("n_docs")).persist()
     bucket = F.least(
         F.lit(n_buckets - 1).cast("long"),
-        F.expr(f"((cast({value_col} as bigint) - mn) * {n_buckets})"
+        F.expr(f"((cast(n_chars as bigint) - mn) * {n_buckets})"
                f" div (mx - mn + 1)"))
-    hist = (docs.join(F.broadcast(stats), group_col)
-            .select(F.col(group_col), bucket.alias("bucket"))
-            .groupBy(group_col, "bucket")
+    hist = (docs.join(F.broadcast(stats), "lang")
+            .select(F.col("lang"), bucket.alias("bucket"))
+            .groupBy("lang", "bucket")
             .agg(F.count(F.lit(1)).alias("c")))
     from pyspark.sql import Window
-    w = (Window.partitionBy(group_col).orderBy("bucket")
+    w = (Window.partitionBy("lang").orderBy("bucket")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     cum = (hist.withColumn("cum", F.sum("c").over(w))
-           .join(F.broadcast(stats), group_col))
+           .join(F.broadcast(stats), "lang"))
     lo = F.expr(f"mn + (bucket * (mx - mn + 1)) div {n_buckets}")
     aggs = [F.min("n_docs").alias("n_docs"), F.min("mn").alias("min_val")]
     for pct in percentiles:
@@ -112,13 +109,12 @@ def histogram_quantiles(docs: DataFrame, group_col: str = "lang",
         aggs.append(F.min(F.when(F.col("cum") >= rank, lo))
                     .alias(f"p{pct}_lo"))
     aggs.append(F.min("mx").alias("max_val"))
-    return cum.groupBy(group_col).agg(*aggs).orderBy(group_col)
+    return cum.groupBy("lang").agg(*aggs).orderBy("lang")
 
 
 def source_tfidf_terms(docs: DataFrame, top_k: int = 5,
-                       min_len: int = 3, text_col: str = "text",
-                       group_col: str = "source") -> DataFrame:
-    """Distinctive vocabulary per subcorpus: treat each ``group_col``
+                       min_len: int = 3) -> DataFrame:
+    """Distinctive vocabulary per subcorpus: treat each ``source``
     value as one aggregate document and rank its terms by tf-idf
     (Sparck Jones 1972): ``tf * ln(n_groups / df_groups)`` — the
     per-source keyword summary a dataset card publishes, and the
@@ -138,12 +134,11 @@ def source_tfidf_terms(docs: DataFrame, top_k: int = 5,
 
     from ..functions import text as T
 
-    toks = T.tokens(F.col(text_col))
-    pairs = (docs.select(F.col(group_col).alias("source"),
-                         F.explode(toks).alias("term"))
+    toks = T.tokens(F.col("text"))
+    pairs = (docs.select("source", F.explode(toks).alias("term"))
              .filter(F.length("term") >= min_len)
              .groupBy("source", "term").agg(F.count(F.lit(1)).alias("tf")))
-    n_groups = docs.select(F.countDistinct(group_col).alias("n_groups"))
+    n_groups = docs.select(F.countDistinct("source").alias("n_groups"))
     df_groups = pairs.groupBy("term").agg(
         F.count(F.lit(1)).alias("df_groups"))
     scored = (pairs.join(df_groups, "term")
@@ -160,8 +155,7 @@ def source_tfidf_terms(docs: DataFrame, top_k: int = 5,
 
 
 def corpus_drift(old_docs: DataFrame, new_docs: DataFrame,
-                 n_buckets: int = 512, top_k: int = 30,
-                 text_col: str = "text") -> DataFrame:
+                 n_buckets: int = 512, top_k: int = 30) -> DataFrame:
     """Snapshot-to-snapshot token-distribution drift — the refresh-ops
     check a pipeline runs before swapping in a new corpus drop: which
     parts of the vocabulary moved, and by how much?
@@ -195,9 +189,9 @@ def corpus_drift(old_docs: DataFrame, new_docs: DataFrame,
     from ..functions import hashing as H
     from ..functions import text as T
 
-    tagged = (old_docs.select(F.col(text_col).alias("_txt"))
+    tagged = (old_docs.select(F.col("text").alias("_txt"))
               .withColumn("_new", F.lit(0))
-              .unionByName(new_docs.select(F.col(text_col).alias("_txt"))
+              .unionByName(new_docs.select(F.col("text").alias("_txt"))
                            .withColumn("_new", F.lit(1))))
     buckets = (tagged.select(F.col("_new"),
                              F.explode(T.tokens(F.col("_txt"))).alias("tok"))
@@ -209,8 +203,7 @@ def corpus_drift(old_docs: DataFrame, new_docs: DataFrame,
     return _drift_scores(buckets, n_buckets, top_k)
 
 
-def token_bucket_counts(docs: DataFrame, text_col: str = "text",
-                        n_buckets: int = 512) -> DataFrame:
+def token_bucket_counts(docs: DataFrame, n_buckets: int = 512) -> DataFrame:
     """(bucket, n) — one snapshot's hashed-vocab counts: the <= n_buckets
     rows of state a drift monitor stores per corpus drop, and exactly
     the expression tree ``streaming.drift.drift_bucket_stream`` runs as
@@ -218,7 +211,7 @@ def token_bucket_counts(docs: DataFrame, text_col: str = "text",
     from ..functions import hashing as H
     from ..functions import text as T
 
-    return (docs.select(F.explode(T.tokens(F.col(text_col))).alias("tok"))
+    return (docs.select(F.explode(T.tokens(F.col("text"))).alias("tok"))
             .select((H.hash32(F.col("tok")) % n_buckets).alias("bucket"))
             .groupBy("bucket").agg(F.count(F.lit(1)).alias("n")))
 

@@ -51,8 +51,7 @@ LINE_HEIGHT = 40
 COLUMN_PITCH_X = 500
 
 
-def synth_boxes(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def synth_boxes(docs: DataFrame) -> DataFrame:
     """``(doc_id, box_id, x0, x1, y0, y1)`` — deterministic word-box
     layout of a flat text corpus; ``box_id`` is the 0-based token
     index, i.e. the ground-truth reading order.
@@ -71,15 +70,15 @@ def synth_boxes(docs: DataFrame, id_col: str = "doc_id",
 
     Pure narrow plan: one token explode per document, no shuffle.
     """
-    hv = H.hash32(F.concat(F.lit("col:"), F.col(id_col).cast("string")))
+    hv = H.hash32(F.concat(F.lit("col:"), F.col("doc_id").cast("string")))
     # token array hoisted into ONE column layer (referenced twice:
     # size + explode — CollapseProject keeps the layer, so tokenize
     # runs once); posexplode_outer + generated-column filter, never
     # plain explode over a nullable computed array (the inferred
     # pre-Generate filter would re-evaluate the tokenize per row)
-    lay = docs.select(F.col(id_col), (hv % 2 == 0).alias("_two"),
-                      T.tokens(F.col(text_col)).alias("_toks"))
-    tok = (lay.select(F.col(id_col), F.col("_two"),
+    lay = docs.select(F.col("doc_id"), (hv % 2 == 0).alias("_two"),
+                      T.tokens(F.col("text")).alias("_toks"))
+    tok = (lay.select(F.col("doc_id"), F.col("_two"),
                       F.size("_toks").alias("_n"),
                       F.posexplode_outer("_toks").alias("box_id", "_w"))
            .filter(F.col("_w").isNotNull()))
@@ -93,13 +92,12 @@ def synth_boxes(docs: DataFrame, id_col: str = "doc_id",
           + (F.col("box_id") % TOKENS_PER_LINE) * WORD_PITCH_X).cast("int")
     y0 = (row * LINE_PITCH_Y).cast("int")
     return tok.select(
-        F.col(id_col), F.col("box_id").cast("int").alias("box_id"),
+        F.col("doc_id"), F.col("box_id").cast("int").alias("box_id"),
         x0.alias("x0"), (x0 + WORD_WIDTH).cast("int").alias("x1"),
         y0.alias("y0"), (y0 + LINE_HEIGHT).cast("int").alias("y1"))
 
 
-def column_reading_order(boxes: DataFrame, min_gap: int = 50,
-                         id_col: str = "doc_id") -> DataFrame:
+def column_reading_order(boxes: DataFrame, min_gap: int = 50) -> DataFrame:
     """``(doc_id, box_id, col_id, read_rank)`` — recover reading order
     from word-box geometry via 1-D x-projection column detection.
 
@@ -116,25 +114,24 @@ def column_reading_order(boxes: DataFrame, min_gap: int = 50,
     """
     if min_gap < 1:
         raise ValueError(f"min_gap must be >= 1; got {min_gap}")
-    sweep = Window.partitionBy(id_col).orderBy("x0", "y0", "box_id")
+    sweep = Window.partitionBy("doc_id").orderBy("x0", "y0", "box_id")
     prev_max = F.max("x1").over(
         sweep.rowsBetween(Window.unboundedPreceding, -1))
     cut = (prev_max.isNull()
            | (F.col("x0") >= prev_max + F.lit(min_gap))).cast("int")
     col_id = F.sum(cut).over(
         sweep.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    flagged = boxes.select(F.col(id_col), F.col("box_id"),
+    flagged = boxes.select(F.col("doc_id"), F.col("box_id"),
                            F.col("x0"), F.col("y0"),
                            col_id.cast("int").alias("col_id"))
-    order = Window.partitionBy(id_col).orderBy(
+    order = Window.partitionBy("doc_id").orderBy(
         "col_id", "y0", "x0", "box_id")
     return flagged.select(
-        F.col(id_col), F.col("box_id"), F.col("col_id"),
+        F.col("doc_id"), F.col("box_id"), F.col("col_id"),
         F.row_number().over(order).cast("int").alias("read_rank"))
 
 
-def reading_order_report(boxes: DataFrame, min_gap: int = 50,
-                         id_col: str = "doc_id") -> DataFrame:
+def reading_order_report(boxes: DataFrame, min_gap: int = 50) -> DataFrame:
     """``(doc_id, n_boxes, n_cols, n_in_order)`` — per-document audit
     of :func:`column_reading_order` against the ``box_id`` ground
     truth (``n_in_order`` counts boxes whose recovered ``read_rank``
@@ -143,8 +140,8 @@ def reading_order_report(boxes: DataFrame, min_gap: int = 50,
     whole-corpus form of the recovery check; the groupBy reuses the
     windows' ``doc_id`` hash partitioning, so the report costs no
     extra exchange."""
-    ranked = column_reading_order(boxes, min_gap=min_gap, id_col=id_col)
-    return (ranked.groupBy(id_col)
+    ranked = column_reading_order(boxes, min_gap=min_gap)
+    return (ranked.groupBy("doc_id")
             .agg(F.count(F.lit(1)).cast("int").alias("n_boxes"),
                  F.max("col_id").cast("int").alias("n_cols"),
                  F.sum((F.col("read_rank") == F.col("box_id") + 1)

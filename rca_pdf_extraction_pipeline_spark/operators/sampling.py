@@ -150,15 +150,14 @@ def epoch_shards(docs: DataFrame, n_shards: int, epoch: int = 0,
 
 def train_val_test_split(docs: DataFrame,
                          weights: tuple[float, float, float] = (0.8, 0.1, 0.1),
-                         seed: int = 0,
-                         id_col: str = "doc_id") -> DataFrame:
+                         seed: int = 0) -> DataFrame:
     """Append a ``split`` column ('train' | 'val' | 'test') — disjoint
     and exhaustive by construction (consecutive bucket ranges)."""
     if abs(sum(weights) - 1.0) > 1e-9:
         raise ValueError(f"weights must sum to 1; got {weights}")
     cut1 = int(round(weights[0] * SAMPLE_BUCKETS))
     cut2 = cut1 + int(round(weights[1] * SAMPLE_BUCKETS))
-    b = sample_bucket(F.col(id_col), seed)
+    b = sample_bucket(F.col("doc_id"), seed)
     split = (F.when(b < cut1, F.lit("train"))
              .when(b < cut2, F.lit("val"))
              .otherwise(F.lit("test")))
@@ -167,9 +166,7 @@ def train_val_test_split(docs: DataFrame,
 
 def leakage_safe_split(docs: DataFrame,
                        weights: tuple[float, float, float] = (0.8, 0.1, 0.1),
-                       seed: int = 0, text_col: str = "text",
-                       id_col: str = "doc_id",
-                       jaccard_threshold: float = 0.8,
+                       seed: int = 0, jaccard_threshold: float = 0.8,
                        checkpoint_dir: str | None = None) -> DataFrame:
     """Contamination-safe train/val/test split: every MinHash near-dup
     connected component travels into ONE split, because membership is
@@ -192,7 +189,7 @@ def leakage_safe_split(docs: DataFrame,
         raise ValueError(f"weights must sum to 1; got {weights}")
     from .dedup import _cc_labels
 
-    labels = _cc_labels(docs, text_col, id_col, jaccard_threshold,
+    labels = _cc_labels(docs, jaccard_threshold,
                         n_hashes=8, bands=2, shingle_size=3, max_iter=50,
                         checkpoint_dir=checkpoint_dir)
     cut1 = int(round(weights[0] * SAMPLE_BUCKETS))
@@ -201,13 +198,13 @@ def leakage_safe_split(docs: DataFrame,
     split = (F.when(b < cut1, F.lit("train"))
              .when(b < cut2, F.lit("val"))
              .otherwise(F.lit("test")))
-    return (docs.join(labels.withColumnRenamed("node", id_col), id_col)
+    return (docs.join(labels.withColumnRenamed("node", "doc_id"), "doc_id")
             .withColumn("split", split)
             .drop("label"))
 
 
 def per_group_sample(docs: DataFrame, group_col: str, k: int,
-                     seed: int = 0, id_col: str = "doc_id") -> DataFrame:
+                     seed: int = 0) -> DataFrame:
     """EXACTLY ``k`` rows per group (fewer if the group is smaller) —
     the eval-set constructor ("100 held-out docs per language").
 
@@ -220,14 +217,13 @@ def per_group_sample(docs: DataFrame, group_col: str, k: int,
     if k < 1:
         raise ValueError(f"k must be >= 1; got {k}")
     ranked = _range_rank(
-        docs.withColumn("_bucket", sample_bucket(F.col(id_col), seed)),
-        [group_col], ["_bucket", id_col])
+        docs.withColumn("_bucket", sample_bucket(F.col("doc_id"), seed)),
+        [group_col], ["_bucket", "doc_id"])
     return ranked.filter(F.col("_rk") <= k).drop("_rk", "_bucket")
 
 
 def weighted_priority_sample(docs: DataFrame, weight_col: str, k: int,
-                             seed: int = 0,
-                             id_col: str = "doc_id") -> DataFrame:
+                             seed: int = 0) -> DataFrame:
     """EXACTLY ``k`` rows sampled without replacement with probability
     proportional to ``weight_col`` — priority sampling (Duffield, Lund
     & Thorup, JACM 2007): row priority = w / u for a per-row uniform
@@ -246,16 +242,15 @@ def weighted_priority_sample(docs: DataFrame, weight_col: str, k: int,
         raise ValueError(f"k must be >= 1; got {k}")
     w = F.col(weight_col).cast("double")
     pri = (w * SAMPLE_BUCKETS
-           / (sample_bucket(F.col(id_col), seed) + 1).cast("double"))
+           / (sample_bucket(F.col("doc_id"), seed) + 1).cast("double"))
     return (docs.filter(w > 0)
             .withColumn("priority", pri)
-            .orderBy(F.col("priority").desc(), F.col(id_col).asc())
+            .orderBy(F.col("priority").desc(), F.col("doc_id").asc())
             .limit(k))
 
 
 def mixture_sample(docs: DataFrame, source_col: str,
-                   targets: dict[str, int], seed: int = 0,
-                   id_col: str = "doc_id") -> DataFrame:
+                   targets: dict[str, int], seed: int = 0) -> DataFrame:
     """Deterministic data-mixture construction: keep ~``targets[s]``
     rows of each source ``s`` (all of them when the source is smaller
     than its target) — the "mix 30% web / 30% code / 40% books" recipe
@@ -280,18 +275,17 @@ def mixture_sample(docs: DataFrame, source_col: str,
                   F.round(tgt[F.col(source_col)].cast("double")
                           * SAMPLE_BUCKETS / F.col("_n")).cast("bigint"))))
     return (docs.join(F.broadcast(counts), source_col)
-            .filter(sample_bucket(F.col(id_col), seed) < F.col("_cut"))
+            .filter(sample_bucket(F.col("doc_id"), seed) < F.col("_cut"))
             .drop("_n", "_cut"))
 
 
 def token_mixture_sample(docs: DataFrame, source_col: str,
                          token_targets: dict[str, int],
-                         token_col: str = "n_chars", seed: int = 0,
-                         id_col: str = "doc_id") -> DataFrame:
+                         seed: int = 0) -> DataFrame:
     """:func:`mixture_sample` with TOKEN budgets instead of row counts —
     the unit a training recipe is actually written in ("500B web
     tokens, 100B code tokens").  Per-source keep-rate is
-    ``min(1, target_tokens / total_tokens)`` over ``token_col`` (a
+    ``min(1, target_tokens / total_tokens)`` over ``n_chars`` (a
     pre-computed per-doc token/char count column); membership is the
     usual content-independent md5 bucket filter, so the EXPECTED kept
     token mass per source is the target (exact only in expectation —
@@ -306,13 +300,13 @@ def token_mixture_sample(docs: DataFrame, source_col: str,
     tgt = F.create_map(*[F.lit(x) for kv in token_targets.items() for x in kv])
     totals = (docs.filter(F.col(source_col).isin(*token_targets.keys()))
               .groupBy(source_col)
-              .agg(F.sum(F.col(token_col).cast("long")).alias("_tok"))
+              .agg(F.sum(F.col("n_chars").cast("long")).alias("_tok"))
               .withColumn("_cut", F.least(
                   F.lit(SAMPLE_BUCKETS).cast("bigint"),
                   F.round(tgt[F.col(source_col)].cast("double")
                           * SAMPLE_BUCKETS / F.col("_tok")).cast("bigint"))))
     return (docs.join(F.broadcast(totals), source_col)
-            .filter(sample_bucket(F.col(id_col), seed) < F.col("_cut"))
+            .filter(sample_bucket(F.col("doc_id"), seed) < F.col("_cut"))
             .drop("_tok", "_cut"))
 
 
@@ -329,9 +323,8 @@ _TEMPERATURE_FACTORS = {
 }
 
 
-def temperature_sample(docs: DataFrame, group_col: str = "lang",
-                       alpha: float = 0.5, base_rate: float = 0.2,
-                       seed: int = 0, id_col: str = "doc_id") -> DataFrame:
+def temperature_sample(docs: DataFrame, alpha: float = 0.5,
+                       base_rate: float = 0.2, seed: int = 0) -> DataFrame:
     """Temperature-scaled mixture resampling — the multilingual-training
     rebalance of Lample & Conneau 2019 (XLM) / Conneau et al. 2020
     (XLM-R): sample groups proportionally to ``p_g^alpha`` so that
@@ -361,21 +354,20 @@ def temperature_sample(docs: DataFrame, group_col: str = "lang",
     cut0 = base_rate * SAMPLE_BUCKETS  # exact: one IEEE multiply
     factor = _TEMPERATURE_FACTORS[alpha].format(
         r="cast(_nmax as double) / cast(_n as double)")
-    counts = docs.groupBy(group_col).agg(F.count(F.lit(1)).alias("_n"))
+    counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("_n"))
     nmax = counts.agg(F.max("_n").alias("_nmax"))
     cuts = (counts.crossJoin(F.broadcast(nmax))
             .withColumn("_cut", F.expr(
                 f"cast(floor(least({SAMPLE_BUCKETS}.0, "
                 f"{cut0!r} * {factor})) as bigint)")))
-    return (docs.join(F.broadcast(cuts), group_col)
-            .filter(sample_bucket(F.col(id_col), seed) < F.col("_cut"))
+    return (docs.join(F.broadcast(cuts), "lang")
+            .filter(sample_bucket(F.col("doc_id"), seed) < F.col("_cut"))
             .drop("_n", "_nmax", "_cut"))
 
 
 def stratified_hash_sample(docs: DataFrame, strata_col: str,
-                           rates: dict[str, float],
-                           default_rate: float = 0.0, seed: int = 0,
-                           id_col: str = "doc_id") -> DataFrame:
+                           rates: dict[str, float], default_rate: float = 0.0,
+                           seed: int = 0) -> DataFrame:
     """Per-stratum deterministic sampling — e.g. keep 100% of rare
     languages and 10% of the dominant one.  Strata missing from
     ``rates`` use ``default_rate``."""
@@ -383,13 +375,11 @@ def stratified_hash_sample(docs: DataFrame, strata_col: str,
     for value, rate in sorted(rates.items()):
         cut = F.when(F.col(strata_col) == value,
                      F.lit(int(round(rate * SAMPLE_BUCKETS)))).otherwise(cut)
-    return docs.filter(sample_bucket(F.col(id_col), seed) < cut)
+    return docs.filter(sample_bucket(F.col("doc_id"), seed) < cut)
 
 
 def dsir_topk(docs: DataFrame, target_value: str, k: int,
-              n_buckets: int = 10_000, seed: int = 0,
-              text_col: str = "text", source_col: str = "source",
-              id_col: str = "doc_id") -> DataFrame:
+              n_buckets: int = 10_000, seed: int = 0) -> DataFrame:
     """Data Selection via Importance Resampling (Xie et al., NeurIPS'23):
     pick the ``k`` raw-corpus documents that look most like the target
     domain, by importance weight under hashed bag-of-words models.
@@ -424,14 +414,14 @@ def dsir_topk(docs: DataFrame, target_value: str, k: int,
         raise ValueError(f"n_buckets must be >= 2; got {n_buckets}")
     from ..functions import text as T
     toks = docs.select(
-        F.col(id_col), F.col(source_col),
-        F.explode(T.tokens(F.col(text_col))).alias("tok"))
+        F.col("doc_id"), F.col("source"),
+        F.explode(T.tokens(F.col("text"))).alias("tok"))
     btoks = toks.select(
-        F.col(id_col), F.col(source_col),
+        F.col("doc_id"), F.col("source"),
         (H.hash32(F.col("tok")) % n_buckets).alias("b"))
     freq = btoks.groupBy("b").agg(
         F.count(F.lit(1)).alias("cnt_r"),
-        F.sum(F.when(F.col(source_col) == target_value, 1)
+        F.sum(F.when(F.col("source") == target_value, 1)
               .otherwise(0)).alias("cnt_t"))
     tot = freq.agg(F.sum("cnt_r").alias("total_r"),
                    F.sum("cnt_t").alias("total_t"))
@@ -441,22 +431,22 @@ def dsir_topk(docs: DataFrame, target_value: str, k: int,
                      (lq((F.col("cnt_t") + 1)
                          / (F.col("total_t") + F.lit(n_buckets)))
                       - lq(F.col("cnt_r") / F.col("total_r"))).alias("lr")))
-    cand = docs.filter(F.col(source_col) != target_value)
-    per_doc = (btoks.filter(F.col(source_col) != target_value)
+    cand = docs.filter(F.col("source") != target_value)
+    per_doc = (btoks.filter(F.col("source") != target_value)
                .join(F.broadcast(model), "b")
-               .groupBy(id_col)
+               .groupBy("doc_id")
                .agg(F.count(F.lit(1)).alias("n_tokens"),
                     F.sum("lr").alias("lw")))
-    u = ((sample_bucket(F.col(id_col), seed) + 1)
+    u = ((sample_bucket(F.col("doc_id"), seed) + 1)
          / F.lit(float(SAMPLE_BUCKETS + 1)))
     gumbel = F.round(-F.log(-F.log(u)) * F.lit(1_000_000.0), 0).cast("long")
-    return (cand.select(F.col(id_col)).join(per_doc, id_col, "left")
-            .select(F.col(id_col),
+    return (cand.select(F.col("doc_id")).join(per_doc, "doc_id", "left")
+            .select(F.col("doc_id"),
                     F.coalesce(F.col("n_tokens"), F.lit(0)).cast("long")
                     .alias("n_tokens"),
                     F.round(F.coalesce(F.col("lw"), F.lit(0))
                             / F.lit(1_000_000.0), 6).alias("dsir_logw"),
                     (F.coalesce(F.col("lw"), F.lit(0)) + gumbel)
                     .alias("dsir_key"))
-            .orderBy(F.col("dsir_key").desc(), F.col(id_col).asc())
+            .orderBy(F.col("dsir_key").desc(), F.col("doc_id").asc())
             .limit(k))

@@ -34,7 +34,6 @@ def _tf(toks: Column, term: str) -> Column:
 
 
 def bm25_topk(docs: DataFrame, terms: list[str], k: int = 20,
-              text_col: str = "text", id_col: str = "doc_id",
               k1: float = BM25_K1, b: float = BM25_B) -> DataFrame:
     """Top-``k`` documents by BM25 score for the bag-of-words query
     ``terms``.
@@ -48,13 +47,13 @@ def bm25_topk(docs: DataFrame, terms: list[str], k: int = 20,
         raise ValueError("bm25_topk needs at least one query term")
     # tokens hoisted to a column layer: dl + one tf per query term all
     # reference them — inline, each reference re-ran the tokenizer
-    tok_df = docs.select(F.col(id_col),
-                         T.tokens(F.col(text_col)).alias("toks"))
+    tok_df = docs.select(F.col("doc_id"),
+                         T.tokens(F.col("text")).alias("toks"))
     toks = F.col("toks")
 
     # per-doc projection: doc length + per-term tf (one narrow pass)
     proj = tok_df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(toks).alias("dl"),
         *[_tf(toks, t).alias(f"tf_{i}") for i, t in enumerate(terms)],
     )
@@ -81,19 +80,18 @@ def bm25_topk(docs: DataFrame, terms: list[str], k: int = 20,
         score = score + idf * norm
 
     return (scored
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     *[F.col(f"tf_{i}").alias(f"tf_{t}")
                       for i, t in enumerate(terms)],
                     F.round(score, 6).alias("bm25"))
             .filter(F.col("bm25") > 0)
-            .orderBy(F.col("bm25").desc(), F.col(id_col).asc())
+            .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
             .limit(k))
 
 
 def hybrid_rrf_topk(docs: DataFrame, terms: list[str], query_doc: int,
                     k: int = 10, n_each: int = 20, k0: int = 60,
-                    dim: int = 16, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+                    dim: int = 16) -> DataFrame:
     """Hybrid lexical+semantic retrieval: fuse the BM25 top-``n_each``
     for ``terms`` with the hashed-embedding cosine top-``n_each``
     around ``query_doc`` by reciprocal-rank fusion (Cormack, Clarke &
@@ -118,29 +116,28 @@ def hybrid_rrf_topk(docs: DataFrame, terms: list[str], query_doc: int,
 
     # rank windows run on n_each-row frames (post-limit), so the
     # single-partition window is bounded, not a corpus-wide sort
-    lex = bm25_topk(docs, terms, k=n_each, text_col=text_col, id_col=id_col) \
-        .select(id_col, "bm25")
-    wl = Window.orderBy(F.col("bm25").desc(), F.col(id_col).asc())
-    lex = lex.select(F.col(id_col), F.row_number().over(wl).alias("lex_rank"))
+    lex = bm25_topk(docs, terms, k=n_each) \
+        .select("doc_id", "bm25")
+    wl = Window.orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
+    lex = lex.select("doc_id", F.row_number().over(wl).alias("lex_rank"))
 
-    embs = E.embed_documents(docs, dim=dim, text_col=text_col, id_col=id_col)
-    sem = S.cosine_topk(embs, query_id=query_doc, k=n_each, id_col=id_col)
-    ws = Window.orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
-    sem = sem.select(F.col(id_col), F.row_number().over(ws).alias("sem_rank"))
+    embs = E.embed_documents(docs, dim=dim)
+    sem = S.cosine_topk(embs, query_id=query_doc, k=n_each, id_col="doc_id")
+    ws = Window.orderBy(F.col("cosine_sim").desc(), F.col("doc_id").asc())
+    sem = sem.select("doc_id", F.row_number().over(ws).alias("sem_rank"))
 
     contrib = (lambda r: F.coalesce(
         F.lit(1.0) / (F.lit(k0) + F.col(r)).cast("double"), F.lit(0.0)))
-    return (lex.join(sem, id_col, "full_outer")
-            .select(F.col(id_col), "lex_rank", "sem_rank",
+    return (lex.join(sem, "doc_id", "full_outer")
+            .select(F.col("doc_id"), "lex_rank", "sem_rank",
                     F.round(contrib("lex_rank") + contrib("sem_rank"), 6)
                     .alias("rrf"))
-            .orderBy(F.col("rrf").desc(), F.col(id_col).asc())
+            .orderBy(F.col("rrf").desc(), F.col("doc_id").asc())
             .limit(k))
 
 
 def inverted_index(docs: DataFrame, min_df: int = 1,
-                   max_postings: int = 1000, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+                   max_postings: int = 1000) -> DataFrame:
     """Build the batch side of a retrieval engine: one row per term with
     its document frequency, total term frequency, and a doc-id-sorted
     posting list (the classic MapReduce inverted-index construction,
@@ -169,14 +166,14 @@ def inverted_index(docs: DataFrame, min_df: int = 1,
     """
     from pyspark.sql import Window
 
-    toks = T.tokens(F.col(text_col))
-    tf = (docs.select(F.col(id_col), F.explode(toks).alias("term"))
-          .groupBy("term", id_col).agg(F.count(F.lit(1)).alias("tf")))
-    w_sort = Window.partitionBy("term").orderBy(F.col(id_col).asc())
+    toks = T.tokens(F.col("text"))
+    tf = (docs.select(F.col("doc_id"), F.explode(toks).alias("term"))
+          .groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf")))
+    w_sort = Window.partitionBy("term").orderBy(F.col("doc_id").asc())
     w_all = Window.partitionBy("term")
     ranked = tf.select(
         "term",
-        F.concat_ws(":", F.col(id_col).cast("string"),
+        F.concat_ws(":", F.col("doc_id").cast("string"),
                     F.col("tf").cast("string")).alias("p"),
         F.row_number().over(w_sort).alias("rn"),
         F.count(F.lit(1)).over(w_all).alias("df"),

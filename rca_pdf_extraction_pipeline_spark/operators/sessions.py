@@ -23,8 +23,6 @@ from pyspark.sql import functions as F
 
 
 def sessionize(events: DataFrame, gap_minutes: int = 30,
-               user_col: str = "user_id", ts_col: str = "ts",
-               value_col: str = "value",
                watermark: str = "10 minutes") -> DataFrame:
     """(user, session_start, session_end, n_events, total_value):
     events within ``gap_minutes`` of the previous event chain into one
@@ -41,17 +39,17 @@ def sessionize(events: DataFrame, gap_minutes: int = 30,
     if gap_minutes <= 0:
         raise ValueError(f"gap_minutes must be positive, got {gap_minutes}")
     # watermarking requires TIMESTAMP (ltz); gap arithmetic is wall-time
-    src = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    src = events.withColumn("ts", F.col("ts").cast("timestamp"))
     if src.isStreaming:
-        src = src.withWatermark(ts_col, watermark)
-    win = F.session_window(F.col(ts_col), f"{gap_minutes} minutes")
-    micro = F.round(F.col(value_col) * 1_000_000).cast("long")
+        src = src.withWatermark("ts", watermark)
+    win = F.session_window(F.col("ts"), f"{gap_minutes} minutes")
+    micro = F.round(F.col("value") * 1_000_000).cast("long")
     return (src
-            .groupBy(F.col(user_col), win.alias("w"))
+            .groupBy(F.col("user_id"), win.alias("w"))
             .agg(F.count(F.lit(1)).alias("n_events"),
                  (F.sum(micro).cast("double") / 1_000_000)
                  .alias("total_value"))
-            .select(F.col(user_col),
+            .select(F.col("user_id"),
                     F.col("w.start").alias("session_start"),
                     F.col("w.end").alias("session_end"),
                     "n_events",
@@ -63,15 +61,13 @@ def sessionize(events: DataFrame, gap_minutes: int = 30,
 PERIOD_EPOCH = "2024-01-01 00:00:00"
 
 
-def _period(ts_col: str, period_days: int) -> "F.Column":
+def _period(period_days: int) -> "F.Column":
     return F.floor(
-        F.expr(f"timestampdiff(DAY, timestamp'{PERIOD_EPOCH}', {ts_col})")
+        F.expr(f"timestampdiff(DAY, timestamp'{PERIOD_EPOCH}', ts)")
         / period_days).cast("long")
 
 
-def cohort_retention(events: DataFrame, user_col: str = "user_id",
-                     ts_col: str = "ts",
-                     period_days: int = 7) -> DataFrame:
+def cohort_retention(events: DataFrame, period_days: int = 7) -> DataFrame:
     """Classic cohort-retention matrix: users grouped by the period of
     their FIRST event; for each (cohort, offset) cell, how many of them
     were active ``offset`` periods later.
@@ -88,8 +84,8 @@ def cohort_retention(events: DataFrame, user_col: str = "user_id",
     window over users, no per-user state."""
     if period_days < 1:
         raise ValueError(f"period_days must be >= 1; got {period_days}")
-    uw = (events.select(F.col(user_col).alias("u"),
-                        _period(ts_col, period_days).alias("w"))
+    uw = (events.select(F.col("user_id").alias("u"),
+                        _period(period_days).alias("w"))
           .distinct())
     firsts = uw.groupBy("u").agg(F.min("w").alias("cw"))
     sizes = firsts.groupBy("cw").agg(
@@ -106,8 +102,7 @@ def cohort_retention(events: DataFrame, user_col: str = "user_id",
             .orderBy("cohort_period", "period_offset"))
 
 
-def active_users(events: DataFrame, user_col: str = "user_id",
-                 ts_col: str = "ts", window_days: int = 7) -> DataFrame:
+def active_users(events: DataFrame, window_days: int = 7) -> DataFrame:
     """Per-day DAU and trailing-window WAU: (day, dau, wau).
 
     WAU(d) = distinct users active in [d - window + 1, d] — computed by
@@ -120,8 +115,7 @@ def active_users(events: DataFrame, user_col: str = "user_id",
     constant), and the day grid itself is tiny (one row per day)."""
     if window_days < 1:
         raise ValueError(f"window_days must be >= 1; got {window_days}")
-    ud = (events.select(F.col(user_col).alias("u"),
-                        _period(ts_col, 1).alias("d"))
+    ud = (events.select(F.col("user_id").alias("u"), _period(1).alias("d"))
           .distinct())
     days = ud.select(F.col("d").alias("day")).distinct()
     dau = ud.groupBy(F.col("d").alias("day")).agg(

@@ -22,21 +22,22 @@ from pyspark.sql import functions as F
 from ..functions import vectors as V
 
 
-def _query_vec(embs: DataFrame, query_id: int, id_col: str, vec_col: str) -> DataFrame:
+def _query_vec(embs: DataFrame, query_id: int, id_col: str) -> DataFrame:
     return embs.filter(F.col(id_col) == query_id).select(
-        F.col(id_col).alias("query_id"), V.as_double(F.col(vec_col)).alias("q_vec")
+        F.col(id_col).alias("query_id"),
+        V.as_double(F.col("embedding")).alias("q_vec")
     )
 
 
 def cosine_topk(embs: DataFrame, query_id: int, k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+                id_col: str = "vec_id") -> DataFrame:
     """Exact top-k neighbors of ``query_id`` by cosine similarity.
 
     Deterministic: ties broken by ascending id; similarity rounded to
     6 dp. Returns (vec_id, cosine_sim) with the query itself excluded.
     """
-    q = _query_vec(embs, query_id, id_col, vec_col)
-    sim = F.round(V.cosine(V.as_double(F.col(vec_col)), F.col("q_vec")), 6)
+    q = _query_vec(embs, query_id, id_col)
+    sim = F.round(V.cosine(V.as_double(F.col("embedding")), F.col("q_vec")), 6)
     return (
         embs.crossJoin(F.broadcast(q))
         .filter(F.col(id_col) != F.col("query_id"))
@@ -46,21 +47,18 @@ def cosine_topk(embs: DataFrame, query_id: int, k: int = 10,
     )
 
 
-def bucket_histogram(embs: DataFrame, n_bits: int = 8,
-                     id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def bucket_histogram(embs: DataFrame, n_bits: int = 8) -> DataFrame:
     """(bucket, n_vecs) under the sign-LSH coarse quantizer — the
     balance diagnostic for the ANN index layout."""
     return (
-        embs.select(V.sign_bucket(F.col(vec_col), n_bits).alias("bucket"))
+        embs.select(V.sign_bucket(F.col("embedding"), n_bits).alias("bucket"))
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n_vecs"))
     )
 
 
 def bucketed_topk_multiprobe(embs: DataFrame, query_id: int, k: int = 10,
-                             n_bits: int = 8, nprobe: int = 4,
-                             id_col: str = "vec_id",
-                             vec_col: str = "embedding") -> DataFrame:
+                             n_bits: int = 8, nprobe: int = 4) -> DataFrame:
     """Multi-probe IVF top-k (Lv et al., VLDB'07 multi-probe LSH): probe
     the query's sign-LSH bucket PLUS the ``nprobe - 1`` buckets reached
     by flipping the hyperplane bits with the smallest margin
@@ -72,18 +70,19 @@ def bucketed_topk_multiprobe(embs: DataFrame, query_id: int, k: int = 10,
     rounded to 6 dp, final ties by ascending id."""
     if not 1 <= nprobe <= 2 ** n_bits:
         raise ValueError(f"nprobe must be in [1, 2^{n_bits}]; got {nprobe}")
-    with_bucket = embs.withColumn("bucket", V.sign_bucket(F.col(vec_col), n_bits))
+    with_bucket = embs.withColumn(
+        "bucket", V.sign_bucket(F.col("embedding"), n_bits))
     margins = F.array_sort(F.array(*[
-        F.struct(F.abs(F.element_at(F.col(vec_col), j + 1).cast("double"))
+        F.struct(F.abs(F.element_at(F.col("embedding"), j + 1).cast("double"))
                  .alias("m"), F.lit(j).alias("j"))
         for j in range(n_bits)
     ]))
     flips = F.slice(margins, 1, nprobe - 1) if nprobe > 1 \
         else F.array().cast("array<struct<m:double,j:int>>")
     q = (
-        with_bucket.filter(F.col(id_col) == query_id)
-        .select(F.col(id_col).alias("query_id"),
-                V.as_double(F.col(vec_col)).alias("q_vec"),
+        with_bucket.filter(F.col("vec_id") == query_id)
+        .select(F.col("vec_id").alias("query_id"),
+                V.as_double(F.col("embedding")).alias("q_vec"),
                 F.col("bucket").alias("q_bucket"),
                 flips.alias("flips"))
         .select("query_id", "q_vec",
@@ -95,13 +94,13 @@ def bucketed_topk_multiprobe(embs: DataFrame, query_id: int, k: int = 10,
                             F.pow(F.lit(2.0), f["j"]).cast("long"))),
                 ).alias("probes"))
     )
-    sim = F.round(V.cosine(V.as_double(F.col(vec_col)), F.col("q_vec")), 6)
+    sim = F.round(V.cosine(V.as_double(F.col("embedding")), F.col("q_vec")), 6)
     return (
         with_bucket.join(F.broadcast(q),
                          F.array_contains(q["probes"], with_bucket["bucket"]))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(F.col("vec_id"), sim.alias("cosine_sim"))
+        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id").asc())
         .limit(k)
     )
 
@@ -116,9 +115,7 @@ def bucketed_topk_multiprobe(embs: DataFrame, query_id: int, k: int = 10,
 KMEANS_SCALE = 1000
 
 
-def sparse_cosine_pairs(docs: DataFrame, df_frac: float = 0.1,
-                        text_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
+def sparse_cosine_pairs(docs: DataFrame, df_frac: float = 0.1) -> DataFrame:
     """All-pairs sparse tf-idf cosine over the corpus's word-BIGRAM
     vocabulary (Bayardo et al. WWW'07 "Scaling up all pairs similarity
     search", simplified): pairs of documents sharing at least one
@@ -147,8 +144,8 @@ def sparse_cosine_pairs(docs: DataFrame, df_frac: float = 0.1,
         raise ValueError(f"df_frac must be in (0, 1]; got {df_frac}")
     from ..functions import text as T
 
-    tf = (docs.select(F.col(id_col).alias("doc"),
-                      F.explode(T.bigrams(T.tokens(F.col(text_col))))
+    tf = (docs.select(F.col("doc_id").alias("doc"),
+                      F.explode(T.bigrams(T.tokens(F.col("text"))))
                       .alias("term"))
           .groupBy("doc", "term").agg(F.count(F.lit(1)).alias("tf")))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -177,11 +174,11 @@ def sparse_cosine_pairs(docs: DataFrame, df_frac: float = 0.1,
                 " * sqrt(cast(nb2 as double))), 6)").alias("cosine")))
 
 
-def _lattice(embs: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+def _lattice(embs: DataFrame) -> DataFrame:
     qv = F.transform(
-        V.as_double(F.col(vec_col)),
+        V.as_double(F.col("embedding")),
         lambda x: F.round(x * KMEANS_SCALE, 0).cast("long"))
-    return embs.select(F.col(id_col), F.col(vec_col), qv.alias("qv"))
+    return embs.select(F.col("vec_id"), F.col("embedding"), qv.alias("qv"))
 
 
 def _l2sq(a, b) -> F.Column:
@@ -191,22 +188,20 @@ def _l2sq(a, b) -> F.Column:
         F.lit(0).cast("long"), lambda acc, v: acc + v)
 
 
-def _assign(lat: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
+def _assign(lat: DataFrame, cents: DataFrame) -> DataFrame:
     """Nearest-centroid assignment: broadcast the k centroids, exact
     integer distances, ties broken by ascending cid (struct-min)."""
     pairs = lat.crossJoin(F.broadcast(cents))
     scored = pairs.select(
-        F.col(id_col), F.col("qv"),
+        F.col("vec_id"), F.col("qv"),
         F.struct(_l2sq(F.col("qv"), F.col("cv")).alias("d2"),
                  F.col("cid")).alias("dc"))
-    return (scored.groupBy(id_col)
+    return (scored.groupBy("vec_id")
             .agg(F.min("dc").alias("m"), F.first("qv").alias("qv"))
-            .select(F.col(id_col), F.col("m.cid").alias("cid"), F.col("qv")))
+            .select(F.col("vec_id"), F.col("m.cid").alias("cid"), F.col("qv")))
 
 
-def kmeans_centroids(embs: DataFrame, k: int = 4, iters: int = 2,
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> DataFrame:
+def kmeans_centroids(embs: DataFrame, k: int = 4, iters: int = 2) -> DataFrame:
     """Deterministic Lloyd's k-means over the embedding column —
     (cid, cv) with ``cv`` an ``array<bigint>`` lattice centroid.
 
@@ -224,12 +219,12 @@ def kmeans_centroids(embs: DataFrame, k: int = 4, iters: int = 2,
     train on a sample and hold centroids in a table, which is exactly
     the shape this returns.
     """
-    lat = _lattice(embs, id_col, vec_col)
-    cents = (lat.orderBy(F.col(id_col)).limit(k)
-             .select(F.col(id_col).cast("long").alias("cid"),
+    lat = _lattice(embs)
+    cents = (lat.orderBy(F.col("vec_id")).limit(k)
+             .select(F.col("vec_id").cast("long").alias("cid"),
                      F.col("qv").alias("cv")))
     for _ in range(iters):
-        assigned = _assign(lat, cents, id_col)
+        assigned = _assign(lat, cents)
         per_dim = (assigned.select("cid", F.posexplode("qv").alias("dim", "v"))
                    .groupBy("cid", "dim")
                    .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
@@ -245,9 +240,8 @@ def kmeans_centroids(embs: DataFrame, k: int = 4, iters: int = 2,
 
 
 def kmeans_centroids_sampled(embs: DataFrame, k: int = 4, iters: int = 2,
-                             sample_rate: float = 0.5, seed: int = 0,
-                             id_col: str = "vec_id",
-                             vec_col: str = "embedding") -> DataFrame:
+                             sample_rate: float = 0.5,
+                             seed: int = 0) -> DataFrame:
     """The production codebook fit: Lloyd iterations over a DETERMINISTIC
     hash-sample of the corpus only (``sampling.hash_sample`` — md5-mod
     membership, identical rows at any parallelism / any engine), so per-
@@ -263,7 +257,7 @@ def kmeans_centroids_sampled(embs: DataFrame, k: int = 4, iters: int = 2,
     """
     from .sampling import hash_sample
 
-    sample = hash_sample(embs, sample_rate, seed, id_col=id_col)
+    sample = hash_sample(embs, sample_rate, seed, id_col="vec_id")
     # loud guard (lane-cap / MAX_TABLES style): with a small corpus or a
     # low rate the seed `LIMIT k` would silently yield < k centroids
     # while ivf_topk_sampled still validates nprobe against the REQUESTED
@@ -276,43 +270,42 @@ def kmeans_centroids_sampled(embs: DataFrame, k: int = 4, iters: int = 2,
             f"kmeans_centroids_sampled: hash sample holds {n_sample} "
             f"vectors < k={k} centroids; raise sample_rate (got "
             f"{sample_rate}) or lower k")
-    return kmeans_centroids(sample, k, iters, id_col, vec_col)
+    return kmeans_centroids(sample, k, iters)
 
 
 def _ivf_search(embs: DataFrame, cents: DataFrame, query_id: int, k: int,
-                nprobe: int, id_col: str, vec_col: str) -> DataFrame:
+                nprobe: int) -> DataFrame:
     """Shared IVF back half: one full-corpus nearest-centroid assignment,
     probe the ``nprobe`` cells nearest the query, exact cosine rank
     inside the probed cells only."""
-    lat = _lattice(embs, id_col, vec_col)
+    lat = _lattice(embs)
     assigned = (lat.crossJoin(F.broadcast(cents))
-                .select(F.col(id_col), F.col(vec_col),
+                .select(F.col("vec_id"), F.col("embedding"),
                         F.struct(_l2sq(F.col("qv"), F.col("cv")).alias("d2"),
                                  F.col("cid")).alias("dc"))
-                .groupBy(id_col)
-                .agg(F.min("dc").alias("m"), F.first(vec_col).alias(vec_col))
-                .select(F.col(id_col), F.col("m.cid").alias("cid"),
-                        F.col(vec_col)))
-    probes = (lat.filter(F.col(id_col) == query_id)
+                .groupBy("vec_id")
+                .agg(F.min("dc").alias("m"),
+                     F.first("embedding").alias("embedding"))
+                .select(F.col("vec_id"), F.col("m.cid").alias("cid"),
+                        F.col("embedding")))
+    probes = (lat.filter(F.col("vec_id") == query_id)
               .crossJoin(F.broadcast(cents))
               .select(F.col("cid"),
                       _l2sq(F.col("qv"), F.col("cv")).alias("d2"))
               .orderBy("d2", "cid").limit(nprobe).select("cid"))
-    q = _query_vec(embs, query_id, id_col, vec_col)
-    sim = F.round(V.cosine(V.as_double(F.col(vec_col)), F.col("q_vec")), 6)
+    q = _query_vec(embs, query_id, "vec_id")
+    sim = F.round(V.cosine(V.as_double(F.col("embedding")), F.col("q_vec")), 6)
     return (assigned.join(F.broadcast(probes), "cid")
             .crossJoin(F.broadcast(q))
-            .filter(F.col(id_col) != F.col("query_id"))
-            .select(F.col(id_col), F.col("cid"), sim.alias("cosine_sim"))
-            .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
+            .filter(F.col("vec_id") != F.col("query_id"))
+            .select(F.col("vec_id"), F.col("cid"), sim.alias("cosine_sim"))
+            .orderBy(F.col("cosine_sim").desc(), F.col("vec_id").asc())
             .limit(k))
 
 
 def ivf_topk_sampled(embs: DataFrame, query_id: int, k: int = 10,
                      n_centroids: int = 4, iters: int = 2, nprobe: int = 2,
-                     sample_rate: float = 0.5, seed: int = 0,
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> DataFrame:
+                     sample_rate: float = 0.5, seed: int = 0) -> DataFrame:
     """IVF ANN with the codebook trained on a hash-sample
     (:func:`kmeans_centroids_sampled`): the full corpus is scanned once
     for assignment, never per Lloyd round.  Same output contract as
@@ -321,13 +314,12 @@ def ivf_topk_sampled(embs: DataFrame, query_id: int, k: int = 10,
     if not 1 <= nprobe <= n_centroids:
         raise ValueError(f"nprobe must be in [1, {n_centroids}]; got {nprobe}")
     cents = kmeans_centroids_sampled(embs, n_centroids, iters, sample_rate,
-                                     seed, id_col, vec_col)
-    return _ivf_search(embs, cents, query_id, k, nprobe, id_col, vec_col)
+                                     seed)
+    return _ivf_search(embs, cents, query_id, k, nprobe)
 
 
 def ivf_topk(embs: DataFrame, query_id: int, k: int = 10,
              n_centroids: int = 4, iters: int = 2, nprobe: int = 2,
-             id_col: str = "vec_id", vec_col: str = "embedding",
              cents: DataFrame | None = None) -> DataFrame:
     """IVF ANN with a TRAINED coarse quantizer: k-means codebook,
     assign every vector to its nearest centroid, probe the ``nprobe``
@@ -347,13 +339,11 @@ def ivf_topk(embs: DataFrame, query_id: int, k: int = 10,
     if not 1 <= nprobe <= n_centroids:
         raise ValueError(f"nprobe must be in [1, {n_centroids}]; got {nprobe}")
     if cents is None:
-        cents = kmeans_centroids(embs, n_centroids, iters, id_col, vec_col)
-    return _ivf_search(embs, cents, query_id, k, nprobe, id_col, vec_col)
+        cents = kmeans_centroids(embs, n_centroids, iters)
+    return _ivf_search(embs, cents, query_id, k, nprobe)
 
 
 def assign_centroids(embs: DataFrame, n_centroids: int = 4, iters: int = 2,
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding",
                      cents: DataFrame | None = None) -> DataFrame:
     """(id, cid, vec): every vector labeled with its nearest trained
     centroid — the shared front half of IVF search and semantic dedup.
@@ -364,21 +354,21 @@ def assign_centroids(embs: DataFrame, n_centroids: int = 4, iters: int = 2,
     prior index build persisted) to assign against a stored codebook
     with no Lloyd rounds in-plan."""
     if cents is None:
-        cents = kmeans_centroids(embs, n_centroids, iters, id_col, vec_col)
-    lat = _lattice(embs, id_col, vec_col)
+        cents = kmeans_centroids(embs, n_centroids, iters)
+    lat = _lattice(embs)
     return (lat.crossJoin(F.broadcast(cents))
-            .select(F.col(id_col), F.col(vec_col),
+            .select(F.col("vec_id"), F.col("embedding"),
                     F.struct(_l2sq(F.col("qv"), F.col("cv")).alias("d2"),
                              F.col("cid")).alias("dc"))
-            .groupBy(id_col)
-            .agg(F.min("dc").alias("m"), F.first(vec_col).alias(vec_col))
-            .select(F.col(id_col), F.col("m.cid").alias("cid"),
-                    F.col(vec_col)))
+            .groupBy("vec_id")
+            .agg(F.min("dc").alias("m"),
+                 F.first("embedding").alias("embedding"))
+            .select(F.col("vec_id"), F.col("m.cid").alias("cid"),
+                    F.col("embedding")))
 
 
-def cluster_profile(embs: DataFrame, n_centroids: int = 4, iters: int = 2,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
+def cluster_profile(embs: DataFrame, n_centroids: int = 4,
+                    iters: int = 2) -> DataFrame:
     """Corpus map: per-centroid population and inertia — (cid, n_vecs,
     inertia, avg_d2) ordered by cid, where ``inertia`` is the EXACT
     integer sum of squared lattice distances to the assigned centroid
@@ -391,13 +381,13 @@ def cluster_profile(embs: DataFrame, n_centroids: int = 4, iters: int = 2,
     k-row shuffle.  Integer inertia makes the whole row set
     addition-order-free — any engine, any partitioning, same bytes.
     """
-    cents = kmeans_centroids(embs, n_centroids, iters, id_col, vec_col)
-    lat = _lattice(embs, id_col, vec_col)
+    cents = kmeans_centroids(embs, n_centroids, iters)
+    lat = _lattice(embs)
     assigned = (lat.crossJoin(F.broadcast(cents))
-                .select(F.col(id_col),
+                .select(F.col("vec_id"),
                         F.struct(_l2sq(F.col("qv"), F.col("cv")).alias("d2"),
                                  F.col("cid")).alias("dc"))
-                .groupBy(id_col)
+                .groupBy("vec_id")
                 .agg(F.min("dc").alias("m"))
                 .select(F.col("m.cid").alias("cid"),
                         F.col("m.d2").alias("d2")))
@@ -411,8 +401,7 @@ def cluster_profile(embs: DataFrame, n_centroids: int = 4, iters: int = 2,
 
 
 def semantic_near_pairs(embs: DataFrame, n_centroids: int = 4, iters: int = 2,
-                        threshold: float = 0.5, id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> DataFrame:
+                        threshold: float = 0.5) -> DataFrame:
     """Semantic near-duplicate pairs, SemDeDup-style (Abbas et al. 2023,
     arXiv:2303.09540): cluster the embedding space with the trained
     k-means quantizer, then compare pairs ONLY within a cluster and gate
@@ -428,11 +417,11 @@ def semantic_near_pairs(embs: DataFrame, n_centroids: int = 4, iters: int = 2,
     cluster scale write the corpus partitioned by cid and the
     self-join needs no exchange at all.
     """
-    assigned = assign_centroids(embs, n_centroids, iters, id_col, vec_col)
-    a = assigned.select(F.col("cid"), F.col(id_col).alias("id_a"),
-                        V.as_double(F.col(vec_col)).alias("va"))
-    b = assigned.select(F.col("cid"), F.col(id_col).alias("id_b"),
-                        V.as_double(F.col(vec_col)).alias("vb"))
+    assigned = assign_centroids(embs, n_centroids, iters)
+    a = assigned.select(F.col("cid"), F.col("vec_id").alias("id_a"),
+                        V.as_double(F.col("embedding")).alias("va"))
+    b = assigned.select(F.col("cid"), F.col("vec_id").alias("id_b"),
+                        V.as_double(F.col("embedding")).alias("vb"))
     sim = F.round(V.cosine(F.col("va"), F.col("vb")), 6)
     return (a.join(b, "cid")
             .filter(F.col("id_a") < F.col("id_b"))
@@ -441,8 +430,7 @@ def semantic_near_pairs(embs: DataFrame, n_centroids: int = 4, iters: int = 2,
 
 
 def semantic_dedup(embs: DataFrame, n_centroids: int = 4, iters: int = 2,
-                   threshold: float = 0.5, id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> DataFrame:
+                   threshold: float = 0.5) -> DataFrame:
     """Semantic dedup: drop every vector that has a LOWER-id semantic
     near-duplicate in its cluster (greedy keep-first, the same keep-min
     convention as ``dedup.deduplicate_corpus``).  Returns the kept rows
@@ -450,27 +438,25 @@ def semantic_dedup(embs: DataFrame, n_centroids: int = 4, iters: int = 2,
 
     The anti-join is on the id alone, so the kept set is deterministic
     under any partitioning of the pair table."""
-    pairs = semantic_near_pairs(embs, n_centroids, iters, threshold,
-                                id_col, vec_col)
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    assigned = assign_centroids(embs, n_centroids, iters, id_col, vec_col)
-    return (assigned.join(losers, id_col, "left_anti")
-            .select(F.col(id_col), F.col("cid")))
+    pairs = semantic_near_pairs(embs, n_centroids, iters, threshold)
+    losers = pairs.select(F.col("id_b").alias("vec_id")).distinct()
+    assigned = assign_centroids(embs, n_centroids, iters)
+    return (assigned.join(losers, "vec_id", "left_anti")
+            .select(F.col("vec_id"), F.col("cid")))
 
 
-def _subspace(embs: DataFrame, sub: int, sub_dim: int,
-              id_col: str, vec_col: str) -> DataFrame:
+def _subspace(embs: DataFrame, sub: int, sub_dim: int) -> DataFrame:
     """Rows restricted to one PQ subspace: the ``sub``-th contiguous
     ``sub_dim``-wide slice of the embedding, under the original column
     name so the k-means machinery applies unchanged."""
     return embs.select(
-        F.col(id_col),
-        F.slice(F.col(vec_col), sub * sub_dim + 1, sub_dim).alias(vec_col))
+        F.col("vec_id"),
+        F.slice(F.col("embedding"), sub * sub_dim + 1, sub_dim)
+        .alias("embedding"))
 
 
 def pq_codebooks(embs: DataFrame, m: int = 4, k: int = 4, iters: int = 2,
-                 dim: int = 64, id_col: str = "vec_id",
-                 vec_col: str = "embedding") -> DataFrame:
+                 dim: int = 64) -> DataFrame:
     """Product-quantization codebooks (Jégou et al., TPAMI'11 §II): split
     the ``dim``-dimensional space into ``m`` contiguous subspaces and fit
     an independent k-means codebook of ``k`` codewords in each.  Returns
@@ -487,15 +473,13 @@ def pq_codebooks(embs: DataFrame, m: int = 4, k: int = 4, iters: int = 2,
     sub_dim = dim // m
     books = None
     for s in range(m):
-        cb = (kmeans_centroids(_subspace(embs, s, sub_dim, id_col, vec_col),
-                               k, iters, id_col, vec_col)
+        cb = (kmeans_centroids(_subspace(embs, s, sub_dim), k, iters)
               .select(F.lit(s).alias("sub"), "cid", "cv"))
         books = cb if books is None else books.unionByName(cb)
     return books
 
 
-def _sub_lattice_rows(embs: DataFrame, m: int, sub_dim: int,
-                      id_col: str, vec_col: str) -> DataFrame:
+def _sub_lattice_rows(embs: DataFrame, m: int, sub_dim: int) -> DataFrame:
     """(id, sub, subqv): every vector exploded into its ``m`` lattice
     subvectors in ONE corpus scan.  The posexplode input builds each
     slice-then-transform element inline (cheap per-element arithmetic
@@ -504,18 +488,16 @@ def _sub_lattice_rows(embs: DataFrame, m: int, sub_dim: int,
     reference (docs/PLANS.md, expression single-evaluation)."""
     arr = F.array(*[
         F.transform(
-            F.slice(V.as_double(F.col(vec_col)), s * sub_dim + 1, sub_dim),
+            F.slice(V.as_double(F.col("embedding")), s * sub_dim + 1, sub_dim),
             lambda x: F.round(x * KMEANS_SCALE, 0).cast("long"))
         for s in range(m)
     ])
-    return embs.select(F.col(id_col),
+    return embs.select(F.col("vec_id"),
                        F.posexplode(arr).alias("sub", "subqv"))
 
 
 def pq_codes(embs: DataFrame, m: int = 4, k: int = 4, iters: int = 2,
-             dim: int = 64, id_col: str = "vec_id",
-             vec_col: str = "embedding",
-             books: DataFrame | None = None) -> DataFrame:
+             dim: int = 64, books: DataFrame | None = None) -> DataFrame:
     """PQ encoding: every vector reduced to ``m`` codebook ids — (id,
     sub, code), one row per (vector, subspace), ``code`` the cid of the
     nearest subspace codeword (exact integer lattice distance, ties to
@@ -536,22 +518,21 @@ def pq_codes(embs: DataFrame, m: int = 4, k: int = 4, iters: int = 2,
         raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
     sub_dim = dim // m
     if books is None:
-        books = pq_codebooks(embs, m, k, iters, dim, id_col, vec_col)
+        books = pq_codebooks(embs, m, k, iters, dim)
     b = books.select(F.col("sub").alias("b_sub"), "cid", "cv")
-    scored = (_sub_lattice_rows(embs, m, sub_dim, id_col, vec_col)
+    scored = (_sub_lattice_rows(embs, m, sub_dim)
               .join(F.broadcast(b), F.col("sub") == F.col("b_sub"))
-              .select(F.col(id_col), F.col("sub"),
+              .select(F.col("vec_id"), F.col("sub"),
                       F.struct(_l2sq(F.col("subqv"), F.col("cv"))
                                .alias("d2"), F.col("cid")).alias("dc")))
-    return (scored.groupBy(id_col, "sub")
+    return (scored.groupBy("vec_id", "sub")
             .agg(F.min("dc").alias("mn"))
-            .select(F.col(id_col), F.col("sub"),
+            .select(F.col("vec_id"), F.col("sub"),
                     F.col("mn.cid").alias("code")))
 
 
 def pq_topk(embs: DataFrame, query_id: int, k_neighbors: int = 10,
             m: int = 4, k: int = 4, iters: int = 2, dim: int = 64,
-            id_col: str = "vec_id", vec_col: str = "embedding",
             books: DataFrame | None = None,
             codes: DataFrame | None = None) -> DataFrame:
     """Asymmetric-distance (ADC) PQ search (Jégou et al., TPAMI'11 §III):
@@ -582,11 +563,10 @@ def pq_topk(embs: DataFrame, query_id: int, k_neighbors: int = 10,
             "than the LUT silently corrupt every distance")
     sub_dim = dim // m
     if books is None:
-        books = pq_codebooks(embs, m, k, iters, dim, id_col, vec_col)
-        codes = pq_codes(embs, m, k, iters, dim, id_col, vec_col,
-                         books=books)
-    q_subs = (_sub_lattice_rows(embs, m, sub_dim, id_col, vec_col)
-              .filter(F.col(id_col) == query_id)
+        books = pq_codebooks(embs, m, k, iters, dim)
+        codes = pq_codes(embs, m, k, iters, dim, books=books)
+    q_subs = (_sub_lattice_rows(embs, m, sub_dim)
+              .filter(F.col("vec_id") == query_id)
               .select(F.col("sub").alias("q_sub"),
                       F.col("subqv").alias("q_vec")))
     lut = (books.join(F.broadcast(q_subs),
@@ -596,17 +576,16 @@ def pq_topk(embs: DataFrame, query_id: int, k_neighbors: int = 10,
     return (codes.join(F.broadcast(lut),
                        (codes["sub"] == lut["sub"])
                        & (codes["code"] == lut["cid"]))
-            .filter(F.col(id_col) != query_id)
-            .groupBy(id_col)
+            .filter(F.col("vec_id") != query_id)
+            .groupBy("vec_id")
             .agg(F.sum("d2").alias("adc_d2"))
-            .orderBy(F.col("adc_d2").asc(), F.col(id_col).asc())
+            .orderBy(F.col("adc_d2").asc(), F.col("vec_id").asc())
             .limit(k_neighbors))
 
 
 def ivfadc_topk(embs: DataFrame, query_id: int, k_neighbors: int = 10,
                 n_centroids: int = 4, iters: int = 2, nprobe: int = 2,
                 m: int = 4, k: int = 4, dim: int = 64,
-                id_col: str = "vec_id", vec_col: str = "embedding",
                 cents: DataFrame | None = None,
                 books: DataFrame | None = None,
                 codes: DataFrame | None = None) -> DataFrame:
@@ -646,15 +625,13 @@ def ivfadc_topk(embs: DataFrame, query_id: int, k_neighbors: int = 10,
             "pair codes with a codebook they were not encoded against")
     sub_dim = dim // m
     if cents is None:
-        cents = kmeans_centroids(embs, n_centroids, iters, id_col, vec_col)
-        books = pq_codebooks(embs, m, k, iters, dim, id_col, vec_col)
-        codes = pq_codes(embs, m, k, iters, dim, id_col, vec_col,
-                         books=books) \
-            .join(assign_centroids(embs, cents=cents, id_col=id_col,
-                                   vec_col=vec_col)
-                  .select(F.col(id_col), F.col("cid")), id_col)
-    lat = _lattice(embs, id_col, vec_col)
-    probes = (lat.filter(F.col(id_col) == query_id)
+        cents = kmeans_centroids(embs, n_centroids, iters)
+        books = pq_codebooks(embs, m, k, iters, dim)
+        codes = pq_codes(embs, m, k, iters, dim, books=books) \
+            .join(assign_centroids(embs, cents=cents)
+                  .select(F.col("vec_id"), F.col("cid")), "vec_id")
+    lat = _lattice(embs)
+    probes = (lat.filter(F.col("vec_id") == query_id)
               .crossJoin(F.broadcast(cents))
               .select(F.col("cid"),
                       _l2sq(F.col("qv"), F.col("cv")).alias("d2"))
@@ -663,8 +640,8 @@ def ivfadc_topk(embs: DataFrame, query_id: int, k_neighbors: int = 10,
     # the nprobe cells before any ADC work (file-level when the stored
     # codes are partitioned by cid; a broadcast hash semi-join otherwise)
     pruned = codes.join(F.broadcast(probes), "cid")
-    q_subs = (_sub_lattice_rows(embs, m, sub_dim, id_col, vec_col)
-              .filter(F.col(id_col) == query_id)
+    q_subs = (_sub_lattice_rows(embs, m, sub_dim)
+              .filter(F.col("vec_id") == query_id)
               .select(F.col("sub").alias("q_sub"),
                       F.col("subqv").alias("q_vec")))
     lut = (books.join(F.broadcast(q_subs),
@@ -674,32 +651,33 @@ def ivfadc_topk(embs: DataFrame, query_id: int, k_neighbors: int = 10,
     return (pruned.join(F.broadcast(lut),
                         (pruned["sub"] == lut["l_sub"])
                         & (pruned["code"] == lut["l_cid"]))
-            .filter(F.col(id_col) != query_id)
-            .groupBy(id_col, "cid")
+            .filter(F.col("vec_id") != query_id)
+            .groupBy("vec_id", "cid")
             .agg(F.sum("d2").alias("adc_d2"))
-            .orderBy(F.col("adc_d2").asc(), F.col(id_col).asc())
+            .orderBy(F.col("adc_d2").asc(), F.col("vec_id").asc())
             .limit(k_neighbors))
 
 
-def bucketed_topk(embs: DataFrame, query_id: int, k: int = 10, n_bits: int = 8,
-                  id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def bucketed_topk(embs: DataFrame, query_id: int, k: int = 10,
+                  n_bits: int = 8) -> DataFrame:
     """Approximate top-k: exact cosine ranking restricted to the
     query's sign-LSH bucket (IVF nprobe=1). Recall trades off with
     n_bits; the scan prunes to ~1/2^bits of the corpus when the table
     is partitioned by bucket."""
-    with_bucket = embs.withColumn("bucket", V.sign_bucket(F.col(vec_col), n_bits))
+    with_bucket = embs.withColumn(
+        "bucket", V.sign_bucket(F.col("embedding"), n_bits))
     q = (
-        with_bucket.filter(F.col(id_col) == query_id)
-        .select(F.col(id_col).alias("query_id"),
-                V.as_double(F.col(vec_col)).alias("q_vec"),
+        with_bucket.filter(F.col("vec_id") == query_id)
+        .select(F.col("vec_id").alias("query_id"),
+                V.as_double(F.col("embedding")).alias("q_vec"),
                 F.col("bucket").alias("q_bucket"))
     )
-    sim = F.round(V.cosine(V.as_double(F.col(vec_col)), F.col("q_vec")), 6)
+    sim = F.round(V.cosine(V.as_double(F.col("embedding")), F.col("q_vec")), 6)
     return (
         with_bucket.join(F.broadcast(q), with_bucket["bucket"] == q["q_bucket"])
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(F.col("vec_id"), sim.alias("cosine_sim"))
+        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id").asc())
         .limit(k)
     )
 
@@ -723,8 +701,6 @@ def jl_sign_matrix(spark, in_dim: int, out_dim: int, seed: int = 0):
 
 
 def project_embeddings(embs: DataFrame, out_dim: int = 16, seed: int = 0,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding",
                        dim: int = 64) -> DataFrame:
     """JL sign projection on the integer lattice: y_j = Σ_i x_i·s(i,j)
     with x the KMEANS_SCALE-rounded lattice values — exact bigint sums,
@@ -742,40 +718,38 @@ def project_embeddings(embs: DataFrame, out_dim: int = 16, seed: int = 0,
     whose width is out_dim longs per vector."""
     if out_dim < 1:
         raise ValueError(f"out_dim must be >= 1; got {out_dim}")
-    lat = _lattice(embs, id_col, vec_col)
+    lat = _lattice(embs)
     signs = jl_sign_matrix(embs.sparkSession, dim, out_dim, seed)
-    expl = lat.select(F.col(id_col), F.posexplode("qv").alias("i", "v"))
+    expl = lat.select(F.col("vec_id"), F.posexplode("qv").alias("i", "v"))
     return (expl.join(F.broadcast(signs), "i")
-            .groupBy(id_col, "j")
+            .groupBy("vec_id", "j")
             .agg(F.sum(F.col("v") * F.col("s")).alias("y")))
 
 
 def jl_topk(embs: DataFrame, query_id: int, k: int, out_dim: int = 16,
-            seed: int = 0, id_col: str = "vec_id",
-            vec_col: str = "embedding", dim: int = 64) -> DataFrame:
+            seed: int = 0, dim: int = 64) -> DataFrame:
     """Cosine top-k in the PROJECTED space: exact integer dots/norms
     over the projected vectors, one double division + sqrt at the very
     end (correctly-rounded IEEE ops — engine-identical), ties by id.
     Returns (vec_id, proj_cosine)."""
-    proj = project_embeddings(embs, out_dim, seed, id_col, vec_col, dim)
-    q = proj.filter(F.col(id_col) == query_id) \
+    proj = project_embeddings(embs, out_dim, seed, dim)
+    q = proj.filter(F.col("vec_id") == query_id) \
         .select(F.col("j"), F.col("y").alias("qy"))
-    joined = (proj.filter(F.col(id_col) != query_id)
+    joined = (proj.filter(F.col("vec_id") != query_id)
               .join(F.broadcast(q), "j")
-              .groupBy(id_col)
+              .groupBy("vec_id")
               .agg(F.sum(F.col("y") * F.col("qy")).alias("dot"),
                    F.sum(F.col("y") * F.col("y")).alias("n2"),
                    F.sum(F.col("qy") * F.col("qy")).alias("qn2")))
     cos = F.round(F.col("dot") / (F.sqrt(F.col("n2")) * F.sqrt(F.col("qn2"))),
                   6)
-    return (joined.select(F.col(id_col), cos.alias("proj_cosine"))
-            .orderBy(F.col("proj_cosine").desc(), F.col(id_col).asc())
+    return (joined.select(F.col("vec_id"), cos.alias("proj_cosine"))
+            .orderBy(F.col("proj_cosine").desc(), F.col("vec_id").asc())
             .limit(k))
 
 
 def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
              n_centroids: int = 4, iters: int = 2, nprobe: int = 2,
-             id_col: str = "vec_id", vec_col: str = "embedding",
              cents: DataFrame | None = None) -> DataFrame:
     """Batch k-NN JOIN: for EVERY query vector, its top-``k`` cosine
     neighbors in the corpus — the many-queries shape of retrieval-
@@ -807,27 +781,26 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
     from pyspark.sql import Window
 
     if cents is None:
-        cents = kmeans_centroids(corpus, n_centroids, iters, id_col, vec_col)
-    assigned = assign_centroids(corpus, cents=cents, id_col=id_col,
-                                vec_col=vec_col)
-    qlat = _lattice(queries, id_col, vec_col)
+        cents = kmeans_centroids(corpus, n_centroids, iters)
+    assigned = assign_centroids(corpus, cents=cents)
+    qlat = _lattice(queries)
     qdist = (qlat.crossJoin(F.broadcast(cents))
-             .select(F.col(id_col).alias("query_id"), F.col("cid"),
+             .select(F.col("vec_id").alias("query_id"), F.col("cid"),
                      _l2sq(F.col("qv"), F.col("cv")).alias("d2")))
     wprobe = Window.partitionBy("query_id").orderBy(F.col("d2").asc(),
                                                     F.col("cid").asc())
     probes = (qdist.withColumn("_pn", F.row_number().over(wprobe))
               .filter(F.col("_pn") <= nprobe).select("query_id", "cid"))
-    qvecs = queries.select(F.col(id_col).alias("query_id"),
-                           V.as_double(F.col(vec_col)).alias("q_vec"))
+    qvecs = queries.select(F.col("vec_id").alias("query_id"),
+                           V.as_double(F.col("embedding")).alias("q_vec"))
     probe_side = probes.join(qvecs, "query_id")
-    sim = F.round(V.cosine(V.as_double(F.col(vec_col)), F.col("q_vec")), 6)
+    sim = F.round(V.cosine(V.as_double(F.col("embedding")), F.col("q_vec")), 6)
     cand = (assigned.join(F.broadcast(probe_side), "cid")
-            .filter(F.col(id_col) != F.col("query_id"))
-            .select(F.col("query_id"), F.col(id_col), F.col("cid"),
+            .filter(F.col("vec_id") != F.col("query_id"))
+            .select(F.col("query_id"), F.col("vec_id"), F.col("cid"),
                     sim.alias("cosine_sim")))
     wk = Window.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(),
-                                                F.col(id_col).asc())
+                                                F.col("vec_id").asc())
     return (cand.withColumn("rank", F.row_number().over(wk))
             .filter(F.col("rank") <= k)
             .withColumn("rank", F.col("rank").cast("long"))
@@ -837,15 +810,14 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
 SQ8_LEVELS = 255  # int8 code range [0, 255]
 
 
-def sq8_bounds(embs: DataFrame, id_col: str = "vec_id",
-               vec_col: str = "embedding") -> DataFrame:
+def sq8_bounds(embs: DataFrame) -> DataFrame:
     """Per-dimension (dim, mn, mx) lattice bounds over the corpus — the
     trained parameters of scalar quantization (the stored artifact; one
     row per dimension, broadcast-sized for any practical dim).
 
     Scale: one posexplode + (dim) partial-agg min/max — shuffle
     cardinality is ``dim`` rows regardless of N."""
-    lat = _lattice(embs, id_col, vec_col)
+    lat = _lattice(embs)
     return (lat.select(F.posexplode("qv").alias("dim", "v"))
             .groupBy("dim")
             .agg(F.min("v").alias("mn"), F.max("v").alias("mx")))
@@ -862,9 +834,7 @@ def _sq8_bounds_row(bounds: DataFrame) -> DataFrame:
                     F.transform("p", lambda s: s["mx"]).alias("mxs")))
 
 
-def sq8_codes(embs: DataFrame, id_col: str = "vec_id",
-              vec_col: str = "embedding",
-              bounds: DataFrame | None = None) -> DataFrame:
+def sq8_codes(embs: DataFrame, bounds: DataFrame | None = None) -> DataFrame:
     """Scalar int8 quantization: every lattice value mapped to a code in
     [0, 255] by per-dimension min-max — (id, codes array<long>), an 8x
     (fp64-lattice) / 4x (fp32) shrink of the stored index with none of
@@ -880,11 +850,11 @@ def sq8_codes(embs: DataFrame, id_col: str = "vec_id",
     Scale: bounds fold to one broadcast row of arrays; encoding is a
     single narrow zip_with per vector — no shuffle of the data."""
     if bounds is None:
-        bounds = sq8_bounds(embs, id_col, vec_col)
+        bounds = sq8_bounds(embs)
     brow = _sq8_bounds_row(bounds)
-    lat = _lattice(embs, id_col, vec_col)
+    lat = _lattice(embs)
     return (lat.crossJoin(F.broadcast(brow))
-            .select(F.col(id_col), _sq8_code_expr().alias("codes")))
+            .select(F.col("vec_id"), _sq8_code_expr().alias("codes")))
 
 
 def _sq8_code_expr() -> F.Column:
@@ -904,7 +874,6 @@ def _sq8_code_expr() -> F.Column:
 
 
 def sq8_topk(embs: DataFrame, query_id: int, k: int = 10,
-             id_col: str = "vec_id", vec_col: str = "embedding",
              codes: DataFrame | None = None,
              bounds: DataFrame | None = None) -> DataFrame:
     """Asymmetric scalar-quantized top-k: the full-precision lattice
@@ -933,15 +902,15 @@ def sq8_topk(embs: DataFrame, query_id: int, k: int = 10,
             "or neither — codes reconstructed against foreign bounds "
             "silently corrupt every distance")
     if codes is None:
-        brow = _sq8_bounds_row(sq8_bounds(embs, id_col, vec_col))
-        coded = (_lattice(embs, id_col, vec_col)
+        brow = _sq8_bounds_row(sq8_bounds(embs))
+        coded = (_lattice(embs)
                  .crossJoin(F.broadcast(brow))
-                 .select(F.col(id_col), _sq8_code_expr().alias("codes"),
+                 .select(F.col("vec_id"), _sq8_code_expr().alias("codes"),
                          F.col("mns"), F.col("mxs")))
     else:
         coded = codes.crossJoin(F.broadcast(_sq8_bounds_row(bounds)))
-    q = (_lattice(embs, id_col, vec_col)
-         .filter(F.col(id_col) == query_id)
+    q = (_lattice(embs)
+         .filter(F.col("vec_id") == query_id)
          .select(F.col("qv").alias("qqv")))
     z = F.arrays_zip(F.col("codes"), F.col("mns"), F.col("mxs"),
                      F.col("qqv"))
@@ -960,16 +929,15 @@ def sq8_topk(embs: DataFrame, query_id: int, k: int = 10,
     diffs = F.transform(z, lambda s: s["qqv"] - _recon(s))
     d2 = F.aggregate(diffs, F.lit(0).cast("long"),
                      lambda acc, v: acc + v * v)
-    return (coded.filter(F.col(id_col) != query_id)
+    return (coded.filter(F.col("vec_id") != query_id)
             .crossJoin(F.broadcast(q))
-            .select(F.col(id_col), d2.alias("sq_d2"))
-            .orderBy(F.col("sq_d2").asc(), F.col(id_col).asc())
+            .select(F.col("vec_id"), d2.alias("sq_d2"))
+            .orderBy(F.col("sq_d2").asc(), F.col("vec_id").asc())
             .limit(k))
 
 
 def ivfsq_topk(embs: DataFrame, query_id: int, k: int = 10,
                n_centroids: int = 4, iters: int = 2, nprobe: int = 2,
-               id_col: str = "vec_id", vec_col: str = "embedding",
                cents: DataFrame | None = None,
                bounds: DataFrame | None = None,
                codes: DataFrame | None = None) -> DataFrame:
@@ -1010,19 +978,18 @@ def ivfsq_topk(embs: DataFrame, query_id: int, k: int = 10,
             "index) or none — mixing stored and in-plan artifacts can "
             "pair codes with bounds/cells they were not encoded under")
     if cents is None:
-        cents = kmeans_centroids(embs, n_centroids, iters, id_col, vec_col)
-        brow = _sq8_bounds_row(sq8_bounds(embs, id_col, vec_col))
-        coded = (_lattice(embs, id_col, vec_col)
+        cents = kmeans_centroids(embs, n_centroids, iters)
+        brow = _sq8_bounds_row(sq8_bounds(embs))
+        coded = (_lattice(embs)
                  .crossJoin(F.broadcast(brow))
-                 .select(F.col(id_col), _sq8_code_expr().alias("codes"),
+                 .select(F.col("vec_id"), _sq8_code_expr().alias("codes"),
                          F.col("mns"), F.col("mxs"))
-                 .join(assign_centroids(embs, cents=cents, id_col=id_col,
-                                        vec_col=vec_col)
-                       .select(F.col(id_col), F.col("cid")), id_col))
+                 .join(assign_centroids(embs, cents=cents)
+                       .select(F.col("vec_id"), F.col("cid")), "vec_id"))
     else:
         coded = codes.crossJoin(F.broadcast(_sq8_bounds_row(bounds)))
-    lat = _lattice(embs, id_col, vec_col)
-    probes = (lat.filter(F.col(id_col) == query_id)
+    lat = _lattice(embs)
+    probes = (lat.filter(F.col("vec_id") == query_id)
               .crossJoin(F.broadcast(cents))
               .select(F.col("cid"),
                       _l2sq(F.col("qv"), F.col("cv")).alias("d2"))
@@ -1031,7 +998,7 @@ def ivfsq_topk(embs: DataFrame, query_id: int, k: int = 10,
     # nprobe cells before any reconstruction work (file-level when the
     # stored codes are partitioned by cid)
     pruned = coded.join(F.broadcast(probes), "cid")
-    q = (lat.filter(F.col(id_col) == query_id)
+    q = (lat.filter(F.col("vec_id") == query_id)
          .select(F.col("qv").alias("qqv")))
     z = F.arrays_zip(F.col("codes"), F.col("mns"), F.col("mxs"),
                      F.col("qqv"))
@@ -1047,26 +1014,24 @@ def ivfsq_topk(embs: DataFrame, query_id: int, k: int = 10,
     diffs = F.transform(z, lambda s: s["qqv"] - _recon(s))
     d2 = F.aggregate(diffs, F.lit(0).cast("long"),
                      lambda acc, v: acc + v * v)
-    return (pruned.filter(F.col(id_col) != query_id)
+    return (pruned.filter(F.col("vec_id") != query_id)
             .crossJoin(F.broadcast(q))
-            .select(F.col(id_col), F.col("cid"), d2.alias("sq_d2"))
-            .orderBy(F.col("sq_d2").asc(), F.col(id_col).asc())
+            .select(F.col("vec_id"), F.col("cid"), d2.alias("sq_d2"))
+            .orderBy(F.col("sq_d2").asc(), F.col("vec_id").asc())
             .limit(k))
 
 
-def lattice_l2_topk(embs: DataFrame, query_id: int, k: int = 10,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
+def lattice_l2_topk(embs: DataFrame, query_id: int, k: int = 10) -> DataFrame:
     """Exact integer-lattice L2 top-k — the brute-force baseline the
     quantized searches (:func:`sq8_topk`, :func:`pq_topk`) are measured
     against.  Returns (vec_id, d2), ascending, ties by id, query
     excluded.  Narrow scan + TakeOrderedAndProject, no shuffle."""
-    lat = _lattice(embs, id_col, vec_col)
-    q = (lat.filter(F.col(id_col) == query_id)
+    lat = _lattice(embs)
+    q = (lat.filter(F.col("vec_id") == query_id)
          .select(F.col("qv").alias("qqv")))
-    return (lat.filter(F.col(id_col) != query_id)
+    return (lat.filter(F.col("vec_id") != query_id)
             .crossJoin(F.broadcast(q))
-            .select(F.col(id_col),
+            .select(F.col("vec_id"),
                     _l2sq(F.col("qv"), F.col("qqv")).alias("d2"))
-            .orderBy(F.col("d2").asc(), F.col(id_col).asc())
+            .orderBy(F.col("d2").asc(), F.col("vec_id").asc())
             .limit(k))

@@ -103,9 +103,7 @@ def hll_estimate(registers: DataFrame,
     return agg.select(*group_cols, F.round(est, 3).alias("est_distinct"))
 
 
-def distinct_tokens_by_group(docs: DataFrame, group_col: str = "lang",
-                             text_col: str = "text",
-                             p: int = DEFAULT_P) -> DataFrame:
+def distinct_tokens_by_group(docs: DataFrame, p: int = DEFAULT_P) -> DataFrame:
     """Per-group distinct-token cardinality: HLL estimate next to the
     exact count (cheap at test scale; at 100 TB you drop the exact
     column and keep the sketch).  Returns (group, est_distinct,
@@ -113,20 +111,20 @@ def distinct_tokens_by_group(docs: DataFrame, group_col: str = "lang",
     """
     from ..functions import text as T
 
-    toks = (docs.select(F.col(group_col).alias("grp"),
-                        F.explode(T.tokens(F.col(text_col))).alias("tok")))
+    toks = (docs.select(F.col("lang").alias("grp"),
+                        F.explode(T.tokens(F.col("text"))).alias("tok")))
     regs = hll_registers(toks, "tok", ("grp",), p)
     est = hll_estimate(regs, ("grp",), p)
     exact = toks.groupBy("grp").agg(
         F.countDistinct("tok").alias("exact_distinct"))
     return (est.join(exact, "grp")
-            .select(F.col("grp").alias(group_col), "est_distinct",
+            .select(F.col("grp").alias("lang"), "est_distinct",
                     "exact_distinct",
                     F.round(F.abs(F.col("est_distinct")
                                   - F.col("exact_distinct"))
                             / F.col("exact_distinct") * 100, 3)
                     .alias("rel_err_pct"))
-            .orderBy(group_col))
+            .orderBy("lang"))
 
 
 def cms_counters(df: DataFrame, value_col: str, depth: int = 4,
@@ -199,8 +197,8 @@ def cms_estimate(counters: DataFrame, queries_df: DataFrame,
                  .alias("est_count")))
 
 
-def token_counts_with_cms(docs: DataFrame, text_col: str = "text",
-                          depth: int = 4, width: int = 1024) -> DataFrame:
+def token_counts_with_cms(docs: DataFrame, depth: int = 4,
+                          width: int = 1024) -> DataFrame:
     """Corpus token frequencies through the count-min sketch, next to
     the exact counts (value, est_count, exact_count) ordered by value —
     est_count >= exact_count always, equal when the value's ``depth``
@@ -210,7 +208,7 @@ def token_counts_with_cms(docs: DataFrame, text_col: str = "text",
     """
     from ..functions import text as T
 
-    toks = docs.select(F.explode(T.tokens(F.col(text_col))).alias("value"))
+    toks = docs.select(F.explode(T.tokens(F.col("text"))).alias("value"))
     counters = cms_counters(toks, "value", depth, width)
     est = cms_estimate(counters, toks.distinct(), "value", depth, width)
     exact = toks.groupBy("value").agg(F.count(F.lit(1)).alias("exact_count"))
@@ -292,9 +290,7 @@ def bloom_contains(words: DataFrame, probes: DataFrame, value_col: str,
             .orderBy("probe"))
 
 
-def vocab_overlap_by_group(docs: DataFrame, group_col: str = "lang",
-                           text_col: str = "text",
-                           p: int = DEFAULT_P) -> DataFrame:
+def vocab_overlap_by_group(docs: DataFrame, p: int = DEFAULT_P) -> DataFrame:
     """Pairwise vocabulary overlap between groups WITHOUT a token join —
     HLL inclusion-exclusion: |A ∩ B| ≈ |A| + |B| - |A ∪ B|, where the
     union estimate comes from bucket-wise max-merging the two groups'
@@ -314,8 +310,8 @@ def vocab_overlap_by_group(docs: DataFrame, group_col: str = "lang",
     upstream if G^2 x 2^p stops being tiny."""
     from ..functions import text as T
 
-    toks = (docs.select(F.col(group_col).alias("grp"),
-                        F.explode(T.tokens(F.col(text_col))).alias("tok")))
+    toks = (docs.select(F.col("lang").alias("grp"),
+                        F.explode(T.tokens(F.col("text"))).alias("tok")))
     # multi-consumer layer (single estimates + pair merges): persist so
     # the corpus token pass runs once (CLAUDE.md cross-branch rule)
     regs = hll_registers(toks, "tok", ("grp",), p).persist()

@@ -34,9 +34,8 @@ from ..functions import text as T
 DEFAULT_K = 8
 
 
-def _gram_positions(docs: DataFrame, text_col: str, id_col: str,
-                    k: int) -> DataFrame:
-    """(id, pos, gh) — 0-based token position and md5-prefix hash of the
+def _gram_positions(docs: DataFrame, id_col: str, k: int) -> DataFrame:
+    """(id_col, pos, gh) — 0-based token position and md5-prefix hash of the
     k-gram starting there.  Documents shorter than ``k`` tokens emit no
     rows (an exact-substring match needs at least one full unit; whole-
     document duplicates that short belong to exact dedup).
@@ -51,7 +50,7 @@ def _gram_positions(docs: DataFrame, text_col: str, id_col: str,
     CollapseProject keeps the layer because a non-cheap alias with >1
     reference is never merged (same fix as simhash's hv — CLAUDE.md)."""
     tok_df = docs.select(F.col(id_col),
-                         T.tokens(F.col(text_col)).alias("toks"))
+                         T.tokens(F.col("text")).alias("toks"))
     toks = F.col("toks")
     n = F.size(toks)
 
@@ -66,11 +65,9 @@ def _gram_positions(docs: DataFrame, text_col: str, id_col: str,
         F.col(id_col), F.posexplode(hashed).alias("pos", "gh"))
 
 
-def duplicated_ngram_positions(docs: DataFrame, text_col: str = "text",
-                               id_col: str = "doc_id",
-                               k: int = DEFAULT_K,
+def duplicated_ngram_positions(docs: DataFrame, k: int = DEFAULT_K,
                                max_docs_per_gram: int | None = None) -> DataFrame:
-    """(id, pos, gh) for every token position whose k-gram also occurs
+    """(doc_id, pos, gh) for every token position whose k-gram also occurs
     in at least one OTHER document (cross-document duplication only —
     within-document repetition is a quality signal, not dedup;
     see textanalysis.repetition_stats).
@@ -82,22 +79,21 @@ def duplicated_ngram_positions(docs: DataFrame, text_col: str = "text",
     belongs to the frequent-line/boilerplate removers, not substring
     dedup.  None (default) keeps everything.
     """
-    grams = _gram_positions(docs, text_col, id_col, k)
+    grams = _gram_positions(docs, "doc_id", k)
     dup = (grams.groupBy("gh")
-           .agg(F.count_distinct(F.col(id_col)).alias("n_docs"))
+           .agg(F.count_distinct(F.col("doc_id")).alias("n_docs"))
            .filter(F.col("n_docs") >= 2))
     if max_docs_per_gram is not None:
         dup = dup.filter(F.col("n_docs") <= max_docs_per_gram)
     return grams.join(dup.select("gh"), "gh", "left_semi")
 
 
-def duplicated_ranges(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", k: int = DEFAULT_K,
+def duplicated_ranges(docs: DataFrame, k: int = DEFAULT_K,
                       min_tokens: int | None = None,
                       max_docs_per_gram: int | None = None) -> DataFrame:
     """Maximal duplicated token ranges per document.
 
-    Returns (id, start_tok, end_tok, n_dup_tokens): ``start_tok`` is the
+    Returns (doc_id, start_tok, end_tok, n_dup_tokens): ``start_tok`` is the
     0-based token index of the first token of the range, ``end_tok`` the
     index of its last token (inclusive, = last duplicated k-gram start
     + k - 1), ``n_dup_tokens`` the range length.  A range is maximal:
@@ -108,23 +104,21 @@ def duplicated_ranges(docs: DataFrame, text_col: str = "text",
     use 50 BPE tokens; defaults to ``k`` = keep all).
     """
     min_tokens = k if min_tokens is None else min_tokens
-    pos = duplicated_ngram_positions(docs, text_col, id_col, k,
-                                     max_docs_per_gram)
-    w = Window.partitionBy(id_col).orderBy("pos")
+    pos = duplicated_ngram_positions(docs, k, max_docs_per_gram)
+    w = Window.partitionBy("doc_id").orderBy("pos")
     islands = pos.withColumn(
         "grp", F.col("pos") - F.row_number().over(w))
-    ranges = (islands.groupBy(id_col, "grp")
+    ranges = (islands.groupBy("doc_id", "grp")
               .agg(F.min("pos").alias("start_tok"),
                    (F.max("pos") + F.lit(k - 1)).alias("end_tok"))
               .withColumn("n_dup_tokens",
                           F.col("end_tok") - F.col("start_tok") + 1)
               .filter(F.col("n_dup_tokens") >= min_tokens)
               .drop("grp"))
-    return ranges.orderBy(id_col, "start_tok")
+    return ranges.orderBy("doc_id", "start_tok")
 
 
-def trim_duplicated_ranges(docs: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id", k: int = DEFAULT_K,
+def trim_duplicated_ranges(docs: DataFrame, k: int = DEFAULT_K,
                            min_tokens: int | None = None,
                            max_docs_per_gram: int | None = None) -> DataFrame:
     """The removal step over :func:`duplicated_ranges` (Lee et al.'s
@@ -135,7 +129,7 @@ def trim_duplicated_ranges(docs: DataFrame, text_col: str = "text",
     ``dedup.dedup_paragraphs`` (paragraph keep-first) and the curation
     exact dedup (whole documents).
 
-    Returns (id, clean_text, n_tokens, n_removed) for every document
+    Returns (doc_id, clean_text, n_tokens, n_removed) for every document
     with at least one token (``clean_text = ''`` when everything was
     inside a duplicated range).
 
@@ -146,79 +140,71 @@ def trim_duplicated_ranges(docs: DataFrame, text_col: str = "text",
     pass; the gram stage inside :func:`duplicated_ranges` stays the
     only corpus-wide shuffle.
     """
-    ranges = duplicated_ranges(docs, text_col, id_col, k, min_tokens,
-                               max_docs_per_gram)
-    per_doc = ranges.groupBy(id_col).agg(
+    ranges = duplicated_ranges(docs, k, min_tokens, max_docs_per_gram)
+    per_doc = ranges.groupBy("doc_id").agg(
         F.collect_list(F.struct("start_tok", "end_tok")).alias("_rs"))
-    toks = docs.select(F.col(id_col), T.tokens(F.col(text_col)).alias("_tk"))
-    joined = toks.join(per_doc, id_col, "left")
+    toks = docs.select("doc_id", T.tokens(F.col("text")).alias("_tk"))
+    joined = toks.join(per_doc, "doc_id", "left")
     rs = F.coalesce(
         F.col("_rs"),
         F.array().cast("array<struct<start_tok:int,end_tok:int>>"))
     kept = F.filter(F.col("_tk"), lambda x, i: ~F.exists(
         rs, lambda r: (r["start_tok"] <= i) & (i <= r["end_tok"])))
     return joined.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.array_join(kept, " ").alias("clean_text"),
         F.size("_tk").cast("long").alias("n_tokens"),
         (F.size("_tk") - F.size(kept)).cast("long").alias("n_removed"))
 
 
 def contamination_report(docs: DataFrame, benchmarks: DataFrame,
-                         k: int = DEFAULT_K, text_col: str = "text",
-                         id_col: str = "doc_id",
-                         bench_text_col: str = "text") -> DataFrame:
+                         k: int = DEFAULT_K) -> DataFrame:
     """Benchmark decontamination scan (the GPT-3-style n-gram overlap
     check, public methodology): which training documents share any
     token ``k``-gram with the benchmark/eval corpus, and how much.
 
-    Returns (id, n_contaminated_positions) for contaminated documents
+    Returns (doc_id, n_contaminated_positions) for contaminated documents
     only.  The benchmark side reduces to its DISTINCT gram hashes —
     benchmark suites are tiny next to a training corpus, so that set
     broadcasts and the scan stays narrow: no shuffle of the corpus at
     all, just a broadcast semi-join inside the gram stage.
     """
     bench_grams = (
-        _gram_positions(benchmarks.select(F.col(bench_text_col).alias("text"),
-                                          F.lit("b").alias("_bid")),
-                        "text", "_bid", k)
+        _gram_positions(benchmarks.select("text", F.lit("b").alias("_bid")),
+                        "_bid", k)
         .select("gh").distinct())
-    corpus_grams = _gram_positions(docs, text_col, id_col, k)
+    corpus_grams = _gram_positions(docs, "doc_id", k)
     hits = corpus_grams.join(F.broadcast(bench_grams), "gh", "left_semi")
-    return (hits.groupBy(id_col)
+    return (hits.groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_contaminated_positions"))
-            .orderBy(id_col))
+            .orderBy("doc_id"))
 
 
 def decontaminate(docs: DataFrame, benchmarks: DataFrame,
-                  k: int = DEFAULT_K, text_col: str = "text",
-                  id_col: str = "doc_id",
-                  bench_text_col: str = "text") -> DataFrame:
+                  k: int = DEFAULT_K) -> DataFrame:
     """Drop every document sharing at least one token k-gram with the
     benchmark corpus (conservative decontamination: any overlap
     disqualifies).  Anti-join on the contamination report."""
-    report = contamination_report(docs, benchmarks, k, text_col, id_col,
-                                  bench_text_col)
-    return docs.join(report.select(id_col), id_col, "left_anti")
+    report = contamination_report(docs, benchmarks, k)
+    return docs.join(report.select("doc_id"), "doc_id", "left_anti")
 
 
-def duplication_profile(docs: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", k: int = DEFAULT_K) -> DataFrame:
+def duplication_profile(docs: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     """Per-document duplication summary — the filter signal a pipeline
     thresholds on before paying for range-level surgery.
 
-    Returns (id, n_tokens, dup_tokens, dup_frac): ``dup_tokens`` is the
+    Returns (doc_id, n_tokens, dup_tokens, dup_frac): ``dup_tokens`` is the
     total token count covered by duplicated ranges (ranges are disjoint
     by construction, so a plain sum is exact); docs with no duplicated
     range report 0 / 0.0.
     """
-    base = docs.select(F.col(id_col),
-                       T.n_tokens(F.col(text_col)).alias("n_tokens"))
-    per_doc = (duplicated_ranges(docs, text_col, id_col, k)
-               .groupBy(id_col)
+    base = docs.select(F.col("doc_id"),
+                       T.n_tokens(F.col("text")).alias("n_tokens"))
+    per_doc = (duplicated_ranges(docs, k)
+               .groupBy("doc_id")
                .agg(F.sum("n_dup_tokens").alias("dup_tokens")))
-    return (base.join(per_doc, id_col, "left")
-            .select(F.col(id_col), F.col("n_tokens"),
+    return (base.join(per_doc, "doc_id", "left")
+            .select(F.col("doc_id"), F.col("n_tokens"),
                     F.coalesce(F.col("dup_tokens"), F.lit(0)).alias("dup_tokens"),
                     F.round(F.coalesce(F.col("dup_tokens"), F.lit(0))
                             / F.greatest(F.col("n_tokens"), F.lit(1)), 6)

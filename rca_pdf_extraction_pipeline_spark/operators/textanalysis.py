@@ -16,20 +16,19 @@ from ..functions import hashing as H
 from ..functions import text as T
 
 
-def token_stats(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def token_stats(docs: DataFrame) -> DataFrame:
     """(id, n_tokens, n_distinct_tokens, n_chars, avg_token_len,
     distinct_ratio) — the basic length/diversity profile."""
     # tokens hoisted to a column layer: nt/nd/ratios reference it 5x,
     # and Catalyst inlines expression aliases without CSE (CLAUDE.md)
-    tok_df = docs.select(F.col(id_col), F.col(text_col),
-                         T.tokens(F.col(text_col)).alias("toks"))
+    tok_df = docs.select(F.col("doc_id"), F.col("text"),
+                         T.tokens(F.col("text")).alias("toks"))
     toks = F.col("toks")
     nt = F.size(toks)
     nd = F.size(F.array_distinct(toks))
-    chars = F.length(F.col(text_col))
+    chars = F.length(F.col("text"))
     return tok_df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         nt.alias("n_tokens"),
         nd.alias("n_distinct_tokens"),
         chars.alias("n_chars_actual"),
@@ -38,30 +37,28 @@ def token_stats(docs: DataFrame, text_col: str = "text",
     )
 
 
-def bpe_token_stats(docs: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def bpe_token_stats(docs: DataFrame) -> DataFrame:
     """(id, n_bpe_tokens, n_word_tokens, tokens_per_word): token-budget
     accounting under the BPE-ish pre-tokenizer (functions/text.
     BPE_TOKEN_RE) next to the whitespace word count — the
     fertility-style ratio a sequence-packing budget needs when the real
     tokenizer runs out-of-engine.  Narrow per-row expressions."""
     counts = docs.select(
-        F.col(id_col),
-        F.size(T.bpe_tokens(F.col(text_col))).alias("n_bpe_tokens"),
-        T.n_tokens(F.col(text_col)).alias("n_word_tokens"))
+        F.col("doc_id"),
+        F.size(T.bpe_tokens(F.col("text"))).alias("n_bpe_tokens"),
+        T.n_tokens(F.col("text")).alias("n_word_tokens"))
     return counts.select(
-        F.col(id_col), "n_bpe_tokens", "n_word_tokens",
+        F.col("doc_id"), "n_bpe_tokens", "n_word_tokens",
         F.round(F.col("n_bpe_tokens").cast("double")
                 / F.greatest(F.col("n_word_tokens"), F.lit(1)), 6)
         .alias("tokens_per_word"))
 
 
-def quality_scores(docs: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+def quality_scores(docs: DataFrame) -> DataFrame:
     """Heuristic quality profile (CCNet/Gopher-style filters, public
     heuristics): alpha ratio, digit ratio, stopword ratio and a simple
     composite keep-score in [0,1]."""
-    c = F.col(text_col)
+    c = F.col("text")
     total = F.greatest(F.length(c), F.lit(1)).cast("double")
     alpha_ratio = T.alpha_chars(c).cast("double") / total
     digit_ratio = T.digit_chars(c).cast("double") / total
@@ -69,7 +66,7 @@ def quality_scores(docs: DataFrame, text_col: str = "text",
     score = (F.lit(0.5) * alpha_ratio + F.lit(0.3) * stop_ratio
              + F.lit(0.2) * (F.lit(1.0) - digit_ratio))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.round(alpha_ratio, 6).alias("alpha_ratio"),
         F.round(digit_ratio, 6).alias("digit_ratio"),
         F.round(stop_ratio, 6).alias("stopword_ratio"),
@@ -77,19 +74,17 @@ def quality_scores(docs: DataFrame, text_col: str = "text",
     )
 
 
-def language_id(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id", threshold: float = 0.03) -> DataFrame:
+def language_id(docs: DataFrame, threshold: float = 0.03) -> DataFrame:
     """(id, stopword_ratio, pred_lang) — stopword-ratio language ID."""
-    c = F.col(text_col)
+    c = F.col("text")
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.round(T.stopword_ratio(c), 6).alias("stopword_ratio"),
         T.predict_lang(c, threshold).alias("pred_lang"),
     )
 
 
-def repetition_stats(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style within-document repetition metrics (Rae et al. 2021,
     public filter heuristics), used to drop template/spam pages:
 
@@ -109,27 +104,27 @@ def repetition_stats(docs: DataFrame, text_col: str = "text",
     At 100 TB each gram table is ~n_tokens rows; the heavy exchange
     hashes on (doc_id, gram) where skew is bounded by document length.
     """
-    c = F.col(text_col)
+    c = F.col("text")
 
     def gram_mass(k: int, agg_expr):
-        per_gram = (docs.select(F.col(id_col),
+        per_gram = (docs.select(F.col("doc_id"),
                                 F.explode(
                                     F.when(T.n_tokens(c) >= k, T.shingles(c, k))
                                     .otherwise(F.array().cast("array<string>"))
                                 ).alias("gram"))
-                    .groupBy(id_col, "gram")
+                    .groupBy("doc_id", "gram")
                     .agg(F.count(F.lit(1)).alias("cnt"))
                     .withColumn("mass", F.col("cnt") * F.length("gram")))
-        return per_gram.groupBy(id_col).agg(agg_expr)
+        return per_gram.groupBy("doc_id").agg(agg_expr)
 
     top2 = gram_mass(2, (F.max("mass") / F.sum("mass")).alias("top2_raw"))
     dup5 = gram_mass(5, (F.sum(F.when(F.col("cnt") >= 2, F.col("mass"))
                                .otherwise(F.lit(0))) / F.sum("mass"))
                      .alias("dup5_raw"))
-    return (docs.select(F.col(id_col))
-            .join(top2, id_col, "left")
-            .join(dup5, id_col, "left")
-            .select(F.col(id_col),
+    return (docs.select(F.col("doc_id"))
+            .join(top2, "doc_id", "left")
+            .join(dup5, "doc_id", "left")
+            .select(F.col("doc_id"),
                     F.round(F.coalesce(F.col("top2_raw"), F.lit(0.0)), 6)
                     .alias("top_2gram_frac"),
                     F.round(F.coalesce(F.col("dup5_raw"), F.lit(0.0)), 6)
@@ -142,21 +137,20 @@ EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 URL_RE = r"https?://[A-Za-z0-9._~:/?#@!$&'()*+,;=%-]+"
 
 
-def pii_stats(docs: DataFrame, text_col: str = "text",
-              id_col: str = "doc_id") -> DataFrame:
+def pii_stats(docs: DataFrame) -> DataFrame:
     """PII / link census — the redaction pre-pass of a training-data
     pipeline: per document, how many e-mail addresses and URLs occur,
     the distinct e-mail domains (sorted), and the text with e-mails
     masked.  Pure regexp column expressions; at 100 TB this is a narrow
     scan-stage pass (no shuffle, full pushdown).
     """
-    c = F.col(text_col)
+    c = F.col("text")
     emails = F.regexp_extract_all(c, F.lit(EMAIL_RE), 0)
     urls = F.regexp_extract_all(c, F.lit(URL_RE), 0)
     domains = F.array_sort(F.array_distinct(
         F.transform(emails, lambda e: F.regexp_extract(e, "@(.*)$", 1))))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(emails).alias("n_emails"),
         F.size(urls).alias("n_urls"),
         F.concat_ws(",", domains).alias("email_domains"),
@@ -164,8 +158,7 @@ def pii_stats(docs: DataFrame, text_col: str = "text",
     )
 
 
-def unigram_logprob(docs: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def unigram_logprob(docs: DataFrame) -> DataFrame:
     """Per-document mean unigram log-probability under the corpus's own
     unigram distribution — the cheap stand-in for model-based
     perplexity filtering (CCNet-style: documents whose token
@@ -184,8 +177,8 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text",
     the token, one groupBy(id) roll-up — all partial-agg friendly; the
     frequency side of the join is vocabulary-sized and broadcasts.
     """
-    toks = docs.select(F.col(id_col),
-                       F.explode(T.tokens(F.col(text_col))).alias("tok"))
+    toks = docs.select(F.col("doc_id"),
+                       F.explode(T.tokens(F.col("text"))).alias("tok"))
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     total = freq.agg(F.sum("cnt").alias("total"))
     scaled = (freq.crossJoin(F.broadcast(total))
@@ -194,12 +187,12 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text",
                               * F.lit(1_000_000.0), 0).cast("long")
                       .alias("lp")))
     per_doc = (toks.join(scaled, "tok")
-               .groupBy(id_col)
+               .groupBy("doc_id")
                .agg(F.count(F.lit(1)).alias("n_tokens"),
                     F.sum("lp").alias("lp_sum")))
-    base = docs.select(F.col(id_col))
-    return (base.join(per_doc, id_col, "left")
-            .select(F.col(id_col),
+    base = docs.select(F.col("doc_id"))
+    return (base.join(per_doc, "doc_id", "left")
+            .select(F.col("doc_id"),
                     F.coalesce(F.col("n_tokens"), F.lit(0)).alias("n_tokens"),
                     F.round(F.coalesce(F.col("lp_sum"), F.lit(0))
                             / F.lit(1_000_000.0)
@@ -207,20 +200,18 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text",
                     .alias("mean_logprob")))
 
 
-def unigram_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def unigram_freqs(docs: DataFrame) -> DataFrame:
     """``(tok, cnt)`` — the stored unigram-LM artifact: corpus token
     frequencies, fit ONCE on a reference snapshot and persisted (the
     same train-once/serve-forever shape as the drift counts, dedup
     band-key index, and IVF/PQ codebooks).  One partial-agg shuffle;
     output is vocabulary-sized.
     """
-    toks = docs.select(F.explode(T.tokens(F.col(text_col))).alias("tok"))
+    toks = docs.select(F.explode(T.tokens(F.col("text"))).alias("tok"))
     return toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def unigram_logprob_stored(docs: DataFrame, freqs: DataFrame,
-                           text_col: str = "text",
-                           id_col: str = "doc_id") -> DataFrame:
+def unigram_logprob_stored(docs: DataFrame, freqs: DataFrame) -> DataFrame:
     """Score documents under a STORED unigram LM — the serving form of
     perplexity filtering: :func:`unigram_logprob` refits the corpus's
     own distribution per run, this scores ANY corpus against a
@@ -244,8 +235,8 @@ def unigram_logprob_stored(docs: DataFrame, freqs: DataFrame,
     sized — broadcasts under the threshold), one groupBy(id) roll-up;
     the 1-row total crosses at the DOC level, not per token.
     """
-    toks = docs.select(F.col(id_col),
-                       F.explode(T.tokens(F.col(text_col))).alias("tok"))
+    toks = docs.select(F.col("doc_id"),
+                       F.explode(T.tokens(F.col("text"))).alias("tok"))
     total = freqs.agg(F.coalesce(F.sum("cnt"), F.lit(0)).alias("total"))
     scaled = (freqs.crossJoin(F.broadcast(total))
               .select("tok",
@@ -253,17 +244,17 @@ def unigram_logprob_stored(docs: DataFrame, freqs: DataFrame,
                               * F.lit(1_000_000.0), 0).cast("long")
                       .alias("lp")))
     per_doc = (toks.join(scaled, "tok", "left")
-               .groupBy(id_col)
+               .groupBy("doc_id")
                .agg(F.count(F.lit(1)).alias("n_tokens"),
                     F.sum(F.coalesce(F.col("lp"), F.lit(0))).alias("_lp_known"),
                     F.sum(F.isnull("lp").cast("int")).cast("long")
                      .alias("oov_tokens")))
     lp_oov = F.round(F.log(F.lit(1.0) / (F.col("total") + 1))
                      * F.lit(1_000_000.0), 0).cast("long")
-    base = docs.select(F.col(id_col))
-    return (base.join(per_doc, id_col, "left")
+    base = docs.select(F.col("doc_id"))
+    return (base.join(per_doc, "doc_id", "left")
             .crossJoin(F.broadcast(total))
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     F.coalesce(F.col("n_tokens"), F.lit(0)).alias("n_tokens"),
                     F.coalesce(F.col("oov_tokens"), F.lit(0))
                      .alias("oov_tokens"),
@@ -276,8 +267,6 @@ def unigram_logprob_stored(docs: DataFrame, freqs: DataFrame,
 
 
 def bigram_logprob(docs: DataFrame, lam: float = 0.5,
-                   text_col: str = "text",
-                   id_col: str = "doc_id",
                    checkpoint_dir: str | None = None) -> DataFrame:
     """Per-document mean INTERPOLATED bigram log-probability under the
     corpus's own n-gram statistics — one step up from
@@ -308,8 +297,8 @@ def bigram_logprob(docs: DataFrame, lam: float = 0.5,
     # one tokenize -> one Generate -> (id, prev, cur) bigram rows, with
     # prev NULL on each document's first token (kept so `uni` can count
     # every token, including 1-token docs' only token)
-    tok_df = docs.select(F.col(id_col),
-                         T.tokens(F.col(text_col)).alias("toks"))
+    tok_df = docs.select(F.col("doc_id"),
+                         T.tokens(F.col("text")).alias("toks"))
     toks = F.col("toks")
     pairs = F.when(F.size(toks) >= 1, F.transform(
         F.sequence(F.lit(1), F.size(toks)),
@@ -318,8 +307,8 @@ def bigram_logprob(docs: DataFrame, lam: float = 0.5,
             F.element_at(toks, i).alias("cur")))) \
         .otherwise(F.array())
     pos_all = mat(
-        tok_df.select(F.col(id_col), F.explode(pairs).alias("bg"))
-              .select(F.col(id_col), F.col("bg.prev").alias("prev"),
+        tok_df.select(F.col("doc_id"), F.explode(pairs).alias("bg"))
+              .select(F.col("doc_id"), F.col("bg.prev").alias("prev"),
                       F.col("bg.cur").alias("cur")), "bigram_positions")
     pos = pos_all.where(F.col("prev").isNotNull())
 
@@ -343,12 +332,12 @@ def bigram_logprob(docs: DataFrame, lam: float = 0.5,
                           * F.lit(1_000_000.0), 0).cast("long").alias("lp")))
 
     per_doc = (pos.join(scored, ["prev", "cur"])
-               .groupBy(id_col)
+               .groupBy("doc_id")
                .agg(F.count(F.lit(1)).alias("n_bigrams"),
                     F.sum("lp").alias("lp_sum")))
-    base = docs.select(F.col(id_col))
-    return (base.join(per_doc, id_col, "left")
-            .select(F.col(id_col),
+    base = docs.select(F.col("doc_id"))
+    return (base.join(per_doc, "doc_id", "left")
+            .select(F.col("doc_id"),
                     F.coalesce(F.col("n_bigrams"), F.lit(0)).alias("n_bigrams"),
                     F.round(F.coalesce(F.col("lp_sum"), F.lit(0))
                             / F.lit(1_000_000.0)
@@ -356,13 +345,12 @@ def bigram_logprob(docs: DataFrame, lam: float = 0.5,
                     .alias("mean_logprob")))
 
 
-def fingerprints(docs: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
+def fingerprints(docs: DataFrame) -> DataFrame:
     """(id, fingerprint) — order-sensitive rolling token hash
     (functions/hashing.rolling_fingerprint)."""
     return docs.select(
-        F.col(id_col),
-        H.rolling_fingerprint(T.tokens(F.col(text_col))).alias("fingerprint"),
+        F.col("doc_id"),
+        H.rolling_fingerprint(T.tokens(F.col("text"))).alias("fingerprint"),
     )
 
 
@@ -384,9 +372,8 @@ WINNOW_HASH_MULT = 8191
 WINNOW_HASH_MASK = 0xFFFFFFFF
 
 
-def winnow_hash_frame(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", k: int = 3) -> DataFrame:
-    """``(id_col, _h: array<long>)`` — word-k-gram hashes for
+def winnow_hash_frame(docs: DataFrame, k: int = 3) -> DataFrame:
+    """``(doc_id, _h: array<long>)`` — word-k-gram hashes for
     winnowing: ONE md5 per token (``hash32``) projected into a column
     layer, then per-gram integer combination by the recurrence above
     over shifted slices of that layer (attribute references are free;
@@ -403,8 +390,8 @@ def winnow_hash_frame(docs: DataFrame, text_col: str = "text",
     (a * 8191 + b) & 4294967295)]``.
     """
     layer = docs.select(
-        F.col(id_col),
-        F.transform(T.tokens(F.col(text_col)),
+        F.col("doc_id"),
+        F.transform(T.tokens(F.col("text")),
                     lambda t: H.hash32(t)).alias("_th"))
     th = F.col("_th")
     n = F.size(th)
@@ -417,7 +404,7 @@ def winnow_hash_frame(docs: DataFrame, text_col: str = "text",
     for j in range(1, k):
         g = F.zip_with(g, F.slice(th, 1 + j, n - (k - 1)), mix)
     short = F.array(F.aggregate(th, F.lit(0).cast("long"), mix))
-    return layer.select(F.col(id_col),
+    return layer.select(F.col("doc_id"),
                         F.when(n >= k, g).otherwise(short).alias("_h"))
 
 
@@ -433,14 +420,11 @@ def _winnow_pairmin(m: Column, c: int) -> Column:
             .otherwise(F.array().cast("array<long>"))
 
 
-def winnow_selection_frame(layer: DataFrame, w: int,
-                           id_col: str = "doc_id",
-                           hash_col: str = "_h",
-                           out_col: str = "_sel") -> DataFrame:
-    """Append the winnowing selection array ``out_col:
+def winnow_selection_frame(layer: DataFrame, w: int) -> DataFrame:
+    """Append the winnowing selection array ``_sel:
     array<struct<pos, gram_hash>>`` (per length-``w`` window the
     minimum gram hash, RIGHTMOST tie, deduplicated) to a frame carrying
-    a projected gram-hash array column ``hash_col``.  Shared by the
+    a projected gram-hash array column ``_h``.  Shared by the
     exploded fingerprint query and pair mining
     (``dedup.winnow_overlap_pairs``).
 
@@ -455,13 +439,13 @@ def winnow_selection_frame(layer: DataFrame, w: int,
     window and measured ~7x slower at 48k docs).  Documents with more
     than 2^20 grams trip a loud per-row ``raise_error``.
     """
-    h = F.col(hash_col)
+    h = F.col("_h")
     n = F.size(h)
     guarded = F.when(
         n > WINNOW_POS_CAP,
         F.raise_error(F.concat(
             F.lit("winnow_selection: document "),
-            F.col(id_col).cast("string"),
+            F.col("doc_id").cast("string"),
             F.lit(" has "), n.cast("string"),
             F.lit(f" k-grams > position cap {WINNOW_POS_CAP}; "
                   "chunk oversized documents upstream "
@@ -492,11 +476,10 @@ def winnow_selection_frame(layer: DataFrame, w: int,
             (F.lit(WINNOW_POS_CAP)
              - key.bitwiseAND(WINNOW_POS_CAP - 1)).alias("pos"),
             F.shiftrightunsigned(key, 20).alias("gram_hash")))
-    return cur.withColumn(out_col, sel)
+    return cur.withColumn("_sel", sel)
 
 
-def winnow_fingerprints(docs: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", k: int = 3,
+def winnow_fingerprints(docs: DataFrame, k: int = 3,
                         w: int = 4) -> DataFrame:
     """Winnowing fingerprint selection (Schleimer, Wilkerson & Aiken,
     SIGMOD '03 §3 — the MOSS local-fingerprinting scheme): over the
@@ -526,20 +509,19 @@ def winnow_fingerprints(docs: DataFrame, text_col: str = "text",
     if w < 1:
         raise ValueError(f"w must be >= 1; got {w}")
     frame = winnow_selection_frame(
-        winnow_hash_frame(docs, text_col, id_col, k), w, id_col=id_col)
+        winnow_hash_frame(docs, k), w)
     # explode_outer + IS NOT NULL: the nullable computed array would
     # otherwise get an inferred pre-Generate Filter whose pushdown
     # re-evaluates the synthesis (CLAUDE.md interleaved-explode trap)
-    return (frame.select(F.col(id_col), F.explode_outer("_sel").alias("_fp"))
+    return (frame.select(F.col("doc_id"), F.explode_outer("_sel").alias("_fp"))
             .filter(F.col("_fp").isNotNull())
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     F.col("_fp.pos").alias("pos"),
                     F.col("_fp.gram_hash").alias("gram_hash")))
 
 
 def vocabulary(docs: DataFrame, top_v: int | None = None,
-               min_count: int = 1, text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
+               min_count: int = 1) -> DataFrame:
     """Corpus vocabulary: (token, tf, df) — total occurrences and
     document frequency per distinct token, the tokenizer-training /
     vocab-construction primitive of a training-data pipeline.
@@ -553,11 +535,11 @@ def vocabulary(docs: DataFrame, top_v: int | None = None,
     per distinct (token, partition)).  ``top_v`` compiles to
     TakeOrderedAndProject — O(top_v) memory per task, no global sort.
     """
-    tok = docs.select(F.col(id_col),
-                      F.explode(T.tokens(F.col(text_col))).alias("token"))
+    tok = docs.select(F.col("doc_id"),
+                      F.explode(T.tokens(F.col("text"))).alias("token"))
     freq = (tok.groupBy("token")
             .agg(F.count(F.lit(1)).alias("tf"),
-                 F.countDistinct(id_col).alias("df")))
+                 F.countDistinct("doc_id").alias("df")))
     if min_count > 1:
         freq = freq.filter(F.col("tf") >= min_count)
     if top_v is not None:
@@ -566,15 +548,14 @@ def vocabulary(docs: DataFrame, top_v: int | None = None,
     return freq
 
 
-def vocab_coverage(docs: DataFrame, top_v: int, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+def vocab_coverage(docs: DataFrame, top_v: int) -> DataFrame:
     """One row: (vocab_size, total_tokens, covered_tokens, oov_rate) —
     what fraction of the corpus token mass a top-``top_v`` vocabulary
     covers (the tokenizer-budget / OOV-rate planning query).
 
     Derived entirely from the frequency table — the corpus is scanned
     once; no second pass joins docs against the vocab."""
-    freq = vocabulary(docs, text_col=text_col, id_col=id_col)
+    freq = vocabulary(docs)
     totals = freq.agg(
         F.count(F.lit(1)).alias("vocab_size"),
         F.sum("tf").alias("total_tokens"))
@@ -587,12 +568,10 @@ def vocab_coverage(docs: DataFrame, top_v: int, text_col: str = "text",
                             / F.col("total_tokens"), 6).alias("oov_rate")))
 
 
-def nb_classify(docs: DataFrame, class_col: str = "lang",
-                text_col: str = "text",
-                id_col: str = "doc_id",
+def nb_classify(docs: DataFrame,
                 train_docs: DataFrame | None = None) -> DataFrame:
     """Multinomial Naive Bayes classification of every document, with
-    the model TRAINED on the same corpus's ``class_col`` labels — the
+    the model TRAINED on the same corpus's ``lang`` labels — the
     deterministic stand-in for the model-based quality/domain
     classifiers real pipelines run (GPT-3's LR quality filter, Brown
     et al. 2020 appendix A; CCNet's fastText lang-ID): training is
@@ -625,12 +604,12 @@ def nb_classify(docs: DataFrame, class_col: str = "lang",
     boundary.  ``train_docs=None`` self-trains on ``docs``."""
     if train_docs is None:
         train_docs = docs
-    tr_tok = (train_docs.select(F.col(class_col).alias("actual"),
-                                F.explode(T.tokens(F.col(text_col)))
+    tr_tok = (train_docs.select(F.col("lang").alias("actual"),
+                                F.explode(T.tokens(F.col("text")))
                                 .alias("token")))
-    tok = (docs.select(F.col(id_col).alias("doc"),
-                       F.col(class_col).alias("actual"),
-                       F.explode(T.tokens(F.col(text_col))).alias("token")))
+    tok = (docs.select(F.col("doc_id").alias("doc"),
+                       F.col("lang").alias("actual"),
+                       F.explode(T.tokens(F.col("text"))).alias("token")))
     # class-conditional token counts over OBSERVED pairs only
     cc = (tr_tok.groupBy(F.col("actual").alias("cls"), "token")
           .agg(F.count(F.lit(1)).alias("cnt"))
@@ -643,7 +622,7 @@ def nb_classify(docs: DataFrame, class_col: str = "lang",
              .crossJoin(F.broadcast(vocab))
              .crossJoin(F.broadcast(
                  train_docs.agg(F.count(F.lit(1)).alias("n_docs"))))
-             .join(train_docs.groupBy(F.col(class_col).alias("cls"))
+             .join(train_docs.groupBy(F.col("lang").alias("cls"))
                    .agg(F.count(F.lit(1)).alias("n_c")), "cls")
              .select("cls",
                      F.expr("cast(round(ln(cast(tot + v as double))"
@@ -656,9 +635,9 @@ def nb_classify(docs: DataFrame, class_col: str = "lang",
     obs = (tok.join(cc, "token")
            .groupBy("doc", "cls")
            .agg(F.sum("lp").alias("lp_obs")))
-    per_doc = (docs.select(F.col(id_col).alias("doc"),
-                           F.col(class_col).alias("actual"),
-                           T.n_tokens(F.col(text_col)).cast("long")
+    per_doc = (docs.select(F.col("doc_id").alias("doc"),
+                           F.col("lang").alias("actual"),
+                           T.n_tokens(F.col("text")).cast("long")
                            .alias("n_tok")))
     scored = (per_doc.crossJoin(F.broadcast(stats))
               .join(obs, ["doc", "cls"], "left")
@@ -674,8 +653,7 @@ def nb_classify(docs: DataFrame, class_col: str = "lang",
                     F.col("cls").alias("predicted"), "score_micro"))
 
 
-def charset_profile(docs: DataFrame, group_col: str = "source",
-                    text_col: str = "text") -> DataFrame:
+def charset_profile(docs: DataFrame) -> DataFrame:
     """Per-group character-class census — the charset-sanity signal of
     corpus QA (a source whose letter share collapses or whose non-ASCII
     share spikes between drops is mis-decoded, mojibake, or spam):
@@ -688,17 +666,17 @@ def charset_profile(docs: DataFrame, group_col: str = "source",
     ``non_ascii`` is the remainder ``n_chars - ascii classes``, so the
     census is exhaustive by construction.  Narrow column expressions +
     one tiny group aggregate — no corpus-size state."""
-    n = F.length(F.col(text_col))
-    letters = F.regexp_count(F.col(text_col), F.lit("[A-Za-z]"))
-    digits = F.regexp_count(F.col(text_col), F.lit("[0-9]"))
-    spaces = F.regexp_count(F.col(text_col), F.lit("[ \\t\\n\\r]"))
+    n = F.length(F.col("text"))
+    letters = F.regexp_count(F.col("text"), F.lit("[A-Za-z]"))
+    digits = F.regexp_count(F.col("text"), F.lit("[0-9]"))
+    spaces = F.regexp_count(F.col("text"), F.lit("[ \\t\\n\\r]"))
     other_ascii = F.regexp_count(
-        F.col(text_col), F.lit("[\\x21-\\x7e]")) - letters - digits
+        F.col("text"), F.lit("[\\x21-\\x7e]")) - letters - digits
     per_doc = docs.select(
-        F.col(group_col).alias("grp"), n.alias("_n"),
+        F.col("source").alias("grp"), n.alias("_n"),
         letters.alias("_l"), digits.alias("_d"), spaces.alias("_s"),
         other_ascii.alias("_o"))
-    return (per_doc.groupBy(F.col("grp").alias(group_col))
+    return (per_doc.groupBy(F.col("grp").alias("source"))
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.sum("_n").alias("n_chars"),
                  F.sum("_l").alias("letters"),

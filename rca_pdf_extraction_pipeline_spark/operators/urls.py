@@ -117,16 +117,14 @@ def _last_labels(host: Column, k: int) -> Column:
     return F.regexp_extract(host, r"([^.]+" + r"\.[^.]+" * (k - 1) + r")$", 1)
 
 
-def with_apex_domain(docs: DataFrame, url_col: str = "url",
-                     suffixes: DataFrame | None = None,
-                     suffix_col: str = "suffix",
-                     out_col: str = "apex_domain") -> DataFrame:
-    """Append the registered (apex) domain of ``url_col``.
+def with_apex_domain(docs: DataFrame,
+                     suffixes: DataFrame | None = None) -> DataFrame:
+    """Append the registered (apex) domain of ``url``.
 
     With ``suffixes=None`` this is exactly the static column expression
     :func:`domain` (the inline :data:`TWO_LEVEL_SUFFIXES` subset —
     covers the bulk of real crawl traffic, zero joins).  Pass a
-    ``suffixes`` DataFrame — one ``suffix_col`` string per public
+    ``suffixes`` DataFrame — one ``suffix`` string per public
     suffix, e.g. a full publicsuffix.org snapshot including multi-level
     registries ('act.edu.au') and private suffixes ('github.io') — and
     the registered domain becomes *longest matching suffix + one
@@ -139,15 +137,15 @@ def with_apex_domain(docs: DataFrame, url_col: str = "url",
     snapshot entry fall back to the PSL default rule (last label is the
     suffix => registered = last two labels)."""
     if suffixes is None:
-        return docs.withColumn(out_col, domain(F.col(url_col)))
-    _, authority, _ = _split(F.col(url_col))
+        return docs.withColumn("apex_domain", domain(F.col("url")))
+    _, authority, _ = _split(F.col("url"))
     host = F.regexp_replace(F.regexp_replace(authority, r":\d+$", ""),
                             r"^www\.", "")
     out = docs.withColumn("_psl_host", host)
     apex = _last_labels(F.col("_psl_host"), 2)  # default rule fallback
     for k in range(MAX_SUFFIX_LEVELS, 0, -1):
         m = F.broadcast(
-            suffixes.select(F.col(suffix_col).alias(f"_sfx_{k}")).distinct())
+            suffixes.select(F.col("suffix").alias(f"_sfx_{k}")).distinct())
         out = out.join(
             m, _last_labels(F.col("_psl_host"), k) == F.col(f"_sfx_{k}"),
             "left")
@@ -157,15 +155,12 @@ def with_apex_domain(docs: DataFrame, url_col: str = "url",
     for k in range(1, MAX_SUFFIX_LEVELS + 1):
         apex = F.when(F.col(f"_sfx_{k}").isNotNull(),
                       _last_labels(F.col("_psl_host"), k + 1)).otherwise(apex)
-    return (out.withColumn(out_col, apex)
+    return (out.withColumn("apex_domain", apex)
             .drop("_psl_host",
                   *[f"_sfx_{k}" for k in range(1, MAX_SUFFIX_LEVELS + 1)]))
 
 
-def flag_blocked(docs: DataFrame, blocklist: DataFrame,
-                 url_col: str = "url", id_col: str = "doc_id",
-                 domain_col: str = "domain",
-                 category_col: str = "category") -> DataFrame:
+def flag_blocked(docs: DataFrame, blocklist: DataFrame) -> DataFrame:
     """UT1-style category blocklist filter (the Université Toulouse 1
     crawl-curation convention RefinedWeb/FineWeb apply): flag every
     document whose host OR any parent domain appears in a
@@ -173,7 +168,7 @@ def flag_blocked(docs: DataFrame, blocklist: DataFrame,
     before matching, so an entry 'badsite.com' blocks
     'www.badsite.com' and 'cdn.badsite.com' alike.
 
-    Output: ``(id_col, url_col, blocked, categories)`` — ``categories``
+    Output: ``(doc_id, url, blocked, categories)`` — ``categories``
     sorted-distinct (one domain may carry several; empty array when
     clean), ``blocked = size(categories) > 0``.
 
@@ -184,32 +179,30 @@ def flag_blocked(docs: DataFrame, blocklist: DataFrame,
     by category if not), then ONE hash agg on the doc id.  The doc side
     never shuffles its payload beyond (id, url).
     """
-    _, authority, _ = _split(F.col(url_col))
+    _, authority, _ = _split(F.col("url"))
     host = F.regexp_replace(F.regexp_replace(authority, r":\d+$", ""),
                             r"^www\.", "")
-    base = docs.select(F.col(id_col), F.col(url_col)) \
+    base = docs.select(F.col("doc_id"), F.col("url")) \
                .withColumn("_bl_host", host)
     labels = F.split(F.col("_bl_host"), r"\.")
     cand = F.array_distinct(F.filter(
         F.transform(F.sequence(F.lit(1), F.size(labels)),
                     lambda k: F.array_join(F.slice(labels, -k, k), ".")),
         lambda c: c != F.lit("")))
-    ex = base.select(id_col, url_col, F.explode_outer(cand).alias("_bl_c"))
+    ex = base.select("doc_id", "url", F.explode_outer(cand).alias("_bl_c"))
     bl = F.broadcast(blocklist.select(
-        F.lower(F.col(domain_col)).alias("_bl_c"),
-        F.col(category_col).alias("_bl_cat")).distinct())
+        F.lower(F.col("domain")).alias("_bl_c"),
+        F.col("category").alias("_bl_cat")).distinct())
     joined = ex.join(bl, "_bl_c", "left")
     cats = F.array_sort(F.array_distinct(F.collect_list("_bl_cat")))
-    return (joined.groupBy(id_col)
-            .agg(F.first(url_col).alias(url_col), cats.alias("categories"))
-            .select(id_col, url_col,
+    return (joined.groupBy("doc_id")
+            .agg(F.first("url").alias("url"), cats.alias("categories"))
+            .select("doc_id", "url",
                     (F.size("categories") > 0).alias("blocked"),
                     "categories"))
 
 
-def url_duplicates(docs: DataFrame, url_col: str = "url",
-                   id_col: str = "doc_id",
-                   max_ids: int = 1024) -> DataFrame:
+def url_duplicates(docs: DataFrame, max_ids: int = 1024) -> DataFrame:
     """URL-level exact dedup after canonicalization: one row per
     normalized url seen >1 times — (url_norm, n_docs, keep_id, dup_ids)
     with keep = minimum id (the crawl-order keep-first policy).
@@ -227,25 +220,24 @@ def url_duplicates(docs: DataFrame, url_col: str = "url",
         raise ValueError(f"max_ids must be >= 1; got {max_ids}")
     from pyspark.sql import Window
 
-    t = docs.select(F.col(id_col),
-                    normalize_url(F.col(url_col)).alias("url_norm")) \
+    t = docs.select(F.col("doc_id"),
+                    normalize_url(F.col("url")).alias("url_norm")) \
             .withColumn("k", F.md5(F.col("url_norm")))
     rn = F.row_number().over(
-        Window.partitionBy("k").orderBy(F.col(id_col).asc()))
+        Window.partitionBy("k").orderBy(F.col("doc_id").asc()))
     return (t.withColumn("_rn", rn)
             .groupBy("k")
             .agg(F.min("url_norm").alias("url_norm"),
                  F.count(F.lit(1)).alias("n_docs"),
-                 F.min(id_col).alias("keep_id"),
+                 F.min("doc_id").alias("keep_id"),
                  F.array_sort(F.collect_list(
-                     F.when(F.col("_rn") <= max_ids, F.col(id_col))))
+                     F.when(F.col("_rn") <= max_ids, F.col("doc_id"))))
                  .alias("dup_ids"))
             .where(F.col("n_docs") > 1)
             .select("url_norm", "n_docs", "keep_id", "dup_ids"))
 
 
-def cap_per_domain(docs: DataFrame, max_docs: int, url_col: str = "url",
-                   id_col: str = "doc_id",
+def cap_per_domain(docs: DataFrame, max_docs: int,
                    suffixes: DataFrame | None = None) -> DataFrame:
     """Per-domain corpus cap: keep at most ``max_docs`` docs per apex
     domain, lowest ids first (deterministic).  Adds (apex_domain,
@@ -258,14 +250,13 @@ def cap_per_domain(docs: DataFrame, max_docs: int, url_col: str = "url",
         raise ValueError(f"max_docs must be >= 1; got {max_docs}")
     from pyspark.sql import Window
 
-    t = with_apex_domain(docs, url_col, suffixes)
-    w = Window.partitionBy("apex_domain").orderBy(F.col(id_col))
+    t = with_apex_domain(docs, suffixes)
+    w = Window.partitionBy("apex_domain").orderBy(F.col("doc_id"))
     return (t.withColumn("domain_rank", F.row_number().over(w))
             .where(F.col("domain_rank") <= max_docs))
 
 
-def domain_stats(docs: DataFrame, url_col: str = "url",
-                 id_col: str = "doc_id",
+def domain_stats(docs: DataFrame,
                  suffixes: DataFrame | None = None) -> DataFrame:
     """Per-apex-domain corpus census — (apex_domain, n_docs, n_urls)
     ordered by (n_docs desc, domain).  n_urls counts distinct
@@ -273,9 +264,9 @@ def domain_stats(docs: DataFrame, url_col: str = "url",
     mass — the first dashboard a crawl audit reads.  ``suffixes``
     switches the apex derivation to a PSL snapshot
     (:func:`with_apex_domain`)."""
-    t = with_apex_domain(docs, url_col, suffixes).select(
-        F.col(id_col), F.col("apex_domain"),
-        normalize_url(F.col(url_col)).alias("u"))
+    t = with_apex_domain(docs, suffixes).select(
+        F.col("doc_id"), F.col("apex_domain"),
+        normalize_url(F.col("url")).alias("u"))
     return (t.groupBy("apex_domain")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.countDistinct("u").alias("n_urls"))

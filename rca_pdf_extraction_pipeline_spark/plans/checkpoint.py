@@ -16,16 +16,20 @@ Design (scales to 10^12 docs):
     point: output files without a manifest entry are invisible garbage,
     exactly like Iceberg's snapshot protocol.
   * resume = read manifest, skip completed buckets; progress state is
-    O(n_buckets), not O(n_docs) — no driver-side doc-id sets. Two input
-    modes: ``extract_with_checkpoint`` filters an arbitrary docs frame
-    on the computed bucket predicate (reads all input files), while
-    ``write_bucketed_input`` + ``extract_with_checkpoint_bucketed``
-    materialize the SAME bucket as an input partition column so a
-    resumed wave lists ONLY its todo bucket directories — true
-    file-level pruning (pinned by tests via ``inputFiles()``).  The
-    OUTPUT side is always bucket-partitioned, and ``read_extracted``
-    passes committed partition dirs explicitly so uncommitted/torn files
-    are never even listed.
+    O(n_buckets), not O(n_docs) — no driver-side doc-id sets. One input
+    path, ``extract_with_checkpoint``: an arbitrary docs frame is
+    filtered on the computed bucket predicate (every input file is
+    read), while a frame read from a ``write_bucketed_input`` table
+    carries the SAME bucket as its ``_bucket`` partition column, so a
+    wave's ``_bucket IN (...)`` filter is a partition filter and the
+    scan reads ONLY the todo buckets' files (pinned by tests from the
+    executed scan's files-read metric).  The file index still lists
+    every bucket directory once per run.  Such a table must have been
+    written with the run's ``n_buckets``: a ``_bucket=N`` directory with
+    N >= n_buckets, or a row whose ``_bucket`` is not its computed
+    bucket, fails the run instead of losing docs.  The OUTPUT side is
+    always bucket-partitioned, and ``read_extracted`` passes committed files
+    explicitly so uncommitted/torn files are never even listed.
 
 Reference has no checkpointing at all (single 359 ms process,
 docs/wiki/Performance.md:9-15); this is the cluster-scale replacement.
@@ -35,6 +39,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 from pathlib import Path
@@ -48,6 +53,8 @@ from ..operators.extraction import OUTPUT_SCHEMA, extract_documents
 
 MANIFEST_NAME = "_snapshots.json"
 LOCK_NAME = "_snapshots.lock"
+#: default bucket count of the input and output tables and of the job
+N_BUCKETS = 64
 
 
 def _bucket_col(n_buckets: int) -> F.Column:
@@ -109,7 +116,7 @@ class SnapshotManifest:
                 time.sleep(0.05)
 
     def append(self, completed_buckets: list[int], metrics: dict,
-               lineage: dict, files: dict[int, list[str]] | None = None) -> dict:
+               lineage: dict, files: dict[int, list[str]]) -> dict:
         fd = self._acquire_lock()
         try:
             snaps = self.load()
@@ -121,13 +128,11 @@ class SnapshotManifest:
                 "completed_buckets": sorted(completed_buckets),
                 "metrics": metrics,
                 "lineage": lineage,
-            }
-            if files is not None:
                 # per-bucket data-file names (relative to data/_bucket=N/):
                 # the Iceberg-style file-level commit — a later snapshot
                 # naming the same bucket REPLACES its file list (compaction)
-                snap["files"] = {str(int(b)): sorted(fl)
-                                 for b, fl in files.items()}
+                "files": {str(int(b)): sorted(fl) for b, fl in files.items()},
+            }
             snaps.append(snap)
             tmp = self.path.with_suffix(".tmp")
             tmp.write_text(json.dumps({"snapshots": snaps}, indent=1))
@@ -137,19 +142,13 @@ class SnapshotManifest:
             os.close(fd)
             self.lock_path.unlink(missing_ok=True)
 
-    def committed_files(self) -> dict[int, list[str] | None]:
+    def committed_files(self) -> dict[int, list[str]]:
         """bucket -> committed file names (later snapshots override
-        earlier ones per bucket), or None for legacy dir-level snapshots
-        (read the whole partition directory)."""
-        per_bucket: dict[int, list[str] | None] = {}
+        earlier ones per bucket)."""
+        per_bucket: dict[int, list[str]] = {}
         for snap in self.load():
-            files = snap.get("files")
-            if files is not None:
-                for b, fl in files.items():
-                    per_bucket[int(b)] = list(fl)
-            else:
-                for b in snap["completed_buckets"]:
-                    per_bucket.setdefault(int(b), None)
+            for b, fl in snap["files"].items():
+                per_bucket[int(b)] = list(fl)
         return per_bucket
 
 
@@ -157,7 +156,7 @@ def extract_with_checkpoint(
     docs: DataFrame,
     table_dir: str | Path,
     cfg: ExtractionConfig = DEFAULT_CONFIG,
-    n_buckets: int = 32,
+    n_buckets: int = N_BUCKETS,
     waves: int = 4,
     max_waves: int | None = None,
     input_desc: str = "",
@@ -176,22 +175,14 @@ def extract_with_checkpoint(
     :func:`extract_documents`; ``jobs/run_extraction.py`` passes
     ``htmlparse.to_spans`` for markup input).  ``operation`` labels the
     lineage record.
+
+    When ``docs`` carries a ``_bucket`` column (read from a
+    :func:`write_bucketed_input` table written with the same
+    ``n_buckets``), a wave selects its docs on that partition column, so
+    the scan reads only the wave's bucket directories; otherwise it
+    filters on the bucket computed from ``doc_id``.
     """
-    bucket = _bucket_col(n_buckets)
-    return _run_waves(
-        docs.sparkSession,
-        lambda group: docs.filter(bucket.isin([int(b) for b in group])),
-        table_dir, cfg, n_buckets, waves, max_waves, input_desc,
-        transform=transform, operation=operation)
-
-
-def _run_waves(spark: SparkSession, read_group, table_dir: str | Path,
-               cfg: ExtractionConfig, n_buckets: int, waves: int,
-               max_waves: int | None, input_desc: str, transform=None,
-               operation: str = "extract_documents") -> dict:
-    """The wave loop both checkpoint entry points share: plan the todo
-    buckets into waves, run each wave over ``read_group(group)`` (the
-    input docs of those buckets), and report."""
+    in_wave = _wave_filter(docs, n_buckets)
     table_dir = Path(table_dir)
     manifest = SnapshotManifest(table_dir)
     done = manifest.completed_buckets()
@@ -202,9 +193,10 @@ def _run_waves(spark: SparkSession, read_group, table_dir: str | Path,
     if max_waves is not None:
         wave_groups = wave_groups[:max_waves]
 
-    ran = [_run_wave(spark, read_group(group), group, table_dir, manifest,
-                     cfg, n_buckets, input_desc, transform=transform,
-                     operation=operation)
+    ran = [_run_wave(docs.sparkSession,
+                     docs.filter(in_wave(group)).drop("_bucket"), group,
+                     table_dir, manifest, cfg, n_buckets, input_desc,
+                     transform=transform, operation=operation)
            for group in wave_groups]
     completed_now = sum(len(s["completed_buckets"]) for s in ran)
     return {
@@ -214,6 +206,25 @@ def _run_waves(spark: SparkSession, read_group, table_dir: str | Path,
         "buckets_remaining": n_buckets - len(done) - completed_now,
         "snapshots": [s["id"] for s in ran],
     }
+
+
+def _wave_filter(docs: DataFrame, n_buckets: int):
+    """group -> predicate selecting a wave's docs.  Over a ``_bucket``
+    input it checks the input was bucketed with ``n_buckets``: any
+    ``_bucket=N`` directory with N >= n_buckets fails here, and a row whose
+    ``_bucket`` differs from its computed bucket fails its wave."""
+    if "_bucket" not in docs.columns:
+        return lambda group: _bucket_col(n_buckets).isin(group)
+    written = {int(b) for f in docs.inputFiles()
+               for b in re.findall(r"/_bucket=(\d+)/", f)}
+    msg = (f"input _bucket was not written with n_buckets={n_buckets}; "
+           f"rewrite it with write_bucketed_input(..., n_buckets={n_buckets})")
+    if written and max(written) >= n_buckets:
+        raise ValueError(f"{msg} (found _bucket={max(written)})")
+    same = F.when(F.col("_bucket") == _bucket_col(n_buckets), True) \
+            .otherwise(F.raise_error(msg))
+    # the isin conjunct stays on its own so it is a partition filter
+    return lambda group: F.col("_bucket").isin(group) & same
 
 
 def _run_wave(spark: SparkSession, sub: DataFrame, group: list[int],
@@ -267,49 +278,18 @@ def _run_wave(spark: SparkSession, sub: DataFrame, group: list[int],
 
 
 def write_bucketed_input(docs: DataFrame, input_dir: str | Path,
-                         n_buckets: int = 32) -> None:
+                         n_buckets: int = N_BUCKETS) -> None:
     """Materialize the INPUT table partitioned by the same deterministic
     bucket column the checkpoint protocol uses — the file-level-pruning
-    half of resume (the honest TODO of the round-1 design): a resumed run
-    then LISTS only the todo bucket directories instead of scanning every
-    input file and filtering.  At 10^12 docs this is the difference
-    between touching 1/32 of the files and touching all of them."""
+    half of resume: :func:`extract_with_checkpoint` over
+    ``spark.read.parquet(input_dir)`` then READS only the todo bucket
+    directories instead of scanning every input file and filtering.  At
+    10^12 docs this is the difference between reading one bucket's share
+    of the files and reading all of them.  Read it with the same
+    ``n_buckets``."""
     (docs.withColumn("_bucket", _bucket_col(n_buckets))
      .write.mode("overwrite").partitionBy("_bucket")
      .parquet(str(input_dir)))
-
-
-def bucketed_input_df(spark: SparkSession, input_dir: str | Path,
-                      buckets: list[int]) -> DataFrame:
-    """Read ONLY the given bucket partitions of a bucketed input table —
-    explicit directory paths, so the scan's file index never even lists
-    other buckets' files."""
-    base = Path(input_dir)
-    paths = [str(base / f"_bucket={int(b)}") for b in buckets
-             if (base / f"_bucket={int(b)}").exists()]
-    if not paths:
-        return spark.createDataFrame([], OUTPUT_SCHEMA)
-    return (spark.read.option("basePath", str(base)).parquet(*paths)
-            .drop("_bucket"))
-
-
-def extract_with_checkpoint_bucketed(
-    spark: SparkSession,
-    input_dir: str | Path,
-    table_dir: str | Path,
-    cfg: ExtractionConfig = DEFAULT_CONFIG,
-    n_buckets: int = 32,
-    waves: int = 4,
-    max_waves: int | None = None,
-) -> dict:
-    """Checkpointed extraction over a :func:`write_bucketed_input` table:
-    per wave, only that wave's input bucket directories are read (file
-    pruning), instead of scanning all input and filtering on a computed
-    bucket predicate."""
-    return _run_waves(
-        spark, lambda group: bucketed_input_df(spark, input_dir, group),
-        table_dir, cfg, n_buckets, waves, max_waves,
-        input_desc=f"bucketed:{input_dir}")
 
 
 def read_extracted(spark: SparkSession, table_dir: str | Path) -> DataFrame:
@@ -322,18 +302,13 @@ def read_extracted(spark: SparkSession, table_dir: str | Path) -> DataFrame:
     inference or footer reads; and files superseded by a compaction
     snapshot are invisible even while they still exist on disk — the
     manifest is the source of truth, mirroring Iceberg's snapshot
-    isolation.  (Legacy dir-level snapshots fall back to the partition
-    directory path.)"""
+    isolation."""
     manifest = SnapshotManifest(table_dir)
     base = Path(table_dir) / "data"
     paths: list[str] = []
     for b, files in sorted(manifest.committed_files().items()):
         bdir = base / f"_bucket={int(b)}"
-        if files is None:
-            if bdir.exists():
-                paths.append(str(bdir))
-        else:
-            paths.extend(str(bdir / f) for f in files if (bdir / f).exists())
+        paths.extend(str(bdir / f) for f in files if (bdir / f).exists())
     if not paths:
         return spark.createDataFrame([], OUTPUT_SCHEMA)
     return (spark.read.option("basePath", str(base)).parquet(*paths)
@@ -364,10 +339,9 @@ def compact_buckets(spark: SparkSession, table_dir: str | Path,
     committed = manifest.committed_files()
 
     chosen: dict[int, list[str]] = {}
-    for b, files in sorted(committed.items()):
+    for b, names in sorted(committed.items()):
         if buckets is not None and b not in buckets:
             continue
-        names = files if files is not None else _bucket_files(table_dir, b)
         if len(names) > target_files:
             chosen[b] = names
     if not chosen:

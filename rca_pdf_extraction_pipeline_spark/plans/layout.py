@@ -63,8 +63,7 @@ def zorder_key(cols: list[Column | str], bits: int = 16) -> Column:
 
 
 def zorder_layout(df: DataFrame, cols: list[str], bits: int = 16,
-                  num_files: int | None = None,
-                  key_col: str = "_zkey") -> DataFrame:
+                  num_files: int | None = None) -> DataFrame:
     """Rewrite ``df`` into Z-order layout: one range exchange on the
     Morton key of ``cols`` plus an in-partition sort, so a follow-up
     ``write.parquet`` emits one rectangle-shaped file per partition
@@ -74,16 +73,16 @@ def zorder_layout(df: DataFrame, cols: list[str], bits: int = 16,
     ``cols`` must already be integer codes in ``[0, 2**bits)`` — for
     raw value columns derive codes first (e.g. ``F.ntile`` ranks or
     ``(col % 2**bits)``), mirroring how Delta zorders on range-partition
-    ids rather than raw values.  The key column is kept (``key_col``)
+    ids rather than raw values.  The key column is kept (``_zkey``)
     so callers and tests can audit bucket membership; drop it at write
     time if unwanted.
     """
     spark = df.sparkSession
     if num_files is None:
         num_files = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    keyed = df.withColumn(key_col, zorder_key(cols, bits=bits))
-    return (keyed.repartitionByRange(num_files, F.col(key_col))
-            .sortWithinPartitions(key_col))
+    keyed = df.withColumn("_zkey", zorder_key(cols, bits=bits))
+    return (keyed.repartitionByRange(num_files, F.col("_zkey"))
+            .sortWithinPartitions("_zkey"))
 
 
 def layout_stats(df: DataFrame, cols: list[str]) -> DataFrame:

@@ -81,12 +81,12 @@ def header_verification_report(
     return "\n".join(lines).encode("utf-8")
 
 
-def _typed_cell(value: str, force_str: bool = False):
+def _typed_cell(value: str):
     """Reconstruct the reference's union-typed cell (float | str | None)
     from the canonical string cell (reference :714-731 parse semantics)."""
     if value == "":
         return None
-    if force_str or value in _STR_OK or value.startswith("<"):
+    if value in _STR_OK or value.startswith("<"):
         return value
     try:
         return float(value.replace(",", ""))
@@ -129,8 +129,7 @@ def bundle_json_bytes(
     return json.dumps(data, indent=2).encode("utf-8")
 
 
-def write_media_files(media, out_dir, ref_col: str = "media_ref",
-                      payload_col: str = "payload") -> int:
+def write_media_files(media, out_dir) -> int:
     """K6 media file sink (reference elementizer/extractor.py:176-184):
     one binary file per media row, named by its ``media_ref`` (the
     reference's ``page%04d_img%04d.<ext>`` pattern — X13), null/empty
@@ -150,15 +149,15 @@ def write_media_files(media, out_dir, ref_col: str = "media_ref",
     out.mkdir(parents=True, exist_ok=True)
     target = str(out)
 
-    writable = media.select(ref_col, payload_col).filter(
-        F.col(payload_col).isNotNull() & (F.length(payload_col) > 0))
+    writable = media.select("media_ref", "payload").filter(
+        F.col("payload").isNotNull() & (F.length("payload") > 0))
 
     def write_part(rows) -> None:
         for r in rows:
             # basename() guards media_ref path traversal into other dirs
-            name = os.path.basename(r[ref_col])
+            name = os.path.basename(r["media_ref"])
             with open(os.path.join(target, name), "wb") as f:
-                f.write(bytes(r[payload_col]))
+                f.write(bytes(r["payload"]))
 
     writable.foreachPartition(write_part)
     return writable.count()

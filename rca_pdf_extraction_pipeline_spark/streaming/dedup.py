@@ -33,15 +33,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def with_content_hash(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_content_hash(docs: DataFrame) -> DataFrame:
     """Append the md5 content digest (the dedup key; 16 bytes of state
     per document instead of the document)."""
     return docs.withColumn("content_hash",
-                           F.md5(F.col(text_col).cast("string")))
+                           F.md5(F.col("text").cast("string")))
 
 
-def dedup_stream(docs: DataFrame, ts_col: str = "event_time",
-                 text_col: str = "text",
+def dedup_stream(docs: DataFrame,
                  watermark_delay: str = "10 minutes") -> DataFrame:
     """First arrival per content hash within the watermark horizon.
 
@@ -49,23 +48,19 @@ def dedup_stream(docs: DataFrame, ts_col: str = "event_time",
     state for hashes older than ``watermark_delay`` is evicted, which
     is what makes this safe on an unbounded stream.
     """
-    return (with_content_hash(docs, text_col)
-            .withWatermark(ts_col, watermark_delay)
+    return (with_content_hash(docs)
+            .withWatermark("event_time", watermark_delay)
             .dropDuplicatesWithinWatermark(["content_hash"]))
 
 
-def dedup_stream_unbounded(docs: DataFrame,
-                           text_col: str = "text") -> DataFrame:
+def dedup_stream_unbounded(docs: DataFrame) -> DataFrame:
     """Exact streaming dedup with unbounded state — finite backfills
     only (state grows with the distinct-hash count forever)."""
-    return (with_content_hash(docs, text_col)
+    return (with_content_hash(docs)
             .dropDuplicates(["content_hash"]))
 
 
 def incremental_pairs_stream(new_docs: DataFrame, index_keys: DataFrame,
-                             ts_col: str = "event_time",
-                             text_col: str = "text",
-                             id_col: str = "doc_id",
                              watermark_delay: str = "10 minutes"
                              ) -> DataFrame:
     """Streaming near-dup detection against an indexed corpus: the
@@ -86,25 +81,23 @@ def incremental_pairs_stream(new_docs: DataFrame, index_keys: DataFrame,
     periodically with the batch job — stream-static joins re-read the
     static side per micro-batch, picking up compacted snapshots.
 
-    Returns (new_id, indexed_id, <ts_col>): the arriving document, the
+    Returns (new_id, indexed_id, event_time): the arriving document, the
     stored near-duplicate it collided with, and the arrival time.
     """
     from ..operators.dedup import minhash_band_keys
 
-    keys = minhash_band_keys(new_docs, text_col, id_col,
-                             keep_cols=(ts_col,))
-    nk = keys.select(F.col(id_col).alias("new_id"), F.col(ts_col),
+    keys = minhash_band_keys(new_docs, keep_cols=("event_time",))
+    nk = keys.select(F.col("doc_id").alias("new_id"), F.col("event_time"),
                      F.col("band"), F.col("band_key"))
     idx = index_keys.select(F.col("band"), F.col("band_key"),
-                            F.col(id_col).alias("indexed_id"))
+                            F.col("doc_id").alias("indexed_id"))
     return (nk.join(idx, ["band", "band_key"])
-            .select("new_id", "indexed_id", ts_col)
-            .withWatermark(ts_col, watermark_delay)
+            .select("new_id", "indexed_id", "event_time")
+            .withWatermark("event_time", watermark_delay)
             .dropDuplicatesWithinWatermark(["new_id", "indexed_id"]))
 
 
-def url_dedup_stream(docs: DataFrame, ts_col: str = "event_time",
-                     url_col: str = "url",
+def url_dedup_stream(docs: DataFrame,
                      watermark_delay: str = "10 minutes") -> DataFrame:
     """Ingest-time URL dedup: first arrival per NORMALIZED url within
     the watermark horizon — the streaming half of the batch URL family
@@ -115,31 +108,29 @@ def url_dedup_stream(docs: DataFrame, ts_col: str = "event_time",
     a timestamp — never the url string itself."""
     from ..operators.urls import normalize_url
 
-    return (docs.withColumn("url_norm", normalize_url(F.col(url_col)))
+    return (docs.withColumn("url_norm", normalize_url(F.col("url")))
             .withColumn("url_hash", F.md5(F.col("url_norm")))
-            .withWatermark(ts_col, watermark_delay)
+            .withWatermark("event_time", watermark_delay)
             .dropDuplicatesWithinWatermark(["url_hash"]))
 
 
-def batch_url_keep_first(docs: DataFrame, order_col: str,
-                         url_col: str = "url") -> DataFrame:
+def batch_url_keep_first(docs: DataFrame) -> DataFrame:
     """Batch twin of :func:`url_dedup_stream`'s keep-first policy — one
-    row per normalized url, smallest ``order_col`` wins.  Pins
+    row per normalized url, smallest ``doc_id`` wins.  Pins
     stream == batch in tests."""
     from ..operators.urls import normalize_url
 
-    w = (docs.withColumn("url_norm", normalize_url(F.col(url_col)))
+    w = (docs.withColumn("url_norm", normalize_url(F.col("url")))
          .withColumn("url_hash", F.md5(F.col("url_norm"))))
-    first = w.groupBy("url_hash").agg(F.min(order_col).alias(order_col))
-    return w.join(first, ["url_hash", order_col], "left_semi")
+    first = w.groupBy("url_hash").agg(F.min("doc_id").alias("doc_id"))
+    return w.join(first, ["url_hash", "doc_id"], "left_semi")
 
 
-def batch_keep_first(docs: DataFrame, order_col: str,
-                     text_col: str = "text") -> DataFrame:
+def batch_keep_first(docs: DataFrame) -> DataFrame:
     """Batch twin of the streaming keep-first policy: one row per
-    content hash, the one with the smallest ``order_col`` (arrival
+    content hash, the one with the smallest ``doc_id`` (arrival
     order).  Used by tests to pin stream == batch equivalence."""
-    w = with_content_hash(docs, text_col)
+    w = with_content_hash(docs)
     first = (w.groupBy("content_hash")
-             .agg(F.min(order_col).alias(order_col)))
-    return w.join(first, ["content_hash", order_col], "left_semi")
+             .agg(F.min("doc_id").alias("doc_id")))
+    return w.join(first, ["content_hash", "doc_id"], "left_semi")

@@ -24,10 +24,9 @@ from pyspark.sql import DataFrame
 from ..operators import profiling as P
 
 
-def drift_bucket_stream(docs: DataFrame, text_col: str = "text",
-                        n_buckets: int = 512) -> DataFrame:
+def drift_bucket_stream(docs: DataFrame, n_buckets: int = 512) -> DataFrame:
     """Streaming (bucket, n) counts for a streaming document source:
     same expression tree as the batch builder.  Run with
     ``outputMode('complete')`` into a memory/table sink the scoring
     join reads, or ``'update'`` for delta-consuming sinks."""
-    return P.token_bucket_counts(docs, text_col, n_buckets)
+    return P.token_bucket_counts(docs, n_buckets)

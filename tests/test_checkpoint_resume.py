@@ -161,33 +161,55 @@ def test_torn_file_in_uncommitted_bucket_cannot_break_reads(spark, docs, tmp_pat
 
 
 def test_bucketed_input_prunes_files_on_resume(spark, docs, tmp_path):
-    """Input-side file pruning: with a bucket-partitioned input table, a
-    resumed wave's scan lists ONLY the todo buckets' files
-    (InMemoryFileIndex content pinned via inputFiles())."""
+    """Input-side file pruning: over a bucket-partitioned input table, a
+    resumed wave's ``_bucket IN (...)`` filter is a partition filter, so
+    the executed scans read ONLY the todo buckets' files."""
+    from perfbench.probe import StatusStore
+
     input_dir = tmp_path / "docs_bucketed"
     table = tmp_path / "extracted"
     checkpoint.write_bucketed_input(docs, input_dir, n_buckets=4)
+    bucketed = spark.read.parquet(str(input_dir))
 
-    r1 = checkpoint.extract_with_checkpoint_bucketed(
-        spark, input_dir, table, n_buckets=4, waves=4, max_waves=2)
+    r1 = checkpoint.extract_with_checkpoint(
+        bucketed, table, n_buckets=4, waves=4, max_waves=2)
     assert r1["waves_run"] == 2
     done = checkpoint.SnapshotManifest(table).completed_buckets()
     todo = sorted(set(range(4)) - done)
+    todo_files = sum(1 for b in todo
+                     for f in (input_dir / f"_bucket={b}").glob("*.parquet"))
+    all_files = sum(1 for _ in input_dir.glob("_bucket=*/*.parquet"))
+    assert 0 < todo_files < all_files
 
-    scan = checkpoint.bucketed_input_df(spark, input_dir, todo)
-    files = scan.inputFiles()
-    assert files, "todo buckets should have input files"
-    for f in files:
-        assert any(f"_bucket={b}/" in f for b in todo), f
-        assert not any(f"_bucket={b}/" in f for b in done), f
+    store = StatusStore(spark)
+    last = store.last_id()
+    r2 = checkpoint.extract_with_checkpoint(bucketed, table, n_buckets=4,
+                                            waves=4)
+    assert r2["waves_run"] == 2
+    scans = [n["metrics"]["number of files read"]
+             for e in store.executions_after(last, wait_s=10)
+             for n in e["nodes"] if n["name"].startswith("Scan parquet")]
+    assert len(scans) == 2, scans
+    assert sum(scans) == todo_files
 
     # resume completes and output equals the unbucketed pipeline's docs
-    checkpoint.extract_with_checkpoint_bucketed(
-        spark, input_dir, table, n_buckets=4, waves=4)
     ids = sorted(r["doc_id"] for r in
                  checkpoint.read_extracted(spark, table).collect())
     want = sorted(r["doc_id"] for r in docs.select("doc_id").collect())
     assert ids == want
+
+
+@pytest.mark.parametrize("written, read", [(32, 64), (64, 32)])
+def test_bucketed_input_with_other_bucket_count_fails(spark, docs, tmp_path,
+                                                      written, read):
+    """An input bucketed with another count must fail the run, not drop
+    the docs whose buckets disagree."""
+    input_dir = tmp_path / "docs_bucketed"
+    checkpoint.write_bucketed_input(docs, input_dir, n_buckets=written)
+    with pytest.raises(Exception, match=f"n_buckets={read}"):
+        checkpoint.extract_with_checkpoint(
+            spark.read.parquet(str(input_dir)), tmp_path / "extracted",
+            n_buckets=read, waves=4)
 
 
 def test_manifest_lock_blocks_second_writer(tmp_path):
@@ -196,12 +218,12 @@ def test_manifest_lock_blocks_second_writer(tmp_path):
     import pytest as _pytest
     with _pytest.raises(TimeoutError, match="single-writer"):
         checkpoint.SnapshotManifest(tmp_path / "t", lock_timeout=0.2).append(
-            [0], {}, {})
+            [0], {}, {}, files={0: []})
     import os
     os.close(fd)
     m.lock_path.unlink()
     # lock released -> append succeeds
-    snap = m.append([0], {"docs": 0}, {"input": "x"})
+    snap = m.append([0], {"docs": 0}, {"input": "x"}, files={0: []})
     assert snap["completed_buckets"] == [0]
 
 

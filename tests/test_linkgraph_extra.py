@@ -305,7 +305,7 @@ def test_nb_classify_separable_classes(spark):
     rows = [(i, "en", "hello world again hello") for i in range(4)] \
         + [(10 + i, "fr", "bonjour le monde bonjour") for i in range(4)]
     docs = spark.createDataFrame(rows, "doc_id: long, lang: string, text: string")
-    out = textanalysis.nb_classify(docs, class_col="lang").collect()
+    out = textanalysis.nb_classify(docs).collect()
     assert len(out) == 8
     for r in out:
         assert r["predicted"] == r["actual"], (r["doc_id"], r["predicted"])
@@ -317,7 +317,7 @@ def test_nb_classify_every_doc_scored_once(spark):
     rows = [(1, "en", "hello world"), (2, "fr", "bonjour monde"),
             (3, "en", "hello bonjour")]  # mixed evidence still scored
     docs = spark.createDataFrame(rows, "doc_id: long, lang: string, text: string")
-    out = textanalysis.nb_classify(docs, class_col="lang").collect()
+    out = textanalysis.nb_classify(docs).collect()
     assert sorted(r["doc_id"] for r in out) == [1, 2, 3]
     assert all(r["predicted"] in ("en", "fr") for r in out)
 

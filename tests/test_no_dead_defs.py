@@ -49,3 +49,93 @@ def test_every_package_def_is_referenced():
     assert len(defs) > 100  # the scan found the package
     dead = [f"{where} {name}" for where, name in defs if refs[name] == 0]
     assert dead == [], "defined but never referenced:\n" + "\n".join(dead)
+
+
+def _col_params(tree: ast.AST, where: str) -> dict:
+    """(where, function, line, param) -> (default node or None, positional
+    index or None, is_method) for every ``*_col`` parameter."""
+    out = {}
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        method = bool(pos) and pos[0].arg in ("self", "cls")
+        defaults = [None] * (len(pos) - len(a.defaults)) + list(a.defaults)
+        params = [(p, d, i) for i, (p, d) in enumerate(zip(pos, defaults))]
+        params += [(p, d, None) for p, d in zip(a.kwonlyargs, a.kw_defaults)]
+        for p, d, i in params:
+            if p.arg.endswith("_col"):
+                out[(where, fn.name, fn.lineno, p.arg)] = (d, i, method)
+    return out
+
+
+def test_every_column_parameter_is_set():
+    """Operators read the engine's fixed column names: a defaulted
+    ``*_col`` parameter of a package function exists only if some call
+    site passes another value — a different literal, any expression, or
+    a caller's own ``*_col`` parameter that itself takes two values.
+    A forwarded parameter takes the values its own call sites give it
+    (its default included), to a fixpoint."""
+    trees = {path: ast.parse(path.read_text(), str(path))
+             for path in _python_files()}
+    params = {}
+    for path, tree in trees.items():
+        rel = path.relative_to(REPO)
+        if rel.parts[0] == PACKAGE:
+            params.update(_col_params(tree, str(rel)))
+    by_name: dict[str, list] = {}
+    for key in params:
+        by_name.setdefault(key[1], []).append(key)
+
+    passed = []  # (param key, value expression, enclosing parameters)
+
+    def visit(node, scope, where):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            a = node.args
+            scope = {**scope, **{p.arg: (where, node.name, node.lineno, p.arg)
+                                 for p in a.posonlyargs + a.args + a.kwonlyargs}}
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = getattr(f, "id", getattr(f, "attr", None))
+            for key in by_name.get(name, ()):
+                _, i, method = params[key]
+                passed.extend((key, kw.value, scope) for kw in node.keywords
+                              if kw.arg == key[3])
+                if i is not None:
+                    i -= method and isinstance(f, ast.Attribute)
+                    if 0 <= i < len(node.args) and not any(
+                            isinstance(x, ast.Starred) for x in node.args[:i + 1]):
+                        passed.append((key, node.args[i], scope))
+        for child in ast.iter_child_nodes(node):
+            visit(child, scope, where)
+
+    for path, tree in trees.items():
+        visit(tree, {}, str(path.relative_to(REPO)))
+
+    opaque = object()
+    values = {k: set() if d is None else
+              {d.value if isinstance(d, ast.Constant) else opaque}
+              for k, (d, _, _) in params.items()}
+    changed = True
+    while changed:
+        changed = False
+        for key, v, scope in passed:
+            if isinstance(v, ast.Constant):
+                new = {v.value}
+            elif isinstance(v, ast.Name) and scope.get(v.id) in params:
+                new = values[scope[v.id]]
+            else:
+                new = {opaque}
+            if not new <= values[key]:
+                values[key] |= new
+                changed = True
+
+    defaulted = [k for k, (d, _, _) in params.items() if d is not None]
+    assert defaulted  # the scan found the package's column parameters
+    unset = [f"{where}:{line} {fn}({param}=...)"
+             for where, fn, line, param in defaulted
+             if len(values[(where, fn, line, param)]) < 2]
+    assert unset == [], ("column parameters no call site sets to another "
+                         "value — read the column name instead:\n"
+                         + "\n".join(unset))

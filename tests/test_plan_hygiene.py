@@ -761,7 +761,7 @@ def test_drift_and_bpe_no_python_eval_topk_shape(spark, documents):
     assert "EvalPython" not in plan, plan[:2000]
     assert "TakeOrderedAndProject" in plan, plan[:2000]
 
-    pairs = bpe._pair_counts(bpe._word_vocab(documents.limit(100), "text"))
+    pairs = bpe._pair_counts(bpe._word_vocab(documents.limit(100)))
     plan = _plan(pairs)
     assert "EvalPython" not in plan, plan[:2000]
 

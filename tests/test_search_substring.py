@@ -425,6 +425,6 @@ def test_normalize_for_dedup_collapses_variants(spark):
     n = d.withColumn("text", normalize_for_dedup(F.col("text")))
     texts = {r["doc_id"]: r["text"] for r in n.collect()}
     assert texts["1"] == texts["2"] == texts["3"] == "hello world how are you"
-    groups = dedup.exact_duplicates(n, id_col="doc_id").collect()
+    groups = dedup.exact_duplicates(n).collect()
     assert len(groups) == 1
     assert groups[0]["dup_count"] == 3 and groups[0]["canonical_id"] == "1"

@@ -195,7 +195,7 @@ def test_stream_dedup_keeps_first_arrival(spark, tmp_path):
     assert got == [1, 2, 4]  # first arrival per content; 3/5/6 suppressed
 
     want = sorted(r["doc_id"] for r in
-                  sdedup.batch_keep_first(df, "doc_id").collect())
+                  sdedup.batch_keep_first(df).collect())
     assert got == want  # stream == batch keep-first
 
 
@@ -247,7 +247,7 @@ def test_stream_url_dedup_keeps_first_arrival(spark, tmp_path):
     assert got == [1, 2, 4, 5]  # 3 and 6 collapse into 1; http stays
 
     want = sorted(r["doc_id"] for r in
-                  sdedup.batch_url_keep_first(df, "doc_id").collect())
+                  sdedup.batch_url_keep_first(df).collect())
     assert got == want  # stream == batch keep-first
 
 
@@ -340,7 +340,7 @@ def test_hll_registers_stream_equals_batch(spark, tmp_path):
 
     stream = (spark.readStream.schema(docs.schema)
               .option("maxFilesPerTrigger", 1).parquet(in_dir))
-    q = (SS.hll_register_stream(stream, "v")
+    q = (SS.hll_register_stream(stream)
          .writeStream.format("memory").queryName("hllregs")
          .outputMode("complete").start())
     try:

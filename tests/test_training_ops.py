@@ -1629,7 +1629,7 @@ def test_vocab_overlap_hll_monoid_and_sanity(spark):
     rows = [(i, "a", f"tok{i % 400}") for i in range(400)] \
         + [(1000 + i, "b", f"tok{200 + i % 400}") for i in range(400)]
     docs = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    out = S.vocab_overlap_by_group(docs, group_col="lang").collect()
+    out = S.vocab_overlap_by_group(docs).collect()
     assert len(out) == 1
     r = out[0]
     assert (r.group_a, r.group_b) == ("a", "b")
