@@ -4,8 +4,8 @@
         [--output rca_pkg.zip]
 
 Zips this package (via :func:`..session.package_zip` — the same
-artifact ``get_spark`` ships in-process) and prints the path; with
-``--output`` the zip is copied there.  The printed path plugs straight
+artifact ``ship_package`` adds to a non-local session) and prints the
+path; with ``--output`` the zip is copied there.  The printed path plugs straight
 into ``spark-submit --py-files``."""
 
 from __future__ import annotations

@@ -22,8 +22,9 @@ written through the snapshot-manifest checkpoint machinery: bucket waves
 over ``xxhash64(doc_id)``, per-wave observed metrics, file-level commits.
 Running again continues from the manifest without reprocessing completed
 buckets.  Build the zip with
-``python -m rca_pdf_extraction_pipeline_spark.jobs.package`` or let
-``session.get_spark`` ship it automatically when driving in-process.
+``python -m rca_pdf_extraction_pipeline_spark.jobs.package``.  Driving
+in-process needs no zip: ``session.get_spark`` hands local workers the
+package directory, and ships the zip to any other session.
 """
 
 from __future__ import annotations

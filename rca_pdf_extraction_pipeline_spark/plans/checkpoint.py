@@ -185,6 +185,13 @@ def extract_with_checkpoint(
     in_wave = _wave_filter(docs, n_buckets)
     table_dir = Path(table_dir)
     manifest = SnapshotManifest(table_dir)
+    # completed_buckets are bucket numbers under the count that wrote them:
+    # under another count they name other docs
+    other = {s["lineage"].get("n_buckets") for s in manifest.load()} - {None, n_buckets}
+    if other:
+        raise ValueError(
+            f"{table_dir} was checkpointed with n_buckets={min(other)}; "
+            f"resume it with that count, not n_buckets={n_buckets}")
     done = manifest.completed_buckets()
     todo = sorted(set(range(n_buckets)) - done)
 

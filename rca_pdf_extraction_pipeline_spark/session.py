@@ -11,6 +11,8 @@ from pyspark.sql import SparkSession
 
 from .config import DEFAULT_CONFIG
 
+PKG_DIR = Path(__file__).resolve().parent
+
 
 def get_spark(
     app_name: str = "rca-extraction",
@@ -20,7 +22,7 @@ def get_spark(
 ) -> SparkSession:
     """Build a SparkSession with the engine's defaults.
 
-    * Arrow enabled (every heavy operator is an Arrow-batched pandas UDF);
+    * Arrow enabled (every heavy operator is a ``mapInArrow`` stage);
     * small ``maxRecordsPerBatch`` — docs are wide nested rows, so batch
       memory is bounded by record count, not bytes;
     * AQE on: runtime coalescing + skew handling complement the explicit
@@ -84,6 +86,13 @@ def get_spark(
         if "SPARK_GRAFT_JIT_FULL" not in os.environ:
             java_opts += " -XX:TieredStopAtLevel=1"
         b = b.config("spark.driver.extraJavaOptions", java_opts)
+    # local mode, package run from its directory: the Python workers import
+    # pyspark, py4j and this package from directories, with no archive on
+    # sys.path — each task's importlib.invalidate_caches() would otherwise
+    # re-read every zip the worker imported from (worker_daemon.py)
+    if master.startswith("local") and PKG_DIR.is_dir():
+        b = (b.config("spark.python.daemon.module", f"{__package__}.worker_daemon")
+             .config("spark.executorEnv.PYTHONPATH", str(PKG_DIR.parent)))
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
@@ -96,24 +105,27 @@ def package_zip() -> str | None:
     Cached per process in the temp dir. Returns None when the package is
     itself imported from a zip (i.e. we ARE the --py-files payload and
     spark-submit has already distributed it)."""
-    pkg_dir = Path(__file__).resolve().parent
-    if not pkg_dir.is_dir():
+    if not PKG_DIR.is_dir():
         return None
     out = Path(tempfile.gettempdir()) / f"rca_pkg_{os.getpid()}"
     zip_path = out.with_suffix(".zip")
     if not zip_path.exists():
-        shutil.make_archive(str(out), "zip", root_dir=pkg_dir.parent,
-                            base_dir=pkg_dir.name)
+        shutil.make_archive(str(out), "zip", root_dir=PKG_DIR.parent,
+                            base_dir=PKG_DIR.name)
     return str(zip_path)
 
 
 def ship_package(spark: SparkSession) -> None:
     """Make the package importable on executors regardless of driver cwd —
     the in-process equivalent of ``spark-submit --py-files`` (north_rule
-    deployment requirement).  Idempotent."""
+    deployment requirement).  A session whose workers already have the
+    package directory on ``PYTHONPATH`` (local ``get_spark``) needs no
+    zip; any other session gets one.  Idempotent."""
     sc = spark.sparkContext
     if not getattr(sc, "_rca_pkg_shipped", False):
-        zip_path = package_zip()
+        on_path = str(PKG_DIR.parent) in sc.environment.get(
+            "PYTHONPATH", "").split(os.pathsep)
+        zip_path = None if on_path else package_zip()
         if zip_path is not None:
             sc.addPyFile(zip_path)
         sc._rca_pkg_shipped = True

@@ -212,6 +212,20 @@ def test_bucketed_input_with_other_bucket_count_fails(spark, docs, tmp_path,
             n_buckets=read, waves=4)
 
 
+def test_resume_with_other_bucket_count_fails(spark, docs, tmp_path):
+    """A resume under another bucket count must fail before any wave: the
+    manifest's completed buckets would name other docs."""
+    table = tmp_path / "extracted"
+    checkpoint.extract_with_checkpoint(docs, table, n_buckets=16, waves=4,
+                                       max_waves=1)
+    before = sorted(p for p in (table / "data").rglob("*"))
+    with pytest.raises(ValueError, match="n_buckets=16"):
+        checkpoint.extract_with_checkpoint(docs, table, n_buckets=64,
+                                           waves=4)
+    assert sorted(p for p in (table / "data").rglob("*")) == before
+    assert len(checkpoint.SnapshotManifest(table).load()) == 1
+
+
 def test_manifest_lock_blocks_second_writer(tmp_path):
     m = checkpoint.SnapshotManifest(tmp_path / "t", lock_timeout=0.2)
     fd = m._acquire_lock()
