@@ -4,8 +4,9 @@ A document is one row — the per-doc kernels cannot split a row across
 tasks — so oversized-PDF skew is defused by *placement*, not by
 splitting: salt + range-repartition spreads doc_ids uniformly and
 keeps any heavy document from sharing a task queue slot with other
-heavy documents, and Arrow batch sizing (config.arrow_max_records)
-bounds per-batch memory within a task.
+heavy documents, and the Arrow byte cap (config.arrow_max_bytes)
+bounds per-batch memory within a task: a batch holds at most the cap
+plus one document.
 
 Reference has no parallelism at all (docs/wiki/Performance.md:69-77 —
 multiprocessing was projected but never implemented); this module is

@@ -23,8 +23,12 @@ def get_spark(
     """Build a SparkSession with the engine's defaults.
 
     * Arrow enabled (every heavy operator is a ``mapInArrow`` stage);
-    * small ``maxRecordsPerBatch`` — docs are wide nested rows, so batch
-      memory is bounded by record count, not bytes;
+    * Arrow batches bounded by bytes (``maxBytesPerBatch`` =
+      ``arrow_max_bytes``, 4 MiB), with ``maxRecordsPerBatch`` at Spark's
+      own 10,000: a ``mapInArrow`` stage pays a fixed per-batch cost, so
+      one batch per task of ordinary docs amortises it, and a batch
+      holds at most the cap plus one doc, however wide the docs are
+      (docs/SCALE.md);
     * AQE on: runtime coalescing + skew handling complement the explicit
       doc_id salting (operators/skew.py);
     * shuffle partitions sized for the local harness; on a real cluster this
@@ -40,6 +44,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 str(DEFAULT_CONFIG.arrow_max_records))
+        .config("spark.sql.execution.arrow.maxBytesPerBatch",
+                str(DEFAULT_CONFIG.arrow_max_bytes))
         # pin the session zone: gap/window arithmetic on TIMESTAMP (ltz)
         # and the NTZ<->LTZ round-trips in sessionize must agree with the
         # naive-timestamp DuckDB oracles on any host, any DST rules

@@ -461,6 +461,29 @@ def build_skew_docs(n_small: int = 40, big_factor: int = 100) -> list[dict]:
     return docs
 
 
+def build_malformed_docs() -> list[dict]:
+    """Degenerate docs every span-consuming operator must survive: empty
+    spans, a payload without '|', unparseable geometry, a null kind and
+    a null offset."""
+    return [
+        {"doc_id": "empty", "spans": []},
+        {"doc_id": "no-sep", "spans": [
+            {"kind": "text", "text": "no separator at all",
+             "media_ref": None, "offset": 0}]},
+        {"doc_id": "garbage-geo", "spans": [
+            {"kind": "text", "text": "x,y,z,w,v|content",
+             "media_ref": None, "offset": 0},
+            {"kind": "line", "text": "1,a,b,c,d|", "media_ref": None,
+             "offset": 1}]},
+        {"doc_id": "null-kind", "spans": [
+            {"kind": None, "text": None, "media_ref": None, "offset": 0},
+            {"kind": "text", "text": "1|ok", "media_ref": None, "offset": 1}]},
+        {"doc_id": "null-offset", "spans": [
+            {"kind": "text", "text": "1,10,10,20,20|cell", "media_ref": None,
+             "offset": None}]},
+    ]
+
+
 SPAN_SCHEMA_DDL = (
     "doc_id string, spans array<struct<kind:string, text:string, "
     "media_ref:string, offset:int>>"

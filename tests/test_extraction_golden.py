@@ -4,8 +4,8 @@ classify and extract EXACTLY as the reference's committed golden outputs
 per-row invariant).
 
 The tests drive the functions executors run — ``flat_from_batch`` ->
-``_extract_batch_flat`` -> ``_assemble_batch`` over one Arrow batch —
-without Spark."""
+``_extract_batch_flat`` -> ``_assemble_batch`` over one Arrow batch, and
+``_table_headers`` for the header view — without Spark."""
 
 import pytest
 
@@ -13,9 +13,11 @@ from rca_pdf_extraction_pipeline_spark.config import (
     DEFAULT_CONFIG,
     GOLDEN_EXTRACTED_HEADERS,
 )
+from rca_pdf_extraction_pipeline_spark.kernels import headers as kheaders
 from rca_pdf_extraction_pipeline_spark.operators.extraction import (
     _assemble_batch,
     _extract_batch_flat,
+    _table_headers,
     classify_flat,
     flat_from_batch,
 )
@@ -83,7 +85,7 @@ def test_rows_per_page_distribution(batch_result):
 
 
 def test_headers_flattened_on_all_table_pages(batch_result):
-    hdr = batch_result["headers"]
+    hdr = _table_headers(batch_result["flat"], batch_result["table_pages"])
     for page in (39, 40, 41, 42):
         h = hdr[hdr.page == page].sort_values("col")["header"].tolist()
         assert h == GOLDEN_EXTRACTED_HEADERS[:-1], f"page {page}"
@@ -94,6 +96,34 @@ def test_golden_span_sequence_equality(golden_doc):
     want = _span_tuples(fx.expected_golden_output())
     assert len(got) == len(want) == 12 + 138 * 12 + 4
     assert got == want
+
+
+def test_documents_path_runs_no_header_flatten(golden_doc, monkeypatch):
+    """The output's header fields are the constant golden list, so the
+    ``extract_documents`` batch path must never run H1."""
+    def fail(spans):
+        raise AssertionError("flatten_headers called")
+
+    monkeypatch.setattr(kheaders, "flatten_headers", fail)
+    got = _assemble_docs([golden_doc])[golden_doc["doc_id"]]
+    assert got == _span_tuples(fx.expected_golden_output())
+
+
+def test_every_fixture_doc_is_batch_independent(golden_doc):
+    """Batches hold whole partitions: a doc's span sequence in one Arrow
+    batch with every other fixture doc equals its sequence extracted
+    alone."""
+    # the parser-branch docs include media-nosample
+    docs = [golden_doc, *fx.build_parser_branch_docs(),
+            *fx.build_classify_docs(), fx.build_grid_doc(),
+            fx.build_vector_art_doc(),
+            *fx.build_skew_docs(n_small=8, big_factor=12),
+            *fx.build_malformed_docs()]
+    together = _assemble_docs(docs)
+    assert len(together) == len(docs)
+    for doc in docs:
+        alone = _assemble_docs([doc])
+        assert together[doc["doc_id"]] == alone[doc["doc_id"]], doc["doc_id"]
 
 
 def test_parser_branch_docs_span_equality():

@@ -18,31 +18,9 @@ from rca_pdf_extraction_pipeline_spark.operators.extraction import (
 from rca_pdf_extraction_pipeline_spark.sources import fixtures as fx
 
 
-def _malformed_docs():
-    return [
-        {"doc_id": "empty", "spans": []},
-        {"doc_id": "no-sep", "spans": [
-            {"kind": "text", "text": "no separator at all",
-             "media_ref": None, "offset": 0}]},
-        {"doc_id": "garbage-geo", "spans": [
-            {"kind": "text", "text": "x,y,z,w,v|content",
-             "media_ref": None, "offset": 0},
-            {"kind": "line", "text": "1,a,b,c,d|", "media_ref": None,
-             "offset": 1}]},
-        {"doc_id": "null-kind", "spans": [
-            {"kind": None, "text": None, "media_ref": None, "offset": 0},
-            {"kind": "text", "text": "1|ok", "media_ref": None, "offset": 1}]},
-        {"doc_id": "null-offset", "spans": [
-            {"kind": "text", "text": "1,10,10,20,20|cell", "media_ref": None,
-             "offset": None}]},
-    ]
-
-
 @pytest.fixture(scope="module")
 def bad_docs(spark):
-    docs = [{"doc_id": d["doc_id"], "spans": d["spans"]}
-            for d in _malformed_docs()]
-    return fx.docs_to_spark(spark, docs)
+    return fx.docs_to_spark(spark, fx.build_malformed_docs())
 
 
 def test_extraction_survives_malformed_docs(bad_docs):

@@ -211,6 +211,17 @@ def test_extraction_is_single_arrow_stage_no_shuffle(spark):
         assert "Exchange" not in plan, name
 
 
+def test_verify_headers_runs_one_python_stage(spark):
+    """H2 reads one header frame: the reference page and its headers
+    come from windows over doc_id, not from a groupBy and self-joins
+    that each re-run the Python stage.  One exchange on doc_id serves
+    both windows and the final groupBy."""
+    docs = fixtures.docs_to_spark(spark, [fixtures.build_golden_doc()])
+    plan = _plan(extraction.verify_headers_documents(docs))
+    assert plan.count("MapInArrow") == 1, plan
+    assert plan.count("Exchange") == 1, plan
+
+
 def test_whole_stage_codegen_covers_scalar_projection(lineitem):
     """Plain scalar expressions stay inside codegen. (Higher-order array
     functions — filter/transform/aggregate — legitimately run as

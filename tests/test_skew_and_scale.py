@@ -4,9 +4,10 @@ output span sequences must be identical under any partitioning
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import functions as F
 
-from rca_pdf_extraction_pipeline_spark.config import ExtractionConfig
+from rca_pdf_extraction_pipeline_spark.config import DEFAULT_CONFIG, ExtractionConfig
 from rca_pdf_extraction_pipeline_spark.operators import skew
 from rca_pdf_extraction_pipeline_spark.operators.extraction import extract_documents
 from rca_pdf_extraction_pipeline_spark.sources import fixtures
@@ -81,3 +82,34 @@ def test_extraction_invariant_under_span_permutation(spark):
         fixtures.docs_to_spark(spark, [shuffled])))
     assert a == b
     assert len(a["golden-doc-w20552"]) == 12 + 138 * 12 + 4
+
+
+def test_arrow_batches_are_byte_bounded(spark):
+    """``mapInArrow`` input batches are cut by ``arrow_max_bytes``, not
+    by a record count.  Spark checks the cap before it adds each row, so
+    every batch is under the cap without its last row, and a row larger
+    than the cap ends its batch.  Small rows share a batch far past 64
+    records."""
+    cap = DEFAULT_CONFIG.arrow_max_bytes
+    big = 5 << 20
+
+    def sizes(batches):
+        for b in batches:
+            yield pa.RecordBatch.from_pydict({
+                "n": [b.num_rows],
+                "head_bytes": [b.slice(0, b.num_rows - 1).nbytes]})
+
+    got = {}
+    for name, row_bytes, n_rows in [("small", "10", 1000),
+                                    ("medium", "16384", 600),
+                                    ("mixed", f"if(id % 3 = 2, {big}, 1000)", 6)]:
+        df = spark.range(n_rows, numPartitions=1).select(
+            "id", F.expr(f"repeat('x', {row_bytes})").alias("s"))
+        got[name] = df.mapInArrow(sizes, "n long, head_bytes long").collect()
+        assert sum(r["n"] for r in got[name]) == n_rows, name
+        assert all(r["head_bytes"] < cap for r in got[name]), (name, got[name])
+    assert [r["n"] for r in got["small"]] == [1000]
+    assert len(got["medium"]) >= 3
+    assert max(r["n"] for r in got["medium"]) > 64
+    # each 5 MiB row ends the batch its two small predecessors started
+    assert [r["n"] for r in got["mixed"]] == [3, 3]
