@@ -167,13 +167,10 @@ class ExtractionConfig:
 
     #: target number of partitions for the skew-defusing repartition
     num_partitions: int = 32
-    #: Arrow batch record cap, at Spark's own default: ``arrow_max_bytes``
-    #: binds first.  perfbench's kernel replay cuts its batches with it,
-    #: so at this value the replay cuts whole partitions, as the stage does
+    #: record cap of perfbench's kernel replay only: the stage leaves
+    #: Spark's ``maxRecordsPerBatch`` at its default, this same 10,000,
+    #: and bounds batches by bytes (``session.ARROW_MAX_BYTES``)
     arrow_max_records: int = 10_000
-    #: Arrow batch byte cap: Spark checks it before adding each doc, so a
-    #: batch holds at most the cap plus one doc, whatever the doc sizes
-    arrow_max_bytes: int = 4 << 20
 
 
 DEFAULT_CONFIG = ExtractionConfig()

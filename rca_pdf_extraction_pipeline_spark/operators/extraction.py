@@ -28,9 +28,9 @@ Inside a batch, documents are addressed by their batch position
 Scale notes (100 TB design):
   * one Arrow round trip per task; spans never leave columnar form;
   * per-batch memory is bounded by ``spark.sql.execution.arrow.
-    maxBytesPerBatch`` (``arrow_max_bytes``, 4 MiB, plus at most one
-    doc), not by a record count: each batch pays a fixed pandas cost,
-    so a task of ordinary docs sends one batch;
+    maxBytesPerBatch`` (``session.ARROW_MAX_BYTES``, 4 MiB, plus at most
+    one doc), not by a 64-record count: each batch pays a fixed pandas
+    cost, so a task of ordinary docs sends one batch;
   * nested-column pruning: the pipeline reads only (doc_id, spans), so
     parquet scans prune every other column; predicate pushdown on doc_id
     works for resume (plans/checkpoint.py).

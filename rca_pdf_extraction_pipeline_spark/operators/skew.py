@@ -4,7 +4,7 @@ A document is one row — the per-doc kernels cannot split a row across
 tasks — so oversized-PDF skew is defused by *placement*, not by
 splitting: salt + range-repartition spreads doc_ids uniformly and
 keeps any heavy document from sharing a task queue slot with other
-heavy documents, and the Arrow byte cap (config.arrow_max_bytes)
+heavy documents, and the Arrow byte cap (session.ARROW_MAX_BYTES)
 bounds per-batch memory within a task: a batch holds at most the cap
 plus one document.
 

@@ -9,9 +9,13 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-from .config import DEFAULT_CONFIG
-
 PKG_DIR = Path(__file__).resolve().parent
+
+#: Arrow batch byte cap (``spark.sql.execution.arrow.maxBytesPerBatch``).
+#: Spark checks it before adding each row, so a batch holds at most the
+#: cap plus one row; Spark's record cap (10,000) cuts first for rows
+#: under about 420 B
+ARROW_MAX_BYTES = 4 << 20
 
 
 def get_spark(
@@ -24,11 +28,11 @@ def get_spark(
 
     * Arrow enabled (every heavy operator is a ``mapInArrow`` stage);
     * Arrow batches bounded by bytes (``maxBytesPerBatch`` =
-      ``arrow_max_bytes``, 4 MiB), with ``maxRecordsPerBatch`` at Spark's
-      own 10,000: a ``mapInArrow`` stage pays a fixed per-batch cost, so
-      one batch per task of ordinary docs amortises it, and a batch
-      holds at most the cap plus one doc, however wide the docs are
-      (docs/SCALE.md);
+      ``ARROW_MAX_BYTES``, 4 MiB), with ``maxRecordsPerBatch`` left at
+      Spark's own 10,000, which cuts first for docs under about 420 B:
+      a ``mapInArrow`` stage pays a fixed per-batch cost, so one batch
+      per task of ordinary docs amortises it, and a batch holds at most
+      the cap plus one doc (docs/SCALE.md);
     * AQE on: runtime coalescing + skew handling complement the explicit
       doc_id salting (operators/skew.py);
     * shuffle partitions sized for the local harness; on a real cluster this
@@ -42,10 +46,8 @@ def get_spark(
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                str(DEFAULT_CONFIG.arrow_max_records))
         .config("spark.sql.execution.arrow.maxBytesPerBatch",
-                str(DEFAULT_CONFIG.arrow_max_bytes))
+                str(ARROW_MAX_BYTES))
         # pin the session zone: gap/window arithmetic on TIMESTAMP (ltz)
         # and the NTZ<->LTZ round-trips in sessionize must agree with the
         # naive-timestamp DuckDB oracles on any host, any DST rules

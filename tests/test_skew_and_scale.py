@@ -7,9 +7,10 @@ from __future__ import annotations
 import pyarrow as pa
 from pyspark.sql import functions as F
 
-from rca_pdf_extraction_pipeline_spark.config import DEFAULT_CONFIG, ExtractionConfig
+from rca_pdf_extraction_pipeline_spark.config import ExtractionConfig
 from rca_pdf_extraction_pipeline_spark.operators import skew
 from rca_pdf_extraction_pipeline_spark.operators.extraction import extract_documents
+from rca_pdf_extraction_pipeline_spark.session import ARROW_MAX_BYTES
 from rca_pdf_extraction_pipeline_spark.sources import fixtures
 
 
@@ -85,12 +86,12 @@ def test_extraction_invariant_under_span_permutation(spark):
 
 
 def test_arrow_batches_are_byte_bounded(spark):
-    """``mapInArrow`` input batches are cut by ``arrow_max_bytes``, not
+    """``mapInArrow`` input batches are cut by ``ARROW_MAX_BYTES``, not
     by a record count.  Spark checks the cap before it adds each row, so
     every batch is under the cap without its last row, and a row larger
     than the cap ends its batch.  Small rows share a batch far past 64
     records."""
-    cap = DEFAULT_CONFIG.arrow_max_bytes
+    cap = ARROW_MAX_BYTES
     big = 5 << 20
 
     def sizes(batches):
