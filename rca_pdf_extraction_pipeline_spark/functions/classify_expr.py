@@ -1,11 +1,17 @@
-"""C1 keyword cascade as pure column expressions.
+"""Page classification as pure column expressions.
 
-Column-expression twin of kernels/classify.classify_pages_keyword
-(reference src/core_analysis.py:438-516): the same priority cascade,
-confidences and reason strings, but expressed as a `when()` chain so it
-runs JVM-side inside WholeStageCodegen — the right form when the page
-text is already a flat column (corpus analytics) rather than nested
-spans (the extraction pipeline, which uses the pandas kernel).
+C1: ``keyword_cascade`` is the column twin of
+kernels/classify.classify_pages_keyword (reference
+src/core_analysis.py:438-516): the same priority cascade, confidences
+and reason strings, but expressed as a `when()` chain so it runs
+JVM-side inside WholeStageCodegen — the right form when the page text
+is already a flat column (corpus analytics) rather than nested spans
+(the extraction pipeline, which uses the pandas kernel).
+
+C2: ``structural_cascade`` and its A7 input ``gap_regular`` are the one
+form of the structural classifier (reference src/page_classifier.py);
+``operators/extraction.classify_documents_structural`` feeds them
+per-page aggregates of the span geometry.
 """
 
 from __future__ import annotations
@@ -16,7 +22,9 @@ from pyspark.sql import functions as F
 from ..config import (
     BLANK_THRESHOLD,
     COVER_KEYWORDS,
+    GAP_REGULARITY_RATIO,
     IMAGE_COVERAGE_THRESHOLD,
+    MIN_AVG_GAP,
     MIN_GRID_LINES,
     MIN_LINES_FOR_TABLE,
     PLOT_KEYWORDS,
@@ -95,8 +103,7 @@ def keyword_cascade(text: Column) -> Column:
 def structural_cascade(h_lines: Column, v_lines: Column, text_blocks: Column,
                        char_count: Column, image_coverage: Column,
                        gap_regular: Column, page_number: Column) -> Column:
-    """C2 structural classifier as a pure column cascade — twin of
-    kernels/classify.classify_pages_structural (reference
+    """C2 structural classifier as a pure column cascade (reference
     src/page_classifier.py:51-99, thresholds :10-14).
 
     Returns struct(page_type, confidence)."""
@@ -120,3 +127,29 @@ def structural_cascade(h_lines: Column, v_lines: Column, text_blocks: Column,
         .when(structured, s("mixed", 0.5))
         .otherwise(s("unknown", 0.3))
     )
+
+
+def gap_regular(ys: Column) -> Column:
+    """A7 line-gap regularity (reference src/page_classifier.py:101-125)
+    over one page's horizontal-line y positions, sorted ascending: at
+    least 3 lines, a mean gap of at least ``MIN_AVG_GAP``, and more than
+    ``GAP_REGULARITY_RATIO`` of the gaps within [0.5, 1.5] x the mean.
+
+    The mean is a left fold over the gaps in sorted order.
+    ``(max - min) / (n - 1)`` is equal in exact arithmetic but can differ
+    in the last bit, which flips pages on the ``MIN_AVG_GAP`` and
+    [0.5, 1.5] edges.  ``ys`` should be a column reference: the
+    expression reads it more than once."""
+    gaps = F.transform(F.slice(ys, 2, F.size(ys)),
+                       lambda y, i: y - F.get(ys, i))
+    n_gaps = F.size(ys) - 1
+
+    def finish(total: Column) -> Column:
+        avg = total / n_gaps
+        n_regular = F.size(F.filter(
+            gaps, lambda g: (g >= 0.5 * avg) & (g <= 1.5 * avg)))
+        return (avg >= MIN_AVG_GAP) & (n_regular / n_gaps > GAP_REGULARITY_RATIO)
+
+    return F.when(F.size(ys) >= 3,
+                  F.aggregate(gaps, F.lit(0.0), lambda acc, g: acc + g, finish)
+                  ).otherwise(False)

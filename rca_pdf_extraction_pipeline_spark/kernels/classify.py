@@ -1,10 +1,12 @@
-"""Page classification kernels (SURVEY.md §2.9).
+"""Page classification kernel (SURVEY.md §2.9).
 
-C1 — keyword cascade, reference ``src/core_analysis.py:438-516``.
-C2 — structural cascade, reference ``src/page_classifier.py:51-125``.
-
-Both are fully vectorized over a batch of pages: pandas str ops for the
-substring predicates, ``np.select`` for the priority cascade.
+C1 — keyword cascade, reference ``src/core_analysis.py:438-516``, fully
+vectorized over a batch of pages: pandas str ops for the substring
+predicates, ``np.select`` for the priority cascade.  Its column twin is
+``functions/classify_expr.keyword_cascade`` (tests/test_kernels_classify.py
+pins the two equal).  C2, the structural cascade, has one form: the
+column expressions ``classify_expr.structural_cascade`` and
+``gap_regular``.
 """
 
 from __future__ import annotations
@@ -13,13 +15,7 @@ import numpy as np
 import pandas as pd
 
 from ..config import (
-    BLANK_THRESHOLD,
     COVER_KEYWORDS,
-    GAP_REGULARITY_RATIO,
-    IMAGE_COVERAGE_THRESHOLD,
-    MIN_AVG_GAP,
-    MIN_GRID_LINES,
-    MIN_LINES_FOR_TABLE,
     PLOT_KEYWORDS,
     SUMMARY_KEYWORD,
     TABLE_KEYWORDS,
@@ -96,104 +92,3 @@ def classify_pages_keyword(texts: pd.Series) -> pd.DataFrame:
         {"page_type": page_type, "confidence": confidence, "reason": reasons},
         index=texts.index,
     )
-
-
-def classify_pages_structural(stats: pd.DataFrame) -> pd.DataFrame:
-    """C2 structural cascade over per-page geometry aggregates.
-
-    Parameters
-    ----------
-    stats : DataFrame with columns
-        page_number, h_lines, v_lines, text_blocks, char_count,
-        image_coverage, gap_regular (bool — precomputed A7 regularity).
-
-    Mirrors reference ``page_classifier.py:51-99``.
-    """
-    h = stats["h_lines"].to_numpy()
-    v = stats["v_lines"].to_numpy()
-    tb = stats["text_blocks"].to_numpy()
-    chars = stats["char_count"].to_numpy()
-    cov = stats["image_coverage"].to_numpy()
-    regular = stats["gap_regular"].to_numpy().astype(bool)
-    page1 = stats["page_number"].to_numpy() == 1
-
-    has_grid = (h >= MIN_GRID_LINES) & (v >= MIN_GRID_LINES)
-    many_lines = (h + v) >= MIN_LINES_FOR_TABLE
-    structured = tb >= 3
-
-    conds = [
-        (chars < BLANK_THRESHOLD) & (cov < 0.1),
-        page1 & (chars < 500) & (cov > 0.1),
-        page1 & (tb < 5) & (chars < 300),
-        cov > IMAGE_COVERAGE_THRESHOLD,
-        has_grid,
-        many_lines & structured & regular,
-        many_lines & structured,
-        (chars > 500) & ((h + v) < 5),
-        structured,
-    ]
-    types = [
-        "blank", "cover", "cover", "figure", "table", "table",
-        "mixed", "narrative", "mixed",
-    ]
-    confs = [0.95, 0.7, 0.6, 0.85, 0.9, 0.75, 0.6, 0.8, 0.5]
-
-    return pd.DataFrame(
-        {
-            "page_type": np.select(conds, types, default="unknown"),
-            "confidence": np.select(conds, confs, default=0.3),
-        },
-        index=stats.index,
-    )
-
-
-def gap_regularity(y_positions: list[np.ndarray] | pd.Series) -> np.ndarray:
-    """A7 line-gap regularity per page (reference page_classifier.py:101-125).
-
-    Input: sequence of arrays of horizontal-line y0 positions, one per page.
-    Thin wrapper over :func:`gap_regularity_flat` for list-shaped callers
-    (kernel tests); hot paths should pass flat arrays directly.
-    """
-    lens = np.array([len(a) for a in y_positions], dtype=np.int64)
-    n_pages = len(lens)
-    if n_pages == 0 or not (lens >= 3).any():
-        return np.zeros(n_pages, dtype=bool)
-    flat = np.concatenate(
-        [np.asarray(a, dtype=np.float64) for a in y_positions if len(a)])
-    page_of = np.repeat(np.arange(n_pages), lens)
-    return gap_regularity_flat(page_of, flat, n_pages)
-
-
-def gap_regularity_flat(page_of: np.ndarray, y: np.ndarray,
-                        n_pages: int) -> np.ndarray:
-    """Flat-array form of A7: ``page_of[i]`` is the stats-row index of
-    horizontal line i, ``y[i]`` its y0.  One lexsort + bincounts — no
-    per-page lists, no per-row Python (CLAUDE.md hot-path invariant).
-    """
-    out = np.zeros(n_pages, dtype=bool)
-    lens = np.bincount(page_of, minlength=n_pages) if len(page_of) else \
-        np.zeros(n_pages, dtype=np.int64)
-    eligible = lens >= 3
-    if not eligible.any():
-        return out
-
-    order = np.lexsort((y, page_of))
-    flat = np.asarray(y, dtype=np.float64)[order]
-    page_of = np.asarray(page_of)[order]
-    # gaps between consecutive lines within the same page
-    same = page_of[1:] == page_of[:-1]
-    gaps = (flat[1:] - flat[:-1])[same]
-    gpage = page_of[1:][same]
-
-    gap_count = np.bincount(gpage, minlength=n_pages)
-    gap_sum = np.bincount(gpage, weights=gaps, minlength=n_pages)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        avg = gap_sum / gap_count
-    lo = 0.5 * avg[gpage]
-    hi = 1.5 * avg[gpage]
-    reg = np.bincount(gpage, weights=((gaps >= lo) & (gaps <= hi)).astype(float),
-                      minlength=n_pages)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        ratio = reg / gap_count
-    out = eligible & (avg >= MIN_AVG_GAP) & (ratio > GAP_REGULARITY_RATIO)
-    return np.nan_to_num(out.astype(float)).astype(bool)

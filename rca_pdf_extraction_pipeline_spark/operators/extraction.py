@@ -44,7 +44,8 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DataType
 
@@ -56,6 +57,7 @@ from ..config import (
     RE_DEPTH_ANYWHERE,
     ExtractionConfig,
 )
+from ..functions import classify_expr
 from ..kernels import classify as kclassify
 from ..kernels import headers as kheaders
 from ..kernels import samples as ksamples
@@ -128,6 +130,24 @@ def flat_from_batch(batch: pa.RecordBatch) -> pd.DataFrame:
     for name, col in zip(["x0", "y0", "x1", "y1"], [1, 2, 3, 4]):
         flat[name] = pd.to_numeric(geo[col], errors="coerce")
     return flat
+
+
+def span_payload(text: Column) -> Column:
+    """The span payload ``"page,x0,y0,x1,y1|content"`` parsed as a column:
+    struct(page, x0, y0, x1, y1 double, content string) — the format
+    :func:`flat_from_batch` parses in pandas.  ``content`` is NULL when
+    the payload has no ``|``, and a geometry field is NULL when it is
+    missing or not a number (``pd.to_numeric(errors="coerce")``), so
+    ``page`` ``"12.7"`` reads 12.7: callers cast it to bigint with
+    ``coalesce(..., 0)``, as ``flat_from_batch`` does."""
+    # F.get, not [i]: a missing part is NULL under ANSI mode, not an
+    # INVALID_ARRAY_INDEX error
+    parts = F.split(text, r"\|", 2)
+    geo = F.split(F.get(parts, 0), ",")
+    return F.struct(
+        *[F.get(geo, i).try_cast("double").alias(name)
+          for i, name in enumerate(["page", "x0", "y0", "x1", "y1"])],
+        F.get(parts, 1).alias("content"))
 
 
 # ---------------------------------------------------------------------------
@@ -439,58 +459,43 @@ def classify_documents_structural(docs: DataFrame) -> DataFrame:
     src/page_classifier.py:51-125 — the legacy pipeline's classifier):
     per page, horizontal/vertical line counts (F6 predicates), text
     block count, char count, image coverage (A6) and line-gap
-    regularity (A7) feed the structural cascade.
+    regularity (A7) feed ``classify_expr.structural_cascade``.
 
-    Page dimensions are not carried in the span model (the reference
-    reads them from the PDF page object); they are fixed to US Letter,
+    Column expressions only: explode, parse the payload, one
+    groupBy(doc_id, page), then the cascade — no Python stage.  Page
+    dimensions are not carried in the span model (the reference reads
+    them from the PDF page object); they are fixed to US Letter,
     ``PAGE_AREA``.
     """
-
-    def classify(flat: pd.DataFrame) -> pd.DataFrame:
-        stats = _structural_stats(flat)
-        cls = kclassify.classify_pages_structural(stats)
-        return stats[["doc_pos", "page"]].assign(
-            page_type=cls["page_type"].to_numpy(),
-            confidence=cls["confidence"].to_numpy())
-
-    return map_flat_batches(
-        docs, "doc_id string, page int, page_type string, confidence double",
-        classify)
-
-
-def _structural_stats(flat: pd.DataFrame) -> pd.DataFrame:
-    """Per-(doc_pos, page) geometry aggregates for the C2 cascade."""
-    is_line = flat["kind"] == "line"
-    dy = (flat["y1"] - flat["y0"]).abs()
-    dx = (flat["x1"] - flat["x0"]).abs()
-    flat = flat.assign(
-        _h=(is_line & (dy < 2)).astype(np.int64),
-        _v=(is_line & (dx < 2) & (dy >= 2)).astype(np.int64),
-        _tb=(flat["kind"] == "text").astype(np.int64),
-        _chars=np.where(flat["kind"] == "text",
-                        flat["content"].str.len().to_numpy(), 0),
-        _img_area=np.where(
-            flat["kind"] == "image",
-            (dx * dy).fillna(0.0).to_numpy(), 0.0),
+    spans = (docs.select("doc_id", F.explode("spans").alias("s"))
+             .filter(F.col("s.kind").isNotNull())
+             .select("doc_id", F.col("s.kind").alias("kind"),
+                     span_payload(F.col("s.text")).alias("p")))
+    dx = F.abs(F.col("p.x1") - F.col("p.x0"))
+    dy = F.abs(F.col("p.y1") - F.col("p.y0"))
+    is_line = F.col("kind") == "line"
+    is_text = F.col("kind") == "text"
+    h_line = is_line & (dy < 2)
+    pages = spans.groupBy(
+        "doc_id",
+        F.coalesce(F.col("p.page").try_cast("bigint"), F.lit(0)).alias("page"),
+    ).agg(
+        F.count(F.when(h_line, 1)).alias("h_lines"),
+        F.count(F.when(is_line & (dx < 2) & (dy >= 2), 1)).alias("v_lines"),
+        F.count(F.when(is_text, 1)).alias("text_blocks"),
+        F.sum(F.when(is_text, F.coalesce(F.length("p.content"), F.lit(0)))
+              .otherwise(0)).alias("char_count"),
+        F.sum(F.when(F.col("kind") == "image", F.coalesce(dx * dy, F.lit(0.0)))
+              .otherwise(0.0)).alias("img_area"),
+        F.array_sort(F.collect_list(F.when(h_line, F.col("p.y0")))).alias("ys"),
     )
-    g = flat.groupby(["doc_pos", "page"], sort=True)
-    stats = g.agg(h_lines=("_h", "sum"), v_lines=("_v", "sum"),
-                  text_blocks=("_tb", "sum"), char_count=("_chars", "sum"),
-                  img_area=("_img_area", "sum")).reset_index()
-    stats["image_coverage"] = stats["img_area"] / PAGE_AREA
-    stats["page_number"] = stats["page"]
-
-    # A7 gap regularity over each page's horizontal-line y positions —
-    # h-lines map to their stats row via a merge, then one flat-array
-    # kernel call (lexsort + bincounts; no per-row Python, no dict-of-lists)
-    hl = flat.loc[flat["_h"] == 1, ["doc_pos", "page", "y0"]]
-    key_df = stats[["doc_pos", "page"]].copy()
-    key_df["gidx"] = np.arange(len(stats), dtype=np.int64)
-    hl = hl.merge(key_df, on=["doc_pos", "page"])
-    stats["gap_regular"] = kclassify.gap_regularity_flat(
-        hl["gidx"].to_numpy(dtype=np.int64),
-        hl["y0"].to_numpy(dtype=np.float64), len(stats))
-    return stats
+    c = classify_expr.structural_cascade(
+        F.col("h_lines"), F.col("v_lines"), F.col("text_blocks"),
+        F.col("char_count"), F.col("img_area") / PAGE_AREA,
+        classify_expr.gap_regular(F.col("ys")), F.col("page"))
+    return pages.select("doc_id", F.col("page").cast("int"),
+                        c["page_type"].alias("page_type"),
+                        c["confidence"].alias("confidence"))
 
 
 def extract_samples(docs: DataFrame) -> DataFrame:

@@ -8,16 +8,20 @@ Span model: metadata rides in the interleaved table as ``kind='meta'``
 spans with payload ``"0|key=value"`` (page 0 = document scope), so the
 same (doc_id, spans) schema carries it and parquet nested-column pruning
 still applies.  Extraction is a pure DataFrame expression — explode,
-split ONCE on the first '=' (values may contain '='), then a pivot over
-the fixed field list; Catalyst keeps the whole thing codegen'd with no
-Python.  At 100 TB the pivot is a single groupBy(doc_id) whose input is
-already only the handful of meta spans per document.
+take the payload content (``extraction.span_payload``, NULL without a
+``|``), split it ONCE on the first '=' (values may contain '='), then a
+pivot over the fixed field list; Catalyst keeps the whole thing
+codegen'd with no Python.  At 100 TB the pivot is a single
+groupBy(doc_id) whose input is already only the handful of meta spans
+per document.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .extraction import span_payload
 
 #: reference extractor.py:64-76 field list, in output order
 METADATA_FIELDS = [
@@ -32,9 +36,7 @@ def extract_doc_metadata(docs: DataFrame) -> DataFrame:
     Missing fields are null (the reference's ``meta.get(...)``)."""
     s = docs.select("doc_id", F.explode("spans").alias("s")) \
             .filter(F.col("s.kind") == "meta")
-    # F.get (not [1]) so payloads without the separator yield null under
-    # ANSI mode instead of INVALID_ARRAY_INDEX
-    content = F.get(F.split(F.col("s.text"), r"\|", 2), 1)
+    content = span_payload(F.col("s.text"))["content"]
     kv = s.select(
         "doc_id",
         F.get(F.split(content, "=", 2), 0).alias("k"),
@@ -77,7 +79,7 @@ def element_kind_census(docs: DataFrame) -> DataFrame:
     aggregate map-side, countDistinct(doc_id) expands to the standard
     two-phase distinct — all JVM expressions, no Python."""
     s = docs.select("doc_id", F.explode("spans").alias("s"))
-    content = F.get(F.split(F.col("s.text"), r"\|", 2), 1)
+    content = span_payload(F.col("s.text"))["content"]
     items = F.when(
         F.col("s.kind").isin(*VECTOR_KINDS)
         & content.isNotNull() & (content != ""),
@@ -99,7 +101,7 @@ def search_spans(docs: DataFrame, needle: str, limit: int = 100) -> DataFrame:
     CollectLimit so Spark stops scanning once enough partitions produced
     ``limit`` rows."""
     s = docs.select("doc_id", F.explode("spans").alias("s"))
-    content = F.get(F.split(F.col("s.text"), r"\|", 2), 1)
+    content = span_payload(F.col("s.text"))["content"]
     return (s.select("doc_id", F.col("s.kind").alias("kind"),
                      F.col("s.offset").alias("offset"),
                      content.alias("content"))

@@ -222,6 +222,15 @@ def test_verify_headers_runs_one_python_stage(spark):
     assert plan.count("Exchange") == 1, plan
 
 
+def test_structural_classifier_is_one_jvm_aggregate(spark):
+    """C2 is column expressions end to end: no Python stage, and the one
+    groupBy(doc_id, page) is the only exchange."""
+    docs = fixtures.docs_to_spark(spark, fixtures.build_classify_docs())
+    plan = _plan(extraction.classify_documents_structural(docs))
+    assert "MapInArrow" not in plan and "EvalPython" not in plan, plan
+    assert plan.count("Exchange") == 1, plan
+
+
 def test_whole_stage_codegen_covers_scalar_projection(lineitem):
     """Plain scalar expressions stay inside codegen. (Higher-order array
     functions — filter/transform/aggregate — legitimately run as

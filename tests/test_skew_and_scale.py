@@ -35,6 +35,30 @@ def test_salted_repartition_spreads_docs(spark):
     assert max(p["count"] for p in parts) <= 41 * 0.5
 
 
+def test_salted_waves_write_few_files(spark, tmp_path):
+    """The salt and the checkpoint bucket are both xxhash64(doc_id) mod a
+    count.  When num_partitions divides n_buckets, the range partitions
+    follow bucket edges, so a wave writes at most num_partitions +
+    buckets_in_wave - 1 files (11 here).  A plain hash repartition on
+    doc_id scatters every bucket over every partition: up to 32 files a
+    wave on this input."""
+    from rca_pdf_extraction_pipeline_spark.plans import checkpoint
+
+    docs = fixtures.docs_to_spark(spark, [
+        {"doc_id": f"one-span-{i:04d}",
+         "spans": [{"kind": "text", "text": "1|x", "media_ref": None,
+                    "offset": 0}]}
+        for i in range(400)])
+    cfg = ExtractionConfig(num_partitions=8)
+    checkpoint.extract_with_checkpoint(docs, tmp_path / "t", cfg,
+                                       n_buckets=16, waves=4)
+    waves = checkpoint.SnapshotManifest(tmp_path / "t").load()
+    assert len(waves) == 4
+    for wave in waves:
+        n_files = sum(len(f) for f in wave["files"].values())
+        assert 0 < n_files <= 8 + len(wave["completed_buckets"]) - 1, wave
+
+
 def test_extraction_invariant_under_partitioning(spark):
     """Same output span sequences at 1, 3, and 16 partitions, with and
     without skew defusal — order is computed per-doc, never from
