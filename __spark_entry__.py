@@ -945,8 +945,7 @@ def _q_sim_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_sim_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity.bucketed_topk(_t(spark, sf_dir, "embeddings"), query_id=0,
-                                    k=10, n_bits=8)
+    return similarity.bucketed_topk(_t(spark, sf_dir, "embeddings"), query_id=0)
 
 
 def _q_ann_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -959,17 +958,15 @@ def _q_ann_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity.ivf_topk(_t(spark, sf_dir, "embeddings"), query_id=0,
-                               k=10, n_centroids=4, iters=2, nprobe=2)
+    return similarity.ivf_topk(_t(spark, sf_dir, "embeddings"), query_id=0)
 
 
 def _q_ann_ivf_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN whose codebook is trained on a deterministic 50% hash-
     sample (production shape: Lloyd rounds touch the sample only; the
     full corpus is scanned exactly once, for assignment)."""
-    return similarity.ivf_topk_sampled(
-        _t(spark, sf_dir, "embeddings"), query_id=0, k=10, n_centroids=4,
-        iters=2, nprobe=2, sample_rate=0.5, seed=0)
+    return similarity.ivf_topk_sampled(_t(spark, sf_dir, "embeddings"),
+                                       query_id=0)
 
 
 def _q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -979,8 +976,7 @@ def _q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer micro-lattice recall, bit-identical in both engines."""
     embs = _t(spark, sf_dir, "embeddings")
     exact = similarity.cosine_topk(embs, query_id=0, k=10).select("vec_id")
-    approx = similarity.ivf_topk(embs, query_id=0, k=10, n_centroids=4,
-                                 iters=2, nprobe=2).select("vec_id")
+    approx = similarity.ivf_topk(embs, query_id=0).select("vec_id")
     hits = (exact.join(approx, "vec_id", "left_semi")
             .agg(F.count(F.lit(1)).alias("n_hits")))
     return hits.select(
@@ -1007,8 +1003,7 @@ def _q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC product-quantization top-10 for query vector 0: approximate
     squared distance = sum of per-subspace exact lattice distances from
     the query subvector to each vector's assigned codeword."""
-    return similarity.pq_topk(_t(spark, sf_dir, "embeddings"), query_id=0,
-                              k_neighbors=10, m=4, k=4, iters=2, dim=64)
+    return similarity.pq_topk(_t(spark, sf_dir, "embeddings"), query_id=0)
 
 
 def _q_ann_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1018,9 +1013,7 @@ def _q_ann_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     families that a 10^12-vector serving index actually runs (the code
     scan is pruned by the probed-cid join; stored-index mode prunes
     whole files, tests/test_jobs_index.py pins the DPP plan)."""
-    return similarity.ivfadc_topk(_t(spark, sf_dir, "embeddings"),
-                                  query_id=0, k_neighbors=10, n_centroids=4,
-                                  iters=2, nprobe=2, m=4, k=4, dim=64)
+    return similarity.ivfadc_topk(_t(spark, sf_dir, "embeddings"), query_id=0)
 
 
 def _q_knn_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1034,8 +1027,7 @@ def _q_knn_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark rewrites to WindowGroupLimit (per-partition top-k BEFORE the
     exchange)."""
     embs = _t(spark, sf_dir, "embeddings")
-    return similarity.knn_join(embs.filter("vec_id % 100 = 0"), embs,
-                               k=5, n_centroids=4, iters=2, nprobe=2)
+    return similarity.knn_join(embs.filter("vec_id % 100 = 0"), embs)
 
 
 def _q_ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1074,9 +1066,7 @@ def _q_ann_ivfsq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     composes IVF with PQ (the code scan is pruned by the probed-cid
     join; stored mode reads jobs/run_index.py's cid-partitioned
     sq8_codes and prunes whole files)."""
-    return similarity.ivfsq_topk(_t(spark, sf_dir, "embeddings"),
-                                 query_id=0, k=10, n_centroids=4,
-                                 iters=2, nprobe=2)
+    return similarity.ivfsq_topk(_t(spark, sf_dir, "embeddings"), query_id=0)
 
 
 def _link_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1372,14 +1362,14 @@ def _q_semantic_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup within-cluster near-duplicate pairs (trained k-means
     clusters, exact cosine gate)."""
     return similarity.semantic_near_pairs(
-        _t(spark, sf_dir, "embeddings"), n_centroids=4, iters=2, threshold=0.4)
+        _t(spark, sf_dir, "embeddings"), threshold=0.4)
 
 
 def _q_semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup survivors: vectors with no lower-id semantic near-dup
     in their cluster."""
     return similarity.semantic_dedup(
-        _t(spark, sf_dir, "embeddings"), n_centroids=4, iters=2, threshold=0.4)
+        _t(spark, sf_dir, "embeddings"), threshold=0.4)
 
 
 # ---- text analytics over documents ----------------------------------------
@@ -1443,7 +1433,7 @@ def _q_text_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the oracle compare small; the operator itself is corpus-wide
     narrow work."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    return textanalysis.winnow_fingerprints(docs, k=3, w=4)
+    return textanalysis.winnow_fingerprints(docs)
 
 
 def _q_text_unigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1540,8 +1530,7 @@ def _q_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return chunking.pack_documents(_t(spark, sf_dir, "documents"),
-                                   budget_tokens=512)
+    return chunking.pack_documents(_t(spark, sf_dir, "documents"))
 
 
 def _q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1887,16 +1876,14 @@ def _q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohorted by first-event week (whole-day counts from a fixed NTZ
     epoch — the timestamp discipline from the sessions family), one
     (user, week) distinct as the only corpus-scale shuffle."""
-    return sessions.cohort_retention(_t(spark, sf_dir, "events"),
-                                     period_days=7)
+    return sessions.cohort_retention(_t(spark, sf_dir, "events"))
 
 
 def _q_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day DAU + trailing-7-day WAU: the rolling DISTINCT no native
     window computes — day-grid range join over the (user, day) distinct
     table."""
-    return sessions.active_users(_t(spark, sf_dir, "events"),
-                                 window_days=7)
+    return sessions.active_users(_t(spark, sf_dir, "events"))
 
 
 def _q_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1928,7 +1915,7 @@ def _q_embed_jl_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     a content-addressed ±1 matrix — bit-exact in both engines,
     relational (vec_id, j, y) output."""
     embs = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 40)
-    return (similarity.project_embeddings(embs, out_dim=16, seed=0)
+    return (similarity.project_embeddings(embs)
             .select(F.col("vec_id"), F.col("j").cast("long").alias("j"),
                     F.col("y").cast("long").alias("y")))
 
@@ -1940,8 +1927,7 @@ def _q_jl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann_recall."""
     embs = _t(spark, sf_dir, "embeddings")
     exact = similarity.cosine_topk(embs, query_id=0, k=10).select("vec_id")
-    approx = similarity.jl_topk(embs, query_id=0, k=10, out_dim=16) \
-        .select("vec_id")
+    approx = similarity.jl_topk(embs, query_id=0, k=10).select("vec_id")
     hits = (exact.join(approx, "vec_id", "left_semi")
             .agg(F.count(F.lit(1)).alias("n_hits")))
     return hits.select(
@@ -2195,7 +2181,7 @@ def _q_media_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     images drop out before pairing."""
     ids = _media_ids(spark, sf_dir, 300)
     media = multimodal.synth_bmp_media(ids)
-    return multimodal.media_near_pairs(media, threshold=0.999, n_bits=8)
+    return multimodal.media_near_pairs(media)
 
 
 def _q_media_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2262,7 +2248,7 @@ def _q_audio_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids = _media_ids(spark, sf_dir, 500)
     media = multimodal.synth_wav_media(ids, n_samples=256, dup_mod=250,
                                        md5_texture=True)
-    return multimodal.audio_dup_pairs(media, max_hamming=2) \
+    return multimodal.audio_dup_pairs(media) \
         .orderBy("id_a", "id_b")
 
 
@@ -2275,7 +2261,7 @@ def _q_video_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the same md5 bytes (x16 per 4x4 cell); garbage ids (% 10 == 0)
     pin the ok=False zero row."""
     ids = _media_ids(spark, sf_dir, 500)
-    media = multimodal.synth_y4m_media(ids, n_frames=6, dup_mod=250)
+    media = multimodal.synth_y4m_media(ids, dup_mod=250)
     return multimodal.video_features(media) \
         .select("media_ref", "ok", "width", "height", "n_frames",
                 "luma_sum", "motion").orderBy("media_ref")
@@ -2289,7 +2275,7 @@ def _q_video_frame_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-frame signatures have the same closed-form SQL twin as the
     image dHash oracle, extended by the frame axis."""
     ids = _media_ids(spark, sf_dir, 500)
-    media = multimodal.synth_y4m_media(ids, n_frames=6, dup_mod=250)
+    media = multimodal.synth_y4m_media(ids, dup_mod=250)
     frames = multimodal.video_frames(media, every_n=2)
     return multimodal.media_dhash(frames).filter("ok") \
         .select("media_ref", "sig_hi", "sig_lo").orderBy("media_ref")
@@ -2305,9 +2291,9 @@ def _q_video_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (never all-pairs); the oracle verifies with exact same-frame
     all-pairs bit_count at this scale."""
     ids = _media_ids(spark, sf_dir, 500)
-    media = multimodal.synth_y4m_media(ids, n_frames=6, dup_mod=250)
-    return multimodal.video_dup_pairs(media, every_n=1, max_hamming=2,
-                                      min_frames=4).orderBy("id_a", "id_b")
+    media = multimodal.synth_y4m_media(ids, dup_mod=250)
+    return multimodal.video_dup_pairs(media, min_frames=4) \
+        .orderBy("id_a", "id_b")
 
 
 def _q_media_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2319,7 +2305,7 @@ def _q_media_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle verifies with an exact all-pairs bit_count at this scale."""
     ids = _media_ids(spark, sf_dir, 500)
     media = multimodal.synth_grid_bmp_media(ids)
-    return multimodal.media_dhash_pairs(media, max_hamming=2) \
+    return multimodal.media_dhash_pairs(media) \
         .orderBy("id_a", "id_b")
 
 
@@ -2334,7 +2320,7 @@ def _q_media_cross_codec_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids = _media_ids(spark, sf_dir, 150)
     media = multimodal.synth_bmp_media(ids).unionByName(
         multimodal.synth_jpeg_media(ids))
-    return multimodal.media_near_pairs(media, threshold=0.999, n_bits=8)
+    return multimodal.media_near_pairs(media)
 
 
 # ---- C2 structural classifier ---------------------------------------------
@@ -2481,8 +2467,7 @@ def _q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                          F.slice(textfns.tokens(F.col("text")), 1, 40), " ")
                      .alias("text")))
     corpus = d.unionByName(snips)
-    return dedup.containment_pairs(corpus, shingle_size=5, df_cap=16,
-                                   min_containment_micro=500_000)
+    return dedup.containment_pairs(corpus)
 
 
 def _q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2498,8 +2483,7 @@ def _q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                          F.slice(textfns.tokens(F.col("text")), 1, 40), " ")
                      .alias("text")))
     corpus = d.unionByName(snips)
-    return dedup.winnow_overlap_pairs(corpus, k=3, w=4, df_cap=16,
-                                      min_shared=2)
+    return dedup.winnow_overlap_pairs(corpus)
 
 
 def _q_dedup_corpus_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2514,8 +2498,7 @@ def _q_dedup_corpus_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
                          F.slice(textfns.tokens(F.col("text")), 1, 40), " ")
                      .alias("text")))
     corpus = d.unionByName(snips)
-    return dedup.deduplicate_corpus_winnow(corpus, k=3, w=4, df_cap=16,
-                                           min_shared=2) \
+    return dedup.deduplicate_corpus_winnow(corpus) \
         .select("doc_id", F.length("text").alias("n_chars"))
 
 
@@ -3771,7 +3754,8 @@ def _oracle_sql_literal() -> dict[str, str]:
         """,
         # ---- classification + scalar functions -----------------------------
         "c1_keyword_cascade": f"""
-            WITH p AS (SELECT doc_id, {_SQL_PAGE_TEXT} AS page_text FROM documents),
+            WITH p AS (SELECT doc_id, coalesce({_SQL_PAGE_TEXT}, '') AS page_text
+                       FROM documents),
             s AS (SELECT doc_id, page_text, {_SQL_SCORE} AS score,
                          length(page_text) AS len FROM p)
             SELECT doc_id,

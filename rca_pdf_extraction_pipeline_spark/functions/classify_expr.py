@@ -59,7 +59,9 @@ def keyword_cascade(text: Column) -> Column:
 
     Priority order mirrors the reference exactly:
     summary-title > plot > cover > >=3 table keywords > short > dense.
+    A NULL text reads as "" (the kernel's ``fillna``): minimal text.
     """
+    text = F.coalesce(text, F.lit(""))
     up = F.upper(text)
     length = F.length(text)
     score = table_keyword_score(text)

@@ -121,6 +121,7 @@ def stopword_ratio(col: Column) -> Column:
     return hits.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast("double")
 
 
-def predict_lang(col: Column, threshold: float = 0.03) -> Column:
-    """'en' if the stopword ratio clears the threshold else 'und'."""
-    return F.when(stopword_ratio(col) >= threshold, F.lit("en")).otherwise(F.lit("und"))
+def predict_lang(col: Column) -> Column:
+    """'en' if the stopword ratio is at least 0.03 else 'und'."""
+    return F.when(stopword_ratio(col) >= 0.03, F.lit("en")) \
+            .otherwise(F.lit("und"))

@@ -32,12 +32,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def classify_structural(docs: DataFrame) -> DataFrame:
-    from ..operators.extraction import classify_documents_structural
-
-    return classify_documents_structural(docs)
-
-
 def extract_classified_tables(docs: DataFrame,
                               classifications: DataFrame) -> DataFrame:
     """S9 cells restricted to structurally-classified table pages —
@@ -107,7 +101,9 @@ def full_pipeline(docs: DataFrame) -> dict[str, DataFrame]:
     """Compose the whole legacy lifecycle; returns the stage frames:
     {"classifications", "cells", "consolidated", "summaries",
     "anomalies"}."""
-    cls = classify_structural(docs)
+    from ..operators.extraction import classify_documents_structural
+
+    cls = classify_documents_structural(docs)
     cells = extract_classified_tables(docs, cls)
     consolidated = consolidate_cells(cells)
 

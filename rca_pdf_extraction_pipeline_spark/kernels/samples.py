@@ -272,15 +272,9 @@ def decode_samples(lines: pd.DataFrame) -> pd.DataFrame:
             "saturation_total_pct": st_cell,
         }
     )
+    # the typed columns extraction.SAMPLES_SCHEMA carries
     out["depth_feet_f"] = depth
-    out["permeability_air_md_f"] = np.where(is_plus | is_lt, np.nan, pa_f)
-    out["permeability_klink_md_f"] = np.where(is_plus | is_lt, np.nan, pk_f)
     out["porosity_ambient_pct_f"] = por_amb
-    out["porosity_ncs_pct_f"] = por_ncs
-    out["grain_density_gcc_f"] = grain
-    out["saturation_water_pct_f"] = np.where(is_star, np.nan, sw_f)
-    out["saturation_oil_pct_f"] = np.where(is_star, np.nan, so_f)
-    out["saturation_total_pct_f"] = np.where(is_star, np.nan, st_f)
 
     return out[keep_sample].reset_index(drop=True)
 

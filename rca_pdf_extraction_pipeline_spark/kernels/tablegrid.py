@@ -8,7 +8,7 @@ This kernel re-derives both passes from the span model:
   primary (lines strategy)
     1. rulings: ``kind='line'`` spans split into horizontal (|dy|<2) and
        vertical (|dx|<2); ``kind='rect'`` spans contribute their 4 edges.
-    2. snap: per (page, orientation), positions within ``snap_tol`` merge
+    2. snap: per (page, orientation), positions within ``SNAP_TOL`` merge
        into one boundary at the cluster mean (pdfplumber ``snap_tolerance``).
     3. grid: >=2 horizontal and >=2 vertical boundaries -> (n_h-1)x(n_v-1)
        cells; raw row count must be >=2 (header + data,
@@ -135,8 +135,7 @@ def _concat_cells(located: pd.DataFrame) -> pd.DataFrame:
     return joined.drop(columns=["content"])
 
 
-def infer_grid_tables(flat: pd.DataFrame,
-                      snap_tol: float = SNAP_TOL) -> pd.DataFrame:
+def infer_grid_tables(flat: pd.DataFrame) -> pd.DataFrame:
     """Primary + fallback table inference over a flat span frame.
 
     Returns (doc_pos, page, table_index, row_idx, col_idx, cell, is_header,
@@ -150,7 +149,7 @@ def infer_grid_tables(flat: pd.DataFrame,
     if len(f) == 0:
         return empty
 
-    primary = _primary_grid_tables(f, snap_tol)
+    primary = _primary_grid_tables(f)
     covered = primary[["doc_pos", "page"]].drop_duplicates() \
         if len(primary) else None
     text = f[f["kind"] == "text"]
@@ -158,7 +157,7 @@ def infer_grid_tables(flat: pd.DataFrame,
         text = text.merge(covered, on=["doc_pos", "page"], how="left",
                           indicator=True)
         text = text[text["_merge"] == "left_only"].drop(columns=["_merge"])
-    fallback = _fallback_text_tables(text, snap_tol)
+    fallback = _fallback_text_tables(text)
     out = pd.concat([primary, fallback], ignore_index=True) \
         if len(fallback) else primary
     if len(out) == 0:
@@ -186,10 +185,10 @@ def _connected_components(n: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return label
 
 
-def _primary_grid_tables(f: pd.DataFrame, snap_tol: float) -> pd.DataFrame:
+def _primary_grid_tables(f: pd.DataFrame) -> pd.DataFrame:
     """Lines-strategy grids, pdfplumber-faithful: rulings snap into
     boundary clusters, h/v clusters that INTERSECT (extent overlap within
-    snap_tol) connect into components, and each component is one table —
+    SNAP_TOL) connect into components, and each component is one table —
     so a page carries any number of tables, ordered top-to-bottom /
     left-to-right into ``table_index`` exactly like ``find_tables``."""
     empty = pd.DataFrame(columns=["doc_pos", *CELL_COLS])
@@ -228,7 +227,7 @@ def _primary_grid_tables(f: pd.DataFrame, snap_tol: float) -> pd.DataFrame:
     rul = rul.assign(pcode=pcode)
     gkey = pcode * 2 + rul["orient"].to_numpy()
     cid, order, _ = _cluster_1d(gkey, rul["pos"].to_numpy(dtype=np.float64),
-                                snap_tol)
+                                SNAP_TOL)
     rs = rul.iloc[order].reset_index(drop=True)
     rs["cl"] = cid
     cl = (rs.groupby("cl", sort=True)
@@ -239,16 +238,16 @@ def _primary_grid_tables(f: pd.DataFrame, snap_tol: float) -> pd.DataFrame:
 
     # intersection edges: an h-cluster meets a v-cluster when each one's
     # position falls inside the other's extent (pdfplumber's
-    # edge-intersection rule, tolerance = snap_tol)
+    # edge-intersection rule, tolerance = SNAP_TOL)
     hb_cl = cl[cl["orient"] == 0]
     vb_cl = cl[cl["orient"] == 1]
     if len(hb_cl) == 0 or len(vb_cl) == 0:
         return empty
     e = hb_cl.merge(vb_cl, on="pcode", suffixes=("_h", "_v"))
-    hit = ((e["pos_h"] >= e["lo_v"] - snap_tol)
-           & (e["pos_h"] <= e["hi_v"] + snap_tol)
-           & (e["pos_v"] >= e["lo_h"] - snap_tol)
-           & (e["pos_v"] <= e["hi_h"] + snap_tol))
+    hit = ((e["pos_h"] >= e["lo_v"] - SNAP_TOL)
+           & (e["pos_h"] <= e["hi_v"] + SNAP_TOL)
+           & (e["pos_v"] >= e["lo_h"] - SNAP_TOL)
+           & (e["pos_v"] <= e["hi_h"] + SNAP_TOL))
     edges = e.loc[hit, ["cl_h", "cl_v"]]
     if len(edges) == 0:
         return empty
@@ -322,8 +321,7 @@ def _primary_grid_tables(f: pd.DataFrame, snap_tol: float) -> pd.DataFrame:
     return _assemble_tables(dense, 1.0)
 
 
-def _fallback_text_tables(text: pd.DataFrame,
-                          snap_tol: float) -> pd.DataFrame:
+def _fallback_text_tables(text: pd.DataFrame) -> pd.DataFrame:
     """Text-alignment strategy (confidence 0.7): y0 clusters are rows, x0
     clusters are columns; >=2 of each required."""
     empty = pd.DataFrame(columns=["doc_pos", *CELL_COLS])
@@ -333,10 +331,10 @@ def _fallback_text_tables(text: pd.DataFrame,
     y = text["y0"].to_numpy(dtype=np.float64)
     x = text["x0"].to_numpy(dtype=np.float64)
 
-    rcid, rorder, _ = _cluster_1d(pcode, y, snap_tol)
+    rcid, rorder, _ = _cluster_1d(pcode, y, SNAP_TOL)
     row_of = np.empty(len(text), dtype=np.int64)
     row_of[rorder] = rcid
-    ccid, corder, _ = _cluster_1d(pcode, x, snap_tol)
+    ccid, corder, _ = _cluster_1d(pcode, x, SNAP_TOL)
     col_of = np.empty(len(text), dtype=np.int64)
     col_of[corder] = ccid
 

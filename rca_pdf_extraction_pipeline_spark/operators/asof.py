@@ -29,25 +29,24 @@ from pyspark.sql import functions as F
 
 
 def asof_join(left: DataFrame, right: DataFrame, on: str,
-              left_ts: str = "ts", right_ts: str = "ts",
               right_cols: list[str] | None = None,
               prefix: str = "matched_") -> DataFrame:
     """Left rows + the latest preceding right row's columns (nulls when
-    no right row precedes).  ``right_cols`` defaults to every right
-    column except the key and timestamp; matched columns are renamed
-    ``<prefix><col>`` and the match timestamp ``<prefix><right_ts>``.
+    no right row precedes); both sides carry their time in ``ts``.
+    ``right_cols`` defaults to every right column except the key and
+    ``ts``; matched columns are renamed ``<prefix><col>`` and the match
+    timestamp ``<prefix>ts``.
 
-    Requires (on, right_ts) to be unique on the right side — the
+    Requires (on, ts) to be unique on the right side — the
     standard ASOF precondition (otherwise "the" latest row is
     ambiguous); violations surface as nondeterminism, so dedupe first.
     """
     if right_cols is None:
-        right_cols = [c for c in right.columns if c not in (on, right_ts)]
-    payload = F.struct(F.col(right_ts).alias(right_ts),
-                       *[F.col(c) for c in right_cols])
-    r = right.select(F.col(on), F.col(right_ts).alias("_ts"),
+        right_cols = [c for c in right.columns if c not in (on, "ts")]
+    payload = F.struct(F.col("ts"), *[F.col(c) for c in right_cols])
+    r = right.select(F.col(on), F.col("ts").alias("_ts"),
                      F.lit(0).alias("_side"), payload.alias("_r"))
-    l = left.select(F.col(on), F.col(left_ts).alias("_ts"),
+    l = left.select(F.col(on), F.col("ts").alias("_ts"),
                     F.lit(1).alias("_side"),
                     F.struct(*[F.col(c) for c in left.columns
                                if c != on]).alias("_l"))
@@ -59,6 +58,6 @@ def asof_join(left: DataFrame, right: DataFrame, on: str,
     out = carried.filter(F.col("_side") == 1)
     cols = [F.col(on)]
     cols += [F.col("_l")[c].alias(c) for c in left.columns if c != on]
-    cols.append(F.col("_m")[right_ts].alias(f"{prefix}{right_ts}"))
+    cols.append(F.col("_m")["ts"].alias(f"{prefix}ts"))
     cols += [F.col("_m")[c].alias(f"{prefix}{c}") for c in right_cols]
     return out.select(*cols)

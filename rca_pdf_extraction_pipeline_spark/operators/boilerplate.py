@@ -21,7 +21,7 @@ and backs the unit tests, which check that it and this operator agree.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -33,22 +33,31 @@ from ..kernels.boilerplate import (
 )
 
 
+def block_signals(text: Column, tag: Column,
+                  anchor_chars: Column) -> tuple[Column, Column, Column]:
+    """Boilerpipe's shallow-text signals of one block: ``(n_words,
+    link_density, plain)``, where ``plain`` is a content tag whose link
+    density is under ``LINK_DENSITY_MAX``.  The one definition behind
+    :func:`score_blocks` and the in-array markup path
+    (``htmlparse._base_flag``)."""
+    text = F.coalesce(text, F.lit(""))
+    n_words = F.size(F.filter(F.split(text, " "), lambda t: t != F.lit("")))
+    link_density = (F.coalesce(anchor_chars, F.lit(0)).cast("double")
+                    / F.greatest(F.length(text), F.lit(1)).cast("double"))
+    bad_tag = F.lower(F.coalesce(tag, F.lit(""))).isin(list(NON_CONTENT_TAGS))
+    return n_words, link_density, (~bad_tag) & (link_density < LINK_DENSITY_MAX)
+
+
 def score_blocks(blocks: DataFrame) -> DataFrame:
     """blocks + (n_words, link_density, is_content)."""
-    text = F.coalesce(F.col("text"), F.lit(""))
-    n_chars = F.length(text)
-    n_words = F.size(F.filter(F.split(text, " "), lambda t: t != F.lit("")))
-    link_density = (F.coalesce(F.col("anchor_chars"), F.lit(0)).cast("double")
-                    / F.greatest(n_chars, F.lit(1)).cast("double"))
-    bad_tag = F.lower(F.coalesce(F.col("tag"), F.lit(""))).isin(list(NON_CONTENT_TAGS))
-
-    base = (~bad_tag) & (link_density < LINK_DENSITY_MAX) & (n_words >= MIN_WORDS)
+    n_words, link_density, plain = block_signals(
+        F.col("text"), F.col("tag"), F.col("anchor_chars"))
+    base = plain & (n_words >= MIN_WORDS)
 
     w = Window.partitionBy("doc_id").orderBy("idx")
     prev_c = F.coalesce(F.lag(base, 1).over(w), F.lit(False))
     next_c = F.coalesce(F.lead(base, 1).over(w), F.lit(False))
-    neighbour = ((~bad_tag) & (link_density < LINK_DENSITY_MAX)
-                 & (n_words >= MIN_WORDS_NEIGHBOUR) & (prev_c | next_c))
+    neighbour = plain & (n_words >= MIN_WORDS_NEIGHBOUR) & (prev_c | next_c)
 
     return blocks.select(
         "*",

@@ -62,22 +62,21 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 64,
         T.n_tokens(F.col("chunk_text")).alias("n_chunk_tokens"))
 
 
-def pack_documents(docs: DataFrame, budget_tokens: int = 512,
-                   num_ranges: int | None = None) -> DataFrame:
+def pack_documents(docs: DataFrame) -> DataFrame:
     """(id, n_tokens, bin_id) — deterministic token-budget packing:
-    documents in ascending id order fill bins of ``budget_tokens`` by
-    running cumulative sum (bin = floor((cumsum - n) / budget), i.e.
+    documents in ascending id order fill bins of 512 tokens by
+    running cumulative sum (bin = floor((cumsum - n) / 512), i.e.
     the bin the document STARTS in; documents are never split, so a
     document may overhang its bin — the standard cumsum approximation
     of greedy packing, off by at most one document per bin).
 
     Scale formulation (the ONLY formulation — a global-window variant
     would move the whole corpus to one task): range-repartition on id
-    into ``num_ranges`` contiguous id ranges (default
-    spark.sql.shuffle.partitions), cumsum WITHIN each range under a
-    window that always has a partition spec, then shift each range by
-    the total tokens of all earlier ranges.  The offsets come from one
-    tiny per-range-totals aggregate (``num_ranges`` rows) whose running
+    into spark.sql.shuffle.partitions contiguous id ranges, cumsum
+    WITHIN each range under a window that always has a partition spec,
+    then shift each range by the total tokens of all earlier ranges.
+    The offsets come from one tiny per-range-totals aggregate (one row
+    per range) whose running
     sum is computed with a triangular self-join — no partition-less
     window anywhere, at any size.  The result is bitwise identical to
     the logical global cumsum for ANY contiguous ordered split, so the
@@ -88,9 +87,7 @@ def pack_documents(docs: DataFrame, budget_tokens: int = 512,
     order-contiguous; AQE may only merge ADJACENT shuffle partitions,
     which preserves contiguity and therefore the cumsum decomposition.
     """
-    spark = docs.sparkSession
-    if num_ranges is None:
-        num_ranges = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    num_ranges = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     base = docs.select(F.col("doc_id"),
                        T.n_tokens(F.col("text")).alias("n_tokens"))
     ranged = base.repartitionByRange(num_ranges, F.col("doc_id")) \
@@ -119,7 +116,7 @@ def pack_documents(docs: DataFrame, budget_tokens: int = 512,
     return joined.select(
         F.col("doc_id"), F.col("n_tokens"),
         F.floor((F.col("offset") + F.col("cum_in_range") - F.col("n_tokens"))
-                / F.lit(budget_tokens)).cast("long").alias("bin_id"))
+                / F.lit(512)).cast("long").alias("bin_id"))
 
 
 def pack_sequences(toks: DataFrame, seq_len: int = 2048,

@@ -111,8 +111,7 @@ def curation_report(docs: DataFrame,
             .agg(F.count(F.lit(1)).alias("n_docs")))
 
 
-def source_report(docs: DataFrame,
-                  cfg: CurationConfig = DEFAULT_CURATION) -> DataFrame:
+def source_report(docs: DataFrame) -> DataFrame:
     """Per-source curation dashboard (the per-domain quality table of
     RefinedWeb-style pipelines): for each source, document count, mean
     quality score, keep rate through the gates, and the per-reason
@@ -123,7 +122,7 @@ def source_report(docs: DataFrame,
     aggregation on the tiny source key.  Deterministic: means divide
     exact integer sums of the already-rounded per-doc signals.
     """
-    sig = curation_signals(docs, cfg)
+    sig = curation_signals(docs)
     j = docs.select(F.col("doc_id"), F.col("source")).join(sig, "doc_id")
     # exact mean: per-doc scores are 6-dp-rounded doubles; quantize to
     # integer micro-units so the cross-row sum has no float order drift

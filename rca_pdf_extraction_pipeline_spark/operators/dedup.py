@@ -26,9 +26,6 @@ from ..functions import text as T
 
 DEFAULT_MINHASH_SEEDS = 8
 DEFAULT_BANDS = 2
-#: 64-bit SimHash carried as two 32-bit halves (sig_hi, sig_lo) so no
-#: expression ever needs unsigned-64 arithmetic (both engines stay exact).
-SIMHASH_BITS = 64
 #: pigeonhole bands for the near-pair join: 4 disjoint 16-bit bands over
 #: the 64-bit signature => 2^16 blocks per band, and any pair with
 #: Hamming distance <= SIMHASH_BANDS - 1 = 3 agrees exactly on >=1 band.
@@ -98,7 +95,7 @@ def exact_duplicates(docs: DataFrame,
     )
 
 
-def dedup_paragraphs(docs: DataFrame, sep: str = "\n") -> DataFrame:
+def dedup_paragraphs(docs: DataFrame) -> DataFrame:
     """Corpus-global EXACT paragraph dedup, keep-first (the
     MassiveText / RefinedWeb exact line-dedup stage, public
     methodology): every distinct paragraph survives only at its FIRST
@@ -128,7 +125,7 @@ def dedup_paragraphs(docs: DataFrame, sep: str = "\n") -> DataFrame:
     """
     paras = docs.select(
         F.col("doc_id"),
-        F.posexplode(F.split(F.col("text"), sep)).alias("pos", "para"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "para"),
     ).filter(F.col("para") != "").withColumn("h", F.md5("para"))
     winners = paras.groupBy("h").agg(
         F.min(F.struct("doc_id", "pos")).alias("_w"))
@@ -140,25 +137,24 @@ def dedup_paragraphs(docs: DataFrame, sep: str = "\n") -> DataFrame:
                                            F.struct("pos", "para")))),
         lambda s: s["para"])
     return flagged.groupBy("doc_id").agg(
-        F.array_join(ordered, sep).alias("clean_text"),
+        F.array_join(ordered, "\n").alias("clean_text"),
         F.sum(F.col("_keep").cast("long")).alias("n_kept"),
         F.sum((~F.col("_keep")).cast("long")).alias("n_dropped"))
 
 
-def minhash_signatures(docs: DataFrame, n_hashes: int = DEFAULT_MINHASH_SEEDS,
-                       shingle_size: int = 3) -> DataFrame:
-    """Per-document MinHash signature: n_hashes bigint columns
-    ``sig_0 .. sig_{n-1}`` over the distinct word-``shingle_size``-gram
-    shingle set (Broder 1997; shingle_size=1 degrades to unigrams).
-    One md5 per shingle total — per-seed values are integer
-    permutations computed in a single fold (functions/hashing.py)."""
-    arr = H.minhash_int_array(T.shingle_set(F.col("text"), shingle_size),
-                              H.MINHASH_SEEDS[:n_hashes])
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """Per-document MinHash signature: DEFAULT_MINHASH_SEEDS bigint
+    columns ``sig_0 .. sig_{n-1}`` over the distinct word-3-gram shingle
+    set (Broder 1997).  One md5 per shingle total — per-seed values are
+    integer permutations computed in a single fold
+    (functions/hashing.py)."""
+    arr = H.minhash_int_array(T.shingle_set(F.col("text"), 3),
+                              H.MINHASH_SEEDS[:DEFAULT_MINHASH_SEEDS])
     t = docs.select(F.col("doc_id"), arr.alias("sig_arr"))
     return t.select(
         F.col("doc_id"),
         *[F.element_at(F.col("sig_arr"), s + 1).alias(f"sig_{s}")
-          for s in range(n_hashes)],
+          for s in range(DEFAULT_MINHASH_SEEDS)],
     )
 
 
@@ -193,8 +189,6 @@ def minhash_band_keys(docs: DataFrame, n_hashes: int = DEFAULT_MINHASH_SEEDS,
 
 
 def minhash_candidate_pairs(docs: DataFrame,
-                            n_hashes: int = DEFAULT_MINHASH_SEEDS,
-                            bands: int = DEFAULT_BANDS, shingle_size: int = 3,
                             checkpoint_dir: str | None = None) -> DataFrame:
     """Distinct candidate near-dup pairs (id_a < id_b) from band-key
     collisions. The join shuffles on band_key only; AQE handles any
@@ -207,7 +201,7 @@ def minhash_candidate_pairs(docs: DataFrame,
     durable path on a cluster) to pin the pair table on storage instead
     of executor blocks — see :class:`_Materializer`."""
     mat = _Materializer(checkpoint_dir)
-    keys = minhash_band_keys(docs, n_hashes, bands, shingle_size).persist()
+    keys = minhash_band_keys(docs).persist()
     try:
         a = keys.select(F.col("band"), F.col("band_key"),
                         F.col("doc_id").alias("id_a"))
@@ -226,10 +220,8 @@ def minhash_candidate_pairs(docs: DataFrame,
     return pairs
 
 
-def incremental_candidate_pairs(new_docs: DataFrame, index_keys: DataFrame,
-                                n_hashes: int = DEFAULT_MINHASH_SEEDS,
-                                bands: int = DEFAULT_BANDS,
-                                shingle_size: int = 3) -> DataFrame:
+def incremental_candidate_pairs(new_docs: DataFrame,
+                                index_keys: DataFrame) -> DataFrame:
     """Near-dup candidates of an INCOMING batch against an already-
     indexed corpus — the steady-state form of
     :func:`minhash_candidate_pairs` for a pipeline that ingests
@@ -251,7 +243,7 @@ def incremental_candidate_pairs(new_docs: DataFrame, index_keys: DataFrame,
     table on band_key prepays even that — plans/bucketing.py), and AQE
     splits any hot bucket.
     """
-    new_keys = minhash_band_keys(new_docs, n_hashes, bands, shingle_size)
+    new_keys = minhash_band_keys(new_docs)
     nk = new_keys.select(F.col("band"), F.col("band_key"),
                          F.col("doc_id").alias("new_id"))
     idx = index_keys.select(F.col("band"), F.col("band_key"),
@@ -262,7 +254,7 @@ def incremental_candidate_pairs(new_docs: DataFrame, index_keys: DataFrame,
 
 
 def jaccard_pairs(docs: DataFrame, block_keys: list[str] | None = None,
-                  threshold: float = 0.8, shingle_size: int = 3,
+                  threshold: float = 0.8,
                   allow_quadratic: bool = False) -> DataFrame:
     """Token-set Jaccard similarity join within blocking buckets.
 
@@ -273,14 +265,14 @@ def jaccard_pairs(docs: DataFrame, block_keys: list[str] | None = None,
     ``allow_quadratic=True``; the loud guard matches the SimHash
     lane-cap / max_hamming convention — silent quadratic plans are how
     a 100 TB job dies three hours in).
-    Jaccard = |A ∩ B| / |A ∪ B| over distinct word-k-gram shingles.
+    Jaccard = |A ∩ B| / |A ∪ B| over distinct word-3-gram shingles.
     """
     if not block_keys and not allow_quadratic:
         raise ValueError(
             "jaccard_pairs without block_keys is an O(N^2) cross join; "
             "pass block_keys (the scalable path) or opt in explicitly "
             "with allow_quadratic=True on a small sample")
-    toks = T.shingle_set(F.col("text"), shingle_size)
+    toks = T.shingle_set(F.col("text"), 3)
     base_cols = [F.col("doc_id"), toks.alias("tok_set")]
     base_cols += [F.col(k) for k in (block_keys or [])]
     t = docs.select(*base_cols)
@@ -302,9 +294,6 @@ def jaccard_pairs(docs: DataFrame, block_keys: list[str] | None = None,
 
 
 def deduplicate_corpus(docs: DataFrame, jaccard_threshold: float = 0.8,
-                       n_hashes: int = DEFAULT_MINHASH_SEEDS,
-                       bands: int = DEFAULT_BANDS,
-                       shingle_size: int = 3,
                        checkpoint_dir: str | None = None) -> DataFrame:
     """End-to-end near-dedup with keep-first policy: a document is
     dropped iff an LSH candidate pair links it to a LOWER-id document
@@ -319,23 +308,20 @@ def deduplicate_corpus(docs: DataFrame, jaccard_threshold: float = 0.8,
     verification runs only on band-collision pairs, never O(N^2).
     """
     verified = verified_near_pairs(docs, jaccard_threshold,
-                                   n_hashes, bands, shingle_size,
                                    checkpoint_dir=checkpoint_dir)
     losers = verified.select(F.col("id_b").alias("doc_id")).distinct()
     return docs.join(losers, "doc_id", "left_anti")
 
 
-def minhash_estimate_pairs(docs: DataFrame,
-                           n_hashes: int = DEFAULT_MINHASH_SEEDS,
-                           bands: int = DEFAULT_BANDS,
-                           shingle_size: int = 3) -> DataFrame:
+def minhash_estimate_pairs(docs: DataFrame) -> DataFrame:
     """LSH candidate pairs scored both ways: the MinHash ESTIMATE of
     Jaccard (fraction of agreeing signature components — Broder 1997's
     unbiased estimator) next to the EXACT shingle-set Jaccard, both on
     the integer micro-lattice (floor division, bit-identical across
     engines).  This is the estimator-quality diagnostic a pipeline runs
     before trusting signature-only dedup decisions at scale: plot
-    est vs exact, pick bands/rows for the S-curve you need.
+    est vs exact for the S-curve of DEFAULT_BANDS bands over
+    DEFAULT_MINHASH_SEEDS signature values.
 
     Returns (id_a, id_b, n_agree, est_micro, jaccard_micro), one row
     per banded candidate pair (id_a < id_b).
@@ -349,14 +335,14 @@ def minhash_estimate_pairs(docs: DataFrame,
     one per side (at cluster scale this is the signatures table written
     once and joined twice, cf. ``minhash_candidate_pairs``); pinned by
     the exactly-one-md5 plan test."""
-    pairs = minhash_candidate_pairs(docs, n_hashes, bands, shingle_size)
+    pairs = minhash_candidate_pairs(docs)
     sh = docs.select(F.col("doc_id"),
-                     T.shingle_set(F.col("text"), shingle_size)
-                     .alias("shset"))
+                     T.shingle_set(F.col("text"), 3).alias("shset"))
     side = sh.select(
         "doc_id", "shset",
         H.minhash_int_array(F.col("shset"),
-                            H.MINHASH_SEEDS[:n_hashes]).alias("sig")).persist()
+                            H.MINHASH_SEEDS[:DEFAULT_MINHASH_SEEDS])
+        .alias("sig")).persist()
     a = side.select(F.col("doc_id").alias("id_a"),
                     F.col("shset").alias("sh_a"), F.col("sig").alias("sig_a"))
     b = side.select(F.col("doc_id").alias("id_b"),
@@ -369,7 +355,7 @@ def minhash_estimate_pairs(docs: DataFrame,
                   "size(array_intersect(sh_a, sh_b))").cast("long")))
     return scored.select(
         "id_a", "id_b", "n_agree",
-        F.expr(f"(n_agree * 1000000) div {n_hashes}").cast("long")
+        F.expr(f"(n_agree * 1000000) div {DEFAULT_MINHASH_SEEDS}").cast("long")
         .alias("est_micro"),
         F.expr("(_inter * 1000000)"
                " div (size(sh_a) + size(sh_b) - _inter)").cast("long")
@@ -377,16 +363,12 @@ def minhash_estimate_pairs(docs: DataFrame,
 
 
 def verified_near_pairs(docs: DataFrame, jaccard_threshold: float = 0.8,
-                        n_hashes: int = DEFAULT_MINHASH_SEEDS,
-                        bands: int = DEFAULT_BANDS,
-                        shingle_size: int = 3,
                         checkpoint_dir: str | None = None) -> DataFrame:
     """LSH candidate pairs whose exact shingle Jaccard clears the
     threshold — (id_a, id_b) with id_a < id_b.  Shared by the greedy and
     connected-components dedup policies."""
-    cand = minhash_candidate_pairs(docs, n_hashes, bands,
-                                   shingle_size, checkpoint_dir=checkpoint_dir)
-    toks = T.shingle_set(F.col("text"), shingle_size)
+    cand = minhash_candidate_pairs(docs, checkpoint_dir=checkpoint_dir)
+    toks = T.shingle_set(F.col("text"), 3)
     t = docs.select(F.col("doc_id"), toks.alias("tok_set"))
     a = t.select(F.col("doc_id").alias("id_a"),
                  F.col("tok_set").alias("tok_a"))
@@ -401,10 +383,6 @@ def verified_near_pairs(docs: DataFrame, jaccard_threshold: float = 0.8,
 
 
 def deduplicate_corpus_cc(docs: DataFrame, jaccard_threshold: float = 0.8,
-                          n_hashes: int = DEFAULT_MINHASH_SEEDS,
-                          bands: int = DEFAULT_BANDS,
-                          shingle_size: int = 3,
-                          max_iter: int = 50,
                           checkpoint_dir: str | None = None) -> DataFrame:
     """Connected-components dedup: keep exactly the MINIMUM id of every
     near-dup component (transitive closure of verified pairs).
@@ -425,16 +403,13 @@ def deduplicate_corpus_cc(docs: DataFrame, jaccard_threshold: float = 0.8,
     kill a 100 TB dedup mid-loop and each round's label table survives
     for inspection/resume.
     """
-    labels = _cc_labels(docs, jaccard_threshold,
-                        n_hashes, bands, shingle_size, max_iter,
-                        checkpoint_dir)
+    labels = _cc_labels(docs, jaccard_threshold, checkpoint_dir)
     keepers = labels.filter(F.col("label") == F.col("node")) \
                     .select(F.col("node").alias("doc_id"))
     return docs.join(keepers, "doc_id", "left_semi")
 
 
-def _cc_labels(docs: DataFrame, jaccard_threshold: float, n_hashes: int,
-               bands: int, shingle_size: int, max_iter: int,
+def _cc_labels(docs: DataFrame, jaccard_threshold: float,
                checkpoint_dir: str | None) -> DataFrame:
     """(node, label) — every doc id labelled with the minimum id of its
     near-dup connected component (the label loop shared by the keep-min
@@ -444,19 +419,14 @@ def _cc_labels(docs: DataFrame, jaccard_threshold: float, n_hashes: int,
     from .linkgraph import connected_components  # local: linkgraph imports us
 
     pairs = verified_near_pairs(docs, jaccard_threshold,
-                                n_hashes, bands, shingle_size,
                                 checkpoint_dir=checkpoint_dir)
     return connected_components(
         docs.select(F.col("doc_id").alias("node")),
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-        id_col="node", max_iter=max_iter, checkpoint_dir=checkpoint_dir)
+        id_col="node", checkpoint_dir=checkpoint_dir)
 
 
-def cc_cluster_sizes(docs: DataFrame, jaccard_threshold: float = 0.8,
-                     n_hashes: int = DEFAULT_MINHASH_SEEDS,
-                     bands: int = DEFAULT_BANDS,
-                     shingle_size: int = 3,
-                     max_iter: int = 50,
+def cc_cluster_sizes(docs: DataFrame,
                      checkpoint_dir: str | None = None) -> DataFrame:
     """``(cluster_size, n_clusters, n_docs)`` — the duplicate-cluster
     size histogram of the near-dup connected components (singletons
@@ -468,9 +438,7 @@ def cc_cluster_sizes(docs: DataFrame, jaccard_threshold: float = 0.8,
     top of the CC label loop is two tiny aggregates — sizes per label
     (shuffle on the label key, map-side combined), then the histogram
     over the (≤ distinct-size) size table."""
-    labels = _cc_labels(docs, jaccard_threshold,
-                        n_hashes, bands, shingle_size, max_iter,
-                        checkpoint_dir)
+    labels = _cc_labels(docs, 0.8, checkpoint_dir)
     sizes = labels.groupBy("label").agg(
         F.count(F.lit(1)).cast("int").alias("cluster_size"))
     return (sizes.groupBy("cluster_size")
@@ -480,10 +448,6 @@ def cc_cluster_sizes(docs: DataFrame, jaccard_threshold: float = 0.8,
 
 def deduplicate_corpus_cc_best(docs: DataFrame, score_col: str,
                                jaccard_threshold: float = 0.8,
-                               n_hashes: int = DEFAULT_MINHASH_SEEDS,
-                               bands: int = DEFAULT_BANDS,
-                               shingle_size: int = 3,
-                               max_iter: int = 50,
                                checkpoint_dir: str | None = None
                                ) -> DataFrame:
     """Quality-priority CC dedup: within every near-dup component keep
@@ -506,9 +470,7 @@ def deduplicate_corpus_cc_best(docs: DataFrame, score_col: str,
     """
     from pyspark.sql import Window
 
-    labels = _cc_labels(docs, jaccard_threshold,
-                        n_hashes, bands, shingle_size, max_iter,
-                        checkpoint_dir)
+    labels = _cc_labels(docs, jaccard_threshold, checkpoint_dir)
     scored = labels.join(
         docs.select(F.col("doc_id").alias("node"),
                     F.col(score_col).alias("_score")), "node")
@@ -520,8 +482,7 @@ def deduplicate_corpus_cc_best(docs: DataFrame, score_col: str,
     return docs.join(winners, "doc_id", "left_semi")
 
 
-def simhash_signatures(docs: DataFrame, bits: int = SIMHASH_BITS,
-                       shingle_size: int = 3,
+def simhash_signatures(docs: DataFrame,
                        lane_cap: int = SIMHASH_LANE_CAP) -> DataFrame:
     """Per-document 64-bit SimHash signature (Charikar 2002): for each bit
     j, sum +1/-1 votes of hash64(shingle) bit j over the distinct shingle
@@ -532,16 +493,13 @@ def simhash_signatures(docs: DataFrame, bits: int = SIMHASH_BITS,
     hex prefix splits the same way: chars 1-8 -> lo, 9-16 -> hi).
 
     Implementation: ONE md5 per shingle (transform to a (hi, lo) struct
-    array), explode the already-hashed pairs, then ``bits`` conditional
+    array), explode the already-hashed pairs, then 64 conditional
     sums under groupBy(doc) — the sums partial-aggregate map-side so the
     exchange carries one row of 64 ints per document.  64 bits (vs the
     earlier 16) is the scale requirement: the near-pair step blocks on
     16-bit bands => 2^16 buckets per band instead of 2^8 total, so
     per-block self-joins stay tiny at 10^9 docs.
     """
-    if bits != 64:
-        raise ValueError("simhash_signatures is fixed at 64 bits "
-                         "(two 32-bit halves); got bits=%r" % bits)
     if not 0 < lane_cap <= SIMHASH_LANE_CAP:
         raise ValueError(f"lane_cap must be in (0, {SIMHASH_LANE_CAP}]; "
                          f"got {lane_cap}")
@@ -553,8 +511,7 @@ def simhash_signatures(docs: DataFrame, bits: int = SIMHASH_BITS,
     # in the guard re-ran the full md5 transform per reference (3x per
     # row; measured ~8x wall on sf0.1).
     tok_df = docs.select(F.col("doc_id"),
-                         T.shingle_set(F.col("text"), shingle_size)
-                         .alias("toks"))
+                         T.shingle_set(F.col("text"), 3).alias("toks"))
     # ONE md5 per shingle: the inner transform materializes the hex array
     # per row, the outer slices it twice — HOF lambdas get no CSE, so
     # inlining md5(t) in both conv slices would hash every shingle twice
@@ -656,8 +613,8 @@ def embedding_near_pairs(embs: DataFrame, id_col: str = "vec_id",
     )
 
 
-def simhash_near_pairs(docs: DataFrame, max_hamming: int = SIMHASH_BANDS - 1,
-                       shingle_size: int = 3) -> DataFrame:
+def simhash_near_pairs(docs: DataFrame,
+                       max_hamming: int = SIMHASH_BANDS - 1) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance <= max_hamming.
 
     Scale path: pigeonhole banding over SIMHASH_BANDS=4 disjoint 16-bit
@@ -671,7 +628,7 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = SIMHASH_BANDS - 1,
     AQE splits any hot block.  Exact distance is then verified via
     bit_count on the XOR of both halves.
     """
-    sigs = simhash_signatures(docs, shingle_size=shingle_size)
+    sigs = simhash_signatures(docs)
     return simhash_pairs_from_signatures(sigs, max_hamming=max_hamming)
 
 
@@ -721,8 +678,7 @@ def simhash_pairs_from_signatures(sigs: DataFrame, id_col: str = "doc_id",
     return out
 
 
-def containment_pairs(docs: DataFrame, shingle_size: int = 5,
-                      df_cap: int = 16,
+def containment_pairs(docs: DataFrame, df_cap: int = 16,
                       min_containment_micro: int = 500_000) -> DataFrame:
     """Asymmetric-containment candidate pairs — quote/subset detection
     (Broder 1997's containment coefficient |A∩B| / |A|): a short
@@ -754,7 +710,7 @@ def containment_pairs(docs: DataFrame, shingle_size: int = 5,
         raise ValueError("df_cap must be >= 2 (a pair needs two docs)")
     from pyspark.sql import Window
 
-    hs = F.transform(T.shingle_set(F.col("text"), shingle_size),
+    hs = F.transform(T.shingle_set(F.col("text"), 5),
                      lambda s: F.substring(F.md5(s), 1, 16))
     layer = docs.select(F.col("doc_id"), hs.alias("_hs"))
     sized = layer.select("doc_id", "_hs", F.size("_hs").alias("_n_sh"))
@@ -800,17 +756,16 @@ def containment_pairs(docs: DataFrame, shingle_size: int = 5,
                     >= min_containment_micro))
 
 
-def winnow_overlap_pairs(docs: DataFrame, k: int = 3, w: int = 4,
-                         df_cap: int = 16,
+def winnow_overlap_pairs(docs: DataFrame, df_cap: int = 16,
                          min_shared: int = 2) -> DataFrame:
     """Winnow-pruned overlap candidate pairs — the MOSS corpus
     formulation (Schleimer et al. SIGMOD'03 §5): posting lists are
-    built over the winnowing-SELECTED k-gram hashes only
-    (``textanalysis.winnow_selection``, expected density 2/(w+1)), so
-    the inverted index is ~(w+1)/2 smaller than full-shingle
-    containment.  The selection guarantee — any shared run of at least
-    ``w + k - 1`` words lands at least one shared selected hash in both
-    documents — makes recall exact for such overlaps only at
+    built over the winnowing-SELECTED word-3-gram hashes only (windows
+    of w=4, ``textanalysis.winnow_selection_frame``, expected density
+    2/(w+1)), so the inverted index is ~(w+1)/2 smaller than
+    full-shingle containment.  The selection guarantee — any shared run
+    of at least w + k - 1 = 6 words lands at least one shared selected
+    hash in both documents — makes recall exact for such overlaps only at
     ``min_shared=1``; the default of 2 trades that edge (a pair whose
     only overlap is one minimal run) for noise suppression.
 
@@ -828,8 +783,7 @@ def winnow_overlap_pairs(docs: DataFrame, k: int = 3, w: int = 4,
     if min_shared < 1:
         raise ValueError(f"min_shared must be >= 1; got {min_shared}")
     from . import textanalysis as TA
-    frame = TA.winnow_selection_frame(
-        TA.winnow_hash_frame(docs, k), w)
+    frame = TA.winnow_selection_frame(TA.winnow_hash_frame(docs), 4)
     hs = F.array_distinct(F.transform(F.col("_sel"),
                                       lambda s: s["gram_hash"]))
     sel = frame.select("doc_id", hs.alias("_selh"))
@@ -863,9 +817,7 @@ def winnow_overlap_pairs(docs: DataFrame, k: int = 3, w: int = 4,
             .filter(F.col("n_shared") >= min_shared))
 
 
-def deduplicate_corpus_winnow(docs: DataFrame, k: int = 3,
-                              w: int = 4, df_cap: int = 16,
-                              min_shared: int = 2, max_iter: int = 50,
+def deduplicate_corpus_winnow(docs: DataFrame,
                               checkpoint_dir: str | None = None
                               ) -> DataFrame:
     """Corpus dedup over winnow-overlap components: keep exactly the
@@ -880,12 +832,12 @@ def deduplicate_corpus_winnow(docs: DataFrame, k: int = 3,
     """
     from .linkgraph import connected_components  # local: linkgraph imports us
 
-    pairs = winnow_overlap_pairs(docs, k, w, df_cap, min_shared)
+    pairs = winnow_overlap_pairs(docs)
     labels = connected_components(
         docs.select(F.col("doc_id").alias("node")),
         pairs.select(F.col("id_a").alias("src"),
                      F.col("id_b").alias("dst")),
-        id_col="node", max_iter=max_iter, checkpoint_dir=checkpoint_dir)
+        id_col="node", checkpoint_dir=checkpoint_dir)
     keepers = labels.filter(F.col("label") == F.col("node")) \
                     .select(F.col("node").alias("doc_id"))
     return docs.join(keepers, "doc_id", "left_semi")

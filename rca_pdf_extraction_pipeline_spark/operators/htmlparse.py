@@ -57,12 +57,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..kernels.boilerplate import (
-    LINK_DENSITY_MAX,
-    MIN_WORDS,
-    MIN_WORDS_NEIGHBOUR,
-    NON_CONTENT_TAGS,
-)
+from ..kernels.boilerplate import MIN_WORDS, MIN_WORDS_NEIGHBOUR
+from .boilerplate import block_signals
 
 #: block-level tags the parser recognizes as block openers (the
 #: synthesized grammar's block set; a production parser extends the
@@ -117,16 +113,12 @@ def _block_array(html: Column) -> Column:
 
 
 def _base_flag(b: Column) -> Column:
-    """Boilerpipe base-content predicate — same expressions as
-    ``boilerplate.score_blocks`` (parity pinned by tests)."""
-    text = F.coalesce(b["text"], F.lit(""))
-    n_words = F.size(F.filter(F.split(text, " "), lambda t: t != F.lit("")))
-    density = (F.coalesce(b["anchor_chars"], F.lit(0)).cast("double")
-               / F.greatest(F.length(text), F.lit(1)).cast("double"))
-    bad = F.lower(F.coalesce(b["tag"], F.lit(""))).isin(list(NON_CONTENT_TAGS))
-    good = (~bad) & (density < F.lit(LINK_DENSITY_MAX))
-    return F.struct((good & (n_words >= F.lit(MIN_WORDS))).alias("base"),
-                    (good & (n_words >= F.lit(MIN_WORDS_NEIGHBOUR))).alias("weak"))
+    """Boilerpipe base-content predicate over one block struct — the
+    signals of ``boilerplate.score_blocks`` (``block_signals``)."""
+    n_words, _, plain = block_signals(b["text"], b["tag"], b["anchor_chars"])
+    return F.struct(
+        (plain & (n_words >= F.lit(MIN_WORDS))).alias("base"),
+        (plain & (n_words >= F.lit(MIN_WORDS_NEIGHBOUR))).alias("weak"))
 
 
 def _content_blocks(blocks: Column, flags: Column) -> Column:

@@ -349,10 +349,10 @@ def _ordered_spans(spans: F.Column) -> F.Column:
                            s["media_ref"].alias("media_ref"))))
 
 
-def merge_adjacent_text(inter: DataFrame, sep: str = " ") -> DataFrame:
+def merge_adjacent_text(inter: DataFrame) -> DataFrame:
     """``(doc_id, spans)`` — re-segmentation: every run of consecutive
-    text spans is merged into one paragraph span (texts joined by
-    ``sep``), media spans are preserved in place, and ``offset`` is
+    text spans is merged into one paragraph span (texts joined by one
+    space), media spans are preserved in place, and ``offset`` is
     renumbered 0..m-1 over the merged sequence.  This is the interleaved
     analogue of DOM text-node coalescing in the reference's HTML path
     (adjacent extracted text nodes collapse into one block before
@@ -393,7 +393,7 @@ def merge_adjacent_text(inter: DataFrame, sep: str = " ") -> DataFrame:
         return F.struct(
             F.when(~is_text, F.lit(None).cast("string"))
              .when(acc["pend"].isNull(), s["text"])
-             .otherwise(F.concat(acc["pend"], F.lit(sep), s["text"]))
+             .otherwise(F.concat(acc["pend"], F.lit(" "), s["text"]))
              .alias("pend"),
             F.when(is_text, acc["out"])
              .otherwise(F.concat(flush(acc), F.array(media)))
@@ -553,8 +553,7 @@ def asset_dedup_groups(inter: DataFrame, pool: int | None = None) -> DataFrame:
                  F.min(F.col("doc_id")).alias("keep_doc_id")))
 
 
-def interleaved_quality(inter: DataFrame,
-                        media_heavy_ratio: float = 0.5) -> DataFrame:
+def interleaved_quality(inter: DataFrame) -> DataFrame:
     """``(doc_id, n_spans, n_text, n_media, text_tokens, media_ratio,
     caption_coverage, verdict)`` — per-document interleaved quality
     flags, the multimodal row of the curation funnel
@@ -566,7 +565,7 @@ def interleaved_quality(inter: DataFrame,
     much of the media is usable for caption-style pairing.
 
     Verdicts: ``media_only`` (no text spans but media present),
-    ``media_heavy`` (media fraction > ``media_heavy_ratio``), ``empty``
+    ``media_heavy`` (media fraction > 0.5), ``empty``
     (no spans at all), else ``keep`` (text-only documents are fine —
     they are ordinary LM data).  Fully narrow: every statistic is an
     array aggregate inside one projection; no explode, no shuffle —
@@ -606,6 +605,6 @@ def interleaved_quality(inter: DataFrame,
         (F.when(F.col("n_spans") == 0, F.lit("empty"))
           .when((F.col("n_text") == 0) & (F.col("n_media") > 0),
                 F.lit("media_only"))
-          .when(F.col("media_ratio") > F.lit(media_heavy_ratio),
+          .when(F.col("media_ratio") > F.lit(0.5),
                 F.lit("media_heavy"))
           .otherwise(F.lit("keep"))).alias("verdict"))

@@ -12,7 +12,7 @@ Integer-lattice PageRank
 Classic PageRank is float-valued, and float sums are addition-order-
 dependent — two engines (or two partitionings) can disagree in the last
 ulp and break bit-equality.  Same cure as ``similarity.KMEANS_SCALE``:
-work on an integer lattice.  Ranks start at ``scale`` (default 10^6);
+work on an integer lattice.  Ranks start at ``scale`` = ``PR_SCALE`` (10^6);
 one iteration is
 
     pr'(v) = (3 * scale) // 20  +  (17 * inflow(v)) // 20
@@ -143,12 +143,11 @@ def _triangles_from(und: DataFrame, deg: DataFrame) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_triangles")))
 
 
-def clustering_coefficients(edges: DataFrame,
-                            scale: int = PR_SCALE) -> DataFrame:
+def clustering_coefficients(edges: DataFrame) -> DataFrame:
     """Local clustering coefficient per node (Watts & Strogatz 1998):
     ``cc(v) = 2 * triangles(v) / (deg(v) * (deg(v) - 1))`` over the
     undirected graph — returned on the integer lattice
-    (``cc_micro = (2 * T * scale) div (d * (d-1))``, exact floor
+    (``cc_micro = (2 * T * PR_SCALE) div (d * (d-1))``, exact floor
     division, bit-identical across engines) for every node with
     degree >= 2 (the coefficient is undefined below that).
 
@@ -166,7 +165,7 @@ def clustering_coefficients(edges: DataFrame,
                     F.coalesce("n_triangles", F.lit(0).cast("long"))
                     .alias("n_triangles"))
             .withColumn("cc_micro", F.expr(
-                f"(2 * n_triangles * {scale}) div (degree * (degree - 1))")
+                f"(2 * n_triangles * {PR_SCALE}) div (degree * (degree - 1))")
                 .cast("long")))
 
 
@@ -254,16 +253,15 @@ def hits_scores(nodes: DataFrame, edges: DataFrame,
 
 
 def personalized_pagerank(nodes: DataFrame, edges: DataFrame,
-                          seeds: DataFrame, iters: int = 2,
-                          scale: int = PR_SCALE) -> DataFrame:
+                          seeds: DataFrame, iters: int = 2) -> DataFrame:
     """Personalized PageRank on the integer lattice (Page et al. 1999
     §6; Haveliwala WWW'02 topic-sensitive variant): the teleport mass
     lands only on ``seeds`` — rank becomes proximity-to-the-seed-set,
     the standard crawl-frontier prioritizer ("score pages by closeness
     to a trusted seed list", cf. TrustRank, Gyöngyi et al. VLDB'04).
 
-        ppr0(v)  = scale if v in seeds else 0
-        ppr'(v)  = [v in seeds] * (3 * scale) // 20
+        ppr0(v)  = PR_SCALE if v in seeds else 0
+        ppr'(v)  = [v in seeds] * (3 * PR_SCALE) // 20
                    + (17 * inflow(v)) // 20
 
     Same exact-integer recurrence as :func:`pagerank` (damping 17/20,
@@ -279,11 +277,11 @@ def personalized_pagerank(nodes: DataFrame, edges: DataFrame,
     seed = F.broadcast(seeds.select(
         F.col(seeds.columns[0]).alias("node_id"))
         .withColumn("_seed", F.lit(1)))
-    base = (3 * scale) // 20
+    base = (3 * PR_SCALE) // 20
     pr = (nodes.select("node_id")
           .join(seed, "node_id", "left")
           .select("node_id",
-                  F.when(F.col("_seed") == 1, F.lit(scale))
+                  F.when(F.col("_seed") == 1, F.lit(PR_SCALE))
                   .otherwise(F.lit(0)).cast("long").alias("pr")))
     for _ in range(iters):
         contrib = (e.join(pr.withColumnRenamed("node_id", "src"), "src")
@@ -302,7 +300,7 @@ def personalized_pagerank(nodes: DataFrame, edges: DataFrame,
 
 
 def connected_components(nodes: DataFrame, edges: DataFrame,
-                         id_col: str = "node_id", max_iter: int = 50,
+                         id_col: str = "node_id",
                          checkpoint_dir: str | None = None) -> DataFrame:
     """(id_col, label) — every node labelled with the MINIMUM id
     reachable in its undirected component (isolated nodes label
@@ -312,7 +310,7 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     min-aggregate folds them; each round's frontier is materialized
     (``dedup._Materializer``: ``localCheckpoint`` or durable parquet
     under ``checkpoint_dir``) so plan depth stays O(1), and the loop
-    stops at fixpoint or ``max_iter``.  Rounds needed = component
+    stops at fixpoint or after 50 rounds.  Rounds needed = component
     diameter, so label-prop suits the short-diameter components of
     dedup/link graphs; at 10^12 edges checkpoint durably and bucket the
     edge table by src exactly like :func:`pagerank`.
@@ -336,7 +334,7 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
                  .unionByName(sym.select(F.col("src").alias("node")))
                  .distinct()
                  .withColumn("label", F.col("node")), "cc_labels")
-    for _ in range(max_iter):
+    for _ in range(50):
         incoming = (sym.join(labels, sym["src"] == labels["node"])
                     .select(F.col("dst").alias("node"), F.col("label")))
         new_labels = mat(
@@ -378,7 +376,6 @@ def degree_census(nodes: DataFrame, edges: DataFrame) -> DataFrame:
 
 
 def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 2,
-             scale: int = PR_SCALE,
              redistribute_dangling: bool = False) -> DataFrame:
     """Integer-lattice PageRank — (node_id, pr) after ``iters`` unrolled
     iterations; see the module docstring for the exact recurrence and
@@ -396,9 +393,9 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 2,
         raise ValueError(f"iters must be >= 1; got {iters}")
     e = edges.select("src", "dst")
     deg = out_degrees(e)
-    pr = nodes.select("node_id", F.lit(scale).cast("long").alias("pr"))
+    pr = nodes.select("node_id", F.lit(PR_SCALE).cast("long").alias("pr"))
     n_nodes = nodes.agg(F.count(F.lit(1)).alias("n_nodes"))
-    base = (3 * scale) // 20  # (1 - d) * scale with d = 17/20
+    base = (3 * PR_SCALE) // 20  # (1 - d) * scale with d = 17/20
     for _ in range(iters):
         # `div` is exact integer division on longs (no double quotient
         # whose rounding could cross an integer boundary) — the oracle's

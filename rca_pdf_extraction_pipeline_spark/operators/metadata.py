@@ -48,12 +48,13 @@ def extract_doc_metadata(docs: DataFrame) -> DataFrame:
             .select("doc_id", *METADATA_FIELDS))
 
 
-def metadata_census(docs: DataFrame, field: str = "producer") -> DataFrame:
-    """Per-value census of one metadata field (the reference prints a
-    producer/format census in its summary path) — (value, n_docs)."""
+def metadata_census(docs: DataFrame) -> DataFrame:
+    """Per-value census of the ``producer`` metadata field (the reference
+    prints a producer/format census in its summary path) — (producer,
+    n_docs)."""
     meta = extract_doc_metadata(docs)
-    return (meta.groupBy(F.coalesce(F.col(field), F.lit("(none)"))
-                 .alias(field))
+    return (meta.groupBy(F.coalesce(F.col("producer"), F.lit("(none)"))
+                 .alias("producer"))
             .agg(F.count(F.lit(1)).alias("n_docs")))
 
 

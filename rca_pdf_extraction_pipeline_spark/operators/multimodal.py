@@ -399,19 +399,18 @@ def synth_jpeg_media(ids: DataFrame) -> DataFrame:
         lambda rgb: encode_jpeg(rgb, subsample=True, restart_interval=1))
 
 
-def synth_grid_bmp_media(ids: DataFrame, grid_mod: int = 250,
-                         cell: int = 4) -> DataFrame:
+def synth_grid_bmp_media(ids: DataFrame, grid_mod: int = 250) -> DataFrame:
     """Textured BMP fixture for PERCEPTUAL hashing (the solid-color
-    fixtures are dHash-degenerate): each doc becomes a grayscale
-    ``9*cell x 8*cell`` BMP built from an 8x9 grid of solid ``cell x
-    cell`` blocks, block (r, c) brightness = first md5 byte of
-    ``"{doc_id % grid_mod}-{r}-{c}"``.  Average-pooling the image back
-    to 9x8 recovers the grid EXACTLY (equal-size blocks), so the dHash
-    has a closed-form DuckDB twin.  Docs with ``doc_id >= grid_mod``
-    reuse the grid of ``doc_id % grid_mod`` with the top bit of cell
-    (0, 0) flipped — a near-duplicate at Hamming distance <= 1 (cell
-    (0, 0) feeds exactly one horizontal comparison), giving the pairs
-    query a known planted-pair structure.
+    fixtures are dHash-degenerate): each doc becomes a grayscale 36x32
+    BMP built from an 8x9 grid of solid 4x4 blocks, block (r, c)
+    brightness = first md5 byte of ``"{doc_id % grid_mod}-{r}-{c}"``.
+    Average-pooling the image back to 9x8 recovers the grid EXACTLY
+    (equal-size blocks), so the dHash has a closed-form DuckDB twin.
+    Docs with ``doc_id >= grid_mod`` reuse the grid of ``doc_id %
+    grid_mod`` with the top bit of cell (0, 0) flipped — a
+    near-duplicate at Hamming distance <= 1 (cell (0, 0) feeds exactly
+    one horizontal comparison), giving the pairs query a known
+    planted-pair structure.
 
     Fixture GENERATOR (not a hot path), like :func:`synth_bmp_media`."""
 
@@ -425,7 +424,7 @@ def synth_grid_bmp_media(ids: DataFrame, grid_mod: int = 250,
                 grid[r, c] = int(hashlib.md5(key).hexdigest()[:2], 16)
         if did >= grid_mod:
             grid[0, 0] ^= 0x80
-        g = np.repeat(np.repeat(grid, cell, axis=0), cell, axis=1)
+        g = np.repeat(np.repeat(grid, 4, axis=0), 4, axis=1)
         rgb = np.repeat(g[:, :, None], 3, axis=2)
         return [(f"gbmp-{did:05d}", f"doc-{did}", "image", encode_bmp(rgb),
                  None, None, None)]
@@ -485,9 +484,9 @@ def media_dhash(media: DataFrame) -> DataFrame:
                         DHASH_SCHEMA, dhash)
 
 
-def media_dhash_pairs(media: DataFrame, max_hamming: int = 2) -> DataFrame:
+def media_dhash_pairs(media: DataFrame) -> DataFrame:
     """Perceptual near-duplicate image pairs: dHash signatures banded by
-    the SimHash pigeonhole machinery (Hamming <= max_hamming needs
+    the SimHash pigeonhole machinery (Hamming <= 2 needs
     agreement on >= 1 of 4 disjoint 16-bit bands — never all-pairs).
     Catches re-encodes, brightness-preserving recompression, and
     small local edits that the mean-RGB feature pairs
@@ -497,7 +496,7 @@ def media_dhash_pairs(media: DataFrame, max_hamming: int = 2) -> DataFrame:
     sigs = media_dhash(media).filter("ok") \
         .select("media_ref", "sig_hi", "sig_lo")
     return dedup.simhash_pairs_from_signatures(
-        sigs, id_col="media_ref", max_hamming=max_hamming)
+        sigs, id_col="media_ref", max_hamming=2)
 
 
 def encode_wav(samples: np.ndarray, sample_rate: int = 8000) -> bytes:
@@ -613,10 +612,10 @@ def audio_fingerprint(media: DataFrame) -> DataFrame:
                         DHASH_SCHEMA, fingerprint)
 
 
-def audio_dup_pairs(media: DataFrame, max_hamming: int = 2) -> DataFrame:
+def audio_dup_pairs(media: DataFrame) -> DataFrame:
     """Near-duplicate audio pairs: envelope fingerprints banded by the
     SimHash pigeonhole machinery (same guarantee as
-    :func:`media_dhash_pairs` — Hamming <= max_hamming always shares a
+    :func:`media_dhash_pairs` — Hamming <= 2 always shares a
     16-bit band, never all-pairs).  Completes the cross-modal dedup
     family: MinHash/SimHash for text, dHash for images, the envelope
     hash for audio — one banding implementation serving all three."""
@@ -625,15 +624,14 @@ def audio_dup_pairs(media: DataFrame, max_hamming: int = 2) -> DataFrame:
     sigs = audio_fingerprint(media).filter("ok") \
         .select("media_ref", "sig_hi", "sig_lo")
     return dedup.simhash_pairs_from_signatures(
-        sigs, id_col="media_ref", max_hamming=max_hamming)
+        sigs, id_col="media_ref", max_hamming=2)
 
 
 def synth_wav_media(ids: DataFrame, n_samples: int = 64,
-                    sample_rate: int = 8000,
                     dup_mod: int | None = None,
                     md5_texture: bool = False) -> DataFrame:
     """Deterministic WAV fixture table from a (doc_id:long) frame: each
-    doc becomes a PCM16 mono clip whose sample ``n`` is ``((doc_id*7 +
+    doc becomes an 8 kHz PCM16 mono clip whose sample ``n`` is ``((doc_id*7 +
     n*13) % 256 - 128) * 100`` — pure id arithmetic, so every feature
     has a closed-form SQL twin; ids divisible by 10 get a deliberately-
     undecodable payload to pin the ok=False path (the
@@ -669,7 +667,7 @@ def synth_wav_media(ids: DataFrame, n_samples: int = 64,
                 s = ((base * 7 + ns * 13) % 256 - 128) * 100
             if dup_mod is not None and did >= dup_mod:
                 s[-4:] += 3000
-            payload = encode_wav(s.astype(np.int16), sample_rate)
+            payload = encode_wav(s.astype(np.int16), 8000)
         return [(f"wav-{did:05d}", f"doc-{did}", "audio", payload,
                  None, None, None)]
 
@@ -754,8 +752,7 @@ def media_stats(media: DataFrame) -> DataFrame:
     )
 
 
-def media_near_pairs(media: DataFrame, threshold: float = 0.999,
-                     n_bits: int = 8) -> DataFrame:
+def media_near_pairs(media: DataFrame) -> DataFrame:
     """Image near-duplicate pairs — the multimodal analogue of SemDeDup,
     closing the loop between the codec work and the dedup family: decode
     each payload to its feature vector (:func:`decode_media` — mean-RGB
@@ -765,16 +762,16 @@ def media_near_pairs(media: DataFrame, threshold: float = 0.999,
     re-compressed copy of an image decodes to a near-identical feature
     vector even though its bytes (and so its exact-dedup hash) differ.
 
-    Returns (media_a, media_b, cosine_sim) for same-bucket pairs with
-    cosine >= threshold (6 dp, refs ordered); undecodable payloads
-    (ok=False) and zero-feature images (no color signal — cosine is
-    undefined) are excluded.
+    Returns (media_a, media_b, cosine_sim) for pairs in the same 8-bit
+    sign-LSH bucket with cosine >= 0.999 (6 dp, refs ordered);
+    undecodable payloads (ok=False) and zero-feature images (no color
+    signal — cosine is undefined) are excluded.
 
     Scale: decode is the one Arrow-batched pass the plan already pays
     for feature extraction; the pair stage inherits embedding_near_
     pairs' properties — per-bucket joins, never O(N^2).  At 10^12
     images swap the 8-dim mean-RGB features for real embeddings and raise
-    n_bits so expected bucket size stays constant."""
+    the bucket bits so expected bucket size stays constant."""
     from pyspark.sql import functions as F
 
     from ..functions import vectors as V
@@ -787,8 +784,7 @@ def media_near_pairs(media: DataFrame, threshold: float = 0.999,
              .filter(F.aggregate("features", F.lit(0.0),
                                  lambda a, x: a + F.abs(x)) > 0))
     pairs = embedding_near_pairs(feats, id_col="media_ref",
-                                 vec_col="features",
-                                 threshold=threshold, n_bits=n_bits)
+                                 vec_col="features", threshold=0.999)
     return pairs.select(F.col("id_a").alias("media_a"),
                         F.col("id_b").alias("media_b"),
                         F.col("cosine_sim"))
@@ -979,15 +975,13 @@ def video_frames(media: DataFrame, every_n: int = 1) -> DataFrame:
                         VIDEO_FRAMES_SCHEMA, frames)
 
 
-def video_dup_pairs(media: DataFrame, every_n: int = 1,
-                    max_hamming: int = 2,
-                    min_frames: int = 2) -> DataFrame:
+def video_dup_pairs(media: DataFrame, min_frames: int = 2) -> DataFrame:
     """Near-duplicate VIDEO pairs via temporally-aligned frame hashes:
-    sample frames (:func:`video_frames`), dHash each through the image
+    take every frame (:func:`video_frames`), dHash each through the image
     pipeline (:func:`media_dhash` — frames ARE images here), band the
     frame signatures with the shared SimHash pigeonhole machinery, and
     keep video pairs where >= ``min_frames`` SAME-POSITION frames land
-    within ``max_hamming`` — a re-encode or a single-frame edit still
+    within Hamming 2 — a re-encode or a single-frame edit still
     matches on the other frames, while coincidental single-frame
     collisions are rejected by the count gate.  Completes the
     cross-modal dedup family: one banding implementation now serves
@@ -1001,11 +995,11 @@ def video_dup_pairs(media: DataFrame, every_n: int = 1,
 
     from . import dedup
 
-    frames = video_frames(media, every_n=every_n)
+    frames = video_frames(media)
     sigs = media_dhash(frames).filter("ok") \
         .select("media_ref", "sig_hi", "sig_lo")
     pairs = dedup.simhash_pairs_from_signatures(
-        sigs, id_col="media_ref", max_hamming=max_hamming)
+        sigs, id_col="media_ref", max_hamming=2)
     split = F.split(F.col("id_a"), "#f")
     split_b = F.split(F.col("id_b"), "#f")
     aligned = (pairs
@@ -1020,12 +1014,10 @@ def video_dup_pairs(media: DataFrame, every_n: int = 1,
             .filter(F.col("n_matched") >= min_frames))
 
 
-def synth_y4m_media(ids: DataFrame, n_frames: int = 6,
-                    dup_mod: int | None = None,
-                    cell: int = 4) -> DataFrame:
+def synth_y4m_media(ids: DataFrame, dup_mod: int | None = None) -> DataFrame:
     """Deterministic Y4M fixture table from a (doc_id:long) frame: each
-    doc becomes an ``n_frames``-frame ``9*cell x 8*cell`` clip whose
-    frame ``f`` is an 8x9 grid of solid ``cell x cell`` luma blocks,
+    doc becomes a 6-frame 36x32 clip whose
+    frame ``f`` is an 8x9 grid of solid 4x4 luma blocks,
     block (r, c) = first md5 byte of ``"{base}-{f}-{r}-{c}"`` (the
     :func:`synth_grid_bmp_media` texture, extended by a frame axis, so
     per-frame dHash AND the exact luma/motion sums have closed-form
@@ -1045,8 +1037,8 @@ def synth_y4m_media(ids: DataFrame, n_frames: int = 6,
             payload = b"not a y4m payload"
         else:
             base = did if dup_mod is None else did % dup_mod
-            frames = np.empty((n_frames, 8, 9), dtype=np.uint8)
-            for f in range(n_frames):
+            frames = np.empty((6, 8, 9), dtype=np.uint8)
+            for f in range(6):
                 for r in range(8):
                     for c in range(9):
                         key = f"{base}-{f}-{r}-{c}".encode()
@@ -1054,7 +1046,7 @@ def synth_y4m_media(ids: DataFrame, n_frames: int = 6,
                             hashlib.md5(key).hexdigest()[:2], 16)
             if dup_mod is not None and did >= dup_mod:
                 frames[0, 0, 0] ^= 0x80
-            big = np.repeat(np.repeat(frames, cell, axis=1), cell, axis=2)
+            big = np.repeat(np.repeat(frames, 4, axis=1), 4, axis=2)
             cs = "C420jpeg" if did % 2 == 0 else "Cmono"
             payload = encode_y4m(big, fps=(30, 1), colorspace=cs)
         return [(f"y4m-{did:05d}", f"doc-{did}", "video", payload,

@@ -16,9 +16,9 @@ from pyspark.sql import functions as F
 DEFAULT_PERCENTILES = (0.25, 0.5, 0.75, 0.9, 0.99)
 
 
-def corpus_profile(docs: DataFrame,
-                   percentiles: tuple[float, ...] = DEFAULT_PERCENTILES) -> DataFrame:
-    """(group, n_docs, min, p25..p99, max, mean) of ``n_chars`` per ``lang``.
+def corpus_profile(docs: DataFrame) -> DataFrame:
+    """(group, n_docs, min, p25..p99, max, mean) of ``n_chars`` per ``lang``
+    at the ``DEFAULT_PERCENTILES``.
 
     Percentile columns are named ``p<percent>`` (p25, p50, ...); the
     discrete percentile is cast back to the value column's integer type
@@ -28,7 +28,7 @@ def corpus_profile(docs: DataFrame,
         F.count(F.lit(1)).alias("n_docs"),
         F.min("n_chars").alias("min_val"),
     ]
-    for p in percentiles:
+    for p in DEFAULT_PERCENTILES:
         name = f"p{int(round(p * 100))}"
         aggs.append(
             F.expr(f"percentile_disc({p}) WITHIN GROUP (ORDER BY n_chars)")
@@ -40,9 +40,7 @@ def corpus_profile(docs: DataFrame,
     return docs.groupBy("lang").agg(*aggs).orderBy("lang")
 
 
-def histogram_quantiles(docs: DataFrame, n_buckets: int = 64,
-                        percentiles: tuple[int, ...] = (25, 50, 75, 90, 99)
-                        ) -> DataFrame:
+def histogram_quantiles(docs: DataFrame, n_buckets: int = 64) -> DataFrame:
     """Bounded-memory per-group quantiles via a fixed integer histogram —
     the 100 TB form of :func:`corpus_profile`.
 
@@ -57,8 +55,8 @@ def histogram_quantiles(docs: DataFrame, n_buckets: int = 64,
        arithmetic ``((v - mn) * n_buckets) div (mx - mn + 1)``, and
        hash-aggregate (group, bucket) counts — map-side combine does
        most of the reduction, reduce side is <= groups x n_buckets rows;
-    3. a window cumsum over that tiny table picks, for each requested
-       percentile p, the first bucket whose cumulative count reaches
+    3. a window cumsum over that tiny table picks, for each percentile
+       p in 25, 50, 75, 90, 99, the first bucket whose cumulative count reaches
        ``ceil(n * p / 100)`` (the percentile_disc rank), and reports the
        bucket's LOWER BOUND in value space.
 
@@ -104,7 +102,7 @@ def histogram_quantiles(docs: DataFrame, n_buckets: int = 64,
            .join(F.broadcast(stats), "lang"))
     lo = F.expr(f"mn + (bucket * (mx - mn + 1)) div {n_buckets}")
     aggs = [F.min("n_docs").alias("n_docs"), F.min("mn").alias("min_val")]
-    for pct in percentiles:
+    for pct in (25, 50, 75, 90, 99):
         rank = F.expr(f"(n_docs * {pct} + 99) div 100")
         aggs.append(F.min(F.when(F.col("cum") >= rank, lo))
                     .alias(f"p{pct}_lo"))
@@ -112,8 +110,7 @@ def histogram_quantiles(docs: DataFrame, n_buckets: int = 64,
     return cum.groupBy("lang").agg(*aggs).orderBy("lang")
 
 
-def source_tfidf_terms(docs: DataFrame, top_k: int = 5,
-                       min_len: int = 3) -> DataFrame:
+def source_tfidf_terms(docs: DataFrame, top_k: int = 5) -> DataFrame:
     """Distinctive vocabulary per subcorpus: treat each ``source``
     value as one aggregate document and rank its terms by tf-idf
     (Sparck Jones 1972): ``tf * ln(n_groups / df_groups)`` — the
@@ -122,7 +119,7 @@ def source_tfidf_terms(docs: DataFrame, top_k: int = 5,
 
     Returns (source, term, tf, df_groups, tfidf, rank) for the top
     ``top_k`` terms per group by (tfidf desc, term asc); terms shorter
-    than ``min_len`` chars are dropped (stopword-ish tail).  Scores are
+    than 3 chars are dropped (stopword-ish tail).  Scores are
     rounded to 6 dp so any engine reproduces them exactly.
 
     Scale: explode -> hash-agg on (group, term) — map-side combine does
@@ -136,7 +133,7 @@ def source_tfidf_terms(docs: DataFrame, top_k: int = 5,
 
     toks = T.tokens(F.col("text"))
     pairs = (docs.select("source", F.explode(toks).alias("term"))
-             .filter(F.length("term") >= min_len)
+             .filter(F.length("term") >= 3)
              .groupBy("source", "term").agg(F.count(F.lit(1)).alias("tf")))
     n_groups = docs.select(F.countDistinct("source").alias("n_groups"))
     df_groups = pairs.groupBy("term").agg(

@@ -131,7 +131,7 @@ def column_reading_order(boxes: DataFrame, min_gap: int = 50) -> DataFrame:
         F.row_number().over(order).cast("int").alias("read_rank"))
 
 
-def reading_order_report(boxes: DataFrame, min_gap: int = 50) -> DataFrame:
+def reading_order_report(boxes: DataFrame) -> DataFrame:
     """``(doc_id, n_boxes, n_cols, n_in_order)`` — per-document audit
     of :func:`column_reading_order` against the ``box_id`` ground
     truth (``n_in_order`` counts boxes whose recovered ``read_rank``
@@ -140,7 +140,7 @@ def reading_order_report(boxes: DataFrame, min_gap: int = 50) -> DataFrame:
     whole-corpus form of the recovery check; the groupBy reuses the
     windows' ``doc_id`` hash partitioning, so the report costs no
     extra exchange."""
-    ranked = column_reading_order(boxes, min_gap=min_gap)
+    ranked = column_reading_order(boxes)
     return (ranked.groupBy("doc_id")
             .agg(F.count(F.lit(1)).cast("int").alias("n_boxes"),
                  F.max("col_id").cast("int").alias("n_cols"),

@@ -49,8 +49,7 @@ def hash_sample(docs: DataFrame, rate: float, seed: int = 0,
 
 
 def _range_rank(df: DataFrame, group_cols: list[str],
-                order_cols: list[str],
-                num_ranges: int | None = None) -> DataFrame:
+                order_cols: list[str]) -> DataFrame:
     """Append ``_rk`` — the 1-based global rank of each row within its
     ``group_cols`` group under ``order_cols`` — with bounded per-task
     memory at ANY group size (a plain ``Window.partitionBy(group)``
@@ -58,7 +57,8 @@ def _range_rank(df: DataFrame, group_cols: list[str],
     is an OOM/stall).
 
     The ``pack_documents`` decomposition generalized: range-repartition
-    on (group, order) into ``num_ranges`` contiguous slices, rank
+    on (group, order) into spark.sql.shuffle.partitions contiguous
+    slices, rank
     within each (range, group) cell under a partitioned window, then
     shift by the same-group row counts of earlier ranges — a tiny
     aggregate (each group spans ~1 range boundary, so ~num_ranges +
@@ -81,9 +81,7 @@ def _range_rank(df: DataFrame, group_cols: list[str],
     identical exchanges into one shuffle; the plan pin
     ``test_plan_hygiene.test_range_rank_single_shared_range_exchange``
     fails loudly if that reuse ever stops firing."""
-    spark = df.sparkSession
-    if num_ranges is None:
-        num_ranges = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    num_ranges = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     from pyspark.sql import Window
 
     ranged = df.repartitionByRange(
@@ -112,8 +110,7 @@ def _range_rank(df: DataFrame, group_cols: list[str],
 
 
 def epoch_shards(docs: DataFrame, n_shards: int, epoch: int = 0,
-                 id_col: str = "doc_id",
-                 num_ranges: int | None = None) -> DataFrame:
+                 id_col: str = "doc_id") -> DataFrame:
     """Deterministic epoch shuffling + sharding — the data-ordering
     primitive of a training run: every document gets a (shard,
     pos_in_shard) for the given ``epoch``, forming a reproducible
@@ -129,7 +126,7 @@ def epoch_shards(docs: DataFrame, n_shards: int, epoch: int = 0,
     Scale formulation: :func:`_range_rank` (the ``pack_documents``
     range-cumsum decomposition — a Window.partitionBy(shard) rank would
     sort corpus/n_shards rows in ONE task per shard).  Per-task memory
-    is corpus/num_ranges regardless of n_shards, and the SQL oracle
+    is corpus/shuffle partitions regardless of n_shards, and the SQL oracle
     stays the one-line per-shard ROW_NUMBER formulation.
     """
     if n_shards < 1:
@@ -139,8 +136,7 @@ def epoch_shards(docs: DataFrame, n_shards: int, epoch: int = 0,
     keyed = (docs.select(F.col(id_col), key.alias("shuffle_key"))
              .withColumn("shard", (F.col("shuffle_key") % n_shards)
                          .cast("int")))
-    ranked = _range_rank(keyed, ["shard"], ["shuffle_key", id_col],
-                         num_ranges)
+    ranked = _range_rank(keyed, ["shard"], ["shuffle_key", id_col])
     # pos stays LONG: at the 10^12-doc scale this decomposition exists
     # for, per-shard position exceeds int32 with a handful of shards —
     # an int cast is an ANSI runtime error or a silent wraparound
@@ -149,15 +145,15 @@ def epoch_shards(docs: DataFrame, n_shards: int, epoch: int = 0,
 
 
 def train_val_test_split(docs: DataFrame,
-                         weights: tuple[float, float, float] = (0.8, 0.1, 0.1),
-                         seed: int = 0) -> DataFrame:
+                         weights: tuple[float, float, float] = (0.8, 0.1, 0.1)
+                         ) -> DataFrame:
     """Append a ``split`` column ('train' | 'val' | 'test') — disjoint
-    and exhaustive by construction (consecutive bucket ranges)."""
+    and exhaustive by construction (consecutive seed-0 bucket ranges)."""
     if abs(sum(weights) - 1.0) > 1e-9:
         raise ValueError(f"weights must sum to 1; got {weights}")
     cut1 = int(round(weights[0] * SAMPLE_BUCKETS))
     cut2 = cut1 + int(round(weights[1] * SAMPLE_BUCKETS))
-    b = sample_bucket(F.col("doc_id"), seed)
+    b = sample_bucket(F.col("doc_id"))
     split = (F.when(b < cut1, F.lit("train"))
              .when(b < cut2, F.lit("val"))
              .otherwise(F.lit("test")))
@@ -166,7 +162,6 @@ def train_val_test_split(docs: DataFrame,
 
 def leakage_safe_split(docs: DataFrame,
                        weights: tuple[float, float, float] = (0.8, 0.1, 0.1),
-                       seed: int = 0, jaccard_threshold: float = 0.8,
                        checkpoint_dir: str | None = None) -> DataFrame:
     """Contamination-safe train/val/test split: every MinHash near-dup
     connected component travels into ONE split, because membership is
@@ -178,7 +173,7 @@ def leakage_safe_split(docs: DataFrame,
 
     Documents in no near-dup component label themselves, so for a
     fully-deduplicated corpus this degrades EXACTLY to
-    :func:`train_val_test_split` with the same seed.
+    :func:`train_val_test_split` (components at Jaccard >= 0.8).
 
     Scale: the component labels come from the shared min-label loop
     (``dedup._cc_labels`` -> ``linkgraph.connected_components``;
@@ -189,12 +184,10 @@ def leakage_safe_split(docs: DataFrame,
         raise ValueError(f"weights must sum to 1; got {weights}")
     from .dedup import _cc_labels
 
-    labels = _cc_labels(docs, jaccard_threshold,
-                        n_hashes=8, bands=2, shingle_size=3, max_iter=50,
-                        checkpoint_dir=checkpoint_dir)
+    labels = _cc_labels(docs, 0.8, checkpoint_dir)
     cut1 = int(round(weights[0] * SAMPLE_BUCKETS))
     cut2 = cut1 + int(round(weights[1] * SAMPLE_BUCKETS))
-    b = sample_bucket(F.col("label"), seed)
+    b = sample_bucket(F.col("label"))
     split = (F.when(b < cut1, F.lit("train"))
              .when(b < cut2, F.lit("val"))
              .otherwise(F.lit("test")))

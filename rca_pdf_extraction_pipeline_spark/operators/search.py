@@ -33,8 +33,7 @@ def _tf(toks: Column, term: str) -> Column:
     return F.size(F.filter(toks, lambda t: t == F.lit(term)))
 
 
-def bm25_topk(docs: DataFrame, terms: list[str], k: int = 20,
-              k1: float = BM25_K1, b: float = BM25_B) -> DataFrame:
+def bm25_topk(docs: DataFrame, terms: list[str], k: int = 20) -> DataFrame:
     """Top-``k`` documents by BM25 score for the bag-of-words query
     ``terms``.
 
@@ -74,9 +73,10 @@ def bm25_topk(docs: DataFrame, terms: list[str], k: int = 20,
             F.lit(1.0)
             + (F.col("n_docs") - F.col(f"df_{i}") + F.lit(0.5))
             / (F.col(f"df_{i}") + F.lit(0.5)))
-        norm = tf * F.lit(k1 + 1.0) / (
-            tf + F.lit(k1) * (F.lit(1.0 - b)
-                              + F.lit(b) * F.col("dl") / F.col("avgdl")))
+        norm = tf * F.lit(BM25_K1 + 1.0) / (
+            tf + F.lit(BM25_K1) * (F.lit(1.0 - BM25_B)
+                                   + F.lit(BM25_B) * F.col("dl")
+                                   / F.col("avgdl")))
         score = score + idf * norm
 
     return (scored
@@ -90,13 +90,13 @@ def bm25_topk(docs: DataFrame, terms: list[str], k: int = 20,
 
 
 def hybrid_rrf_topk(docs: DataFrame, terms: list[str], query_doc: int,
-                    k: int = 10, n_each: int = 20, k0: int = 60,
-                    dim: int = 16) -> DataFrame:
+                    k: int = 10, n_each: int = 20) -> DataFrame:
     """Hybrid lexical+semantic retrieval: fuse the BM25 top-``n_each``
     for ``terms`` with the hashed-embedding cosine top-``n_each``
-    around ``query_doc`` by reciprocal-rank fusion (Cormack, Clarke &
-    Buettcher, SIGIR 2009): score(d) = sum over lists of
-    1/(k0 + rank_list(d)), missing list membership contributing 0.
+    around ``query_doc`` (16-dim hashed embeddings) by reciprocal-rank
+    fusion (Cormack, Clarke & Buettcher, SIGIR 2009): score(d) = sum
+    over lists of 1/(60 + rank_list(d)), missing list membership
+    contributing 0.
 
     Returns (id, lex_rank, sem_rank, rrf) — ranks NULL where the doc
     appears in only one list — ordered by (rrf desc, id), the standard
@@ -121,13 +121,13 @@ def hybrid_rrf_topk(docs: DataFrame, terms: list[str], query_doc: int,
     wl = Window.orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
     lex = lex.select("doc_id", F.row_number().over(wl).alias("lex_rank"))
 
-    embs = E.embed_documents(docs, dim=dim)
+    embs = E.embed_documents(docs, dim=16)
     sem = S.cosine_topk(embs, query_id=query_doc, k=n_each, id_col="doc_id")
     ws = Window.orderBy(F.col("cosine_sim").desc(), F.col("doc_id").asc())
     sem = sem.select("doc_id", F.row_number().over(ws).alias("sem_rank"))
 
     contrib = (lambda r: F.coalesce(
-        F.lit(1.0) / (F.lit(k0) + F.col(r)).cast("double"), F.lit(0.0)))
+        F.lit(1.0) / (F.lit(60) + F.col(r)).cast("double"), F.lit(0.0)))
     return (lex.join(sem, "doc_id", "full_outer")
             .select(F.col("doc_id"), "lex_rank", "sem_rank",
                     F.round(contrib("lex_rank") + contrib("sem_rank"), 6)

@@ -67,10 +67,10 @@ def _period(period_days: int) -> "F.Column":
         / period_days).cast("long")
 
 
-def cohort_retention(events: DataFrame, period_days: int = 7) -> DataFrame:
-    """Classic cohort-retention matrix: users grouped by the period of
-    their FIRST event; for each (cohort, offset) cell, how many of them
-    were active ``offset`` periods later.
+def cohort_retention(events: DataFrame) -> DataFrame:
+    """Classic cohort-retention matrix: users grouped by the 7-day period
+    of their FIRST event; for each (cohort, offset) cell, how many of
+    them were active ``offset`` periods later.
 
     Returns (cohort_period, period_offset, n_active, cohort_size,
     retention) ordered by cohort then offset; offset 0 rows have
@@ -82,10 +82,7 @@ def cohort_retention(events: DataFrame, period_days: int = 7) -> DataFrame:
     only corpus-proportional shuffle; first-period and activity both
     group on user (shared exchange), cohort sizes broadcast back.  No
     window over users, no per-user state."""
-    if period_days < 1:
-        raise ValueError(f"period_days must be >= 1; got {period_days}")
-    uw = (events.select(F.col("user_id").alias("u"),
-                        _period(period_days).alias("w"))
+    uw = (events.select(F.col("user_id").alias("u"), _period(7).alias("w"))
           .distinct())
     firsts = uw.groupBy("u").agg(F.min("w").alias("cw"))
     sizes = firsts.groupBy("cw").agg(
@@ -102,25 +99,23 @@ def cohort_retention(events: DataFrame, period_days: int = 7) -> DataFrame:
             .orderBy("cohort_period", "period_offset"))
 
 
-def active_users(events: DataFrame, window_days: int = 7) -> DataFrame:
-    """Per-day DAU and trailing-window WAU: (day, dau, wau).
+def active_users(events: DataFrame) -> DataFrame:
+    """Per-day DAU and trailing-7-day WAU: (day, dau, wau).
 
-    WAU(d) = distinct users active in [d - window + 1, d] — computed by
+    WAU(d) = distinct users active in [d - 6, d] — computed by
     joining the per-(user, day) distinct table to the day grid on a
     range predicate, then counting distinct per day: the windowed
     distinct no engine's rolling window does natively.
 
     Scale: the (user, day) distinct table is the corpus-proportional
-    piece; the grid join fans each row out ``window_days`` times (a
+    piece; the grid join fans each row out 7 times (a
     constant), and the day grid itself is tiny (one row per day)."""
-    if window_days < 1:
-        raise ValueError(f"window_days must be >= 1; got {window_days}")
     ud = (events.select(F.col("user_id").alias("u"), _period(1).alias("d"))
           .distinct())
     days = ud.select(F.col("d").alias("day")).distinct()
     dau = ud.groupBy(F.col("d").alias("day")).agg(
         F.countDistinct("u").alias("dau"))
     wau = (days.join(ud, (F.col("d") <= F.col("day"))
-                     & (F.col("d") > F.col("day") - window_days))
+                     & (F.col("d") > F.col("day") - 7))
            .groupBy("day").agg(F.countDistinct("u").alias("wau")))
     return dau.join(wau, "day").orderBy("day")

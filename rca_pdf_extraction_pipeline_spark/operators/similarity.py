@@ -260,10 +260,10 @@ def kmeans_centroids_sampled(embs: DataFrame, k: int = 4, iters: int = 2,
     sample = hash_sample(embs, sample_rate, seed, id_col="vec_id")
     # loud guard (lane-cap / MAX_TABLES style): with a small corpus or a
     # low rate the seed `LIMIT k` would silently yield < k centroids
-    # while ivf_topk_sampled still validates nprobe against the REQUESTED
-    # n_centroids.  One count over the sample — the fit scans it `iters`
-    # times anyway, so the check is proportionate, and it fails before
-    # any Lloyd work is queued.
+    # while ivf_topk_sampled still validates its 2 probes against the
+    # REQUESTED n_centroids.  One count over the sample — the fit scans
+    # it `iters` times anyway, so the check is proportionate, and it
+    # fails before any Lloyd work is queued.
     n_sample = sample.count()
     if n_sample < k:
         raise ValueError(
@@ -304,22 +304,23 @@ def _ivf_search(embs: DataFrame, cents: DataFrame, query_id: int, k: int,
 
 
 def ivf_topk_sampled(embs: DataFrame, query_id: int, k: int = 10,
-                     n_centroids: int = 4, iters: int = 2, nprobe: int = 2,
-                     sample_rate: float = 0.5, seed: int = 0) -> DataFrame:
+                     n_centroids: int = 4, iters: int = 2,
+                     sample_rate: float = 0.5) -> DataFrame:
     """IVF ANN with the codebook trained on a hash-sample
-    (:func:`kmeans_centroids_sampled`): the full corpus is scanned once
-    for assignment, never per Lloyd round.  Same output contract as
+    (:func:`kmeans_centroids_sampled`, seed 0): the full corpus is
+    scanned once for assignment, never per Lloyd round; the 2 cells
+    nearest the query are probed.  Same output contract as
     :func:`ivf_topk` — (vec_id, cid, cosine_sim), top-``k`` by
     (cosine desc, id), query excluded."""
-    if not 1 <= nprobe <= n_centroids:
-        raise ValueError(f"nprobe must be in [1, {n_centroids}]; got {nprobe}")
-    cents = kmeans_centroids_sampled(embs, n_centroids, iters, sample_rate,
-                                     seed)
-    return _ivf_search(embs, cents, query_id, k, nprobe)
+    if n_centroids < 2:
+        raise ValueError(f"2 cells are probed: n_centroids must be >= 2; "
+                         f"got {n_centroids}")
+    cents = kmeans_centroids_sampled(embs, n_centroids, iters, sample_rate)
+    return _ivf_search(embs, cents, query_id, k, 2)
 
 
 def ivf_topk(embs: DataFrame, query_id: int, k: int = 10,
-             n_centroids: int = 4, iters: int = 2, nprobe: int = 2,
+             n_centroids: int = 4, nprobe: int = 2,
              cents: DataFrame | None = None) -> DataFrame:
     """IVF ANN with a TRAINED coarse quantizer: k-means codebook,
     assign every vector to its nearest centroid, probe the ``nprobe``
@@ -339,11 +340,11 @@ def ivf_topk(embs: DataFrame, query_id: int, k: int = 10,
     if not 1 <= nprobe <= n_centroids:
         raise ValueError(f"nprobe must be in [1, {n_centroids}]; got {nprobe}")
     if cents is None:
-        cents = kmeans_centroids(embs, n_centroids, iters)
+        cents = kmeans_centroids(embs, n_centroids)
     return _ivf_search(embs, cents, query_id, k, nprobe)
 
 
-def assign_centroids(embs: DataFrame, n_centroids: int = 4, iters: int = 2,
+def assign_centroids(embs: DataFrame, n_centroids: int = 4,
                      cents: DataFrame | None = None) -> DataFrame:
     """(id, cid, vec): every vector labeled with its nearest trained
     centroid — the shared front half of IVF search and semantic dedup.
@@ -354,7 +355,7 @@ def assign_centroids(embs: DataFrame, n_centroids: int = 4, iters: int = 2,
     prior index build persisted) to assign against a stored codebook
     with no Lloyd rounds in-plan."""
     if cents is None:
-        cents = kmeans_centroids(embs, n_centroids, iters)
+        cents = kmeans_centroids(embs, n_centroids)
     lat = _lattice(embs)
     return (lat.crossJoin(F.broadcast(cents))
             .select(F.col("vec_id"), F.col("embedding"),
@@ -367,8 +368,7 @@ def assign_centroids(embs: DataFrame, n_centroids: int = 4, iters: int = 2,
                     F.col("embedding")))
 
 
-def cluster_profile(embs: DataFrame, n_centroids: int = 4,
-                    iters: int = 2) -> DataFrame:
+def cluster_profile(embs: DataFrame, n_centroids: int = 4) -> DataFrame:
     """Corpus map: per-centroid population and inertia — (cid, n_vecs,
     inertia, avg_d2) ordered by cid, where ``inertia`` is the EXACT
     integer sum of squared lattice distances to the assigned centroid
@@ -381,7 +381,7 @@ def cluster_profile(embs: DataFrame, n_centroids: int = 4,
     k-row shuffle.  Integer inertia makes the whole row set
     addition-order-free — any engine, any partitioning, same bytes.
     """
-    cents = kmeans_centroids(embs, n_centroids, iters)
+    cents = kmeans_centroids(embs, n_centroids)
     lat = _lattice(embs)
     assigned = (lat.crossJoin(F.broadcast(cents))
                 .select(F.col("vec_id"),
@@ -400,7 +400,7 @@ def cluster_profile(embs: DataFrame, n_centroids: int = 4,
             .orderBy("cid"))
 
 
-def semantic_near_pairs(embs: DataFrame, n_centroids: int = 4, iters: int = 2,
+def semantic_near_pairs(embs: DataFrame, n_centroids: int = 4,
                         threshold: float = 0.5) -> DataFrame:
     """Semantic near-duplicate pairs, SemDeDup-style (Abbas et al. 2023,
     arXiv:2303.09540): cluster the embedding space with the trained
@@ -417,7 +417,7 @@ def semantic_near_pairs(embs: DataFrame, n_centroids: int = 4, iters: int = 2,
     cluster scale write the corpus partitioned by cid and the
     self-join needs no exchange at all.
     """
-    assigned = assign_centroids(embs, n_centroids, iters)
+    assigned = assign_centroids(embs, n_centroids)
     a = assigned.select(F.col("cid"), F.col("vec_id").alias("id_a"),
                         V.as_double(F.col("embedding")).alias("va"))
     b = assigned.select(F.col("cid"), F.col("vec_id").alias("id_b"),
@@ -429,7 +429,7 @@ def semantic_near_pairs(embs: DataFrame, n_centroids: int = 4, iters: int = 2,
             .filter(F.col("cosine_sim") >= threshold))
 
 
-def semantic_dedup(embs: DataFrame, n_centroids: int = 4, iters: int = 2,
+def semantic_dedup(embs: DataFrame, n_centroids: int = 4,
                    threshold: float = 0.5) -> DataFrame:
     """Semantic dedup: drop every vector that has a LOWER-id semantic
     near-duplicate in its cluster (greedy keep-first, the same keep-min
@@ -438,9 +438,9 @@ def semantic_dedup(embs: DataFrame, n_centroids: int = 4, iters: int = 2,
 
     The anti-join is on the id alone, so the kept set is deterministic
     under any partitioning of the pair table."""
-    pairs = semantic_near_pairs(embs, n_centroids, iters, threshold)
+    pairs = semantic_near_pairs(embs, n_centroids, threshold)
     losers = pairs.select(F.col("id_b").alias("vec_id")).distinct()
-    assigned = assign_centroids(embs, n_centroids, iters)
+    assigned = assign_centroids(embs, n_centroids)
     return (assigned.join(losers, "vec_id", "left_anti")
             .select(F.col("vec_id"), F.col("cid")))
 
@@ -532,7 +532,7 @@ def pq_codes(embs: DataFrame, m: int = 4, k: int = 4, iters: int = 2,
 
 
 def pq_topk(embs: DataFrame, query_id: int, k_neighbors: int = 10,
-            m: int = 4, k: int = 4, iters: int = 2, dim: int = 64,
+            m: int = 4, k: int = 4, dim: int = 64,
             books: DataFrame | None = None,
             codes: DataFrame | None = None) -> DataFrame:
     """Asymmetric-distance (ADC) PQ search (Jégou et al., TPAMI'11 §III):
@@ -563,8 +563,8 @@ def pq_topk(embs: DataFrame, query_id: int, k_neighbors: int = 10,
             "than the LUT silently corrupt every distance")
     sub_dim = dim // m
     if books is None:
-        books = pq_codebooks(embs, m, k, iters, dim)
-        codes = pq_codes(embs, m, k, iters, dim, books=books)
+        books = pq_codebooks(embs, m, k, dim=dim)
+        codes = pq_codes(embs, m, k, dim=dim, books=books)
     q_subs = (_sub_lattice_rows(embs, m, sub_dim)
               .filter(F.col("vec_id") == query_id)
               .select(F.col("sub").alias("q_sub"),
@@ -584,17 +584,16 @@ def pq_topk(embs: DataFrame, query_id: int, k_neighbors: int = 10,
 
 
 def ivfadc_topk(embs: DataFrame, query_id: int, k_neighbors: int = 10,
-                n_centroids: int = 4, iters: int = 2, nprobe: int = 2,
-                m: int = 4, k: int = 4, dim: int = 64,
+                n_centroids: int = 4, m: int = 4, k: int = 4, dim: int = 64,
                 cents: DataFrame | None = None,
                 books: DataFrame | None = None,
                 codes: DataFrame | None = None) -> DataFrame:
     """IVFADC search (Jégou et al., TPAMI'11 §IV — the non-exhaustive
     composition of the coarse IVF quantizer and PQ/ADC ranking): probe
-    the ``nprobe`` coarse cells nearest the query, then ADC-rank the PQ
+    the 2 coarse cells nearest the query, then ADC-rank the PQ
     codes of the vectors INSIDE the probed cells only — never the whole
     code table.  This is the actual shape of a 10^12-vector serving
-    index: the coarse probe prunes the scan to ~nprobe/n_centroids of
+    index: the coarse probe prunes the scan to ~2/n_centroids of
     the corpus, and inside the probed slice the per-vector work is an
     m-row LUT sum over small ints, the raw vectors untouched.
 
@@ -615,8 +614,9 @@ def ivfadc_topk(embs: DataFrame, query_id: int, k_neighbors: int = 10,
     """
     if dim % m:
         raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
-    if not 1 <= nprobe <= n_centroids:
-        raise ValueError(f"nprobe must be in [1, {n_centroids}]; got {nprobe}")
+    if n_centroids < 2:
+        raise ValueError(f"2 cells are probed: n_centroids must be >= 2; "
+                         f"got {n_centroids}")
     stored = (cents is not None, books is not None, codes is not None)
     if any(stored) and not all(stored):
         raise ValueError(
@@ -625,9 +625,9 @@ def ivfadc_topk(embs: DataFrame, query_id: int, k_neighbors: int = 10,
             "pair codes with a codebook they were not encoded against")
     sub_dim = dim // m
     if cents is None:
-        cents = kmeans_centroids(embs, n_centroids, iters)
-        books = pq_codebooks(embs, m, k, iters, dim)
-        codes = pq_codes(embs, m, k, iters, dim, books=books) \
+        cents = kmeans_centroids(embs, n_centroids)
+        books = pq_codebooks(embs, m, k, dim=dim)
+        codes = pq_codes(embs, m, k, dim=dim, books=books) \
             .join(assign_centroids(embs, cents=cents)
                   .select(F.col("vec_id"), F.col("cid")), "vec_id")
     lat = _lattice(embs)
@@ -635,9 +635,9 @@ def ivfadc_topk(embs: DataFrame, query_id: int, k_neighbors: int = 10,
               .crossJoin(F.broadcast(cents))
               .select(F.col("cid"),
                       _l2sq(F.col("qv"), F.col("cv")).alias("d2"))
-              .orderBy("d2", "cid").limit(nprobe).select("cid"))
+              .orderBy("d2", "cid").limit(2).select("cid"))
     # the probed-cid join comes FIRST: the big code table is pruned to
-    # the nprobe cells before any ADC work (file-level when the stored
+    # the probed cells before any ADC work (file-level when the stored
     # codes are partitioned by cid; a broadcast hash semi-join otherwise)
     pruned = codes.join(F.broadcast(probes), "cid")
     q_subs = (_sub_lattice_rows(embs, m, sub_dim)
@@ -658,9 +658,9 @@ def ivfadc_topk(embs: DataFrame, query_id: int, k_neighbors: int = 10,
             .limit(k_neighbors))
 
 
-def bucketed_topk(embs: DataFrame, query_id: int, k: int = 10,
+def bucketed_topk(embs: DataFrame, query_id: int,
                   n_bits: int = 8) -> DataFrame:
-    """Approximate top-k: exact cosine ranking restricted to the
+    """Approximate top-10: exact cosine ranking restricted to the
     query's sign-LSH bucket (IVF nprobe=1). Recall trades off with
     n_bits; the scan prunes to ~1/2^bits of the corpus when the table
     is partitioned by bucket."""
@@ -678,13 +678,13 @@ def bucketed_topk(embs: DataFrame, query_id: int, k: int = 10,
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(F.col("vec_id"), sim.alias("cosine_sim"))
         .orderBy(F.col("cosine_sim").desc(), F.col("vec_id").asc())
-        .limit(k)
+        .limit(10)
     )
 
 
-def jl_sign_matrix(spark, in_dim: int, out_dim: int, seed: int = 0):
+def jl_sign_matrix(spark, in_dim: int, out_dim: int):
     """Deterministic Johnson-Lindenstrauss sign matrix as a (i, j, s)
-    DataFrame: s = ±1 from the parity of hash32(md5('jl<seed>:i:j')) —
+    DataFrame: s = ±1 from the parity of hash32(md5('jl0:i:j')) —
     content-addressed, so every run, cluster, and engine materializes
     the identical matrix without storing it.  in_dim x out_dim rows:
     broadcast-sized for any practical projection."""
@@ -692,7 +692,7 @@ def jl_sign_matrix(spark, in_dim: int, out_dim: int, seed: int = 0):
 
     ij = (spark.range(in_dim).select(F.col("id").alias("i"))
           .crossJoin(spark.range(out_dim).select(F.col("id").alias("j"))))
-    h = H.hash32(F.concat(F.lit(f"jl{seed}:"),
+    h = H.hash32(F.concat(F.lit("jl0:"),
                           F.col("i").cast("string"), F.lit(":"),
                           F.col("j").cast("string")))
     return ij.withColumn(
@@ -700,12 +700,12 @@ def jl_sign_matrix(spark, in_dim: int, out_dim: int, seed: int = 0):
         .cast("long"))
 
 
-def project_embeddings(embs: DataFrame, out_dim: int = 16, seed: int = 0,
-                       dim: int = 64) -> DataFrame:
-    """JL sign projection on the integer lattice: y_j = Σ_i x_i·s(i,j)
-    with x the KMEANS_SCALE-rounded lattice values — exact bigint sums,
-    so projected vectors are bit-identical across engines.  Returns
-    (id, j, y) in relational form (out_dim rows per vector).
+def project_embeddings(embs: DataFrame) -> DataFrame:
+    """JL sign projection of the 64-dim embeddings onto 16 dims, on the
+    integer lattice: y_j = Σ_i x_i·s(i,j) with x the KMEANS_SCALE-rounded
+    lattice values — exact bigint sums, so projected vectors are
+    bit-identical across engines.  Returns (id, j, y) in relational form
+    (16 rows per vector).
 
     Why: random sign projections preserve cosine geometry in
     expectation (Achlioptas 2003's database-friendly JL variant) — the
@@ -715,24 +715,22 @@ def project_embeddings(embs: DataFrame, out_dim: int = 16, seed: int = 0,
 
     Scale: one explode of the lattice values joined to the broadcast
     sign matrix, one (id, j) partial-agg sum — a single keyed shuffle
-    whose width is out_dim longs per vector."""
-    if out_dim < 1:
-        raise ValueError(f"out_dim must be >= 1; got {out_dim}")
+    whose width is 16 longs per vector."""
     lat = _lattice(embs)
-    signs = jl_sign_matrix(embs.sparkSession, dim, out_dim, seed)
+    signs = jl_sign_matrix(embs.sparkSession, 64, 16)
     expl = lat.select(F.col("vec_id"), F.posexplode("qv").alias("i", "v"))
     return (expl.join(F.broadcast(signs), "i")
             .groupBy("vec_id", "j")
             .agg(F.sum(F.col("v") * F.col("s")).alias("y")))
 
 
-def jl_topk(embs: DataFrame, query_id: int, k: int, out_dim: int = 16,
-            seed: int = 0, dim: int = 64) -> DataFrame:
-    """Cosine top-k in the PROJECTED space: exact integer dots/norms
+def jl_topk(embs: DataFrame, query_id: int, k: int) -> DataFrame:
+    """Cosine top-k in the PROJECTED space (:func:`project_embeddings`):
+    exact integer dots/norms
     over the projected vectors, one double division + sqrt at the very
     end (correctly-rounded IEEE ops — engine-identical), ties by id.
     Returns (vec_id, proj_cosine)."""
-    proj = project_embeddings(embs, out_dim, seed, dim)
+    proj = project_embeddings(embs)
     q = proj.filter(F.col("vec_id") == query_id) \
         .select(F.col("j"), F.col("y").alias("qy"))
     joined = (proj.filter(F.col("vec_id") != query_id)
@@ -749,8 +747,7 @@ def jl_topk(embs: DataFrame, query_id: int, k: int, out_dim: int = 16,
 
 
 def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
-             n_centroids: int = 4, iters: int = 2, nprobe: int = 2,
-             cents: DataFrame | None = None) -> DataFrame:
+             n_centroids: int = 4, nprobe: int = 2) -> DataFrame:
     """Batch k-NN JOIN: for EVERY query vector, its top-``k`` cosine
     neighbors in the corpus — the many-queries shape of retrieval-
     augmented dataset construction and SemDeDup assignment, where
@@ -780,8 +777,7 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
         raise ValueError(f"nprobe must be in [1, {n_centroids}]; got {nprobe}")
     from pyspark.sql import Window
 
-    if cents is None:
-        cents = kmeans_centroids(corpus, n_centroids, iters)
+    cents = kmeans_centroids(corpus, n_centroids)
     assigned = assign_centroids(corpus, cents=cents)
     qlat = _lattice(queries)
     qdist = (qlat.crossJoin(F.broadcast(cents))
@@ -937,7 +933,7 @@ def sq8_topk(embs: DataFrame, query_id: int, k: int = 10,
 
 
 def ivfsq_topk(embs: DataFrame, query_id: int, k: int = 10,
-               n_centroids: int = 4, iters: int = 2, nprobe: int = 2,
+               n_centroids: int = 4, nprobe: int = 2,
                cents: DataFrame | None = None,
                bounds: DataFrame | None = None,
                codes: DataFrame | None = None) -> DataFrame:
@@ -978,7 +974,7 @@ def ivfsq_topk(embs: DataFrame, query_id: int, k: int = 10,
             "index) or none — mixing stored and in-plan artifacts can "
             "pair codes with bounds/cells they were not encoded under")
     if cents is None:
-        cents = kmeans_centroids(embs, n_centroids, iters)
+        cents = kmeans_centroids(embs, n_centroids)
         brow = _sq8_bounds_row(sq8_bounds(embs))
         coded = (_lattice(embs)
                  .crossJoin(F.broadcast(brow))

@@ -103,7 +103,7 @@ def hll_estimate(registers: DataFrame,
     return agg.select(*group_cols, F.round(est, 3).alias("est_distinct"))
 
 
-def distinct_tokens_by_group(docs: DataFrame, p: int = DEFAULT_P) -> DataFrame:
+def distinct_tokens_by_group(docs: DataFrame) -> DataFrame:
     """Per-group distinct-token cardinality: HLL estimate next to the
     exact count (cheap at test scale; at 100 TB you drop the exact
     column and keep the sketch).  Returns (group, est_distinct,
@@ -113,8 +113,8 @@ def distinct_tokens_by_group(docs: DataFrame, p: int = DEFAULT_P) -> DataFrame:
 
     toks = (docs.select(F.col("lang").alias("grp"),
                         F.explode(T.tokens(F.col("text"))).alias("tok")))
-    regs = hll_registers(toks, "tok", ("grp",), p)
-    est = hll_estimate(regs, ("grp",), p)
+    regs = hll_registers(toks, "tok", ("grp",))
+    est = hll_estimate(regs, ("grp",))
     exact = toks.groupBy("grp").agg(
         F.countDistinct("tok").alias("exact_distinct"))
     return (est.join(exact, "grp")
@@ -290,7 +290,7 @@ def bloom_contains(words: DataFrame, probes: DataFrame, value_col: str,
             .orderBy("probe"))
 
 
-def vocab_overlap_by_group(docs: DataFrame, p: int = DEFAULT_P) -> DataFrame:
+def vocab_overlap_by_group(docs: DataFrame) -> DataFrame:
     """Pairwise vocabulary overlap between groups WITHOUT a token join —
     HLL inclusion-exclusion: |A ∩ B| ≈ |A| + |B| - |A ∪ B|, where the
     union estimate comes from bucket-wise max-merging the two groups'
@@ -314,8 +314,8 @@ def vocab_overlap_by_group(docs: DataFrame, p: int = DEFAULT_P) -> DataFrame:
                         F.explode(T.tokens(F.col("text"))).alias("tok")))
     # multi-consumer layer (single estimates + pair merges): persist so
     # the corpus token pass runs once (CLAUDE.md cross-branch rule)
-    regs = hll_registers(toks, "tok", ("grp",), p).persist()
-    singles = hll_estimate(regs, ("grp",), p)
+    regs = hll_registers(toks, "tok", ("grp",)).persist()
+    singles = hll_estimate(regs, ("grp",))
     groups = singles.select(F.col("grp"), F.col("est_distinct"))
     pairs = (groups.select(F.col("grp").alias("ga"),
                            F.col("est_distinct").alias("est_a"))
@@ -327,7 +327,7 @@ def vocab_overlap_by_group(docs: DataFrame, p: int = DEFAULT_P) -> DataFrame:
                     | (F.col("grp") == F.col("gb")))
               .groupBy("ga", "gb", "bucket")
               .agg(F.max("max_rank").alias("max_rank")))
-    eu = hll_estimate(merged, ("ga", "gb"), p) \
+    eu = hll_estimate(merged, ("ga", "gb")) \
         .withColumnRenamed("est_distinct", "est_union")
     out = (pairs.join(eu, ["ga", "gb"])
            .withColumn("est_overlap",

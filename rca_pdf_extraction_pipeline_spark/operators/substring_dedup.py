@@ -118,9 +118,7 @@ def duplicated_ranges(docs: DataFrame, k: int = DEFAULT_K,
     return ranges.orderBy("doc_id", "start_tok")
 
 
-def trim_duplicated_ranges(docs: DataFrame, k: int = DEFAULT_K,
-                           min_tokens: int | None = None,
-                           max_docs_per_gram: int | None = None) -> DataFrame:
+def trim_duplicated_ranges(docs: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     """The removal step over :func:`duplicated_ranges` (Lee et al.'s
     ExactSubstr dedup applies exactly this cut): rewrite every document
     with its maximal duplicated token ranges REMOVED and the surviving
@@ -140,7 +138,7 @@ def trim_duplicated_ranges(docs: DataFrame, k: int = DEFAULT_K,
     pass; the gram stage inside :func:`duplicated_ranges` stays the
     only corpus-wide shuffle.
     """
-    ranges = duplicated_ranges(docs, k, min_tokens, max_docs_per_gram)
+    ranges = duplicated_ranges(docs, k)
     per_doc = ranges.groupBy("doc_id").agg(
         F.collect_list(F.struct("start_tok", "end_tok")).alias("_rs"))
     toks = docs.select("doc_id", T.tokens(F.col("text")).alias("_tk"))

@@ -41,8 +41,7 @@ TABLES_SCHEMA = ("doc_id string, table_id int, headers array<string>, "
 
 def extract_table_cells(docs: DataFrame,
                         page_numbers: list[int] | None = None,
-                        text_fallback: bool = True,
-                        snap_tol: float = ktg.SNAP_TOL) -> DataFrame:
+                        text_fallback: bool = True) -> DataFrame:
     """docs(doc_id, spans) -> one row per inferred table cell.
 
     Output: (doc_id, page, table_index, row_idx, col_idx, cell, is_header,
@@ -56,7 +55,7 @@ def extract_table_cells(docs: DataFrame,
     def cells(flat: pd.DataFrame) -> pd.DataFrame:
         if pages is not None:
             flat = flat[flat["page"].isin(pages)]
-        out = ktg.infer_grid_tables(flat, snap_tol=snap_tol)
+        out = ktg.infer_grid_tables(flat)
         if not text_fallback and len(out):
             out = out[out["confidence"] >= 1.0]
         return out.assign(cell=out["cell"].astype(str),
@@ -65,10 +64,10 @@ def extract_table_cells(docs: DataFrame,
     return map_flat_batches(docs, CELLS_SCHEMA, cells)
 
 
-def extract_tables_nested(docs: DataFrame, **kw) -> DataFrame:
+def extract_tables_nested(docs: DataFrame) -> DataFrame:
     """Cell rows regrouped to the P3 consolidation input shape
     (doc_id, table_id, headers:array<string>, rows:array<array<string>>)."""
-    return tables_nested_from_cells(extract_table_cells(docs, **kw))
+    return tables_nested_from_cells(extract_table_cells(docs))
 
 
 def tables_nested_from_cells(cells: DataFrame) -> DataFrame:

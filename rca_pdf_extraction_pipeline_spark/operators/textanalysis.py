@@ -74,13 +74,13 @@ def quality_scores(docs: DataFrame) -> DataFrame:
     )
 
 
-def language_id(docs: DataFrame, threshold: float = 0.03) -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """(id, stopword_ratio, pred_lang) — stopword-ratio language ID."""
     c = F.col("text")
     return docs.select(
         F.col("doc_id"),
         F.round(T.stopword_ratio(c), 6).alias("stopword_ratio"),
-        T.predict_lang(c, threshold).alias("pred_lang"),
+        T.predict_lang(c).alias("pred_lang"),
     )
 
 
@@ -266,12 +266,12 @@ def unigram_logprob_stored(docs: DataFrame, freqs: DataFrame) -> DataFrame:
                     .cast("long").alias("mean_logprob_micro")))
 
 
-def bigram_logprob(docs: DataFrame, lam: float = 0.5,
+def bigram_logprob(docs: DataFrame,
                    checkpoint_dir: str | None = None) -> DataFrame:
     """Per-document mean INTERPOLATED bigram log-probability under the
     corpus's own n-gram statistics — one step up from
     ``unigram_logprob`` toward model-based perplexity filtering:
-    position i scores ln(lam*P(w_i | w_{i-1}) + (1-lam)*P(w_i)), so
+    position i scores ln(0.5*P(w_i | w_{i-1}) + 0.5*P(w_i)), so
     documents with corpus-typical word ORDER (not just typical word
     choice) score higher.  Word-salad shuffles of typical words, which
     the unigram scorer cannot see, drop here.
@@ -317,7 +317,7 @@ def bigram_logprob(docs: DataFrame, lam: float = 0.5,
     total = uni.agg(F.sum("cnt").alias("total"))
     big = pos.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("cb"))
 
-    # p = lam * cb/cp + (1-lam) * cu/total, evaluated in this exact
+    # p = 0.5 * cb/cp + 0.5 * cu/total, evaluated in this exact
     # operation order in BOTH engines (each step is one IEEE rounding)
     scored = (big
               .join(uni.select(F.col("tok").alias("prev"),
@@ -327,8 +327,8 @@ def bigram_logprob(docs: DataFrame, lam: float = 0.5,
               .crossJoin(F.broadcast(total))
               .select("prev", "cur",
                       F.round(F.log(
-                          F.lit(lam) * (F.col("cb") / F.col("cp"))
-                          + F.lit(1.0 - lam) * (F.col("cu") / F.col("total")))
+                          F.lit(0.5) * (F.col("cb") / F.col("cp"))
+                          + F.lit(0.5) * (F.col("cu") / F.col("total")))
                           * F.lit(1_000_000.0), 0).cast("long").alias("lp")))
 
     per_doc = (pos.join(scored, ["prev", "cur"])
@@ -372,8 +372,8 @@ WINNOW_HASH_MULT = 8191
 WINNOW_HASH_MASK = 0xFFFFFFFF
 
 
-def winnow_hash_frame(docs: DataFrame, k: int = 3) -> DataFrame:
-    """``(doc_id, _h: array<long>)`` — word-k-gram hashes for
+def winnow_hash_frame(docs: DataFrame) -> DataFrame:
+    """``(doc_id, _h: array<long>)`` — word-k-gram hashes (k = 3) for
     winnowing: ONE md5 per token (``hash32``) projected into a column
     layer, then per-gram integer combination by the recurrence above
     over shifted slices of that layer (attribute references are free;
@@ -395,6 +395,7 @@ def winnow_hash_frame(docs: DataFrame, k: int = 3) -> DataFrame:
                     lambda t: H.hash32(t)).alias("_th"))
     th = F.col("_th")
     n = F.size(th)
+    k = 3
 
     def mix(a: Column, b: Column) -> Column:
         return (a * F.lit(WINNOW_HASH_MULT) + b) \
@@ -479,16 +480,15 @@ def winnow_selection_frame(layer: DataFrame, w: int) -> DataFrame:
     return cur.withColumn("_sel", sel)
 
 
-def winnow_fingerprints(docs: DataFrame, k: int = 3,
-                        w: int = 4) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame, w: int = 4) -> DataFrame:
     """Winnowing fingerprint selection (Schleimer, Wilkerson & Aiken,
     SIGMOD '03 §3 — the MOSS local-fingerprinting scheme): over the
-    sequence of word-``k``-gram hashes, every window of ``w``
+    sequence of word-3-gram hashes, every window of ``w``
     consecutive hashes contributes its minimum — ties broken toward the
     RIGHTMOST occurrence, the paper's rightmost-tie rule (standard
     winnowing, not the robust variant) — and the selected
     ``(position, hash)`` pairs are deduplicated.  Guarantees any shared
-    run of ``w + k - 1`` words between two documents yields at least
+    run of ``w + 2`` words between two documents yields at least
     one shared fingerprint, at expected density ``2 / (w + 1)`` — the
     position-aware middle ground between the whole-document rolling
     hash (:func:`fingerprints`) and per-shingle MinHash (which forgets
@@ -497,7 +497,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = 3,
     primitive for a training corpus.
 
     Output: ``(doc_id, pos, gram_hash)`` — ``pos`` is the 1-based index
-    of the selected k-gram.  Scale: fully narrow.  ONE md5 per TOKEN
+    of the selected 3-gram.  Scale: fully narrow.  ONE md5 per TOKEN
     projected into a column layer, gram hashes by integer combination
     (:func:`winnow_hash_frame` — shingle STRING construction measured
     3x the whole selection cascade); the sliding-window minimum is the
@@ -508,8 +508,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = 3,
     """
     if w < 1:
         raise ValueError(f"w must be >= 1; got {w}")
-    frame = winnow_selection_frame(
-        winnow_hash_frame(docs, k), w)
+    frame = winnow_selection_frame(winnow_hash_frame(docs), w)
     # explode_outer + IS NOT NULL: the nullable computed array would
     # otherwise get an inferred pre-Generate Filter whose pushdown
     # re-evaluates the synthesis (CLAUDE.md interleaved-explode trap)

@@ -237,20 +237,17 @@ def url_duplicates(docs: DataFrame, max_ids: int = 1024) -> DataFrame:
             .select("url_norm", "n_docs", "keep_id", "dup_ids"))
 
 
-def cap_per_domain(docs: DataFrame, max_docs: int,
-                   suffixes: DataFrame | None = None) -> DataFrame:
+def cap_per_domain(docs: DataFrame, max_docs: int) -> DataFrame:
     """Per-domain corpus cap: keep at most ``max_docs`` docs per apex
     domain, lowest ids first (deterministic).  Adds (apex_domain,
     domain_rank) to the surviving rows.  One exchange on the domain
     key; the window never materializes more than a partition's rows and
-    survivors are bounded at ``max_docs`` per key by construction.
-    ``suffixes`` switches the apex derivation to a PSL snapshot
-    (:func:`with_apex_domain`)."""
+    survivors are bounded at ``max_docs`` per key by construction."""
     if max_docs < 1:
         raise ValueError(f"max_docs must be >= 1; got {max_docs}")
     from pyspark.sql import Window
 
-    t = with_apex_domain(docs, suffixes)
+    t = with_apex_domain(docs)
     w = Window.partitionBy("apex_domain").orderBy(F.col("doc_id"))
     return (t.withColumn("domain_rank", F.row_number().over(w))
             .where(F.col("domain_rank") <= max_docs))

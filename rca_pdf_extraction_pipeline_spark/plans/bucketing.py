@@ -28,27 +28,24 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def write_bucketed(df: DataFrame, table: str, bucket_col: str,
-                   n_buckets: int, sort: bool = True,
-                   mode: str = "overwrite") -> None:
-    """Persist ``df`` as a bucketed (optionally bucket-sorted) catalog
-    table.  One file per bucket (repartition on the key first), so
-    sorted buckets stream straight into a merge join with no Sort."""
+                   n_buckets: int) -> None:
+    """Persist ``df`` as a bucketed, bucket-sorted catalog table,
+    overwriting it.  One file per bucket (repartition on the key first),
+    so sorted buckets stream straight into a merge join with no Sort."""
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    w = (df.repartition(n_buckets, bucket_col)
-         .write.mode(mode).format("parquet")
-         .bucketBy(n_buckets, bucket_col))
-    if sort:
-        w = w.sortBy(bucket_col)
-    w.saveAsTable(table)
+    (df.repartition(n_buckets, bucket_col)
+     .write.mode("overwrite").format("parquet")
+     .bucketBy(n_buckets, bucket_col).sortBy(bucket_col)
+     .saveAsTable(table))
 
 
 def bucketed_join(spark: SparkSession, left_table: str, right_table: str,
-                  on: str, how: str = "inner") -> DataFrame:
-    """Join two same-bucketed catalog tables on their bucket key.
+                  on: str) -> DataFrame:
+    """Inner-join two same-bucketed catalog tables on their bucket key.
 
     With both sides bucketed identically this plans as a sort-merge
     join with no Exchange on either side (and no Sort when buckets are
     sorted single-file) — the shuffle was prepaid at write time.
     """
-    return spark.table(left_table).join(spark.table(right_table), on, how)
+    return spark.table(left_table).join(spark.table(right_table), on)

@@ -323,20 +323,17 @@ def read_extracted(spark: SparkSession, table_dir: str | Path) -> DataFrame:
 
 
 def compact_buckets(spark: SparkSession, table_dir: str | Path,
-                    buckets: list[int] | None = None,
-                    target_files: int = 1,
                     delete_orphans: bool = True) -> dict:
     """Small-file compaction of committed buckets — the table-maintenance
     half of the snapshot protocol (Iceberg ``rewrite_data_files``).
 
-    For each committed bucket with more than ``target_files`` data
-    files: rewrite its committed rows into ``target_files`` new files IN
-    THE SAME partition dir (fresh UUID names — no collision), then
-    commit ONE snapshot whose file list REPLACES the bucket's files.
-    Readers switch atomically at the manifest swap; the superseded
-    files are deleted afterwards (``delete_orphans``) and a crash
-    between commit and delete leaves only invisible orphans, never
-    missing or duplicated data.
+    For each committed bucket with more than one data file: rewrite its
+    committed rows into one new file IN THE SAME partition dir (fresh
+    UUID names — no collision), then commit ONE snapshot whose file list
+    REPLACES the bucket's files.  Readers switch atomically at the
+    manifest swap; the superseded files are deleted afterwards
+    (``delete_orphans``) and a crash between commit and delete leaves
+    only invisible orphans, never missing or duplicated data.
 
     Returns {"buckets_compacted", "files_before", "files_after"}.
     """
@@ -345,12 +342,8 @@ def compact_buckets(spark: SparkSession, table_dir: str | Path,
     base = table_dir / "data"
     committed = manifest.committed_files()
 
-    chosen: dict[int, list[str]] = {}
-    for b, names in sorted(committed.items()):
-        if buckets is not None and b not in buckets:
-            continue
-        if len(names) > target_files:
-            chosen[b] = names
+    chosen = {b: names for b, names in sorted(committed.items())
+              if len(names) > 1}
     if not chosen:
         return {"buckets_compacted": 0, "files_before": 0, "files_after": 0}
 
@@ -364,7 +357,7 @@ def compact_buckets(spark: SparkSession, table_dir: str | Path,
         before = set(_bucket_files(table_dir, b))
         # write the compacted files into the live partition dir under
         # fresh part-UUID names; they stay invisible until the commit
-        df.coalesce(target_files).write.mode("append").parquet(str(bdir))
+        df.coalesce(1).write.mode("append").parquet(str(bdir))
         new_files[b] = sorted(set(_bucket_files(table_dir, b)) - before)
         rows[b] = len(old_names)
 
@@ -372,7 +365,7 @@ def compact_buckets(spark: SparkSession, table_dir: str | Path,
         completed_buckets=sorted(chosen),
         metrics={"operation_files_before": sum(rows.values()),
                  "operation_files_after": sum(len(v) for v in new_files.values())},
-        lineage={"operation": "compact", "target_files": target_files},
+        lineage={"operation": "compact", "target_files": 1},
         files=new_files,
     )
     if delete_orphans:

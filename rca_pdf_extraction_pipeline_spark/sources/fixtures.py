@@ -159,7 +159,7 @@ def build_simple_page_spans(page: int, page_type: str, offset0: int) -> list[dic
     return [_span("text", _pageonly(page, f"Page {page}"), None, off)]
 
 
-def build_golden_doc(doc_id: str = "golden-doc-w20552") -> dict:
+def build_golden_doc() -> dict:
     """The full 253-page synthetic twin of W20552.pdf."""
     cls = load_golden_classification()
     rows = load_golden_rows()
@@ -171,10 +171,10 @@ def build_golden_doc(doc_id: str = "golden-doc-w20552") -> dict:
             spans.extend(build_table_page_spans(page, prows, len(spans)))
         else:
             spans.extend(build_simple_page_spans(page, ptype, len(spans)))
-    return {"doc_id": doc_id, "spans": spans}
+    return {"doc_id": "golden-doc-w20552", "spans": spans}
 
 
-def expected_golden_output(doc_id: str = "golden-doc-w20552") -> dict:
+def expected_golden_output() -> dict:
     """golden_spans for the golden doc: 12 header fields + 138x12 cell
     fields in row-major order + per-page media passthrough."""
     rows = load_golden_rows().sort_values("row_idx")
@@ -188,7 +188,7 @@ def expected_golden_output(doc_id: str = "golden-doc-w20552") -> dict:
             for c in cols:
                 spans.append(_span("field", r[c], None, len(spans)))
         spans.append(_span("image", "", f"page{int(page):04d}_img0000.png", len(spans)))
-    return {"doc_id": doc_id, "spans": spans}
+    return {"doc_id": "golden-doc-w20552", "spans": spans}
 
 
 def build_parser_branch_docs() -> list[dict]:
@@ -220,7 +220,7 @@ def build_parser_branch_docs() -> list[dict]:
     return docs
 
 
-def build_media_nosample_doc(doc_id: str = "media-nosample") -> dict:
+def build_media_nosample_doc() -> dict:
     """Table-classified page carrying an image but NO decodable data block.
 
     Regression fixture for batch-independent media emission: images pass
@@ -229,7 +229,7 @@ def build_media_nosample_doc(doc_id: str = "media-nosample") -> dict:
     because ANOTHER doc in the same Arrow batch yielded samples."""
     junk = "\n".join(["7", "7-1", "9,700.00"] + ["line"] * 22)
     return {
-        "doc_id": doc_id,
+        "doc_id": "media-nosample",
         "spans": [
             _span("text", _geom(39, 40, 100, 400, 112, TABLE_PAGE_TITLE), None, 0),
             _span("text", _geom(39, 40, 250, 570, 700, junk), None, 1),
@@ -258,7 +258,7 @@ def expected_branch_output(doc_id: str) -> dict:
     return {"doc_id": doc_id, "spans": spans}
 
 
-def build_grid_doc(doc_id: str = "grid-doc") -> dict:
+def build_grid_doc() -> dict:
     """S9 fixture: three pages exercising every table-grid branch
     (reference table_extractor.py:59-120).
 
@@ -335,7 +335,7 @@ def build_grid_doc(doc_id: str = "grid-doc") -> dict:
     for (r, c), content in sorted(bot.items()):
         cx, cy = (60 + 100 * c + 60 + 100 * (c + 1)) / 2, (600 + 15 * r + 600 + 15 * (r + 1)) / 2
         text(4, cx - 10, cy - 3, cx + 10, cy + 3, content)
-    return {"doc_id": doc_id, "spans": spans}
+    return {"doc_id": "grid-doc", "spans": spans}
 
 
 def expected_grid_cells() -> list[tuple]:

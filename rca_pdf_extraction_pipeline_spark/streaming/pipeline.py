@@ -4,16 +4,11 @@ docs stream.
 The reference pipeline is stateless per document (SURVEY.md §2.13 —
 no watermarks or cross-doc state), so streaming support is exact reuse:
 ``extract_documents`` is a narrow mapInArrow stage, legal on a
-streaming DataFrame as-is. Two entry points:
-
-  * ``stream_extract(stream_df)``     — transformation-only: returns the
-    streaming extracted frame for the caller to sink (tests use a
-    memory sink; production uses parquet/Iceberg-style sinks).
-  * ``run_file_stream(spark, in_dir, out_dir, checkpoint_dir)`` — the
-    deployable file-watch job: new parquet files of docs(doc_id, spans)
-    appearing under ``in_dir`` are extracted exactly-once using Spark's
-    own streaming checkpoint (complementary to plans/checkpoint.py,
-    which handles *batch* resume).
+streaming DataFrame as-is. ``run_file_stream(spark, in_dir, out_dir,
+checkpoint_dir)`` is the deployable file-watch job: new parquet files of
+docs(doc_id, spans) appearing under ``in_dir`` are extracted exactly-once
+using Spark's own streaming checkpoint (complementary to
+plans/checkpoint.py, which handles *batch* resume).
 
 Scale notes: each micro-batch inherits the batch pipeline's properties
 (narrow, Arrow-batched, skew handled by the source partitioning);
@@ -26,15 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..config import DEFAULT_CONFIG, ExtractionConfig
-from ..operators.extraction import OUTPUT_SCHEMA, extract_documents
+from ..operators.extraction import extract_documents
 from ..sources.fixtures import SPAN_SCHEMA_DDL
-
-
-def stream_extract(stream_df: DataFrame,
-                   cfg: ExtractionConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Streaming docs(doc_id, spans) -> streaming extracted(doc_id, spans)."""
-    return extract_documents(stream_df, cfg)
 
 
 def docs_file_stream(spark: SparkSession, in_dir: str,
@@ -49,12 +37,11 @@ def docs_file_stream(spark: SparkSession, in_dir: str,
 
 def run_file_stream(spark: SparkSession, in_dir: str, out_dir: str,
                     checkpoint_dir: str,
-                    cfg: ExtractionConfig = DEFAULT_CONFIG,
                     max_files_per_trigger: int = 8) -> StreamingQuery:
     """File-watch extraction job with exactly-once semantics via the
     streaming checkpoint; call ``.awaitTermination()`` on the result."""
-    extracted = stream_extract(docs_file_stream(spark, in_dir,
-                                                max_files_per_trigger), cfg)
+    extracted = extract_documents(docs_file_stream(spark, in_dir,
+                                                   max_files_per_trigger))
     return (
         extracted.writeStream
         .format("parquet")

@@ -23,10 +23,10 @@ from pyspark.sql import DataFrame
 from ..operators import sketches as S
 
 
-def hll_register_stream(values: DataFrame, p: int = S.DEFAULT_P) -> DataFrame:
+def hll_register_stream(values: DataFrame) -> DataFrame:
     """Streaming register table for a streaming input's ``v`` column:
     same expression tree as the batch builder (one code path, two execution modes).
     Run with ``outputMode('update')`` (state-efficient deltas) or
     ``'complete'`` (full table per batch, e.g. into a memory sink for
     the estimator)."""
-    return S.hll_registers(values, "v", (), p)
+    return S.hll_registers(values, "v", ())

@@ -4,6 +4,7 @@ over synthetic records — pure Python, no Spark session."""
 from __future__ import annotations
 
 import importlib.util
+import inspect
 from pathlib import Path
 
 import pytest
@@ -76,3 +77,16 @@ def test_committed_records_agree_and_name_known_families(bs):
     assert records, "BENCH/SCALING.jsonl is empty"
     assert {r["family"] for r in records} <= set(bs.REGISTRY)
     assert bs.disagreements(records) == []
+
+
+def test_every_op_family_binds_to_its_operator(bs):
+    """``_op`` forwards its arguments through ``*args``/``**kwargs``, so
+    the defaulted-parameter scan (test_no_dead_defs) cannot see them:
+    bind each family's arguments to its operator's signature, so that a
+    removed parameter fails here and not halfway through a scaling run."""
+    ops = {name: fam.query for name, fam in bs.REGISTRY.items()
+           if hasattr(fam.query, "operator")}
+    assert {"winnow", "winnow_pairs", "sq8", "bpe_train"} <= set(ops)
+    for name, q in ops.items():
+        # the first argument is the table, which _op passes itself
+        inspect.signature(q.operator()).bind(None, *q.args, **q.kwargs)

@@ -278,8 +278,7 @@ def test_media_near_pairs_recall_on_perturbed_images(spark):
     ]
     media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
     pairs = {(r["media_a"], r["media_b"]): r["cosine_sim"]
-             for r in multimodal.media_near_pairs(
-                 media, threshold=0.999).collect()}
+             for r in multimodal.media_near_pairs(media).collect()}
     assert set(pairs) == {("img-a", "img-b"), ("img-a", "img-c"),
                           ("img-b", "img-c")}
     assert pairs[("img-a", "img-c")] == 1.0      # identical features
@@ -426,8 +425,7 @@ def test_audio_fingerprint_planted_pairs_and_short_guard(spark):
             for r in multimodal.audio_fingerprint(media).collect()}
     assert all(v[2] for v in sigs.values())
     pairs = {(r["id_a"], r["id_b"]): r["hamming"]
-             for r in multimodal.audio_dup_pairs(media,
-                                                 max_hamming=2).collect()}
+             for r in multimodal.audio_dup_pairs(media).collect()}
     assert set(pairs) == {("wav-00001", "wav-00251"),
                           ("wav-00002", "wav-00252")}
     assert all(h <= 2 for h in pairs.values())

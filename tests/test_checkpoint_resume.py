@@ -255,7 +255,7 @@ def test_compaction_preserves_data_and_shrinks_files(spark, docs, tmp_path):
     n_before = sum(len(checkpoint._bucket_files(table, b)) for b in range(4))
     assert n_before > 4  # salted repartition => many small files per bucket
 
-    r = checkpoint.compact_buckets(spark, table, target_files=1)
+    r = checkpoint.compact_buckets(spark, table)
     assert r["buckets_compacted"] >= 1
     assert r["files_after"] == r["buckets_compacted"]
     assert r["files_before"] > r["files_after"]
@@ -278,8 +278,7 @@ def test_compaction_commit_point_is_the_manifest(spark, docs, tmp_path):
                                        input_desc="fixtures")
     before_rows = _spans_key(checkpoint.read_extracted(spark, table).collect())
 
-    r = checkpoint.compact_buckets(spark, table, target_files=1,
-                                   delete_orphans=False)
+    r = checkpoint.compact_buckets(spark, table, delete_orphans=False)
     assert r["buckets_compacted"] >= 1
     # old + new files coexist on disk ...
     n_disk = sum(len(checkpoint._bucket_files(table, b)) for b in range(4))
@@ -293,6 +292,6 @@ def test_compaction_noop_when_already_compact(spark, docs, tmp_path):
     table = tmp_path / "extracted"
     checkpoint.extract_with_checkpoint(docs, table, n_buckets=4, waves=2,
                                        input_desc="fixtures")
-    checkpoint.compact_buckets(spark, table, target_files=1)
-    r2 = checkpoint.compact_buckets(spark, table, target_files=1)
+    checkpoint.compact_buckets(spark, table)
+    r2 = checkpoint.compact_buckets(spark, table)
     assert r2 == {"buckets_compacted": 0, "files_before": 0, "files_after": 0}

@@ -76,7 +76,7 @@ def test_media_dhash_planted_pairs_all_recalled(spark):
     ids = spark.range(2 * mod).select(F.col("id").alias("doc_id"))
     media = mm.synth_grid_bmp_media(ids, grid_mod=mod)
     pairs = {(r["id_a"], r["id_b"])
-             for r in mm.media_dhash_pairs(media, max_hamming=2).collect()}
+             for r in mm.media_dhash_pairs(media).collect()}
     planted = {(f"gbmp-{i:05d}", f"gbmp-{i + mod:05d}") for i in range(mod)}
     # banding may surface extra genuine sub-threshold pairs (md5-byte
     # coincidences), but every planted pair MUST be present

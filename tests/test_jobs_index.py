@@ -181,10 +181,10 @@ def test_ivfadc_stored_equals_inplan_and_prunes_partitions(spark, tmp_path):
     codes = spark.read.parquet(str(tmp_path / "idx" / "pq_codes"))
 
     stored = similarity.ivfadc_topk(
-        embs, query_id=0, k_neighbors=5, n_centroids=3, nprobe=2,
+        embs, query_id=0, k_neighbors=5, n_centroids=3,
         m=2, k=2, dim=8, cents=cents, books=books, codes=codes)
     inplan = similarity.ivfadc_topk(
-        embs, query_id=0, k_neighbors=5, n_centroids=3, nprobe=2,
+        embs, query_id=0, k_neighbors=5, n_centroids=3,
         m=2, k=2, dim=8)
     assert [tuple(r) for r in stored.collect()] \
         == [tuple(r) for r in inplan.collect()]
@@ -225,10 +225,10 @@ def test_ivfsq_stored_equals_inplan_and_prunes_partitions(spark, tmp_path):
     codes = spark.read.parquet(str(tmp_path / "idx" / "sq8_codes"))
 
     stored = similarity.ivfsq_topk(
-        embs, query_id=0, k=5, n_centroids=3, nprobe=2,
+        embs, query_id=0, k=5, n_centroids=3,
         cents=cents, bounds=bounds, codes=codes)
     inplan = similarity.ivfsq_topk(
-        embs, query_id=0, k=5, n_centroids=3, nprobe=2)
+        embs, query_id=0, k=5, n_centroids=3)
     assert [tuple(r) for r in stored.collect()] \
         == [tuple(r) for r in inplan.collect()]
 

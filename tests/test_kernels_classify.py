@@ -35,7 +35,7 @@ MID_TEXT = "z" * 200
 #: (other, 0.50); classify_flat never builds a NULL page text
 KERNEL_TEXTS = [TABLE_TEXT, PLOT_TEXT, COVER_TEXT, OTHER_TEXT, DENSE_TEXT,
                 SUMMARY_PLOT_TEXT, THREE_KEYWORD_TEXT, LOWER_KEYWORD_TEXT,
-                DENSE_ONE_KEYWORD_TEXT, MID_TEXT, ""]
+                DENSE_ONE_KEYWORD_TEXT, MID_TEXT, "", None]
 
 
 def run(texts):

@@ -51,9 +51,10 @@ def test_every_package_def_is_referenced():
     assert dead == [], "defined but never referenced:\n" + "\n".join(dead)
 
 
-def _col_params(tree: ast.AST, where: str) -> dict:
+def _params(tree: ast.AST, where: str, select) -> dict:
     """(where, function, line, param) -> (default node or None, positional
-    index or None, is_method) for every ``*_col`` parameter."""
+    index or None, is_method) for every parameter whose name ``select``
+    accepts."""
     out = {}
     for fn in ast.walk(tree):
         if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
@@ -65,25 +66,27 @@ def _col_params(tree: ast.AST, where: str) -> dict:
         params = [(p, d, i) for i, (p, d) in enumerate(zip(pos, defaults))]
         params += [(p, d, None) for p, d in zip(a.kwonlyargs, a.kw_defaults)]
         for p, d, i in params:
-            if p.arg.endswith("_col"):
+            if select(p.arg):
                 out[(where, fn.name, fn.lineno, p.arg)] = (d, i, method)
     return out
 
 
-def test_every_column_parameter_is_set():
-    """Operators read the engine's fixed column names: a defaulted
-    ``*_col`` parameter of a package function exists only if some call
-    site passes another value — a different literal, any expression, or
-    a caller's own ``*_col`` parameter that itself takes two values.
-    A forwarded parameter takes the values its own call sites give it
-    (its default included), to a fixpoint."""
+def _single_valued(select, own_default: bool) -> list[tuple]:
+    """(where, function, line, param) of every defaulted package parameter
+    whose name ``select`` accepts and that takes fewer than two values.
+    A call site passes another value with a different literal, any
+    expression, or a caller's own parameter that itself takes two
+    values: a forwarded parameter takes the values its own call sites
+    give it (its default included), to a fixpoint.  With ``own_default``
+    a non-constant default is a value of its own; without it, it equals
+    any expression a call site passes."""
     trees = {path: ast.parse(path.read_text(), str(path))
              for path in _python_files()}
     params = {}
     for path, tree in trees.items():
         rel = path.relative_to(REPO)
         if rel.parts[0] == PACKAGE:
-            params.update(_col_params(tree, str(rel)))
+            params.update(_params(tree, str(rel), select))
     by_name: dict[str, list] = {}
     for key in params:
         by_name.setdefault(key[1], []).append(key)
@@ -115,7 +118,8 @@ def test_every_column_parameter_is_set():
 
     opaque = object()
     values = {k: set() if d is None else
-              {d.value if isinstance(d, ast.Constant) else opaque}
+              {d.value if isinstance(d, ast.Constant)
+               else k if own_default else opaque}
               for k, (d, _, _) in params.items()}
     changed = True
     while changed:
@@ -132,10 +136,52 @@ def test_every_column_parameter_is_set():
                 changed = True
 
     defaulted = [k for k, (d, _, _) in params.items() if d is not None]
-    assert defaulted  # the scan found the package's column parameters
-    unset = [f"{where}:{line} {fn}({param}=...)"
-             for where, fn, line, param in defaulted
-             if len(values[(where, fn, line, param)]) < 2]
+    assert defaulted  # the scan found the package's parameters
+    return [k for k in defaulted if len(values[k]) < 2]
+
+
+def test_every_column_parameter_is_set():
+    """Operators read the engine's fixed column names: a defaulted
+    ``*_col`` parameter of a package function exists only if some call
+    site passes another value — a different literal, any expression, or
+    a caller's own ``*_col`` parameter that itself takes two values.
+    A forwarded parameter takes the values its own call sites give it
+    (its default included), to a fixpoint."""
+    unset = [f"{where}:{line} {fn}({param}=...)" for where, fn, line, param
+             in _single_valued(lambda p: p.endswith("_col"), own_default=False)]
     assert unset == [], ("column parameters no call site sets to another "
                          "value — read the column name instead:\n"
+                         + "\n".join(unset))
+
+
+#: Parameters kept with one value in the repo: a deployment sets them.
+EXEMPT_PARAMS = {
+    "checkpoint_dir": "a filesystem location: where a cluster keeps "
+                      "durable intermediates",
+    "lock_timeout": "a time bound on waiting for the table lock",
+    "watermark": "a time bound on streaming state",
+    "watermark_delay": "a time bound on streaming state",
+    "window": "a time bound on streaming state",
+}
+#: perfbench's kernel replay passes ``key`` to these positionally; the
+#: parameters go with the benchmark change that rewrites the replay
+#: (ROADMAP direction 2).
+EXEMPT_EXTRACTION_KEYS = {
+    (f"{PACKAGE}/operators/extraction.py", fn, "key")
+    for fn in ("classify_flat", "_table_text", "_decode_table_pages",
+               "_table_headers")}
+
+
+def test_every_defaulted_parameter_is_set():
+    """A defaulted parameter of a package function exists only where call
+    sites pass two values — the column test's scan and fixpoint over
+    every parameter, where a non-constant default is a value of its own.
+    A knob that every call leaves at one value is that value: write it
+    in the body, or use the module constant it names."""
+    unset = [f"{where}:{line} {fn}({param}=...)" for where, fn, line, param
+             in _single_valued(lambda p: True, own_default=True)
+             if param not in EXEMPT_PARAMS
+             and (where, fn, param) not in EXEMPT_EXTRACTION_KEYS]
+    assert unset == [], ("defaulted parameters no call site sets to another "
+                         "value — use the value instead:\n"
                          + "\n".join(unset))

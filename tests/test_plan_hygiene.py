@@ -295,7 +295,7 @@ def test_ivf_kmeans_no_python_and_broadcast_centroids(spark):
     from rca_pdf_extraction_pipeline_spark.operators import similarity
 
     embs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    plan = _plan(similarity.ivf_topk(embs, 0, 10, 4, 2, 2))
+    plan = _plan(similarity.ivf_topk(embs, 0))
     assert "EvalPython" not in plan
     # centroids / probes / query vector all arrive via broadcast
     assert plan.count("BroadcastExchange") >= 3
@@ -416,7 +416,7 @@ def test_pq_topk_no_python_broadcast_lut_topk(spark):
     from rca_pdf_extraction_pipeline_spark.operators import similarity
 
     embs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    plan = _plan(similarity.pq_topk(embs, 0, 10, m=4, k=4, iters=2, dim=64))
+    plan = _plan(similarity.pq_topk(embs, 0))
     assert "EvalPython" not in plan
     assert "BroadcastExchange" in plan
     assert "TakeOrderedAndProject" in plan
@@ -431,8 +431,7 @@ def test_ivf_sampled_touches_full_corpus_once(spark):
 
     embs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     for iters in (2, 4):
-        q = similarity.ivf_topk_sampled(embs, 0, 10, 4, iters, 2,
-                                        sample_rate=0.5, seed=0)
+        q = similarity.ivf_topk_sampled(embs, 0, iters=iters)
         plan = _plan(q)
         assert "EvalPython" not in plan
         # partial + final of exactly one first(embedding) aggregate:
@@ -818,8 +817,7 @@ def test_knn_join_prunes_by_probed_cells_and_group_limits(spark):
     from rca_pdf_extraction_pipeline_spark.operators import similarity
 
     embs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    df = similarity.knn_join(embs.filter("vec_id % 100 = 0"), embs,
-                             k=5, n_centroids=4, iters=2, nprobe=2)
+    df = similarity.knn_join(embs.filter("vec_id % 100 = 0"), embs)
     plan = _plan(df)
     assert "WindowGroupLimit" in plan
     assert "EvalPython" not in plan

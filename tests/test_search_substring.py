@@ -340,12 +340,12 @@ def test_pack_documents_budget_bins(spark):
         ("04", "d " * 100),
     ])
     out = {r["doc_id"]: r["bin_id"] for r in
-           pack_documents(d, budget_tokens=512).collect()}
+           pack_documents(d).collect()}
     # cumsum starts: 0, 300, 600, 900 -> bins 0, 0, 1, 1
     assert out == {"01": 0, "02": 0, "03": 1, "04": 1}
     # deterministic under repartition
     out2 = {r["doc_id"]: r["bin_id"] for r in
-            pack_documents(d.repartition(5), budget_tokens=512).collect()}
+            pack_documents(d.repartition(5)).collect()}
     assert out2 == out
 
 

@@ -257,7 +257,7 @@ def test_multiprobe_expands_recall_by_margin_flips(vectors):
     one = {r.vec_id for r in similarity.bucketed_topk_multiprobe(
         vectors, query_id=0, k=10, n_bits=2, nprobe=1).collect()}
     base = {r.vec_id for r in similarity.bucketed_topk(
-        vectors, query_id=0, k=10, n_bits=2).collect()}
+        vectors, query_id=0, n_bits=2).collect()}
     assert one == base
     three = {r.vec_id for r in similarity.bucketed_topk_multiprobe(
         vectors, query_id=0, k=10, n_bits=2, nprobe=3).collect()}
@@ -272,7 +272,7 @@ def test_multiprobe_expands_recall_by_margin_flips(vectors):
 
 def test_bucketed_topk_prunes_to_query_bucket(vectors):
     # vec 4 has negative x -> different sign bucket than the query
-    top = similarity.bucketed_topk(vectors, query_id=0, k=10, n_bits=2).collect()
+    top = similarity.bucketed_topk(vectors, query_id=0, n_bits=2).collect()
     ids = [r["vec_id"] for r in top]
     assert 4 not in ids
     assert ids[0] == 1
@@ -516,7 +516,7 @@ def test_kmeans_partition_invariant(clustered_vecs):
 
 def test_ivf_topk_probes_own_cluster(clustered_vecs):
     got = similarity.ivf_topk(clustered_vecs, query_id=0, k=3,
-                              n_centroids=2, iters=2, nprobe=1).collect()
+                              n_centroids=2, nprobe=1).collect()
     # nprobe=1: only cluster-A members (even ids) are candidates
     assert {r["vec_id"] for r in got} == {2, 4, 6}
     sims = [r["cosine_sim"] for r in got]
@@ -525,7 +525,7 @@ def test_ivf_topk_probes_own_cluster(clustered_vecs):
 
 def test_ivf_full_probe_equals_brute_force(clustered_vecs):
     ivf = similarity.ivf_topk(clustered_vecs, query_id=0, k=5,
-                              n_centroids=2, iters=2, nprobe=2).collect()
+                              n_centroids=2).collect()
     bf = similarity.cosine_topk(clustered_vecs, query_id=0, k=5).collect()
     assert [(r["vec_id"], r["cosine_sim"]) for r in ivf] == \
         [(r["vec_id"], r["cosine_sim"]) for r in bf]
@@ -606,7 +606,7 @@ def test_pq_topk_ranks_own_cluster_first(pq_vecs):
     """ADC distance to same-cluster vectors is (near) zero — cluster-A
     members fill the top slots for a cluster-A query, ties by id."""
     got = similarity.pq_topk(pq_vecs, query_id=0, k_neighbors=3,
-                             m=2, k=2, iters=2, dim=8).collect()
+                             m=2, k=2, dim=8).collect()
     assert [r["vec_id"] for r in got] == [2, 4, 6]
     # ADC is symmetric within the codeword cell: all three share the
     # query's codewords in both subspaces -> identical approx distance
@@ -694,10 +694,11 @@ def test_ivf_sampled_deterministic_and_ranked(clustered_vecs):
     """Sampled-codebook IVF is a pure function of (data, params): two
     runs agree exactly, output keeps the (cosine desc, id) contract, and
     full-probe search still ranks true neighbors first."""
-    kw = dict(query_id=0, k=5, n_centroids=2, iters=2, nprobe=2,
-              sample_rate=0.75, seed=0)
-    a = similarity.ivf_topk_sampled(clustered_vecs, **kw).collect()
-    b = similarity.ivf_topk_sampled(clustered_vecs.repartition(5), **kw).collect()
+    a = similarity.ivf_topk_sampled(clustered_vecs, query_id=0, k=5,
+                                    n_centroids=2, sample_rate=0.75).collect()
+    b = similarity.ivf_topk_sampled(clustered_vecs.repartition(5), query_id=0,
+                                    k=5, n_centroids=2,
+                                    sample_rate=0.75).collect()
     assert [(r["vec_id"], r["cid"], r["cosine_sim"]) for r in a] == \
         [(r["vec_id"], r["cid"], r["cosine_sim"]) for r in b]
     sims = [r["cosine_sim"] for r in a]
@@ -708,7 +709,7 @@ def test_ivf_sampled_deterministic_and_ranked(clustered_vecs):
 
 def test_semantic_near_pairs_stay_within_cluster(clustered_vecs):
     pairs = similarity.semantic_near_pairs(
-        clustered_vecs, n_centroids=2, iters=2, threshold=0.9).collect()
+        clustered_vecs, n_centroids=2, threshold=0.9).collect()
     # near-identical vectors pair up only inside their own cluster:
     # even ids (cluster A) never pair with odd ids (cluster B)
     assert pairs
@@ -721,7 +722,7 @@ def test_semantic_near_pairs_stay_within_cluster(clustered_vecs):
 
 def test_semantic_dedup_keeps_min_id_per_cluster(clustered_vecs):
     kept = similarity.semantic_dedup(
-        clustered_vecs, n_centroids=2, iters=2, threshold=0.9).collect()
+        clustered_vecs, n_centroids=2, threshold=0.9).collect()
     # every vector has a lower-id near-dup except the cluster minima
     assert {r["vec_id"] for r in kept} == {0, 1}
     assert len({r["cid"] for r in kept}) == 2
@@ -1670,7 +1671,7 @@ def test_cohort_retention_and_active_users_hand_check(spark):
     assert len(ret) == 4
 
     au = {r.day: (r.dau, r.wau)
-          for r in sessions.active_users(ev, window_days=7).collect()}
+          for r in sessions.active_users(ev).collect()}
     assert au[0] == (1, 1)                  # day 0: u1
     assert au[1] == (1, 2)                  # day 1: u2; window {u1, u2}
     assert au[7] == (1, 2)                  # day 7: u1; window {u1(d7), u2(d1)}
@@ -1695,7 +1696,7 @@ def test_jl_projection_preserves_cosine_approximately(spark):
         rng_rows.append((vid, [float(x) for x in v]))
     embs = spark.createDataFrame(rng_rows,
                                  "vec_id long, embedding array<float>")
-    top = S.jl_topk(embs, query_id=0, k=3, out_dim=16).collect()
+    top = S.jl_topk(embs, query_id=0, k=3).collect()
     assert top[0].vec_id == 3                      # identical copy first
     assert top[0].proj_cosine == 1.0
     assert top[1].vec_id == 1                      # near second
@@ -1714,12 +1715,11 @@ def test_knn_join_matches_single_query_ivf(clustered_vecs):
     path changes the orchestration, never the ranking."""
     qs = clustered_vecs.filter("vec_id IN (0, 1)")
     got = similarity.knn_join(qs, clustered_vecs, k=3, n_centroids=2,
-                              iters=2, nprobe=1).collect()
+                              nprobe=1).collect()
     assert [r["rank"] for r in got] == [1, 2, 3, 1, 2, 3]
     for qid in (0, 1):
         single = similarity.ivf_topk(clustered_vecs, query_id=qid, k=3,
-                                     n_centroids=2, iters=2,
-                                     nprobe=1).collect()
+                                     n_centroids=2, nprobe=1).collect()
         batch = [(r["vec_id"], r["cid"], r["cosine_sim"])
                  for r in got if r["query_id"] == qid]
         assert batch == [(r["vec_id"], r["cid"], r["cosine_sim"])
@@ -1728,8 +1728,8 @@ def test_knn_join_matches_single_query_ivf(clustered_vecs):
 
 def test_knn_join_guards_and_self_exclusion(clustered_vecs):
     qs = clustered_vecs.filter("vec_id = 0")
-    got = similarity.knn_join(qs, clustered_vecs, k=8, n_centroids=2,
-                              iters=2, nprobe=2).collect()
+    got = similarity.knn_join(qs, clustered_vecs, k=8,
+                              n_centroids=2).collect()
     assert all(r["vec_id"] != 0 for r in got)       # self excluded
     assert len(got) == 7                            # everyone else ranked
     with pytest.raises(ValueError):
@@ -1745,7 +1745,7 @@ def test_knn_join_plan_has_window_group_limit(clustered_vecs):
     set from ever landing in a single task at corpus scale."""
     qs = clustered_vecs.filter("vec_id IN (0, 1)")
     df = similarity.knn_join(qs, clustered_vecs, k=3, n_centroids=2,
-                             iters=2, nprobe=1)
+                             nprobe=1)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan
 
@@ -1813,7 +1813,7 @@ def test_ivfsq_prunes_to_query_cluster(clustered_vecs):
     the surviving ranks must equal the unpruned sq8_topk order
     restricted to that cluster."""
     got = similarity.ivfsq_topk(clustered_vecs, query_id=0, k=7,
-                                n_centroids=2, iters=2, nprobe=1).collect()
+                                n_centroids=2, nprobe=1).collect()
     assert {r["vec_id"] for r in got} == {2, 4, 6}   # cluster A peers only
     assert len({r["cid"] for r in got}) == 1         # one probed cell
     full = similarity.sq8_topk(clustered_vecs, query_id=0, k=7).collect()
@@ -1827,7 +1827,7 @@ def test_ivfsq_full_probe_equals_sq8_topk(clustered_vecs):
     degrade to exactly sq8_topk (same ids, same distances, same order)
     — the semantic pin that the probe only FILTERS, never rescores."""
     got = similarity.ivfsq_topk(clustered_vecs, query_id=0, k=5,
-                                n_centroids=2, iters=2, nprobe=2).collect()
+                                n_centroids=2).collect()
     want = similarity.sq8_topk(clustered_vecs, query_id=0, k=5).collect()
     assert [(r["vec_id"], r["sq_d2"]) for r in got] \
         == [(r["vec_id"], r["sq_d2"]) for r in want]

@@ -98,7 +98,7 @@ def test_video_frames_feed_image_pipeline(spark):
     the real decode_media all consume the frame table verbatim, and the
     frame timestamps follow the fps grid."""
     ids = spark.createDataFrame([(1,), (2,)], "doc_id long")
-    media = M.synth_y4m_media(ids, n_frames=6)
+    media = M.synth_y4m_media(ids)
     frames = M.video_frames(media, every_n=2)
     rows = frames.collect()
     assert sorted((r["video_ref"], r["frame_idx"]) for r in rows) == [
@@ -121,7 +121,7 @@ def test_frame_sample_real_decode_bucket_grid(spark):
     ts 0,33,66,100,133,166 — every_ms=100 keeps idx 0 and 3 (buckets 0
     and 1); every_ms=50 keeps idx 0,2,3,5; garbage yields no rows."""
     ids = spark.createDataFrame([(1,), (10,)], "doc_id long")
-    media = M.synth_y4m_media(ids, n_frames=6)
+    media = M.synth_y4m_media(ids)
     got = {r["frame_idx"]: r["ts_ms"]
            for r in M.frame_sample(media, every_ms=100).collect()}
     assert got == {0: 0, 3: 100}
@@ -139,11 +139,10 @@ def test_video_dup_pairs_planted_recall(spark):
     frame rows at all."""
     ids = spark.createDataFrame([(1,), (2,), (10,), (251,), (252,)],
                                 "doc_id long")
-    media = M.synth_y4m_media(ids, n_frames=6, dup_mod=250)
+    media = M.synth_y4m_media(ids, dup_mod=250)
     assert M.video_frames(media).count() == 4 * 6
     pairs = {(r["id_a"], r["id_b"]): r["n_matched"]
-             for r in M.video_dup_pairs(media, max_hamming=2,
-                                        min_frames=4).collect()}
+             for r in M.video_dup_pairs(media, min_frames=4).collect()}
     assert pairs == {("y4m-00001", "y4m-00251"): 6,
                      ("y4m-00002", "y4m-00252"): 6}
     # raising min_frames past n_frames rejects everything

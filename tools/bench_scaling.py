@@ -385,13 +385,19 @@ def _html(op: str):
 
 
 def _op(module: str, name: str, table: str = "docs", *args, **kwargs):
-    """A query that is one operator call on one table."""
-    def query(t):
+    """A query that is one operator call on one table.  ``query.operator``
+    returns the operator, and ``query.args`` / ``query.kwargs`` are the
+    arguments after the table (tests bind them to its signature)."""
+    def operator():
         import importlib
 
         mod = importlib.import_module(
             f"rca_pdf_extraction_pipeline_spark.operators.{module}")
-        return getattr(mod, name)(t[table], *args, **kwargs)
+        return getattr(mod, name)
+
+    def query(t):
+        return operator()(t[table], *args, **kwargs)
+    query.operator, query.args, query.kwargs = operator, args, kwargs
     return query
 
 
@@ -411,7 +417,7 @@ def _knn_join(t):
     from rca_pdf_extraction_pipeline_spark.operators import similarity
 
     return similarity.knn_join(t["queries"], t["vectors"], k=10,
-                               n_centroids=16, iters=2, nprobe=2)
+                               n_centroids=16)
 
 
 class Family(NamedTuple):
@@ -450,12 +456,10 @@ REGISTRY: dict[str, Family] = {
     "parse": Family("token_docs", _html("parse"), 500_000),
     "main_spans": Family("token_docs", _html("main_spans"), 500_000),
     "link_census": Family("token_docs", _html("link_census"), 2_000_000),
-    "winnow": Family("overlap_docs", _op("textanalysis",
-                                         "winnow_fingerprints", k=3, w=4),
-                     100_000),
-    "winnow_pairs": Family("overlap_docs", _op(
-        "dedup", "winnow_overlap_pairs", k=3, w=4, df_cap=16, min_shared=2),
-        100_000),
+    "winnow": Family("overlap_docs",
+                     _op("textanalysis", "winnow_fingerprints"), 100_000),
+    "winnow_pairs": Family("overlap_docs",
+                           _op("dedup", "winnow_overlap_pairs"), 100_000),
 }
 
 
