@@ -975,15 +975,9 @@ def _q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     diagnostic run before committing an ANN index configuration;
     integer micro-lattice recall, bit-identical in both engines."""
     embs = _t(spark, sf_dir, "embeddings")
-    exact = similarity.cosine_topk(embs, query_id=0, k=10).select("vec_id")
-    approx = similarity.ivf_topk(embs, query_id=0).select("vec_id")
-    hits = (exact.join(approx, "vec_id", "left_semi")
-            .agg(F.count(F.lit(1)).alias("n_hits")))
-    return hits.select(
-        F.lit(10).cast("long").alias("k"),
-        F.col("n_hits").cast("long").alias("n_hits"),
-        F.expr("cast((n_hits * 1000000) div 10 as bigint)")
-        .alias("recall_micro"))
+    return similarity.recall_at_k(
+        similarity.cosine_topk(embs, query_id=0, k=10),
+        similarity.ivf_topk(embs, query_id=0), 10)
 
 
 def _q_sim_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1046,16 +1040,9 @@ def _q_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the SQ family (composes ann_sq8_topk with lattice_l2_topk the
     way ann_recall composes IVF with the cosine brute force)."""
     embs = _t(spark, sf_dir, "embeddings")
-    exact = similarity.lattice_l2_topk(embs, query_id=0, k=10) \
-        .select("vec_id")
-    appr = similarity.sq8_topk(embs, query_id=0, k=10).select("vec_id")
-    hits = (exact.join(appr, "vec_id", "left_semi")
-            .agg(F.count(F.lit(1)).alias("n_hits")))
-    return hits.select(
-        F.lit(10).cast("long").alias("k"),
-        F.col("n_hits").cast("long").alias("n_hits"),
-        F.expr("cast((n_hits * 1000000) div 10 as bigint)")
-        .alias("recall_micro"))
+    return similarity.recall_at_k(
+        similarity.lattice_l2_topk(embs, query_id=0, k=10),
+        similarity.sq8_topk(embs, query_id=0, k=10), 10)
 
 
 def _q_ann_ivfsq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1926,15 +1913,9 @@ def _q_jl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     committing a projection dimension; same diagnostic row shape as
     ann_recall."""
     embs = _t(spark, sf_dir, "embeddings")
-    exact = similarity.cosine_topk(embs, query_id=0, k=10).select("vec_id")
-    approx = similarity.jl_topk(embs, query_id=0, k=10).select("vec_id")
-    hits = (exact.join(approx, "vec_id", "left_semi")
-            .agg(F.count(F.lit(1)).alias("n_hits")))
-    return hits.select(
-        F.lit(10).cast("long").alias("k"),
-        F.col("n_hits").cast("long").alias("n_hits"),
-        F.expr("cast((n_hits * 1000000) div 10 as bigint)")
-        .alias("recall_micro"))
+    return similarity.recall_at_k(
+        similarity.cosine_topk(embs, query_id=0, k=10),
+        similarity.jl_topk(embs, query_id=0, k=10), 10)
 
 
 def _q_vocab_overlap_hll(spark: SparkSession, sf_dir: str) -> DataFrame:

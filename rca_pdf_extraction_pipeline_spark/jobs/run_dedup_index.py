@@ -4,8 +4,7 @@ side of incremental deduplication:
     spark-submit --py-files rca_pkg.zip \\
         rca_pdf_extraction_pipeline_spark/jobs/run_dedup_index.py \\
         --input  <parquet dir of documents(doc_id, text, ...)> \\
-        --output <index dir> \\
-        [--n-hashes 8] [--bands 2] [--shingle-size 3]
+        --output <index dir>
 
 Artifacts (deterministic — same corpus, same rows):
 
@@ -14,7 +13,10 @@ Artifacts (deterministic — same corpus, same rows):
   repartitioned on band_key at write so each file holds whole buckets —
   the table both the batch (``incremental_candidate_pairs``) and the
   streaming (``streaming.dedup.incremental_pairs_stream``) ingest paths
-  join new batches against without ever re-shingling the corpus.
+  join new batches against without ever re-shingling the corpus.  The
+  keys use the operator's fixed 8 seeds, 2 bands and 3-token shingles,
+  the keys both ingest paths compute for a new batch; the job has no
+  flag that could make the two sides disagree.
 * ``<out>/stats.json`` — corpus size, key count, bucket-size histogram
   head (the skew card: a hot band_key here predicts a hot join bucket,
   which AQE splits at read).
@@ -38,9 +40,6 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description="Corpus dedup index (Spark)")
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
-    ap.add_argument("--n-hashes", type=int, default=8)
-    ap.add_argument("--bands", type=int, default=2)
-    ap.add_argument("--shingle-size", type=int, default=3)
     ap.add_argument("--allowed-roots", nargs="*", default=None)
     args = ap.parse_args(argv)
 
@@ -57,9 +56,7 @@ def main(argv: list[str] | None = None) -> int:
     out = Path(args.output)
     out.mkdir(parents=True, exist_ok=True)
 
-    keys = dedup.minhash_band_keys(
-        docs, n_hashes=args.n_hashes, bands=args.bands,
-        shingle_size=args.shingle_size)
+    keys = dedup.minhash_band_keys(docs)
     # co-locate whole LSH buckets per file: the ingest join's shuffle of
     # the stored side is prepaid by the layout (bucketed-table variant:
     # plans/bucketing.py)
@@ -79,8 +76,8 @@ def main(argv: list[str] | None = None) -> int:
         "hottest_buckets": [
             {"band": int(b), "band_key": k, "n_docs": int(n)}
             for b, k, n in top],
-        "config": {"n_hashes": args.n_hashes, "bands": args.bands,
-                   "shingle_size": args.shingle_size},
+        "config": {"n_hashes": dedup.DEFAULT_MINHASH_SEEDS,
+                   "bands": dedup.DEFAULT_BANDS, "shingle_size": 3},
     }
     (out / "stats.json").write_text(json.dumps(stats, indent=2) + "\n")
     print(json.dumps(stats))

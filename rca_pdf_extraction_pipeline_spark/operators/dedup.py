@@ -158,11 +158,10 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_band_keys(docs: DataFrame, n_hashes: int = DEFAULT_MINHASH_SEEDS,
-                      bands: int = DEFAULT_BANDS,
-                      shingle_size: int = 3,
+def minhash_band_keys(docs: DataFrame, bands: int = DEFAULT_BANDS,
                       keep_cols: tuple[str, ...] = ()) -> DataFrame:
-    """(id, [keep_cols...], band, band_key) — one row per band; equal
+    """(id, [keep_cols...], band, band_key) — one row per band of the
+    DEFAULT_MINHASH_SEEDS-value signature over 3-token shingles; equal
     band_key => LSH candidate pair.  ``keep_cols`` pass through
     untouched (e.g. the event-time column a streaming caller needs for
     its watermark).
@@ -174,14 +173,14 @@ def minhash_band_keys(docs: DataFrame, n_hashes: int = DEFAULT_MINHASH_SEEDS,
     keys from separately-projected sig columns re-evaluates the fold
     under ``Generate``, which does no subexpression elimination —
     measured ~8x slower at sf0.1.)"""
-    if n_hashes % bands != 0:
+    if DEFAULT_MINHASH_SEEDS % bands != 0:
         raise ValueError(
-            f"bands={bands} must divide n_hashes={n_hashes} exactly — a "
-            f"remainder would silently drop trailing signature values and "
-            f"weaken the requested S-curve")
+            f"bands={bands} must divide n_hashes={DEFAULT_MINHASH_SEEDS} "
+            f"exactly — a remainder would silently drop trailing signature "
+            f"values and weaken the requested S-curve")
     keys = H.minhash_band_key_array(
-        T.shingle_set(F.col("text"), shingle_size), bands,
-        H.MINHASH_SEEDS[:n_hashes])
+        T.shingle_set(F.col("text"), 3), bands,
+        H.MINHASH_SEEDS[:DEFAULT_MINHASH_SEEDS])
     return docs.select(
         F.col("doc_id"), *[F.col(c) for c in keep_cols],
         F.posexplode(keys).alias("band", "band_key")

@@ -1,8 +1,29 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k as the exact baseline, sign-LSH bucketing as
-the scale path — both pure DataFrame expressions (functions/vectors.py),
-no UDFs, oracle-checkable against DuckDB's list_cosine_similarity.
+Every operator is a pure DataFrame expression (functions/vectors.py),
+no UDFs, oracle-checkable against DuckDB.  The families:
+
+  * exact baselines: cosine top-k (``cosine_topk``) and integer-lattice
+    L2 top-k (``lattice_l2_topk``);
+  * sign-LSH buckets (``bucketed_topk``, ``bucketed_topk_multiprobe``);
+  * IVF: a k-means coarse quantizer on the integer lattice
+    (``kmeans_centroids``), cell assignment and probing (``ivf_topk``,
+    ``knn_join``, ``cluster_profile``, ``semantic_dedup``);
+  * PQ: per-subspace codebooks ranked by ADC (``pq_topk``), and IVFADC,
+    their composition with IVF (``ivfadc_topk``);
+  * SQ8: per-dimension int8 codes (``sq8_topk``) and IVF-SQ
+    (``ivfsq_topk``);
+  * JL: a content-addressed sign projection to 16 dims (``jl_topk``);
+  * ``recall_at_k``: the recall row that states the error of an
+    approximate top-k against its exact baseline.
+
+Each building block is defined once and the operators compose it:
+``_cell_d2`` (lattice rows x broadcast centroids, exact squared
+distance), ``_nearest`` (argmin cell), ``_probes`` (the cells nearest a
+query), ``_cosine_rank`` (the cosine top-k tail), ``_pq_lut`` (the ADC
+lookup table), ``_sq8_coded``/``_sq8_rank`` (in-plan int8 codes and
+the asymmetric SQ8 distance), and the argument guards ``_pq_split``,
+``_check_nprobe`` and ``_check_together``.
 
 Scale design (100 TB / 10^12 vectors):
   * the query side is always broadcast (one row or a small batch);
@@ -29,6 +50,24 @@ def _query_vec(embs: DataFrame, query_id: int, id_col: str) -> DataFrame:
     )
 
 
+def _cosine_sim() -> F.Column:
+    """``cosine_sim``: the 6-dp cosine between a row's ``embedding``
+    and the broadcast query vector ``q_vec``."""
+    return F.round(V.cosine(V.as_double(F.col("embedding")),
+                            F.col("q_vec")), 6).alias("cosine_sim")
+
+
+def _cosine_rank(cand: DataFrame, id_col: str, k: int,
+                 *carry: str) -> DataFrame:
+    """The exact tail of every cosine search: candidate rows carrying
+    (id, embedding, query_id, q_vec) -> (id, *carry, cosine_sim), the
+    query itself dropped, the first ``k`` by (cosine desc, id asc)."""
+    return (cand.filter(F.col(id_col) != F.col("query_id"))
+            .select(F.col(id_col), *carry, _cosine_sim())
+            .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
+            .limit(k))
+
+
 def cosine_topk(embs: DataFrame, query_id: int, k: int = 10,
                 id_col: str = "vec_id") -> DataFrame:
     """Exact top-k neighbors of ``query_id`` by cosine similarity.
@@ -37,14 +76,7 @@ def cosine_topk(embs: DataFrame, query_id: int, k: int = 10,
     6 dp. Returns (vec_id, cosine_sim) with the query itself excluded.
     """
     q = _query_vec(embs, query_id, id_col)
-    sim = F.round(V.cosine(V.as_double(F.col("embedding")), F.col("q_vec")), 6)
-    return (
-        embs.crossJoin(F.broadcast(q))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return _cosine_rank(embs.crossJoin(F.broadcast(q)), id_col, k)
 
 
 def bucket_histogram(embs: DataFrame, n_bits: int = 8) -> DataFrame:
@@ -68,8 +100,7 @@ def bucketed_topk_multiprobe(embs: DataFrame, query_id: int, k: int = 10,
 
     Deterministic: margin ties flip the lower dim first; similarity
     rounded to 6 dp, final ties by ascending id."""
-    if not 1 <= nprobe <= 2 ** n_bits:
-        raise ValueError(f"nprobe must be in [1, 2^{n_bits}]; got {nprobe}")
+    _check_nprobe(nprobe, 2 ** n_bits)
     with_bucket = embs.withColumn(
         "bucket", V.sign_bucket(F.col("embedding"), n_bits))
     margins = F.array_sort(F.array(*[
@@ -94,15 +125,10 @@ def bucketed_topk_multiprobe(embs: DataFrame, query_id: int, k: int = 10,
                             F.pow(F.lit(2.0), f["j"]).cast("long"))),
                 ).alias("probes"))
     )
-    sim = F.round(V.cosine(V.as_double(F.col("embedding")), F.col("q_vec")), 6)
-    return (
+    return _cosine_rank(
         with_bucket.join(F.broadcast(q),
-                         F.array_contains(q["probes"], with_bucket["bucket"]))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(F.col("vec_id"), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id").asc())
-        .limit(k)
-    )
+                         F.array_contains(q["probes"], with_bucket["bucket"])),
+        "vec_id", k)
 
 
 #: fixed-point grid for k-means arithmetic: round(x * 1000) as bigint.
@@ -188,17 +214,37 @@ def _l2sq(a, b) -> F.Column:
         F.lit(0).cast("long"), lambda acc, v: acc + v)
 
 
-def _assign(lat: DataFrame, cents: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment: broadcast the k centroids, exact
-    integer distances, ties broken by ascending cid (struct-min)."""
-    pairs = lat.crossJoin(F.broadcast(cents))
-    scored = pairs.select(
-        F.col("vec_id"), F.col("qv"),
-        F.struct(_l2sq(F.col("qv"), F.col("cv")).alias("d2"),
-                 F.col("cid")).alias("dc"))
-    return (scored.groupBy("vec_id")
-            .agg(F.min("dc").alias("m"), F.first("qv").alias("qv"))
-            .select(F.col("vec_id"), F.col("m.cid").alias("cid"), F.col("qv")))
+def _cell_d2(lat: DataFrame, cents: DataFrame, *carry) -> DataFrame:
+    """(*carry, cid, d2): every lattice row against every broadcast
+    centroid, ``d2`` the exact squared lattice distance."""
+    return (lat.crossJoin(F.broadcast(cents))
+            .select(*carry, F.col("cid"),
+                    _l2sq(F.col("qv"), F.col("cv")).alias("d2")))
+
+
+def _nearest(lat: DataFrame, cents: DataFrame, *carry: str) -> DataFrame:
+    """(vec_id, m, *carry): nearest-centroid assignment, ``m`` the
+    struct-min (d2, cid) — exact integer distances, ties broken by
+    ascending cid."""
+    return (_cell_d2(lat, cents, "vec_id", *carry)
+            .select("vec_id", *carry, F.struct("d2", "cid").alias("dc"))
+            .groupBy("vec_id")
+            .agg(F.min("dc").alias("m"),
+                 *[F.first(c).alias(c) for c in carry]))
+
+
+def _probes(embs: DataFrame, cents: DataFrame, query_id: int,
+            nprobe: int) -> DataFrame:
+    """(cid) of the ``nprobe`` cells nearest the query, ties to the
+    ascending cid."""
+    return (_cell_d2(_lattice(embs).filter(F.col("vec_id") == query_id), cents)
+            .orderBy("d2", "cid").limit(nprobe).select("cid"))
+
+
+def _check_nprobe(nprobe: int, n_cells: int) -> None:
+    """A probe list names between 1 and ``n_cells`` cells."""
+    if not 1 <= nprobe <= n_cells:
+        raise ValueError(f"nprobe must be in [1, {n_cells}]; got {nprobe}")
 
 
 def kmeans_centroids(embs: DataFrame, k: int = 4, iters: int = 2) -> DataFrame:
@@ -224,7 +270,8 @@ def kmeans_centroids(embs: DataFrame, k: int = 4, iters: int = 2) -> DataFrame:
              .select(F.col("vec_id").cast("long").alias("cid"),
                      F.col("qv").alias("cv")))
     for _ in range(iters):
-        assigned = _assign(lat, cents)
+        assigned = _nearest(lat, cents, "qv").select(
+            F.col("vec_id"), F.col("m.cid").alias("cid"), F.col("qv"))
         per_dim = (assigned.select("cid", F.posexplode("qv").alias("dim", "v"))
                    .groupBy("cid", "dim")
                    .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
@@ -278,29 +325,11 @@ def _ivf_search(embs: DataFrame, cents: DataFrame, query_id: int, k: int,
     """Shared IVF back half: one full-corpus nearest-centroid assignment,
     probe the ``nprobe`` cells nearest the query, exact cosine rank
     inside the probed cells only."""
-    lat = _lattice(embs)
-    assigned = (lat.crossJoin(F.broadcast(cents))
-                .select(F.col("vec_id"), F.col("embedding"),
-                        F.struct(_l2sq(F.col("qv"), F.col("cv")).alias("d2"),
-                                 F.col("cid")).alias("dc"))
-                .groupBy("vec_id")
-                .agg(F.min("dc").alias("m"),
-                     F.first("embedding").alias("embedding"))
-                .select(F.col("vec_id"), F.col("m.cid").alias("cid"),
-                        F.col("embedding")))
-    probes = (lat.filter(F.col("vec_id") == query_id)
-              .crossJoin(F.broadcast(cents))
-              .select(F.col("cid"),
-                      _l2sq(F.col("qv"), F.col("cv")).alias("d2"))
-              .orderBy("d2", "cid").limit(nprobe).select("cid"))
+    probes = _probes(embs, cents, query_id, nprobe)
     q = _query_vec(embs, query_id, "vec_id")
-    sim = F.round(V.cosine(V.as_double(F.col("embedding")), F.col("q_vec")), 6)
-    return (assigned.join(F.broadcast(probes), "cid")
-            .crossJoin(F.broadcast(q))
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select(F.col("vec_id"), F.col("cid"), sim.alias("cosine_sim"))
-            .orderBy(F.col("cosine_sim").desc(), F.col("vec_id").asc())
-            .limit(k))
+    return _cosine_rank(assign_centroids(embs, cents=cents)
+                        .join(F.broadcast(probes), "cid")
+                        .crossJoin(F.broadcast(q)), "vec_id", k, "cid")
 
 
 def ivf_topk_sampled(embs: DataFrame, query_id: int, k: int = 10,
@@ -312,9 +341,7 @@ def ivf_topk_sampled(embs: DataFrame, query_id: int, k: int = 10,
     nearest the query are probed.  Same output contract as
     :func:`ivf_topk` — (vec_id, cid, cosine_sim), top-``k`` by
     (cosine desc, id), query excluded."""
-    if n_centroids < 2:
-        raise ValueError(f"2 cells are probed: n_centroids must be >= 2; "
-                         f"got {n_centroids}")
+    _check_nprobe(2, n_centroids)
     cents = kmeans_centroids_sampled(embs, n_centroids, iters, sample_rate)
     return _ivf_search(embs, cents, query_id, k, 2)
 
@@ -337,8 +364,7 @@ def ivf_topk(embs: DataFrame, query_id: int, k: int = 10,
     ``jobs/run_index.py`` persists, read back from parquet) to search a
     STORED codebook with no training in-plan at all.
     """
-    if not 1 <= nprobe <= n_centroids:
-        raise ValueError(f"nprobe must be in [1, {n_centroids}]; got {nprobe}")
+    _check_nprobe(nprobe, n_centroids)
     if cents is None:
         cents = kmeans_centroids(embs, n_centroids)
     return _ivf_search(embs, cents, query_id, k, nprobe)
@@ -356,14 +382,7 @@ def assign_centroids(embs: DataFrame, n_centroids: int = 4,
     with no Lloyd rounds in-plan."""
     if cents is None:
         cents = kmeans_centroids(embs, n_centroids)
-    lat = _lattice(embs)
-    return (lat.crossJoin(F.broadcast(cents))
-            .select(F.col("vec_id"), F.col("embedding"),
-                    F.struct(_l2sq(F.col("qv"), F.col("cv")).alias("d2"),
-                             F.col("cid")).alias("dc"))
-            .groupBy("vec_id")
-            .agg(F.min("dc").alias("m"),
-                 F.first("embedding").alias("embedding"))
+    return (_nearest(_lattice(embs), cents, "embedding")
             .select(F.col("vec_id"), F.col("m.cid").alias("cid"),
                     F.col("embedding")))
 
@@ -381,14 +400,7 @@ def cluster_profile(embs: DataFrame, n_centroids: int = 4) -> DataFrame:
     k-row shuffle.  Integer inertia makes the whole row set
     addition-order-free — any engine, any partitioning, same bytes.
     """
-    cents = kmeans_centroids(embs, n_centroids)
-    lat = _lattice(embs)
-    assigned = (lat.crossJoin(F.broadcast(cents))
-                .select(F.col("vec_id"),
-                        F.struct(_l2sq(F.col("qv"), F.col("cv")).alias("d2"),
-                                 F.col("cid")).alias("dc"))
-                .groupBy("vec_id")
-                .agg(F.min("dc").alias("m"))
+    assigned = (_nearest(_lattice(embs), kmeans_centroids(embs, n_centroids))
                 .select(F.col("m.cid").alias("cid"),
                         F.col("m.d2").alias("d2")))
     return (assigned.groupBy("cid")
@@ -468,15 +480,20 @@ def pq_codebooks(embs: DataFrame, m: int = 4, k: int = 4, iters: int = 2,
     Deterministic end-to-end: each subspace fit is
     :func:`kmeans_centroids` on the sliced vectors — integer-lattice
     Lloyd, seeded by the k lowest ids, fixed iterations."""
-    if dim % m:
-        raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
-    sub_dim = dim // m
+    sub_dim = _pq_split(dim, m)
     books = None
     for s in range(m):
         cb = (kmeans_centroids(_subspace(embs, s, sub_dim), k, iters)
               .select(F.lit(s).alias("sub"), "cid", "cv"))
         books = cb if books is None else books.unionByName(cb)
     return books
+
+
+def _pq_split(dim: int, m: int) -> int:
+    """Width of each of the ``m`` contiguous PQ subspaces of ``dim``."""
+    if dim % m:
+        raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
+    return dim // m
 
 
 def _sub_lattice_rows(embs: DataFrame, m: int, sub_dim: int) -> DataFrame:
@@ -514,9 +531,7 @@ def pq_codes(embs: DataFrame, m: int = 4, k: int = 4, iters: int = 2,
     Pass ``books`` (from :func:`pq_codebooks`, or read back from the
     index job's artifacts) to encode against an existing codebook; by
     default the codebooks are fit in-plan."""
-    if dim % m:
-        raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
-    sub_dim = dim // m
+    sub_dim = _pq_split(dim, m)
     if books is None:
         books = pq_codebooks(embs, m, k, iters, dim)
     b = books.select(F.col("sub").alias("b_sub"), "cid", "cv")
@@ -529,6 +544,31 @@ def pq_codes(embs: DataFrame, m: int = 4, k: int = 4, iters: int = 2,
             .agg(F.min("dc").alias("mn"))
             .select(F.col("vec_id"), F.col("sub"),
                     F.col("mn.cid").alias("code")))
+
+
+def _pq_lut(embs: DataFrame, books: DataFrame, query_id: int, m: int,
+            sub_dim: int) -> DataFrame:
+    """(sub, cid, d2): the ADC lookup table — the exact lattice distance
+    from the query's subvector to every codeword of its subspace, m x k
+    rows, broadcast by every consumer."""
+    q_subs = (_sub_lattice_rows(embs, m, sub_dim)
+              .filter(F.col("vec_id") == query_id)
+              .select(F.col("sub").alias("q_sub"),
+                      F.col("subqv").alias("q_vec")))
+    return (books.join(F.broadcast(q_subs), F.col("sub") == F.col("q_sub"))
+            .select(F.col("sub"), F.col("cid"),
+                    _l2sq(F.col("q_vec"), F.col("cv")).alias("d2")))
+
+
+def _check_together(**artifacts) -> None:
+    """Stored-index artifacts come all together or not at all."""
+    given = [a is not None for a in artifacts.values()]
+    if any(given) and not all(given):
+        raise ValueError(
+            f"pass {', '.join(artifacts)} together (all from the stored "
+            f"index) or none — codes paired with a codebook, bounds or "
+            f"cells they were not built under silently corrupt every "
+            f"distance")
 
 
 def pq_topk(embs: DataFrame, query_id: int, k_neighbors: int = 10,
@@ -554,25 +594,12 @@ def pq_topk(embs: DataFrame, query_id: int, k_neighbors: int = 10,
     to search the STORED index — the plan then touches the raw vectors
     only for the one query row; by default both are fit/encoded
     in-plan."""
-    if dim % m:
-        raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
-    if (books is None) != (codes is None):
-        raise ValueError(
-            "pass books and codes together (both from the stored index) "
-            "or neither — codes encoded against a different codebook "
-            "than the LUT silently corrupt every distance")
-    sub_dim = dim // m
+    sub_dim = _pq_split(dim, m)
+    _check_together(books=books, codes=codes)
     if books is None:
         books = pq_codebooks(embs, m, k, dim=dim)
         codes = pq_codes(embs, m, k, dim=dim, books=books)
-    q_subs = (_sub_lattice_rows(embs, m, sub_dim)
-              .filter(F.col("vec_id") == query_id)
-              .select(F.col("sub").alias("q_sub"),
-                      F.col("subqv").alias("q_vec")))
-    lut = (books.join(F.broadcast(q_subs),
-                      F.col("sub") == F.col("q_sub"))
-           .select(F.col("sub"), F.col("cid"),
-                   _l2sq(F.col("q_vec"), F.col("cv")).alias("d2")))
+    lut = _pq_lut(embs, books, query_id, m, sub_dim)
     return (codes.join(F.broadcast(lut),
                        (codes["sub"] == lut["sub"])
                        & (codes["code"] == lut["cid"]))
@@ -612,42 +639,22 @@ def ivfadc_topk(embs: DataFrame, query_id: int, k_neighbors: int = 10,
     corrupt every distance (same contract as :func:`pq_topk`).  By
     default everything is fit/encoded in-plan (toy sizes / oracles).
     """
-    if dim % m:
-        raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
-    if n_centroids < 2:
-        raise ValueError(f"2 cells are probed: n_centroids must be >= 2; "
-                         f"got {n_centroids}")
-    stored = (cents is not None, books is not None, codes is not None)
-    if any(stored) and not all(stored):
-        raise ValueError(
-            "pass cents, books and codes together (all from the stored "
-            "index) or none — mixing stored and in-plan artifacts can "
-            "pair codes with a codebook they were not encoded against")
-    sub_dim = dim // m
+    sub_dim = _pq_split(dim, m)
+    _check_nprobe(2, n_centroids)
+    _check_together(cents=cents, books=books, codes=codes)
     if cents is None:
         cents = kmeans_centroids(embs, n_centroids)
         books = pq_codebooks(embs, m, k, dim=dim)
         codes = pq_codes(embs, m, k, dim=dim, books=books) \
             .join(assign_centroids(embs, cents=cents)
                   .select(F.col("vec_id"), F.col("cid")), "vec_id")
-    lat = _lattice(embs)
-    probes = (lat.filter(F.col("vec_id") == query_id)
-              .crossJoin(F.broadcast(cents))
-              .select(F.col("cid"),
-                      _l2sq(F.col("qv"), F.col("cv")).alias("d2"))
-              .orderBy("d2", "cid").limit(2).select("cid"))
     # the probed-cid join comes FIRST: the big code table is pruned to
     # the probed cells before any ADC work (file-level when the stored
     # codes are partitioned by cid; a broadcast hash semi-join otherwise)
-    pruned = codes.join(F.broadcast(probes), "cid")
-    q_subs = (_sub_lattice_rows(embs, m, sub_dim)
-              .filter(F.col("vec_id") == query_id)
-              .select(F.col("sub").alias("q_sub"),
-                      F.col("subqv").alias("q_vec")))
-    lut = (books.join(F.broadcast(q_subs),
-                      F.col("sub") == F.col("q_sub"))
-           .select(F.col("sub").alias("l_sub"), F.col("cid").alias("l_cid"),
-                   _l2sq(F.col("q_vec"), F.col("cv")).alias("d2")))
+    pruned = codes.join(F.broadcast(_probes(embs, cents, query_id, 2)), "cid")
+    lut = _pq_lut(embs, books, query_id, m, sub_dim).select(
+        F.col("sub").alias("l_sub"), F.col("cid").alias("l_cid"),
+        F.col("d2"))
     return (pruned.join(F.broadcast(lut),
                         (pruned["sub"] == lut["l_sub"])
                         & (pruned["code"] == lut["l_cid"]))
@@ -672,14 +679,10 @@ def bucketed_topk(embs: DataFrame, query_id: int,
                 V.as_double(F.col("embedding")).alias("q_vec"),
                 F.col("bucket").alias("q_bucket"))
     )
-    sim = F.round(V.cosine(V.as_double(F.col("embedding")), F.col("q_vec")), 6)
-    return (
-        with_bucket.join(F.broadcast(q), with_bucket["bucket"] == q["q_bucket"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(F.col("vec_id"), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id").asc())
-        .limit(10)
-    )
+    return _cosine_rank(
+        with_bucket.join(F.broadcast(q),
+                         with_bucket["bucket"] == q["q_bucket"]),
+        "vec_id", 10)
 
 
 def jl_sign_matrix(spark, in_dim: int, out_dim: int):
@@ -773,16 +776,13 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
     """
     if k < 1:
         raise ValueError(f"k must be >= 1; got {k}")
-    if not 1 <= nprobe <= n_centroids:
-        raise ValueError(f"nprobe must be in [1, {n_centroids}]; got {nprobe}")
+    _check_nprobe(nprobe, n_centroids)
     from pyspark.sql import Window
 
     cents = kmeans_centroids(corpus, n_centroids)
     assigned = assign_centroids(corpus, cents=cents)
-    qlat = _lattice(queries)
-    qdist = (qlat.crossJoin(F.broadcast(cents))
-             .select(F.col("vec_id").alias("query_id"), F.col("cid"),
-                     _l2sq(F.col("qv"), F.col("cv")).alias("d2")))
+    qdist = _cell_d2(_lattice(queries), cents,
+                     F.col("vec_id").alias("query_id"))
     wprobe = Window.partitionBy("query_id").orderBy(F.col("d2").asc(),
                                                     F.col("cid").asc())
     probes = (qdist.withColumn("_pn", F.row_number().over(wprobe))
@@ -790,11 +790,10 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
     qvecs = queries.select(F.col("vec_id").alias("query_id"),
                            V.as_double(F.col("embedding")).alias("q_vec"))
     probe_side = probes.join(qvecs, "query_id")
-    sim = F.round(V.cosine(V.as_double(F.col("embedding")), F.col("q_vec")), 6)
     cand = (assigned.join(F.broadcast(probe_side), "cid")
             .filter(F.col("vec_id") != F.col("query_id"))
             .select(F.col("query_id"), F.col("vec_id"), F.col("cid"),
-                    sim.alias("cosine_sim")))
+                    _cosine_sim()))
     wk = Window.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(),
                                                 F.col("vec_id").asc())
     return (cand.withColumn("rank", F.row_number().over(wk))
@@ -847,19 +846,17 @@ def sq8_codes(embs: DataFrame, bounds: DataFrame | None = None) -> DataFrame:
     single narrow zip_with per vector — no shuffle of the data."""
     if bounds is None:
         bounds = sq8_bounds(embs)
-    brow = _sq8_bounds_row(bounds)
-    lat = _lattice(embs)
-    return (lat.crossJoin(F.broadcast(brow))
-            .select(F.col("vec_id"), _sq8_code_expr().alias("codes")))
+    return _sq8_coded(embs, bounds).select("vec_id", "codes")
 
 
-def _sq8_code_expr() -> F.Column:
-    """The quantize expression over a row carrying (qv, mns, mxs):
-    shared by :func:`sq8_codes` and :func:`sq8_topk`'s in-plan path so
-    the bounds fold has exactly ONE consumer per plan."""
+def _sq8_coded(embs: DataFrame, bounds: DataFrame) -> DataFrame:
+    """(vec_id, codes, mns, mxs): every lattice vector quantized against
+    ``bounds``, the folded bounds arrays carried in the SAME column
+    layer so the per-dim bounds aggregate has exactly one consumer per
+    plan (Catalyst does not reuse the fold across branches)."""
     bz = F.zip_with(F.col("mns"), F.col("mxs"),
                     lambda mn, mx: F.struct(mn.alias("mn"), mx.alias("mx")))
-    return F.zip_with(
+    codes = F.zip_with(
         F.col("qv"), bz,
         lambda v, b: F.when(b["mx"] == b["mn"], F.lit(0).cast("long"))
         .otherwise(F.least(
@@ -867,6 +864,42 @@ def _sq8_code_expr() -> F.Column:
             F.greatest(F.lit(0).cast("long"),
                        F.floor(((v - b["mn"]) * SQ8_LEVELS).cast("double")
                                / (b["mx"] - b["mn"]).cast("double"))))))
+    return (_lattice(embs).crossJoin(F.broadcast(_sq8_bounds_row(bounds)))
+            .select(F.col("vec_id"), codes.alias("codes"), F.col("mns"),
+                    F.col("mxs")))
+
+
+def _sq8_rank(coded: DataFrame, embs: DataFrame, query_id: int, k: int,
+              *carry: str) -> DataFrame:
+    """(vec_id, *carry, sq_d2): the top ``k`` rows of ``coded`` (carrying
+    codes, mns, mxs) by the asymmetric SQ8 distance — exact integer L2
+    between the query's lattice vector and each vector's cell-midpoint
+    reconstruction — ties by ascending id, the query excluded."""
+    q = (_lattice(embs)
+         .filter(F.col("vec_id") == query_id)
+         .select(F.col("qv").alias("qqv")))
+    z = F.arrays_zip(F.col("codes"), F.col("mns"), F.col("mxs"),
+                     F.col("qqv"))
+
+    def _recon(s):
+        return F.when(s["mxs"] == s["mns"], s["mns"]).otherwise(
+            s["mns"] + F.floor(
+                ((2 * s["codes"] + 1) * (s["mxs"] - s["mns"]))
+                .cast("double") / F.lit(2.0 * SQ8_LEVELS)))
+
+    # hoist the branchy reconstruction into ONE transform pass — HOF
+    # lambdas are interpreted (never codegen'd), so referencing
+    # _recon(s) twice inside the aggregate would evaluate the whole
+    # branch chain twice per element (the cross-alias no-CSE rule at
+    # expression scale)
+    diffs = F.transform(z, lambda s: s["qqv"] - _recon(s))
+    d2 = F.aggregate(diffs, F.lit(0).cast("long"),
+                     lambda acc, v: acc + v * v)
+    return (coded.filter(F.col("vec_id") != query_id)
+            .crossJoin(F.broadcast(q))
+            .select(F.col("vec_id"), *carry, d2.alias("sq_d2"))
+            .orderBy(F.col("sq_d2").asc(), F.col("vec_id").asc())
+            .limit(k))
 
 
 def sq8_topk(embs: DataFrame, query_id: int, k: int = 10,
@@ -892,44 +925,12 @@ def sq8_topk(embs: DataFrame, query_id: int, k: int = 10,
     bounds arrays in ONE shared column layer, so the per-dim bounds
     aggregate has exactly one consumer (the multi-consumer re-derive
     discipline — Catalyst does not reuse the fold across branches)."""
-    if (codes is None) != (bounds is None):
-        raise ValueError(
-            "pass codes and bounds together (both from the stored index) "
-            "or neither — codes reconstructed against foreign bounds "
-            "silently corrupt every distance")
+    _check_together(codes=codes, bounds=bounds)
     if codes is None:
-        brow = _sq8_bounds_row(sq8_bounds(embs))
-        coded = (_lattice(embs)
-                 .crossJoin(F.broadcast(brow))
-                 .select(F.col("vec_id"), _sq8_code_expr().alias("codes"),
-                         F.col("mns"), F.col("mxs")))
+        coded = _sq8_coded(embs, sq8_bounds(embs))
     else:
         coded = codes.crossJoin(F.broadcast(_sq8_bounds_row(bounds)))
-    q = (_lattice(embs)
-         .filter(F.col("vec_id") == query_id)
-         .select(F.col("qv").alias("qqv")))
-    z = F.arrays_zip(F.col("codes"), F.col("mns"), F.col("mxs"),
-                     F.col("qqv"))
-
-    def _recon(s):
-        return F.when(s["mxs"] == s["mns"], s["mns"]).otherwise(
-            s["mns"] + F.floor(
-                ((2 * s["codes"] + 1) * (s["mxs"] - s["mns"]))
-                .cast("double") / F.lit(2.0 * SQ8_LEVELS)))
-
-    # hoist the branchy reconstruction into ONE transform pass — HOF
-    # lambdas are interpreted (never codegen'd), so referencing
-    # _recon(s) twice inside the aggregate would evaluate the whole
-    # branch chain twice per element (the cross-alias no-CSE rule at
-    # expression scale)
-    diffs = F.transform(z, lambda s: s["qqv"] - _recon(s))
-    d2 = F.aggregate(diffs, F.lit(0).cast("long"),
-                     lambda acc, v: acc + v * v)
-    return (coded.filter(F.col("vec_id") != query_id)
-            .crossJoin(F.broadcast(q))
-            .select(F.col("vec_id"), d2.alias("sq_d2"))
-            .orderBy(F.col("sq_d2").asc(), F.col("vec_id").asc())
-            .limit(k))
+    return _sq8_rank(coded, embs, query_id, k)
 
 
 def ivfsq_topk(embs: DataFrame, query_id: int, k: int = 10,
@@ -965,56 +966,21 @@ def ivfsq_topk(embs: DataFrame, query_id: int, k: int = 10,
     n_centroids of the corpus; bounds row, probe list and query vector
     all broadcast; TakeOrderedAndProject keeps top-k memory O(k) per
     task — no shuffle at all in stored mode."""
-    if not 1 <= nprobe <= n_centroids:
-        raise ValueError(f"nprobe must be in [1, {n_centroids}]; got {nprobe}")
-    stored = (cents is not None, bounds is not None, codes is not None)
-    if any(stored) and not all(stored):
-        raise ValueError(
-            "pass cents, bounds and codes together (all from the stored "
-            "index) or none — mixing stored and in-plan artifacts can "
-            "pair codes with bounds/cells they were not encoded under")
+    _check_nprobe(nprobe, n_centroids)
+    _check_together(cents=cents, bounds=bounds, codes=codes)
     if cents is None:
         cents = kmeans_centroids(embs, n_centroids)
-        brow = _sq8_bounds_row(sq8_bounds(embs))
-        coded = (_lattice(embs)
-                 .crossJoin(F.broadcast(brow))
-                 .select(F.col("vec_id"), _sq8_code_expr().alias("codes"),
-                         F.col("mns"), F.col("mxs"))
+        coded = (_sq8_coded(embs, sq8_bounds(embs))
                  .join(assign_centroids(embs, cents=cents)
                        .select(F.col("vec_id"), F.col("cid")), "vec_id"))
     else:
         coded = codes.crossJoin(F.broadcast(_sq8_bounds_row(bounds)))
-    lat = _lattice(embs)
-    probes = (lat.filter(F.col("vec_id") == query_id)
-              .crossJoin(F.broadcast(cents))
-              .select(F.col("cid"),
-                      _l2sq(F.col("qv"), F.col("cv")).alias("d2"))
-              .orderBy("d2", "cid").limit(nprobe).select("cid"))
     # the probed-cid join comes FIRST: the code table is pruned to the
     # nprobe cells before any reconstruction work (file-level when the
     # stored codes are partitioned by cid)
-    pruned = coded.join(F.broadcast(probes), "cid")
-    q = (lat.filter(F.col("vec_id") == query_id)
-         .select(F.col("qv").alias("qqv")))
-    z = F.arrays_zip(F.col("codes"), F.col("mns"), F.col("mxs"),
-                     F.col("qqv"))
-
-    def _recon(s):
-        return F.when(s["mxs"] == s["mns"], s["mns"]).otherwise(
-            s["mns"] + F.floor(
-                ((2 * s["codes"] + 1) * (s["mxs"] - s["mns"]))
-                .cast("double") / F.lit(2.0 * SQ8_LEVELS)))
-
-    # single-pass reconstruction (see sq8_topk: HOF lambdas are
-    # interpreted, referencing _recon twice doubles the branch work)
-    diffs = F.transform(z, lambda s: s["qqv"] - _recon(s))
-    d2 = F.aggregate(diffs, F.lit(0).cast("long"),
-                     lambda acc, v: acc + v * v)
-    return (pruned.filter(F.col("vec_id") != query_id)
-            .crossJoin(F.broadcast(q))
-            .select(F.col("vec_id"), F.col("cid"), d2.alias("sq_d2"))
-            .orderBy(F.col("sq_d2").asc(), F.col("vec_id").asc())
-            .limit(k))
+    pruned = coded.join(F.broadcast(_probes(embs, cents, query_id, nprobe)),
+                        "cid")
+    return _sq8_rank(pruned, embs, query_id, k, "cid")
 
 
 def lattice_l2_topk(embs: DataFrame, query_id: int, k: int = 10) -> DataFrame:
@@ -1031,3 +997,20 @@ def lattice_l2_topk(embs: DataFrame, query_id: int, k: int = 10) -> DataFrame:
                     _l2sq(F.col("qv"), F.col("qqv")).alias("d2"))
             .orderBy(F.col("d2").asc(), F.col("vec_id").asc())
             .limit(k))
+
+
+def recall_at_k(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:
+    """Recall@k of an approximate top-k against the exact one — the
+    stated error every approximate answer comes with.  Returns the one
+    row (k, n_hits, recall_micro): ``n_hits`` counts the exact
+    neighbours (by ``vec_id``) the approximate list also holds and
+    ``recall_micro`` = n_hits * 10^6 div k, integer micro-units that
+    every engine reproduces bit-for-bit."""
+    hits = (exact.select("vec_id")
+            .join(approx.select("vec_id"), "vec_id", "left_semi")
+            .agg(F.count(F.lit(1)).alias("n_hits")))
+    return hits.select(
+        F.lit(k).cast("long").alias("k"),
+        F.col("n_hits").cast("long").alias("n_hits"),
+        F.expr(f"cast((n_hits * 1000000) div {k} as bigint)")
+        .alias("recall_micro"))

@@ -826,3 +826,64 @@ def test_knn_join_prunes_by_probed_cells_and_group_limits(spark):
     # blocking regressed to all-pairs (the only nested-loop joins
     # allowed are the k-row centroid / one-row query broadcasts)
     assert "CartesianProduct" not in plan
+
+
+#: Relation (scan) leaves in each vector operator's optimized logical
+#: plan over the sf0.01 embeddings.  Every leaf is a re-derivation from
+#: the table: a shared layer lowers its operator's number, and a change
+#: that lowers one updates this table and says so.
+VECTOR_PLAN_LEAVES = {
+    "ivfadc_topk": 34, "pq_topk": 26, "pq_codes": 13, "pq_codebooks": 12,
+    "semantic_dedup": 12, "ivfsq_topk": 11, "recall_at_k": 11,
+    "ivf_topk": 9, "ivf_topk_sampled": 9, "knn_join": 9,
+    "semantic_near_pairs": 8, "cluster_profile": 4, "assign_centroids": 4,
+    "kmeans_centroids": 3, "kmeans_centroids_sampled": 3, "sq8_topk": 3,
+    "sq8_codes": 2, "jl_topk": 2, "cosine_topk": 2, "lattice_l2_topk": 2,
+    "bucketed_topk": 2, "bucketed_topk_multiprobe": 2,
+    "project_embeddings": 1, "sq8_bounds": 1, "bucket_histogram": 1,
+}
+
+
+def test_vector_family_plan_sizes(spark):
+    """Pins how often each public vector operator reads its input.  The
+    input is a parquet table, so every read stays a leaf (a
+    ``createDataFrame`` input folds to local relations instead)."""
+    from rca_pdf_extraction_pipeline_spark.operators import similarity as S
+
+    embs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    ops = {
+        "ivfadc_topk": S.ivfadc_topk(embs, 0),
+        "pq_topk": S.pq_topk(embs, 0),
+        "pq_codes": S.pq_codes(embs),
+        "pq_codebooks": S.pq_codebooks(embs),
+        "semantic_dedup": S.semantic_dedup(embs),
+        "ivfsq_topk": S.ivfsq_topk(embs, 0),
+        "recall_at_k": S.recall_at_k(S.cosine_topk(embs, 0),
+                                     S.ivf_topk(embs, 0), 10),
+        "ivf_topk": S.ivf_topk(embs, 0),
+        "ivf_topk_sampled": S.ivf_topk_sampled(embs, 0),
+        "knn_join": S.knn_join(embs.filter("vec_id % 100 = 0"), embs),
+        "semantic_near_pairs": S.semantic_near_pairs(embs),
+        "cluster_profile": S.cluster_profile(embs),
+        "assign_centroids": S.assign_centroids(embs),
+        "kmeans_centroids": S.kmeans_centroids(embs),
+        "kmeans_centroids_sampled": S.kmeans_centroids_sampled(embs),
+        "sq8_topk": S.sq8_topk(embs, 0),
+        "sq8_codes": S.sq8_codes(embs),
+        "jl_topk": S.jl_topk(embs, 0, 10),
+        "cosine_topk": S.cosine_topk(embs, 0),
+        "lattice_l2_topk": S.lattice_l2_topk(embs, 0),
+        "bucketed_topk": S.bucketed_topk(embs, 0),
+        "bucketed_topk_multiprobe": S.bucketed_topk_multiprobe(embs, 0),
+        "project_embeddings": S.project_embeddings(embs),
+        "sq8_bounds": S.sq8_bounds(embs),
+        "bucket_histogram": S.bucket_histogram(embs),
+    }
+
+    def leaves(df):
+        found = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        return sum(found.apply(i).getClass().getSimpleName()
+                   == "LogicalRelation" for i in range(found.size()))
+
+    assert {name: leaves(df) for name, df in ops.items()} \
+        == VECTOR_PLAN_LEAVES

@@ -142,7 +142,7 @@ def test_simhash_lane_cap_default_unchanged(corpus):
 
 def test_minhash_bands_must_divide(corpus):
     with pytest.raises(ValueError, match="divide"):
-        dedup.minhash_band_keys(corpus, n_hashes=8, bands=3)
+        dedup.minhash_band_keys(corpus, bands=3)
 
 
 def _star_corpus(spark):
@@ -1840,6 +1840,73 @@ def test_ivfsq_guards(clustered_vecs):
     with pytest.raises(ValueError, match="nprobe"):
         similarity.ivfsq_topk(clustered_vecs, query_id=0, nprobe=9,
                               n_centroids=2)
+
+
+# ---- recall of the approximate operators (similarity.recall_at_k) --------
+# Each case pins an identity the design guarantees — probing every cell
+# or clustering into one cell leaves nothing to miss — so recall is
+# exactly 1, with no fitted threshold.
+
+
+def _recall(exact, approx, k):
+    row = similarity.recall_at_k(exact, approx, k).collect()[0]
+    return (row["k"], row["n_hits"], row["recall_micro"])
+
+
+def test_recall_at_k_counts_hits(spark):
+    exact = spark.createDataFrame([(i,) for i in range(10)], "vec_id long")
+    approx = spark.createDataFrame(
+        [(i,) for i in [0, 1, 2, 3, 4, 5, 6, 20, 21, 22]], "vec_id long")
+    assert _recall(exact, approx, 10) == (10, 7, 700000)
+
+
+def test_ivfadc_probing_every_cell_equals_pq(pq_vecs):
+    """2 cells, 2 probed: IVFADC ranks the whole code table, exactly as
+    exhaustive ADC does with the same codebooks.  k=7 ranks every other
+    vector, so a probe that skipped the other cell would lose rows."""
+    ivf = similarity.ivfadc_topk(pq_vecs, query_id=0, k_neighbors=7,
+                                 n_centroids=2, m=2, k=2, dim=8)
+    pq = similarity.pq_topk(pq_vecs, query_id=0, k_neighbors=7,
+                            m=2, k=2, dim=8)
+    assert [(r["vec_id"], r["adc_d2"]) for r in ivf.collect()] == \
+        [(r["vec_id"], r["adc_d2"]) for r in pq.collect()]
+    assert _recall(pq, ivf, 7) == (7, 7, 1000000)
+
+
+def test_knn_join_probing_every_cell_equals_brute_force(clustered_vecs):
+    """Every cell probed: each query's neighbours are the brute-force
+    ones.  k=7 reaches into the other cluster's cell."""
+    qs = clustered_vecs.filter("vec_id IN (0, 3)")
+    got = similarity.knn_join(qs, clustered_vecs, k=7, n_centroids=2,
+                              nprobe=2)
+    for qid in (0, 3):
+        approx = got.filter(F.col("query_id") == qid)
+        exact = similarity.cosine_topk(clustered_vecs, query_id=qid, k=7)
+        assert [(r["vec_id"], r["cosine_sim"]) for r in approx.collect()] \
+            == [(r["vec_id"], r["cosine_sim"]) for r in exact.collect()]
+        assert _recall(exact, approx, 7) == (7, 7, 1000000)
+
+
+def test_semantic_near_pairs_one_cell_equals_all_pairs(clustered_vecs):
+    """One cluster compares every pair: the result is the exact all-pairs
+    cosine >= threshold set.  Threshold 0 keeps some cross-cluster pairs
+    (cosine about +0.01) and drops others (about -0.01)."""
+    got = {(r["id_a"], r["id_b"]): r["cosine_sim"] for r in
+           similarity.semantic_near_pairs(clustered_vecs, n_centroids=1,
+                                          threshold=0.0).collect()}
+    vecs = {r["vec_id"]: r["embedding"] for r in clustered_vecs.collect()}
+    want = {}
+    for a in vecs:
+        for b in vecs:
+            if a < b:
+                dot = sum(x * y for x, y in zip(vecs[a], vecs[b]))
+                cos = dot / math.sqrt(sum(x * x for x in vecs[a])
+                                      * sum(y * y for y in vecs[b]))
+                if cos >= 0.0:
+                    want[(a, b)] = cos
+    assert set(got) == set(want) and 12 < len(want) < 28
+    for pair, cos in want.items():
+        assert got[pair] == pytest.approx(cos, abs=1e-6)
 
 
 # ---- stored-LM scoring (serving-form perplexity filter) --------------------
