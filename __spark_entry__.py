@@ -3,10 +3,10 @@
 ``entry(spark)`` — flagship extraction over sf0.001 corpus + golden
 fixture docs. ``queries()``/``oracle_sql()`` — one entry per operator
 family from SURVEY.md §2 plus the training-data pipeline operators
-(dedup / similarity / text analytics); each Spark query has an exact
-ANSI-SQL DuckDB twin unless the op is non-SQL-expressible (the nested
-span extraction itself, which is oracled against committed golden
-parquet instead).
+(dedup / similarity / text analytics); every Spark query has a DuckDB
+twin (the nested span extraction's twins read committed golden
+parquet).  A CTE chain that several twins share is written once, in
+the oracle building blocks above ``oracle_sql``.
 
 Cross-engine determinism rules used throughout (see
 rca_pdf_extraction_pipeline_spark/functions/*):
@@ -1542,19 +1542,25 @@ def _interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
     return interleaved.synth_interleaved(_t(spark, sf_dir, "documents"))
 
 
+def _span_rows(docs: DataFrame) -> DataFrame:
+    """One (doc_id, offset, kind, text, media_ref) row per span of
+    ``docs`` (doc_id, spans).  explode_outer + generated-column filter:
+    plain explode's pushed pre-Generate filter re-evaluates a computed
+    spans array 2x/row."""
+    return (docs.select("doc_id", F.explode_outer("spans").alias("s"))
+            .filter(F.col("s").isNotNull())
+            .select("doc_id", F.col("s.offset").alias("offset"),
+                    F.col("s.kind").alias("kind"),
+                    F.col("s.text").alias("text"),
+                    F.col("s.media_ref").alias("media_ref")))
+
+
 def _q_interleaved_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exploded interleaved spans table: every (kind, text, media_ref,
     offset) row of the synthetic lift — pins the derivation rule
     itself (position arithmetic, chunk slicing, media naming) against
     the pure-SQL replay."""
-    # explode_outer + generated-column filter: plain explode's pushed
-    # pre-Generate filter re-evaluates the synthesis transform 2x/row
-    return _interleaved(spark, sf_dir).select(
-        "doc_id", F.explode_outer("spans").alias("s")) \
-        .filter(F.col("s").isNotNull()).select(
-        "doc_id", F.col("s.offset").alias("offset"),
-        F.col("s.kind").alias("kind"), F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"))
+    return _span_rows(_interleaved(spark, sf_dir))
 
 
 def _q_interleaved_captions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1578,13 +1584,8 @@ def _q_interleaved_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     paragraph span (DOM text-node coalescing at span granularity),
     offsets renumbered from the merge rule.  Fully narrow — one O(n)
     fold per doc, zero shuffle; exploded for the oracle compare."""
-    merged = interleaved.merge_adjacent_text(_interleaved(spark, sf_dir))
-    ex = (merged.select(F.col("doc_id"), F.explode_outer("spans").alias("s"))
-          .filter(F.col("s").isNotNull()))
-    return ex.select(
-        F.col("doc_id"), F.col("s.offset").alias("offset"),
-        F.col("s.kind").alias("kind"), F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"))
+    return _span_rows(
+        interleaved.merge_adjacent_text(_interleaved(spark, sf_dir)))
 
 
 def _q_media_context(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1827,7 +1828,11 @@ def _bpe_merges_oracle(k: int) -> str:
         """
 
 
-def _bpe_token_stats_oracle(k: int) -> str:
+def _bpe_encoded_words(k: int) -> str:
+    """The k learned merges (_bpe_oracle_rounds) applied to every corpus
+    word: ``wenc`` (doc_id, source, enc) holds the encoded word, NULL
+    for a word outside the byte-level alphabet (it counts as one
+    token)."""
     chain = r"regexp_replace(w, '(.)', '|\1|', 'g') || '|</w>|'"
     for i in range(1, k + 1):
         chain = (f"replace({chain}, "
@@ -1835,25 +1840,32 @@ def _bpe_token_stats_oracle(k: int) -> str:
                  f"|| (SELECT r FROM b{i}) || '|', "
                  f"'|' || (SELECT l FROM b{i}) "
                  f"|| (SELECT r FROM b{i}) || '|')")
-    return f"""
-            WITH {_bpe_oracle_rounds(k)},
+    return f"""{_bpe_oracle_rounds(k)},
             words AS (
-              SELECT doc_id,
+              SELECT doc_id, source,
                      unnest(list_filter(string_split(text, ' '),
                                         t -> t != '')) AS w
               FROM documents),
             wenc AS (
-              SELECT doc_id,
+              SELECT doc_id, source,
                      CASE WHEN regexp_matches(w, '^[!-~]+$')
                                AND NOT contains(w, '|')
                           THEN {chain}
                           ELSE NULL END AS enc
-              FROM words)
-            SELECT doc_id,
-                   SUM(CASE WHEN enc IS NULL THEN 1
+              FROM words)"""
+
+
+#: BPE tokens of the ``wenc`` rows: units are pipe pairs
+_SQL_BPE_TOKENS = """SUM(CASE WHEN enc IS NULL THEN 1
                             ELSE (length(enc)
                                   - length(replace(enc, '|', ''))) / 2
-                       END)::BIGINT AS n_bpe_tokens
+                       END)::BIGINT"""
+
+
+def _bpe_token_stats_oracle(k: int) -> str:
+    return f"""
+            WITH {_bpe_encoded_words(k)}
+            SELECT doc_id, {_SQL_BPE_TOKENS} AS n_bpe_tokens
             FROM wenc GROUP BY doc_id
         """
 
@@ -1975,33 +1987,11 @@ def _q_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bpe_fertility_oracle(k: int) -> str:
-    chain = r"regexp_replace(w, '(.)', '|\1|', 'g') || '|</w>|'"
-    for i in range(1, k + 1):
-        chain = (f"replace({chain}, "
-                 f"'|' || (SELECT l FROM b{i}) || '||' "
-                 f"|| (SELECT r FROM b{i}) || '|', "
-                 f"'|' || (SELECT l FROM b{i}) "
-                 f"|| (SELECT r FROM b{i}) || '|')")
     return f"""
-            WITH {_bpe_oracle_rounds(k)},
-            words AS (
-              SELECT doc_id, source,
-                     unnest(list_filter(string_split(text, ' '),
-                                        t -> t != '')) AS w
-              FROM documents),
-            wenc AS (
-              SELECT source,
-                     CASE WHEN regexp_matches(w, '^[!-~]+$')
-                               AND NOT contains(w, '|')
-                          THEN {chain}
-                          ELSE NULL END AS enc
-              FROM words),
+            WITH {_bpe_encoded_words(k)},
             per_src AS (
               SELECT source, COUNT(*)::BIGINT AS n_words,
-                     SUM(CASE WHEN enc IS NULL THEN 1
-                              ELSE (length(enc)
-                                    - length(replace(enc, '|', ''))) / 2
-                         END)::BIGINT AS n_bpe_tokens
+                     {_SQL_BPE_TOKENS} AS n_bpe_tokens
               FROM wenc GROUP BY source)
             SELECT source, n_words, n_bpe_tokens,
                    round(n_bpe_tokens::DOUBLE
@@ -2436,19 +2426,23 @@ def _q_heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sketches.heavy_hitters(toks, "token", threshold=500)
 
 
-def _q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric containment (quote detection): short snippet docs —
-    deterministically derived as the first 40 tokens of every 5th doc,
-    mirrored in the oracle — score ~1.0 against their parents even
-    though symmetric Jaccard is tiny."""
+def _snippet_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents plus short snippet docs, deterministically derived
+    as the first 40 tokens of every 5th doc (id + 100000) — mirrored in
+    the oracle CTE ``corpus``."""
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     snips = (d.filter(F.col("doc_id") % 5 == 0)
              .select((F.col("doc_id") + 100000).alias("doc_id"),
                      F.array_join(
                          F.slice(textfns.tokens(F.col("text")), 1, 40), " ")
                      .alias("text")))
-    corpus = d.unionByName(snips)
-    return dedup.containment_pairs(corpus)
+    return d.unionByName(snips)
+
+
+def _q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Asymmetric containment (quote detection): the snippet docs score
+    ~1.0 against their parents even though symmetric Jaccard is tiny."""
+    return dedup.containment_pairs(_snippet_corpus(spark, sf_dir))
 
 
 def _q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2457,14 +2451,7 @@ def _q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares runs far beyond w+k-1 = 6 words with its parent, so the
     winnowing guarantee forces each (parent, snippet) pair into the
     candidate set from an index ~2/(w+1) the full-shingle size."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    snips = (d.filter(F.col("doc_id") % 5 == 0)
-             .select((F.col("doc_id") + 100000).alias("doc_id"),
-                     F.array_join(
-                         F.slice(textfns.tokens(F.col("text")), 1, 40), " ")
-                     .alias("text")))
-    corpus = d.unionByName(snips)
-    return dedup.winnow_overlap_pairs(corpus)
+    return dedup.winnow_overlap_pairs(_snippet_corpus(spark, sf_dir))
 
 
 def _q_dedup_corpus_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2472,14 +2459,7 @@ def _q_dedup_corpus_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     snippet pairs with its parent (guaranteed by the shared 40-token
     run), so components collapse to the parent id and the survivor set
     is (almost exactly) the original corpus."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    snips = (d.filter(F.col("doc_id") % 5 == 0)
-             .select((F.col("doc_id") + 100000).alias("doc_id"),
-                     F.array_join(
-                         F.slice(textfns.tokens(F.col("text")), 1, 40), " ")
-                     .alias("text")))
-    corpus = d.unionByName(snips)
-    return dedup.deduplicate_corpus_winnow(corpus) \
+    return dedup.deduplicate_corpus_winnow(_snippet_corpus(spark, sf_dir)) \
         .select("doc_id", F.length("text").alias("n_chars"))
 
 
@@ -2504,13 +2484,7 @@ def _q_html_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw markup -> interleaved spans (input_hint shape): block text
     split at every <img> position, images as spans of their own,
     offsets from the markup.  Exploded for the value compare."""
-    sp = htmlparse.to_spans(_html_corpus(spark, sf_dir))
-    return (sp.select("doc_id", F.explode_outer("spans").alias("s"))
-            .filter(F.col("s").isNotNull())
-            .select("doc_id", F.col("s.offset").alias("offset"),
-                    F.col("s.kind").alias("kind"),
-                    F.col("s.text").alias("text"),
-                    F.col("s.media_ref").alias("media_ref")))
+    return _span_rows(htmlparse.to_spans(_html_corpus(spark, sf_dir)))
 
 
 def _q_html_main_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2518,13 +2492,8 @@ def _q_html_main_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring + neighbour smoothing run in-array per document before
     span assembly — nav/footer/title boilerplate dropped, zero
     shuffle (plan-pinned).  The north_star sentence as a query."""
-    sp = htmlparse.to_spans(_html_corpus(spark, sf_dir), content_only=True)
-    return (sp.select("doc_id", F.explode_outer("spans").alias("s"))
-            .filter(F.col("s").isNotNull())
-            .select("doc_id", F.col("s.offset").alias("offset"),
-                    F.col("s.kind").alias("kind"),
-                    F.col("s.text").alias("text"),
-                    F.col("s.media_ref").alias("media_ref")))
+    return _span_rows(
+        htmlparse.to_spans(_html_corpus(spark, sf_dir), content_only=True))
 
 
 def _q_html_links(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2800,29 +2769,781 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {k: defs[k] for k in _driver_order(list(defs), REPO)}
 
 
+# --------------------------------------------------------------------------
+# DuckDB oracle building blocks: every CTE chain that more than one oracle
+# runs is written once here, and the oracles compose them
+# (tests/test_oracle_parity.py::test_no_six_line_window_repeats)
+# --------------------------------------------------------------------------
+
+_STOPWORDS_SQL = "[" + ",".join(f"'{w}'" for w in textfns.EN_STOPWORDS) + "]"
+
+#: text_quality twin (textanalysis.quality_scores)
+_SQL_QUALITY = f"""
+            WITH t AS (
+              SELECT doc_id, text,
+                     list_filter(string_split(text, ' '), x -> x != '') AS toks,
+                     greatest(length(text), 1)::DOUBLE AS total,
+                     length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))::DOUBLE AS alpha,
+                     length(regexp_replace(text, '[^0-9]', '', 'g'))::DOUBLE AS digit
+              FROM documents),
+            r AS (
+              SELECT doc_id, alpha / total AS alpha_ratio, digit / total AS digit_ratio,
+                     len(list_filter(toks, x -> list_contains({_STOPWORDS_SQL}, lower(x))))::DOUBLE
+                       / greatest(len(toks), 1)::DOUBLE AS stop_ratio
+              FROM t)
+            SELECT doc_id,
+              round(alpha_ratio, 6) AS alpha_ratio,
+              round(digit_ratio, 6) AS digit_ratio,
+              round(stop_ratio, 6) AS stopword_ratio,
+              round(0.5 * alpha_ratio + 0.3 * stop_ratio + 0.2 * (1.0 - digit_ratio), 6)
+                AS quality_score
+            FROM r
+    """
+
+#: text_langid twin (textanalysis.language_id)
+_SQL_LANGID = f"""
+            WITH t AS (
+              SELECT doc_id,
+                     list_filter(string_split(text, ' '), x -> x != '') AS toks
+              FROM documents),
+            r AS (
+              SELECT doc_id,
+                     len(list_filter(toks, x -> list_contains({_STOPWORDS_SQL}, lower(x))))::DOUBLE
+                       / greatest(len(toks), 1)::DOUBLE AS ratio
+              FROM t)
+            SELECT doc_id, round(ratio, 6) AS stopword_ratio,
+                   CASE WHEN ratio >= 0.03 THEN 'en' ELSE 'und' END AS pred_lang
+            FROM r
+    """
+
+#: text_repetition twin (textanalysis.repetition_stats)
+_SQL_REPETITION = """
+            WITH d AS (
+              SELECT doc_id,
+                     list_filter(string_split(text, ' '), x -> x != '') AS tk
+              FROM documents),
+            g2 AS (
+              SELECT doc_id, tk[i] || ' ' || tk[i+1] AS gram
+              FROM d, unnest(generate_series(1, len(tk) - 1)) AS t(i)
+              WHERE len(tk) >= 2),
+            m2 AS (
+              SELECT doc_id, gram, COUNT(*) AS cnt,
+                     COUNT(*) * length(gram) AS mass
+              FROM g2 GROUP BY doc_id, gram),
+            r2 AS (
+              SELECT doc_id, MAX(mass)::DOUBLE / SUM(mass)::DOUBLE AS top2
+              FROM m2 GROUP BY doc_id),
+            g5 AS (
+              SELECT doc_id,
+                     tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' '
+                     || tk[i+3] || ' ' || tk[i+4] AS gram
+              FROM d, unnest(generate_series(1, len(tk) - 4)) AS t(i)
+              WHERE len(tk) >= 5),
+            m5 AS (
+              SELECT doc_id, gram, COUNT(*) AS cnt,
+                     COUNT(*) * length(gram) AS mass
+              FROM g5 GROUP BY doc_id, gram),
+            r5 AS (
+              SELECT doc_id,
+                     SUM(CASE WHEN cnt >= 2 THEN mass ELSE 0 END)::DOUBLE
+                       / SUM(mass)::DOUBLE AS dup5
+              FROM m5 GROUP BY doc_id)
+            SELECT d.doc_id,
+                   round(COALESCE(r2.top2, 0.0), 6) AS top_2gram_frac,
+                   round(COALESCE(r5.dup5, 0.0), 6) AS dup_5gram_frac
+            FROM d LEFT JOIN r2 ON d.doc_id = r2.doc_id
+                   LEFT JOIN r5 ON d.doc_id = r5.doc_id
+    """
+
+#: the curation verdict per doc (curation.curation_flags): language,
+#: then quality, then repetition, else keep
+_SQL_CURATION_FLAGS = f"""
+            WITH q AS ({_SQL_QUALITY}),
+            l AS ({_SQL_LANGID}),
+            r AS ({_SQL_REPETITION}),
+            flags AS (
+              SELECT l.doc_id, l.pred_lang, q.quality_score,
+                     r.top_2gram_frac, r.dup_5gram_frac,
+                     CASE WHEN l.pred_lang NOT IN ('en') THEN 'lang'
+                          WHEN q.quality_score < 0.45 THEN 'quality'
+                          WHEN r.top_2gram_frac > 0.35
+                               OR r.dup_5gram_frac > 0.35 THEN 'repetition'
+                          ELSE 'keep' END AS reject_reason
+              FROM l JOIN q ON l.doc_id = q.doc_id
+                     JOIN r ON l.doc_id = r.doc_id)"""
+
+#: MinHash LSH over ``sh`` (_SQL_SHINGLE_BASE): one md5 per shingle,
+#: eight universal-hash permutations (functions/hashing.MINHASH_SEEDS)
+#: in ``sig``, which keeps ``shset``, and 2 bands x 4 rows of band keys
+_SQL_MINHASH_KEYS = """
+            sigbase AS (
+              SELECT doc_id, shset,
+                     list_transform(shset, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS hv
+              FROM sh),
+            sig AS (SELECT doc_id, shset, """ + ", ".join(
+    f"list_aggregate(list_transform(hv, h -> ({a} * h + {b}) % {H.MINHASH_MOD}), 'min')"
+    f" AS sig_{s}" for s, (a, b) in enumerate(H.MINHASH_SEEDS)) + """ FROM sigbase),
+            keys AS (
+              SELECT doc_id, 0 AS band,
+                     sig_0::VARCHAR || '-' || sig_1::VARCHAR || '-'
+                       || sig_2::VARCHAR || '-' || sig_3::VARCHAR AS band_key FROM sig
+              UNION ALL
+              SELECT doc_id, 1 AS band,
+                     sig_4::VARCHAR || '-' || sig_5::VARCHAR || '-'
+                       || sig_6::VARCHAR || '-' || sig_7::VARCHAR AS band_key FROM sig)"""
+
+#: LSH candidate pairs: a shared band key, each pair once (id_a < id_b)
+_SQL_MINHASH_CAND = """
+            cand AS (
+              SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+              FROM keys a JOIN keys b
+                ON a.band = b.band AND a.band_key = b.band_key
+               AND a.doc_id < b.doc_id)"""
+
+
+def _sql_jaccard(a: str, b: str) -> str:
+    """Exact Jaccard of two shingle sets, rounded to 6 dp."""
+    return (f"round(len(list_intersect({a}.shset, {b}.shset))::DOUBLE\n"
+            f"                    / len(list_distinct(list_concat({a}.shset, "
+            f"{b}.shset)))::DOUBLE, 6)")
+
+
+def _sql_components(pairs: str) -> str:
+    """Connected components of the undirected ``(id_a, id_b)`` relation
+    ``pairs``: per node the least id it reaches (``minlab``; a node
+    with no pair has no row).  Needs ``WITH RECURSIVE``."""
+    return f"""
+            edges AS (SELECT id_a AS src, id_b AS dst FROM {pairs}
+                      UNION
+                      SELECT id_b, id_a FROM {pairs}),
+            reach(src, dst) AS (
+              SELECT src, dst FROM edges
+              UNION
+              SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
+            minlab AS (
+              SELECT src AS doc_id, least(src, min(dst)) AS label
+              FROM reach GROUP BY src)"""
+
+
+#: MinHash LSH candidates verified at exact Jaccard >= 0.8
+#: (dedup.deduplicate_corpus)
+_SQL_LSH_VERIFIED = f"""{_SQL_SHINGLE_BASE},{_SQL_MINHASH_KEYS},{_SQL_MINHASH_CAND},
+            verified AS (
+              SELECT c.id_a, c.id_b
+              FROM cand c
+              JOIN sh sa ON sa.doc_id = c.id_a
+              JOIN sh sb ON sb.doc_id = c.id_b
+              WHERE {_sql_jaccard('sa', 'sb')} >= 0.8)"""
+
+#: ... and their connected components (``cc`` dedup)
+_SQL_LSH_COMPONENTS = ("\n            WITH RECURSIVE " + _SQL_LSH_VERIFIED + ","
+                       + _sql_components("verified"))
+
+#: every document's component label (its own id when it has no
+#: near-duplicate)
+_SQL_COMPONENT_LABELS = """
+            lab AS (
+              SELECT d.doc_id, COALESCE(m.label, d.doc_id) AS label, d.n_chars
+              FROM documents d LEFT JOIN minlab m ON m.doc_id = d.doc_id)"""
+
+#: the leakage-safe split (sampling.leakage_safe_split): the sample_split
+#: bucket rule applied to the component label, so near-duplicate
+#: components co-travel
+_SQL_LEAKAGE_SAFE_SPLIT = _SQL_LSH_COMPONENTS + "," + _SQL_COMPONENT_LABELS + """,
+            bk AS (SELECT doc_id,
+                     ('0x' || substr(md5('0:' || label::VARCHAR), 1, 8))::BIGINT
+                     % 1000000 AS bkt
+                   FROM lab),
+            sp AS (SELECT doc_id,
+                     CASE WHEN bkt < 800000 THEN 'train'
+                          WHEN bkt < 900000 THEN 'val'
+                          ELSE 'test' END AS split
+                   FROM bk)"""
+
+
+def _sql_nb_confusion(train: str, test: str) -> str:
+    """Confusion matrix of the multinomial NB language classifier
+    (textanalysis.nb_classify) trained on the documents of ``train`` and
+    scored on those of ``test``: Laplace-smoothed counts, quantized-log
+    integer scores, argmax ties by class."""
+    return f"""
+            tr_tok AS (SELECT lang AS actual,
+                         unnest(list_filter(string_split(text, ' '),
+                                            t -> t != '')) AS token
+                       FROM {train}),
+            tok AS (SELECT doc_id AS doc, lang AS actual,
+                      unnest(list_filter(string_split(text, ' '),
+                                         t -> t != '')) AS token
+                    FROM {test}),
+            cc AS (SELECT actual AS cls, token,
+                     round(ln((COUNT(*) + 1)::DOUBLE) * 1000000)::BIGINT AS lp
+                   FROM tr_tok GROUP BY 1, 2),
+            v AS (SELECT COUNT(DISTINCT token)::BIGINT AS v FROM tr_tok),
+            nd AS (SELECT COUNT(*)::BIGINT AS n_docs FROM {train}),
+            ncls AS (SELECT lang AS cls, COUNT(*)::BIGINT AS n_c
+                     FROM {train} GROUP BY lang),
+            tot AS (SELECT actual AS cls, COUNT(*)::BIGINT AS tot
+                    FROM tr_tok GROUP BY 1),
+            stats AS (SELECT tot.cls,
+                        round(ln((tot.tot + v.v)::DOUBLE)
+                              * 1000000)::BIGINT AS lp_denom,
+                        round(ln(ncls.n_c::DOUBLE / nd.n_docs::DOUBLE)
+                              * 1000000)::BIGINT AS lp_prior
+                      FROM tot CROSS JOIN v CROSS JOIN nd
+                      JOIN ncls ON ncls.cls = tot.cls),
+            obs AS (SELECT tok.doc, cc.cls, SUM(cc.lp)::BIGINT AS lp_obs
+                    FROM tok JOIN cc ON cc.token = tok.token
+                    GROUP BY 1, 2),
+            pdoc AS (SELECT doc_id AS doc, lang AS actual,
+                       len(list_filter(string_split(text, ' '),
+                                       t -> t != ''))::BIGINT AS n_tok
+                     FROM {test}),
+            scored AS (SELECT pdoc.doc, pdoc.actual, s.cls,
+                         (s.lp_prior + COALESCE(o.lp_obs, 0)
+                          - pdoc.n_tok * s.lp_denom)::BIGINT AS score
+                       FROM pdoc CROSS JOIN stats s
+                       LEFT JOIN obs o ON o.doc = pdoc.doc AND o.cls = s.cls),
+            pick AS (SELECT doc, actual, cls AS predicted FROM (
+                       SELECT scored.*, ROW_NUMBER() OVER (
+                         PARTITION BY doc ORDER BY score DESC, cls ASC) AS rn
+                       FROM scored) WHERE rn = 1)
+            SELECT actual, predicted, COUNT(*)::BIGINT AS n_docs
+            FROM pick GROUP BY 1, 2 ORDER BY 1, 2
+        """
+
+
+#: the snippet-augmented corpus of the pair queries (entry
+#: ``_snippet_corpus``): every document, plus the first 40 tokens of
+#: every 5th one as doc ``doc_id + 100000``
+_SQL_SNIPPET_CORPUS = """
+            base AS (
+              SELECT doc_id, text,
+                     list_filter(string_split(text, ' '), x -> x != '') AS toks
+              FROM documents),
+            corpus AS (
+              SELECT doc_id, text, toks FROM base
+              UNION ALL
+              SELECT doc_id + 100000 AS doc_id,
+                     array_to_string(toks[1:40], ' ') AS text,
+                     toks[1:40] AS toks
+              FROM base WHERE doc_id % 5 = 0)"""
+
+
+def _sql_winnow_windows(src: str) -> str:
+    """Winnowing windows over ``src`` (doc_id, toks): md5 token hashes,
+    rolling 3-token gram hashes ``hs`` (one fold when a doc has fewer
+    than 3 tokens), and ``wwin`` = every window of 4 gram hashes from
+    1-based start ``i`` (textanalysis.winnow_hash_frame)."""
+    return f"""
+            wth AS (
+              SELECT doc_id, list_transform(toks,
+                       t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS th
+              FROM {src}),
+            wh AS (
+              SELECT doc_id,
+                     CASE WHEN len(th) >= 3
+                          THEN list_transform(generate_series(1, len(th) - 2),
+                               i -> (((th[i] * 8191 + th[i+1]) & 4294967295)
+                                    * 8191 + th[i+2]) & 4294967295)
+                          ELSE [list_reduce(list_prepend(0::BIGINT, th),
+                                (a, b) -> (a * 8191 + b) & 4294967295)] END AS hs
+              FROM wth),
+            wwin AS (
+              SELECT doc_id, i, list_slice(hs, i, i + 3) AS wn
+              FROM wh, unnest(generate_series(1, greatest(len(hs) - 3, 1))) AS t(i))"""
+
+
+#: winnow-overlap pairs over the snippet corpus (textanalysis.
+#: winnow_selection_frame + dedup.winnow_overlap_pairs): selected
+#: fingerprints with df in [2, 16], pairs sharing at least two
+_SQL_WINNOW_PAIRS = (_SQL_SNIPPET_CORPUS + "," + _sql_winnow_windows("corpus")
+                     + """,
+            wsel AS (SELECT DISTINCT doc_id, list_min(wn)::BIGINT AS gh FROM wwin),
+            wdfreq AS (SELECT gh, count(*) AS df FROM wsel GROUP BY gh),
+            wok AS (SELECT wsel.doc_id, wsel.gh FROM wsel JOIN wdfreq USING (gh)
+                    WHERE df BETWEEN 2 AND 16),
+            wpr AS (
+              SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                     count(*)::BIGINT AS n_shared
+              FROM wok a JOIN wok b ON a.gh = b.gh AND a.doc_id < b.doc_id
+              GROUP BY 1, 2 HAVING count(*) >= 2)""")
+
+#: 8-token gram hashes (operators/substring_dedup): token lists ``d``
+#: and one ``grams`` row per 0-based start ``pos``
+_SQL_GRAMS8 = """
+            d AS (
+              SELECT doc_id,
+                     list_filter(string_split(text, ' '), x -> x != '') AS tk
+              FROM documents),
+            grams AS (
+              SELECT doc_id, (i - 1)::INT AS pos,
+                     substr(md5(list_aggregate(tk[i:i+7], 'string_agg', ' ')),
+                            1, 16) AS gh
+              FROM d, unnest(generate_series(1, len(tk) - 7)) AS t(i)
+              WHERE len(tk) >= 8)"""
+
+#: gram positions whose hash occurs in two or more docs, numbered into
+#: runs: positions of one run share ``grp``
+_SQL_DUP_RUNS = _SQL_GRAMS8 + """,
+            dup AS (
+              SELECT gh FROM grams
+              GROUP BY gh HAVING COUNT(DISTINCT doc_id) >= 2),
+            pos AS (
+              SELECT doc_id, pos FROM grams
+              WHERE gh IN (SELECT gh FROM dup)),
+            isl AS (
+              SELECT doc_id, pos,
+                     pos - ROW_NUMBER() OVER (
+                       PARTITION BY doc_id ORDER BY pos) AS grp
+              FROM pos)"""
+
+#: BM25 (k1 = 1.2, b = 0.75) of every doc for the terms BM25_TERMS
+#: (search.bm25_scores): per-doc ``tf_i``, corpus ``df_i``, ``bm25``
+_SQL_BM25 = """
+            d AS (
+              SELECT doc_id,
+                     list_filter(string_split(text, ' '), x -> x != '') AS tk
+              FROM documents),
+            p AS (
+              SELECT doc_id, len(tk)::INT AS dl, """ + ", ".join(
+    f"len(list_filter(tk, x -> x = '{t}'))::INT AS tf_{i}"
+    for i, t in enumerate(BM25_TERMS)) + """
+              FROM d),
+            st AS (
+              SELECT COUNT(*)::BIGINT AS n_docs, AVG(dl) AS avgdl, """ + ", ".join(
+    f"SUM(CASE WHEN tf_{i} > 0 THEN 1 ELSE 0 END)::BIGINT AS df_{i}"
+    for i in range(len(BM25_TERMS))) + """
+              FROM p),
+            scored AS (
+              SELECT doc_id, """ + ", ".join(
+    f"tf_{i}" for i in range(len(BM25_TERMS))) + """,
+                round(""" + "\n                + ".join(
+    f"ln(1.0 + (n_docs - df_{i} + 0.5) / (df_{i} + 0.5))"
+    f" * (tf_{i}::DOUBLE * 2.2"
+    f" / (tf_{i}::DOUBLE + 1.2 * (0.25 + 0.75 * dl / avgdl)))"
+    for i in range(len(BM25_TERMS))) + """,
+                6) AS bm25
+              FROM p, st)"""
+
+#: HyperLogLog (2^12 registers) estimate of a register set with
+#: ``si`` = sum of 2^(49 - rank) and ``nz`` non-empty registers: linear
+#: counting at or below 2.5 m, else the bias-corrected raw estimate
+#: (sketches.hll_estimate)
+_SQL_HLL_ESTIMATE = """CASE WHEN ((0.7213 / (1 + 1.079 / 4096.0)) * 4096 * 4096
+                           / (si / 562949953421312.0 + (4096 - nz)))
+                          <= 2.5 * 4096
+                       AND (4096 - nz) > 0
+                     THEN round(4096 * ln(4096.0 / (4096 - nz)), 3)
+                     ELSE round((0.7213 / (1 + 1.079 / 4096.0)) * 4096 * 4096
+                           / (si / 562949953421312.0 + (4096 - nz)), 3)
+                END"""
+
+#: per-language HLL over the corpus tokens: registers ``regs`` and the
+#: estimate ``fin`` (grp, est_distinct)
+_SQL_HLL_BY_LANG = f"""
+            tok AS (
+              SELECT lang AS grp,
+                     unnest(list_filter(string_split(text, ' '),
+                            t -> t != '')) AS tok
+              FROM documents),
+            h AS (
+              SELECT grp, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h60
+              FROM tok),
+            regs AS (
+              SELECT grp, h60 >> 48 AS bucket,
+                MAX(CASE WHEN (h60 & ((1::BIGINT << 48) - 1)) = 0 THEN 49
+                         ELSE 48 - len(bin(h60 & ((1::BIGINT << 48) - 1))) + 1
+                    END) AS max_rank
+              FROM h GROUP BY 1, 2),
+            est AS (
+              SELECT grp,
+                     SUM(1::BIGINT << (49 - max_rank))::BIGINT AS si,
+                     COUNT(*)::BIGINT AS nz
+              FROM regs GROUP BY grp),
+            fin AS (
+              SELECT grp, {_SQL_HLL_ESTIMATE} AS est_distinct
+              FROM est)"""
+
+
+def _sql_d2(x: str, y: str) -> str:
+    """Exact squared L2 distance of two equal-length BIGINT lists."""
+    return (f"list_aggregate(list_transform(generate_series(1, len({x})),\n"
+            f"                       i -> ({x}[i] - {y}[i]) * ({x}[i] - {y}[i])),\n"
+            f"                       'sum')")
+
+
+def _sql_embedding_lattice(name: str) -> str:
+    """Relation ``name`` (vec_id, embedding, qv): every embedding and its
+    integer lattice ``qv`` (round(x * 1000), similarity.KMEANS_SCALE)."""
+    return f"""
+            {name} AS (SELECT vec_id, embedding,
+                    list_transform(embedding,
+                      x -> round(x::DOUBLE * 1000)::BIGINT) AS qv
+                  FROM embeddings)"""
+
+
+def _sql_lloyd(sfx: str) -> str:
+    """k-means on the lattice vectors of ``e{sfx}`` (vec_id, qv): seeds
+    ``c0`` = the 4 lowest vec_ids, then two unrolled Lloyd iterations
+    (argmin assignment ties by cid, floor-mean update) to ``c2``, in
+    exact BIGINT arithmetic.  ``sfx`` namespaces the chain (one per PQ
+    subspace)."""
+    chain = f"""
+            c0{sfx} AS (SELECT vec_id AS cid, qv AS cv FROM e{sfx}
+                   ORDER BY vec_id LIMIT 4)"""
+    for n in (1, 2):
+        chain += f""",
+            p{n}{sfx} AS (SELECT e.vec_id, e.qv, c.cid,
+                     {_sql_d2('e.qv', 'c.cv')} AS d2
+                   FROM e{sfx} e CROSS JOIN c{n - 1}{sfx} c),
+            a{n}{sfx} AS (SELECT vec_id, qv, cid FROM (
+                     SELECT p{n}{sfx}.*, ROW_NUMBER() OVER (
+                       PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM p{n}{sfx})
+                   WHERE rn = 1),
+            u{n}{sfx} AS (SELECT cid, i AS dim,
+                     floor(SUM(qv[i])::DOUBLE / COUNT(*))::BIGINT AS cvi
+                   FROM a{n}{sfx}, unnest(generate_series(1, len(qv))) AS t(i)
+                   GROUP BY cid, i),
+            c{n}{sfx} AS (SELECT cid, list(cvi ORDER BY dim) AS cv
+                   FROM u{n}{sfx} GROUP BY cid)"""
+    return chain
+
+
+def _sql_assign(src: str) -> str:
+    """Nearest centroid of ``c2`` for every vector of ``src``: ``p3``
+    holds all squared distances, ``a3`` the argmin (ties by cid)."""
+    return f"""
+            p3 AS (SELECT e.vec_id, e.embedding, c.cid,
+                     {_sql_d2('e.qv', 'c.cv')} AS d2
+                   FROM {src} e CROSS JOIN c2 c),
+            a3 AS (SELECT vec_id, embedding, cid, d2 FROM (
+                     SELECT p3.*, ROW_NUMBER() OVER (
+                       PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM p3)
+                   WHERE rn = 1)"""
+
+
+#: the trained IVF coarse quantizer (k = 4, 2 iterations) and every
+#: vector's cell ``a3``
+_SQL_KMEANS = _sql_embedding_lattice("e") + "," + _sql_lloyd("")
+_SQL_KMEANS_ASSIGN = _SQL_KMEANS + "," + _sql_assign("e")
+
+#: the nprobe = 2 cells nearest to vector 0
+_SQL_PROBES = """
+            probes AS (SELECT cid FROM p3 WHERE vec_id = 0
+                       ORDER BY d2, cid LIMIT 2)"""
+
+#: vector 0, the query of the top-k oracles
+_SQL_QUERY_VEC = """
+            q AS (SELECT embedding::DOUBLE[] AS q_vec FROM embeddings
+                  WHERE vec_id = 0)"""
+
+#: IVF top-10: the probed cells' vectors ranked by cosine to ``q``
+_SQL_IVF_TOP10 = _SQL_PROBES + """,
+            appr AS (SELECT a3.vec_id, a3.cid,
+                       round(list_cosine_similarity(a3.embedding::DOUBLE[],
+                             q_vec), 6) AS cosine_sim
+                     FROM a3 JOIN probes USING (cid), q
+                     WHERE a3.vec_id <> 0
+                     ORDER BY cosine_sim DESC, vec_id ASC LIMIT 10)"""
+
+#: brute-force cosine top-10 to ``q`` (similarity.cosine_topk)
+_SQL_EXACT_TOP10 = """
+            exact AS (SELECT vec_id,
+                        round(list_cosine_similarity(embedding::DOUBLE[],
+                              q.q_vec), 6) AS cosine_sim
+                      FROM embeddings, q WHERE vec_id <> 0
+                      ORDER BY cosine_sim DESC, vec_id ASC LIMIT 10)"""
+
+#: recall@10 of the top-10 ``appr`` against ``exact``
+#: (similarity.recall_at_k)
+_SQL_RECALL_AT_10 = """,
+            hits AS (SELECT COUNT(*)::BIGINT AS n_hits FROM exact
+                     WHERE vec_id IN (SELECT vec_id FROM appr))
+            SELECT 10::BIGINT AS k, n_hits,
+                   ((n_hits * 1000000) // 10)::BIGINT AS recall_micro
+            FROM hits
+        """
+
+#: int8 scalar quantization of the lattice ``e``: per-dim min-max bounds
+#: ``bl``, floor-div ``codes``, midpoint reconstruction ``recon``;
+#: ``q`` is vector 0's lattice (similarity.sq8_topk)
+_SQL_SQ8 = """
+            b AS (SELECT i AS dim, MIN(qv[i])::BIGINT AS mn,
+                         MAX(qv[i])::BIGINT AS mx
+                  FROM e, unnest(generate_series(1, len(qv))) AS t(i)
+                  GROUP BY i),
+            bl AS (SELECT list(mn ORDER BY dim) AS mns,
+                          list(mx ORDER BY dim) AS mxs FROM b),
+            q AS (SELECT qv AS qqv FROM e WHERE vec_id = 0),
+            codes AS (SELECT e.vec_id,
+                    list_transform(generate_series(1, len(e.qv)),
+                      i -> CASE WHEN bl.mxs[i] = bl.mns[i] THEN 0
+                           ELSE least(255, greatest(0,
+                             ((e.qv[i] - bl.mns[i]) * 255)
+                             // (bl.mxs[i] - bl.mns[i]))) END) AS cs
+                  FROM e, bl),
+            recon AS (SELECT c.vec_id,
+                    list_transform(generate_series(1, len(c.cs)),
+                      i -> CASE WHEN bl.mxs[i] = bl.mns[i] THEN bl.mns[i]
+                           ELSE bl.mns[i] + ((2 * c.cs[i] + 1)
+                             * (bl.mxs[i] - bl.mns[i])) // 510 END) AS rv
+                  FROM codes c, bl)"""
+
+#: asymmetric SQ8 distance of a reconstruction ``r`` to ``q``
+_SQL_SQ8_D2 = _sql_d2("q.qqv", "r.rv") + "::BIGINT"
+
+#: SQ8 top-10 to ``q`` over every reconstruction
+_SQL_SQ8_TOP10 = f"""
+            appr AS (SELECT r.vec_id, {_SQL_SQ8_D2} AS sq_d2
+                     FROM recon r, q WHERE r.vec_id <> 0
+                     ORDER BY sq_d2 ASC, vec_id ASC LIMIT 10)"""
+
+#: JL sign projection (similarity.project_embeddings) of every lattice
+#: vector onto 16 dims through a content-addressed +-1 matrix:
+#: ``proj`` (vec_id, j, y), exact BIGINT sums
+_SQL_JL_PROJ = _sql_embedding_lattice("lat") + """,
+            signs AS (
+              SELECT d.i, o.j,
+                     (CASE WHEN ('0x' || substr(
+                          md5('jl0:' || d.i || ':' || o.j), 1, 8))::BIGINT
+                          % 2 = 0 THEN 1 ELSE -1 END)::BIGINT AS s
+              FROM (SELECT unnest(range(64))::BIGINT AS i) d,
+                   (SELECT unnest(range(16))::BIGINT AS j) o),
+            expl AS (
+              SELECT vec_id, d.i, qv[d.i + 1] AS v
+              FROM lat, (SELECT unnest(range(64))::BIGINT AS i) d),
+            proj AS (
+              SELECT e.vec_id, s.j, SUM(e.v * s.s)::BIGINT AS y
+              FROM expl e JOIN signs s ON e.i = s.i
+              GROUP BY e.vec_id, s.j)"""
+
+#: the 64-bit fold of dHash ``bits`` (j, bit): bits 32..63 into
+#: ``sig_hi``, 0..31 into ``sig_lo``
+_SQL_DHASH_FOLD = """SUM(CASE WHEN j >= 32 THEN bit << (j - 32)
+                                ELSE 0 END)::BIGINT AS sig_hi,
+                       SUM(CASE WHEN j < 32 THEN bit << j
+                                ELSE 0 END)::BIGINT AS sig_lo"""
+
+#: pairs of ``sigs`` (id, sig_hi, sig_lo) within Hamming distance 2
+_SQL_HAMMING2_PAIRS = """
+            SELECT a.id AS id_a, b.id AS id_b,
+                   (bit_count(xor(a.sig_hi, b.sig_hi))
+                    + bit_count(xor(a.sig_lo, b.sig_lo)))::INTEGER AS hamming
+            FROM sigs a JOIN sigs b ON a.id < b.id
+            WHERE bit_count(xor(a.sig_hi, b.sig_hi))
+                  + bit_count(xor(a.sig_lo, b.sig_lo)) <= 2
+            ORDER BY id_a, id_b
+        """
+
+#: the synth_grid_media fixture (doc_id < 500): an 8x9 md5 grid per
+#: image, top bit of cell (0, 0) flipped for doc_id >= 250, and its
+#: dHash ``sigs`` (doc_id, id, sig_hi, sig_lo)
+_SQL_IMAGE_SIGS = f"""
+            d AS (SELECT doc_id FROM documents WHERE doc_id < 500),
+            cells AS (
+              SELECT d.doc_id, r.r, c.c,
+                     ('0x' || substr(md5(printf('%d-%d-%d',
+                          d.doc_id % 250, r.r, c.c)), 1, 2))::INT AS v0
+              FROM d, range(8) AS r(r), range(9) AS c(c)),
+            adj AS (
+              SELECT doc_id, r, c,
+                     CASE WHEN r = 0 AND c = 0 AND doc_id >= 250
+                          THEN xor(v0, 128) ELSE v0 END AS v
+              FROM cells),
+            bits AS (
+              SELECT a.doc_id, (a.r * 8 + a.c) AS j,
+                     CASE WHEN a.v < b.v THEN 1::BIGINT
+                          ELSE 0::BIGINT END AS bit
+              FROM adj a JOIN adj b
+                ON a.doc_id = b.doc_id AND a.r = b.r AND b.c = a.c + 1
+              WHERE a.c < 8),
+            sigs AS (SELECT doc_id, printf('gbmp-%05d', doc_id) AS id,
+                       {_SQL_DHASH_FOLD}
+                     FROM bits GROUP BY doc_id)"""
+
+#: the synth audio fixture (doc_id < 500, none for doc_id % 10 == 0):
+#: 256 md5 samples with a planted spike for doc_id >= 250, 65 window
+#: energies (n * 65 // 256) and the envelope hash ``sigs``
+_SQL_AUDIO_SIGS = f"""
+            d AS (SELECT doc_id FROM documents WHERE doc_id < 500),
+            s AS (SELECT d.doc_id, n.n,
+                    (('0x' || substr(md5(printf('%d-%d',
+                          d.doc_id % 250, n.n)), 1, 2))::BIGINT - 128) * 100
+                    + CASE WHEN d.doc_id >= 250 AND n.n >= 252
+                           THEN 3000 ELSE 0 END AS v
+                  FROM d, range(256) AS n(n)
+                  WHERE d.doc_id % 10 != 0),
+            e AS (SELECT doc_id, (n * 65) // 256 AS w,
+                         SUM(v * v)::BIGINT AS en
+                  FROM s GROUP BY doc_id, w),
+            bits AS (SELECT a.doc_id, a.w AS j,
+                       CASE WHEN a.en < b.en THEN 1::BIGINT
+                            ELSE 0::BIGINT END AS bit
+                     FROM e a JOIN e b
+                       ON a.doc_id = b.doc_id AND b.w = a.w + 1
+                     WHERE a.w < 64),
+            sigs AS (SELECT doc_id, printf('wav-%05d', doc_id) AS id,
+                       {_SQL_DHASH_FOLD}
+                     FROM bits GROUP BY doc_id)"""
+
+#: the synth video fixture (doc_id < 500, none for doc_id % 10 == 0):
+#: 6 frames of the image grid with a frame axis, the flip on frame 0
+#: cell (0, 0) for doc_id >= 250 (``adj``: doc_id, f, r, c, v)
+_SQL_VIDEO_FRAMES = """
+            d AS (SELECT doc_id FROM documents WHERE doc_id < 500),
+            cells AS (
+              SELECT d.doc_id, f.f, r.r, c.c,
+                     ('0x' || substr(md5(printf('%d-%d-%d-%d',
+                          d.doc_id % 250, f.f, r.r, c.c)), 1, 2))::BIGINT
+                     AS v0
+              FROM d, range(6) AS f(f), range(8) AS r(r), range(9) AS c(c)
+              WHERE d.doc_id % 10 != 0),
+            adj AS (
+              SELECT doc_id, f, r, c,
+                     CASE WHEN f = 0 AND r = 0 AND c = 0 AND doc_id >= 250
+                          THEN xor(v0, 128) ELSE v0 END AS v
+              FROM cells)"""
+
+#: ... and their per-frame dHash ``sigs`` (doc_id, f, sig_hi, sig_lo)
+_SQL_VIDEO_SIGS = _SQL_VIDEO_FRAMES + f""",
+            bits AS (
+              SELECT a.doc_id, a.f, (a.r * 8 + a.c) AS j,
+                     CASE WHEN a.v < b.v THEN 1::BIGINT
+                          ELSE 0::BIGINT END AS bit
+              FROM adj a JOIN adj b
+                ON a.doc_id = b.doc_id AND a.f = b.f AND a.r = b.r
+               AND b.c = a.c + 1
+              WHERE a.c < 8),
+            sigs AS (SELECT doc_id, f,
+                       {_SQL_DHASH_FOLD}
+                     FROM bits GROUP BY doc_id, f)"""
+
+
+def _sql_solid_decode(codec: str) -> str:
+    """Decode check of the solid-color ``codec`` fixture (doc_id < 300;
+    ids % 10 == 0 are garbage payloads): size and the red channel
+    through a float32 store."""
+    return f"""
+            WITH m AS (
+              SELECT doc_id, printf('{codec}-%05d', doc_id) AS media_ref,
+                     (doc_id % 16 + 1)::INT AS w, (doc_id % 8 + 1)::INT AS h,
+                     doc_id % 256 AS r
+              FROM documents WHERE doc_id < 300)
+            SELECT media_ref,
+                   (doc_id % 10 != 0) AS ok,
+                   (CASE WHEN doc_id % 10 = 0 THEN 0 ELSE w END)::INT AS decoded_width,
+                   (CASE WHEN doc_id % 10 = 0 THEN 0 ELSE h END)::INT AS decoded_height,
+                   CASE WHEN doc_id % 10 = 0 THEN 0.0
+                        ELSE round(CAST(CAST(r AS DOUBLE) / 255.0 AS FLOAT)::DOUBLE, 4)
+                   END AS f0
+            FROM m
+        """
+
+
+def _sql_jpeg_roundtrip(src: str) -> str:
+    """The JPEG codec's color-space round trip of ``src`` (r, g, b
+    DOUBLE): ``ycc`` adds y/cb/cr and ``dec`` the decoded r2/g2/b2, with
+    the codec's floor(x + 0.5) roundings written out term for term
+    (kernels/jpeg.py rgb_to_ycbcr / ycbcr_roundtrip_rgb)."""
+    return f"""
+            ycc AS (
+              SELECT *,
+                LEAST(255, GREATEST(0, FLOOR(
+                    0.299 * r + 0.587 * g + 0.114 * b + 0.5))) AS y,
+                LEAST(255, GREATEST(0, FLOOR(
+                    -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0 + 0.5)))
+                    AS cb,
+                LEAST(255, GREATEST(0, FLOOR(
+                    0.5 * r - 0.418688 * g - 0.081312 * b + 128.0 + 0.5)))
+                    AS cr
+              FROM {src}),
+            dec AS (
+              SELECT *,
+                LEAST(255, GREATEST(0, FLOOR(
+                    y + 1.402 * (cr - 128.0) + 0.5))) AS r2,
+                LEAST(255, GREATEST(0, FLOOR(
+                    y - 0.344136 * (cb - 128.0)
+                      - 0.714136 * (cr - 128.0) + 0.5))) AS g2,
+                LEAST(255, GREATEST(0, FLOOR(
+                    y + 1.772 * (cb - 128.0) + 0.5))) AS b2
+              FROM ycc)"""
+
+
+def _sql_media_near_pairs(src: str) -> str:
+    """Media near-dup pairs of ``src`` (media_ref, f0..f3): sign-LSH
+    bucket of the four features, cosine >= 0.999 within a bucket."""
+    return f"""
+            v AS (
+              SELECT media_ref,
+                     [f0, f1, f2, f3, 0.0, 0.0, 0.0, 0.0]::DOUBLE[] AS v,
+                     (CASE WHEN f0 > 0 THEN 1 ELSE 0 END
+                      + CASE WHEN f1 > 0 THEN 2 ELSE 0 END
+                      + CASE WHEN f2 > 0 THEN 4 ELSE 0 END
+                      + CASE WHEN f3 > 0 THEN 8 ELSE 0 END)::BIGINT AS bucket
+              FROM {src} WHERE f0 + f1 + f2 + f3 > 0)
+            SELECT a.media_ref AS media_a, b.media_ref AS media_b,
+                   round(list_cosine_similarity(a.v, b.v), 6) AS cosine_sim
+            FROM v a JOIN v b
+              ON a.bucket = b.bucket AND a.media_ref < b.media_ref
+            WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.999
+        """
+
+
+def _spans_over(src: str, p: str) -> str:
+    """The synth_interleaved twin (operators/interleaved.py) over the
+    (doc_id, text) relation ``src``: block size 4 = 3 text spans of 8
+    tokens, then 1 image; position p is media iff (p + 1) % 4 == 0.
+    ``{p}sized`` holds the docs with tokens, ``{p}spans`` the spans;
+    ``p`` namespaces the chain (span_diff runs two)."""
+    return f"""
+            {p}tk AS (
+              SELECT doc_id,
+                     list_filter(string_split(text, ' '), t -> t != '') AS toks
+              FROM {src}),
+            {p}sized AS (
+              SELECT doc_id, toks,
+                     CAST(ceil(len(toks) / 8.0) AS BIGINT) AS nc
+              FROM {p}tk WHERE len(toks) > 0),
+            {p}pos AS (
+              SELECT doc_id, toks, unnest(range(0, nc + nc // 3)) AS p
+              FROM {p}sized),
+            {p}spans AS (
+              SELECT doc_id, p::INT AS "offset",
+                     CASE WHEN (p + 1) % 4 = 0 THEN 'image'
+                          ELSE 'text' END AS kind,
+                     CASE WHEN (p + 1) % 4 = 0 THEN NULL
+                          ELSE array_to_string(
+                                 toks[(((p - (p + 1) // 4) * 8 + 1))::INT
+                                      : (((p - (p + 1) // 4) * 8 + 8))::INT],
+                                 ' ')
+                     END AS text,
+                     CASE WHEN (p + 1) % 4 = 0
+                          THEN 'img_' || doc_id::VARCHAR || '_'
+                               || ((p + 1) // 4)::VARCHAR
+                          ELSE NULL END AS media_ref
+              FROM {p}pos)"""
+
+
+_SQL_INTER_SPANS = "\n            WITH" + _spans_over("documents", "")
+
+
 def oracle_sql() -> dict[str, str]:
     d = _oracle_sql_literal()
     # the stored/streamed-counts drift form must EQUAL the batch form
     # over the same rows — one oracle, two Spark plans
     d["corpus_drift_counts"] = d["corpus_drift"]
+    # bucketed storage changes the PLAN (one fewer Exchange per
+    # iteration), never the rows
+    d["link_pagerank_bucketed"] = d["link_pagerank"]
     return d
 
 
 def _oracle_sql_literal() -> dict[str, str]:
-    from rca_pdf_extraction_pipeline_spark.functions.hashing import (
-        MINHASH_MOD,
-        MINHASH_SEEDS,
-    )
     # Morton interleave of two 8-bit codes, unrolled exactly like
     # plans/layout.zorder_key (x bit j -> key bit 2j, y -> 2j+1)
     zterms = " | ".join(
         f"(((x >> {j}) & 1) << {2 * j}) | (((y >> {j}) & 1) << {2 * j + 1})"
         for j in range(8))
-    minhash_sigs = ", ".join(
-        f"list_aggregate(list_transform(hv, h -> ({a} * h + {b}) % {MINHASH_MOD}), 'min')"
-        f" AS sig_{s}"
-        for s, (a, b) in enumerate(MINHASH_SEEDS)
-    )
     simhash_votes = ", ".join(
         [f"SUM(CASE WHEN (hv_lo >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS v_{j}"
          for j in range(32)]
@@ -2869,163 +3590,25 @@ def _oracle_sql_literal() -> dict[str, str]:
         for page in (39, 40, 41, 42)
         for col, h in enumerate(GOLDEN_EXTRACTED_HEADERS[:-1])
     )
-    stopwords_sql = "['the','and','a','of','to','in','is','on','for','it','with','as','at','by','from']"
-
-    quality_sql = f"""
-            WITH t AS (
-              SELECT doc_id, text,
-                     list_filter(string_split(text, ' '), x -> x != '') AS toks,
-                     greatest(length(text), 1)::DOUBLE AS total,
-                     length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))::DOUBLE AS alpha,
-                     length(regexp_replace(text, '[^0-9]', '', 'g'))::DOUBLE AS digit
-              FROM documents),
-            r AS (
-              SELECT doc_id, alpha / total AS alpha_ratio, digit / total AS digit_ratio,
-                     len(list_filter(toks, x -> list_contains({stopwords_sql}, lower(x))))::DOUBLE
-                       / greatest(len(toks), 1)::DOUBLE AS stop_ratio
-              FROM t)
-            SELECT doc_id,
-              round(alpha_ratio, 6) AS alpha_ratio,
-              round(digit_ratio, 6) AS digit_ratio,
-              round(stop_ratio, 6) AS stopword_ratio,
-              round(0.5 * alpha_ratio + 0.3 * stop_ratio + 0.2 * (1.0 - digit_ratio), 6)
-                AS quality_score
-            FROM r
-    """
-    langid_sql = f"""
-            WITH t AS (
-              SELECT doc_id,
-                     list_filter(string_split(text, ' '), x -> x != '') AS toks
-              FROM documents),
-            r AS (
-              SELECT doc_id,
-                     len(list_filter(toks, x -> list_contains({stopwords_sql}, lower(x))))::DOUBLE
-                       / greatest(len(toks), 1)::DOUBLE AS ratio
-              FROM t)
-            SELECT doc_id, round(ratio, 6) AS stopword_ratio,
-                   CASE WHEN ratio >= 0.03 THEN 'en' ELSE 'und' END AS pred_lang
-            FROM r
-    """
-    repetition_sql = """
-            WITH d AS (
-              SELECT doc_id,
-                     list_filter(string_split(text, ' '), x -> x != '') AS tk
-              FROM documents),
-            g2 AS (
-              SELECT doc_id, tk[i] || ' ' || tk[i+1] AS gram
-              FROM d, unnest(generate_series(1, len(tk) - 1)) AS t(i)
-              WHERE len(tk) >= 2),
-            m2 AS (
-              SELECT doc_id, gram, COUNT(*) AS cnt,
-                     COUNT(*) * length(gram) AS mass
-              FROM g2 GROUP BY doc_id, gram),
-            r2 AS (
-              SELECT doc_id, MAX(mass)::DOUBLE / SUM(mass)::DOUBLE AS top2
-              FROM m2 GROUP BY doc_id),
-            g5 AS (
-              SELECT doc_id,
-                     tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' '
-                     || tk[i+3] || ' ' || tk[i+4] AS gram
-              FROM d, unnest(generate_series(1, len(tk) - 4)) AS t(i)
-              WHERE len(tk) >= 5),
-            m5 AS (
-              SELECT doc_id, gram, COUNT(*) AS cnt,
-                     COUNT(*) * length(gram) AS mass
-              FROM g5 GROUP BY doc_id, gram),
-            r5 AS (
-              SELECT doc_id,
-                     SUM(CASE WHEN cnt >= 2 THEN mass ELSE 0 END)::DOUBLE
-                       / SUM(mass)::DOUBLE AS dup5
-              FROM m5 GROUP BY doc_id)
-            SELECT d.doc_id,
-                   round(COALESCE(r2.top2, 0.0), 6) AS top_2gram_frac,
-                   round(COALESCE(r5.dup5, 0.0), 6) AS dup_5gram_frac
-            FROM d LEFT JOIN r2 ON d.doc_id = r2.doc_id
-                   LEFT JOIN r5 ON d.doc_id = r5.doc_id
-    """
-
-    def _kmeans_iter(prev: str, n: int, sfx: str = "") -> str:
-        """One unrolled Lloyd iteration on the integer lattice — exact
-        BIGINT arithmetic end-to-end (see similarity.KMEANS_SCALE).
-        ``sfx`` namespaces the CTE chain (one chain per PQ subspace)."""
-        return f"""
-            p{n}{sfx} AS (SELECT e.vec_id, e.qv, c.cid,
-                     list_aggregate(list_transform(generate_series(1, len(e.qv)),
-                       i -> (e.qv[i] - c.cv[i]) * (e.qv[i] - c.cv[i])),
-                       'sum') AS d2
-                   FROM e{sfx} e CROSS JOIN {prev} c),
-            a{n}{sfx} AS (SELECT vec_id, qv, cid FROM (
-                     SELECT p{n}{sfx}.*, ROW_NUMBER() OVER (
-                       PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM p{n}{sfx})
-                   WHERE rn = 1),
-            u{n}{sfx} AS (SELECT cid, i AS dim,
-                     floor(SUM(qv[i])::DOUBLE / COUNT(*))::BIGINT AS cvi
-                   FROM a{n}{sfx}, unnest(generate_series(1, len(qv))) AS t(i)
-                   GROUP BY cid, i),
-            c{n}{sfx} AS (SELECT cid, list(cvi ORDER BY dim) AS cv
-                   FROM u{n}{sfx} GROUP BY cid)"""
-
-    kmeans_ctes = (
-        """
-            e AS (SELECT vec_id, embedding,
-                    list_transform(embedding,
-                      x -> round(x::DOUBLE * 1000)::BIGINT) AS qv
-                  FROM embeddings),
-            c0 AS (SELECT vec_id AS cid, qv AS cv FROM e
-                   ORDER BY vec_id LIMIT 4),"""
-        + _kmeans_iter("c0", 1) + ","
-        + _kmeans_iter("c1", 2)
-    )
-
-    # sampled-codebook variant: the Lloyd CTEs run over `e` = the
-    # deterministic 50% hash-sample (sampling.sample_bucket, seed 0);
-    # `efull` is the whole corpus, touched once by the assignment CTE
-    kmeans_sampled_ctes = (
-        """
-            efull AS (SELECT vec_id, embedding,
-                    list_transform(embedding,
-                      x -> round(x::DOUBLE * 1000)::BIGINT) AS qv
-                  FROM embeddings),
-            e AS (SELECT * FROM efull
-                  WHERE ('0x' || substr(md5('0:' || vec_id), 1, 8))::BIGINT
-                        % 1000000 < 500000),
-            c0 AS (SELECT vec_id AS cid, qv AS cv FROM e
-                   ORDER BY vec_id LIMIT 4),"""
-        + _kmeans_iter("c0", 1) + ","
-        + _kmeans_iter("c1", 2)
-    )
-
     # product quantization: one independent integer-lattice Lloyd chain
     # per 16-dim subspace of the 64-dim embeddings (m=4, k=4, iters=2),
     # then per-subspace nearest-codeword encoding (similarity.pq_codes /
     # pq_topk are the Spark twins)
     def _pq_sub_ctes(s: int) -> str:
-        lo, hi = s * 16 + 1, (s + 1) * 16
         sfx = f"_s{s}"
         return (f"""
             e{sfx} AS (SELECT vec_id,
-                    list_transform(embedding[{lo}:{hi}],
+                    list_transform(embedding[{s * 16 + 1}:{(s + 1) * 16}],
                       x -> round(x::DOUBLE * 1000)::BIGINT) AS qv
-                  FROM embeddings),
-            c0{sfx} AS (SELECT vec_id AS cid, qv AS cv FROM e{sfx}
-                   ORDER BY vec_id LIMIT 4),"""
-                + _kmeans_iter(f"c0{sfx}", 1, sfx) + ","
-                + _kmeans_iter(f"c1{sfx}", 2, sfx) + f""",
+                  FROM embeddings),""" + _sql_lloyd(sfx) + f""",
             codes{sfx} AS (SELECT vec_id, {s} AS sub, cid AS code FROM (
                      SELECT p.*, ROW_NUMBER() OVER (
                        PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM (
-                       SELECT e.vec_id, c.cid,
-                              list_aggregate(list_transform(
-                                generate_series(1, len(e.qv)),
-                                i -> (e.qv[i] - c.cv[i]) * (e.qv[i] - c.cv[i])),
-                                'sum') AS d2
+                       SELECT e.vec_id, c.cid, {_sql_d2('e.qv', 'c.cv')} AS d2
                        FROM e{sfx} e CROSS JOIN c2{sfx} c) p)
                    WHERE rn = 1),
             lut{sfx} AS (SELECT {s} AS sub, c.cid,
-                     list_aggregate(list_transform(
-                       generate_series(1, len(q.qv)),
-                       i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i])),
-                       'sum')::BIGINT AS d2
+                     {_sql_d2('q.qv', 'c.cv')}::BIGINT AS d2
                    FROM c2{sfx} c,
                         (SELECT qv FROM e{sfx} WHERE vec_id = 0) q)""")
 
@@ -3045,15 +3628,19 @@ def _oracle_sql_literal() -> dict[str, str]:
               SELECT doc_id AS src, doc_id // 3 AS dst FROM documents
               WHERE doc_id // 3 != doc_id)"""
 
-    # shared by link_triangles / link_clustering: union graph (link
-    # edges + blocked chords) -> degree-oriented wedge closing ->
-    # per-node triangle counts
-    triangle_ctes = f"""{link_edges_cte},
+    # blocked chord edges (entry _component_edges): each doc links to
+    # an md5-chosen doc of its 16-id block
+    chord_cte = """
             ce AS (SELECT doc_id AS src,
                      (doc_id // 16) * 16
                      + (('0x' || substr(md5('cc:' || doc_id::VARCHAR), 1, 8))::BIGINT
                         % 16) AS dst
-                   FROM documents),
+                   FROM documents)"""
+
+    # shared by link_triangles / link_clustering: union graph (link
+    # edges + blocked chords) -> degree-oriented wedge closing ->
+    # per-node triangle counts
+    triangle_ctes = f"""{link_edges_cte},{chord_cte},
             alle AS (SELECT src, dst FROM edges
                      UNION ALL
                      SELECT src, dst FROM ce
@@ -3084,19 +3671,33 @@ def _oracle_sql_literal() -> dict[str, str]:
             tcount AS (SELECT node_id, COUNT(*)::BIGINT AS n_triangles
                        FROM tn GROUP BY node_id)"""
 
-    def _pr_iter(n: int) -> str:
+    def _inflow(name: str, prev: str) -> str:
+        """Per node, the floor-split rank its in-links pass on from the
+        ranks ``prev`` (out-degrees in ``deg``)."""
         return f"""
-            in{n} AS (SELECT e.dst AS node_id,
+            {name} AS (SELECT e.dst AS node_id,
                        SUM(p.pr // d.out_deg) AS inflow
                      FROM edges e
-                     JOIN pr{n - 1} p ON e.src = p.node_id
+                     JOIN {prev} p ON e.src = p.node_id
                      JOIN deg d ON e.src = d.src
-                     GROUP BY e.dst),
+                     GROUP BY e.dst)"""
+
+    def _pr_iter(n: int) -> str:
+        return _inflow(f"in{n}", f"pr{n - 1}") + f""",
             pr{n} AS (SELECT d.doc_id AS node_id,
                        (150000 + (17 * COALESCE(i.inflow, 0)) // 20)::BIGINT
                          AS pr
                      FROM documents d
                      LEFT JOIN in{n} i ON d.doc_id = i.node_id)"""
+
+    # personalized: teleport mass only on the seed set ``sd``
+    def _ppr_iter(n: int) -> str:
+        return _inflow(f"in{n}", f"p{n - 1}") + f""",
+            p{n} AS (SELECT d.doc_id AS node_id,
+                     ((CASE WHEN s.node_id IS NOT NULL THEN 150000 ELSE 0 END)
+                      + (17 * COALESCE(i.inflow, 0)) // 20)::BIGINT AS pr
+                   FROM documents d LEFT JOIN sd s ON d.doc_id = s.node_id
+                   LEFT JOIN in{n} i ON d.doc_id = i.node_id)"""
 
     pagerank_ctes = (
         link_edges_cte + """,
@@ -3114,13 +3715,7 @@ def _oracle_sql_literal() -> dict[str, str]:
             dang{n} AS (SELECT COALESCE(SUM(p.pr), 0)::BIGINT AS ds
                        FROM prf{n - 1} p
                        LEFT JOIN deg d ON p.node_id = d.src
-                       WHERE d.src IS NULL),
-            inf{n} AS (SELECT e.dst AS node_id,
-                        SUM(p.pr // d.out_deg) AS inflow
-                      FROM edges e
-                      JOIN prf{n - 1} p ON e.src = p.node_id
-                      JOIN deg d ON e.src = d.src
-                      GROUP BY e.dst),
+                       WHERE d.src IS NULL),""" + _inflow(f"inf{n}", f"prf{n - 1}") + f""",
             prf{n} AS (SELECT d.doc_id AS node_id,
                         (150000 + (17 * (COALESCE(i.inflow, 0)
                            + dg.ds // nn.n)) // 20)::BIGINT AS pr
@@ -3137,117 +3732,10 @@ def _oracle_sql_literal() -> dict[str, str]:
         + _prf_iter(1) + "," + _prf_iter(2)
     )
 
-    # interleaved text+media lift of documents (operators/interleaved.py
-    # synth_interleaved twin): block size 4 = 3 text spans then 1 image;
-    # position p is media iff (p+1) % 4 == 0; text chunk = 8 tokens
-    inter_spans_ctes = """
-            WITH tk AS (
-              SELECT doc_id,
-                     list_filter(string_split(text, ' '), t -> t != '') AS toks
-              FROM documents),
-            sized AS (
-              SELECT doc_id, toks,
-                     CAST(ceil(len(toks) / 8.0) AS BIGINT) AS nc
-              FROM tk WHERE len(toks) > 0),
-            pos AS (
-              SELECT doc_id, toks,
-                     unnest(range(0, nc + nc // 3)) AS p
-              FROM sized),
-            spans AS (
-              SELECT doc_id,
-                     p::INT AS "offset",
-                     CASE WHEN (p + 1) % 4 = 0 THEN 'image'
-                          ELSE 'text' END AS kind,
-                     CASE WHEN (p + 1) % 4 = 0 THEN NULL
-                          ELSE array_to_string(
-                                 toks[(((p - (p + 1) // 4) * 8 + 1))::INT
-                                      : (((p - (p + 1) // 4) * 8 + 8))::INT],
-                                 ' ')
-                     END AS text,
-                     CASE WHEN (p + 1) % 4 = 0
-                          THEN 'img_' || doc_id::VARCHAR || '_'
-                               || ((p + 1) // 4)::VARCHAR
-                          ELSE NULL END AS media_ref
-              FROM pos)"""
-
-    # same synth_interleaved twin, parameterized over the (doc_id,
-    # text) source relation — span_diff runs it over TWO corpus
-    # variants inside one oracle
-    def _spans_over(src: str, p: str) -> str:
-        return f"""
-            {p}tk AS (
-              SELECT doc_id,
-                     list_filter(string_split(text, ' '), t -> t != '') AS toks
-              FROM {src}),
-            {p}sz AS (
-              SELECT doc_id, toks,
-                     CAST(ceil(len(toks) / 8.0) AS BIGINT) AS nc
-              FROM {p}tk WHERE len(toks) > 0),
-            {p}pos AS (
-              SELECT doc_id, toks, unnest(range(0, nc + nc // 3)) AS p
-              FROM {p}sz),
-            {p}sp AS (
-              SELECT doc_id, p::INT AS "offset",
-                     CASE WHEN (p + 1) % 4 = 0 THEN 'image'
-                          ELSE 'text' END AS kind,
-                     CASE WHEN (p + 1) % 4 = 0 THEN NULL
-                          ELSE array_to_string(
-                                 toks[(((p - (p + 1) // 4) * 8 + 1))::INT
-                                      : (((p - (p + 1) // 4) * 8 + 8))::INT],
-                                 ' ')
-                     END AS text,
-                     CASE WHEN (p + 1) % 4 = 0
-                          THEN 'img_' || doc_id::VARCHAR || '_'
-                               || ((p + 1) // 4)::VARCHAR
-                          ELSE NULL END AS media_ref
-              FROM {p}pos)"""
-
     # raw-HTML markup extraction family (operators/htmlparse.py twin):
     # hsrc replays synth_html verbatim; the parse replays the sentinel
     # rewrite (<p> -> \\x01p\\x02) + split + tag-strip regexes, which are
     # RE2/Java-identical by construction.
-    # winnow-overlap pair chain over the snippet-augmented corpus —
-    # shared by the pair query and the CC dedup policy (dialect twin of
-    # textanalysis.winnow_hash_frame + winnow_selection_frame +
-    # dedup.winnow_overlap_pairs)
-    winnow_pair_ctes = """
-            base AS (
-              SELECT doc_id, text,
-                     list_filter(string_split(text, ' '), x -> x != '') AS toks
-              FROM documents),
-            corpus AS (
-              SELECT doc_id, text, toks FROM base
-              UNION ALL
-              SELECT doc_id + 100000 AS doc_id,
-                     array_to_string(toks[1:40], ' ') AS text,
-                     toks[1:40] AS toks
-              FROM base WHERE doc_id % 5 = 0),
-            wth AS (
-              SELECT doc_id, list_transform(toks,
-                       t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS th
-              FROM corpus),
-            wh AS (
-              SELECT doc_id,
-                     CASE WHEN len(th) >= 3
-                          THEN list_transform(generate_series(1, len(th) - 2),
-                               i -> (((th[i] * 8191 + th[i+1]) & 4294967295)
-                                    * 8191 + th[i+2]) & 4294967295)
-                          ELSE [list_reduce(list_prepend(0::BIGINT, th),
-                                (a, b) -> (a * 8191 + b) & 4294967295)] END AS hs
-              FROM wth),
-            wwin AS (
-              SELECT doc_id, i, list_slice(hs, i, i + 3) AS wn
-              FROM wh, unnest(generate_series(1, greatest(len(hs) - 3, 1))) AS t(i)),
-            wsel AS (SELECT DISTINCT doc_id, list_min(wn)::BIGINT AS gh FROM wwin),
-            wdfreq AS (SELECT gh, count(*) AS df FROM wsel GROUP BY gh),
-            wok AS (SELECT wsel.doc_id, wsel.gh FROM wsel JOIN wdfreq USING (gh)
-                    WHERE df BETWEEN 2 AND 16),
-            wpr AS (
-              SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                     count(*)::BIGINT AS n_shared
-              FROM wok a JOIN wok b ON a.gh = b.gh AND a.doc_id < b.doc_id
-              GROUP BY 1, 2 HAVING count(*) >= 2)"""
-
     html_ctes = r"""
             WITH hs0 AS (
               SELECT doc_id,
@@ -3466,18 +3954,8 @@ def _oracle_sql_literal() -> dict[str, str]:
             SELECT token, COUNT(*)::BIGINT AS n_occurrences
             FROM t GROUP BY token HAVING COUNT(*) >= 500
         """,
-        "containment_pairs": """
-            WITH base AS (
-              SELECT doc_id, text,
-                     list_filter(string_split(text, ' '), x -> x != '') AS toks
-              FROM documents),
-            corpus AS (
-              SELECT doc_id, text, toks FROM base
-              UNION ALL
-              SELECT doc_id + 100000 AS doc_id,
-                     array_to_string(toks[1:40], ' ') AS text,
-                     toks[1:40] AS toks
-              FROM base WHERE doc_id % 5 = 0),
+        "containment_pairs": f"""
+            WITH {_SQL_SNIPPET_CORPUS},
             sh AS (
               SELECT doc_id, list_distinct(
                 CASE WHEN len(toks) >= 5
@@ -3505,24 +3983,15 @@ def _oracle_sql_literal() -> dict[str, str]:
             WHERE greatest((n_shared * 1000000) // n_a,
                            (n_shared * 1000000) // n_b) >= 500000
         """,
-        "winnow_pairs": "WITH " + winnow_pair_ctes + """
+        "winnow_pairs": "WITH " + _SQL_WINNOW_PAIRS + """
             SELECT id_a, id_b, n_shared FROM wpr
         """,
-        "dedup_corpus_winnow": "WITH RECURSIVE " + winnow_pair_ctes + """,
-            wedges AS (SELECT id_a AS src, id_b AS dst FROM wpr
-                       UNION
-                       SELECT id_b, id_a FROM wpr),
-            wreach(src, dst) AS (
-              SELECT src, dst FROM wedges
-              UNION
-              SELECT r.src, e.dst FROM wreach r JOIN wedges e ON r.dst = e.src),
-            wminlab AS (
-              SELECT src AS doc_id, least(src, min(dst)) AS label
-              FROM wreach GROUP BY src)
+        "dedup_corpus_winnow": ("WITH RECURSIVE " + _SQL_WINNOW_PAIRS + ","
+                                + _sql_components("wpr") + """
             SELECT c.doc_id, length(c.text)::INT AS n_chars
-            FROM corpus c LEFT JOIN wminlab m ON m.doc_id = c.doc_id
+            FROM corpus c LEFT JOIN minlab m ON m.doc_id = c.doc_id
             WHERE m.doc_id IS NULL OR m.label = c.doc_id
-        """,
+        """),
         # ---- extraction: golden-artifact oracles --------------------------
         "extract_flagship": f"""
             SELECT doc_id, kind, text, media_ref, "offset"
@@ -3865,47 +4334,14 @@ def _oracle_sql_literal() -> dict[str, str]:
             FROM flagged GROUP BY doc_id ORDER BY doc_id
         """,
         "dedup_minhash_pairs": f"""
-            WITH {_SQL_SHINGLE_BASE},
-            sigbase AS (
-              SELECT doc_id,
-                     list_transform(shset, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS hv
-              FROM sh),
-            sig AS (SELECT doc_id, {minhash_sigs} FROM sigbase),
-            keys AS (
-              SELECT doc_id, 0 AS band,
-                     sig_0::VARCHAR || '-' || sig_1::VARCHAR || '-'
-                       || sig_2::VARCHAR || '-' || sig_3::VARCHAR AS band_key FROM sig
-              UNION ALL
-              SELECT doc_id, 1 AS band,
-                     sig_4::VARCHAR || '-' || sig_5::VARCHAR || '-'
-                       || sig_6::VARCHAR || '-' || sig_7::VARCHAR AS band_key FROM sig)
-            SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-            FROM keys a JOIN keys b
-              ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
+            WITH {_SQL_SHINGLE_BASE},{_SQL_MINHASH_KEYS},{_SQL_MINHASH_CAND}
+            SELECT id_a, id_b FROM cand
         """,
         # estimator-quality diagnostic: signature-agreement Jaccard
         # estimate vs exact shingle-set Jaccard for every banded
         # candidate pair (operators/dedup.minhash_estimate_pairs)
         "dedup_minhash_est": f"""
-            WITH {_SQL_SHINGLE_BASE},
-            sigbase AS (
-              SELECT doc_id, shset,
-                     list_transform(shset, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS hv
-              FROM sh),
-            sig AS (SELECT doc_id, shset, {minhash_sigs} FROM sigbase),
-            keys AS (
-              SELECT doc_id, 0 AS band,
-                     sig_0::VARCHAR || '-' || sig_1::VARCHAR || '-'
-                       || sig_2::VARCHAR || '-' || sig_3::VARCHAR AS band_key FROM sig
-              UNION ALL
-              SELECT doc_id, 1 AS band,
-                     sig_4::VARCHAR || '-' || sig_5::VARCHAR || '-'
-                       || sig_6::VARCHAR || '-' || sig_7::VARCHAR AS band_key FROM sig),
-            cand AS (
-              SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-              FROM keys a JOIN keys b
-                ON a.band = b.band AND a.band_key = b.band_key
-               AND a.doc_id < b.doc_id),
+            WITH {_SQL_SHINGLE_BASE},{_SQL_MINHASH_KEYS},{_SQL_MINHASH_CAND},
             sc AS (
               SELECT c.id_a, c.id_b,
                      ({" + ".join(f"CASE WHEN sa.sig_{i} = sb.sig_{i} THEN 1 ELSE 0 END" for i in range(8))})::BIGINT AS n_agree,
@@ -3921,215 +4357,26 @@ def _oracle_sql_literal() -> dict[str, str]:
         # self-trained multinomial NB language classifier, confusion
         # matrix (operators/textanalysis.nb_classify): Laplace-smoothed
         # counts, quantized-log integer scores, argmax ties by class
-        "nb_confusion": """
-            WITH tok AS (SELECT doc_id AS doc, lang AS actual,
-                   unnest(list_filter(string_split(text, ' '),
-                                      t -> t != '')) AS token
-                 FROM documents),
-            cc AS (SELECT actual AS cls, token,
-                     round(ln((COUNT(*) + 1)::DOUBLE) * 1000000)::BIGINT AS lp
-                   FROM tok GROUP BY 1, 2),
-            v AS (SELECT COUNT(DISTINCT token)::BIGINT AS v FROM tok),
-            nd AS (SELECT COUNT(*)::BIGINT AS n_docs FROM documents),
-            ncls AS (SELECT lang AS cls, COUNT(*)::BIGINT AS n_c
-                     FROM documents GROUP BY lang),
-            tot AS (SELECT actual AS cls, COUNT(*)::BIGINT AS tot
-                    FROM tok GROUP BY 1),
-            stats AS (SELECT tot.cls,
-                        round(ln((tot.tot + v.v)::DOUBLE)
-                              * 1000000)::BIGINT AS lp_denom,
-                        round(ln(ncls.n_c::DOUBLE / nd.n_docs::DOUBLE)
-                              * 1000000)::BIGINT AS lp_prior
-                      FROM tot CROSS JOIN v CROSS JOIN nd
-                      JOIN ncls ON ncls.cls = tot.cls),
-            obs AS (SELECT tok.doc, cc.cls, SUM(cc.lp)::BIGINT AS lp_obs
-                    FROM tok JOIN cc ON cc.token = tok.token
-                    GROUP BY 1, 2),
-            pd AS (SELECT doc_id AS doc, lang AS actual,
-                     len(list_filter(string_split(text, ' '),
-                                     t -> t != ''))::BIGINT AS n_tok
-                   FROM documents),
-            scored AS (SELECT pd.doc, pd.actual, s.cls,
-                         (s.lp_prior + COALESCE(o.lp_obs, 0)
-                          - pd.n_tok * s.lp_denom)::BIGINT AS score
-                       FROM pd CROSS JOIN stats s
-                       LEFT JOIN obs o ON o.doc = pd.doc AND o.cls = s.cls),
-            pick AS (SELECT doc, actual, cls AS predicted FROM (
-                       SELECT scored.*, ROW_NUMBER() OVER (
-                         PARTITION BY doc ORDER BY score DESC, cls ASC) AS rn
-                       FROM scored) WHERE rn = 1)
-            SELECT actual, predicted, COUNT(*)::BIGINT AS n_docs
-            FROM pick GROUP BY 1, 2 ORDER BY 1, 2
-        """,
+        "nb_confusion": "WITH " + _sql_nb_confusion("documents", "documents"),
         # out-of-fold NB: the split_leakage_safe chain assigns splits,
         # the NB chain trains (counts, vocab, priors) on 'train' rows
         # ONLY and scores the 'test' rows (textanalysis.nb_classify
         # train_docs=)
-        "nb_holdout_confusion": f"""
-            WITH RECURSIVE {_SQL_SHINGLE_BASE},
-            sigbase AS (
-              SELECT doc_id,
-                     list_transform(shset, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS hv
-              FROM sh),
-            sig AS (SELECT doc_id, {minhash_sigs} FROM sigbase),
-            keys AS (
-              SELECT doc_id, 0 AS band,
-                     sig_0::VARCHAR || '-' || sig_1::VARCHAR || '-'
-                       || sig_2::VARCHAR || '-' || sig_3::VARCHAR AS band_key FROM sig
-              UNION ALL
-              SELECT doc_id, 1 AS band,
-                     sig_4::VARCHAR || '-' || sig_5::VARCHAR || '-'
-                       || sig_6::VARCHAR || '-' || sig_7::VARCHAR AS band_key FROM sig),
-            cand AS (
-              SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-              FROM keys a JOIN keys b
-                ON a.band = b.band AND a.band_key = b.band_key
-               AND a.doc_id < b.doc_id),
-            verified AS (
-              SELECT c.id_a, c.id_b
-              FROM cand c
-              JOIN sh sa ON sa.doc_id = c.id_a
-              JOIN sh sb ON sb.doc_id = c.id_b
-              WHERE round(len(list_intersect(sa.shset, sb.shset))::DOUBLE
-                    / len(list_distinct(list_concat(sa.shset, sb.shset)))::DOUBLE, 6)
-                    >= 0.8),
-            edges AS (SELECT id_a AS src, id_b AS dst FROM verified
-                      UNION
-                      SELECT id_b, id_a FROM verified),
-            reach(src, dst) AS (
-              SELECT src, dst FROM edges
-              UNION
-              SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-            minlab AS (
-              SELECT src AS doc_id, least(src, min(dst)) AS label
-              FROM reach GROUP BY src),
-            lab AS (SELECT d.doc_id, COALESCE(m.label, d.doc_id) AS label
-                    FROM documents d LEFT JOIN minlab m ON m.doc_id = d.doc_id),
-            bk AS (SELECT doc_id,
-                     ('0x' || substr(md5('0:' || label::VARCHAR), 1, 8))::BIGINT
-                     % 1000000 AS bkt
-                   FROM lab),
-            sp AS (SELECT doc_id,
-                     CASE WHEN bkt < 800000 THEN 'train'
-                          WHEN bkt < 900000 THEN 'val'
-                          ELSE 'test' END AS split
-                   FROM bk),
+        "nb_holdout_confusion": _SQL_LEAKAGE_SAFE_SPLIT + """,
             tr AS (SELECT d.* FROM documents d
                    JOIN sp ON sp.doc_id = d.doc_id AND sp.split = 'train'),
             te AS (SELECT d.* FROM documents d
-                   JOIN sp ON sp.doc_id = d.doc_id AND sp.split = 'test'),
-            tr_tok AS (SELECT lang AS actual,
-                         unnest(list_filter(string_split(text, ' '),
-                                            t -> t != '')) AS token
-                       FROM tr),
-            tok AS (SELECT doc_id AS doc, lang AS actual,
-                      unnest(list_filter(string_split(text, ' '),
-                                         t -> t != '')) AS token
-                    FROM te),
-            cc AS (SELECT actual AS cls, token,
-                     round(ln((COUNT(*) + 1)::DOUBLE) * 1000000)::BIGINT AS lp
-                   FROM tr_tok GROUP BY 1, 2),
-            v AS (SELECT COUNT(DISTINCT token)::BIGINT AS v FROM tr_tok),
-            nd AS (SELECT COUNT(*)::BIGINT AS n_docs FROM tr),
-            ncls AS (SELECT lang AS cls, COUNT(*)::BIGINT AS n_c
-                     FROM tr GROUP BY lang),
-            tot AS (SELECT actual AS cls, COUNT(*)::BIGINT AS tot
-                    FROM tr_tok GROUP BY 1),
-            stats AS (SELECT tot.cls,
-                        round(ln((tot.tot + v.v)::DOUBLE)
-                              * 1000000)::BIGINT AS lp_denom,
-                        round(ln(ncls.n_c::DOUBLE / nd.n_docs::DOUBLE)
-                              * 1000000)::BIGINT AS lp_prior
-                      FROM tot CROSS JOIN v CROSS JOIN nd
-                      JOIN ncls ON ncls.cls = tot.cls),
-            obs AS (SELECT tok.doc, cc.cls, SUM(cc.lp)::BIGINT AS lp_obs
-                    FROM tok JOIN cc ON cc.token = tok.token
-                    GROUP BY 1, 2),
-            pdoc AS (SELECT doc_id AS doc, lang AS actual,
-                       len(list_filter(string_split(text, ' '),
-                                       t -> t != ''))::BIGINT AS n_tok
-                     FROM te),
-            scored AS (SELECT pdoc.doc, pdoc.actual, s.cls,
-                         (s.lp_prior + COALESCE(o.lp_obs, 0)
-                          - pdoc.n_tok * s.lp_denom)::BIGINT AS score
-                       FROM pdoc CROSS JOIN stats s
-                       LEFT JOIN obs o ON o.doc = pdoc.doc AND o.cls = s.cls),
-            pick AS (SELECT doc, actual, cls AS predicted FROM (
-                       SELECT scored.*, ROW_NUMBER() OVER (
-                         PARTITION BY doc ORDER BY score DESC, cls ASC) AS rn
-                       FROM scored) WHERE rn = 1)
-            SELECT actual, predicted, COUNT(*)::BIGINT AS n_docs
-            FROM pick GROUP BY 1, 2 ORDER BY 1, 2
-        """,
+                   JOIN sp ON sp.doc_id = d.doc_id AND sp.split = 'test'),"""
+                                + _sql_nb_confusion("tr", "te"),
         # leakage-safe split: the dedup_corpus_cc label chain, then the
         # sample_split bucket rule applied to the component LABEL so
         # near-dup components co-travel (operators/sampling.
         # leakage_safe_split)
-        "split_leakage_safe": f"""
-            WITH RECURSIVE {_SQL_SHINGLE_BASE},
-            sigbase AS (
-              SELECT doc_id,
-                     list_transform(shset, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS hv
-              FROM sh),
-            sig AS (SELECT doc_id, {minhash_sigs} FROM sigbase),
-            keys AS (
-              SELECT doc_id, 0 AS band,
-                     sig_0::VARCHAR || '-' || sig_1::VARCHAR || '-'
-                       || sig_2::VARCHAR || '-' || sig_3::VARCHAR AS band_key FROM sig
-              UNION ALL
-              SELECT doc_id, 1 AS band,
-                     sig_4::VARCHAR || '-' || sig_5::VARCHAR || '-'
-                       || sig_6::VARCHAR || '-' || sig_7::VARCHAR AS band_key FROM sig),
-            cand AS (
-              SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-              FROM keys a JOIN keys b
-                ON a.band = b.band AND a.band_key = b.band_key
-               AND a.doc_id < b.doc_id),
-            verified AS (
-              SELECT c.id_a, c.id_b
-              FROM cand c
-              JOIN sh sa ON sa.doc_id = c.id_a
-              JOIN sh sb ON sb.doc_id = c.id_b
-              WHERE round(len(list_intersect(sa.shset, sb.shset))::DOUBLE
-                    / len(list_distinct(list_concat(sa.shset, sb.shset)))::DOUBLE, 6)
-                    >= 0.8),
-            edges AS (SELECT id_a AS src, id_b AS dst FROM verified
-                      UNION
-                      SELECT id_b, id_a FROM verified),
-            reach(src, dst) AS (
-              SELECT src, dst FROM edges
-              UNION
-              SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-            minlab AS (
-              SELECT src AS doc_id, least(src, min(dst)) AS label
-              FROM reach GROUP BY src),
-            lab AS (SELECT d.doc_id, COALESCE(m.label, d.doc_id) AS label
-                    FROM documents d LEFT JOIN minlab m ON m.doc_id = d.doc_id),
-            bk AS (SELECT doc_id,
-                     ('0x' || substr(md5('0:' || label::VARCHAR), 1, 8))::BIGINT
-                     % 1000000 AS bkt
-                   FROM lab)
-            SELECT doc_id,
-              CASE WHEN bkt < 800000 THEN 'train'
-                   WHEN bkt < 900000 THEN 'val'
-                   ELSE 'test' END AS split
-            FROM bk
+        "split_leakage_safe": _SQL_LEAKAGE_SAFE_SPLIT + """
+            SELECT doc_id, split FROM sp
         """,
         "dedup_incremental": f"""
-            WITH {_SQL_SHINGLE_BASE},
-            sigbase AS (
-              SELECT doc_id,
-                     list_transform(shset, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS hv
-              FROM sh),
-            sig AS (SELECT doc_id, {minhash_sigs} FROM sigbase),
-            keys AS (
-              SELECT doc_id, 0 AS band,
-                     sig_0::VARCHAR || '-' || sig_1::VARCHAR || '-'
-                       || sig_2::VARCHAR || '-' || sig_3::VARCHAR AS band_key FROM sig
-              UNION ALL
-              SELECT doc_id, 1 AS band,
-                     sig_4::VARCHAR || '-' || sig_5::VARCHAR || '-'
-                       || sig_6::VARCHAR || '-' || sig_7::VARCHAR AS band_key FROM sig)
+            WITH {_SQL_SHINGLE_BASE},{_SQL_MINHASH_KEYS}
             SELECT DISTINCT n.doc_id AS new_id, i.doc_id AS indexed_id
             FROM keys n JOIN keys i
               ON n.band = i.band AND n.band_key = i.band_key
@@ -4140,8 +4387,7 @@ def _oracle_sql_literal() -> dict[str, str]:
             blocked AS (SELECT doc_id, lang, n_chars // 100 AS blk, shset FROM sh),
             pairs AS (
               SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                round(len(list_intersect(a.shset, b.shset))::DOUBLE
-                      / len(list_distinct(list_concat(a.shset, b.shset)))::DOUBLE, 6) AS jaccard
+                {_sql_jaccard('a', 'b')} AS jaccard
               FROM blocked a JOIN blocked b
                 ON a.lang = b.lang AND a.blk = b.blk AND a.doc_id < b.doc_id)
             SELECT id_a, id_b, jaccard FROM pairs WHERE jaccard >= 0.8
@@ -4281,167 +4527,25 @@ def _oracle_sql_literal() -> dict[str, str]:
             WHERE bit_count(xor(ha, hb)) + bit_count(xor(la, lb)) <= 3
         """,
         "dedup_corpus": f"""
-            WITH {_SQL_SHINGLE_BASE},
-            sigbase AS (
-              SELECT doc_id,
-                     list_transform(shset, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS hv
-              FROM sh),
-            sig AS (SELECT doc_id, {minhash_sigs} FROM sigbase),
-            keys AS (
-              SELECT doc_id, 0 AS band,
-                     sig_0::VARCHAR || '-' || sig_1::VARCHAR || '-'
-                       || sig_2::VARCHAR || '-' || sig_3::VARCHAR AS band_key FROM sig
-              UNION ALL
-              SELECT doc_id, 1 AS band,
-                     sig_4::VARCHAR || '-' || sig_5::VARCHAR || '-'
-                       || sig_6::VARCHAR || '-' || sig_7::VARCHAR AS band_key FROM sig),
-            cand AS (
-              SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-              FROM keys a JOIN keys b
-                ON a.band = b.band AND a.band_key = b.band_key
-               AND a.doc_id < b.doc_id),
-            losers AS (
-              SELECT DISTINCT c.id_b AS doc_id
-              FROM cand c
-              JOIN sh sa ON sa.doc_id = c.id_a
-              JOIN sh sb ON sb.doc_id = c.id_b
-              WHERE round(len(list_intersect(sa.shset, sb.shset))::DOUBLE
-                    / len(list_distinct(list_concat(sa.shset, sb.shset)))::DOUBLE, 6)
-                    >= 0.8)
+            WITH {_SQL_LSH_VERIFIED}
             SELECT d.doc_id, d.lang, d.source, d.n_chars FROM documents d
-            WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.doc_id = d.doc_id)
+            WHERE NOT EXISTS (SELECT 1 FROM verified v WHERE v.id_b = d.doc_id)
         """,
-        "dedup_corpus_cc": f"""
-            WITH RECURSIVE {_SQL_SHINGLE_BASE},
-            sigbase AS (
-              SELECT doc_id,
-                     list_transform(shset, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS hv
-              FROM sh),
-            sig AS (SELECT doc_id, {minhash_sigs} FROM sigbase),
-            keys AS (
-              SELECT doc_id, 0 AS band,
-                     sig_0::VARCHAR || '-' || sig_1::VARCHAR || '-'
-                       || sig_2::VARCHAR || '-' || sig_3::VARCHAR AS band_key FROM sig
-              UNION ALL
-              SELECT doc_id, 1 AS band,
-                     sig_4::VARCHAR || '-' || sig_5::VARCHAR || '-'
-                       || sig_6::VARCHAR || '-' || sig_7::VARCHAR AS band_key FROM sig),
-            cand AS (
-              SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-              FROM keys a JOIN keys b
-                ON a.band = b.band AND a.band_key = b.band_key
-               AND a.doc_id < b.doc_id),
-            verified AS (
-              SELECT c.id_a, c.id_b
-              FROM cand c
-              JOIN sh sa ON sa.doc_id = c.id_a
-              JOIN sh sb ON sb.doc_id = c.id_b
-              WHERE round(len(list_intersect(sa.shset, sb.shset))::DOUBLE
-                    / len(list_distinct(list_concat(sa.shset, sb.shset)))::DOUBLE, 6)
-                    >= 0.8),
-            edges AS (SELECT id_a AS src, id_b AS dst FROM verified
-                      UNION
-                      SELECT id_b, id_a FROM verified),
-            reach(src, dst) AS (
-              SELECT src, dst FROM edges
-              UNION
-              SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-            minlab AS (
-              SELECT src AS doc_id, least(src, min(dst)) AS label
-              FROM reach GROUP BY src)
+        "dedup_corpus_cc": _SQL_LSH_COMPONENTS + """
             SELECT d.doc_id, d.lang, d.source, d.n_chars FROM documents d
             LEFT JOIN minlab m ON m.doc_id = d.doc_id
             WHERE m.doc_id IS NULL OR m.label = d.doc_id
         """,
         # same CC chain, but reporting the component-size histogram
         # (singletons = docs with no minlab row, size 1)
-        "dedup_cluster_sizes": f"""
-            WITH RECURSIVE {_SQL_SHINGLE_BASE},
-            sigbase AS (
-              SELECT doc_id,
-                     list_transform(shset, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS hv
-              FROM sh),
-            sig AS (SELECT doc_id, {minhash_sigs} FROM sigbase),
-            keys AS (
-              SELECT doc_id, 0 AS band,
-                     sig_0::VARCHAR || '-' || sig_1::VARCHAR || '-'
-                       || sig_2::VARCHAR || '-' || sig_3::VARCHAR AS band_key FROM sig
-              UNION ALL
-              SELECT doc_id, 1 AS band,
-                     sig_4::VARCHAR || '-' || sig_5::VARCHAR || '-'
-                       || sig_6::VARCHAR || '-' || sig_7::VARCHAR AS band_key FROM sig),
-            cand AS (
-              SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-              FROM keys a JOIN keys b
-                ON a.band = b.band AND a.band_key = b.band_key
-               AND a.doc_id < b.doc_id),
-            verified AS (
-              SELECT c.id_a, c.id_b
-              FROM cand c
-              JOIN sh sa ON sa.doc_id = c.id_a
-              JOIN sh sb ON sb.doc_id = c.id_b
-              WHERE round(len(list_intersect(sa.shset, sb.shset))::DOUBLE
-                    / len(list_distinct(list_concat(sa.shset, sb.shset)))::DOUBLE, 6)
-                    >= 0.8),
-            edges AS (SELECT id_a AS src, id_b AS dst FROM verified
-                      UNION
-                      SELECT id_b, id_a FROM verified),
-            reach(src, dst) AS (
-              SELECT src, dst FROM edges
-              UNION
-              SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-            minlab AS (
-              SELECT src AS doc_id, least(src, min(dst)) AS label
-              FROM reach GROUP BY src),
-            lab AS (SELECT d.doc_id, COALESCE(m.label, d.doc_id) AS label
-                    FROM documents d LEFT JOIN minlab m ON m.doc_id = d.doc_id),
+        "dedup_cluster_sizes": _SQL_LSH_COMPONENTS + "," + _SQL_COMPONENT_LABELS + """,
             cs AS (SELECT label, COUNT(*)::INT AS cluster_size
                    FROM lab GROUP BY label)
             SELECT cluster_size, COUNT(*)::BIGINT AS n_clusters,
                    SUM(cluster_size)::BIGINT AS n_docs
             FROM cs GROUP BY cluster_size
         """,
-        "dedup_corpus_cc_best": f"""
-            WITH RECURSIVE {_SQL_SHINGLE_BASE},
-            sigbase AS (
-              SELECT doc_id,
-                     list_transform(shset, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS hv
-              FROM sh),
-            sig AS (SELECT doc_id, {minhash_sigs} FROM sigbase),
-            keys AS (
-              SELECT doc_id, 0 AS band,
-                     sig_0::VARCHAR || '-' || sig_1::VARCHAR || '-'
-                       || sig_2::VARCHAR || '-' || sig_3::VARCHAR AS band_key FROM sig
-              UNION ALL
-              SELECT doc_id, 1 AS band,
-                     sig_4::VARCHAR || '-' || sig_5::VARCHAR || '-'
-                       || sig_6::VARCHAR || '-' || sig_7::VARCHAR AS band_key FROM sig),
-            cand AS (
-              SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-              FROM keys a JOIN keys b
-                ON a.band = b.band AND a.band_key = b.band_key
-               AND a.doc_id < b.doc_id),
-            verified AS (
-              SELECT c.id_a, c.id_b
-              FROM cand c
-              JOIN sh sa ON sa.doc_id = c.id_a
-              JOIN sh sb ON sb.doc_id = c.id_b
-              WHERE round(len(list_intersect(sa.shset, sb.shset))::DOUBLE
-                    / len(list_distinct(list_concat(sa.shset, sb.shset)))::DOUBLE, 6)
-                    >= 0.8),
-            edges AS (SELECT id_a AS src, id_b AS dst FROM verified
-                      UNION
-                      SELECT id_b, id_a FROM verified),
-            reach(src, dst) AS (
-              SELECT src, dst FROM edges
-              UNION
-              SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-            minlab AS (
-              SELECT src AS doc_id, least(src, min(dst)) AS label
-              FROM reach GROUP BY src),
-            lab AS (
-              SELECT d.doc_id, COALESCE(m.label, d.doc_id) AS label, d.n_chars
-              FROM documents d LEFT JOIN minlab m ON m.doc_id = d.doc_id),
+        "dedup_corpus_cc_best": _SQL_LSH_COMPONENTS + "," + _SQL_COMPONENT_LABELS + """,
             win AS (
               SELECT doc_id,
                      ROW_NUMBER() OVER (PARTITION BY label
@@ -4478,31 +4582,19 @@ def _oracle_sql_literal() -> dict[str, str]:
                                                bb.embedding::DOUBLE[]), 6) >= 0.35
         """,
         # ---- similarity ----------------------------------------------------
-        "sim_topk_cosine": """
-            WITH q AS (SELECT embedding::DOUBLE[] AS q_vec FROM embeddings WHERE vec_id = 0)
-            SELECT vec_id,
-                   round(list_cosine_similarity(embedding::DOUBLE[], q_vec), 6) AS cosine_sim
-            FROM embeddings, q WHERE vec_id <> 0
-            ORDER BY cosine_sim DESC, vec_id ASC LIMIT 10
+        "sim_topk_cosine": f"""
+            WITH {_SQL_QUERY_VEC},{_SQL_EXACT_TOP10}
+            SELECT vec_id, cosine_sim FROM exact
         """,
         "ann_kmeans_centroids": f"""
-            WITH {kmeans_ctes},
+            WITH {_SQL_KMEANS},
             flat AS (SELECT cid, unnest(generate_series(1, len(cv))) AS i, cv
                      FROM c2)
             SELECT cid, (i - 1)::INT AS dim, cv[i]::BIGINT AS cv_val
             FROM flat
         """,
         "cluster_profile": f"""
-            WITH {kmeans_ctes},
-            p3 AS (SELECT e.vec_id, c.cid,
-                     list_aggregate(list_transform(generate_series(1, len(e.qv)),
-                       i -> (e.qv[i] - c.cv[i]) * (e.qv[i] - c.cv[i])),
-                       'sum') AS d2
-                   FROM e CROSS JOIN c2 c),
-            a3 AS (SELECT vec_id, cid, d2 FROM (
-                     SELECT p3.*, ROW_NUMBER() OVER (
-                       PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM p3)
-                   WHERE rn = 1)
+            WITH {_SQL_KMEANS_ASSIGN}
             SELECT cid, COUNT(*)::BIGINT AS n_vecs,
                    SUM(d2)::BIGINT AS inertia,
                    round(SUM(d2)::BIGINT / COUNT(*), 6) AS avg_d2
@@ -4511,16 +4603,7 @@ def _oracle_sql_literal() -> dict[str, str]:
         # batch k-NN join: same trained-IVF replay, but probes and the
         # final rank window run PER QUERY of the 5-vector batch
         "knn_join_topk": f"""
-            WITH {kmeans_ctes},
-            p3 AS (SELECT e.vec_id, e.embedding, c.cid,
-                     list_aggregate(list_transform(generate_series(1, len(e.qv)),
-                       i -> (e.qv[i] - c.cv[i]) * (e.qv[i] - c.cv[i])),
-                       'sum') AS d2
-                   FROM e CROSS JOIN c2 c),
-            a3 AS (SELECT vec_id, embedding, cid FROM (
-                     SELECT p3.*, ROW_NUMBER() OVER (
-                       PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM p3)
-                   WHERE rn = 1),
+            WITH {_SQL_KMEANS_ASSIGN},
             probes AS (SELECT query_id, cid FROM (
                      SELECT vec_id AS query_id, cid, ROW_NUMBER() OVER (
                        PARTITION BY vec_id ORDER BY d2, cid) AS rn
@@ -4543,162 +4626,32 @@ def _oracle_sql_literal() -> dict[str, str]:
         """,
         # int8 scalar quantization: per-dim min-max bounds, integer
         # floor-div codes, midpoint reconstruction, asymmetric L2
-        "ann_sq8_topk": """
-            WITH e AS (SELECT vec_id,
-                    list_transform(embedding,
-                      x -> round(x::DOUBLE * 1000)::BIGINT) AS qv
-                  FROM embeddings),
-            b AS (SELECT i AS dim, MIN(qv[i])::BIGINT AS mn,
-                         MAX(qv[i])::BIGINT AS mx
-                  FROM e, unnest(generate_series(1, len(qv))) AS t(i)
-                  GROUP BY i),
-            bl AS (SELECT list(mn ORDER BY dim) AS mns,
-                          list(mx ORDER BY dim) AS mxs FROM b),
-            q AS (SELECT qv AS qqv FROM e WHERE vec_id = 0),
-            codes AS (SELECT e.vec_id,
-                    list_transform(generate_series(1, len(e.qv)),
-                      i -> CASE WHEN bl.mxs[i] = bl.mns[i] THEN 0
-                           ELSE least(255, greatest(0,
-                             ((e.qv[i] - bl.mns[i]) * 255)
-                             // (bl.mxs[i] - bl.mns[i]))) END) AS cs
-                  FROM e, bl),
-            recon AS (SELECT c.vec_id,
-                    list_transform(generate_series(1, len(c.cs)),
-                      i -> CASE WHEN bl.mxs[i] = bl.mns[i] THEN bl.mns[i]
-                           ELSE bl.mns[i] + ((2 * c.cs[i] + 1)
-                             * (bl.mxs[i] - bl.mns[i])) // 510 END) AS rv
-                  FROM codes c, bl)
-            SELECT r.vec_id,
-                   list_aggregate(list_transform(
-                     generate_series(1, len(r.rv)),
-                     i -> (q.qqv[i] - r.rv[i]) * (q.qqv[i] - r.rv[i])),
-                     'sum')::BIGINT AS sq_d2
-            FROM recon r, q WHERE r.vec_id <> 0
-            ORDER BY sq_d2 ASC, vec_id ASC LIMIT 10
+        "ann_sq8_topk": f"""
+            WITH {_sql_embedding_lattice('e')},{_SQL_SQ8},{_SQL_SQ8_TOP10}
+            SELECT vec_id, sq_d2 FROM appr
         """,
-        "sq8_recall": """
-            WITH e AS (SELECT vec_id,
-                    list_transform(embedding,
-                      x -> round(x::DOUBLE * 1000)::BIGINT) AS qv
-                  FROM embeddings),
-            b AS (SELECT i AS dim, MIN(qv[i])::BIGINT AS mn,
-                         MAX(qv[i])::BIGINT AS mx
-                  FROM e, unnest(generate_series(1, len(qv))) AS t(i)
-                  GROUP BY i),
-            bl AS (SELECT list(mn ORDER BY dim) AS mns,
-                          list(mx ORDER BY dim) AS mxs FROM b),
-            q AS (SELECT qv AS qqv FROM e WHERE vec_id = 0),
-            codes AS (SELECT e.vec_id,
-                    list_transform(generate_series(1, len(e.qv)),
-                      i -> CASE WHEN bl.mxs[i] = bl.mns[i] THEN 0
-                           ELSE least(255, greatest(0,
-                             ((e.qv[i] - bl.mns[i]) * 255)
-                             // (bl.mxs[i] - bl.mns[i]))) END) AS cs
-                  FROM e, bl),
-            recon AS (SELECT c.vec_id,
-                    list_transform(generate_series(1, len(c.cs)),
-                      i -> CASE WHEN bl.mxs[i] = bl.mns[i] THEN bl.mns[i]
-                           ELSE bl.mns[i] + ((2 * c.cs[i] + 1)
-                             * (bl.mxs[i] - bl.mns[i])) // 510 END) AS rv
-                  FROM codes c, bl),
-            appr AS (SELECT r.vec_id,
-                       list_aggregate(list_transform(
-                         generate_series(1, len(r.rv)),
-                         i -> (q.qqv[i] - r.rv[i]) * (q.qqv[i] - r.rv[i])),
-                         'sum')::BIGINT AS sq_d2
-                     FROM recon r, q WHERE r.vec_id <> 0
-                     ORDER BY sq_d2 ASC, vec_id ASC LIMIT 10),
-            exact AS (SELECT e.vec_id,
-                        list_aggregate(list_transform(
-                          generate_series(1, len(e.qv)),
-                          i -> (e.qv[i] - q.qqv[i]) * (e.qv[i] - q.qqv[i])),
-                          'sum')::BIGINT AS d2
+        "sq8_recall": f"""
+            WITH {_sql_embedding_lattice('e')},{_SQL_SQ8},{_SQL_SQ8_TOP10},
+            exact AS (SELECT e.vec_id, {_sql_d2('e.qv', 'q.qqv')}::BIGINT AS d2
                       FROM e, q WHERE e.vec_id <> 0
-                      ORDER BY d2 ASC, vec_id ASC LIMIT 10),
-            hits AS (SELECT COUNT(*)::BIGINT AS n_hits FROM exact
-                     WHERE vec_id IN (SELECT vec_id FROM appr))
-            SELECT 10::BIGINT AS k, n_hits,
-                   ((n_hits * 1000000) // 10)::BIGINT AS recall_micro
-            FROM hits
-        """,
+                      ORDER BY d2 ASC, vec_id ASC LIMIT 10){_SQL_RECALL_AT_10}""",
         "ann_ivf_topk": f"""
-            WITH {kmeans_ctes},
-            p3 AS (SELECT e.vec_id, e.embedding, c.cid,
-                     list_aggregate(list_transform(generate_series(1, len(e.qv)),
-                       i -> (e.qv[i] - c.cv[i]) * (e.qv[i] - c.cv[i])),
-                       'sum') AS d2
-                   FROM e CROSS JOIN c2 c),
-            a3 AS (SELECT vec_id, embedding, cid FROM (
-                     SELECT p3.*, ROW_NUMBER() OVER (
-                       PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM p3)
-                   WHERE rn = 1),
-            probes AS (SELECT cid FROM p3 WHERE vec_id = 0
-                       ORDER BY d2, cid LIMIT 2),
-            q AS (SELECT embedding::DOUBLE[] AS q_vec FROM embeddings
-                  WHERE vec_id = 0)
-            SELECT a3.vec_id, a3.cid,
-                   round(list_cosine_similarity(a3.embedding::DOUBLE[], q_vec),
-                         6) AS cosine_sim
-            FROM a3 JOIN probes USING (cid), q
-            WHERE a3.vec_id <> 0
-            ORDER BY cosine_sim DESC, vec_id ASC LIMIT 10
+            WITH {_SQL_KMEANS_ASSIGN},{_SQL_QUERY_VEC},{_SQL_IVF_TOP10}
+            SELECT vec_id, cid, cosine_sim FROM appr
         """,
         # recall@10 of IVF(4 cells, nprobe 2) vs exact brute force —
         # the estimator-quality diagnostic of the ANN family
         # (composes the ann_ivf_topk and sim_topk_cosine chains)
         "ann_recall": f"""
-            WITH {kmeans_ctes},
-            p3 AS (SELECT e.vec_id, e.embedding, c.cid,
-                     list_aggregate(list_transform(generate_series(1, len(e.qv)),
-                       i -> (e.qv[i] - c.cv[i]) * (e.qv[i] - c.cv[i])),
-                       'sum') AS d2
-                   FROM e CROSS JOIN c2 c),
-            a3 AS (SELECT vec_id, embedding, cid FROM (
-                     SELECT p3.*, ROW_NUMBER() OVER (
-                       PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM p3)
-                   WHERE rn = 1),
-            probes AS (SELECT cid FROM p3 WHERE vec_id = 0
-                       ORDER BY d2, cid LIMIT 2),
-            q AS (SELECT embedding::DOUBLE[] AS q_vec FROM embeddings
-                  WHERE vec_id = 0),
-            appr AS (SELECT a3.vec_id,
-                       round(list_cosine_similarity(a3.embedding::DOUBLE[],
-                             q_vec), 6) AS cs
-                     FROM a3 JOIN probes USING (cid), q
-                     WHERE a3.vec_id <> 0
-                     ORDER BY cs DESC, vec_id ASC LIMIT 10),
-            exact AS (SELECT vec_id,
-                        round(list_cosine_similarity(embedding::DOUBLE[],
-                              q.q_vec), 6) AS cs
-                      FROM embeddings, q WHERE vec_id <> 0
-                      ORDER BY cs DESC, vec_id ASC LIMIT 10),
-            hits AS (SELECT COUNT(*)::BIGINT AS n_hits FROM exact
-                     WHERE vec_id IN (SELECT vec_id FROM appr))
-            SELECT 10::BIGINT AS k, n_hits,
-                   ((n_hits * 1000000) // 10)::BIGINT AS recall_micro
-            FROM hits
-        """,
+            WITH {_SQL_KMEANS_ASSIGN},{_SQL_QUERY_VEC},{_SQL_IVF_TOP10},
+            {_SQL_EXACT_TOP10}{_SQL_RECALL_AT_10}""",
         "ann_ivf_sampled": f"""
-            WITH {kmeans_sampled_ctes},
-            p3 AS (SELECT e.vec_id, e.embedding, c.cid,
-                     list_aggregate(list_transform(generate_series(1, len(e.qv)),
-                       i -> (e.qv[i] - c.cv[i]) * (e.qv[i] - c.cv[i])),
-                       'sum') AS d2
-                   FROM efull e CROSS JOIN c2 c),
-            a3 AS (SELECT vec_id, embedding, cid FROM (
-                     SELECT p3.*, ROW_NUMBER() OVER (
-                       PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM p3)
-                   WHERE rn = 1),
-            probes AS (SELECT cid FROM p3 WHERE vec_id = 0
-                       ORDER BY d2, cid LIMIT 2),
-            q AS (SELECT embedding::DOUBLE[] AS q_vec FROM embeddings
-                  WHERE vec_id = 0)
-            SELECT a3.vec_id, a3.cid,
-                   round(list_cosine_similarity(a3.embedding::DOUBLE[], q_vec),
-                         6) AS cosine_sim
-            FROM a3 JOIN probes USING (cid), q
-            WHERE a3.vec_id <> 0
-            ORDER BY cosine_sim DESC, vec_id ASC LIMIT 10
+            WITH {_sql_embedding_lattice('efull')},
+            e AS (SELECT * FROM efull
+                  WHERE ('0x' || substr(md5('0:' || vec_id), 1, 8))::BIGINT
+                        % 1000000 < 500000),{_sql_lloyd('')},{_sql_assign('efull')},
+            {_SQL_QUERY_VEC},{_SQL_IVF_TOP10}
+            SELECT vec_id, cid, cosine_sim FROM appr
         """,
         "ann_pq_codes": f"""
             WITH {pq_ctes}
@@ -4720,18 +4673,7 @@ def _oracle_sql_literal() -> dict[str, str]:
         # ann_pq_topk): ADC distances are summed only for vectors whose
         # coarse cell is among the nprobe=2 probed cells
         "ann_ivfadc_topk": f"""
-            WITH {kmeans_ctes},
-            p3 AS (SELECT e.vec_id, c.cid,
-                     list_aggregate(list_transform(generate_series(1, len(e.qv)),
-                       i -> (e.qv[i] - c.cv[i]) * (e.qv[i] - c.cv[i])),
-                       'sum') AS d2
-                   FROM e CROSS JOIN c2 c),
-            a3 AS (SELECT vec_id, cid FROM (
-                     SELECT p3.*, ROW_NUMBER() OVER (
-                       PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM p3)
-                   WHERE rn = 1),
-            probes AS (SELECT cid FROM p3 WHERE vec_id = 0
-                       ORDER BY d2, cid LIMIT 2),
+            WITH {_SQL_KMEANS_ASSIGN},{_SQL_PROBES},
             {pq_ctes},
             codes AS ({pq_codes_union}),
             lut AS ({pq_lut_union})
@@ -4748,43 +4690,8 @@ def _oracle_sql_literal() -> dict[str, str]:
         # composed with the SQ8 quantize/reconstruct chain (shared with
         # ann_sq8_topk), ranking restricted to the probed cells
         "ann_ivfsq_topk": f"""
-            WITH {kmeans_ctes},
-            p3 AS (SELECT e.vec_id, c.cid,
-                     list_aggregate(list_transform(generate_series(1, len(e.qv)),
-                       i -> (e.qv[i] - c.cv[i]) * (e.qv[i] - c.cv[i])),
-                       'sum') AS d2
-                   FROM e CROSS JOIN c2 c),
-            a3 AS (SELECT vec_id, cid FROM (
-                     SELECT p3.*, ROW_NUMBER() OVER (
-                       PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM p3)
-                   WHERE rn = 1),
-            probes AS (SELECT cid FROM p3 WHERE vec_id = 0
-                       ORDER BY d2, cid LIMIT 2),
-            b AS (SELECT i AS dim, MIN(qv[i])::BIGINT AS mn,
-                         MAX(qv[i])::BIGINT AS mx
-                  FROM e, unnest(generate_series(1, len(qv))) AS t(i)
-                  GROUP BY i),
-            bl AS (SELECT list(mn ORDER BY dim) AS mns,
-                          list(mx ORDER BY dim) AS mxs FROM b),
-            q AS (SELECT qv AS qqv FROM e WHERE vec_id = 0),
-            scodes AS (SELECT e.vec_id,
-                    list_transform(generate_series(1, len(e.qv)),
-                      i -> CASE WHEN bl.mxs[i] = bl.mns[i] THEN 0
-                           ELSE least(255, greatest(0,
-                             ((e.qv[i] - bl.mns[i]) * 255)
-                             // (bl.mxs[i] - bl.mns[i]))) END) AS cs
-                  FROM e, bl),
-            recon AS (SELECT c.vec_id,
-                    list_transform(generate_series(1, len(c.cs)),
-                      i -> CASE WHEN bl.mxs[i] = bl.mns[i] THEN bl.mns[i]
-                           ELSE bl.mns[i] + ((2 * c.cs[i] + 1)
-                             * (bl.mxs[i] - bl.mns[i])) // 510 END) AS rv
-                  FROM scodes c, bl)
-            SELECT r.vec_id, a3.cid,
-                   list_aggregate(list_transform(
-                     generate_series(1, len(r.rv)),
-                     i -> (q.qqv[i] - r.rv[i]) * (q.qqv[i] - r.rv[i])),
-                     'sum')::BIGINT AS sq_d2
+            WITH {_SQL_KMEANS_ASSIGN},{_SQL_PROBES},{_SQL_SQ8}
+            SELECT r.vec_id, a3.cid, {_SQL_SQ8_D2} AS sq_d2
             FROM recon r
             JOIN a3 ON r.vec_id = a3.vec_id
             JOIN probes USING (cid), q
@@ -4808,13 +4715,6 @@ def _oracle_sql_literal() -> dict[str, str]:
         "link_pagerank_full": f"""
             WITH {pagerank_full_ctes}
             SELECT node_id, pr FROM prf2
-            ORDER BY pr DESC, node_id ASC LIMIT 30
-        """,
-        # bucketed twin: storage layout changes the PLAN (one fewer
-        # Exchange per iteration), never the rows — same oracle
-        "link_pagerank_bucketed": f"""
-            WITH {pagerank_ctes}
-            SELECT node_id, pr FROM pr2
             ORDER BY pr DESC, node_id ASC LIMIT 30
         """,
         # Bayardo-style all-pairs tf-idf cosine with df-cap stop-term
@@ -4917,22 +4817,7 @@ def _oracle_sql_literal() -> dict[str, str]:
                      (CASE WHEN s.node_id IS NOT NULL
                            THEN 1000000 ELSE 0 END)::BIGINT AS pr
                    FROM documents d LEFT JOIN sd s ON d.doc_id = s.node_id),
-            in1 AS (SELECT e.dst AS node_id, SUM(p.pr // d.out_deg) AS inflow
-                    FROM edges e JOIN p0 p ON e.src = p.node_id
-                    JOIN deg d ON e.src = d.src GROUP BY e.dst),
-            p1 AS (SELECT d.doc_id AS node_id,
-                     ((CASE WHEN s.node_id IS NOT NULL THEN 150000 ELSE 0 END)
-                      + (17 * COALESCE(i.inflow, 0)) // 20)::BIGINT AS pr
-                   FROM documents d LEFT JOIN sd s ON d.doc_id = s.node_id
-                   LEFT JOIN in1 i ON d.doc_id = i.node_id),
-            in2 AS (SELECT e.dst AS node_id, SUM(p.pr // d.out_deg) AS inflow
-                    FROM edges e JOIN p1 p ON e.src = p.node_id
-                    JOIN deg d ON e.src = d.src GROUP BY e.dst),
-            p2 AS (SELECT d.doc_id AS node_id,
-                     ((CASE WHEN s.node_id IS NOT NULL THEN 150000 ELSE 0 END)
-                      + (17 * COALESCE(i.inflow, 0)) // 20)::BIGINT AS pr
-                   FROM documents d LEFT JOIN sd s ON d.doc_id = s.node_id
-                   LEFT JOIN in2 i ON d.doc_id = i.node_id)
+            {_ppr_iter(1)},{_ppr_iter(2)}
             SELECT node_id, pr FROM p2 WHERE pr > 0
             ORDER BY pr DESC, node_id ASC LIMIT 30
         """,
@@ -4949,25 +4834,11 @@ def _oracle_sql_literal() -> dict[str, str]:
         # blocked chord graph (entry _component_edges) -> transitive
         # closure per component (cheap: components are <= 16 nodes by
         # construction) -> min-label per node -> size histogram
-        "link_components": """
-            WITH RECURSIVE
-            ce AS (SELECT doc_id AS src,
-                     (doc_id // 16) * 16
-                     + (('0x' || substr(md5('cc:' || doc_id::VARCHAR), 1, 8))::BIGINT
-                        % 16) AS dst
-                   FROM documents),
-            e2 AS (SELECT src, dst FROM ce
+        "link_components": f"""
+            WITH RECURSIVE {chord_cte},
+            e2 AS (SELECT src AS id_a, dst AS id_b FROM ce
                    WHERE src <> dst
-                     AND dst IN (SELECT doc_id FROM documents)),
-            sym AS (SELECT src, dst FROM e2 UNION SELECT dst, src FROM e2),
-            reach(src, dst) AS (
-              SELECT src, dst FROM sym
-              UNION
-              SELECT r.src, e.dst FROM reach r JOIN sym e ON r.dst = e.src),
-            lab AS (SELECT d.doc_id AS node,
-                      LEAST(d.doc_id, COALESCE(MIN(r.dst), d.doc_id)) AS label
-                    FROM documents d LEFT JOIN reach r ON r.src = d.doc_id
-                    GROUP BY d.doc_id),
+                     AND dst IN (SELECT doc_id FROM documents)),{_sql_components('e2')},{_SQL_COMPONENT_LABELS},
             sizes AS (SELECT label, COUNT(*)::BIGINT AS size
                       FROM lab GROUP BY label)
             SELECT size AS component_size, COUNT(*)::BIGINT AS n_components
@@ -5038,16 +4909,7 @@ def _oracle_sql_literal() -> dict[str, str]:
             ORDER BY cosine_sim DESC, doc_id ASC LIMIT 10
         """,
         "semantic_dedup_pairs": f"""
-            WITH {kmeans_ctes},
-            p3 AS (SELECT e.vec_id, e.embedding, c.cid,
-                     list_aggregate(list_transform(generate_series(1, len(e.qv)),
-                       i -> (e.qv[i] - c.cv[i]) * (e.qv[i] - c.cv[i])),
-                       'sum') AS d2
-                   FROM e CROSS JOIN c2 c),
-            a3 AS (SELECT vec_id, embedding, cid FROM (
-                     SELECT p3.*, ROW_NUMBER() OVER (
-                       PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM p3)
-                   WHERE rn = 1)
+            WITH {_SQL_KMEANS_ASSIGN}
             SELECT a.cid, a.vec_id AS id_a, b.vec_id AS id_b,
                    round(list_cosine_similarity(a.embedding::DOUBLE[],
                                                 b.embedding::DOUBLE[]), 6)
@@ -5059,16 +4921,7 @@ def _oracle_sql_literal() -> dict[str, str]:
                   >= 0.4
         """,
         "semantic_dedup_keep": f"""
-            WITH {kmeans_ctes},
-            p3 AS (SELECT e.vec_id, e.embedding, c.cid,
-                     list_aggregate(list_transform(generate_series(1, len(e.qv)),
-                       i -> (e.qv[i] - c.cv[i]) * (e.qv[i] - c.cv[i])),
-                       'sum') AS d2
-                   FROM e CROSS JOIN c2 c),
-            a3 AS (SELECT vec_id, embedding, cid FROM (
-                     SELECT p3.*, ROW_NUMBER() OVER (
-                       PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM p3)
-                   WHERE rn = 1),
+            WITH {_SQL_KMEANS_ASSIGN},
             losers AS (
               SELECT DISTINCT b.vec_id FROM a3 a JOIN a3 b
                 ON a.cid = b.cid AND a.vec_id < b.vec_id
@@ -5197,21 +5050,7 @@ def _oracle_sql_literal() -> dict[str, str]:
                    round(avg(height), 2) AS avg_height
             FROM media GROUP BY kind
         """,
-        "multimodal_decode_bmp": """
-            WITH m AS (
-              SELECT doc_id, printf('bmp-%05d', doc_id) AS media_ref,
-                     (doc_id % 16 + 1)::INT AS w, (doc_id % 8 + 1)::INT AS h,
-                     doc_id % 256 AS r
-              FROM documents WHERE doc_id < 300)
-            SELECT media_ref,
-                   (doc_id % 10 != 0) AS ok,
-                   (CASE WHEN doc_id % 10 = 0 THEN 0 ELSE w END)::INT AS decoded_width,
-                   (CASE WHEN doc_id % 10 = 0 THEN 0 ELSE h END)::INT AS decoded_height,
-                   CASE WHEN doc_id % 10 = 0 THEN 0.0
-                        ELSE round(CAST(CAST(r AS DOUBLE) / 255.0 AS FLOAT)::DOUBLE, 4)
-                   END AS f0
-            FROM m
-        """,
+        "multimodal_decode_bmp": _sql_solid_decode("bmp"),
         # media near-dup: the synth fixture's solid colors give exact
         # closed-form features (mean RGB / 255 through a float32 store,
         # contrast 0), sign-LSH bucket = positivity bits of f0..f2
@@ -5330,31 +5169,10 @@ def _oracle_sql_literal() -> dict[str, str]:
             SELECT doc_id, n_tokens, dsir_logw, dsir_key
             FROM keyed ORDER BY dsir_key DESC, doc_id ASC LIMIT 25
         """,
-        "media_dhash": """
-            WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 500),
-            cells AS (
-              SELECT d.doc_id, r.r, c.c,
-                     ('0x' || substr(md5(printf('%d-%d-%d',
-                          d.doc_id % 250, r.r, c.c)), 1, 2))::INT AS v0
-              FROM d, range(8) AS r(r), range(9) AS c(c)),
-            adj AS (
-              SELECT doc_id, r, c,
-                     CASE WHEN r = 0 AND c = 0 AND doc_id >= 250
-                          THEN xor(v0, 128) ELSE v0 END AS v
-              FROM cells),
-            bits AS (
-              SELECT a.doc_id, (a.r * 8 + a.c) AS j,
-                     CASE WHEN a.v < b.v THEN 1::BIGINT
-                          ELSE 0::BIGINT END AS bit
-              FROM adj a JOIN adj b
-                ON a.doc_id = b.doc_id AND a.r = b.r AND b.c = a.c + 1
-              WHERE a.c < 8)
-            SELECT printf('gbmp-%05d', doc_id) AS media_ref,
-                   SUM(CASE WHEN j >= 32 THEN bit << (j - 32)
-                            ELSE 0 END)::BIGINT AS sig_hi,
-                   SUM(CASE WHEN j < 32 THEN bit << j
-                            ELSE 0 END)::BIGINT AS sig_lo
-            FROM bits GROUP BY doc_id ORDER BY media_ref
+        "media_dhash": f"""
+            WITH {_SQL_IMAGE_SIGS}
+            SELECT id AS media_ref, sig_hi, sig_lo
+            FROM sigs ORDER BY media_ref
         """,
         # resize: every 13x11 output pixel maps to source pixel
         # (y*32//11, x*36//13), i.e. grid cell (src_y//4, src_x//4) of
@@ -5418,87 +5236,22 @@ def _oracle_sql_literal() -> dict[str, str]:
         # floor partition (n*65 // 256), energies and comparisons exact
         # integers; the planted spike rides the CASE on the last four
         # samples; sig fold identical to the dhash oracles
-        "audio_fingerprint": """
-            WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 500),
-            s AS (SELECT d.doc_id, n.n,
-                    (('0x' || substr(md5(printf('%d-%d',
-                          d.doc_id % 250, n.n)), 1, 2))::BIGINT - 128) * 100
-                    + CASE WHEN d.doc_id >= 250 AND n.n >= 252
-                           THEN 3000 ELSE 0 END AS v
-                  FROM d, range(256) AS n(n)
-                  WHERE d.doc_id % 10 != 0),
-            e AS (SELECT doc_id, (n * 65) // 256 AS w,
-                         SUM(v * v)::BIGINT AS en
-                  FROM s GROUP BY doc_id, w),
-            bits AS (SELECT a.doc_id, a.w AS j,
-                       CASE WHEN a.en < b.en THEN 1::BIGINT
-                            ELSE 0::BIGINT END AS bit
-                     FROM e a JOIN e b
-                       ON a.doc_id = b.doc_id AND b.w = a.w + 1
-                     WHERE a.w < 64),
-            sigs AS (SELECT doc_id,
-                       SUM(CASE WHEN j >= 32 THEN bit << (j - 32)
-                                ELSE 0 END)::BIGINT AS hi,
-                       SUM(CASE WHEN j < 32 THEN bit << j
-                                ELSE 0 END)::BIGINT AS lo
-                     FROM bits GROUP BY doc_id)
+        "audio_fingerprint": f"""
+            WITH {_SQL_AUDIO_SIGS}
             SELECT printf('wav-%05d', d.doc_id) AS media_ref,
                    (d.doc_id % 10 != 0) AS ok,
-                   COALESCE(g.hi, 0)::BIGINT AS sig_hi,
-                   COALESCE(g.lo, 0)::BIGINT AS sig_lo
+                   COALESCE(g.sig_hi, 0)::BIGINT AS sig_hi,
+                   COALESCE(g.sig_lo, 0)::BIGINT AS sig_lo
             FROM d LEFT JOIN sigs g ON d.doc_id = g.doc_id
             ORDER BY media_ref
         """,
-        "audio_dup_pairs": """
-            WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 500),
-            s AS (SELECT d.doc_id, n.n,
-                    (('0x' || substr(md5(printf('%d-%d',
-                          d.doc_id % 250, n.n)), 1, 2))::BIGINT - 128) * 100
-                    + CASE WHEN d.doc_id >= 250 AND n.n >= 252
-                           THEN 3000 ELSE 0 END AS v
-                  FROM d, range(256) AS n(n)
-                  WHERE d.doc_id % 10 != 0),
-            e AS (SELECT doc_id, (n * 65) // 256 AS w,
-                         SUM(v * v)::BIGINT AS en
-                  FROM s GROUP BY doc_id, w),
-            bits AS (SELECT a.doc_id, a.w AS j,
-                       CASE WHEN a.en < b.en THEN 1::BIGINT
-                            ELSE 0::BIGINT END AS bit
-                     FROM e a JOIN e b
-                       ON a.doc_id = b.doc_id AND b.w = a.w + 1
-                     WHERE a.w < 64),
-            sigs AS (SELECT printf('wav-%05d', doc_id) AS id,
-                       SUM(CASE WHEN j >= 32 THEN bit << (j - 32)
-                                ELSE 0 END)::BIGINT AS hi,
-                       SUM(CASE WHEN j < 32 THEN bit << j
-                                ELSE 0 END)::BIGINT AS lo
-                     FROM bits GROUP BY doc_id)
-            SELECT a.id AS id_a, b.id AS id_b,
-                   (bit_count(xor(a.hi, b.hi))
-                    + bit_count(xor(a.lo, b.lo)))::INTEGER AS hamming
-            FROM sigs a JOIN sigs b ON a.id < b.id
-            WHERE bit_count(xor(a.hi, b.hi))
-                  + bit_count(xor(a.lo, b.lo)) <= 2
-            ORDER BY id_a, id_b
-        """,
+        "audio_dup_pairs": "WITH " + _SQL_AUDIO_SIGS + _SQL_HAMMING2_PAIRS,
         # video: each frame is one md5 grid (the image-grid formula
         # plus a frame axis); the planted flip rides frame 0 cell (0,0)
         # for doc_id >= 250; luma/motion are exact x16 cell sums, and
         # per-frame dHash folds bits exactly like the image oracle
-        "video_features": """
-            WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 500),
-            cells AS (
-              SELECT d.doc_id, f.f, r.r, c.c,
-                     ('0x' || substr(md5(printf('%d-%d-%d-%d',
-                          d.doc_id % 250, f.f, r.r, c.c)), 1, 2))::BIGINT
-                     AS v0
-              FROM d, range(6) AS f(f), range(8) AS r(r), range(9) AS c(c)
-              WHERE d.doc_id % 10 != 0),
-            adj AS (
-              SELECT doc_id, f, r, c,
-                     CASE WHEN f = 0 AND r = 0 AND c = 0 AND doc_id >= 250
-                          THEN xor(v0, 128) ELSE v0 END AS v
-              FROM cells),
+        "video_features": f"""
+            WITH {_SQL_VIDEO_FRAMES},
             luma AS (SELECT doc_id, (16 * SUM(v))::BIGINT AS luma_sum
                      FROM adj GROUP BY doc_id),
             mot AS (SELECT a.doc_id,
@@ -5521,108 +5274,26 @@ def _oracle_sql_literal() -> dict[str, str]:
                    LEFT JOIN mot m ON d.doc_id = m.doc_id
             ORDER BY media_ref
         """,
-        "video_frame_dhash": """
-            WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 500),
-            cells AS (
-              SELECT d.doc_id, f.f, r.r, c.c,
-                     ('0x' || substr(md5(printf('%d-%d-%d-%d',
-                          d.doc_id % 250, f.f, r.r, c.c)), 1, 2))::BIGINT
-                     AS v0
-              FROM d, range(6) AS f(f), range(8) AS r(r), range(9) AS c(c)
-              WHERE d.doc_id % 10 != 0 AND f.f % 2 = 0),
-            adj AS (
-              SELECT doc_id, f, r, c,
-                     CASE WHEN f = 0 AND r = 0 AND c = 0 AND doc_id >= 250
-                          THEN xor(v0, 128) ELSE v0 END AS v
-              FROM cells),
-            bits AS (
-              SELECT a.doc_id, a.f, (a.r * 8 + a.c) AS j,
-                     CASE WHEN a.v < b.v THEN 1::BIGINT
-                          ELSE 0::BIGINT END AS bit
-              FROM adj a JOIN adj b
-                ON a.doc_id = b.doc_id AND a.f = b.f AND a.r = b.r
-               AND b.c = a.c + 1
-              WHERE a.c < 8)
+        "video_frame_dhash": f"""
+            WITH {_SQL_VIDEO_SIGS}
             SELECT printf('y4m-%05d#f%04d', doc_id, f) AS media_ref,
-                   SUM(CASE WHEN j >= 32 THEN bit << (j - 32)
-                            ELSE 0 END)::BIGINT AS sig_hi,
-                   SUM(CASE WHEN j < 32 THEN bit << j
-                            ELSE 0 END)::BIGINT AS sig_lo
-            FROM bits GROUP BY doc_id, f ORDER BY media_ref
+                   sig_hi, sig_lo
+            FROM sigs WHERE f % 2 = 0 ORDER BY media_ref
         """,
-        "video_dup_pairs": """
-            WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 500),
-            cells AS (
-              SELECT d.doc_id, f.f, r.r, c.c,
-                     ('0x' || substr(md5(printf('%d-%d-%d-%d',
-                          d.doc_id % 250, f.f, r.r, c.c)), 1, 2))::BIGINT
-                     AS v0
-              FROM d, range(6) AS f(f), range(8) AS r(r), range(9) AS c(c)
-              WHERE d.doc_id % 10 != 0),
-            adj AS (
-              SELECT doc_id, f, r, c,
-                     CASE WHEN f = 0 AND r = 0 AND c = 0 AND doc_id >= 250
-                          THEN xor(v0, 128) ELSE v0 END AS v
-              FROM cells),
-            bits AS (
-              SELECT a.doc_id, a.f, (a.r * 8 + a.c) AS j,
-                     CASE WHEN a.v < b.v THEN 1::BIGINT
-                          ELSE 0::BIGINT END AS bit
-              FROM adj a JOIN adj b
-                ON a.doc_id = b.doc_id AND a.f = b.f AND a.r = b.r
-               AND b.c = a.c + 1
-              WHERE a.c < 8),
-            sigs AS (SELECT doc_id, f,
-                       SUM(CASE WHEN j >= 32 THEN bit << (j - 32)
-                                ELSE 0 END)::BIGINT AS hi,
-                       SUM(CASE WHEN j < 32 THEN bit << j
-                                ELSE 0 END)::BIGINT AS lo
-                     FROM bits GROUP BY doc_id, f)
+        "video_dup_pairs": f"""
+            WITH {_SQL_VIDEO_SIGS}
             SELECT printf('y4m-%05d', a.doc_id) AS id_a,
                    printf('y4m-%05d', b.doc_id) AS id_b,
                    COUNT(*)::INTEGER AS n_matched
             FROM sigs a JOIN sigs b
               ON a.f = b.f AND a.doc_id < b.doc_id
-            WHERE bit_count(xor(a.hi, b.hi))
-                  + bit_count(xor(a.lo, b.lo)) <= 2
+            WHERE bit_count(xor(a.sig_hi, b.sig_hi))
+                  + bit_count(xor(a.sig_lo, b.sig_lo)) <= 2
             GROUP BY a.doc_id, b.doc_id
             HAVING COUNT(*) >= 4
             ORDER BY id_a, id_b
         """,
-        "media_dhash_pairs": """
-            WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 500),
-            cells AS (
-              SELECT d.doc_id, r.r, c.c,
-                     ('0x' || substr(md5(printf('%d-%d-%d',
-                          d.doc_id % 250, r.r, c.c)), 1, 2))::INT AS v0
-              FROM d, range(8) AS r(r), range(9) AS c(c)),
-            adj AS (
-              SELECT doc_id, r, c,
-                     CASE WHEN r = 0 AND c = 0 AND doc_id >= 250
-                          THEN xor(v0, 128) ELSE v0 END AS v
-              FROM cells),
-            bits AS (
-              SELECT a.doc_id, (a.r * 8 + a.c) AS j,
-                     CASE WHEN a.v < b.v THEN 1::BIGINT
-                          ELSE 0::BIGINT END AS bit
-              FROM adj a JOIN adj b
-                ON a.doc_id = b.doc_id AND a.r = b.r AND b.c = a.c + 1
-              WHERE a.c < 8),
-            sigs AS (
-              SELECT printf('gbmp-%05d', doc_id) AS id,
-                     SUM(CASE WHEN j >= 32 THEN bit << (j - 32)
-                              ELSE 0 END)::BIGINT AS hi,
-                     SUM(CASE WHEN j < 32 THEN bit << j
-                              ELSE 0 END)::BIGINT AS lo
-              FROM bits GROUP BY doc_id)
-            SELECT a.id AS id_a, b.id AS id_b,
-                   (bit_count(xor(a.hi, b.hi))
-                    + bit_count(xor(a.lo, b.lo)))::INTEGER AS hamming
-            FROM sigs a JOIN sigs b ON a.id < b.id
-            WHERE bit_count(xor(a.hi, b.hi))
-                  + bit_count(xor(a.lo, b.lo)) <= 2
-            ORDER BY id_a, id_b
-        """,
+        "media_dhash_pairs": "WITH " + _SQL_IMAGE_SIGS + _SQL_HAMMING2_PAIRS,
         "media_near_pairs": """
             WITH m AS (
               SELECT doc_id, printf('bmp-%05d', doc_id) AS media_ref,
@@ -5637,50 +5308,21 @@ def _oracle_sql_literal() -> dict[str, str]:
                                 - least(doc_id % 256, doc_id * 7 % 256,
                                         doc_id * 13 % 256)) / 255.0
                                AS FLOAT) AS DOUBLE) AS f3
-              FROM documents WHERE doc_id < 300 AND doc_id % 10 != 0),
-            v AS (
-              SELECT media_ref,
-                     [f0, f1, f2, f3, 0.0, 0.0, 0.0, 0.0]::DOUBLE[] AS v,
-                     (CASE WHEN f0 > 0 THEN 1 ELSE 0 END
-                      + CASE WHEN f1 > 0 THEN 2 ELSE 0 END
-                      + CASE WHEN f2 > 0 THEN 4 ELSE 0 END
-                      + CASE WHEN f3 > 0 THEN 8 ELSE 0 END)::BIGINT AS bucket
-              FROM m WHERE f0 + f1 + f2 + f3 > 0)
-            SELECT a.media_ref AS media_a, b.media_ref AS media_b,
-                   round(list_cosine_similarity(a.v, b.v), 6) AS cosine_sim
-            FROM v a JOIN v b
-              ON a.bucket = b.bucket AND a.media_ref < b.media_ref
-            WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.999
-        """,
+              FROM documents WHERE doc_id < 300 AND doc_id % 10 != 0),""" + _sql_media_near_pairs("m"),
         # jpeg fixture: ALL-ONES quant => DCT+quantize is lossless for
         # solid blocks; the decode expectation is the pure color-space
         # round trip with the codec's explicit floor(x + 0.5) roundings
         # (kernels/jpeg.py rgb_to_ycbcr / ycbcr_roundtrip_rgb), written
         # out term-for-term so DuckDB's double arithmetic matches
         # numpy's left-associated evaluation exactly
-        "multimodal_decode_jpeg": """
+        "multimodal_decode_jpeg": f"""
             WITH m AS (
               SELECT doc_id, printf('jpg-%05d', doc_id) AS media_ref,
                      (doc_id % 16 + 1)::INT AS w, (doc_id % 8 + 1)::INT AS h,
                      (doc_id % 256)::DOUBLE AS r,
                      (doc_id * 7 % 256)::DOUBLE AS g,
                      (doc_id * 13 % 256)::DOUBLE AS b
-              FROM documents WHERE doc_id < 300),
-            ycc AS (
-              SELECT *,
-                LEAST(255, GREATEST(0, FLOOR(
-                    0.299 * r + 0.587 * g + 0.114 * b + 0.5))) AS y,
-                LEAST(255, GREATEST(0, FLOOR(
-                    -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0 + 0.5)))
-                    AS cb,
-                LEAST(255, GREATEST(0, FLOOR(
-                    0.5 * r - 0.418688 * g - 0.081312 * b + 128.0 + 0.5)))
-                    AS cr
-              FROM m),
-            dec AS (
-              SELECT *, LEAST(255, GREATEST(0, FLOOR(
-                  y + 1.402 * (cr - 128.0) + 0.5))) AS r2
-              FROM ycc)
+              FROM documents WHERE doc_id < 300),{_sql_jpeg_roundtrip('m')}
             SELECT media_ref,
                    (doc_id % 10 != 0) AS ok,
                    (CASE WHEN doc_id % 10 = 0 THEN 0 ELSE w END)::INT
@@ -5697,34 +5339,13 @@ def _oracle_sql_literal() -> dict[str, str]:
         # colors; jpg vectors are the closed-form YCbCr round trip
         # (same formulas as multimodal_decode_jpeg); the sign-LSH
         # bucket and cosine gate mirror the media_near_pairs twin
-        "media_cross_codec_pairs": """
+        "media_cross_codec_pairs": f"""
             WITH base AS (
               SELECT doc_id,
                      (doc_id % 256)::DOUBLE AS r,
                      (doc_id * 7 % 256)::DOUBLE AS g,
                      (doc_id * 13 % 256)::DOUBLE AS b
-              FROM documents WHERE doc_id < 150 AND doc_id % 10 != 0),
-            conv AS (
-              SELECT *,
-                LEAST(255, GREATEST(0, FLOOR(
-                    0.299 * r + 0.587 * g + 0.114 * b + 0.5))) AS y,
-                LEAST(255, GREATEST(0, FLOOR(
-                    -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0 + 0.5)))
-                    AS cb,
-                LEAST(255, GREATEST(0, FLOOR(
-                    0.5 * r - 0.418688 * g - 0.081312 * b + 128.0 + 0.5)))
-                    AS cr
-              FROM base),
-            dec AS (
-              SELECT *,
-                LEAST(255, GREATEST(0, FLOOR(
-                    y + 1.402 * (cr - 128.0) + 0.5))) AS r2,
-                LEAST(255, GREATEST(0, FLOOR(
-                    y - 0.344136 * (cb - 128.0)
-                      - 0.714136 * (cr - 128.0) + 0.5))) AS g2,
-                LEAST(255, GREATEST(0, FLOOR(
-                    y + 1.772 * (cb - 128.0) + 0.5))) AS b2
-              FROM conv),
+              FROM documents WHERE doc_id < 150 AND doc_id % 10 != 0),{_sql_jpeg_roundtrip('base')},
             feats AS (
               SELECT printf('bmp-%05d', doc_id) AS media_ref,
                      CAST(CAST(r / 255.0 AS FLOAT) AS DOUBLE) AS f0,
@@ -5740,36 +5361,8 @@ def _oracle_sql_literal() -> dict[str, str]:
                      CAST(CAST(b2 / 255.0 AS FLOAT) AS DOUBLE) AS f2,
                      CAST(CAST((GREATEST(r2, g2, b2) - LEAST(r2, g2, b2))
                                / 255.0 AS FLOAT) AS DOUBLE) AS f3
-              FROM dec),
-            v AS (
-              SELECT media_ref,
-                     [f0, f1, f2, f3, 0.0, 0.0, 0.0, 0.0]::DOUBLE[] AS v,
-                     (CASE WHEN f0 > 0 THEN 1 ELSE 0 END
-                      + CASE WHEN f1 > 0 THEN 2 ELSE 0 END
-                      + CASE WHEN f2 > 0 THEN 4 ELSE 0 END
-                      + CASE WHEN f3 > 0 THEN 8 ELSE 0 END)::BIGINT AS bucket
-              FROM feats WHERE f0 + f1 + f2 + f3 > 0)
-            SELECT a.media_ref AS media_a, b.media_ref AS media_b,
-                   round(list_cosine_similarity(a.v, b.v), 6) AS cosine_sim
-            FROM v a JOIN v b
-              ON a.bucket = b.bucket AND a.media_ref < b.media_ref
-            WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.999
-        """,
-        "multimodal_decode_png": """
-            WITH m AS (
-              SELECT doc_id, printf('png-%05d', doc_id) AS media_ref,
-                     (doc_id % 16 + 1)::INT AS w, (doc_id % 8 + 1)::INT AS h,
-                     doc_id % 256 AS r
-              FROM documents WHERE doc_id < 300)
-            SELECT media_ref,
-                   (doc_id % 10 != 0) AS ok,
-                   (CASE WHEN doc_id % 10 = 0 THEN 0 ELSE w END)::INT AS decoded_width,
-                   (CASE WHEN doc_id % 10 = 0 THEN 0 ELSE h END)::INT AS decoded_height,
-                   CASE WHEN doc_id % 10 = 0 THEN 0.0
-                        ELSE round(CAST(CAST(r AS DOUBLE) / 255.0 AS FLOAT)::DOUBLE, 4)
-                   END AS f0
-            FROM m
-        """,
+              FROM dec),""" + _sql_media_near_pairs("feats"),
+        "multimodal_decode_png": _sql_solid_decode("png"),
         "c2_structural": """
             WITH stats AS (
               SELECT user_id,
@@ -5820,8 +5413,8 @@ def _oracle_sql_literal() -> dict[str, str]:
               round(len(list_distinct(toks))::DOUBLE / greatest(len(toks), 1), 6) AS distinct_ratio
             FROM t
         """,
-        "text_quality": quality_sql,
-        "text_langid": langid_sql,
+        "text_quality": _SQL_QUALITY,
+        "text_langid": _SQL_LANGID,
         "text_fingerprint": """
             WITH t AS (
               SELECT doc_id,
@@ -5834,35 +5427,18 @@ def _oracle_sql_literal() -> dict[str, str]:
                 (a, b) -> (a * 31 + b) % 1000000007) AS fingerprint
             FROM t
         """,
-        "text_winnow": """
+        "text_winnow": f"""
             WITH base AS (
               SELECT doc_id, text,
                      list_filter(string_split(text, ' '), t -> t != '') AS toks
-              FROM documents WHERE doc_id % 10 = 0
-            ), th AS (
-              SELECT doc_id, list_transform(toks,
-                       t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS th
-              FROM base
-            ), h AS (
-              SELECT doc_id,
-                     CASE WHEN len(th) >= 3
-                          THEN list_transform(generate_series(1, len(th) - 2),
-                               i -> (((th[i] * 8191 + th[i+1]) & 4294967295)
-                                    * 8191 + th[i+2]) & 4294967295)
-                          ELSE [list_reduce(list_prepend(0::BIGINT, th),
-                                (a, b) -> (a * 8191 + b) & 4294967295)] END AS hs
-              FROM th
-            ), win AS (
-              SELECT doc_id, i, list_slice(hs, i, i + 3) AS wn
-              FROM h, unnest(generate_series(1, greatest(len(hs) - 3, 1))) AS t(i)
-            )
+              FROM documents WHERE doc_id % 10 = 0),{_sql_winnow_windows('base')}
             SELECT DISTINCT doc_id,
               (i + list_max(list_filter(generate_series(1, len(wn)),
                    j -> wn[j] = list_min(wn))) - 1)::BIGINT AS pos,
               list_min(wn)::BIGINT AS gram_hash
-            FROM win
+            FROM wwin
         """,
-        "text_repetition": repetition_sql,
+        "text_repetition": _SQL_REPETITION,
         "text_unigram_lm": """
             WITH tk AS (
               SELECT doc_id, unnest(list_filter(string_split(text, ' '),
@@ -5991,28 +5567,8 @@ def _oracle_sql_literal() -> dict[str, str]:
                 '<EMAIL>', 'g') AS masked_text
             FROM e
         """,
-        "substr_dup_ranges": """
-            WITH d AS (
-              SELECT doc_id,
-                     list_filter(string_split(text, ' '), x -> x != '') AS tk
-              FROM documents),
-            grams AS (
-              SELECT doc_id, (i - 1)::INT AS pos,
-                     substr(md5(list_aggregate(tk[i:i+7], 'string_agg', ' ')),
-                            1, 16) AS gh
-              FROM d, unnest(generate_series(1, len(tk) - 7)) AS t(i)
-              WHERE len(tk) >= 8),
-            dup AS (
-              SELECT gh FROM grams
-              GROUP BY gh HAVING COUNT(DISTINCT doc_id) >= 2),
-            pos AS (
-              SELECT doc_id, pos FROM grams
-              WHERE gh IN (SELECT gh FROM dup)),
-            isl AS (
-              SELECT doc_id, pos,
-                     pos - ROW_NUMBER() OVER (
-                       PARTITION BY doc_id ORDER BY pos) AS grp
-              FROM pos)
+        "substr_dup_ranges": f"""
+            WITH {_SQL_DUP_RUNS}
             SELECT doc_id,
                    MIN(pos)::INT AS start_tok,
                    (MAX(pos) + 7)::INT AS end_tok,
@@ -6020,28 +5576,8 @@ def _oracle_sql_literal() -> dict[str, str]:
             FROM isl GROUP BY doc_id, grp
             ORDER BY doc_id, start_tok
         """,
-        "substr_trim": """
-            WITH d AS (
-              SELECT doc_id,
-                     list_filter(string_split(text, ' '), x -> x != '') AS tk
-              FROM documents),
-            grams AS (
-              SELECT doc_id, (i - 1)::INT AS pos,
-                     substr(md5(list_aggregate(tk[i:i+7], 'string_agg', ' ')),
-                            1, 16) AS gh
-              FROM d, unnest(generate_series(1, len(tk) - 7)) AS t(i)
-              WHERE len(tk) >= 8),
-            dup AS (
-              SELECT gh FROM grams
-              GROUP BY gh HAVING COUNT(DISTINCT doc_id) >= 2),
-            pos AS (
-              SELECT doc_id, pos FROM grams
-              WHERE gh IN (SELECT gh FROM dup)),
-            isl AS (
-              SELECT doc_id, pos,
-                     pos - ROW_NUMBER() OVER (
-                       PARTITION BY doc_id ORDER BY pos) AS grp
-              FROM pos),
+        "substr_trim": f"""
+            WITH {_SQL_DUP_RUNS},
             rng AS (
               SELECT doc_id, MIN(pos) AS start_tok, MAX(pos) + 7 AS end_tok
               FROM isl GROUP BY doc_id, grp),
@@ -6064,17 +5600,8 @@ def _oracle_sql_literal() -> dict[str, str]:
               ON t.doc_id = c.doc_id AND t.i = c.i
             GROUP BY t.doc_id ORDER BY t.doc_id
         """,
-        "decontaminate_report": """
-            WITH d AS (
-              SELECT doc_id,
-                     list_filter(string_split(text, ' '), x -> x != '') AS tk
-              FROM documents),
-            grams AS (
-              SELECT doc_id, (i - 1)::INT AS pos,
-                     substr(md5(list_aggregate(tk[i:i+7], 'string_agg', ' ')),
-                            1, 16) AS gh
-              FROM d, unnest(generate_series(1, len(tk) - 7)) AS t(i)
-              WHERE len(tk) >= 8),
+        "decontaminate_report": f"""
+            WITH {_SQL_GRAMS8},
             bench AS (
               SELECT DISTINCT gh FROM grams WHERE doc_id < 10),
             hits AS (
@@ -6084,28 +5611,8 @@ def _oracle_sql_literal() -> dict[str, str]:
                    COUNT(*)::BIGINT AS n_contaminated_positions
             FROM hits GROUP BY doc_id ORDER BY doc_id
         """,
-        "substr_dup_profile": """
-            WITH d AS (
-              SELECT doc_id,
-                     list_filter(string_split(text, ' '), x -> x != '') AS tk
-              FROM documents),
-            grams AS (
-              SELECT doc_id, (i - 1)::INT AS pos,
-                     substr(md5(list_aggregate(tk[i:i+7], 'string_agg', ' ')),
-                            1, 16) AS gh
-              FROM d, unnest(generate_series(1, len(tk) - 7)) AS t(i)
-              WHERE len(tk) >= 8),
-            dup AS (
-              SELECT gh FROM grams
-              GROUP BY gh HAVING COUNT(DISTINCT doc_id) >= 2),
-            pos AS (
-              SELECT doc_id, pos FROM grams
-              WHERE gh IN (SELECT gh FROM dup)),
-            isl AS (
-              SELECT doc_id, pos,
-                     pos - ROW_NUMBER() OVER (
-                       PARTITION BY doc_id ORDER BY pos) AS grp
-              FROM pos),
+        "substr_dup_profile": f"""
+            WITH {_SQL_DUP_RUNS},
             r AS (
               SELECT doc_id, MAX(pos) + 7 - MIN(pos) + 1 AS n_dup
               FROM isl GROUP BY doc_id, grp),
@@ -6119,21 +5626,10 @@ def _oracle_sql_literal() -> dict[str, str]:
                          / greatest(len(d.tk), 1), 6) AS dup_frac
             FROM d LEFT JOIN per_doc p ON d.doc_id = p.doc_id
         """,
-        "curation_flags": f"""
-            WITH q AS ({{Q}}),
-            l AS ({{L}}),
-            r AS ({{R}})
-            SELECT l.doc_id, l.pred_lang, q.quality_score,
-                   r.top_2gram_frac, r.dup_5gram_frac,
-                   CASE WHEN l.pred_lang NOT IN ('en') THEN 'lang'
-                        WHEN q.quality_score < 0.45 THEN 'quality'
-                        WHEN r.top_2gram_frac > 0.35
-                             OR r.dup_5gram_frac > 0.35 THEN 'repetition'
-                        ELSE 'keep' END AS reject_reason
-            FROM l JOIN q ON l.doc_id = q.doc_id
-                   JOIN r ON l.doc_id = r.doc_id
-        """.replace("{Q}", quality_sql).replace(
-            "{L}", langid_sql).replace("{R}", repetition_sql),
+        "curation_flags": _SQL_CURATION_FLAGS + """
+            SELECT doc_id, pred_lang, quality_score, top_2gram_frac,
+                   dup_5gram_frac, reject_reason FROM flags
+        """,
         "corpus_profile": """
             SELECT lang,
                    COUNT(*)::BIGINT AS n_docs,
@@ -6225,19 +5721,7 @@ def _oracle_sql_literal() -> dict[str, str]:
             FROM c ASOF LEFT JOIN v
               ON c.user_id = v.user_id AND v.ts <= c.ts
         """,
-        "source_report": f"""
-            WITH q AS ({{Q}}),
-            l AS ({{L}}),
-            r AS ({{R}}),
-            flags AS (
-              SELECT l.doc_id, q.quality_score,
-                     CASE WHEN l.pred_lang NOT IN ('en') THEN 'lang'
-                          WHEN q.quality_score < 0.45 THEN 'quality'
-                          WHEN r.top_2gram_frac > 0.35
-                               OR r.dup_5gram_frac > 0.35 THEN 'repetition'
-                          ELSE 'keep' END AS reject_reason
-              FROM l JOIN q ON l.doc_id = q.doc_id
-                     JOIN r ON l.doc_id = r.doc_id),
+        "source_report": _SQL_CURATION_FLAGS + """,
             j AS (
               SELECT d.source, f.quality_score, f.reject_reason
               FROM documents d JOIN flags f ON d.doc_id = f.doc_id)
@@ -6253,8 +5737,7 @@ def _oracle_sql_literal() -> dict[str, str]:
                    round(SUM((reject_reason = 'keep')::INT)::BIGINT
                          / COUNT(*), 6) AS keep_rate
             FROM j GROUP BY source ORDER BY source
-        """.replace("{Q}", quality_sql).replace(
-            "{L}", langid_sql).replace("{R}", repetition_sql),
+        """,
         "chunk_windows": """
             WITH d AS (
               SELECT doc_id,
@@ -6275,13 +5758,13 @@ def _oracle_sql_literal() -> dict[str, str]:
                                    x -> x != ''))::INT AS n_chunk_tokens
             FROM c
         """,
-        "interleaved_spans": inter_spans_ctes + """
+        "interleaved_spans": _SQL_INTER_SPANS + """
             SELECT doc_id, "offset", kind, text, media_ref FROM spans
         """,
         # merge_adjacent_text twin: run-group text spans by the count of
         # preceding media spans, string_agg per run (offset order), union
         # media rows back, renumber by first offset per doc
-        "interleaved_merged": inter_spans_ctes + """,
+        "interleaved_merged": _SQL_INTER_SPANS + """,
             runs AS (
               SELECT doc_id, "offset", kind, text, media_ref,
                      SUM(CASE WHEN kind != 'text' THEN 1 ELSE 0 END)
@@ -6306,7 +5789,7 @@ def _oracle_sql_literal() -> dict[str, str]:
         """,
         # media_context twin: join media to text spans per doc, rank each
         # side by distance, keep rank <= 2, string_agg in offset order
-        "media_context": inter_spans_ctes + """,
+        "media_context": _SQL_INTER_SPANS + """,
             t AS (SELECT doc_id, "offset", text FROM spans
                   WHERE kind = 'text'),
             md AS (SELECT doc_id, media_ref, "offset" AS mo FROM spans
@@ -6338,7 +5821,7 @@ def _oracle_sql_literal() -> dict[str, str]:
             LEFT JOIN aa ON aa.doc_id = md.doc_id AND aa.mo = md.mo
         """,
         # asset_census twin: hash-fold refs into the 64-asset pool
-        "asset_census": inter_spans_ctes + """,
+        "asset_census": _SQL_INTER_SPANS + """,
             am AS (SELECT doc_id, "offset",
                           'asset_' || (('0x' || substr(md5(media_ref), 1, 8))
                                        ::BIGINT % 64)::VARCHAR AS asset
@@ -6352,7 +5835,7 @@ def _oracle_sql_literal() -> dict[str, str]:
         """,
         # asset_dedup_groups twin: md5 over the sorted distinct 8-pool
         # asset set per doc (docs with no media excluded)
-        "asset_dedup_groups": inter_spans_ctes + """,
+        "asset_dedup_groups": _SQL_INTER_SPANS + """,
             da AS (SELECT doc_id,
                           md5(array_to_string(list_sort(list_distinct(
                             list('asset_' || (('0x' || substr(md5(media_ref),
@@ -6367,7 +5850,7 @@ def _oracle_sql_literal() -> dict[str, str]:
         # drops all text spans, b=1 keeps only the offset-0 text span),
         # stats per doc over the kept spans, doc universe = sized (docs
         # whose lift produced spans), so fully-emptied docs read 'empty'
-        "interleaved_quality": inter_spans_ctes + """,
+        "interleaved_quality": _SQL_INTER_SPANS + """,
             bs AS (SELECT doc_id,
                           ('0x' || substr(md5('iq:' || doc_id::VARCHAR),
                                           1, 8))::BIGINT % 7 AS b
@@ -6439,8 +5922,8 @@ def _oracle_sql_literal() -> dict[str, str]:
                             l.doc_id IS NOT NULL AS in_l,
                             r.doc_id IS NOT NULL AS in_r
                      FROM lt l FULL JOIN rt r ON l.doc_id = r.doc_id),
-            lc AS (SELECT doc_id, COUNT(*)::INT AS n FROM lsp GROUP BY doc_id),
-            rc AS (SELECT doc_id, COUNT(*)::INT AS n FROM rsp GROUP BY doc_id),
+            lc AS (SELECT doc_id, COUNT(*)::INT AS n FROM lspans GROUP BY doc_id),
+            rc AS (SELECT doc_id, COUNT(*)::INT AS n FROM rspans GROUP BY doc_id),
             dj AS (SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id,
                           COALESCE(a."offset", b."offset") AS off,
                           (a."offset" IS NOT NULL AND b."offset" IS NOT NULL
@@ -6448,7 +5931,7 @@ def _oracle_sql_literal() -> dict[str, str]:
                            AND a.text IS NOT DISTINCT FROM b.text
                            AND a.media_ref IS NOT DISTINCT FROM b.media_ref)
                             AS eq
-                   FROM lsp a FULL JOIN rsp b
+                   FROM lspans a FULL JOIN rspans b
                      ON a.doc_id = b.doc_id AND a."offset" = b."offset"),
             dp AS (SELECT doc_id, MIN(off)::INT AS fd
                    FROM dj WHERE NOT eq GROUP BY doc_id)
@@ -6516,7 +5999,7 @@ def _oracle_sql_literal() -> dict[str, str]:
                             THEN 1 ELSE 0 END)::INT AS n_in_order
             FROM ranked GROUP BY doc_id
         """,
-        "interleaved_captions": inter_spans_ctes + """
+        "interleaved_captions": _SQL_INTER_SPANS + """
             SELECT doc_id, media_ref, "offset" AS media_offset,
                    last_value(CASE WHEN kind = 'text' THEN text END
                               IGNORE NULLS)
@@ -6530,7 +6013,7 @@ def _oracle_sql_literal() -> dict[str, str]:
                            AND CURRENT ROW) AS caption_offset
             FROM spans QUALIFY kind = 'image'
         """,
-        "pack_interleaved": inter_spans_ctes + """,
+        "pack_interleaved": _SQL_INTER_SPANS + """,
             costed AS (
               SELECT doc_id, "offset",
                      kind = 'text' AS is_text,
@@ -6667,46 +6150,11 @@ def _oracle_sql_literal() -> dict[str, str]:
                          ELSE 50000 END
         """,
         "hybrid_rrf_topk": f"""
-            WITH {_HASHED_EMBED_CTES},
-            dd AS (
-              SELECT doc_id,
-                     list_filter(string_split(text, ' '), x -> x != '') AS tk
-              FROM documents),
-            p AS (
-              SELECT doc_id, len(tk)::INT AS dl,
-                len(list_filter(tk, x -> x = 'table'))::INT AS tf_0,
-                len(list_filter(tk, x -> x = 'spark'))::INT AS tf_1,
-                len(list_filter(tk, x -> x = 'join'))::INT AS tf_2,
-                len(list_filter(tk, x -> x = 'query'))::INT AS tf_3
-              FROM dd),
-            st AS (
-              SELECT COUNT(*)::BIGINT AS n_docs, AVG(dl) AS avgdl,
-                SUM(CASE WHEN tf_0 > 0 THEN 1 ELSE 0 END)::BIGINT AS df_0,
-                SUM(CASE WHEN tf_1 > 0 THEN 1 ELSE 0 END)::BIGINT AS df_1,
-                SUM(CASE WHEN tf_2 > 0 THEN 1 ELSE 0 END)::BIGINT AS df_2,
-                SUM(CASE WHEN tf_3 > 0 THEN 1 ELSE 0 END)::BIGINT AS df_3
-              FROM p),
-            sc AS (
-              SELECT doc_id,
-                round(
-                    ln(1.0 + (n_docs - df_0 + 0.5) / (df_0 + 0.5))
-                    * (tf_0::DOUBLE * 2.2
-                       / (tf_0::DOUBLE + 1.2 * (0.25 + 0.75 * dl / avgdl)))
-                + ln(1.0 + (n_docs - df_1 + 0.5) / (df_1 + 0.5))
-                    * (tf_1::DOUBLE * 2.2
-                       / (tf_1::DOUBLE + 1.2 * (0.25 + 0.75 * dl / avgdl)))
-                + ln(1.0 + (n_docs - df_2 + 0.5) / (df_2 + 0.5))
-                    * (tf_2::DOUBLE * 2.2
-                       / (tf_2::DOUBLE + 1.2 * (0.25 + 0.75 * dl / avgdl)))
-                + ln(1.0 + (n_docs - df_3 + 0.5) / (df_3 + 0.5))
-                    * (tf_3::DOUBLE * 2.2
-                       / (tf_3::DOUBLE + 1.2 * (0.25 + 0.75 * dl / avgdl))),
-                6) AS bm25
-              FROM p, st),
+            WITH {_HASHED_EMBED_CTES},{_SQL_BM25},
             lex AS (
               SELECT doc_id, ROW_NUMBER() OVER (
                        ORDER BY bm25 DESC, doc_id ASC)::INT AS lex_rank
-              FROM (SELECT * FROM sc WHERE bm25 > 0
+              FROM (SELECT * FROM scored WHERE bm25 > 0
                     ORDER BY bm25 DESC, doc_id ASC LIMIT 20)),
             q AS (SELECT embedding AS qv FROM emb WHERE doc_id = 0),
             sem0 AS (
@@ -6790,48 +6238,12 @@ def _oracle_sql_literal() -> dict[str, str]:
         # JL projection: same content-addressed sign matrix, same
         # lattice rounding as the kmeans family; projected vectors are
         # exact bigint sums so both queries replay bit-for-bit
-        "embed_jl_project": """
-            WITH lat AS (
-              SELECT vec_id,
-                     list_transform(embedding,
-                                    x -> round(x::DOUBLE * 1000)::BIGINT)
-                         AS qv
-              FROM embeddings WHERE vec_id < 40),
-            signs AS (
-              SELECT d.i, o.j,
-                     (CASE WHEN ('0x' || substr(
-                          md5('jl0:' || d.i || ':' || o.j), 1, 8))::BIGINT
-                          % 2 = 0 THEN 1 ELSE -1 END)::BIGINT AS s
-              FROM (SELECT unnest(range(64))::BIGINT AS i) d,
-                   (SELECT unnest(range(16))::BIGINT AS j) o),
-            expl AS (
-              SELECT vec_id, d.i, qv[d.i + 1] AS v
-              FROM lat, (SELECT unnest(range(64))::BIGINT AS i) d)
-            SELECT e.vec_id, s.j, SUM(e.v * s.s)::BIGINT AS y
-            FROM expl e JOIN signs s ON e.i = s.i
-            GROUP BY e.vec_id, s.j
+        "embed_jl_project": f"""
+            WITH {_SQL_JL_PROJ}
+            SELECT vec_id, j, y FROM proj WHERE vec_id < 40
         """,
-        "jl_recall": """
-            WITH lat AS (
-              SELECT vec_id,
-                     list_transform(embedding,
-                                    x -> round(x::DOUBLE * 1000)::BIGINT)
-                         AS qv
-              FROM embeddings),
-            signs AS (
-              SELECT d.i, o.j,
-                     (CASE WHEN ('0x' || substr(
-                          md5('jl0:' || d.i || ':' || o.j), 1, 8))::BIGINT
-                          % 2 = 0 THEN 1 ELSE -1 END)::BIGINT AS s
-              FROM (SELECT unnest(range(64))::BIGINT AS i) d,
-                   (SELECT unnest(range(16))::BIGINT AS j) o),
-            expl AS (
-              SELECT vec_id, d.i, qv[d.i + 1] AS v
-              FROM lat, (SELECT unnest(range(64))::BIGINT AS i) d),
-            proj AS (
-              SELECT e.vec_id, s.j, SUM(e.v * s.s)::BIGINT AS y
-              FROM expl e JOIN signs s ON e.i = s.i
-              GROUP BY e.vec_id, s.j),
+        "jl_recall": f"""
+            WITH {_SQL_JL_PROJ},
             qp AS (SELECT j, y AS qy FROM proj WHERE vec_id = 0),
             appr AS (
               SELECT p.vec_id,
@@ -6841,21 +6253,7 @@ def _oracle_sql_literal() -> dict[str, str]:
               FROM proj p JOIN qp USING (j)
               WHERE p.vec_id <> 0
               GROUP BY p.vec_id
-              ORDER BY cs DESC, vec_id ASC LIMIT 10),
-            q AS (SELECT embedding::DOUBLE[] AS q_vec FROM embeddings
-                  WHERE vec_id = 0),
-            exact AS (
-              SELECT vec_id,
-                     round(list_cosine_similarity(embedding::DOUBLE[],
-                           q.q_vec), 6) AS cs
-              FROM embeddings, q WHERE vec_id <> 0
-              ORDER BY cs DESC, vec_id ASC LIMIT 10),
-            hits AS (SELECT COUNT(*)::BIGINT AS n_hits FROM exact
-                     WHERE vec_id IN (SELECT vec_id FROM appr))
-            SELECT 10::BIGINT AS k, n_hits,
-                   ((n_hits * 1000000) // 10)::BIGINT AS recall_micro
-            FROM hits
-        """,
+              ORDER BY cs DESC, vec_id ASC LIMIT 10),{_SQL_QUERY_VEC},{_SQL_EXACT_TOP10}{_SQL_RECALL_AT_10}""",
         "cohort_retention": """
             WITH uw AS (
               SELECT DISTINCT user_id AS u,
@@ -6906,41 +6304,12 @@ def _oracle_sql_literal() -> dict[str, str]:
             SELECT day, dau, wau FROM dau JOIN wau USING (day)
             ORDER BY day
         """,
-        "vocab_overlap_hll": """
-            WITH tok AS (
-              SELECT lang AS grp,
-                     unnest(list_filter(string_split(text, ' '),
-                            t -> t != '')) AS tok
-              FROM documents),
-            h AS (
-              SELECT grp, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h60
-              FROM tok),
-            regs AS (
-              SELECT grp, h60 >> 48 AS bucket,
-                MAX(CASE WHEN (h60 & ((1::BIGINT << 48) - 1)) = 0 THEN 49
-                         ELSE 48 - len(bin(h60 & ((1::BIGINT << 48) - 1))) + 1
-                    END) AS max_rank
-              FROM h GROUP BY 1, 2),
-            est1 AS (
-              SELECT grp,
-                     SUM(1::BIGINT << (49 - max_rank))::BIGINT AS si,
-                     COUNT(*)::BIGINT AS nz
-              FROM regs GROUP BY grp),
-            fin1 AS (
-              SELECT grp,
-                CASE WHEN ((0.7213 / (1 + 1.079 / 4096.0)) * 4096 * 4096
-                           / (si / 562949953421312.0 + (4096 - nz)))
-                          <= 2.5 * 4096
-                       AND (4096 - nz) > 0
-                     THEN round(4096 * ln(4096.0 / (4096 - nz)), 3)
-                     ELSE round((0.7213 / (1 + 1.079 / 4096.0)) * 4096 * 4096
-                           / (si / 562949953421312.0 + (4096 - nz)), 3)
-                END AS est_distinct
-              FROM est1),
+        "vocab_overlap_hll": f"""
+            WITH {_SQL_HLL_BY_LANG},
             pairs AS (
               SELECT a.grp AS ga, a.est_distinct AS est_a,
                      b.grp AS gb, b.est_distinct AS est_b
-              FROM fin1 a JOIN fin1 b ON a.grp < b.grp),
+              FROM fin a JOIN fin b ON a.grp < b.grp),
             uregs AS (
               SELECT p.ga, p.gb, r.bucket, MAX(r.max_rank) AS max_rank
               FROM (SELECT ga, gb FROM pairs) p
@@ -6952,15 +6321,7 @@ def _oracle_sql_literal() -> dict[str, str]:
                      COUNT(*)::BIGINT AS nz
               FROM uregs GROUP BY ga, gb),
             finu AS (
-              SELECT ga, gb,
-                CASE WHEN ((0.7213 / (1 + 1.079 / 4096.0)) * 4096 * 4096
-                           / (si / 562949953421312.0 + (4096 - nz)))
-                          <= 2.5 * 4096
-                       AND (4096 - nz) > 0
-                     THEN round(4096 * ln(4096.0 / (4096 - nz)), 3)
-                     ELSE round((0.7213 / (1 + 1.079 / 4096.0)) * 4096 * 4096
-                           / (si / 562949953421312.0 + (4096 - nz)), 3)
-                END AS est_union
+              SELECT ga, gb, {_SQL_HLL_ESTIMATE} AS est_union
               FROM estu)
             SELECT p.ga AS group_a, p.gb AS group_b,
                    p.est_a, p.est_b, u.est_union,
@@ -6970,37 +6331,8 @@ def _oracle_sql_literal() -> dict[str, str]:
             FROM pairs p JOIN finu u USING (ga, gb)
             ORDER BY group_a, group_b
         """,
-        "hll_distinct_tokens": """
-            WITH tok AS (
-              SELECT lang AS grp,
-                     unnest(list_filter(string_split(text, ' '),
-                            t -> t != '')) AS tok
-              FROM documents),
-            h AS (
-              SELECT grp, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h60
-              FROM tok),
-            regs AS (
-              SELECT grp, h60 >> 48 AS bucket,
-                MAX(CASE WHEN (h60 & ((1::BIGINT << 48) - 1)) = 0 THEN 49
-                         ELSE 48 - len(bin(h60 & ((1::BIGINT << 48) - 1))) + 1
-                    END) AS max_rank
-              FROM h GROUP BY 1, 2),
-            est AS (
-              SELECT grp,
-                     SUM(1::BIGINT << (49 - max_rank))::BIGINT AS si,
-                     COUNT(*)::BIGINT AS nz
-              FROM regs GROUP BY grp),
-            fin AS (
-              SELECT grp,
-                CASE WHEN ((0.7213 / (1 + 1.079 / 4096.0)) * 4096 * 4096
-                           / (si / 562949953421312.0 + (4096 - nz)))
-                          <= 2.5 * 4096
-                       AND (4096 - nz) > 0
-                     THEN round(4096 * ln(4096.0 / (4096 - nz)), 3)
-                     ELSE round((0.7213 / (1 + 1.079 / 4096.0)) * 4096 * 4096
-                           / (si / 562949953421312.0 + (4096 - nz)), 3)
-                END AS est_distinct
-              FROM est),
+        "hll_distinct_tokens": f"""
+            WITH {_SQL_HLL_BY_LANG},
             ex AS (
               SELECT grp, COUNT(DISTINCT tok)::BIGINT AS exact_distinct
               FROM tok GROUP BY grp)
@@ -7058,42 +6390,8 @@ def _oracle_sql_literal() -> dict[str, str]:
               FROM scored)
             WHERE rank <= 5
         """,
-        "bm25_topk": """
-            WITH d AS (
-              SELECT doc_id,
-                     list_filter(string_split(text, ' '), x -> x != '') AS tk
-              FROM documents),
-            p AS (
-              SELECT doc_id, len(tk)::INT AS dl,
-                len(list_filter(tk, x -> x = 'table'))::INT AS tf_0,
-                len(list_filter(tk, x -> x = 'spark'))::INT AS tf_1,
-                len(list_filter(tk, x -> x = 'join'))::INT AS tf_2,
-                len(list_filter(tk, x -> x = 'query'))::INT AS tf_3
-              FROM d),
-            s AS (
-              SELECT COUNT(*)::BIGINT AS n_docs, AVG(dl) AS avgdl,
-                SUM(CASE WHEN tf_0 > 0 THEN 1 ELSE 0 END)::BIGINT AS df_0,
-                SUM(CASE WHEN tf_1 > 0 THEN 1 ELSE 0 END)::BIGINT AS df_1,
-                SUM(CASE WHEN tf_2 > 0 THEN 1 ELSE 0 END)::BIGINT AS df_2,
-                SUM(CASE WHEN tf_3 > 0 THEN 1 ELSE 0 END)::BIGINT AS df_3
-              FROM p),
-            scored AS (
-              SELECT doc_id, tf_0, tf_1, tf_2, tf_3,
-                round(
-                    ln(1.0 + (n_docs - df_0 + 0.5) / (df_0 + 0.5))
-                    * (tf_0::DOUBLE * 2.2
-                       / (tf_0::DOUBLE + 1.2 * (0.25 + 0.75 * dl / avgdl)))
-                + ln(1.0 + (n_docs - df_1 + 0.5) / (df_1 + 0.5))
-                    * (tf_1::DOUBLE * 2.2
-                       / (tf_1::DOUBLE + 1.2 * (0.25 + 0.75 * dl / avgdl)))
-                + ln(1.0 + (n_docs - df_2 + 0.5) / (df_2 + 0.5))
-                    * (tf_2::DOUBLE * 2.2
-                       / (tf_2::DOUBLE + 1.2 * (0.25 + 0.75 * dl / avgdl)))
-                + ln(1.0 + (n_docs - df_3 + 0.5) / (df_3 + 0.5))
-                    * (tf_3::DOUBLE * 2.2
-                       / (tf_3::DOUBLE + 1.2 * (0.25 + 0.75 * dl / avgdl))),
-                6) AS bm25
-              FROM p, s)
+        "bm25_topk": f"""
+            WITH {_SQL_BM25}
             SELECT doc_id, tf_0 AS tf_table, tf_1 AS tf_spark,
                    tf_2 AS tf_join, tf_3 AS tf_query, bm25
             FROM scored WHERE bm25 > 0

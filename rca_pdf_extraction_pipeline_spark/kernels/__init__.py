@@ -7,4 +7,4 @@ the Spark level; inside a kernel everything is batch columnar (numpy
 masks/gathers, pandas str ops).
 """
 
-from . import boilerplate, classify, headers, samples, sanitize, simtext  # noqa: F401
+from . import classify, headers, samples, sanitize, simtext  # noqa: F401

@@ -15,8 +15,9 @@ only shuffle is the per-document window/groupBy on doc_id (one
 exchange, reused by both the lag/lead smoothing and the final
 aggregation since they share the partitioning key).
 
-The pandas twin (kernels/boilerplate.py) holds the shared thresholds
-and backs the unit tests, which check that it and this operator agree.
+The DuckDB twins ``html_boilerplate`` / ``html_block_scores`` in
+``__spark_entry__.oracle_sql`` are the reference; tier-1 checks the
+entry queries against them (tests/test_oracle_parity.py).
 """
 
 from __future__ import annotations
@@ -25,12 +26,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..kernels.boilerplate import (
-    LINK_DENSITY_MAX,
-    MIN_WORDS,
-    MIN_WORDS_NEIGHBOUR,
-    NON_CONTENT_TAGS,
+#: tags whose blocks are never content, whatever their text
+NON_CONTENT_TAGS = frozenset(
+    {"nav", "header", "footer", "aside", "script", "style", "form", "button"}
 )
+#: a content block's anchor characters stay under this share of its text
+LINK_DENSITY_MAX = 0.33
+#: words that make a low-link block content on its own ...
+MIN_WORDS = 10
+#: ... and the floor for a short block next to a content block
+MIN_WORDS_NEIGHBOUR = 3
 
 
 def block_signals(text: Column, tag: Column,

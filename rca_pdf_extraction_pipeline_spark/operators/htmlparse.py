@@ -15,7 +15,7 @@ the north_rule's "HTML boilerplate stripping (DOM tree heuristics
     ``<img src>`` becomes an image span AT ITS POSITION inside the
     text flow, offsets assigned in reading order from the markup —
     never from partition order.  With ``content_only=True`` the
-    Boilerpipe scoring (same constants as ``kernels/boilerplate.py``:
+    Boilerpipe scoring (same constants as ``operators/boilerplate.py``:
     link density < 0.33, word-count floor, neighbour smoothing) runs
     NARROWLY over the per-document block array before span assembly,
     so the whole main-content extraction is one map — zero shuffle.
@@ -57,8 +57,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..kernels.boilerplate import MIN_WORDS, MIN_WORDS_NEIGHBOUR
-from .boilerplate import block_signals
+from .boilerplate import MIN_WORDS, MIN_WORDS_NEIGHBOUR, block_signals
 
 #: block-level tags the parser recognizes as block openers (the
 #: synthesized grammar's block set; a production parser extends the

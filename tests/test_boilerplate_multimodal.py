@@ -1,13 +1,11 @@
-"""HTML boilerplate stripping (operators/boilerplate.py vs the pandas
-kernel twin) and multimodal column plumbing (operators/multimodal.py)."""
+"""HTML boilerplate stripping (operators/boilerplate.py) and multimodal
+column plumbing (operators/multimodal.py)."""
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from rca_pdf_extraction_pipeline_spark.kernels import boilerplate as kboiler
 from rca_pdf_extraction_pipeline_spark.operators import boilerplate, multimodal
 
 BLOCKS = [
@@ -42,16 +40,13 @@ def test_score_blocks_rules(spark, blocks_df):
 
 
 def test_extract_main_text_matches_kernel(spark, blocks_df):
+    """Doc a keeps its long block and the short neighbour after it, in
+    block order; the all-boilerplate doc b yields no row."""
     got = {r["doc_id"]: (r["main_text"], r["n_blocks"])
            for r in boilerplate.extract_main_text(blocks_df).collect()}
-    # kernel twin on the same rows
-    kdf = pd.DataFrame(BLOCKS, columns=["doc_key", "idx", "tag", "text",
-                                        "anchor_chars"])
-    want = kboiler.extract_main_text(kdf)
-    want = {r.doc_key: (r.main_text, r.n_blocks) for r in want.itertuples()}
-    assert got == want
-    assert "quick brown fox" in got["a"][0]
-    assert "b" not in got  # all-boilerplate doc yields no row
+    assert got == {"a": ("the quick brown fox jumps over the lazy dog "
+                         "repeatedly during the long afternoon measurement "
+                         "session\nshort closing note", 2)}
 
 
 @pytest.fixture(scope="module")

@@ -33,11 +33,11 @@ def test_query_output_schema_is_scalar(spark, name):
 
 
 def test_every_query_has_matching_name_in_oracles():
-    """Each queries() key either has a DuckDB twin or is a documented
-    non-SQL-expressible exemption (driver then runs rows-only)."""
+    """Each queries() key has a DuckDB twin, and each twin a query."""
     q = set(entry.queries().keys())
     o = set(entry.oracle_sql().keys())
-    assert o <= q, f"oracle_sql keys without a query: {sorted(o - q)}"
+    assert o == q, (f"queries without an oracle: {sorted(q - o)}; "
+                    f"oracles without a query: {sorted(o - q)}")
 
 
 def test_check_entry_rejects_unknown_query_names():

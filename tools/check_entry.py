@@ -4,8 +4,10 @@ compare row count, column names, and an order-insensitive value hash.
 
 Usage: python tools/check_entry.py [sf_dir] [only_query ...]
 
-Exits 1 if any query fails, or if a requested name is not a
-``queries()`` key (nothing would be checked for it).
+Exits 1 if any query fails (a query without an oracle fails too), or if
+a requested name is not a ``queries()`` key (nothing would be checked
+for it).  tests/test_oracle_parity.py runs the same :func:`compare` on
+every query in tier-1.
 """
 
 from __future__ import annotations
@@ -41,6 +43,34 @@ def value_hash(df: pd.DataFrame) -> str:
     return hashlib.sha256("\x1e".join(rows).encode()).hexdigest()[:16]
 
 
+def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per testdata table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
+    """How a query's rows ``sdf`` differ from its oracle's ``odf``: row
+    count, column names, then the value hash (with up to 10 rows that
+    only one side has).  Empty when they agree."""
+    problems = []
+    if len(sdf) != len(odf):
+        problems.append(f"rows spark={len(sdf)} oracle={len(odf)}")
+    if sorted(sdf.columns) != sorted(odf.columns):
+        problems.append(f"cols spark={sorted(sdf.columns)} oracle={sorted(odf.columns)}")
+    if not problems:
+        hs, ho = value_hash(sdf), value_hash(odf)
+        if hs != ho:
+            merged = sdf.merge(odf, how="outer", indicator=True,
+                               on=sorted(sdf.columns))
+            diff = merged[merged["_merge"] != "both"]
+            problems.append(f"hash spark={hs} oracle={ho}\n"
+                            f"{diff.head(10).to_string()}")
+    return problems
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and "/" in sys.argv[1] else "/root/testdata/sf0.01"
     only = [a for a in sys.argv[1:] if "/" not in a]
@@ -52,10 +82,7 @@ def main() -> int:
 
     from rca_pdf_extraction_pipeline_spark.session import get_spark
     spark = get_spark("check-entry")
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = connect(sf_dir)
 
     oracles = entrymod.oracle_sql()
     failures = []
@@ -63,14 +90,15 @@ def main() -> int:
         if only and name not in only:
             continue
         t0 = time.time()
+        if name not in oracles:
+            failures.append(name)
+            print(f"FAIL {name}: no oracle")
+            continue
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
             failures.append(name)
             print(f"FAIL {name}: spark error: {e}")
-            continue
-        if name not in oracles:
-            print(f"ok?  {name}: rows={len(sdf)} (no oracle, rows-only) [{time.time()-t0:.1f}s]")
             continue
         try:
             odf = con.sql(oracles[name]).df()
@@ -78,19 +106,7 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL {name}: duckdb error: {e}")
             continue
-        problems = []
-        if len(sdf) != len(odf):
-            problems.append(f"rows spark={len(sdf)} oracle={len(odf)}")
-        if sorted(sdf.columns) != sorted(odf.columns):
-            problems.append(f"cols spark={sorted(sdf.columns)} oracle={sorted(odf.columns)}")
-        if not problems:
-            hs, ho = value_hash(sdf), value_hash(odf)
-            if hs != ho:
-                problems.append(f"hash spark={hs} oracle={ho}")
-                merged = sdf.merge(odf, how="outer", indicator=True,
-                                   on=list(sorted(set(sdf.columns) & set(odf.columns))))
-                diff = merged[merged["_merge"] != "both"]
-                print(diff.head(10).to_string())
+        problems = compare(sdf, odf)
         if problems:
             failures.append(name)
             print(f"FAIL {name}: {'; '.join(problems)} [{time.time()-t0:.1f}s]")
