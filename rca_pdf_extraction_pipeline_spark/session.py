@@ -36,7 +36,12 @@ def get_spark(
     * AQE on: runtime coalescing + skew handling complement the explicit
       doc_id salting (operators/skew.py);
     * shuffle partitions sized for the local harness; on a real cluster this
-      is ``spark.sql.shuffle.partitions`` = 2-3x total cores.
+      is ``spark.sql.shuffle.partitions`` = 2-3x total cores;
+    * file scans split by Spark's own rule: small files pack into about
+      ``defaultParallelism`` (the core count) splits, and one parquet row
+      group is never split.  The testdata tables are one file of one row
+      group each, so CPU-heavy scans of them repartition explicitly
+      (``__spark_entry__._t`` does it for ``documents``).
     """
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or "local[%s]" % (
         os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -55,11 +60,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # split even small parquet inputs across all cores — locally the
-        # testdata tables are single files under maxPartitionBytes, which
-        # would otherwise run CPU-heavy scans (minhash/simhash/extraction)
-        # as one task; on a real cluster the input has many splits anyway
-        .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
         # local mode runs every task in ONE JVM: with 32 executor threads
         # pushing Arrow batches + shuffle buffers, an undersized heap turns
         # into a GC ceiling that caps scaling (measured: 22.5s -> 11.8s wall

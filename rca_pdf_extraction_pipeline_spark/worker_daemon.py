@@ -10,11 +10,18 @@ daemon drops each archive that holds no Python module, or whose every
 top-level package a directory on ``sys.path`` holds with the same
 ``version.py`` ``__version__``; the forked workers inherit the shorter
 path.  Any other archive stays.
+
+The daemon then imports pandas and pyarrow, which every ``mapInArrow``
+task loads, and calls ``gc.freeze()`` before it forks.  Each task ends
+with a full ``gc.collect()``; with the daemon's objects frozen it no
+longer walks them, and a forked worker does not import pandas for
+itself (docs/SCALE.md).
 """
 
 from __future__ import annotations
 
 import ast
+import gc
 import os
 import sys
 import zipfile
@@ -73,8 +80,11 @@ def main() -> None:
     for key in list(sys.path_importer_cache):
         if any(key == a or key.startswith(a + os.sep) for a in drop):
             del sys.path_importer_cache[key]
+    import pandas  # noqa: F401
+    import pyarrow  # noqa: F401
     from pyspark import daemon
 
+    gc.freeze()
     daemon.manager()
 
 

@@ -138,3 +138,36 @@ def test_arrow_batches_are_byte_bounded(spark):
     assert max(r["n"] for r in got["medium"]) > 64
     # each 5 MiB row ends the batch its two small predecessors started
     assert [r["n"] for r in got["mixed"]] == [3, 3]
+
+
+def test_scans_split_by_core_count(spark, tmp_path):
+    """A multi-file input scans in at most ``defaultParallelism`` tasks:
+    the session leaves ``spark.sql.files.minPartitionNum`` unset, so
+    Spark packs small files into about one split per core instead of one
+    task per file.  The same holds for each scan a checkpoint wave runs
+    over such an input (the range-bounds sample and the map stage)."""
+    from perfbench.probe import StatusStore
+
+    from rca_pdf_extraction_pipeline_spark.plans import checkpoint
+
+    cores = spark.sparkContext.defaultParallelism
+    assert spark.conf.get("spark.sql.files.minPartitionNum", None) is None
+
+    src = tmp_path / "docs"
+    fixtures.docs_to_spark(spark, [
+        {"doc_id": f"one-span-{i:04d}",
+         "spans": [{"kind": "text", "text": "1|x", "media_ref": None,
+                    "offset": 0}]}
+        for i in range(320)]).repartition(32).write.parquet(str(src))
+    assert len(list(src.glob("*.parquet"))) == 32
+    docs = spark.read.parquet(str(src))
+    assert docs.rdd.getNumPartitions() <= cores
+
+    store = StatusStore(spark)
+    last = store.last_id()
+    checkpoint.extract_with_checkpoint(docs, tmp_path / "t", n_buckets=4,
+                                       waves=2)
+    scans = [s["tasks"] for e in store.executions_after(last, wait_s=10)
+             for s in e["stages"].values() if s["input_records"] > 0]
+    assert len(scans) >= 4, scans          # two scans in each of two waves
+    assert max(scans) <= cores, scans

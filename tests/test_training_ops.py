@@ -1410,6 +1410,29 @@ def test_bloom_absent_values_and_guards(spark):
         sketches.bloom_words(vals, "value", m_bits=1024, k=0)
 
 
+def test_bloom_false_positive_rate_at_half_fill(spark):
+    """At n = 2,840 values in m = 16,384 bits with k = 4 hashes the
+    expected fill 1 - e^(-kn/m) is 0.500, so the false-positive rate
+    should be (1 - e^(-kn/m))^k = 0.0625.  20,000 absent probes measure
+    it; the md5 hashes make the figure deterministic (0.0651 here), and
+    the tolerance is 4 binomial standard errors (0.0068)."""
+    from rca_pdf_extraction_pipeline_spark.operators import sketches
+
+    m, k, n, n_probes = 16384, 4, 2840, 20000
+    vals = spark.range(n).select(F.concat(F.lit("tok"), "id").alias("value"))
+    probes = spark.range(n_probes).select(
+        F.concat(F.lit("absent"), "id").alias("value"))
+    words = sketches.bloom_words(vals, "value", m_bits=m, k=k)
+    got = sketches.bloom_contains(words, probes, "value", m, k)
+    r = got.agg(F.count("*").alias("n"),
+                F.sum(F.col("maybe_present").cast("int")).alias("fp")).first()
+    assert r["n"] == n_probes
+    expected = (1 - math.exp(-k * n / m)) ** k
+    assert abs(expected - 0.0625) < 1e-3
+    se = math.sqrt(expected * (1 - expected) / n_probes)
+    assert abs(r["fp"] / n_probes - expected) <= 4 * se, r["fp"] / n_probes
+
+
 def test_dsir_topk_selects_target_like_docs(spark):
     from rca_pdf_extraction_pipeline_spark.operators import sampling
 

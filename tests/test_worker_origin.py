@@ -3,8 +3,10 @@
 Local ``get_spark`` sessions give their workers no archive on
 ``sys.path``: pyspark, py4j and this package come from directories, so
 each task's ``importlib.invalidate_caches()`` has no zip to re-read
-(``worker_daemon``).  The second half pins the daemon's archive rule on
-temp zips, without Spark."""
+(``worker_daemon``).  They fork from a daemon that froze its objects
+after importing pandas and pyarrow, so each task's ``gc.collect()``
+skips them.  The second half pins the daemon's archive rule on temp
+zips, without Spark."""
 
 from __future__ import annotations
 
@@ -47,6 +49,20 @@ def test_workers_import_from_directories(spark):
         assert r.pyspark_is_file, r.pyspark
         assert json.loads(r.zips) == []
         assert r.pkg_is_dir, r.pkg_dir
+
+
+def test_workers_fork_from_a_frozen_daemon(spark):
+    def frozen(batches):
+        import gc
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({"n": [gc.get_freeze_count()]})
+
+    rows = (spark.range(0, 64, numPartitions=4)
+            .mapInArrow(frozen, "n long").collect())
+    assert len(rows) == 4
+    assert all(r.n > 0 for r in rows), rows
 
 
 def _zip(path, files: dict[str, str]) -> str:
